@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -23,7 +24,11 @@ import org.apache.spark.sql.functions._
   *    (map-side combine) — the same design as the reference's
   *    thread-local pre-aggregation cache (q4112.c:225-297): hot groups
   *    collapse before the shuffle, so heavy-hitter skew (hh configs)
-  *    costs one combiner entry per partition, not a hot reducer.
+  *    costs one combiner entry per partition, not a hot reducer. When
+  *    statistics bound the group domain, the partial aggregate is a
+  *    per-task array instead and the arrays are merged range by range
+  *    in a reduce-scatter ([[denseGroupedAvg]]), with no hash map on
+  *    either side of the shuffle.
   *  - The final avg-of-avgs is a single ungrouped aggregate over one row
   *    per group — negligible at any scale.
   */
@@ -600,18 +605,17 @@ object Q4112 {
     * group domain is contiguous and bounded ([lo, hi], hi−lo+1 ≤
     * [[DenseAggMaxDomain]], proven from cached column min/max
     * statistics), each task accumulates sum/count into two plain long
-    * arrays indexed by (group − lo) and emits one (group, s, c) row per
-    * non-empty slot at task end. This replaces the per-row
+    * arrays indexed by (group − lo). This replaces the per-row
     * UnsafeFixedWidthAggregationMap probe (hash + row compare over a
     * ~1e6-entry map that misses cache) with a bounds-checked array add —
     * the profiled r9 attribution put that probe at the center of the
     * cold cfg10/17 gap (one uniform CPU-bound stage, ~430 ns/row, zero
-    * spill). The final reduce is Catalyst partial/final over ≤
-    * tasks × domain slim rows, then the same integer avg-of-avgs.
+    * spill). The arrays are then merged by a reduce-scatter, not by
+    * hashing: see [[denseGroupedAvg]].
     *
     * Exactness: identical arithmetic to [[part2]] — long sums with the
-    * same wrap semantics, `s div c` per group, integer avg-of-avgs.
-    * Array indexing is total on the proven [lo, hi] domain.
+    * same wrap semantics inside a task, `s div c` per group, integer
+    * avg-of-avgs. Array indexing is total on the proven [lo, hi] domain.
     */
   def part2DenseAgg(
       items: DataFrame,
@@ -630,19 +634,76 @@ object Q4112 {
         .select(col(groupCol).cast("long"), col("v").cast("long")),
       minGroup, domain)
 
+  // slots per reducer range in [[denseGroupedAvg]]: ~1 MB of merge arrays
+  private val DenseAggSlotsPerReducer = 1 << 16
+
+  /** One task's share of one reducer's slot range in [[denseGroupedAvg]]:
+    * a dense slice of the range (`slots == null`) or, for a range less
+    * than half occupied, (slot, sum, count) triples, slots relative to
+    * the range start. `hasV(j)`: entry j saw a non-NULL v; null when the
+    * input is non-nullable.
+    */
+  private final case class DenseChunk(
+      slots: Array[Int], sums: Array[Long], cnts: Array[Long], hasV: Array[Boolean])
+
   /** The dense-accumulation stage of [[part2DenseAgg]] over a prepared
     * (group, v) projection — exposed separately so the accumulation can
     * be measured/tested without the join front half.
+    *
+    * Merge: a reduce-scatter of the per-task arrays. The slots split into
+    * R = min(session shuffle partitions, ⌈domain / 2^16⌉) ranges; each
+    * task ships one [[DenseChunk]] per non-empty range to that range's
+    * reducer, which adds its chunks slot by slot and emits one
+    * (Σ s div c, #groups) row. A tiny ungrouped Catalyst aggregate over
+    * those R rows gives `ss div cc`. A chunk is a dense slice only when
+    * at least half its slots are occupied (16 bytes a slot, 17 with NULL
+    * tracking), else triples (20-21 bytes a group), so the shuffle never
+    * carries more per group than the 36-byte (g, s, c) UnsafeRow record
+    * that the Catalyst partial/final merge of earlier rounds shipped —
+    * and no side hashes a key. The cross-task sum uses `Math.addExact`,
+    * so it raises on overflow exactly where that plan's ANSI `sum(s)`
+    * did.
+    *
+    * Retries: the chunks go through an ordinary stateless shuffle, so a
+    * retried map task recomputes its chunks and replaces the failed
+    * attempt's output — it can never double count, unlike the
+    * JVM-shared table of [[sharedDenseGroupedAvg]], which must refuse a
+    * retry.
     */
   def denseGroupedAvg(gv: DataFrame, minGroup: Long, domain: Int): DataFrame = {
     require(domain > 0 && domain <= DenseAggMaxDomain,
       s"dense aggregate domain out of range: $domain")
-    import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val spark = gv.sparkSession
     val mg = minGroup
     val dom = domain
+    // slot `dom` past the domain holds the NULL group
+    val nSlots = dom + 1
+    val nRed = math.max(1, math.min(spark.sessionState.conf.numShufflePartitions,
+      (dom + DenseAggSlotsPerReducer - 1) / DenseAggSlotsPerReducer))
+    val width = (nSlots + nRed - 1) / nRed
+    // a task's chunks, keyed by reducer
+    val chunks = (sums: Array[Long], cnts: Array[Long], hasV: Array[Boolean]) =>
+      Iterator.range(0, nRed).flatMap { r =>
+        val lo = r * width
+        val hi = math.min(nSlots, lo + width)
+        var k = 0
+        var i = lo
+        while (i < hi) { if (cnts(i) != 0L) k += 1; i += 1 }
+        if (k == 0) None
+        else if (2 * k >= hi - lo)
+          Some(r -> DenseChunk(null, sums.slice(lo, hi), cnts.slice(lo, hi),
+            if (hasV == null) null else hasV.slice(lo, hi)))
+        else {
+          val at = new Array[Int](k)
+          k = 0
+          i = lo
+          while (i < hi) { if (cnts(i) != 0L) { at(k) = i - lo; k += 1 }; i += 1 }
+          Some(r -> DenseChunk(at, at.map(j => sums(lo + j)), at.map(j => cnts(lo + j)),
+            if (hasV == null) null else at.map(j => hasV(lo + j))))
+        }
+      }
     // Nullability decided from gv's SCHEMA, once, at plan time: the
     // unguarded loop reads primitives directly and would misread a NULL
     // group as 0 (silent cross-group merge when minGroup == 0, executor
@@ -652,74 +713,61 @@ object Q4112 {
     // `sum(v)` skips NULL v and is itself NULL when a group saw no
     // non-NULL v (tracked per slot in `hasV`). Column min/max stats
     // ignore NULLs, so non-NULL groups remain provably in-domain.
-    val gNullable = gv.schema.fields(0).nullable
-    val vNullable = gv.schema.fields(1).nullable
-    val rdd = if (!gNullable && !vNullable) {
-      gv.queryExecution.toRdd.mapPartitions { it =>
-        val sums = new Array[Long](dom)
-        val cnts = new Array[Long](dom)
-        while (it.hasNext) {
-          val r = it.next() // primitives read immediately; row reuse is fine
-          val g = (r.getLong(0) - mg).toInt
-          sums(g) += r.getLong(1)
-          cnts(g) += 1L
-        }
-        new scala.collection.AbstractIterator[InternalRow] {
-          private var i = 0
-          private def skip(): Unit = while (i < dom && cnts(i) == 0L) i += 1
-          skip()
-          override def hasNext: Boolean = i < dom
-          override def next(): InternalRow = {
-            val row = new GenericInternalRow(Array[Any](i + mg, sums(i), cnts(i)))
-            i += 1; skip(); row
-          }
-        }
+    val nullable = gv.schema.fields.exists(_.nullable)
+    val mapped = gv.queryExecution.toRdd.mapPartitions { it =>
+      val sums = new Array[Long](nSlots)
+      val cnts = new Array[Long](nSlots)
+      val hasV = if (nullable) new Array[Boolean](nSlots) else null
+      if (!nullable) while (it.hasNext) {
+        val r = it.next() // primitives read immediately; row reuse is fine
+        val g = (r.getLong(0) - mg).toInt
+        sums(g) += r.getLong(1)
+        cnts(g) += 1L
+      } else while (it.hasNext) {
+        val r = it.next()
+        val g = if (r.isNullAt(0)) dom else (r.getLong(0) - mg).toInt
+        cnts(g) += 1L
+        if (!r.isNullAt(1)) { sums(g) += r.getLong(1); hasV(g) = true }
       }
-    } else {
-      gv.queryExecution.toRdd.mapPartitions { it =>
-        val sums = new Array[Long](dom)
-        val cnts = new Array[Long](dom)
-        val hasV = new Array[Boolean](dom)
-        var nullSum = 0L
-        var nullCnt = 0L
-        var nullHasV = false
-        while (it.hasNext) {
-          val r = it.next()
-          if (r.isNullAt(0)) {
-            nullCnt += 1L
-            if (!r.isNullAt(1)) { nullSum += r.getLong(1); nullHasV = true }
-          } else {
-            val g = (r.getLong(0) - mg).toInt
-            cnts(g) += 1L
-            if (!r.isNullAt(1)) { sums(g) += r.getLong(1); hasV(g) = true }
-          }
-        }
-        val dense = new scala.collection.AbstractIterator[InternalRow] {
-          private var i = 0
-          private def skip(): Unit = while (i < dom && cnts(i) == 0L) i += 1
-          skip()
-          override def hasNext: Boolean = i < dom
-          override def next(): InternalRow = {
-            val s: Any = if (hasV(i)) sums(i) else null
-            val row = new GenericInternalRow(Array[Any](i + mg, s, cnts(i)))
-            i += 1; skip(); row
-          }
-        }
-        if (nullCnt > 0L)
-          dense ++ Iterator[InternalRow](new GenericInternalRow(
-            Array[Any](null, if (nullHasV) nullSum else null, nullCnt)))
-        else dense
-      }
+      chunks(sums, cnts, hasV)
     }
+    val reduced = mapped
+      .partitionBy(new org.apache.spark.HashPartitioner(nRed))
+      .mapPartitionsWithIndex { (r, it) =>
+        val n = math.max(0, math.min(nSlots, (r + 1) * width) - r * width)
+        val sums = new Array[Long](n)
+        val cnts = new Array[Long](n)
+        val hasV = new Array[Boolean](n)
+        it.foreach { case (_, ch) =>
+          var j = 0
+          while (j < ch.cnts.length) {
+            val i = if (ch.slots == null) j else ch.slots(j)
+            if (ch.cnts(j) != 0L) {
+              sums(i) = Math.addExact(sums(i), ch.sums(j))
+              cnts(i) += ch.cnts(j)
+              hasV(i) ||= ch.hasV == null || ch.hasV(j)
+            }
+            j += 1
+          }
+        }
+        var ss = 0L
+        var anyV = false
+        var cc = 0L
+        var i = 0
+        while (i < n) {
+          if (cnts(i) != 0L) {
+            cc += 1L
+            if (hasV(i)) { ss = Math.addExact(ss, sums(i) / cnts(i)); anyV = true }
+          }
+          i += 1
+        }
+        Iterator.single[InternalRow](new GenericInternalRow(Array[Any](if (anyV) ss else null, cc)))
+      }
     val schema = StructType(Seq(
-      StructField("g", LongType, nullable = gNullable),
-      StructField("s", LongType, nullable = vNullable),
-      StructField("c", LongType, nullable = false)))
-    org.apache.spark.sql.graft.bridge.internalDataFrame(spark, rdd, schema)
-      .groupBy(col("g"))
-      .agg(sum(col("s")).as("s2"), sum(col("c")).as("c2"))
-      .select(expr("s2 div c2").as("avg_value"))
-      .agg(sum(col("avg_value")).as("ss"), count(lit(1)).as("cc"))
+      StructField("ss", LongType, nullable = true),
+      StructField("cc", LongType, nullable = false)))
+    org.apache.spark.sql.graft.bridge.internalDataFrame(spark, reduced, schema)
+      .agg(sum(col("ss")).as("ss"), sum(col("cc")).as("cc"))
       .select(expr("ss div cc").as("avg_avg_value"))
   }
 
@@ -1018,6 +1066,78 @@ object Q4112 {
   def bypassPartitions(estGroups: Long, sessionShuffle: Int): Int =
     math.min(4096L, math.max(sessionShuffle.toLong, estGroups / 500000L)).toInt
 
+  /** The adaptive planner's sample: (rows sampled, distinct keys,
+    * shared-key mass) of `groupCol` over the first rows of up to 64
+    * partitions strided across `orders`. Read as `InternalRow`s (no
+    * external-row conversion) and counted by sorting the primitive keys.
+    *
+    * A PARTITION SUBSET, not a Bernoulli sample: sample(frac) visits
+    * every partition, i.e. a full extra scan at 100 TB. Striding (not
+    * partitions 0..k) guards against layouts where the group key
+    * correlates with partition order. A full-scan FM estimate was
+    * measured at 3.5-16 s per run at 1e9 rows — more than many queries
+    * it was steering; this sample reads ~2M rows total and decides
+    * identically on every measured shape. FM remains the standalone A5
+    * surface (distinct_fm, Aggregates.distinctFm).
+    */
+  private[graft] def sampleSharedMass(orders: DataFrame, groupCol: String): (Long, Long, Double) = {
+    // cast: int-stored group columns must still read as longs below
+    val slim = orders.select(col(groupCol).cast("long")).queryExecution.toRdd
+    // a provably-empty relation plans zero partitions — there is
+    // nothing to sample and runJob on partition 0 would throw
+    if (slim.getNumPartitions == 0) return (0L, 0L, 1.0)
+    val nParts = slim.getNumPartitions
+    val targetRows = 2000000L
+    // ALWAYS spread the sample across many partitions (capped at 64,
+    // strided across the range), never concentrate it in few: reading
+    // the target rows from one big partition samples only that
+    // partition's PREFIX, and a structured prefix poisons the decision —
+    // measured at 1e9: the q4112 generator opens with a
+    // one-row-per-group enumeration run, so a partition-0-only sample
+    // read 2M singletons, called sharedMass = 0.0 on an hhp=1.0 config
+    // whose true task-window shared mass is ~0.9, and picked the packed
+    // bypass where partial/final is 3-6× faster. With the sample strided
+    // over ≥32 partitions the prefix contributes ≤ a few percent.
+    val kParts = math.min(nParts, 64)
+    val perPart = math.max(1L, targetRows / kParts).toInt
+    val stride = math.max(1, nParts / kParts)
+    val partIds = (0 until nParts by stride).take(kParts)
+    // per partition: the non-NULL keys and the NULL-key row count
+    val chunks = orders.sparkSession.sparkContext.runJob(slim, (it: Iterator[InternalRow]) => {
+      val b = new scala.collection.mutable.ArrayBuilder.ofLong
+      var nulls = 0L
+      var i = 0
+      while (i < perPart && it.hasNext) {
+        val r = it.next()
+        if (r.isNullAt(0)) nulls += 1L else b += r.getLong(0)
+        i += 1
+      }
+      (b.result(), nulls)
+    }, partIds)
+    sharedKeyMass(Array.concat(chunks.map(_._1).toSeq: _*), chunks.map(_._2).sum)
+  }
+
+  /** (n, distinct keys, share of the n keys that occur more than once)
+    * of a key sample, counted by sorting `keys` in place; `nulls` more
+    * rows carry the NULL key, which counts as one key. The driver sorts
+    * between jobs, so on all cores (2M keys, 4 cores: ~70 vs ~230 ms).
+    */
+  private[graft] def sharedKeyMass(keys: Array[Long], nulls: Long = 0L): (Long, Long, Double) = {
+    java.util.Arrays.parallelSort(keys)
+    var ndv = if (nulls > 0L) 1L else 0L
+    var shared = if (nulls > 1L) nulls else 0L
+    var i = 0
+    while (i < keys.length) {
+      var j = i + 1
+      while (j < keys.length && keys(j) == keys(i)) j += 1
+      ndv += 1L
+      if (j - i > 1) shared += j - i
+      i = j
+    }
+    val n = keys.length + nulls
+    (n, ndv, if (n == 0L) 1.0 else shared.toDouble / n)
+  }
+
   /** Part 2 with the physical aggregation plan chosen from a MEASURED
     * statistic — the same decision the reference drives with its A5
     * sketch (estimate the group profile, then shape the aggregation,
@@ -1107,67 +1227,15 @@ object Q4112 {
     // knows. The count() fallback only triggers for bare un-analyzed
     // sources.
     val rows = relationRows(orders)
-    // The decision statistic is SHARED-KEY MASS from a ~2M-row
-    // deterministic sample: the fraction of sampled rows whose group key
-    // recurs within the sample. An ndv estimate alone cannot tell an
-    // all-singleton table (partial agg collapses nothing, spills, and
-    // the exchange ships ~every row anyway) from a skewed one with the
-    // same ndv (heavy groups collapse map-side to one combiner entry per
-    // task) — measured at 1e9 rows, the bypass wins the first shape
-    // (96 s vs 307 s/OOM) and loses the second (69 s vs 32 s).
-    // The sample reads a PARTITION SUBSET (first ~perPart rows of k
-    // partitions strided across the range), not a Bernoulli sample —
-    // sample(frac) visits every partition, i.e. a full extra scan at
-    // 100 TB. Striding (not partitions 0..k) guards against layouts
-    // where the group key correlates with partition order. A full-scan
-    // FM estimate was measured at 3.5-16 s per run at 1e9 rows — more
-    // than many queries it was steering; this sample reads ~2M rows
-    // total and decides identically on every measured shape. FM remains
-    // the standalone A5 surface (distinct_fm, Aggregates.distinctFm).
-    // the statistic is cached per (relation, column) — a table's group
-    // profile is a property of the table version, so repeated queries
-    // over an unchanged relation skip the ~2M-row sample job entirely
-    // (it was measured at 1-3 s INSIDE every timed query)
+    // The decision statistic is SHARED-KEY MASS (scaladoc above) from a
+    // ~2M-row deterministic sample ([[sampleSharedMass]]), cached per
+    // (relation, column) — a table's group profile is a property of the
+    // table version, so repeated queries over an unchanged relation skip
+    // the sample job entirely (it was measured at 1-3 s INSIDE every
+    // timed query)
     val (tot, sampleNdv, sharedMass) = sampleCache.computeIfAbsent(
-      (orders.queryExecution.optimizedPlan.canonicalized, groupCol), { _ =>
-        // cast: int-stored group columns must still read as longs below
-        val slim = orders.select(col(groupCol).cast("long")).rdd
-        // a provably-empty relation plans zero partitions — there is
-        // nothing to sample and runJob on partition 0 would throw
-        if (slim.getNumPartitions == 0) (0L, 0L, 1.0) else {
-        val nParts = slim.getNumPartitions
-        val targetRows = 2000000L
-        // ALWAYS spread the sample across many partitions (capped at 64,
-        // strided across the range), never concentrate it in few: reading
-        // the target rows from one big partition samples only that
-        // partition's PREFIX, and a structured prefix poisons the decision —
-        // measured at 1e9: the q4112 generator opens with a
-        // one-row-per-group enumeration run, so a partition-0-only sample
-        // read 2M singletons, called sharedMass = 0.0 on an hhp=1.0 config
-        // whose true task-window shared mass is ~0.9, and picked the packed
-        // bypass where partial/final is 3-6× faster. With the sample strided
-        // over ≥32 partitions the prefix contributes ≤ a few percent.
-        val kParts = math.min(nParts, 64)
-        val perPart = math.max(1L, targetRows / kParts).toInt
-        val stride = math.max(1, nParts / kParts)
-        val partIds = (0 until nParts by stride).take(kParts)
-        val chunks = orders.sparkSession.sparkContext.runJob(
-          slim,
-          (it: Iterator[org.apache.spark.sql.Row]) => {
-            val b = new scala.collection.mutable.ArrayBuilder.ofLong
-            var i = 0
-            while (i < perPart && it.hasNext) { b += it.next().getLong(0); i += 1 }
-            b.result()
-          },
-          partIds)
-        val counts = new java.util.HashMap[Long, Int]()
-        var n = 0L
-        chunks.foreach(_.foreach { g => counts.merge(g, 1, Integer.sum); n += 1 })
-        var shared = 0L
-        counts.values.forEach(c => if (c > 1) shared += c)
-        (n, counts.size.toLong, if (n == 0L) 1.0 else shared.toDouble / n)
-        }
-      })
+      (orders.queryExecution.optimizedPlan.canonicalized, groupCol),
+      _ => sampleSharedMass(orders, groupCol))
     // sharedMass < 0.4 already implies partial aggregation would leave
     // ≥60% of the rows uncollapsed — it subsumes any ndv-ratio test
     val bypass = tot > 0L && sharedMass < 0.4
@@ -1267,7 +1335,8 @@ object Q4112 {
       // hash map: the r9 1e9 profile put the cold partial plan's cost in
       // one uniform CPU-bound stage (~430 ns/row, zero spill) dominated
       // by the ~1e6-entry aggregation-map probe; array indexing removes
-      // it without changing the exchange or the arithmetic.
+      // it, and the arrays merge by slot range instead of through a
+      // final hash aggregate, with the same arithmetic.
       // Dense routing requires (a) stats at all — an empty/all-NULL
       // relation has none and must fall back, not NPE (advice item 3);
       // (b) a domain width that provably fits: the width `maxGroup −

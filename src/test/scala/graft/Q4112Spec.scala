@@ -144,24 +144,96 @@ class Q4112Spec extends SparkSpec {
   }
 
   test("dense-array partial aggregate equals the hash partial plan exactly") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit, when}
     val spark2 = spark
     import spark2.implicits._
     val items = (1L to 500L).map(i => (i, (i * 7) % 1000)).toDF("id", "price")
+    def result(df: DataFrame): Option[Long] =
+      df.collect().toSeq match {
+        case Seq(r) => if (r.isNullAt(0)) None else Some(r.getLong(0))
+        case rows => fail(s"expected one row, got ${rows.size}")
+      }
+    def check(orders: DataFrame, minGroup: Long, domain: Int): Option[Long] = {
+      val viaHash = result(Q4112.part2(items, orders, "id", "itemId", "price",
+        "quantity", "storeId", Q4112.BroadcastHash))
+      val viaDense = result(Q4112.part2DenseAgg(items, orders, "id", "itemId", "price",
+        "quantity", "storeId", minGroup, domain))
+      assert(viaDense === viaHash, s"domain $domain")
+      viaHash
+    }
     val orders = spark.range(0L, 100000L, 1L, 8)
       .select((col("id") % 500L + 1L).as("itemId"),
         (col("id") % 9L).as("quantity"),
         (col("id") % 37L + 100L).as("storeId")) // domain [100, 136]
-    val viaHash = Q4112.part2(items, orders, "id", "itemId", "price",
-      "quantity", "storeId", Q4112.BroadcastHash).collect()(0).getLong(0)
-    val viaDense = Q4112.part2DenseAgg(items, orders, "id", "itemId", "price",
-      "quantity", "storeId", minGroup = 100L, domain = 37).collect()(0).getLong(0)
-    assert(viaDense === viaHash)
+    val viaHash = check(orders, minGroup = 100L, domain = 37)
     // the adaptive chooser routes this bounded-domain shape to the dense form
-    val adaptive = Q4112.part2Adaptive(items, orders, "id", "itemId", "price",
-      "quantity", "storeId").collect()(0).getLong(0)
+    val adaptive = result(Q4112.part2Adaptive(items, orders, "id", "itemId", "price",
+      "quantity", "storeId"))
     assert(Q4112.lastChosenPlan === "partial_dense", Q4112.lastChosenPlan)
     assert(adaptive === viaHash)
+    // a domain above one reducer's 2^16 slots: the session's 4 shuffle
+    // partitions give 4 reducer ranges, every task dense in each. Groups
+    // hold 2 or 3 rows and only 3-row groups carry a large v, so adding
+    // slots of different ranges together would change the result
+    assert(spark.sessionState.conf.numShufflePartitions >= 2)
+    check(spark.range(0L, 500000L, 1L, 3)
+      .select((col("id") % 500L + 1L).as("itemId"),
+        when(col("id") >= 400000L, 1000L).otherwise(col("id") % 9L).as("quantity"),
+        (col("id") * 7919L % 200000L + 5L).as("storeId")), minGroup = 5L, domain = 200000)
+    // sparse occupancy: 3000 rows over 8 tasks in 100000 slots ship as
+    // (slot, sum, count) triples; groups hold 1 or 2 rows
+    check(spark.range(0L, 3000L, 1L, 8)
+      .select((col("id") % 500L + 1L).as("itemId"), (col("id") % 9L).as("quantity"),
+        (col("id") % 2000L * 47L + 1L).as("storeId")), minGroup = 1L, domain = 100000)
+    // the join drops every row: no group, NULL result
+    assert(check(orders.withColumn("itemId", col("itemId") + 1000L),
+      minGroup = 100L, domain = 37) === None)
+    // a provably-empty relation plans zero partitions
+    val empty = Seq.empty[(Long, Long, Long)].toDF("itemId", "quantity", "storeId")
+      .where(lit(false))
+    assert(empty.join(items, col("itemId") === col("id"))
+      .queryExecution.toRdd.getNumPartitions === 0)
+    assert(check(empty, minGroup = 0L, domain = 10) === None)
+  }
+
+  test("dense-array partial aggregate raises on a cross-task sum overflow, like the hash plan") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val spark2 = spark
+    import spark2.implicits._
+    val items = Seq((1L, 1L)).toDF("id", "price")
+    // one row per task with v = 2^62: each task's sum fits a long, the
+    // merged sum 2^63 does not
+    val orders = spark.range(0L, 2L, 1L, 2)
+      .select(lit(1L).as("itemId"), lit(1L << 62).as("quantity"), (col("id") * 0L).as("storeId"))
+    def overflows(df: org.apache.spark.sql.DataFrame): Boolean = {
+      val e = intercept[Exception](df.collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).toLowerCase.contains("overflow"))
+    }
+    assert(overflows(Q4112.part2(items, orders, "id", "itemId", "price", "quantity",
+      "storeId", Q4112.BroadcastHash)))
+    assert(overflows(Q4112.part2DenseAgg(items, orders, "id", "itemId", "price", "quantity",
+      "storeId", minGroup = 0L, domain = 1)))
+  }
+
+  test("adaptive sampler's (rows, ndv, shared mass) equals hash-map counting on a skewed sample") {
+    import org.apache.spark.sql.functions.{col, when}
+    // 8 x 50k rows, all inside the sample: half on one hot key, the rest
+    // a scatter of singletons and repeats, negative keys included
+    val orders = spark.range(0L, 400000L, 1L, 8)
+      .select(when(col("id") % 2L === 0L, 7L)
+        .otherwise(col("id") * 2654435761L % 150001L - 75000L).as("storeId"))
+    val counts = new java.util.HashMap[Long, Int]()
+    orders.collect().foreach(r => counts.merge(r.getLong(0), 1, Integer.sum))
+    var shared = 0L
+    counts.values.forEach(c => if (c > 1) shared += c)
+    val n = 400000L
+    val got = Q4112.sampleSharedMass(orders, "storeId")
+    assert(got === ((n, counts.size.toLong, shared.toDouble / n)))
+    assert(got._3 > 0.5 && got._3 < 1.0, got)
+    // a NULL key is one more key
+    assert(Q4112.sharedKeyMass(Array(3L, 1L, 3L), nulls = 2L) === ((5L, 3L, 0.8)))
   }
 
   test("dense-array partial aggregate reproduces hash-plan NULL semantics exactly") {
