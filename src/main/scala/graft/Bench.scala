@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line. Mirrors the reference's
   * harness loop (q4112_main.c:114-132: repeat, time, append) — a JVM/
@@ -11,20 +9,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val sfDir = Engine.sfDir
+    val cpus = Engine.cpus
+    val spark = Engine.session(cpus)
 
     def time(fn: => Unit): Double = {
       val t0 = System.nanoTime()
@@ -83,7 +70,10 @@ object Bench {
     // loaded) state. Parsed with a real JSON reader — the r10 regex
     // parse would silently disable the outlier pass on any payload
     // shape change, exactly the failure class it was added to catch
-    // (ADVICE r10 item 4); zero-parsed now warns loudly instead.
+    // (ADVICE r10 item 4); zero-parsed now warns loudly instead. Priors
+    // only hold for the same core count: a payload from another host
+    // width (or one that predates the `cpus` field) would make every
+    // settle wait its full bound and flag rows against foreign times.
     val (priorTimes, priorIdleShuffle): (Map[String, Double], Option[Double]) = {
       val f = new java.io.File("BENCH_full_latest.json")
       if (!f.isFile) (Map.empty, None)
@@ -98,15 +88,21 @@ object Bench {
           case JLong(l) => Some(l.toDouble)
           case _ => None
         }
-        val times = j \ "queries" match {
-          case JObject(fields) =>
-            fields.flatMap { case (k, v) => num(v).map(k -> _) }.toMap
-          case _ => Map.empty[String, Double]
+        if (!num(j \ "cpus").contains(cpus.toDouble)) {
+          System.err.println("[bench] BENCH_full_latest.json was not measured " +
+            s"on $cpus cpus; running without priors")
+          (Map.empty[String, Double], None)
+        } else {
+          val times = j \ "queries" match {
+            case JObject(fields) =>
+              fields.flatMap { case (k, v) => num(v).map(k -> _) }.toMap
+            case _ => Map.empty[String, Double]
+          }
+          if (times.isEmpty)
+            System.err.println("[bench] WARNING: BENCH_full_latest.json exists " +
+              "but zero prior times parsed — the outlier re-run pass is disabled")
+          (times, num(j \ "idle_shuffle"))
         }
-        if (times.isEmpty)
-          System.err.println("[bench] WARNING: BENCH_full_latest.json exists " +
-            "but zero prior times parsed — the outlier re-run pass is disabled")
-        (times, num(j \ "idle_shuffle"))
       } catch {
         case e: Throwable =>
           System.err.println("[bench] WARNING: failed to parse " +
@@ -250,7 +246,7 @@ object Bench {
     // loaded-session warning on every normal box thereafter.
     val hygiene = f""""idle_shuffle":$sessionIdleShuffle%.3f,"retimed":$retimedJson,"inflated_vs_prior":$inflatedJson"""
     val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec",$calib,"queries":$qs,"failed":$errNames,"n_failed":${errors.size},"inflated_vs_prior":$inflatedJson,"sf":"$sfDir"}"""
-    val full = f"""{"metric":"total","value":$total%.3f,"unit":"sec",$calib,$hygiene,"queries":$qs,"errors":$errs,"n_failed":${errors.size},"sf":"$sfDir"}"""
+    val full = f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$cpus,$calib,$hygiene,"queries":$qs,"errors":$errs,"n_failed":${errors.size},"sf":"$sfDir"}"""
     // the stdout line is tail-captured with finite length (round 6 lost
     // ~60 timings + the calib fields to truncation) — persist the FULL
     // payload both to /tmp and to the repo root, where the round's

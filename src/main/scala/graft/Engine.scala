@@ -14,7 +14,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Engine {
 
-  def session(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** Local executor slots for the mains: `SPARK_GRAFT_CPUS`, else every
+    * core of the host.
+    */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** Testdata scale-factor directory for the mains: `SPARK_GRAFT_SF_DIR`,
+    * else sf0.1.
+    */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The one session configuration. `extra` is applied after the
+    * defaults, so a caller that measures under different SparkContext
+    * settings (Matrix) overrides them without a builder of its own.
+    */
+  def session(cores: Int = cpus, extra: Map[String, String] = Map.empty): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")
@@ -34,6 +49,7 @@ object Engine {
       // managed tables (bucketed co-located joins) live outside the repo
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      .config(extra)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // native kernels as SQL functions + the Jaccard length-filter rule;

@@ -4,40 +4,7 @@ import graft.gen.Q4112Gen
 import graft.model.GenConfig
 import graft.ops.Q4112
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
-/** Per-rep Spark-native IO attribution (round-8 verdict item 9): sums
-  * TaskMetrics shuffle write/read and memory/disk spill bytes across
-  * every task that ends between `reset()` and `snapshot()`, so each
-  * matrix CSV row carries EXACT shuffle/spill volume next to the
-  * wall-clock probes — IO attribution measured, not inferred (cfg18's
-  * ~16 GB/rep through /tmp was previously deduced from probe drift).
-  */
-final class RepMetricsListener extends SparkListener {
-  private val shufW = new java.util.concurrent.atomic.AtomicLong
-  private val shufR = new java.util.concurrent.atomic.AtomicLong
-  private val spillMem = new java.util.concurrent.atomic.AtomicLong
-  private val spillDisk = new java.util.concurrent.atomic.AtomicLong
-
-  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-    val m = e.taskMetrics
-    if (m != null) {
-      shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      spillMem.addAndGet(m.memoryBytesSpilled)
-      spillDisk.addAndGet(m.diskBytesSpilled)
-    }
-  }
-
-  def reset(): Unit = {
-    shufW.set(0); shufR.set(0); spillMem.set(0); spillDisk.set(0)
-  }
-
-  /** (shuffleWriteMB, shuffleReadMB, memSpillMB, diskSpillMB). */
-  def snapshot(): (Long, Long, Long, Long) =
-    (shufW.get >> 20, shufR.get >> 20, spillMem.get >> 20, spillDisk.get >> 20)
-}
+import org.apache.spark.sql.graft.bridge
 
 /** Config-matrix harness — the Spark port of the reference's driver loop
   * (q4112_main.c:114-132): for each configuration, generate seeded data,
@@ -113,13 +80,12 @@ object Matrix {
     val idxFilter: Option[Set[Int]] =
       if (args.length > 5 && args(5).nonEmpty) Some(args(5).split(",").map(_.toInt).toSet)
       else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = Engine.cpus
     // giant-group-count configs (part-2 cfg4/18: 1e8 singleton groups)
     // need more, smaller reduce tasks than cores: each reducer's
     // aggregation map holds groups/partitions entries NEXT TO the 24 GB
     // input cache, and 32 concurrent ~3M-entry maps OOM a 100 GB heap
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
     // part-2 aggregation plan: auto (stats-adaptive, default) | partial
     // (Catalyst's partial/final split) | bypass (pre-partition raw rows,
     // no map-side agg) | bucketed (probe table stored clustered on the
@@ -147,17 +113,12 @@ object Matrix {
     require(Set("auto", "bucketed", "scan_floor")(p1Plan),
       s"SPARK_GRAFT_P1_PLAN must be auto|bucketed|scan_floor, got '$p1Plan'")
     val buckets = sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "256").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.cbo.planStats.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = Engine.session(cpus, Map(
+      "spark.sql.shuffle.partitions" -> shufflePartitions,
       // the generated columns are near-unique longs: the cache's
       // DictionaryEncoding stats pass (boxed HashMap.put per value) costs
       // more than the whole query at 1e9 rows — store raw columnar
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
+      "spark.sql.inMemoryColumnarStorage.compressed" -> "false",
       // the dense-key array build collects value-only chunks for
       // contiguous-run partitions (~8 B/key + serialization overhead —
       // 800 MB at inner=1e8); the cap must also fit the NON-contiguous
@@ -165,26 +126,21 @@ object Matrix {
       // shuffled dimension would hit — 2g sat right at that edge, 4g
       // covers both paths with margin. Same driver data path as Spark's
       // own BroadcastExchangeExec.
-      .config("spark.driver.maxResultSize", "4g")
+      "spark.driver.maxResultSize" -> "4g",
       // broadcast payloads here are near-random long[]: lz4 shrinks them
       // barely but costs a full compress+decompress pass per executor
-      .config("spark.broadcast.compress", "false")
+      "spark.broadcast.compress" -> "false",
       // always honor a bucketed layout: the auto rule may plan a bare
       // scan (e.g. the cache-materialization pass) as non-bucketed,
       // which would strip the HashPartitioning/ordering the cached plan
       // hands to every later query — the layout-detection path
       // (Q4112.clusteredOn) and the sort-free bucketed SMJ depend on it
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
-    // per-stage task-time attribution (max vs avg separates skew from
-    // uniform per-row cost) — opt-in, for the >2x-shape investigations
-    if (sys.env.get("SPARK_GRAFT_STAGE_METRICS").contains("1"))
-      spark.sparkContext.addSparkListener(new StageSkewListener)
+      "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false"))
     // always-on per-rep IO attribution: exact shuffle/spill bytes per
-    // timed rep land in the CSV next to the wall-clock probes
-    val repMetrics = new RepMetricsListener
+    // timed rep land in the CSV next to the wall-clock probes, and the
+    // rep's stages of 2 s or more of task time go to stderr (max vs sum
+    // separates skew from uniform per-row cost)
+    val repMetrics = new TaskMetricsListener
     spark.sparkContext.addSparkListener(repMetrics)
 
     // JIT/code-cache warm-up at 1e7 rows, untimed: measured on this box,
@@ -589,11 +545,13 @@ object Matrix {
           val ns = System.nanoTime() - t0
           assert(result == oracle,
             s"result $result != oracle $oracle for $cfg") // q4112_main.c:127
-          // listener events post asynchronously; a short drain keeps the
-          // snapshot complete (collect() returned, so all jobs are done
-          // — only the bus can lag)
-          Thread.sleep(300)
-          val (shufWMb, shufRMb, spillMemMb, spillDiskMb) = repMetrics.snapshot()
+          // listener events post asynchronously (collect() returned, so
+          // all jobs are done — only the bus can lag)
+          bridge.drainListenerBus(spark.sparkContext)
+          val io = repMetrics.totals
+          val (shufWMb, shufRMb, spillMemMb, spillDiskMb) = (io.shuffleWriteBytes >> 20,
+            io.shuffleReadBytes >> 20, io.memorySpillBytes >> 20, io.diskSpillBytes >> 20)
+          repMetrics.stages.filter(_.taskMs >= 2000).foreach(st => System.err.println(st.line))
           // the plan column names the PHYSICAL plan that ran: for the
           // adaptive modes that is part2Adaptive's recorded choice
           // (mode:choice), so matrix_best.py can attribute auto-mode

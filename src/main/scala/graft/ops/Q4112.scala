@@ -259,7 +259,7 @@ object Q4112 {
   /** The layout advice the adaptive planners last emitted ("" when the
     * chosen plan was already exchange-free). Surfaced so harnesses and
     * specs can assert the hint fires; the human-facing copy goes to
-    * stdout at plan time, where `Explain` runs show it next to the plan.
+    * stdout at plan time, where `Probe` runs show it next to the plan.
     */
   @volatile var lastAdvice: String = ""
 
@@ -899,14 +899,13 @@ object Q4112 {
     * minGroup+domain) window fails with an explicit "stale statistics"
     * error instead of corrupting memory.
     *
-    * Combine-cache size: the per-task direct-mapped cache defaults to
-    * 2^13 entries — the reference's measured best (q4112.c:232-233,
+    * Combine-cache size: the per-task direct-mapped cache has 2^13
+    * entries — the reference's measured best (q4112.c:232-233,
     * README-2.txt:10-12 measured 2^10/2^13/2^15) AND ours: the
     * round-11 replay of that ablation at 1e9 on the three pole shapes
     * (SCALING.md round 11) reproduces the C's curve — 2^10 thrashes
     * the 1e4-hot-group shape (5.20 s vs 2.83 s), 2^15 pays its flush
-    * scan everywhere, 2^13 wins the sum. `SPARK_GRAFT_CACHE_BITS`
-    * overrides it for A/B ablation.
+    * scan everywhere, 2^13 wins the sum.
     */
   def sharedDenseGroupedAvg(gv: DataFrame, minGroup: Long, domain: Long): DataFrame = {
     require(gv.sparkSession.sparkContext.isLocal,
@@ -928,9 +927,7 @@ object Q4112 {
     // stats and pins the schema before routing here, so its plans take
     // the unguarded loop).
     val nullGuard = gv.schema.fields.exists(_.nullable)
-    val cacheBits = sys.env.get("SPARK_GRAFT_CACHE_BITS").map(_.toInt).getOrElse(13)
-    require(cacheBits >= 4 && cacheBits <= 20,
-      s"SPARK_GRAFT_CACHE_BITS out of range: $cacheBits")
+    val cacheBits = 13
     val rdd0 = gv.queryExecution.toRdd
     if (rdd0.getNumPartitions == 0)
       // a provably-empty relation plans zero partitions; the ungrouped
@@ -1163,10 +1160,8 @@ object Q4112 {
       priceCol: String,
       quantityCol: String,
       groupCol: String,
-      dense: Boolean = false,
-      bypassRatio: Long = 16L): DataFrame = {
+      dense: Boolean = false): DataFrame = {
     val t0 = System.nanoTime()
-    val _ = bypassRatio // subsumed by the shared-mass rule (kept for source compat)
     // the dense perfect-hash probe is chosen by the PLANNER whenever the
     // build side is a contiguous-key dimension (cached stats, no job) —
     // the caller's `dense` flag remains as a forced override. Measured
