@@ -195,7 +195,8 @@ object SparkEntry {
         "p_partkey", "l_partkey", "price", "quantity", Q4112.SortMerge)
         .withColumnRenamed("avg_value", "avg_value_sm")),
     // dense-key array probe ("perfect hash join"): the join collapses to
-    // a codegen'd bounds-check + array index per probe row
+    // a bounds-check + array index per probe row, in one kernel loop
+    // over the scan's batches
     "q4112_part1_dense" -> ((s, dir) =>
       Q4112.part1Dense(partItems(s, dir), liOrders(s, dir),
         "p_partkey", "l_partkey", "price", "quantity")

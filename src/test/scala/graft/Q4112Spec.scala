@@ -88,19 +88,79 @@ class Q4112Spec extends SparkSpec {
   }
 
   test("dense-key array probe equals the hash-join plan (part1 and part2)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val spark2 = spark
+    import spark2.implicits._
     val cfg = GenConfig(500, 0.8, 999, 20000, 0.7, 999, 40, 4, 0.5, seed = 11)
     val items = Q4112Gen.items(spark, cfg).toDF()
-    val orders = Q4112Gen.orders(spark, cfg).toDF()
-    val hash1 = Q4112.part1(items, orders, "id", "itemId", "price", "quantity")
-      .collect().head.getLong(0)
-    val dense1 = Q4112.part1Dense(items, orders, "id", "itemId", "price", "quantity")
-      .collect().head.getLong(0)
-    assert(dense1 === hash1)
-    val hash2 = Q4112.part2(items, orders, "id", "itemId", "price", "quantity", "storeId")
-      .collect().head.getLong(0)
-    val dense2 = Q4112.part2Dense(items, orders, "id", "itemId", "price", "quantity", "storeId")
-      .collect().head.getLong(0)
-    assert(dense2 === hash2)
+    val gen = Q4112Gen.orders(spark, cfg).toDF()
+    def result(df: DataFrame): Option[Long] =
+      df.collect().toSeq match {
+        case Seq(r) => if (r.isNullAt(0)) None else Some(r.getLong(0))
+        case rows => fail(s"expected one row, got ${rows.size}")
+      }
+    // the names of the dense probe RDDs behind a frame's kernel rows
+    def probeSources(df: DataFrame): Seq[String] =
+      df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.toDebugString }
+        .flatMap(s => "dense probe over (\\w+)".r.findAllMatchIn(s).map(_.group(1)))
+    // every dense form against the broadcast-hash plan; returns the
+    // kernel's batch source
+    def check(what: String, orders: DataFrame): String = {
+      val p1 = part1Dense(items, orders, "id", "itemId", "price", "quantity")
+      assert(result(p1) === result(part1(items, orders, "id", "itemId", "price", "quantity",
+        BroadcastHash)), what)
+      val hash2 = result(part2(items, orders, "id", "itemId", "price", "quantity", "storeId",
+        BroadcastHash))
+      assert(result(part2Dense(items, orders, "id", "itemId", "price", "quantity",
+        "storeId")) === hash2, what)
+      val (mn, dom) = minMaxLongsOpt(orders, Seq("storeId")) match {
+        case Some(Seq((lo, hi))) => (lo, (hi - lo + 1L).toInt)
+        case _ => (0L, 1) // no non-NULL group: only the NULL slot is used
+      }
+      val p2 = part2DenseAgg(items, orders, "id", "itemId", "price", "quantity", "storeId",
+        mn, dom, dense = true)
+      assert(result(p2) === hash2, what)
+      val sources = (probeSources(p1) ++ probeSources(p2)).distinct
+      assert(sources.size === 1, s"$what: $sources")
+      sources.head
+    }
+    // an uncached generator plan is executed as rows and copied into batches
+    assert(check("generator", gen) === "rows")
+    // a cached relation hands the kernel the scan's own batches
+    val cached = gen.cache()
+    try assert(check("cached", cached) === "columnar")
+    finally cached.unpersist(blocking = true)
+    // a vectorized parquet scan does too
+    val dir = java.nio.file.Files.createTempDirectory("dense_probe_pq").toString
+    gen.write.mode("overwrite").parquet(dir)
+    assert(check("parquet", spark.read.parquet(dir)) === "columnar")
+    // int-stored keys, quantities and groups are read as ints
+    val narrow = gen.select((col("itemId") % 100000).cast("int").as("itemId"),
+      col("quantity").cast("int").as("quantity"), col("storeId").cast("int").as("storeId"))
+      .cache()
+    try assert(check("int-stored", narrow) === "columnar")
+    finally narrow.unpersist(blocking = true)
+    // keys below and above the domain, NULL keys, quantities and groups
+    val holes = gen.select(
+      when(col("quantity") % 5 === 0, lit(null)).when(col("quantity") % 5 === 1, -col("itemId"))
+        .otherwise(col("itemId")).as("itemId"),
+      when(col("quantity") % 7 === 0, lit(null)).otherwise(col("quantity")).as("quantity"),
+      when(col("quantity") % 11 === 0, lit(null)).otherwise(col("storeId")).as("storeId"))
+    check("nullable", holes)
+    val holesCached = holes.cache()
+    try assert(check("nullable cached", holesCached) === "columnar")
+    finally holesCached.unpersist(blocking = true)
+    // every quantity NULL: no product, so every form answers NULL
+    val noQty = gen.withColumn("quantity", lit(null).cast("long"))
+    check("all-NULL quantity", noQty)
+    assert(result(part1Dense(items, noQty, "id", "itemId", "price", "quantity")) === None)
+    // empty partitions, and a relation that plans no partition at all
+    check("empty", gen.where(col("itemId") < 0))
+    val none = Seq.empty[(Long, Long, Long)].toDF("itemId", "storeId", "quantity").where(lit(false))
+    assert(none.queryExecution.toRdd.getNumPartitions === 0)
+    check("zero partitions", none)
   }
 
   for ((cfg, i) <- part2Configs.zipWithIndex) {
@@ -215,6 +275,29 @@ class Q4112Spec extends SparkSpec {
       "storeId", Q4112.BroadcastHash)))
     assert(overflows(Q4112.part2DenseAgg(items, orders, "id", "itemId", "price", "quantity",
       "storeId", minGroup = 0L, domain = 1)))
+    // both rows in ONE task: the in-task sum must raise too, on the row
+    // path and on the probe kernel
+    val oneTask = orders.coalesce(1)
+    for (dense <- Seq(false, true))
+      assert(overflows(Q4112.part2DenseAgg(items, oneTask, "id", "itemId", "price", "quantity",
+        "storeId", minGroup = 0L, domain = 1, dense = dense)), s"dense = $dense")
+    assert(overflows(Q4112.part2(items, oneTask, "id", "itemId", "price", "quantity",
+      "storeId", Q4112.BroadcastHash)))
+    assert(overflows(Q4112.part1Dense(items, oneTask, "id", "itemId", "price", "quantity")))
+    // with ANSI off every plan wraps, and the dense forms wrap the same way
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      def one(df: org.apache.spark.sql.DataFrame) = df.collect().head.getLong(0)
+      for (o <- Seq(orders, oneTask)) {
+        val hash2 = one(Q4112.part2(items, o, "id", "itemId", "price", "quantity", "storeId",
+          Q4112.BroadcastHash))
+        for (dense <- Seq(false, true))
+          assert(one(Q4112.part2DenseAgg(items, o, "id", "itemId", "price", "quantity",
+            "storeId", minGroup = 0L, domain = 1, dense = dense)) === hash2)
+        assert(one(Q4112.part1Dense(items, o, "id", "itemId", "price", "quantity")) ===
+          one(Q4112.part1(items, o, "id", "itemId", "price", "quantity", Q4112.BroadcastHash)))
+      }
+    } finally spark.conf.unset("spark.sql.ansi.enabled")
   }
 
   test("adaptive sampler's (rows, ndv, shared mass) equals hash-map counting on a skewed sample") {
@@ -573,6 +656,24 @@ class Q4112Spec extends SparkSpec {
     assertThrows[IllegalArgumentException] {
       Q4112.part1Dense(holey, orders, "id", "itemId", "price", "quantity")
     }
+    // a duplicate plus a gap passes max - min + 1 == rows: the build must
+    // see that slot 2 is never written and slot 1 twice
+    val dupGap = Seq((1L, 10L), (1L, 20L), (3L, 30L)).toDF("id", "price")
+    val probe = Seq((1L, 1L, 1L), (2L, 1L, 1L), (3L, 1L, 1L)).toDF("itemId", "storeId", "quantity")
+    def one(df: org.apache.spark.sql.DataFrame) = df.collect().head.getLong(0)
+    val hash1 = one(Q4112.part1(dupGap, probe, "id", "itemId", "price", "quantity",
+      Q4112.BroadcastHash))
+    assert(hash1 === 20L) // (10 + 20 + 30) div 3
+    assert(one(Q4112.part1Adaptive(dupGap, probe, "id", "itemId", "price", "quantity")) === hash1)
+    assert(Q4112.lastChosenPlan === "broadcast")
+    val hash2 = one(Q4112.part2(dupGap, probe, "id", "itemId", "price", "quantity", "storeId",
+      Q4112.BroadcastHash))
+    assert(one(Q4112.part2Adaptive(dupGap, probe, "id", "itemId", "price", "quantity",
+      "storeId")) === hash2)
+    val e = intercept[IllegalArgumentException] {
+      Q4112.part1Dense(dupGap, probe, "id", "itemId", "price", "quantity")
+    }
+    assert(e.getMessage.contains("exactly once"), e.getMessage)
   }
 
   test("priceOf closed form equals the generator's column expression") {
