@@ -27,6 +27,13 @@ import org.apache.spark.sql.graft.bridge
   * `runMain graft.Matrix [outCsv] [scale] [part] [reps]` — scale shrinks
   * the reference matrices (outer=1e9 → 1e9·scale); default 1e-3 mirrors
   * FIXTURES.md. `part` = 1 | 2 | all (default all); `reps` defaults to 3.
+  *
+  * Every cell runs the adaptive planners, which work out the physical
+  * plan from the relations. The environment picks only the stored
+  * layout and the session's shuffle width:
+  *  - `SPARK_GRAFT_P1_PLAN` = auto | bucketed | scan_floor;
+  *  - `SPARK_GRAFT_P2_PLAN` = auto | bucketed | joined_bucketed;
+  *  - `SPARK_GRAFT_SHUFFLE` = shuffle partitions (default: the cores).
   */
 object Matrix {
 
@@ -86,21 +93,21 @@ object Matrix {
     // aggregation map holds groups/partitions entries NEXT TO the 24 GB
     // input cache, and 32 concurrent ~3M-entry maps OOM a 100 GB heap
     val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
-    // part-2 aggregation plan: auto (stats-adaptive, default) | partial
-    // (Catalyst's partial/final split) | bypass (pre-partition raw rows,
-    // no map-side agg) | bucketed (probe table stored clustered on the
-    // group key; part2Adaptive DETECTS the layout and takes the
-    // exchange-free path — the CSV plan column records what it chose).
-    // Unknown values fail fast: a typo would otherwise run the wrong
-    // plan and write the typo into the CSV as if it were a real mode.
+    // part-2 stored layout: auto (none; the stats-adaptive planner picks
+    // the plan, default) | bucketed (probe table stored clustered on the
+    // group key) | joined_bucketed (the joined (group, v) projection
+    // stored clustered on the group key). Every mode runs part2Adaptive,
+    // which finds a registered layout itself; the CSV plan column
+    // records what it chose. Unknown values fail fast: a typo would
+    // otherwise run the wrong layout and write the typo into the CSV as
+    // if it were a real mode.
     val p2Plan = sys.env.getOrElse("SPARK_GRAFT_P2_PLAN", "auto")
-    require(Set("auto", "partial", "bypass", "packed", "bucketed", "joined_bucketed",
-        "shared_dense")(p2Plan),
-      s"SPARK_GRAFT_P2_PLAN must be auto|partial|bypass|packed|bucketed|joined_bucketed|shared_dense, got '$p2Plan'")
-    // part-1 join layout: auto (dense array probe / broadcast hash by
-    // build size, as before) | bucketed (BOTH tables stored bucketed +
-    // sorted on the join key — the sort-merge join then needs neither
-    // exchange nor sort nor driver-side broadcast build)
+    require(Set("auto", "bucketed", "joined_bucketed")(p2Plan),
+      s"SPARK_GRAFT_P2_PLAN must be auto|bucketed|joined_bucketed, got '$p2Plan'")
+    // part-1 join layout: auto (dense array probe for a contiguous-key
+    // build side, broadcast hash otherwise) | bucketed (BOTH tables
+    // stored bucketed + sorted on the join key — the sort-merge join then
+    // needs neither exchange nor sort nor driver-side broadcast build)
     // scan_floor is a DIAGNOSTIC, not a join plan: it times
     // `sum(quantity) div count(1)` over the same cached orders relation
     // — the engine's pure columnar-scan + ungrouped-agg floor with no
@@ -112,7 +119,8 @@ object Matrix {
     val p1Plan = sys.env.getOrElse("SPARK_GRAFT_P1_PLAN", "auto")
     require(Set("auto", "bucketed", "scan_floor")(p1Plan),
       s"SPARK_GRAFT_P1_PLAN must be auto|bucketed|scan_floor, got '$p1Plan'")
-    val buckets = sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "256").toInt
+    // buckets per layout table: 256 one-file buckets
+    val buckets = 256
     val spark = Engine.session(cpus, Map(
       "spark.sql.shuffle.partitions" -> shufflePartitions,
       // the generated columns are near-unique longs: the cache's
@@ -159,7 +167,7 @@ object Matrix {
       Q4112.part2Adaptive(wi.toDF(), wo.toDF(), "id", "itemId", "price",
         "quantity", "storeId").collect()
       Q4112.part2BypassPacked(wi.toDF(), wo.toDF(), "id", "itemId", "price",
-        "quantity", "storeId", numPartitions = 32, dense = true).collect()
+        "quantity", "storeId", numPartitions = 32).collect()
       Q4112Gen.oracleFullCas(wo, w)
       wi.unpersist(blocking = true); wo.unpersist(blocking = true)
       Q4112.clearRelationCaches()
@@ -268,16 +276,6 @@ object Matrix {
            if (partFilter == "all" || partFilter == part.toString) &&
              cfg.innerTuples >= innerMin &&
              idxFilter.forall(_.contains(idx))) {
-        // measured on this box at outer=1e9: shuffled hash (J4's
-        // parallel partitioned build) costs 287-744 s because the
-        // 1e9-row probe side must shuffle through local disk; broadcast
-        // hash runs a 1e8-row build side in ~104-229 s (single-threaded
-        // driver build + hash-miss-heavy probe); the dense-key array
-        // probe (items.id is contiguous — q4112.h:14) beats both, like
-        // the reference's own layout-aware tuning. Sort-merge is never
-        // right for this query. On a multi-node cluster bucketed
-        // co-location (Tables.writeBucketed) replaces the probe shuffle.
-        val dense = cfg.innerTuples > 10000000L
         val p1Bucketed = part == 1 && p1Plan == "bucketed"
         val p2Bucketed = part == 2 && p2Plan == "bucketed"
         import org.apache.spark.sql.functions.col
@@ -340,12 +338,9 @@ object Matrix {
         // gains up to 2.3× (median 1.52×→1.10× the C), while part-2's
         // accumulate-bound plans LOSE — the per-row widening cast in
         // the (group, v) hot path costs more than the bytes it saves
-        // (median 1.15×→1.28×, SCALING §6 has both tables). Default
-        // follows that rule; SPARK_GRAFT_NARROW=1/0 forces either way.
-        val narrow = sys.env.get("SPARK_GRAFT_NARROW")
-          .map(_ == "1").getOrElse(part == 1) &&
-          !p1Bucketed && !p2Bucketed &&
-          !(part == 2 && p2Plan == "joined_bucketed")
+        // (median 1.15×→1.28×, SCALING §6 has both tables). So part 1
+        // stores narrow (except on its bucketed layout) and part 2 wide.
+        val narrow = part == 1 && !p1Bucketed
         val orders =
           if (p1Bucketed) {
             writeBucketedTable(Q4112Gen.orders(spark, cfg).toDF(), "orders_bkt", "itemId")
@@ -400,8 +395,7 @@ object Matrix {
         if (part == 2 && p2Plan == "joined_bucketed")
           writeBucketedTable(
             Q4112.groupedValues(items.toDF(), orders.toDF(),
-              "id", "itemId", "price", "quantity", "storeId",
-              dense = cfg.innerTuples > 10000000L),
+              "id", "itemId", "price", "quantity", "storeId"),
             "joined_bkt", "storeId")
         // independent oracle, computed once per config: collections on
         // the driver at small scale, the RDD path (still independent of
@@ -489,57 +483,29 @@ object Matrix {
               // (range-partitioned parallel build + probe, q4112_hj.c:
               // 163-183). SMJ was measured too: the cache drops the
               // per-bucket sort order, so SMJ re-sorts both sides.
-              // Without the layout it keeps the measured default
-              // (dense array probe / broadcast hash by build size).
+              // Without the layout it keeps the measured default: the
+              // dense array probe for a contiguous-key build side
+              // (items.id is contiguous — q4112.h:14), broadcast hash
+              // otherwise. Measured at outer=1e9: shuffled hash (J4's
+              // parallel partitioned build) costs 287-744 s because the
+              // 1e9-row probe side must shuffle through local disk;
+              // broadcast hash runs a 1e8-row build side in ~104-229 s;
+              // the dense probe beats both.
               val df = Q4112.part1Adaptive(items.toDF(), ordersQ,
-                "id", "itemId", "price", "quantity", dense)
+                "id", "itemId", "price", "quantity")
               df.collect().headOption.flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
             } else {
-              // physical-plan selection for the grouped aggregate —
-              // "auto"/"bucketed" run the stats-adaptive planner (which
-              // detects the bucketed layout itself and records its
-              // choice in lastChosenPlan → the CSV plan column); the
-              // explicit modes exist for differential benchmarking
-              val df = p2Plan match {
-                // the adaptive modes all call the SAME planner entry;
-                // what differs is which layout was registered above.
-                // auto: none (stats decide). bucketed/joined_bucketed:
-                // the planner is handed the RAW relations and must
-                // route to the registered layout itself — the CSV plan
-                // column records what it chose (bucketed_routed /
-                // joined_bucketed), proving the routing fired.
-                case "auto" => Q4112.part2Adaptive(items.toDF(), ordersQ,
-                  "id", "itemId", "price", "quantity", "storeId", dense)
-                case "bucketed" | "joined_bucketed" =>
-                  Q4112.part2Adaptive(itemsRaw, ordersRaw,
-                    "id", "itemId", "price", "quantity", "storeId", dense)
-                case "bypass" => Q4112.part2Bypass(items.toDF(), ordersQ,
-                  "id", "itemId", "price", "quantity", "storeId",
-                  Q4112.bypassPartitions(cfg.groups, shufflePartitions.toInt), dense)
-                // packed raw exchange (8 B/row): checked=false is sound
-                // here because the generator caps price/quantity at
-                // innerValMax/outerValMax ≤ 99999 (v < 2^34) and groups
-                // < 2^29 for every matrix shape — and the oracle assert
-                // below would catch any corruption
-                case "packed" => Q4112.part2BypassPacked(items.toDF(), ordersQ,
-                  "id", "itemId", "price", "quantity", "storeId",
-                  Q4112.bypassPartitions(cfg.groups, shufflePartitions.toInt), dense,
-                  checked = false)
-                // the reference's own t16 algorithm (shared sized CAS
-                // table, q4112.c:225-297) for differential A/B against
-                // the exchange-based forms on the singleton-group shapes
-                case "shared_dense" =>
-                  val Seq((mn, mx)) =
-                    Q4112.minMaxLongs(ordersQ, Seq("storeId"))
-                  Q4112.part2SharedDense(items.toDF(), ordersQ,
-                    "id", "itemId", "price", "quantity", "storeId",
-                    mn, mx - mn + 1L, dense)
-                case _ => // "partial": Catalyst's default partial/final split
-                  if (dense) Q4112.part2Dense(items.toDF(), ordersQ,
-                    "id", "itemId", "price", "quantity", "storeId")
-                  else Q4112.part2(items.toDF(), ordersQ,
-                    "id", "itemId", "price", "quantity", "storeId", Q4112.BroadcastHash)
-              }
+              // the adaptive planner over the config's relations: in
+              // "auto" the cached relations (statistics decide); in the
+              // layout modes the RAW generator plans, so the planner must
+              // route to the registered layout itself — the CSV plan
+              // column records what it chose (bucketed_routed /
+              // joined_bucketed), proving the routing fired
+              val df =
+                if (p2Plan == "auto") Q4112.part2Adaptive(items.toDF(), ordersQ,
+                  "id", "itemId", "price", "quantity", "storeId")
+                else Q4112.part2Adaptive(itemsRaw, ordersRaw,
+                  "id", "itemId", "price", "quantity", "storeId")
               df.collect().headOption.flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
             }
           val ns = System.nanoTime() - t0
@@ -552,19 +518,13 @@ object Matrix {
           val (shufWMb, shufRMb, spillMemMb, spillDiskMb) = (io.shuffleWriteBytes >> 20,
             io.shuffleReadBytes >> 20, io.memorySpillBytes >> 20, io.diskSpillBytes >> 20)
           repMetrics.stages.filter(_.taskMs >= 2000).foreach(st => System.err.println(st.line))
-          // the plan column names the PHYSICAL plan that ran: for the
-          // adaptive modes that is part2Adaptive's recorded choice
-          // (mode:choice), so matrix_best.py can attribute auto-mode
-          // wins to a physical plan instead of the literal "auto"
+          // the plan column names the PHYSICAL plan that ran: the
+          // planner's recorded choice (mode:choice), so a reader can
+          // attribute auto-mode wins to a physical plan instead of the
+          // literal "auto"
           val planLabel =
-            if (part == 1) {
-              if (p1Plan == "scan_floor") "scan_floor:scan"
-              else s"$p1Plan:${Q4112.lastChosenPlan}"
-            } else p2Plan match {
-              case "auto" | "bucketed" | "joined_bucketed" =>
-                s"$p2Plan:${Q4112.lastChosenPlan}"
-              case other => other
-            }
+            if (part == 1 && p1Plan == "scan_floor") "scan_floor:scan"
+            else s"${if (part == 1) p1Plan else p2Plan}:${Q4112.lastChosenPlan}"
           out.println(Seq(
             cfg.innerTuples, cfg.innerSelectivity, cfg.innerValMax,
             cfg.outerTuples, cfg.outerSelectivity, cfg.outerValMax,

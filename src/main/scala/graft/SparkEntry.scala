@@ -240,16 +240,11 @@ object SparkEntry {
         numPartitions = s.sparkContext.defaultParallelism)),
     // the dense-array partial aggregate through the correctness gate in
     // its OWN right (not only via the adaptive chooser, whose routing
-    // could change): domain bounds derived from the supplier-key range
-    // the same way the chooser proves them from stats
-    "q4112_part2_dense_agg" -> ((s, dir) => {
-      val lo = liOrders(s, dir)
-      val Seq(mn, mx) = lo.agg(min(col("l_suppkey")), max(col("l_suppkey")))
-        .collect()(0).toSeq.map(_.asInstanceOf[Long])
-      Q4112.part2DenseAgg(partItems(s, dir), lo,
-        "p_partkey", "l_partkey", "price", "quantity", "l_suppkey",
-        minGroup = mn, domain = (mx - mn + 1).toInt)
-    }),
+    // could change); the form takes its group domain from the same
+    // cached statistics the chooser routes on
+    "q4112_part2_dense_agg" -> ((s, dir) =>
+      Q4112.part2DenseAgg(partItems(s, dir), liOrders(s, dir),
+        "p_partkey", "l_partkey", "price", "quantity", "l_suppkey")),
     // the shared-CAS-table form (the reference's own t16 algorithm,
     // q4112.c:225-297) through the correctness gate in its own right.
     // Parquet schemas are nullable; the testdata carries no NULLs, so a
@@ -265,23 +260,19 @@ object SparkEntry {
         coalesce(col("l_partkey"), lit(-1L)).as("l_partkey"),
         coalesce(col("l_suppkey"), lit(0L)).as("l_suppkey"),
         coalesce(col("quantity"), lit(0L)).as("quantity"))
-      val Seq(mn, mx) = lo.agg(min(col("l_suppkey")), max(col("l_suppkey")))
-        .collect()(0).toSeq.map(_.asInstanceOf[Long])
       Q4112.part2SharedDense(it, lo,
-        "p_partkey", "l_partkey", "price", "quantity", "l_suppkey",
-        minGroup = mn, domain = mx - mn + 1L)
+        "p_partkey", "l_partkey", "price", "quantity", "l_suppkey")
     }),
     // the shared-dense route on RAW nullable-schema parquet facts
     // (round-10 verdict item 1): no coalesce, no nullability coercion —
     // the ADAPTIVE router must prove null-freedom from data statistics
-    // (null counts on the group/quantity/price columns), pin the
-    // projection non-nullable, and pick shared_dense on its own; the
-    // entry throws if any other plan is chosen, and the value is
-    // oracle-recomputed in DuckDB. Shape: customers joined to orders
-    // grouped by the UNIQUE o_orderkey — the all-singleton group
-    // profile (sampled sharedMass ≈ 0) that defeats every partial-
-    // aggregation plan and is exactly what the reference's t16 shared
-    // CAS table exists for (q4112.c:225-297).
+    // (null counts on the group/quantity/price columns) and pick
+    // shared_dense on its own; the entry throws if any other plan is
+    // chosen, and the value is oracle-recomputed in DuckDB. Shape:
+    // customers joined to orders grouped by the UNIQUE o_orderkey — the
+    // all-singleton group profile (sampled sharedMass ≈ 0) that defeats
+    // every partial-aggregation plan and is exactly what the reference's
+    // t16 shared CAS table exists for (q4112.c:225-297).
     "q4112_part2_shared_dense_parquet" -> ((s, dir) => {
       val items = t(s, dir, "customer")
         .select(col("c_custkey"), (col("c_custkey") % 1000L).as("price"))

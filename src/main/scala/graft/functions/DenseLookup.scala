@@ -28,10 +28,12 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * Returns NULL for keys outside the domain → `.where(isNotNull)`
   * reproduces inner-join drop semantics exactly.
   *
-  * Used by the plans that still need (group, v) rows after the probe
-  * (`Q4112.part2Dense` and the bypass, packed and shared-dense forms).
-  * Part 1 and the dense partial aggregate probe the same array with the
-  * columnar kernel `Q4112.probeAccumulate` instead, with no row pipeline.
+  * Used by the plans that still need (group, v) rows after the probe:
+  * `Q4112.part2Dense`, and the bypass, packed and shared-dense forms
+  * when their build side is dense (`Q4112.groupedValues` asks
+  * `Q4112.denseEligible`). Part 1 and the dense partial aggregate probe
+  * the same array with the columnar kernel `Q4112.probeAccumulate`
+  * instead, with no row pipeline.
   */
 case class DenseArrayLookup(
     child: Expression,

@@ -46,6 +46,13 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
   *    either side of the shuffle.
   *  - The final avg-of-avgs is a single ungrouped aggregate over one row
   *    per group — negligible at any scale.
+  *  - Every form works out its physical facts from the `items`/`orders`
+  *    it is given, through the relation caches below: whether the build
+  *    side is dense ([[denseEligible]]), the group domain
+  *    ([[minMaxLongsOpt]]), the pack bounds ([[packBoundsOk]]) and
+  *    null-freedom ([[colsCarryNulls]]). None takes them as parameters,
+  *    so a fact has one source, and a form asks with the same columns as
+  *    [[part2Adaptive]], so building it after the planner runs no job.
   */
 object Q4112 {
 
@@ -262,12 +269,20 @@ object Q4112 {
     * for non-integral keys or missing relations.
     */
   def denseEligible(items: DataFrame, itemKey: String, valueCol: String): Boolean =
+    eligibleDenseBuild(items, itemKey, valueCol).isDefined
+
+  /** The cached dense build of a [[denseEligible]] build side, else None. */
+  private def eligibleDenseBuild(
+      items: DataFrame,
+      itemKey: String,
+      valueCol: String): Option[(Broadcast[Array[Long]], Long)] =
     try {
       val Seq((mn, mx)) = minMaxLongs(items, Seq(itemKey))
       val rows = relationRows(items)
-      rows > 0L && mx - mn + 1L == rows && rows <= Int.MaxValue.toLong &&
-        denseBuild(items, itemKey, valueCol).isRight
-    } catch { case scala.util.control.NonFatal(_) => false }
+      if (rows > 0L && mx - mn + 1L == rows && rows <= Int.MaxValue.toLong)
+        denseBuild(items, itemKey, valueCol).toOption
+      else None
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The physical aggregation plan [[part2Adaptive]] last chose, for the
     * harness's CSV plan column (benchmark rows must name the plan that
@@ -715,7 +730,9 @@ object Q4112 {
   }
 
   /** Part 2 via the dense-key array probe: lookup + filter + two-level
-    * integer aggregation, no join operator in the plan at all.
+    * integer aggregation, no join operator in the plan at all. The
+    * forced dense form: it fails its stated `require` on a build side
+    * that is not dense.
     */
   def part2Dense(
       items: DataFrame,
@@ -724,22 +741,41 @@ object Q4112 {
       orderKey: String,
       priceCol: String,
       quantityCol: String,
+      groupCol: String): DataFrame =
+    avgOfGroupAvgs(
+      denseGroupedValues(denseValuesArray(items, itemKey, priceCol), orders, orderKey,
+        quantityCol, groupCol),
+      col(groupCol), col("v"))
+
+  /** The two-level integer average every part-2 plan ends in: per
+    * `group`, `Σ v div count` (`avg_value`), then the same over those
+    * values (`avg_avg_value`; q4112.c:553-576).
+    */
+  private def avgOfGroupAvgs(df: DataFrame, group: Column, v: Column): DataFrame =
+    df.groupBy(group)
+      .agg(sum(v).as("s"), count(lit(1)).as("c"))
+      .select(expr("s div c").as("avg_value"))
+      .agg(sum(col("avg_value")).as("ss"), count(lit(1)).as("cc"))
+      .select(expr("ss div cc").as("avg_avg_value"))
+
+  private def denseGroupedValues(
+      build: (Broadcast[Array[Long]], Long),
+      orders: DataFrame,
+      orderKey: String,
+      quantityCol: String,
       groupCol: String): DataFrame = {
-    val (bc, mn) = denseValuesArray(items, itemKey, priceCol)
+    val (bc, mn) = build
     orders
       .select(graft.functions.DenseLookup(bc, mn)(col(orderKey).cast("long")).as("price"),
         col(quantityCol).as("q"), col(groupCol))
       .where(col("price").isNotNull)
-      .groupBy(col(groupCol))
-      .agg(sum(col("price") * col("q")).as("s"), count(lit(1)).as("c"))
-      .select(expr("s div c").as("avg_value"))
-      .agg(sum(col("avg_value")).as("ss"), count(lit(1)).as("cc"))
-      .select(expr("ss div cc").as("avg_avg_value"))
+      .select(col(groupCol), (col("price") * col("q")).as("v"))
   }
 
   /** The joined (group, v = price*quantity) projection, via the dense
-    * array probe when the build side is a contiguous-key dimension, else
-    * a broadcast hash join — the common front half of every part-2 plan.
+    * array probe when the build side is a contiguous-key dimension
+    * ([[denseEligible]]), else a broadcast hash join — the common front
+    * half of every part-2 plan.
     */
   private[graft] def groupedValues(
       items: DataFrame,
@@ -748,18 +784,13 @@ object Q4112 {
       orderKey: String,
       priceCol: String,
       quantityCol: String,
-      groupCol: String,
-      dense: Boolean): DataFrame =
-    if (dense) {
-      val (bc, mn) = denseValuesArray(items, itemKey, priceCol)
-      orders
-        .select(graft.functions.DenseLookup(bc, mn)(col(orderKey).cast("long")).as("price"),
-          col(quantityCol).as("q"), col(groupCol))
-        .where(col("price").isNotNull)
-        .select(col(groupCol), (col("price") * col("q")).as("v"))
-    } else
-      join(items, orders, itemKey, orderKey, BroadcastHash)
-        .select(col(groupCol), (col(priceCol) * col(quantityCol)).as("v"))
+      groupCol: String): DataFrame =
+    eligibleDenseBuild(items, itemKey, priceCol) match {
+      case Some(build) => denseGroupedValues(build, orders, orderKey, quantityCol, groupCol)
+      case None =>
+        join(items, orders, itemKey, orderKey, BroadcastHash)
+          .select(col(groupCol), (col(priceCol) * col(quantityCol)).as("v"))
+    }
 
   /** Part 2 with map-side partial aggregation BYPASSED: pre-partition the
     * slim (group, v) rows on the group key, so the one exchange ships raw
@@ -787,15 +818,36 @@ object Q4112 {
       priceCol: String,
       quantityCol: String,
       groupCol: String,
-      numPartitions: Int,
-      dense: Boolean = false): DataFrame =
-    groupedValues(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol, dense)
-      .repartition(numPartitions, col(groupCol))
-      .groupBy(col(groupCol))
-      .agg(sum(col("v")).as("s"), count(lit(1)).as("c"))
-      .select(expr("s div c").as("avg_value"))
-      .agg(sum(col("avg_value")).as("ss"), count(lit(1)).as("cc"))
-      .select(expr("ss div cc").as("avg_avg_value"))
+      numPartitions: Int): DataFrame =
+    avgOfGroupAvgs(
+      groupedValues(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
+        .repartition(numPartitions, col(groupCol)),
+      col(groupCol), col("v"))
+
+  /** True when cached min/max statistics prove that every (group, v) row
+    * packs ([[packBoundsOk]] over the group, quantity and price columns).
+    * False when a column has no statistics (empty or all NULL).
+    */
+  private def packBoundsProven(
+      items: DataFrame, orders: DataFrame,
+      priceCol: String, quantityCol: String, groupCol: String): Boolean =
+    (minMaxLongsOpt(orders, Seq(groupCol, quantityCol)),
+      minMaxLongsOpt(items, Seq(priceCol))) match {
+      case (Some(Seq((minGroup, maxGroup), (minQty, maxQty))),
+            Some(Seq((minPrice, maxPrice)))) =>
+        packBoundsOk(minGroup, maxGroup, minPrice, maxPrice, minQty, maxQty)
+      case _ => false
+    }
+
+  /** True when the data (not the schema) carries no NULL in the group and
+    * quantity columns of `orders` or the price column of `items`: a NULL
+    * group has no shared-table slot and no packed form, and a NULL v needs
+    * the hash plans' sum-skips-NULL semantics.
+    */
+  private def valuesNullFree(
+      items: DataFrame, orders: DataFrame,
+      priceCol: String, quantityCol: String, groupCol: String): Boolean =
+    !colsCarryNulls(orders, Seq(groupCol, quantityCol)) && !colCarriesNulls(items, priceCol)
 
   /** [[part2Bypass]] with the exchange rows PACKED into one long:
     * group ⋅ 2^34 + v (valid while group < 2^29 and v < 2^34 — checked
@@ -807,15 +859,14 @@ object Q4112 {
     * expression, so the plan keeps exactly ONE exchange
     * (PackedBypassSpec pins this).
     *
-    * PRECONDITION: 0 ≤ group < 2^29 and 0 ≤ v = price·quantity < 2^34
-    * for EVERY row — a negative v (negative price or quantity) or an
-    * oversized group borrows into the other field's bits and silently
-    * corrupts the aggregate. With `checked = true` (default) each row is
-    * validated in the pack projection and an unpackable row raises an
-    * error; [[part2Adaptive]] passes `checked = false` because it has
-    * already proven the bounds from min/max statistics over the same
-    * columns — per-row checks would re-pay four comparisons per row for
-    * facts the planner established once.
+    * PRECONDITION: 0 ≤ group < 2^29 and 0 ≤ v = price·quantity < 2^34,
+    * neither NULL, for EVERY row — a negative v (negative price or
+    * quantity) or an oversized group borrows into the other field's bits
+    * and silently corrupts the aggregate. When cached statistics prove it
+    * ([[packBoundsProven]] and [[valuesNullFree]], the facts
+    * [[part2Adaptive]] routes on) the rows pack unchecked; otherwise each
+    * row is validated in the pack projection and an unpackable row
+    * raises an error.
     */
   def part2BypassPacked(
       items: DataFrame,
@@ -825,12 +876,12 @@ object Q4112 {
       priceCol: String,
       quantityCol: String,
       groupCol: String,
-      numPartitions: Int,
-      dense: Boolean = false,
-      checked: Boolean = true): DataFrame = {
+      numPartitions: Int): DataFrame = {
+    val proven = packBoundsProven(items, orders, priceCol, quantityCol, groupCol) &&
+      valuesNullFree(items, orders, priceCol, quantityCol, groupCol)
     val packExpr = shiftleft(col(groupCol), 34) + col("v")
     val guarded =
-      if (!checked) packExpr
+      if (proven) packExpr
       else when(
         col(groupCol) >= 0 && col(groupCol) < (1L << 29) &&
           col("v") >= 0 && col("v") <= ((1L << 34) - 1),
@@ -841,18 +892,12 @@ object Q4112 {
     // widen a 32-bit-stored group before shifting: shiftleft on an INT
     // masks the shift amount to 5 bits (34 ≡ 2) and would silently
     // corrupt the packing; the cast is a no-op on long columns
-    val packed = groupedValues(items, orders, itemKey, orderKey, priceCol, quantityCol,
-      groupCol, dense)
+    val packed = groupedValues(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
       .select(col(groupCol).cast("long").as(groupCol), col("v"))
       .select(guarded.as("p"))
     val g = shiftright(col("p"), 34)
-    packed
-      .repartition(numPartitions, g)
-      .groupBy(g.as("g"))
-      .agg(sum(col("p").bitwiseAND(lit((1L << 34) - 1))).as("s"), count(lit(1)).as("c"))
-      .select(expr("s div c").as("avg_value"))
-      .agg(sum(col("avg_value")).as("ss"), count(lit(1)).as("cc"))
-      .select(expr("ss div cc").as("avg_avg_value"))
+    avgOfGroupAvgs(packed.repartition(numPartitions, g), g.as("g"),
+      col("p").bitwiseAND(lit((1L << 34) - 1)))
   }
 
   /** Group-domain ceiling for [[part2DenseAgg]]: 2²² slots = 64 MB of
@@ -876,18 +921,22 @@ object Q4112 {
     * spill). The arrays are then merged by a reduce-scatter, not by
     * hashing: see [[denseGroupedAvg]].
     *
-    * With a dense build side (`dense = true`, which [[part2Adaptive]]
-    * passes whenever [[denseEligible]] holds) the arrays are filled by
-    * the probe kernel [[probeAccumulate]] over the scan's columnar
+    * With a dense build side ([[denseEligible]]) the arrays are filled
+    * by the probe kernel [[probeAccumulate]] over the scan's columnar
     * batches of (orderKey, quantity, group): probe, multiply and array
     * add in one loop, with no join operator and no row pipeline.
     * Otherwise a broadcast hash join feeds (group, v) rows to
     * [[denseGroupedAvg]].
     *
+    * The domain comes from the group column's cached min/max
+    * ([[groupDomain]], the statistics [[part2Adaptive]] routes on); a
+    * domain wider than [[DenseAggMaxDomain]] fails a stated `require`.
+    *
     * Exactness: identical arithmetic to [[part2]] — products and sums
     * inside a task and across tasks raise on overflow when the session
     * runs ANSI and wrap when it does not, `s div c` per group, integer
-    * avg-of-avgs. Array indexing is total on the proven [lo, hi] domain.
+    * avg-of-avgs. A group outside the domain (statistics gone stale
+    * under an unchanged plan) fails loudly.
     */
   def part2DenseAgg(
       items: DataFrame,
@@ -896,40 +945,49 @@ object Q4112 {
       orderKey: String,
       priceCol: String,
       quantityCol: String,
-      groupCol: String,
-      minGroup: Long,
-      domain: Int,
-      dense: Boolean = false): DataFrame =
-    if (dense) {
-      checkDenseAggDomain(domain)
-      val (bc, mn) = denseValuesArray(items, itemKey, priceCol)
-      val src = batchSource(orders, Seq(orderKey, quantityCol, groupCol))
-      val isInt = src.isInt
-      val trackV = src.nullable(1)
-      val exact = orders.sparkSession.sessionState.conf.ansiEnabled
-      val mg = minGroup
-      val dom = domain
-      // slot `dom` past the domain holds the NULL group
-      val perTask = src.batches.mapPartitions { bs =>
-        val acc = new DenseAcc(dom + 1, trackV)
-        val arr = bc.value
-        bs.foreach(b => probeAccumulate(b, isInt, arr, mn, mg, dom, exact, acc))
-        Iterator.single(acc)
-      }.setName(s"dense probe over ${src.kind}")
-      mergeDenseAcc(orders.sparkSession, perTask, dom, exact)
-    } else
-      denseGroupedAvg(
-        groupedValues(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol,
-          dense = false)
-          .select(col(groupCol).cast("long"), col("v").cast("long")),
-        minGroup, domain)
+      groupCol: String): DataFrame = {
+    val (mg, dom) = groupDomain(orders, groupCol, DenseAggMaxDomain)
+    eligibleDenseBuild(items, itemKey, priceCol) match {
+      case Some((bc, mn)) =>
+        val src = batchSource(orders, Seq(orderKey, quantityCol, groupCol))
+        val isInt = src.isInt
+        val trackV = src.nullable(1)
+        val exact = orders.sparkSession.sessionState.conf.ansiEnabled
+        // slot `dom` past the domain holds the NULL group
+        val perTask = src.batches.mapPartitions { bs =>
+          val acc = new DenseAcc(dom + 1, trackV)
+          val arr = bc.value
+          bs.foreach(b => probeAccumulate(b, isInt, arr, mn, mg, dom, exact, acc))
+          Iterator.single(acc)
+        }.setName(s"dense probe over ${src.kind}")
+        mergeDenseAcc(orders.sparkSession, perTask, dom, exact)
+      case None =>
+        denseGroupedAvg(
+          groupedValues(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
+            .select(col(groupCol).cast("long"), col("v").cast("long")),
+          mg, dom)
+    }
+  }
+
+  /** The group domain of `orders` as (min group, slots), from the cached
+    * min/max statistics [[part2Adaptive]] routes on (same columns, so
+    * the same cache entry). An empty or all-NULL group column has no
+    * min/max and takes one slot, which no row uses: the answer is still
+    * the hash plan's. A domain of more than `cap` slots, or one wider
+    * than 2^63 (the width subtraction wraps negative), fails a stated
+    * `require`.
+    */
+  private def groupDomain(orders: DataFrame, groupCol: String, cap: Long): (Long, Int) =
+    minMaxLongsOpt(orders, Seq(groupCol)) match {
+      case Some(Seq((mn, mx))) =>
+        require(mx - mn >= 0L && mx - mn < cap,
+          s"group domain [$mn, $mx] of '$groupCol' exceeds $cap slots")
+        (mn, (mx - mn + 1L).toInt)
+      case _ => (0L, 1)
+    }
 
   // slots per reducer range in [[mergeDenseAcc]]: ~1 MB of merge arrays
   private val DenseAggSlotsPerReducer = 1 << 16
-
-  private def checkDenseAggDomain(domain: Int): Unit =
-    require(domain > 0 && domain <= DenseAggMaxDomain,
-      s"dense aggregate domain out of range: $domain")
 
   /** One task's share of one reducer's slot range in [[mergeDenseAcc]]:
     * a dense slice of the range (`slots == null`) or, for a range less
@@ -961,13 +1019,25 @@ object Q4112 {
     * Overflow: a task adds with `Math.addExact` when the session runs
     * ANSI, so two rows of v = 2^62 in one task raise like the hash plan's
     * `sum(v)`, and wraps when it does not.
+    *
+    * A group outside [minGroup, minGroup + domain) means the domain's
+    * statistics were stale, and fails loudly like the kernel's, instead
+    * of adding into the NULL slot or a wrapped live slot.
     */
-  def denseGroupedAvg(gv: DataFrame, minGroup: Long, domain: Int): DataFrame = {
-    checkDenseAggDomain(domain)
+  private[graft] def denseGroupedAvg(gv: DataFrame, minGroup: Long, domain: Int): DataFrame = {
+    require(domain > 0 && domain <= DenseAggMaxDomain,
+      s"dense aggregate domain out of range: $domain")
     val mg = minGroup
     val dom = domain
     val exact = gv.sparkSession.sessionState.conf.ansiEnabled
     val nullable = gv.schema.fields.exists(_.nullable)
+    def slot(g: Long): Int = {
+      val gi = g - mg
+      if (gi < 0L || gi >= dom)
+        throw new IllegalStateException(s"dense aggregate saw group $g " +
+          s"outside the stats-proven domain [$mg, ${mg + dom}) — stale statistics?")
+      gi.toInt
+    }
     val perTask = gv.queryExecution.toRdd.mapPartitions { it =>
       val acc = new DenseAcc(dom + 1, nullable)
       val sums = acc.sums
@@ -975,13 +1045,13 @@ object Q4112 {
       val hasV = acc.hasV
       if (!nullable) while (it.hasNext) {
         val r = it.next() // primitives read immediately; row reuse is fine
-        val g = (r.getLong(0) - mg).toInt
+        val g = slot(r.getLong(0))
         val v = r.getLong(1)
         sums(g) = if (exact) Math.addExact(sums(g), v) else sums(g) + v
         cnts(g) += 1L
       } else while (it.hasNext) {
         val r = it.next()
-        val g = if (r.isNullAt(0)) dom else (r.getLong(0) - mg).toInt
+        val g = if (r.isNullAt(0)) dom else slot(r.getLong(0))
         cnts(g) += 1L
         if (!r.isNullAt(1)) {
           val v = r.getLong(1)
@@ -1150,10 +1220,18 @@ object Q4112 {
     * speculation), so no partial-accumulation retry can land; defense
     * in depth, any task observing `attemptNumber > 0` poisons the
     * state and throws, and a failure listener drops the table so a
-    * failed job never leaks the 2 GB arrays. Exactness: identical long
-    * wrap arithmetic and integer avg-of-avgs as [[part2]] (`s div c`
-    * per slot, `ss div cc` over slots), oracle-asserted per rep by the
-    * Matrix harness and by the `q4112_part2_shared_dense` gate.
+    * failed job never leaks the 2 GB arrays. Exactness: the same
+    * arithmetic and integer avg-of-avgs as [[part2]] (`s div c` per
+    * slot, `ss div cc` over slots): sums raise on overflow when the
+    * session runs ANSI and wrap when it does not. Oracle-asserted per
+    * rep by the Matrix harness and by the `q4112_part2_shared_dense`
+    * gate.
+    *
+    * The group domain comes from the cached min/max statistics
+    * ([[groupDomain]]); one wider than [[SharedDenseMaxDomain]] fails a
+    * stated `require`. An actual NULL group or v fails with a stated
+    * refusal: [[part2Adaptive]] routes here only after proving the data
+    * NULL-free from cached null counts.
     */
   def part2SharedDense(
       items: DataFrame,
@@ -1162,30 +1240,11 @@ object Q4112 {
       orderKey: String,
       priceCol: String,
       quantityCol: String,
-      groupCol: String,
-      minGroup: Long,
-      domain: Long,
-      dense: Boolean = false,
-      provenNonNull: Boolean = false): DataFrame = {
-    val gv = groupedValues(items, orders, itemKey, orderKey, priceCol,
-      quantityCol, groupCol, dense)
-    // stats-proven null-freedom rewrite (round-10 verdict item 1): when
-    // the router has PROVEN from data statistics that neither the group
-    // nor v can be null, AssertNotNull strips Catalyst's pessimistic
-    // nullability (parquet schemas and %-derived columns are always
-    // marked nullable) so the unguarded accumulation loop runs on raw
-    // fact tables — and stale stats still fail LOUDLY at the first
-    // actual null instead of miscounting (q4112.h:14,24 is the
-    // reference's version of this contract: keys/values are never NULL
-    // by construction, so its kernel carries no null branch at all).
-    def pin(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      if (!provenNonNull) c
-      else org.apache.spark.sql.graft.bridge.toColumn(
-        org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull(
-          org.apache.spark.sql.graft.bridge.toExpression(c)))
+      groupCol: String): DataFrame = {
+    val (minGroup, domain) = groupDomain(orders, groupCol, SharedDenseMaxDomain)
     sharedDenseGroupedAvg(
-      gv.select(pin(col(groupCol).cast("long")).as(groupCol),
-        pin(col("v").cast("long")).as("v")),
+      groupedValues(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
+        .select(col(groupCol).cast("long").as(groupCol), col("v").cast("long").as("v")),
       minGroup, domain)
   }
 
@@ -1210,11 +1269,16 @@ object Q4112 {
     * schema admits nulls the loop checks per row and refuses an actual
     * NULL loudly rather than miscounting — [[part2Adaptive]] only
     * routes here after proving from DATA statistics (null counts) that
-    * the group, quantity, and price columns carry no nulls, and then
-    * pins the projection non-nullable (AssertNotNull) so the unguarded
-    * loop runs. A group outside the stats-proven [minGroup,
-    * minGroup+domain) window fails with an explicit "stale statistics"
-    * error instead of corrupting memory.
+    * the group, quantity, and price columns carry no nulls. A group
+    * outside the stats-proven [minGroup, minGroup+domain) window fails
+    * with an explicit "stale statistics" error instead of corrupting
+    * memory.
+    *
+    * Overflow: with ANSI on, the combine cache and the final scan add
+    * with `Math.addExact`, and a flush into the shared table tests the
+    * sign of its one `getAndAdd`; an overflow poisons the table and
+    * raises, like the hash plan's `sum`. With ANSI off every add wraps,
+    * like the legacy plan.
     *
     * Combine-cache size: the per-task direct-mapped cache has 2^13
     * entries — the reference's measured best (q4112.c:232-233,
@@ -1224,7 +1288,8 @@ object Q4112 {
     * the 1e4-hot-group shape (5.20 s vs 2.83 s), 2^15 pays its flush
     * scan everywhere, 2^13 wins the sum.
     */
-  def sharedDenseGroupedAvg(gv: DataFrame, minGroup: Long, domain: Long): DataFrame = {
+  private[graft] def sharedDenseGroupedAvg(
+      gv: DataFrame, minGroup: Long, domain: Int): DataFrame = {
     require(gv.sparkSession.sparkContext.isLocal,
       "shared dense aggregation is the single-JVM (reference t16) form; " +
         "on a cluster use the bucketed layout (Tables.writeBucketed)")
@@ -1233,16 +1298,14 @@ object Q4112 {
     val spark = gv.sparkSession
     import spark.implicits._
     val mg = minGroup
-    val domL = domain
-    val dom = domain.toInt
+    val dom = domain
+    val exact = spark.sessionState.conf.ansiEnabled
     // Schema nullability is NOT trusted either way: Catalyst marks any
     // %-derived column nullable (division-by-zero rule) even when no
     // null can occur, and the dense-lookup join marks its price output
     // nullable despite its isNotNull filter. When the schema admits
     // nulls, the accumulation loop checks per row and refuses an ACTUAL
-    // null LOUDLY (the adaptive router proves null-freedom from data
-    // stats and pins the schema before routing here, so its plans take
-    // the unguarded loop).
+    // null LOUDLY.
     val nullGuard = gv.schema.fields.exists(_.nullable)
     val cacheBits = 13
     val rdd0 = gv.queryExecution.toRdd
@@ -1271,6 +1334,17 @@ object Q4112 {
           }
           val sums = st.sums
           val cnts = st.cnts
+          // one atomic add per flushed slot; under ANSI its sign test
+          // catches the overflow the add just made
+          def flush(i: Int, s: Long, c: Long): Unit = {
+            val prev = sums.getAndAdd(i, s)
+            val r = prev + s
+            if (exact && ((prev ^ r) & (s ^ r)) < 0L) {
+              st.poisoned = true
+              throw new ArithmeticException("long overflow in the shared dense aggregate's sum")
+            }
+            cnts.addAndGet(i, c)
+          }
           // per-task combine cache in front of the shared table — the
           // reference's own design (q4112.c:232-233, log_entries = 13, its
           // measured-best size): heavy-hitter groups accumulate in a
@@ -1285,13 +1359,12 @@ object Q4112 {
           val cc = new Array[Long](1 << cacheBits)
           def accumulate(g: Int, v: Long): Unit = {
             val h = ((g * -1640531527) >>> (32 - cacheBits)) & cacheMask
-            if (ck(h) == g + 1) { cs(h) += v; cc(h) += 1L }
-            else {
+            if (ck(h) == g + 1) {
+              cs(h) = if (exact) Math.addExact(cs(h), v) else cs(h) + v
+              cc(h) += 1L
+            } else {
               val old = ck(h)
-              if (old != 0) {
-                sums.addAndGet(old - 1, cs(h))
-                cnts.addAndGet(old - 1, cc(h))
-              }
+              if (old != 0) flush(old - 1, cs(h), cc(h))
               ck(h) = g + 1; cs(h) = v; cc(h) = 1L
             }
           }
@@ -1301,10 +1374,10 @@ object Q4112 {
           // worse, INTO the wrong slot of) the shared arrays
           def slot(g: Long): Int = {
             val gi = g - mg
-            if (gi < 0L || gi >= domL)
+            if (gi < 0L || gi >= dom)
               throw new IllegalStateException(
                 s"shared dense aggregate saw group $g outside the " +
-                  s"stats-proven domain [$mg, ${mg + domL}) — stale " +
+                  s"stats-proven domain [$mg, ${mg + dom}) — stale " +
                   "statistics? rerun with a shuffle plan")
             gi.toInt
           }
@@ -1325,10 +1398,7 @@ object Q4112 {
           // flush the local cache into the shared table
           var ci = 0
           while (ci <= cacheMask) {
-            if (ck(ci) != 0) {
-              sums.addAndGet(ck(ci) - 1, cs(ci))
-              cnts.addAndGet(ck(ci) - 1, cc(ci))
-            }
+            if (ck(ci) != 0) flush(ck(ci) - 1, cs(ci), cc(ci))
             ci += 1
           }
         })
@@ -1346,7 +1416,11 @@ object Q4112 {
         var i = 0
         while (i < dom) {
           val c = st.cnts.get(i)
-          if (c != 0L) { ss += st.sums.get(i) / c; cc += 1L }
+          if (c != 0L) {
+            val avg = st.sums.get(i) / c
+            ss = if (exact) Math.addExact(ss, avg) else ss + avg
+            cc += 1L
+          }
           i += 1
         }
         if (cc == 0L) None else Some(ss / cc)
@@ -1476,15 +1550,8 @@ object Q4112 {
       orderKey: String,
       priceCol: String,
       quantityCol: String,
-      groupCol: String,
-      dense: Boolean = false): DataFrame = {
+      groupCol: String): DataFrame = {
     val t0 = System.nanoTime()
-    // the dense perfect-hash probe is chosen by the PLANNER whenever the
-    // build side is a contiguous-key dimension (cached stats, no job) —
-    // the caller's `dense` flag remains as a forced override. Measured
-    // motivation: the 1e9-row probe of a 1e5-entry broadcast hash map
-    // costs ~175 ns/row (part-2 cfg8 at 3.6× the reference); the array
-    // probe is a bounds-check + index into an L2-resident array.
     // LAYOUT FIRST, statistics second: an exchange-free stored layout
     // beats every shuffle-shaping decision the statistics could make,
     // and the checks are free (registry lookup + plan inspection, no
@@ -1502,24 +1569,25 @@ object Q4112 {
       System.err.println(f"[part2-adaptive] layout: registered joined-bucketed " +
         f"(group, v) on $groupCol -> exchange-free scan+aggregate, " +
         f"est=${(System.nanoTime() - t0) / 1e9}%.3f s")
-      return layout
-        .groupBy(col(groupCol))
-        .agg(sum(col("v")).as("s"), count(lit(1)).as("c"))
-        .select(expr("s div c").as("avg_value"))
-        .agg(sum(col("avg_value")).as("ss"), count(lit(1)).as("cc"))
-        .select(expr("ss div cc").as("avg_avg_value"))
+      return avgOfGroupAvgs(layout, col(groupCol), col("v"))
     }
     // next: the probe relation stored clustered on the group key —
     // either the caller handed us the bucketed scan directly
     // ([[clusteredOn]] on `orders`, the round-3 path), or the registry
     // maps the raw relation to its bucketed form (routed). Either way
     // the partial/final aggregate needs no exchange. This folds the
-    // round-3 `SPARK_GRAFT_P2_PLAN=bucketed` env-var mode into the
-    // planner (measured 12-22× → 2.4-2.9× of the reference on the
-    // singleton-group shapes, SCALING.md).
+    // round-3 bucketed env-var mode into the planner (measured
+    // 12-22× → 2.4-2.9× of the reference on the singleton-group shapes,
+    // SCALING.md).
     val routedOrders = LayoutRegistry.bucketedFor(orders, groupCol)
     val probeOrders = routedOrders.getOrElse(orders)
-    val useDense = dense || denseEligible(items, itemKey, priceCol)
+    // the dense perfect-hash probe whenever the build side is a
+    // contiguous-key dimension (cached stats, no job). Measured
+    // motivation: the 1e9-row probe of a 1e5-entry broadcast hash map
+    // costs ~175 ns/row (part-2 cfg8 at 3.6× the reference); the array
+    // probe is a bounds-check + index into an L2-resident array. The
+    // forms below read the same cached fact.
+    val useDense = denseEligible(items, itemKey, priceCol)
     if (clusteredOn(probeOrders, groupCol)) {
       lastChosenPlan = if (routedOrders.isDefined) "bucketed_routed" else "bucketed"
       advise("")
@@ -1551,56 +1619,58 @@ object Q4112 {
     // sharedMass < 0.4 already implies partial aggregation would leave
     // ≥60% of the rows uncollapsed — it subsumes any ndv-ratio test
     val bypass = tot > 0L && sharedMass < 0.4
-    // packing bound, measured only when it matters: group·2^34 + v must
-    // fit a signed long with NO negative field — min checks included
-    // because a single negative price or quantity makes v borrow into
-    // the group bits and silently corrupt the aggregate (the per-row
-    // guard in part2BypassPacked is skipped on this path precisely
-    // because these stats prove it can't fire)
-    val packable = bypass && {
-      // catalog/plan column stats when present (zero jobs), one cached
-      // agg scan per relation otherwise — never a scan per query
-      // missing stats (empty/all-NULL relation) ⇒ not provably packable —
-      // the unpacked bypass is always safe
-      (minMaxLongsOpt(orders, Seq(groupCol, quantityCol)),
-        minMaxLongsOpt(items, Seq(priceCol))) match {
-        case (Some(Seq((minGroup, maxGroup), (minQty, maxQty))),
-              Some(Seq((minPrice, maxPrice)))) =>
-          packBoundsOk(minGroup, maxGroup, minPrice, maxPrice, minQty, maxQty)
-        case _ => false
-      }
+    // The facts below are proven ONCE, from the relation caches, and the
+    // chosen form reads the same cache entries (same columns) again, so
+    // building it adds no job. Null-freedom is proven against the DATA
+    // (cached null counts / catalog stats), never the schema flag, which
+    // Catalyst sets pessimistically for any parquet or %-derived column
+    // (ADVICE r10 item 2: the value inputs are checked, not only the
+    // group; round-10 verdict item 1: raw nullable-schema parquet facts
+    // with clean data pass).
+    lazy val nullFree = valuesNullFree(items, orders, priceCol, quantityCol, groupCol)
+    // the group domain's width max − min from cached min/max; None for
+    // an empty or all-NULL column (no stats: fall back, don't NPE —
+    // advice r9 item 3) and for a domain wider than 2^63, whose width
+    // subtraction wraps negative and would otherwise pass every cap
+    // with a garbage array size (advice r9 item 1)
+    lazy val width = minMaxLongsOpt(orders, Seq(groupCol)).collect {
+      case Seq((mn, mx)) if mx - mn >= 0L => mx - mn
     }
+    // Partial-aggregation family with a domain that fits the per-task
+    // arrays: the dense-ARRAY partial aggregate replaces the per-task
+    // hash map — the r9 1e9 profile put the cold partial plan's cost in
+    // one uniform CPU-bound stage (~430 ns/row, zero spill) dominated by
+    // the ~1e6-entry aggregation-map probe; array indexing removes it,
+    // and the arrays merge by slot range instead of through a final hash
+    // aggregate, with the same arithmetic.
+    val denseAgg = !bypass && width.exists(_ < DenseAggMaxDomain)
     // LOW shared mass means no exchange-based plan can win: partial
-    // aggregation collapses ~nothing, so every shuffle form ships
-    // ~every row through local disk. In a single JVM the reference's
-    // own answer applies — ONE shared sized table all threads CAS
-    // into (q4112.c:225-297), zero exchange — whenever the group
-    // domain provably fits 2^27 slots and the projection is
-    // non-nullable (a NULL group has no slot). Cluster deployments
-    // route to the bucketed layout instead (part2SharedDense scaladoc).
-    // null-freedom is proven against the DATA (cached null counts /
-    // catalog stats), never the schema flag, which Catalyst sets
-    // pessimistically for any parquet or %-derived column: the GROUP
-    // must carry no actual nulls (a NULL group has no slot) and the
-    // VALUE inputs (orders.quantity, items.price) none either — a NULL
-    // v needs the hash plans' sum-skips-NULL semantics, where the
-    // shared loop would fail at runtime (ADVICE r10 item 2: the
-    // documented hash-family fallback now actually checks v's inputs).
-    // Raw nullable-schema parquet facts with clean data PASS this gate
-    // (round-10 verdict item 1): the stats prove null-freedom and
-    // part2SharedDense pins the projection non-nullable.
-    val sharedDenseStats =
-      if (!bypass || !sharedDenseLocalOk(items) ||
-          colsCarryNulls(orders, Seq(groupCol, quantityCol)) ||
-          colCarriesNulls(items, priceCol)) None
-      else minMaxLongsOpt(orders, Seq(groupCol)).collect {
-        case Seq((mn, mx)) if mx >= mn && {
-          val w = mx - mn; w >= 0L && w < SharedDenseMaxDomain
-        } => (mn, mx - mn + 1L)
-      }
+    // aggregation collapses ~nothing, so every shuffle form ships ~every
+    // row through local disk. In a single JVM the reference's own answer
+    // applies — ONE shared sized table all threads CAS into
+    // (q4112.c:225-297), zero exchange — whenever the group domain
+    // provably fits 2^27 slots and the data is NULL-free (a NULL group
+    // has no slot). The same table takes the band ABOVE the per-task cap
+    // in the partial family: a 2^22..2^27 domain with HIGH shared mass
+    // still floods the partial hash maps with its singleton tail
+    // (cfg5-family at 1e9: 50 GB spill, ~10× the C), and the shared
+    // table + the per-task combine cache (the C's exact design) handles
+    // head and tail both. Cluster deployments route to the bucketed
+    // layout instead (part2SharedDense scaladoc).
+    val sharedDense = !denseAgg && sharedDenseLocalOk(items) &&
+      width.exists(_ < SharedDenseMaxDomain) && nullFree
+    // packing bound, measured only when it matters: group·2^34 + v must
+    // fit a signed long with NO negative and no NULL field — min checks
+    // included because a single negative price or quantity makes v
+    // borrow into the group bits and silently corrupt the aggregate
+    // (part2BypassPacked skips its per-row guard on exactly these facts).
+    // Missing stats (empty/all-NULL relation) ⇒ not provably packable —
+    // the unpacked bypass is always safe.
+    val packable = bypass &&
+      packBoundsProven(items, orders, priceCol, quantityCol, groupCol) && nullFree
     System.err.println(f"[part2-adaptive] rows=$rows sampled=$tot " +
       f"sampleNdv=$sampleNdv sharedMass=$sharedMass%.3f bypass=$bypass packable=$packable " +
-      f"sharedDense=${sharedDenseStats.isDefined} " +
+      f"sharedDense=$sharedDense " +
       f"est=${(System.nanoTime() - t0) / 1e9}%.3f s")
     // the missed-layout hint (round-4 verdict item 7): every exchange-
     // based plan below ships rows through a shuffle that the bucketed
@@ -1608,20 +1678,15 @@ object Q4112 {
     // exchange is the scale-killer (low shared mass: partial agg
     // collapses ~nothing). The shared-dense form is already
     // exchange-free — no layout to recommend.
-    if (sharedDenseStats.isDefined) advise("")
+    if (sharedDense) advise("")
     else advise(f"this aggregate takes a ${if (bypass) "raw-row" else "partial/final"} " +
       f"exchange on '$groupCol' (sampled sharedMass=$sharedMass%.2f); storing the " +
       f"probe table bucketed on '$groupCol' (Tables.writeBucketed) would make it " +
       "exchange-free")
-    if (bypass) {
-      val shuffle = items.sparkSession.sessionState.conf.numShufflePartitions
-      if (sharedDenseStats.isDefined) {
-        val (minGroup, domain) = sharedDenseStats.get
-        lastChosenPlan = "shared_dense"
-        return part2SharedDense(items, orders, itemKey, orderKey, priceCol,
-          quantityCol, groupCol, minGroup, domain, useDense,
-          provenNonNull = true)
-      }
+    if (sharedDense) {
+      lastChosenPlan = "shared_dense"
+      part2SharedDense(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
+    } else if (bypass) {
       // linear extrapolation DELIBERATELY overestimates ndv on
       // singleton-heavy samples (every sampled-once group scales by
       // rows/tot; a Chao1-style correction would estimate ~6× lower on
@@ -1630,76 +1695,22 @@ object Q4112 {
       // the safe direction (bounded ~500k-entry maps, no spill), at the
       // cost of more, cheaper tasks
       val estGroups = (sampleNdv.toDouble * rows / math.max(1L, tot)).toLong
-      val parts = bypassPartitions(estGroups, shuffle)
+      val parts = bypassPartitions(estGroups,
+        items.sparkSession.sessionState.conf.numShufflePartitions)
       if (packable) {
         lastChosenPlan = "packed"
-        part2BypassPacked(items, orders, itemKey, orderKey, priceCol, quantityCol,
-          groupCol, parts, useDense, checked = false)
+        part2BypassPacked(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol, parts)
       } else {
         lastChosenPlan = "bypass"
-        part2Bypass(items, orders, itemKey, orderKey, priceCol, quantityCol,
-          groupCol, parts, useDense)
+        part2Bypass(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol, parts)
       }
+    } else if (denseAgg) {
+      lastChosenPlan = "partial_dense"
+      part2DenseAgg(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
     } else {
-      // partial-aggregation family. When the group domain is contiguous
-      // and bounded (cached min/max stats — same source as the packing
-      // bound), the dense-ARRAY partial aggregate replaces the per-task
-      // hash map: the r9 1e9 profile put the cold partial plan's cost in
-      // one uniform CPU-bound stage (~430 ns/row, zero spill) dominated
-      // by the ~1e6-entry aggregation-map probe; array indexing removes
-      // it, and the arrays merge by slot range instead of through a
-      // final hash aggregate, with the same arithmetic.
-      // Dense routing requires (a) stats at all — an empty/all-NULL
-      // relation has none and must fall back, not NPE (advice item 3);
-      // (b) a domain width that provably fits: the width `maxGroup −
-      // minGroup` is computed ONCE and required non-negative, because for
-      // domains wider than 2^63 the long subtraction wraps NEGATIVE and
-      // would otherwise pass the `< DenseAggMaxDomain` bound with a
-      // garbage array size (advice item 1).
-      // (mn, domain) with domain = width + 1; the w >= 0 guard rejects
-      // >2^63-wide wrapped domains and the w + 1 > 0 guard the
-      // width == Long.MaxValue overflow of the increment itself
-      val mm = minMaxLongsOpt(orders, Seq(groupCol)).collect {
-        case Seq((mn, mx)) if mx >= mn && {
-          val w = mx - mn; w >= 0L && w + 1L > 0L
-        } => (mn, mx - mn + 1L)
-      }
-      val denseStats = mm.collect {
-        case (mn, w) if w <= DenseAggMaxDomain => (mn, w.toInt)
-      }
-      // the band ABOVE the per-task cap but inside the shared cap: a
-      // 2^22..2^27 domain with HIGH shared mass still floods the
-      // partial hash maps with its singleton tail (cfg5-family at 1e9:
-      // 50 GB spill, ~10× the C) — in a single JVM the shared CAS
-      // table + the per-task combine cache (the C's exact design)
-      // handles head and tail both. Same null-freedom proof as the
-      // bypass-branch route.
-      val sharedStats =
-        if (denseStats.isDefined || !sharedDenseLocalOk(items)) None
-        else mm.collect {
-          case (mn, w) if w <= SharedDenseMaxDomain &&
-            !colsCarryNulls(orders, Seq(groupCol, quantityCol)) &&
-            !colCarriesNulls(items, priceCol) => (mn, w)
-        }
-      if (denseStats.isDefined) {
-        val (minGroup, domain) = denseStats.get
-        lastChosenPlan = "partial_dense"
-        part2DenseAgg(items, orders, itemKey, orderKey, priceCol, quantityCol,
-          groupCol, minGroup, domain, useDense)
-      } else if (sharedStats.isDefined) {
-        val (minGroup, domain) = sharedStats.get
-        lastChosenPlan = "shared_dense"
-        advise("")
-        part2SharedDense(items, orders, itemKey, orderKey, priceCol,
-          quantityCol, groupCol, minGroup, domain, useDense,
-          provenNonNull = true)
-      } else if (useDense) {
-        lastChosenPlan = "partial"
-        part2Dense(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
-      } else {
-        lastChosenPlan = "partial"
-        part2(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol, BroadcastHash)
-      }
+      lastChosenPlan = "partial"
+      if (useDense) part2Dense(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
+      else part2(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol, BroadcastHash)
     }
   }
 
@@ -1713,8 +1724,8 @@ object Q4112 {
     * (q4112_hj.c:163-183; measured at 1e9: cfg6/7/8 drop from
     * 2.0-2.7× the C to 1.07-1.8×, SCALING.md round-4 part-1 table).
     * Otherwise fall back to the measured default: the dense-array probe
-    * for a large contiguous-key build side, broadcast hash for a small
-    * one.
+    * for a contiguous-key build side ([[denseEligible]]), broadcast hash
+    * for any other.
     */
   def part1Adaptive(
       items: DataFrame,
@@ -1722,22 +1733,20 @@ object Q4112 {
       itemKey: String,
       orderKey: String,
       priceCol: String,
-      quantityCol: String,
-      dense: Boolean = false): DataFrame =
+      quantityCol: String): DataFrame =
     if (coPartitioned(items, itemKey, orders, orderKey)) {
       lastChosenPlan = "bucketed-shj"
       advise("")
       part1(items, orders, itemKey, orderKey, priceCol, quantityCol, ShuffledHash)
-    } else if (dense || denseEligible(items, itemKey, priceCol)) {
+    } else if (denseEligible(items, itemKey, priceCol)) {
       lastChosenPlan = "dense"
       // the dense probe needs a driver-side broadcast build per items
       // version — the co-located layout removes it (measured: part-1
       // 1e8-inner configs 2.0-2.7× → 1.07-1.77×, SCALING.md round 4).
-      // Only worth saying when that build is material: a caller-forced
-      // dense path, or a build side big enough (≥1e7 rows, where the
-      // build was measured in seconds) — for a small contiguous dim the
-      // auto-chosen dense probe is already the plan you'd want.
-      if (dense || relationRows(items) >= 10000000L)
+      // Only worth saying when that build is material: a build side of
+      // ≥1e7 rows, where the build was measured in seconds — for a small
+      // contiguous dim the dense probe is already the plan you'd want.
+      if (relationRows(items) >= 10000000L)
         advise(s"this join broadcasts a dense '$itemKey' array built on the driver; " +
           s"storing BOTH tables bucketed on their join keys ('$itemKey'/'$orderKey', " +
           "Tables.writeBucketed) would give an exchange-free co-located hash join")
@@ -1798,7 +1807,6 @@ object Q4112 {
       quantityCol: String,
       groupCol: String,
       strategy: JoinStrategy = BroadcastHash): DataFrame =
-    grouped(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol, strategy)
-      .agg(sum(col("avg_value")).as("ss"), count(lit(1)).as("cc"))
-      .select(expr("ss div cc").as("avg_avg_value"))
+    avgOfGroupAvgs(join(items, orders, itemKey, orderKey, strategy), col(groupCol),
+      col(priceCol) * col(quantityCol))
 }

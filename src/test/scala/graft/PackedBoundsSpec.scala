@@ -17,10 +17,10 @@ import org.scalacheck.rng.Seed
   *  2. EXACTNESS on singletons — the integer-division v bound is tight:
   *     a lone row is accepted iff it is genuinely packable, including
   *     at group = 2^29 − 1 and price·quantity = 2^34 − 1 exactly;
-  *  3. the checked runtime guard in [[Q4112.part2BypassPacked]] raises
-  *     on each rejection class (negative price, negative quantity,
-  *     oversized group, oversized v) instead of returning silently
-  *     wrong aggregates.
+  *  3. the runtime guard [[Q4112.part2BypassPacked]] applies when the
+  *     statistics do not prove the bounds raises on each rejection class
+  *     (negative price, negative quantity, oversized group, oversized v)
+  *     instead of returning silently wrong aggregates.
   */
 class PackedBoundsSpec extends SparkSpec {
   import spark.implicits._
@@ -89,7 +89,7 @@ class PackedBoundsSpec extends SparkSpec {
       val items = Seq((1L, price)).toDF("id", "price")
       val orders = Seq((1L, qty, group)).toDF("itemId", "quantity", "storeId")
       Q4112.part2BypassPacked(items, orders, "id", "itemId", "price",
-        "quantity", "storeId", numPartitions = 3, checked = true).collect()
+        "quantity", "storeId", numPartitions = 3).collect()
     }
     for ((p, q, g) <- Seq(
         (-2L, 5L, 1L),               // negative price

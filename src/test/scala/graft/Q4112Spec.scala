@@ -105,23 +105,50 @@ class Q4112Spec extends SparkSpec {
     def probeSources(df: DataFrame): Seq[String] =
       df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.toDebugString }
         .flatMap(s => "dense probe over (\\w+)".r.findAllMatchIn(s).map(_.group(1)))
-    // every dense form against the broadcast-hash plan; returns the
-    // kernel's batch source
-    def check(what: String, orders: DataFrame): String = {
+    // a non-contiguous key domain: every form that works out its front
+    // half from the relation takes the hash join instead of the probe
+    val gappy = items.where(col("id") % 7 =!= 0)
+    def raises(msg: String)(df: => DataFrame): Unit = {
+      val e = intercept[Exception](result(df))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(msg)), e)
+    }
+    // every part-2 form against the broadcast-hash plan, over the dense
+    // and the gappy build side; `nulls`: the joined rows carry a NULL
+    // group or v, which the packed and shared-table forms refuse
+    def checkPart2(what: String, orders: DataFrame, nulls: Boolean): Unit =
+      for (it <- Seq(items, gappy)) {
+        val hash2 = result(part2(it, orders, "id", "itemId", "price", "quantity", "storeId",
+          BroadcastHash))
+        val on = s"$what, ${if (it eq items) "dense" else "gappy"} items"
+        if (it eq items)
+          assert(result(part2Dense(it, orders, "id", "itemId", "price", "quantity",
+            "storeId")) === hash2, on)
+        val p2 = part2DenseAgg(it, orders, "id", "itemId", "price", "quantity", "storeId")
+        assert(result(p2) === hash2, on)
+        if (!(it eq items)) assert(probeSources(p2).isEmpty, on)
+        assert(result(part2Bypass(it, orders, "id", "itemId", "price", "quantity", "storeId",
+          numPartitions = 5)) === hash2, on)
+        assert(result(part2Adaptive(it, orders, "id", "itemId", "price", "quantity",
+          "storeId")) === hash2, on)
+        val packed = part2BypassPacked(it, orders, "id", "itemId", "price", "quantity",
+          "storeId", numPartitions = 5)
+        def shared = part2SharedDense(it, orders, "id", "itemId", "price", "quantity", "storeId")
+        if (nulls) {
+          raises("unpackable row")(packed)
+          raises("received a NULL group or v")(shared)
+        } else {
+          assert(result(packed) === hash2, on)
+          assert(result(shared) === hash2, on)
+        }
+      }
+    // every form against the hash plans; returns the kernel's batch source
+    def check(what: String, orders: DataFrame, nulls: Boolean = false): String = {
       val p1 = part1Dense(items, orders, "id", "itemId", "price", "quantity")
       assert(result(p1) === result(part1(items, orders, "id", "itemId", "price", "quantity",
         BroadcastHash)), what)
-      val hash2 = result(part2(items, orders, "id", "itemId", "price", "quantity", "storeId",
-        BroadcastHash))
-      assert(result(part2Dense(items, orders, "id", "itemId", "price", "quantity",
-        "storeId")) === hash2, what)
-      val (mn, dom) = minMaxLongsOpt(orders, Seq("storeId")) match {
-        case Some(Seq((lo, hi))) => (lo, (hi - lo + 1L).toInt)
-        case _ => (0L, 1) // no non-NULL group: only the NULL slot is used
-      }
-      val p2 = part2DenseAgg(items, orders, "id", "itemId", "price", "quantity", "storeId",
-        mn, dom, dense = true)
-      assert(result(p2) === hash2, what)
+      checkPart2(what, orders, nulls)
+      val p2 = part2DenseAgg(items, orders, "id", "itemId", "price", "quantity", "storeId")
       val sources = (probeSources(p1) ++ probeSources(p2)).distinct
       assert(sources.size === 1, s"$what: $sources")
       sources.head
@@ -148,13 +175,13 @@ class Q4112Spec extends SparkSpec {
         .otherwise(col("itemId")).as("itemId"),
       when(col("quantity") % 7 === 0, lit(null)).otherwise(col("quantity")).as("quantity"),
       when(col("quantity") % 11 === 0, lit(null)).otherwise(col("storeId")).as("storeId"))
-    check("nullable", holes)
+    check("nullable", holes, nulls = true)
     val holesCached = holes.cache()
-    try assert(check("nullable cached", holesCached) === "columnar")
+    try assert(check("nullable cached", holesCached, nulls = true) === "columnar")
     finally holesCached.unpersist(blocking = true)
     // every quantity NULL: no product, so every form answers NULL
     val noQty = gen.withColumn("quantity", lit(null).cast("long"))
-    check("all-NULL quantity", noQty)
+    check("all-NULL quantity", noQty, nulls = true)
     assert(result(part1Dense(items, noQty, "id", "itemId", "price", "quantity")) === None)
     // empty partitions, and a relation that plans no partition at all
     check("empty", gen.where(col("itemId") < 0))
@@ -214,19 +241,20 @@ class Q4112Spec extends SparkSpec {
         case Seq(r) => if (r.isNullAt(0)) None else Some(r.getLong(0))
         case rows => fail(s"expected one row, got ${rows.size}")
       }
-    def check(orders: DataFrame, minGroup: Long, domain: Int): Option[Long] = {
+    // the form takes its domain from the group column's min/max
+    def check(orders: DataFrame): Option[Long] = {
       val viaHash = result(Q4112.part2(items, orders, "id", "itemId", "price",
         "quantity", "storeId", Q4112.BroadcastHash))
       val viaDense = result(Q4112.part2DenseAgg(items, orders, "id", "itemId", "price",
-        "quantity", "storeId", minGroup, domain))
-      assert(viaDense === viaHash, s"domain $domain")
+        "quantity", "storeId"))
+      assert(viaDense === viaHash, Q4112.minMaxLongsOpt(orders, Seq("storeId")))
       viaHash
     }
     val orders = spark.range(0L, 100000L, 1L, 8)
       .select((col("id") % 500L + 1L).as("itemId"),
         (col("id") % 9L).as("quantity"),
         (col("id") % 37L + 100L).as("storeId")) // domain [100, 136]
-    val viaHash = check(orders, minGroup = 100L, domain = 37)
+    val viaHash = check(orders)
     // the adaptive chooser routes this bounded-domain shape to the dense form
     val adaptive = result(Q4112.part2Adaptive(items, orders, "id", "itemId", "price",
       "quantity", "storeId"))
@@ -240,21 +268,20 @@ class Q4112Spec extends SparkSpec {
     check(spark.range(0L, 500000L, 1L, 3)
       .select((col("id") % 500L + 1L).as("itemId"),
         when(col("id") >= 400000L, 1000L).otherwise(col("id") % 9L).as("quantity"),
-        (col("id") * 7919L % 200000L + 5L).as("storeId")), minGroup = 5L, domain = 200000)
-    // sparse occupancy: 3000 rows over 8 tasks in 100000 slots ship as
+        (col("id") * 7919L % 200000L + 5L).as("storeId")))
+    // sparse occupancy: 3000 rows over 8 tasks in ~94000 slots ship as
     // (slot, sum, count) triples; groups hold 1 or 2 rows
     check(spark.range(0L, 3000L, 1L, 8)
       .select((col("id") % 500L + 1L).as("itemId"), (col("id") % 9L).as("quantity"),
-        (col("id") % 2000L * 47L + 1L).as("storeId")), minGroup = 1L, domain = 100000)
+        (col("id") % 2000L * 47L + 1L).as("storeId")))
     // the join drops every row: no group, NULL result
-    assert(check(orders.withColumn("itemId", col("itemId") + 1000L),
-      minGroup = 100L, domain = 37) === None)
+    assert(check(orders.withColumn("itemId", col("itemId") + 1000L)) === None)
     // a provably-empty relation plans zero partitions
     val empty = Seq.empty[(Long, Long, Long)].toDF("itemId", "quantity", "storeId")
       .where(lit(false))
     assert(empty.join(items, col("itemId") === col("id"))
       .queryExecution.toRdd.getNumPartitions === 0)
-    assert(check(empty, minGroup = 0L, domain = 10) === None)
+    assert(check(empty) === None)
   }
 
   test("dense-array partial aggregate raises on a cross-task sum overflow, like the hash plan") {
@@ -262,28 +289,32 @@ class Q4112Spec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     val items = Seq((1L, 1L)).toDF("id", "price")
+    // a gap in the keys: the forms take the hash join front half
+    val gappy = Seq((1L, 1L), (3L, 1L)).toDF("id", "price")
     // one row per task with v = 2^62: each task's sum fits a long, the
     // merged sum 2^63 does not
     val orders = spark.range(0L, 2L, 1L, 2)
       .select(lit(1L).as("itemId"), lit(1L << 62).as("quantity"), (col("id") * 0L).as("storeId"))
-    def overflows(df: org.apache.spark.sql.DataFrame): Boolean = {
+    // both rows in ONE task: the in-task sum must raise too, on the row
+    // path, on the probe kernel and in the shared table's combine cache
+    val oneTask = orders.coalesce(1)
+    def overflows(df: => org.apache.spark.sql.DataFrame): Boolean = {
       val e = intercept[Exception](df.collect())
       Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(t => String.valueOf(t.getMessage).toLowerCase.contains("overflow"))
     }
-    assert(overflows(Q4112.part2(items, orders, "id", "itemId", "price", "quantity",
-      "storeId", Q4112.BroadcastHash)))
-    assert(overflows(Q4112.part2DenseAgg(items, orders, "id", "itemId", "price", "quantity",
-      "storeId", minGroup = 0L, domain = 1)))
-    // both rows in ONE task: the in-task sum must raise too, on the row
-    // path and on the probe kernel
-    val oneTask = orders.coalesce(1)
-    for (dense <- Seq(false, true))
-      assert(overflows(Q4112.part2DenseAgg(items, oneTask, "id", "itemId", "price", "quantity",
-        "storeId", minGroup = 0L, domain = 1, dense = dense)), s"dense = $dense")
-    assert(overflows(Q4112.part2(items, oneTask, "id", "itemId", "price", "quantity",
-      "storeId", Q4112.BroadcastHash)))
+    for (o <- Seq(orders, oneTask)) {
+      assert(overflows(Q4112.part2(items, o, "id", "itemId", "price", "quantity",
+        "storeId", Q4112.BroadcastHash)))
+      for (it <- Seq(items, gappy)) {
+        assert(overflows(Q4112.part2DenseAgg(it, o, "id", "itemId", "price", "quantity",
+          "storeId")))
+        assert(overflows(Q4112.part2SharedDense(it, o, "id", "itemId", "price", "quantity",
+          "storeId")))
+      }
+    }
     assert(overflows(Q4112.part1Dense(items, oneTask, "id", "itemId", "price", "quantity")))
+    assert(Q4112.sharedDenseLiveTables === 0)
     // with ANSI off every plan wraps, and the dense forms wrap the same way
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try {
@@ -291,9 +322,12 @@ class Q4112Spec extends SparkSpec {
       for (o <- Seq(orders, oneTask)) {
         val hash2 = one(Q4112.part2(items, o, "id", "itemId", "price", "quantity", "storeId",
           Q4112.BroadcastHash))
-        for (dense <- Seq(false, true))
-          assert(one(Q4112.part2DenseAgg(items, o, "id", "itemId", "price", "quantity",
-            "storeId", minGroup = 0L, domain = 1, dense = dense)) === hash2)
+        for (it <- Seq(items, gappy)) {
+          assert(one(Q4112.part2DenseAgg(it, o, "id", "itemId", "price", "quantity",
+            "storeId")) === hash2)
+          assert(one(Q4112.part2SharedDense(it, o, "id", "itemId", "price", "quantity",
+            "storeId")) === hash2)
+        }
         assert(one(Q4112.part1Dense(items, o, "id", "itemId", "price", "quantity")) ===
           one(Q4112.part1(items, o, "id", "itemId", "price", "quantity", Q4112.BroadcastHash)))
       }
@@ -335,14 +369,18 @@ class Q4112Spec extends SparkSpec {
     ).toDF("itemId", "quantity", "storeId")
     assert(orders.schema.forall(_.nullable), "test requires nullable inputs")
     val items = Seq((1L, 10L), (2L, 20L)).toDF("id", "price")
+    // an unused key past a gap: the same join, through the hash front half
+    val gappy = Seq((1L, 10L), (2L, 20L), (4L, 40L)).toDF("id", "price")
     val viaHash = Q4112.part2(items, orders, "id", "itemId", "price",
       "quantity", "storeId", Q4112.BroadcastHash).collect()(0)
-    val viaDense = Q4112.part2DenseAgg(items, orders, "id", "itemId", "price",
-      "quantity", "storeId", minGroup = 100L, domain = 3).collect()(0)
     // expected by hand: avgs {100->10, 101->60, 102->NULL, NULL->20};
     // sum(10,60,20)=90 over count 4 -> 90 div 4 = 22
     assert(viaHash.getLong(0) === 22L)
-    assert(viaDense.getLong(0) === viaHash.getLong(0))
+    for (it <- Seq(items, gappy)) {
+      val viaDense = Q4112.part2DenseAgg(it, orders, "id", "itemId", "price",
+        "quantity", "storeId").collect()(0)
+      assert(viaDense.getLong(0) === viaHash.getLong(0))
+    }
   }
 
   test("shared-CAS-table aggregate equals the hash plan; the router picks it on singleton groups; re-execution is fresh") {
@@ -356,7 +394,7 @@ class Q4112Spec extends SparkSpec {
     val viaHash = Q4112.part2(items, orders, "id", "itemId", "price",
       "quantity", "storeId", Q4112.BroadcastHash).collect()(0).getLong(0)
     val direct = Q4112.part2SharedDense(items, orders, "id", "itemId", "price",
-      "quantity", "storeId", minGroup = 0L, domain = 200000L)
+      "quantity", "storeId")
     assert(direct.collect()(0).getLong(0) === viaHash)
     // a SECOND execution of the same DataFrame runs as a new stage and
     // must get a fresh shared table, not the consumed one
@@ -406,7 +444,7 @@ class Q4112Spec extends SparkSpec {
     val expected = Q4112.part2(items, orders, "id", "itemId", "price",
       "quantity", "storeId", Q4112.BroadcastHash).collect()(0).getLong(0)
     val df = Q4112.part2SharedDense(items, orders, "id", "itemId", "price",
-      "quantity", "storeId", minGroup = 0L, domain = 50000L)
+      "quantity", "storeId")
     assert(df.limit(1).collect()(0).getLong(0) === expected)
     assert(df.take(1)(0).getLong(0) === expected)
     df.show() // must not throw or return an empty frame
@@ -422,10 +460,11 @@ class Q4112Spec extends SparkSpec {
       .select((col("id") % 10L + 1L).as("itemId"),
         (col("id") % 5L).as("quantity"),
         col("id").as("storeId")) // true domain [0, 1000)
+    val gv = Q4112.groupedValues(items, orders, "id", "itemId", "price", "quantity", "storeId")
+      .select(col("storeId"), col("v"))
     val e = intercept[Exception] {
-      // lie to the operator: claim the domain is [0, 100)
-      Q4112.part2SharedDense(items, orders, "id", "itemId", "price",
-        "quantity", "storeId", minGroup = 0L, domain = 100L)
+      // lie to the stage: claim the domain is [0, 100)
+      Q4112.sharedDenseGroupedAvg(gv, minGroup = 0L, domain = 100)
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x =>
@@ -433,6 +472,24 @@ class Q4112Spec extends SparkSpec {
     assert(messages(e).exists(_.contains("outside the stats-proven domain")),
       messages(e).mkString(" | "))
     assert(Q4112.sharedDenseLiveTables === 0, "shared-dense state leaked on failure")
+  }
+
+  test("dense-array partial aggregate rejects a group outside its stated domain") {
+    // the stage over [5, 15): group 15 would add into the NULL slot, and
+    // group 5 + 2^32 would wrap `toInt` into live slot 0
+    val spark2 = spark
+    import spark2.implicits._
+    for (bad <- Seq(15L, 5L + (1L << 32)); nullable <- Seq(false, true)) {
+      val rows = Seq((5L, 7L), (bad, 11L))
+      val gv =
+        if (nullable) rows.map { case (g, v) => (Long.box(g), Long.box(v)) }.toDF("g", "v")
+        else rows.toDF("g", "v")
+      assert(gv.schema.forall(_.nullable) === nullable)
+      val e = intercept[Exception](Q4112.denseGroupedAvg(gv, minGroup = 5L, domain = 10).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(s"group $bad outside the stats-proven")),
+        s"group $bad, nullable $nullable: $e")
+    }
   }
 
   test("router proves null-freedom of the VALUE inputs, not just the group (ADVICE r10 #2)") {
@@ -468,6 +525,18 @@ class Q4112Spec extends SparkSpec {
     assert(Q4112.lastChosenPlan !== "shared_dense",
       s"router picked shared_dense over a NULL-carrying price column")
     assert(adaptive2 === viaHash2)
+    // ten singleton groups of v = 1000, plus a NULL-quantity row in
+    // group 0: bypass-shaped, in pack bounds, but a NULL v has no packed
+    // form (unchecked it would move its row into a NULL group: 909, not 950)
+    val few = ((1L, Option.empty[Long], 0L) +: (0L until 10L).map(g => (1L, Option(100L), g)))
+      .toDF("itemId", "quantity", "storeId")
+    val itemsOne = Seq((1L, 10L)).toDF("id", "price")
+    val viaHash3 = Q4112.part2(itemsOne, few, "id", "itemId", "price",
+      "quantity", "storeId", Q4112.BroadcastHash).collect()(0).getLong(0)
+    assert(viaHash3 === 950L)
+    assert(Q4112.part2Adaptive(itemsOne, few, "id", "itemId", "price", "quantity",
+      "storeId").collect()(0).getLong(0) === viaHash3, Q4112.lastChosenPlan)
+    assert(Q4112.lastChosenPlan === "bypass", Q4112.lastChosenPlan)
   }
 
   test("router falls back cleanly off-local: shared_dense is never chosen on a cluster") {
@@ -621,18 +690,6 @@ class Q4112Spec extends SparkSpec {
       for (t <- Seq("p1spec_items", "p1spec_orders_ik", "p1spec_orders_g"))
         spark.sql(s"DROP TABLE IF EXISTS $t")
     }
-  }
-
-  test("part2 bypass dense variant matches the hash-join plan") {
-    val cfg = GenConfig(500, 0.8, 999, 20000, 0.7, 999, 40, 4, 0.5, seed = 11)
-    val items = Q4112Gen.items(spark, cfg).toDF()
-    val orders = Q4112Gen.orders(spark, cfg).toDF()
-    val hash2 = Q4112.part2(items, orders, "id", "itemId", "price", "quantity", "storeId")
-      .collect().head.getLong(0)
-    val bypass2 = Q4112.part2Bypass(items, orders, "id", "itemId", "price", "quantity",
-      "storeId", numPartitions = 5, dense = true)
-      .collect().head.getLong(0)
-    assert(bypass2 === hash2)
   }
 
   test("dense build handles non-contiguous partition runs (shuffled input)") {

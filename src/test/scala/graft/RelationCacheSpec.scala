@@ -3,6 +3,7 @@ package graft
 import graft.ops.Q4112
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 
 /** Build-once semantics for the planner's relation-keyed caches:
   * the dense-key broadcast, the adaptive sampler's shared-mass
@@ -99,6 +100,45 @@ class RelationCacheSpec extends SparkSpec {
     Q4112.clearRelationCaches()
   }
 
+  test("q4112 forms read the planner's cached facts: building one adds no job of its own") {
+    Q4112.clearRelationCaches()
+    val items = spark.range(1, 501).select(col("id"), (col("id") * 7 % 1000).as("price")).cache()
+    // singleton groups: the planner takes the bypass branch, where it
+    // proves the domain, the pack bounds and null-freedom
+    val orders = spark.range(0, 200000, 1, 8).select((col("id") % 500 + 1).as("itemId"),
+      (col("id") % 9).as("quantity"), col("id").as("storeId")).cache()
+    try {
+      items.count(); orders.count()
+      val adaptive = Q4112.part2Adaptive(items, orders, "id", "itemId", "price", "quantity",
+        "storeId").head().getLong(0)
+      assert(Q4112.lastChosenPlan === "shared_dense", Q4112.lastChosenPlan)
+      val metrics = new TaskMetricsListener
+      val sc = spark.sparkContext
+      bridge.drainListenerBus(sc)
+      sc.addSparkListener(metrics)
+      def jobs(build: => org.apache.spark.sql.DataFrame): (Int, Long) = {
+        metrics.reset()
+        val df = build
+        bridge.drainListenerBus(sc)
+        val n = metrics.jobs.size
+        (n, df.head().getLong(0))
+      }
+      try {
+        assert(jobs(Q4112.part2DenseAgg(items, orders, "id", "itemId", "price", "quantity",
+          "storeId")) === ((0, adaptive)))
+        assert(jobs(Q4112.part2BypassPacked(items, orders, "id", "itemId", "price", "quantity",
+          "storeId", numPartitions = 4)) === ((0, adaptive)))
+        // the shared table is eager: its one accumulation job runs at build
+        assert(jobs(Q4112.part2SharedDense(items, orders, "id", "itemId", "price", "quantity",
+          "storeId")) === ((1, adaptive)))
+      } finally sc.removeSparkListener(metrics)
+    } finally {
+      items.unpersist(blocking = true)
+      orders.unpersist(blocking = true)
+      Q4112.clearRelationCaches()
+    }
+  }
+
   test("adaptive planners surface the missed-layout hint at plan time") {
     Q4112.clearRelationCaches()
     val items = spark.range(0, 100).select(col("id"), (col("id") % 97 + 1).as("price"))
@@ -120,9 +160,12 @@ class RelationCacheSpec extends SparkSpec {
     Q4112.part2Adaptive(items, narrow, "id", "itemId", "price", "quantity", "storeId")
     assert(Q4112.lastChosenPlan === "shared_dense", Q4112.lastChosenPlan)
     assert(Q4112.lastAdvice === "", s"got: ${Q4112.lastAdvice}")
-    // part 1, dense path: advises the co-located layout for the join keys
-    val bigItems = spark.range(0, 20000).select(col("id"), (col("id") % 97 + 1).as("price"))
-    Q4112.part1Adaptive(bigItems, orders, "id", "itemId", "price", "quantity", dense = true)
+    // part 1, dense path over a build side of 1e7 rows, where the
+    // driver-side build is material: advises the co-located layout for
+    // the join keys
+    val bigItems = spark.range(0, 10000000).select(col("id"), (col("id") % 97 + 1).as("price"))
+    Q4112.part1Adaptive(bigItems, orders, "id", "itemId", "price", "quantity")
+    assert(Q4112.lastChosenPlan === "dense", Q4112.lastChosenPlan)
     assert(Q4112.lastAdvice.contains("co-located"), s"got: ${Q4112.lastAdvice}")
     // a small broadcast build side is already the plan you'd want: no advice
     Q4112.part1Adaptive(items, orders, "id", "itemId", "price", "quantity")
