@@ -166,8 +166,6 @@ object Matrix {
       Q4112.part1Dense(wi.toDF(), wo.toDF(), "id", "itemId", "price", "quantity").collect()
       Q4112.part2Adaptive(wi.toDF(), wo.toDF(), "id", "itemId", "price",
         "quantity", "storeId").collect()
-      Q4112.part2BypassPacked(wi.toDF(), wo.toDF(), "id", "itemId", "price",
-        "quantity", "storeId", numPartitions = 32).collect()
       Q4112Gen.oracleFullCas(wo, w)
       wi.unpersist(blocking = true); wo.unpersist(blocking = true)
       Q4112.clearRelationCaches()

@@ -120,6 +120,16 @@ object SparkEntry {
     t(s, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"), floor(col("l_quantity")).as("quantity"))
 
+  /** `orders` with l_suppkey relabelled as l_suppkey · 65537, plus 2^22
+    * for odd keys: the same groups (even keys land on multiples of 65537,
+    * odd ones 65473 past one, so the map is injective) over a domain of
+    * 2^22 to 2^27 slots at every scale from sf0.001 (~4.7e6) to sf0.1
+    * (~7.0e7).
+    */
+  private def wideSuppkey(orders: DataFrame): DataFrame =
+    orders.withColumn("l_suppkey",
+      col("l_suppkey") * 65537L + col("l_suppkey") % 2L * (1L << 22))
+
   /** text_clean_segments' whole pipeline, shared by the gate and the
     * production bench form so the segmentation, df threshold, and
     * ordered-reassembly semantics cannot drift: segment df counted on
@@ -227,17 +237,19 @@ object SparkEntry {
     "q4112_part2" -> ((s, dir) =>
       Q4112.part2(partItems(s, dir), liOrders(s, dir),
         "p_partkey", "l_partkey", "price", "quantity", "l_suppkey", Q4112.BroadcastHash)),
-    // the measured-statistics plan chooser (sampled shared-key mass →
-    // partial vs raw-exchange bypass) through the correctness gate
+    // the statistics plan chooser (stored layout, then the group
+    // domain's cached min/max) through the correctness gate
     "q4112_part2_adaptive" -> ((s, dir) =>
       Q4112.part2Adaptive(partItems(s, dir), liOrders(s, dir),
         "p_partkey", "l_partkey", "price", "quantity", "l_suppkey")),
-    // the packed raw-exchange plan (group·2^34 + v in one long, single
-    // exchange) through the correctness gate
+    // the dense form past the per-task array cap (the combine cache and
+    // the range-partitioned merge) through the correctness gate in its
+    // own right: the injective relabelling of wideSuppkey keeps the
+    // oracle's groups and answer and widens the domain past 2^22. The
+    // name predates this form; the oracle records key on it.
     "q4112_part2_packed" -> ((s, dir) =>
-      Q4112.part2BypassPacked(partItems(s, dir), liOrders(s, dir),
-        "p_partkey", "l_partkey", "price", "quantity", "l_suppkey",
-        numPartitions = s.sparkContext.defaultParallelism)),
+      Q4112.part2DenseAgg(partItems(s, dir), wideSuppkey(liOrders(s, dir)),
+        "p_partkey", "l_partkey", "price", "quantity", "l_suppkey")),
     // the dense-array partial aggregate through the correctness gate in
     // its OWN right (not only via the adaptive chooser, whose routing
     // could change); the form takes its group domain from the same
@@ -245,34 +257,24 @@ object SparkEntry {
     "q4112_part2_dense_agg" -> ((s, dir) =>
       Q4112.part2DenseAgg(partItems(s, dir), liOrders(s, dir),
         "p_partkey", "l_partkey", "price", "quantity", "l_suppkey")),
-    // the shared-CAS-table form (the reference's own t16 algorithm,
-    // q4112.c:225-297) through the correctness gate in its own right.
-    // Parquet schemas are nullable; the testdata carries no NULLs, so a
-    // coalesce-to-sentinel projection makes the inputs schema-
-    // non-nullable without changing any value — and the DuckDB oracle
-    // (which keeps NULL semantics) would break the hash if that ever
-    // stopped being vacuously true.
+    // the adaptive chooser on the widened group domain of
+    // q4112_part2_packed: it must route to range_dense on its own (the
+    // entry throws otherwise). The name predates this form; the oracle
+    // records key on it.
     "q4112_part2_shared_dense" -> ((s, dir) => {
-      val it = partItems(s, dir).select(
-        coalesce(col("p_partkey"), lit(-1L)).as("p_partkey"),
-        coalesce(col("price"), lit(0L)).as("price"))
-      val lo = liOrders(s, dir).select(
-        coalesce(col("l_partkey"), lit(-1L)).as("l_partkey"),
-        coalesce(col("l_suppkey"), lit(0L)).as("l_suppkey"),
-        coalesce(col("quantity"), lit(0L)).as("quantity"))
-      Q4112.part2SharedDense(it, lo,
+      val out = Q4112.part2Adaptive(partItems(s, dir), wideSuppkey(liOrders(s, dir)),
         "p_partkey", "l_partkey", "price", "quantity", "l_suppkey")
+      require(Q4112.lastChosenPlan == "range_dense",
+        s"router chose ${Q4112.lastChosenPlan}, not range_dense, on a 2^22..2^27 domain")
+      out
     }),
-    // the shared-dense route on RAW nullable-schema parquet facts
-    // (round-10 verdict item 1): no coalesce, no nullability coercion —
-    // the ADAPTIVE router must prove null-freedom from data statistics
-    // (null counts on the group/quantity/price columns) and pick
-    // shared_dense on its own; the entry throws if any other plan is
-    // chosen, and the value is oracle-recomputed in DuckDB. Shape:
+    // the adaptive route on RAW nullable-schema parquet facts: no
+    // coalesce, no nullability coercion, and the planner must take the
+    // dense kernel on its own (the entry throws if any other plan is
+    // chosen); the value is oracle-recomputed in DuckDB. Shape:
     // customers joined to orders grouped by the UNIQUE o_orderkey — the
-    // all-singleton group profile (sampled sharedMass ≈ 0) that defeats
-    // every partial-aggregation plan and is exactly what the reference's
-    // t16 shared CAS table exists for (q4112.c:225-297).
+    // all-singleton group profile that defeats map-side combining, in a
+    // domain narrow enough for per-task arrays.
     "q4112_part2_shared_dense_parquet" -> ((s, dir) => {
       val items = t(s, dir, "customer")
         .select(col("c_custkey"), (col("c_custkey") % 1000L).as("price"))
@@ -283,8 +285,8 @@ object SparkEntry {
         "gate requires raw nullable parquet schemas")
       val out = Q4112.part2Adaptive(items, orders, "c_custkey", "o_custkey",
         "price", "quantity", "o_orderkey")
-      require(Q4112.lastChosenPlan == "shared_dense",
-        s"router chose ${Q4112.lastChosenPlan}, not shared_dense, on raw parquet")
+      require(Q4112.lastChosenPlan == "partial_dense",
+        s"router chose ${Q4112.lastChosenPlan}, not partial_dense, on raw parquet")
       out
     }),
     // the LAYOUT ROUTER through the correctness gate (round-8 verdict
@@ -6393,9 +6395,9 @@ object SparkEntry {
       "q4112_part2_shared_dense" ->
         s"""WITH g AS ($groupedCte)
            |SELECT cast(sum(avg_value) // count(*) as bigint) AS avg_avg_value FROM g""".stripMargin,
-      // raw-parquet shared-dense gate: the oracle recomputes the
+      // raw-parquet adaptive gate: the oracle recomputes the
       // customers⋈orders avg-of-avgs grouped by the unique o_orderkey;
-      // the plan-label requirement (router MUST pick shared_dense) is
+      // the plan-label requirement (router MUST pick partial_dense) is
       // enforced Spark-side — a routing miss throws and the row errors
       "q4112_part2_shared_dense_parquet" ->
         """WITH j AS (

@@ -29,11 +29,13 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * reproduces inner-join drop semantics exactly.
   *
   * Used by the plans that still need (group, v) rows after the probe:
-  * `Q4112.part2Dense`, and the bypass, packed and shared-dense forms
-  * when their build side is dense (`Q4112.groupedValues` asks
-  * `Q4112.denseEligible`). Part 1 and the dense partial aggregate probe
-  * the same array with the columnar kernel `Q4112.probeAccumulate`
-  * instead, with no row pipeline.
+  * `Q4112.part2Dense` (the forced dense form, and the planner's
+  * `partial` and bucketed-layout plans over a dense build side), and
+  * `Q4112.groupedValues` when its build side is dense (the Matrix
+  * harness's joined-bucketed layout write). Part 1 and both dense
+  * partial aggregates (`partial_dense`, `range_dense`) probe the same
+  * array with the columnar kernels `Q4112.probeAccumulate` and
+  * `Q4112.probeCombine` instead, with no row pipeline.
   */
 case class DenseArrayLookup(
     child: Expression,

@@ -11,7 +11,8 @@ import org.apache.spark.sql.execution.{ColumnarToRowExec, ProjectExec, WholeStag
 import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField,
+  StructType}
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
 /** The reference's one query, generalized: inner equi-join (FK→PK) then
@@ -35,23 +36,23 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
   *    with no Catalyst row pipeline, and each task hands back only its
   *    accumulators. The kernel is stateless on retry, and `explain()`
   *    shows its per-task output as `Scan ExistingRDD`.
-  *  - The grouped aggregate relies on Spark's partial aggregation
-  *    (map-side combine) — the same design as the reference's
-  *    thread-local pre-aggregation cache (q4112.c:225-297): hot groups
-  *    collapse before the shuffle, so heavy-hitter skew (hh configs)
-  *    costs one combiner entry per partition, not a hot reducer. When
-  *    statistics bound the group domain, the partial aggregate is a
-  *    per-task array instead and the arrays are merged range by range
-  *    in a reduce-scatter ([[denseGroupedAvg]]), with no hash map on
-  *    either side of the shuffle.
+  *  - The grouped aggregate is dense whenever the group column's cached
+  *    min/max bound its domain ([[part2DenseAgg]]): up to 2^22 slots each
+  *    task accumulates into plain arrays, and up to 2^27 slots (with a
+  *    dense build side) each row folds into the reference's 2^13
+  *    direct-mapped combine cache (q4112.c:225-297), whose evictions ship
+  *    to the reducer that owns their slot range. Either way the reducers
+  *    add by slot, with no hash map on either side of the shuffle
+  *    ([[mergeDenseChunks]]). A wider or unbounded domain takes Spark's
+  *    hash partial aggregation, whose map-side combine plays the same
+  *    role as the cache: hot groups collapse before the shuffle.
   *  - The final avg-of-avgs is a single ungrouped aggregate over one row
-  *    per group — negligible at any scale.
+  *    per group or reducer — negligible at any scale.
   *  - Every form works out its physical facts from the `items`/`orders`
   *    it is given, through the relation caches below: whether the build
-  *    side is dense ([[denseEligible]]), the group domain
-  *    ([[minMaxLongsOpt]]), the pack bounds ([[packBoundsOk]]) and
-  *    null-freedom ([[colsCarryNulls]]). None takes them as parameters,
-  *    so a fact has one source, and a form asks with the same columns as
+  *    side is dense ([[denseEligible]]) and the group domain
+  *    ([[minMaxLongsOpt]]). None takes them as parameters, so a fact has
+  *    one source, and a form asks with the same columns as
   *    [[part2Adaptive]], so building it after the planner runs no job.
   */
 object Q4112 {
@@ -76,28 +77,22 @@ object Q4112 {
   // over an UNCHANGED relation reuse: (a) the dense-key broadcast array
   // (a dimension-table index is built once per table version, not once
   // per query — round-4 measured the per-query build at 17.9 s of
-  // cfg18's 28.6 s), (b) the adaptive sampler's shared-mass statistic
-  // (~1-3 s inside every timed query), and (c) min/max column stats for
-  // the pack-bounds proof. This is the cache any engine keeps next to
-  // its catalog; callers that REPLACE data under an identical plan
-  // (e.g. the Matrix harness re-creating a catalog table per config)
-  // must call [[clearRelationCaches]] at the boundary.
+  // cfg18's 28.6 s), (b) min/max column stats for the dense test and
+  // the group domain, and (c) row counts. This is the cache any engine
+  // keeps next to its catalog; callers that REPLACE data under an
+  // identical plan (e.g. the Matrix harness re-creating a catalog table
+  // per config) must call [[clearRelationCaches]] at the boundary.
   // ------------------------------------------------------------------
   // a build side that breaks the dense contract caches its reason
   // (Left), so the adaptive planners pay the failed build once
   private val denseCache =
     new java.util.concurrent.ConcurrentHashMap[
       (LogicalPlan, String, String), Either[String, (Broadcast[Array[Long]], Long)]]
-  private val sampleCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (LogicalPlan, String), (Long, Long, Double)] // (tot, sampleNdv, sharedMass)
   private val minMaxCache =
     new java.util.concurrent.ConcurrentHashMap[
       (LogicalPlan, Seq[String]), Option[Seq[(Long, Long)]]]
   private val rowCountCache =
     new java.util.concurrent.ConcurrentHashMap[LogicalPlan, java.lang.Long]
-  private val nullCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(LogicalPlan, String), java.lang.Long]
 
   /** Drop every relation-keyed cache entry (and destroy the cached
     * broadcasts). Call when data changes under an unchanged plan —
@@ -106,10 +101,8 @@ object Q4112 {
   def clearRelationCaches(): Unit = {
     denseCache.values.forEach(_.foreach(_._1.destroy()))
     denseCache.clear()
-    sampleCache.clear()
     minMaxCache.clear()
     rowCountCache.clear()
-    nullCountCache.clear()
     LayoutRegistry.clear() // routed layouts are relation-keyed too
   }
 
@@ -160,85 +153,6 @@ object Q4112 {
   def minMaxLongs(df: DataFrame, cols: Seq[String]): Seq[(Long, Long)] =
     minMaxLongsOpt(df, cols).getOrElse(throw new IllegalStateException(
       s"no min/max stats for ${cols.mkString(",")} (empty or all-NULL input)"))
-
-  /** NULL count for one column — catalog column stats when present
-    * (zero jobs), else one cached agg scan per (relation, column). The
-    * planner's bridge between schema nullability (which Catalyst sets
-    * pessimistically: any %-derived column is "nullable") and the
-    * DATA's actual nulls, which is what null-intolerant physical forms
-    * ([[sharedDenseGroupedAvg]]) care about.
-    */
-  def nullCountLong(df: DataFrame, c: String): Long = {
-    val plan = df.queryExecution.optimizedPlan
-    statsNullCount(plan, c).getOrElse {
-      nullCountCache.computeIfAbsent((plan.canonicalized, c), { _ =>
-        java.lang.Long.valueOf(
-          df.agg(count(when(col(c).isNull, 1)).as("n")).head().getLong(0))
-      }).longValue()
-    }
-  }
-
-  /** Catalog/plan-statistics null count for one column, zero jobs. The
-    * single resolution path [[nullCountLong]] and [[colsCarryNulls]]
-    * both go through, so they can never disagree on the same
-    * (relation, column).
-    */
-  private def statsNullCount(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      c: String): Option[Long] =
-    plan.output.find(_.name.equalsIgnoreCase(c)).flatMap { a =>
-      plan.stats.attributeStats.get(a).flatMap(_.nullCount.map(_.toLong))
-    }
-
-  /** Does the column carry ACTUAL nulls? Schema-first short-circuit (a
-    * non-nullable column provably cannot), then the data's null count
-    * from [[nullCountLong]] — the router's null-freedom proof for the
-    * null-intolerant physical forms.
-    */
-  private[graft] def colCarriesNulls(df: DataFrame, c: String): Boolean =
-    colsCarryNulls(df, Seq(c))
-
-  /** [[colCarriesNulls]] over several columns of ONE relation, with at
-    * most ONE data scan total: schema non-nullability and catalog/cached
-    * stats resolve columns job-free, and every column still unresolved
-    * is answered by a single multi-count aggregate (the fact table is
-    * 1e9 rows on the raw-parquet route — one pass, not one per column).
-    */
-  private[graft] def colsCarryNulls(df: DataFrame, cols: Seq[String]): Boolean = {
-    val plan = df.queryExecution.optimizedPlan
-    var carries = false
-    val unresolved = scala.collection.mutable.ArrayBuffer[String]()
-    cols.foreach { c =>
-      if (df.schema(c).nullable) {
-        val cached = Option(nullCountCache.get((plan.canonicalized, c))).map(_.longValue())
-        statsNullCount(plan, c).orElse(cached) match {
-          case Some(n) => if (n > 0L) carries = true
-          case None => unresolved += c
-        }
-      }
-    }
-    if (!carries && unresolved.nonEmpty) {
-      val aggs = unresolved.toSeq.map(c => count(when(col(c).isNull, 1)).as(s"n_$c"))
-      val row = df.agg(aggs.head, aggs.tail: _*).head()
-      unresolved.zipWithIndex.foreach { case (c, i) =>
-        val n = row.getLong(i)
-        nullCountCache.put((plan.canonicalized, c), java.lang.Long.valueOf(n))
-        if (n > 0L) carries = true
-      }
-    }
-    carries
-  }
-
-  /** Test hook: makes the router behave as if on a cluster so the
-    * shared-dense fallback path is assertable without spinning up a
-    * multi-JVM master (round-10 verdict item 8). Production value is
-    * always false; [[sharedDenseLocalOk]] consults it.
-    */
-  private[graft] var simulateClusterForTest: Boolean = false
-
-  /** Is the single-JVM shared-dense form admissible here? */
-  private def sharedDenseLocalOk(df: DataFrame): Boolean =
-    df.sparkSession.sparkContext.isLocal && !simulateClusterForTest
 
   /** Relation row count from plan/catalog statistics when present (zero
     * jobs — a cached relation knows its row count, an ANALYZEd table has
@@ -674,9 +588,7 @@ object Q4112 {
             else if (gNulls && gc.isNullAt(i)) nullSlot
             else {
               val gi = readLong(gc, gInt, i) - mg
-              if (gi < 0L || gi >= nullSlot)
-                throw new IllegalStateException(s"dense aggregate saw group ${gi + mg} " +
-                  s"outside the stats-proven domain [$mg, ${mg + nullSlot}) — stale statistics?")
+              if (gi < 0L || gi >= nullSlot) throw outOfDomain(gi + mg, mg, nullSlot)
               gi.toInt
             }
           cnts(g) += 1L
@@ -774,8 +686,8 @@ object Q4112 {
 
   /** The joined (group, v = price*quantity) projection, via the dense
     * array probe when the build side is a contiguous-key dimension
-    * ([[denseEligible]]), else a broadcast hash join — the common front
-    * half of every part-2 plan.
+    * ([[denseEligible]]), else a broadcast hash join — the front half of
+    * [[denseGroupedAvg]] and of the joined-bucketed layout.
     */
   private[graft] def groupedValues(
       items: DataFrame,
@@ -792,151 +704,58 @@ object Q4112 {
           .select(col(groupCol), (col(priceCol) * col(quantityCol)).as("v"))
     }
 
-  /** Part 2 with map-side partial aggregation BYPASSED: pre-partition the
-    * slim (group, v) rows on the group key, so the one exchange ships raw
-    * 16-byte rows and aggregation happens post-shuffle over complete
-    * groups, with a bounded (≈ groups / numPartitions)-entry map per
-    * reducer.
-    *
-    * This is the right plan when groups ≈ rows (singleton-heavy): partial
-    * aggregation collapses nothing for singleton groups yet still builds a
-    * per-task hash map of every distinct group the task sees — tens of
-    * millions of entries that overflow the aggregation memory, spill, and
-    * sort-merge, all for zero exchange savings. The reference faces the
-    * identical decision and resolves it with the same information: its FM
-    * sketch (q4112.c:336-377) estimates the group count up front, sizes
-    * the global table from it, and its thread-local pre-aggregation only
-    * pays off when groups are few enough to cache (README-2.txt:32-43).
-    * [[part2Adaptive]] reuses our A5 operator (FlajoletMartin) to make
-    * exactly that call.
-    */
-  def part2Bypass(
-      items: DataFrame,
-      orders: DataFrame,
-      itemKey: String,
-      orderKey: String,
-      priceCol: String,
-      quantityCol: String,
-      groupCol: String,
-      numPartitions: Int): DataFrame =
-    avgOfGroupAvgs(
-      groupedValues(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
-        .repartition(numPartitions, col(groupCol)),
-      col(groupCol), col("v"))
-
-  /** True when cached min/max statistics prove that every (group, v) row
-    * packs ([[packBoundsOk]] over the group, quantity and price columns).
-    * False when a column has no statistics (empty or all NULL).
-    */
-  private def packBoundsProven(
-      items: DataFrame, orders: DataFrame,
-      priceCol: String, quantityCol: String, groupCol: String): Boolean =
-    (minMaxLongsOpt(orders, Seq(groupCol, quantityCol)),
-      minMaxLongsOpt(items, Seq(priceCol))) match {
-      case (Some(Seq((minGroup, maxGroup), (minQty, maxQty))),
-            Some(Seq((minPrice, maxPrice)))) =>
-        packBoundsOk(minGroup, maxGroup, minPrice, maxPrice, minQty, maxQty)
-      case _ => false
-    }
-
-  /** True when the data (not the schema) carries no NULL in the group and
-    * quantity columns of `orders` or the price column of `items`: a NULL
-    * group has no shared-table slot and no packed form, and a NULL v needs
-    * the hash plans' sum-skips-NULL semantics.
-    */
-  private def valuesNullFree(
-      items: DataFrame, orders: DataFrame,
-      priceCol: String, quantityCol: String, groupCol: String): Boolean =
-    !colsCarryNulls(orders, Seq(groupCol, quantityCol)) && !colCarriesNulls(items, priceCol)
-
-  /** [[part2Bypass]] with the exchange rows PACKED into one long:
-    * group ⋅ 2^34 + v (valid while group < 2^29 and v < 2^34 — checked
-    * against the reference value caps: v = price·quantity ≤ 99999², and
-    * the matrix tops out at 1e8 groups). Cuts the dominant cost of the
-    * singleton-group shape — the raw-row exchange through disk — from
-    * 24 B to 16 B per UnsafeRow. The groupBy keys on the unpack
-    * expression, which canonicalizes equal to the repartition
-    * expression, so the plan keeps exactly ONE exchange
-    * (PackedBypassSpec pins this).
-    *
-    * PRECONDITION: 0 ≤ group < 2^29 and 0 ≤ v = price·quantity < 2^34,
-    * neither NULL, for EVERY row — a negative v (negative price or
-    * quantity) or an oversized group borrows into the other field's bits
-    * and silently corrupts the aggregate. When cached statistics prove it
-    * ([[packBoundsProven]] and [[valuesNullFree]], the facts
-    * [[part2Adaptive]] routes on) the rows pack unchecked; otherwise each
-    * row is validated in the pack projection and an unpackable row
-    * raises an error.
-    */
-  def part2BypassPacked(
-      items: DataFrame,
-      orders: DataFrame,
-      itemKey: String,
-      orderKey: String,
-      priceCol: String,
-      quantityCol: String,
-      groupCol: String,
-      numPartitions: Int): DataFrame = {
-    val proven = packBoundsProven(items, orders, priceCol, quantityCol, groupCol) &&
-      valuesNullFree(items, orders, priceCol, quantityCol, groupCol)
-    val packExpr = shiftleft(col(groupCol), 34) + col("v")
-    val guarded =
-      if (proven) packExpr
-      else when(
-        col(groupCol) >= 0 && col(groupCol) < (1L << 29) &&
-          col("v") >= 0 && col("v") <= ((1L << 34) - 1),
-        packExpr)
-        .otherwise(raise_error(format_string(
-          "part2BypassPacked: unpackable row: group=%d v=%d (need 0 <= group < 2^29, 0 <= v < 2^34)",
-          col(groupCol), col("v"))))
-    // widen a 32-bit-stored group before shifting: shiftleft on an INT
-    // masks the shift amount to 5 bits (34 ≡ 2) and would silently
-    // corrupt the packing; the cast is a no-op on long columns
-    val packed = groupedValues(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
-      .select(col(groupCol).cast("long").as(groupCol), col("v"))
-      .select(guarded.as("p"))
-    val g = shiftright(col("p"), 34)
-    avgOfGroupAvgs(packed.repartition(numPartitions, g), g.as("g"),
-      col("p").bitwiseAND(lit((1L << 34) - 1)))
-  }
-
-  /** Group-domain ceiling for [[part2DenseAgg]]: 2²² slots = 64 MB of
-    * accumulators per task (two long arrays) — L3-adjacent, and bounded
-    * at ~2 GB across 32 concurrent tasks. Above this the arrays stop
-    * fitting cache and the hash aggregate's locality is no worse.
+  /** Per-task array cap of the dense aggregate: no task of
+    * [[part2DenseAgg]] or [[denseGroupedAvg]] holds accumulator arrays
+    * of more than 2^22 slots (64 MB, two long arrays), on either side of
+    * the shuffle. A domain up to this cap is accumulated per task in
+    * arrays; a wider one (with a dense build side) goes through the
+    * combine cache, and its merge splits into more reducer ranges
+    * instead of growing any one task's arrays.
     */
   val DenseAggMaxDomain: Long = 1L << 22
 
+  /** Group-domain ceiling of [[part2DenseAgg]] with a dense build side:
+    * 2^27 slots, which covers the reference's 1e8-group configs
+    * (q4112.csv cfg4/11/18) in at most 32 reducer ranges of
+    * [[DenseAggMaxDomain]] slots. A wider domain takes the hash plan.
+    */
+  val RangeDenseMaxDomain: Long = 1L << 27
+
   /** Part 2 with the PARTIAL AGGREGATE itself dense — the reference's
     * own accumulation shape (q4112.c:225-297 aggregates into a sized
-    * global array after its FM sketch bounds the group count): when the
-    * group domain is contiguous and bounded ([lo, hi], hi−lo+1 ≤
-    * [[DenseAggMaxDomain]], proven from cached column min/max
-    * statistics), each task accumulates sum/count into two plain long
-    * arrays indexed by (group − lo). This replaces the per-row
-    * UnsafeFixedWidthAggregationMap probe (hash + row compare over a
-    * ~1e6-entry map that misses cache) with a bounds-checked array add —
-    * the profiled r9 attribution put that probe at the center of the
-    * cold cfg10/17 gap (one uniform CPU-bound stage, ~430 ns/row, zero
-    * spill). The arrays are then merged by a reduce-scatter, not by
-    * hashing: see [[denseGroupedAvg]].
+    * global array after its FM sketch bounds the group count): the
+    * group domain [lo, hi] is proven from cached column min/max
+    * statistics, and every row adds into slot (group − lo) of plain
+    * arrays instead of probing a hash map (hash + row compare over a
+    * ~1e6-entry UnsafeFixedWidthAggregationMap that misses cache — the
+    * profiled r9 attribution put that probe at the center of the cold
+    * cfg10/17 gap, ~430 ns/row, zero spill). The per-slot sums are then
+    * merged by slot range, not by hashing: see [[mergeDenseChunks]].
     *
-    * With a dense build side ([[denseEligible]]) the arrays are filled
-    * by the probe kernel [[probeAccumulate]] over the scan's columnar
-    * batches of (orderKey, quantity, group): probe, multiply and array
-    * add in one loop, with no join operator and no row pipeline.
-    * Otherwise a broadcast hash join feeds (group, v) rows to
-    * [[denseGroupedAvg]].
+    * With a dense build side ([[denseEligible]]) the probe kernel reads
+    * the scan's columnar batches of (orderKey, quantity, group): probe,
+    * multiply and add in one loop, with no join operator and no row
+    * pipeline. A domain of up to [[DenseAggMaxDomain]] slots adds into
+    * per-task arrays ([[probeAccumulate]]); one of up to
+    * [[RangeDenseMaxDomain]] slots folds each row into the reference's
+    * combine cache ([[probeCombine]]), whose evictions ship to the
+    * reducer that owns their slot, so a task's memory is bounded by a
+    * constant, not by the domain or the row count. Otherwise a broadcast
+    * hash join feeds (group, v) rows to [[denseGroupedAvg]], within
+    * [[DenseAggMaxDomain]].
     *
     * The domain comes from the group column's cached min/max
     * ([[groupDomain]], the statistics [[part2Adaptive]] routes on); a
-    * domain wider than [[DenseAggMaxDomain]] fails a stated `require`.
+    * group column that is not byte, short, int or long, or a domain past
+    * the cap, fails a stated `require`.
     *
     * Exactness: identical arithmetic to [[part2]] — products and sums
     * inside a task and across tasks raise on overflow when the session
     * runs ANSI and wrap when it does not, `s div c` per group, integer
-    * avg-of-avgs. A group outside the domain (statistics gone stale
-    * under an unchanged plan) fails loudly.
+    * avg-of-avgs, NULL groups and NULL values as the hash plan treats
+    * them. A group outside the domain (statistics gone stale under an
+    * unchanged plan) fails loudly. Every form is an ordinary stateless
+    * shuffle, so a retried task cannot double count.
     */
   def part2DenseAgg(
       items: DataFrame,
@@ -946,21 +765,33 @@ object Q4112 {
       priceCol: String,
       quantityCol: String,
       groupCol: String): DataFrame = {
-    val (mg, dom) = groupDomain(orders, groupCol, DenseAggMaxDomain)
-    eligibleDenseBuild(items, itemKey, priceCol) match {
+    val build = eligibleDenseBuild(items, itemKey, priceCol)
+    val (mg, dom) = groupDomain(orders, groupCol,
+      if (build.isDefined) RangeDenseMaxDomain else DenseAggMaxDomain)
+    val spark = orders.sparkSession
+    val exact = spark.sessionState.conf.ansiEnabled
+    val ranges = slotRanges(spark, dom)
+    build match {
       case Some((bc, mn)) =>
         val src = batchSource(orders, Seq(orderKey, quantityCol, groupCol))
         val isInt = src.isInt
         val trackV = src.nullable(1)
-        val exact = orders.sparkSession.sessionState.conf.ansiEnabled
         // slot `dom` past the domain holds the NULL group
-        val perTask = src.batches.mapPartitions { bs =>
-          val acc = new DenseAcc(dom + 1, trackV)
-          val arr = bc.value
-          bs.foreach(b => probeAccumulate(b, isInt, arr, mn, mg, dom, exact, acc))
-          Iterator.single(acc)
-        }.setName(s"dense probe over ${src.kind}")
-        mergeDenseAcc(orders.sparkSession, perTask, dom, exact)
+        val chunks =
+          if (dom <= DenseAggMaxDomain) src.batches.mapPartitions { bs =>
+            val acc = new DenseAcc(dom + 1, trackV)
+            val arr = bc.value
+            bs.foreach(b => probeAccumulate(b, isInt, arr, mn, mg, dom, exact, acc))
+            accChunks(acc, ranges)
+          } else src.batches.mapPartitions { bs =>
+            val cache = new CombineCache(ranges, trackV, exact)
+            val arr = bc.value
+            bs.flatMap { b =>
+              probeCombine(b, isInt, arr, mn, mg, dom, exact, cache)
+              cache.shipped()
+            } ++ cache.flush()
+          }
+        mergeDenseChunks(spark, chunks.setName(s"dense probe over ${src.kind}"), ranges, exact)
       case None =>
         denseGroupedAvg(
           groupedValues(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
@@ -969,15 +800,27 @@ object Q4112 {
     }
   }
 
+  /** Can the dense forms index by `c`? Only byte, short, int and long
+    * columns: the kernel reads any other type through a cast to long,
+    * which would merge groups (2.5 and 2.0 both read 2).
+    */
+  private def integralColumn(df: DataFrame, c: String): Boolean =
+    df.schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+
   /** The group domain of `orders` as (min group, slots), from the cached
     * min/max statistics [[part2Adaptive]] routes on (same columns, so
     * the same cache entry). An empty or all-NULL group column has no
     * min/max and takes one slot, which no row uses: the answer is still
-    * the hash plan's. A domain of more than `cap` slots, or one wider
-    * than 2^63 (the width subtraction wraps negative), fails a stated
-    * `require`.
+    * the hash plan's. A group column that is not integral, a domain of
+    * more than `cap` slots, or one wider than 2^63 (the width
+    * subtraction wraps negative) fails a stated `require`.
     */
-  private def groupDomain(orders: DataFrame, groupCol: String, cap: Long): (Long, Int) =
+  private def groupDomain(orders: DataFrame, groupCol: String, cap: Long): (Long, Int) = {
+    require(integralColumn(orders, groupCol), s"dense aggregate needs a byte, short, int " +
+      s"or long group column: '$groupCol' is ${orders.schema(groupCol).dataType.simpleString}")
     minMaxLongsOpt(orders, Seq(groupCol)) match {
       case Some(Seq((mn, mx))) =>
         require(mx - mn >= 0L && mx - mn < cap,
@@ -985,15 +828,35 @@ object Q4112 {
         (mn, (mx - mn + 1L).toInt)
       case _ => (0L, 1)
     }
+  }
 
-  // slots per reducer range in [[mergeDenseAcc]]: ~1 MB of merge arrays
+  private def outOfDomain(g: Long, mg: Long, slots: Int) = new IllegalStateException(
+    s"dense aggregate saw group $g outside the stats-proven domain [$mg, ${mg + slots}) " +
+      "— stale statistics?")
+
+  // slots per reducer range in [[mergeDenseChunks]]: ~1 MB of merge arrays
   private val DenseAggSlotsPerReducer = 1 << 16
 
-  /** One task's share of one reducer's slot range in [[mergeDenseAcc]]:
-    * a dense slice of the range (`slots == null`) or, for a range less
-    * than half occupied, (slot, sum, count) triples, slots relative to
-    * the range start. `hasV(j)`: entry j saw a non-NULL v; null when the
-    * input is non-nullable.
+  /** The reducer ranges of a merge over `slots` slots (the domain plus
+    * the NULL group): `n` ranges of `width` slots, range r from slot
+    * r · width. R = max(⌈slots / [[DenseAggMaxDomain]]⌉, min(session
+    * shuffle partitions, ⌈domain / 2^16⌉)), so no reducer holds more
+    * than the per-task array cap.
+    */
+  private final case class SlotRanges(slots: Int, n: Int, width: Int)
+
+  private def slotRanges(spark: org.apache.spark.sql.SparkSession, domain: Int): SlotRanges = {
+    val slots = domain + 1
+    val n = math.max(((slots + DenseAggMaxDomain - 1) / DenseAggMaxDomain).toInt,
+      math.max(1, math.min(spark.sessionState.conf.numShufflePartitions,
+        (domain + DenseAggSlotsPerReducer - 1) / DenseAggSlotsPerReducer)))
+    SlotRanges(slots, n, (slots + n - 1) / n)
+  }
+
+  /** One task's share of one reducer's slot range in [[mergeDenseChunks]]:
+    * a dense slice of the range (`slots == null`) or (slot, sum, count)
+    * triples, slots relative to the range start. `hasV(j)`: entry j saw
+    * a non-NULL v; null when the input is non-nullable.
     */
   private final case class DenseChunk(
       slots: Array[Int], sums: Array[Long], cnts: Array[Long], hasV: Array[Boolean])
@@ -1003,8 +866,8 @@ object Q4112 {
     * is joined by hash; exposed separately so the accumulation can be
     * measured and tested without the join front half. Each task adds
     * its rows into a [[DenseAcc]] with slot `domain` for the NULL group;
-    * the arrays are merged as described at [[mergeDenseAcc]], which the
-    * kernel form of [[part2DenseAgg]] shares.
+    * the arrays are merged as described at [[mergeDenseChunks]], which
+    * the kernel forms of [[part2DenseAgg]] share.
     *
     * NULLs: nullability is decided from gv's SCHEMA, once, at plan time:
     * the unguarded loop reads primitives directly and would misread a
@@ -1031,14 +894,15 @@ object Q4112 {
     val dom = domain
     val exact = gv.sparkSession.sessionState.conf.ansiEnabled
     val nullable = gv.schema.fields.exists(_.nullable)
+    val ranges = slotRanges(gv.sparkSession, dom)
+    // qualified: an unqualified call would make this local def, and the
+    // task closure that calls it, capture the (unserializable) object
     def slot(g: Long): Int = {
       val gi = g - mg
-      if (gi < 0L || gi >= dom)
-        throw new IllegalStateException(s"dense aggregate saw group $g " +
-          s"outside the stats-proven domain [$mg, ${mg + dom}) — stale statistics?")
+      if (gi < 0L || gi >= dom) throw Q4112.outOfDomain(g, mg, dom)
       gi.toInt
     }
-    val perTask = gv.queryExecution.toRdd.mapPartitions { it =>
+    val chunks = gv.queryExecution.toRdd.mapPartitions { it =>
       val acc = new DenseAcc(dom + 1, nullable)
       val sums = acc.sums
       val cnts = acc.cnts
@@ -1059,69 +923,187 @@ object Q4112 {
           hasV(g) = true
         }
       }
-      Iterator.single(acc)
+      accChunks(acc, ranges)
     }
-    mergeDenseAcc(gv.sparkSession, perTask, dom, exact)
+    mergeDenseChunks(gv.sparkSession, chunks, ranges, exact)
   }
 
-  /** Merge one [[DenseAcc]] per task (`domain` + 1 slots, the last the
-    * NULL group) into the part-2 answer by a reduce-scatter. The slots
-    * split into R = min(session shuffle partitions, ⌈domain / 2^16⌉)
-    * ranges; each task ships one [[DenseChunk]] per non-empty range to
-    * that range's reducer, which adds its chunks slot by slot and emits
-    * one (Σ s div c, #groups) row. A tiny ungrouped Catalyst aggregate
-    * over those R rows gives `ss div cc`. A chunk is a dense slice only
-    * when at least half its slots are occupied (16 bytes a slot, 17 with
-    * NULL tracking), else triples (20-21 bytes a group), so the shuffle
-    * never carries more per group than the 36-byte (g, s, c) UnsafeRow
-    * record that the Catalyst partial/final merge of earlier rounds
-    * shipped — and no side hashes a key. Cross-task sums use
+  /** One task's [[DenseAcc]] as [[DenseChunk]]s keyed by reducer, one per
+    * non-empty range. A chunk is a dense slice only when at least half
+    * its slots are occupied (16 bytes a slot, 17 with NULL tracking),
+    * else triples (20-21 bytes a group), so the shuffle never carries
+    * more per group than the 36-byte (g, s, c) UnsafeRow record that the
+    * Catalyst partial/final merge of earlier rounds shipped.
+    */
+  private def accChunks(acc: DenseAcc, ranges: SlotRanges): Iterator[(Int, DenseChunk)] = {
+    val (sums, cnts, hasV) = (acc.sums, acc.cnts, acc.hasV)
+    Iterator.range(0, ranges.n).flatMap { r =>
+      val lo = r * ranges.width
+      val hi = math.min(ranges.slots, lo + ranges.width)
+      var k = 0
+      var i = lo
+      while (i < hi) { if (cnts(i) != 0L) k += 1; i += 1 }
+      if (k == 0) None
+      else if (2 * k >= hi - lo)
+        Some(r -> DenseChunk(null, sums.slice(lo, hi), cnts.slice(lo, hi),
+          if (hasV == null) null else hasV.slice(lo, hi)))
+      else {
+        val at = new Array[Int](k)
+        k = 0
+        i = lo
+        while (i < hi) { if (cnts(i) != 0L) { at(k) = i - lo; k += 1 }; i += 1 }
+        Some(r -> DenseChunk(at, at.map(j => sums(lo + j)), at.map(j => cnts(lo + j)),
+          if (hasV == null) null else at.map(j => hasV(lo + j))))
+      }
+    }
+  }
+
+  // entries per shipped chunk of combine-cache evictions (~84 KB)
+  private val EvictChunk = 1 << 12
+
+  /** The reference's per-thread combine cache (q4112.c:232-233) in front
+    * of the range-partitioned merge: a direct-mapped cache of 2^13
+    * (slot, Σ v, count) entries. Heavy-hitter groups accumulate in it
+    * without leaving the task; a row whose entry holds another slot
+    * evicts that entry into the buffer of the reducer range owning it,
+    * and each full buffer of [[EvictChunk]] entries leaves as one
+    * [[DenseChunk]] of triples. Memory is the cache plus one buffer per
+    * range: constant in the domain and the row count.
+    *
+    * Size: 2^13 entries is the reference's measured best (q4112.c:232-233,
+    * log_entries = 13; README-2.txt:10-12 measured 2^10/2^13/2^15) AND
+    * ours: the round-11 replay of that ablation at 1e9 on the three pole
+    * shapes (SCALING.md round 11, measured in front of the JVM-shared
+    * accumulation table this cache used to feed) reproduces the C's
+    * curve — 2^10 thrashes the 1e4-hot-group shape (5.20 s vs 2.83 s),
+    * 2^15 pays its flush scan everywhere, 2^13 wins the sum.
+    *
+    * Overflow: with `exact` (ANSI) an entry adds with `Math.addExact`,
+    * and the reducer adds the evicted partial sums the same way.
+    */
+  private final class CombineCache(ranges: SlotRanges, trackV: Boolean, exact: Boolean) {
+    private val bits = 13
+    private val keys = new Array[Int](1 << bits) // slot + 1; 0 = empty
+    private val sums = new Array[Long](1 << bits)
+    private val cnts = new Array[Long](1 << bits)
+    private val hasV = new Array[Boolean](1 << bits)
+    // per reducer range: the buffer being filled and its fill count
+    private val bufs = new Array[DenseChunk](ranges.n)
+    private val fill = new Array[Int](ranges.n)
+    private val full = scala.collection.mutable.ArrayBuffer[(Int, DenseChunk)]()
+
+    /** Count one row of slot `g`, adding `v` when `withV` (the row's
+      * product is not NULL).
+      */
+    def add(g: Int, v: Long, withV: Boolean): Unit = {
+      val h = (g * -1640531527) >>> (32 - bits)
+      if (keys(h) != g + 1) {
+        if (keys(h) != 0) evict(h)
+        keys(h) = g + 1; sums(h) = 0L; cnts(h) = 0L; hasV(h) = false
+      }
+      cnts(h) += 1L
+      if (withV) {
+        sums(h) = if (exact) Math.addExact(sums(h), v) else sums(h) + v
+        hasV(h) = true
+      }
+    }
+
+    private def evict(h: Int): Unit = {
+      val g = keys(h) - 1
+      val r = g / ranges.width
+      if (bufs(r) == null) bufs(r) = DenseChunk(new Array[Int](EvictChunk),
+        new Array[Long](EvictChunk), new Array[Long](EvictChunk),
+        if (trackV) new Array[Boolean](EvictChunk) else null)
+      val b = bufs(r)
+      val j = fill(r)
+      b.slots(j) = g - r * ranges.width
+      b.sums(j) = sums(h)
+      b.cnts(j) = cnts(h)
+      if (trackV) b.hasV(j) = hasV(h)
+      if (j + 1 < EvictChunk) fill(r) = j + 1
+      else { full += r -> b; bufs(r) = null; fill(r) = 0 }
+    }
+
+    /** The chunks filled since the last call. */
+    def shipped(): Iterator[(Int, DenseChunk)] =
+      if (full.isEmpty) Iterator.empty
+      else { val out = full.toList; full.clear(); out.iterator }
+
+    /** Evict every entry, then ship every buffer, full or not. */
+    def flush(): Iterator[(Int, DenseChunk)] = {
+      var h = 0
+      while (h < keys.length) { if (keys(h) != 0) evict(h); keys(h) = 0; h += 1 }
+      for (r <- bufs.indices if fill(r) > 0) {
+        val (b, k) = (bufs(r), fill(r))
+        full += r -> DenseChunk(b.slots.take(k), b.sums.take(k), b.cnts.take(k),
+          if (trackV) b.hasV.take(k) else null)
+      }
+      shipped()
+    }
+  }
+
+  /** [[probeAccumulate]]'s probe for a domain too wide for per-task
+    * arrays: the same reads, the same row drops and the same
+    * stale-statistics check, with each matched row folded into `cache`
+    * instead of an array slot. A loop of its own, so the array kernel's
+    * loop gains no work.
+    */
+  private def probeCombine(
+      b: ColumnarBatch, isInt: Array[Boolean], arr: Array[Long], mn: Long,
+      mg: Long, nullSlot: Int, exact: Boolean, cache: CombineCache): Unit = {
+    val n = b.numRows
+    val (kc, qc, gc) = (b.column(0), b.column(1), b.column(2))
+    val (kInt, qInt, gInt) = (isInt(0), isInt(1), isInt(2))
+    val (kNulls, qNulls, gNulls) = (kc.hasNull, qc.hasNull, gc.hasNull)
+    val len = arr.length
+    var i = 0
+    while (i < n) {
+      if (!(kNulls && kc.isNullAt(i))) {
+        val k = readLong(kc, kInt, i) - mn
+        if (k >= 0L && k < len) {
+          val g =
+            if (gNulls && gc.isNullAt(i)) nullSlot
+            else {
+              val gi = readLong(gc, gInt, i) - mg
+              if (gi < 0L || gi >= nullSlot) throw outOfDomain(gi + mg, mg, nullSlot)
+              gi.toInt
+            }
+          if (qNulls && qc.isNullAt(i)) cache.add(g, 0L, withV = false)
+          else {
+            val p = arr(k.toInt)
+            val q = readLong(qc, qInt, i)
+            cache.add(g, if (exact) Math.multiplyExact(p, q) else p * q, withV = true)
+          }
+        }
+      }
+      i += 1
+    }
+  }
+
+  /** Merge per-task [[DenseChunk]]s keyed by reducer range into the
+    * part-2 answer by a reduce-scatter: reducer r owns slots
+    * [r · width, (r + 1) · width) of `ranges` (the last slot is the NULL
+    * group), adds its chunks slot by slot into arrays of at most
+    * [[DenseAggMaxDomain]] slots, and emits one (Σ s div c, #groups)
+    * row. A tiny ungrouped Catalyst aggregate over those R rows gives
+    * `ss div cc`. No side hashes a key. Cross-task sums use
     * `Math.addExact` when `exact` (the session's ANSI flag), so they
-    * raise on overflow exactly where that plan's ANSI `sum(s)` did.
+    * raise on overflow exactly where the hash plan's ANSI `sum(s)` does.
     *
     * Retries: the chunks go through an ordinary stateless shuffle, so a
     * retried map task recomputes its chunks and replaces the failed
-    * attempt's output — it can never double count, unlike the
-    * JVM-shared table of [[sharedDenseGroupedAvg]], which must refuse a
-    * retry.
+    * attempt's output — it can never double count.
     */
-  private def mergeDenseAcc(
+  private def mergeDenseChunks(
       spark: org.apache.spark.sql.SparkSession,
-      perTask: RDD[DenseAcc],
-      domain: Int,
+      chunks: RDD[(Int, DenseChunk)],
+      ranges: SlotRanges,
       exact: Boolean): DataFrame = {
-    val nSlots = domain + 1
-    val nRed = math.max(1, math.min(spark.sessionState.conf.numShufflePartitions,
-      (domain + DenseAggSlotsPerReducer - 1) / DenseAggSlotsPerReducer))
-    val width = (nSlots + nRed - 1) / nRed
-    // a task's chunks, keyed by reducer
-    val chunks = (acc: DenseAcc) => {
-      val (sums, cnts, hasV) = (acc.sums, acc.cnts, acc.hasV)
-      Iterator.range(0, nRed).flatMap { r =>
-        val lo = r * width
-        val hi = math.min(nSlots, lo + width)
-        var k = 0
-        var i = lo
-        while (i < hi) { if (cnts(i) != 0L) k += 1; i += 1 }
-        if (k == 0) None
-        else if (2 * k >= hi - lo)
-          Some(r -> DenseChunk(null, sums.slice(lo, hi), cnts.slice(lo, hi),
-            if (hasV == null) null else hasV.slice(lo, hi)))
-        else {
-          val at = new Array[Int](k)
-          k = 0
-          i = lo
-          while (i < hi) { if (cnts(i) != 0L) { at(k) = i - lo; k += 1 }; i += 1 }
-          Some(r -> DenseChunk(at, at.map(j => sums(lo + j)), at.map(j => cnts(lo + j)),
-            if (hasV == null) null else at.map(j => hasV(lo + j))))
-        }
-      }
-    }
     val add = (a: Long, b: Long) => if (exact) Math.addExact(a, b) else a + b
-    val reduced = perTask.flatMap(chunks)
-      .partitionBy(new org.apache.spark.HashPartitioner(nRed))
+    val reduced = chunks
+      .partitionBy(new org.apache.spark.HashPartitioner(ranges.n))
       .mapPartitionsWithIndex { (r, it) =>
-        val n = math.max(0, math.min(nSlots, (r + 1) * width) - r * width)
+        val n = math.max(0, math.min(ranges.slots, (r + 1) * ranges.width) - r * ranges.width)
         val sums = new Array[Long](n)
         val cnts = new Array[Long](n)
         val hasV = new Array[Boolean](n)
@@ -1158,390 +1140,22 @@ object Q4112 {
       .select(expr("ss div cc").as("avg_avg_value"))
   }
 
-  /** Domain bound for [[part2SharedDense]]: 2^27 slots = 2 GB of
-    * accumulator arrays shared by ALL tasks in the JVM — covers the
-    * reference's 1e8-singleton-group worst case (q4112.csv cfg4/11/18)
-    * where the per-task bound [[DenseAggMaxDomain]] cannot (32
-    * concurrent per-task copies would need 64 GB).
-    */
-  val SharedDenseMaxDomain: Long = 1L << 27
-
-  /** JVM-shared accumulation state for [[sharedDenseGroupedAvg]],
-    * keyed by a per-EXECUTION id the driver mints before launching the
-    * accumulation job and removes in a `finally` after it — so a failed
-    * or poisoned job can never leak the 2 GB arrays, and concurrent
-    * executions never share a table. (The r10 form keyed by
-    * (stageId, stageAttempt) and relied on a last-task-out countdown;
-    * partial execution — `show()`/`limit`/`take` run SUBSETS of the
-    * partitions across several jobs — left the countdown unreachable,
-    * silently returning zero rows and leaking one table per job,
-    * ADVICE r10 item 1.)
-    */
-  private[graft] object SharedDense {
-    final class State(dom: Int) {
-      val sums = new java.util.concurrent.atomic.AtomicLongArray(dom)
-      val cnts = new java.util.concurrent.atomic.AtomicLongArray(dom)
-      @volatile var poisoned = false
-    }
-    val tables =
-      new java.util.concurrent.ConcurrentHashMap[String, State]
-  }
-
-  /** Live shared-dense table count — test hook for the no-leak contract
-    * (every execution removes its table in a `finally`, success or not).
-    */
-  private[graft] def sharedDenseLiveTables: Int = SharedDense.tables.size()
-
-  /** Part 2 as the reference's OWN t16 algorithm — one shared sized
-    * accumulation table, all threads CAS into it, one final scan
-    * (q4112.c:225-297 accumulates into a global array sized to the
-    * group domain; README-2.txt:32-43 on why that wins the singleton
-    * shapes). This is the plan the 1e8-singleton-group configs
-    * (q4112.csv cfg4/11/18) need and that no exchange-based plan can
-    * match WITHOUT a stored layout: partial aggregation collapses
-    * nothing when groups are ~singleton per task, so every
-    * shuffle-based form ships ~1e9 rows through local disk (measured
-    * 6.1× the C, 9.6 GB shuffle + 14 GB spill per rep), while the
-    * shared table collapses the global ~10 rows/group to one slot
-    * update each and ships NOTHING.
-    *
-    * SCOPE — single-JVM by design, like the reference it mirrors: the
-    * C's t16 number is a shared-memory single-node algorithm, and this
-    * operator is its Spark-local expression ([[SparkSession]] master
-    * local[*], asserted). On a multi-executor cluster the same shape
-    * needs either per-executor tables + a merge exchange (= Spark's own
-    * partial aggregate, which the singleton profile defeats) or the
-    * stored bucketed layout, which IS the shipped cluster answer
-    * (0.98× the C, registry-routed — SCALING.md round 9). The planner
-    * therefore only chooses this form when `sparkContext.isLocal`.
-    *
-    * SAFETY — a shared mutable table must not double-count: local mode
-    * fails the job on the FIRST task failure (maxFailures=1, no
-    * speculation), so no partial-accumulation retry can land; defense
-    * in depth, any task observing `attemptNumber > 0` poisons the
-    * state and throws, and a failure listener drops the table so a
-    * failed job never leaks the 2 GB arrays. Exactness: the same
-    * arithmetic and integer avg-of-avgs as [[part2]] (`s div c` per
-    * slot, `ss div cc` over slots): sums raise on overflow when the
-    * session runs ANSI and wrap when it does not. Oracle-asserted per
-    * rep by the Matrix harness and by the `q4112_part2_shared_dense`
-    * gate.
-    *
-    * The group domain comes from the cached min/max statistics
-    * ([[groupDomain]]); one wider than [[SharedDenseMaxDomain]] fails a
-    * stated `require`. An actual NULL group or v fails with a stated
-    * refusal: [[part2Adaptive]] routes here only after proving the data
-    * NULL-free from cached null counts.
-    */
-  def part2SharedDense(
-      items: DataFrame,
-      orders: DataFrame,
-      itemKey: String,
-      orderKey: String,
-      priceCol: String,
-      quantityCol: String,
-      groupCol: String): DataFrame = {
-    val (minGroup, domain) = groupDomain(orders, groupCol, SharedDenseMaxDomain)
-    sharedDenseGroupedAvg(
-      groupedValues(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
-        .select(col(groupCol).cast("long").as(groupCol), col("v").cast("long").as("v")),
-      minGroup, domain)
-  }
-
-  /** The shared-table stage of [[part2SharedDense]] over a prepared
-    * (group, v) projection. Requires local mode (single JVM) and a
-    * group domain within [[SharedDenseMaxDomain]].
-    *
-    * EAGER by design (ADVICE r10 item 1): the accumulation runs as ONE
-    * `runJob` over ALL partitions at call time, and the returned
-    * DataFrame is the already-materialized single result row. Lazy
-    * forms of a shared-table countdown break under partial execution —
-    * `show()`/`limit`/`take` run partition SUBSETS across several
-    * jobs, so a per-job "last task out" countdown never fires, the
-    * query silently returns zero rows, and every job leaks a 2 GB
-    * table. Running the one job ourselves guarantees every partition
-    * accumulates exactly once, the final scan happens on the driver
-    * (same JVM — local mode is required), and the `finally` removes
-    * the shared state on EVERY exit path, success or failure.
-    *
-    * NULL handling: a NULL group has no slot and a NULL v would need
-    * the hash plans' sum-skips-NULL semantics, so when the projection's
-    * schema admits nulls the loop checks per row and refuses an actual
-    * NULL loudly rather than miscounting — [[part2Adaptive]] only
-    * routes here after proving from DATA statistics (null counts) that
-    * the group, quantity, and price columns carry no nulls. A group
-    * outside the stats-proven [minGroup, minGroup+domain) window fails
-    * with an explicit "stale statistics" error instead of corrupting
-    * memory.
-    *
-    * Overflow: with ANSI on, the combine cache and the final scan add
-    * with `Math.addExact`, and a flush into the shared table tests the
-    * sign of its one `getAndAdd`; an overflow poisons the table and
-    * raises, like the hash plan's `sum`. With ANSI off every add wraps,
-    * like the legacy plan.
-    *
-    * Combine-cache size: the per-task direct-mapped cache has 2^13
-    * entries — the reference's measured best (q4112.c:232-233,
-    * README-2.txt:10-12 measured 2^10/2^13/2^15) AND ours: the
-    * round-11 replay of that ablation at 1e9 on the three pole shapes
-    * (SCALING.md round 11) reproduces the C's curve — 2^10 thrashes
-    * the 1e4-hot-group shape (5.20 s vs 2.83 s), 2^15 pays its flush
-    * scan everywhere, 2^13 wins the sum.
-    */
-  private[graft] def sharedDenseGroupedAvg(
-      gv: DataFrame, minGroup: Long, domain: Int): DataFrame = {
-    require(gv.sparkSession.sparkContext.isLocal,
-      "shared dense aggregation is the single-JVM (reference t16) form; " +
-        "on a cluster use the bucketed layout (Tables.writeBucketed)")
-    require(domain > 0 && domain <= SharedDenseMaxDomain,
-      s"shared dense domain out of range: $domain")
-    val spark = gv.sparkSession
-    import spark.implicits._
-    val mg = minGroup
-    val dom = domain
-    val exact = spark.sessionState.conf.ansiEnabled
-    // Schema nullability is NOT trusted either way: Catalyst marks any
-    // %-derived column nullable (division-by-zero rule) even when no
-    // null can occur, and the dense-lookup join marks its price output
-    // nullable despite its isNotNull filter. When the schema admits
-    // nulls, the accumulation loop checks per row and refuses an ACTUAL
-    // null LOUDLY.
-    val nullGuard = gv.schema.fields.exists(_.nullable)
-    val cacheBits = 13
-    val rdd0 = gv.queryExecution.toRdd
-    if (rdd0.getNumPartitions == 0)
-      // a provably-empty relation plans zero partitions; the ungrouped
-      // aggregate still emits one NULL row
-      return Seq(Option.empty[Long]).toDF("avg_avg_value")
-    val key = java.util.UUID.randomUUID().toString
-    SharedDense.tables.put(key, new SharedDense.State(dom))
-    val res: Option[Long] =
-      try {
-        spark.sparkContext.runJob(rdd0,
-          (ctx: org.apache.spark.TaskContext,
-           it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-          // the closure must carry only the KEY — capturing the state
-          // itself would serialize the 2 GB arrays into the task binary
-          val st = SharedDense.tables.get(key)
-          if (st == null || ctx.attemptNumber() > 0) {
-            // a retried task may have partially accumulated in its first
-            // attempt; a shared table cannot un-count, so poison and fail
-            // (local mode fails the job on first task failure anyway —
-            // this is defense in depth)
-            if (st != null) st.poisoned = true
-            throw new IllegalStateException(
-              "shared dense aggregate saw a task retry; rerun with a shuffle plan")
-          }
-          val sums = st.sums
-          val cnts = st.cnts
-          // one atomic add per flushed slot; under ANSI its sign test
-          // catches the overflow the add just made
-          def flush(i: Int, s: Long, c: Long): Unit = {
-            val prev = sums.getAndAdd(i, s)
-            val r = prev + s
-            if (exact && ((prev ^ r) & (s ^ r)) < 0L) {
-              st.poisoned = true
-              throw new ArithmeticException("long overflow in the shared dense aggregate's sum")
-            }
-            cnts.addAndGet(i, c)
-          }
-          // per-task combine cache in front of the shared table — the
-          // reference's own design (q4112.c:232-233, log_entries = 13, its
-          // measured-best size): heavy-hitter groups accumulate in a
-          // direct-mapped L2-resident cache instead of CASing the same
-          // shared cache line from every thread (hhp=1.0 shapes would
-          // otherwise serialize on ~100 hot slots), and cold keys
-          // evict-flush through. Singleton-flood shapes pay one
-          // L1-resident hash+branch per row over the bare CAS loop.
-          val cacheMask = (1 << cacheBits) - 1
-          val ck = new Array[Int](1 << cacheBits) // slot + 1; 0 = empty
-          val cs = new Array[Long](1 << cacheBits)
-          val cc = new Array[Long](1 << cacheBits)
-          def accumulate(g: Int, v: Long): Unit = {
-            val h = ((g * -1640531527) >>> (32 - cacheBits)) & cacheMask
-            if (ck(h) == g + 1) {
-              cs(h) = if (exact) Math.addExact(cs(h), v) else cs(h) + v
-              cc(h) += 1L
-            } else {
-              val old = ck(h)
-              if (old != 0) flush(old - 1, cs(h), cc(h))
-              ck(h) = g + 1; cs(h) = v; cc(h) = 1L
-            }
-          }
-          // bounds check per row (round-10 verdict "what's wrong"): a
-          // group outside the proven window means the routing statistics
-          // were stale — fail with a diagnosis, never index out of (or
-          // worse, INTO the wrong slot of) the shared arrays
-          def slot(g: Long): Int = {
-            val gi = g - mg
-            if (gi < 0L || gi >= dom)
-              throw new IllegalStateException(
-                s"shared dense aggregate saw group $g outside the " +
-                  s"stats-proven domain [$mg, ${mg + dom}) — stale " +
-                  "statistics? rerun with a shuffle plan")
-            gi.toInt
-          }
-          if (nullGuard) {
-            while (it.hasNext) {
-              val r = it.next()
-              if (r.isNullAt(0) || r.isNullAt(1))
-                throw new IllegalStateException(
-                  "shared dense aggregate received a NULL group or v; use the hash plan")
-              accumulate(slot(r.getLong(0)), r.getLong(1))
-            }
-          } else {
-            while (it.hasNext) {
-              val r = it.next()
-              accumulate(slot(r.getLong(0)), r.getLong(1))
-            }
-          }
-          // flush the local cache into the shared table
-          var ci = 0
-          while (ci <= cacheMask) {
-            if (ck(ci) != 0) flush(ck(ci) - 1, cs(ci), cc(ci))
-            ci += 1
-          }
-        })
-        val st = SharedDense.tables.get(key)
-        if (st == null || st.poisoned)
-          throw new IllegalStateException("shared dense aggregate poisoned")
-        // the final scan, single-threaded on the driver (same JVM):
-        // per-slot integer avg, then the integer avg of those — the
-        // same `s div c` / `ss div cc` truncation as the SQL plans
-        // (all-Java long division; non-negative by the packing bounds'
-        // contract, and exact for negatives too since Java and Spark's
-        // IntegralDivide both truncate toward zero)
-        var ss = 0L
-        var cc = 0L
-        var i = 0
-        while (i < dom) {
-          val c = st.cnts.get(i)
-          if (c != 0L) {
-            val avg = st.sums.get(i) / c
-            ss = if (exact) Math.addExact(ss, avg) else ss + avg
-            cc += 1L
-          }
-          i += 1
-        }
-        if (cc == 0L) None else Some(ss / cc)
-      } finally SharedDense.tables.remove(key)
-    Seq(res).toDF("avg_avg_value")
-  }
-
-  /** Pure bounds check for the packed exchange, fed with column min/max
-    * statistics: true only when EVERY row they can describe packs into
-    * group·2^34 + v without a field borrowing into the other's bits.
-    * SOUND for any row set realizing the stats (maxPrice·maxQty bounds
-    * every per-row v; `maxQty <= (2^34−1) / maxPrice` in integer
-    * division is equivalent to `maxPrice·maxQty <= 2^34−1` without the
-    * multiply overflowing), and EXACT for a singleton — the property
-    * spec (PackedBoundsSpec) pins both directions at the boundaries.
-    * Negative minima are rejected outright: a single negative price or
-    * quantity makes v < 0 and silently corrupts the packed aggregate.
-    */
-  def packBoundsOk(
-      minGroup: Long, maxGroup: Long,
-      minPrice: Long, maxPrice: Long,
-      minQty: Long, maxQty: Long): Boolean =
-    minGroup >= 0 && maxGroup < (1L << 29) &&
-      minQty >= 0 && minPrice >= 0 &&
-      maxQty <= ((1L << 34) - 1) / math.max(1L, maxPrice)
-
-  /** Reducer count for the bypass plan: ~500k groups per reducer map
-    * (a few tens of MB — L3-resident), floored at the session shuffle
-    * parallelism, capped to keep task-launch overhead sane.
-    */
-  def bypassPartitions(estGroups: Long, sessionShuffle: Int): Int =
-    math.min(4096L, math.max(sessionShuffle.toLong, estGroups / 500000L)).toInt
-
-  /** The adaptive planner's sample: (rows sampled, distinct keys,
-    * shared-key mass) of `groupCol` over the first rows of up to 64
-    * partitions strided across `orders`. Read as `InternalRow`s (no
-    * external-row conversion) and counted by sorting the primitive keys.
-    *
-    * A PARTITION SUBSET, not a Bernoulli sample: sample(frac) visits
-    * every partition, i.e. a full extra scan at 100 TB. Striding (not
-    * partitions 0..k) guards against layouts where the group key
-    * correlates with partition order. A full-scan FM estimate was
-    * measured at 3.5-16 s per run at 1e9 rows — more than many queries
-    * it was steering; this sample reads ~2M rows total and decides
-    * identically on every measured shape. FM remains the standalone A5
-    * surface (distinct_fm, Aggregates.distinctFm).
-    */
-  private[graft] def sampleSharedMass(orders: DataFrame, groupCol: String): (Long, Long, Double) = {
-    // cast: int-stored group columns must still read as longs below
-    val slim = orders.select(col(groupCol).cast("long")).queryExecution.toRdd
-    // a provably-empty relation plans zero partitions — there is
-    // nothing to sample and runJob on partition 0 would throw
-    if (slim.getNumPartitions == 0) return (0L, 0L, 1.0)
-    val nParts = slim.getNumPartitions
-    val targetRows = 2000000L
-    // ALWAYS spread the sample across many partitions (capped at 64,
-    // strided across the range), never concentrate it in few: reading
-    // the target rows from one big partition samples only that
-    // partition's PREFIX, and a structured prefix poisons the decision —
-    // measured at 1e9: the q4112 generator opens with a
-    // one-row-per-group enumeration run, so a partition-0-only sample
-    // read 2M singletons, called sharedMass = 0.0 on an hhp=1.0 config
-    // whose true task-window shared mass is ~0.9, and picked the packed
-    // bypass where partial/final is 3-6× faster. With the sample strided
-    // over ≥32 partitions the prefix contributes ≤ a few percent.
-    val kParts = math.min(nParts, 64)
-    val perPart = math.max(1L, targetRows / kParts).toInt
-    val stride = math.max(1, nParts / kParts)
-    val partIds = (0 until nParts by stride).take(kParts)
-    // per partition: the non-NULL keys and the NULL-key row count
-    val chunks = orders.sparkSession.sparkContext.runJob(slim, (it: Iterator[InternalRow]) => {
-      val b = new scala.collection.mutable.ArrayBuilder.ofLong
-      var nulls = 0L
-      var i = 0
-      while (i < perPart && it.hasNext) {
-        val r = it.next()
-        if (r.isNullAt(0)) nulls += 1L else b += r.getLong(0)
-        i += 1
-      }
-      (b.result(), nulls)
-    }, partIds)
-    sharedKeyMass(Array.concat(chunks.map(_._1).toSeq: _*), chunks.map(_._2).sum)
-  }
-
-  /** (n, distinct keys, share of the n keys that occur more than once)
-    * of a key sample, counted by sorting `keys` in place; `nulls` more
-    * rows carry the NULL key, which counts as one key. The driver sorts
-    * between jobs, so on all cores (2M keys, 4 cores: ~70 vs ~230 ms).
-    */
-  private[graft] def sharedKeyMass(keys: Array[Long], nulls: Long = 0L): (Long, Long, Double) = {
-    java.util.Arrays.parallelSort(keys)
-    var ndv = if (nulls > 0L) 1L else 0L
-    var shared = if (nulls > 1L) nulls else 0L
-    var i = 0
-    while (i < keys.length) {
-      var j = i + 1
-      while (j < keys.length && keys(j) == keys(i)) j += 1
-      ndv += 1L
-      if (j - i > 1) shared += j - i
-      i = j
-    }
-    val n = keys.length + nulls
-    (n, ndv, if (n == 0L) 1.0 else shared.toDouble / n)
-  }
-
-  /** Part 2 with the physical aggregation plan chosen from a MEASURED
-    * statistic — the same decision the reference drives with its A5
-    * sketch (estimate the group profile, then shape the aggregation,
-    * q4112.c:336-377; thread-local pre-agg only pays when groups cache,
-    * README-2.txt:32-43). The statistic here is SHARED-KEY MASS from a
-    * ~2M-row deterministic sample: the fraction of rows whose group key
-    * recurs within the sample. An ndv estimate alone cannot tell an
-    * all-singleton table (partial agg collapses nothing, spills, and the
-    * exchange ships ~every row anyway) from a skewed one with the same
-    * ndv (heavy groups collapse map-side to one combiner entry per
-    * task) — measured at 1e9 rows, the bypass wins the first shape
-    * (96 s vs 307 s/OOM) and loses the second (69 s vs 32 s), and
-    * shared mass separates them where ndv cannot. Low shared mass means
-    * partial aggregation cannot collapse most of the input → skip
-    * straight to the (packed) raw exchange; anything else keeps
-    * Catalyst's partial/final split.
+  /** Part 2 with the physical aggregation plan chosen from the stored
+    * layout and one statistic, the group column's cached min/max — the
+    * reference sizes its one aggregation table from an estimate of the
+    * group domain the same way (q4112.c:336-377), and Azure Synapse's
+    * Spark optimizer (VLDB 2021) likewise takes the aggregation strategy
+    * from statistics rather than from a menu of hand-tuned forms. In
+    * order (`lastChosenPlan` names the outcome):
+    *  - `joined_bucketed`, `bucketed`/`bucketed_routed`: an exchange-free
+    *    stored layout;
+    *  - `partial_dense`: a group domain under 2^22 slots
+    *    ([[DenseAggMaxDomain]]), per-task arrays in [[part2DenseAgg]];
+    *  - `range_dense`: a domain under 2^27 slots ([[RangeDenseMaxDomain]])
+    *    with a dense build side, the combine cache in [[part2DenseAgg]];
+    *  - `partial`: anything else (a wider or unbounded domain, a gappy
+    *    build side past 2^22 slots, a group column that is not byte,
+    *    short, int or long), Catalyst's hash partial/final aggregate.
     */
   def part2Adaptive(
       items: DataFrame,
@@ -1600,118 +1214,34 @@ object Q4112 {
         part2(items, probeOrders, itemKey, orderKey, priceCol, quantityCol, groupCol,
           BroadcastHash)
     }
-    // Row count: from relation statistics when they exist (a materialized
-    // cached relation counts its rows; a catalog table has ANALYZE
-    // stats) — at 100 TB a count() is a full scan, and the planner must
-    // not pre-pay a scan per query for a number the catalog already
-    // knows. The count() fallback only triggers for bare un-analyzed
-    // sources.
-    val rows = relationRows(orders)
-    // The decision statistic is SHARED-KEY MASS (scaladoc above) from a
-    // ~2M-row deterministic sample ([[sampleSharedMass]]), cached per
-    // (relation, column) — a table's group profile is a property of the
-    // table version, so repeated queries over an unchanged relation skip
-    // the sample job entirely (it was measured at 1-3 s INSIDE every
-    // timed query)
-    val (tot, sampleNdv, sharedMass) = sampleCache.computeIfAbsent(
-      (orders.queryExecution.optimizedPlan.canonicalized, groupCol),
-      _ => sampleSharedMass(orders, groupCol))
-    // sharedMass < 0.4 already implies partial aggregation would leave
-    // ≥60% of the rows uncollapsed — it subsumes any ndv-ratio test
-    val bypass = tot > 0L && sharedMass < 0.4
-    // The facts below are proven ONCE, from the relation caches, and the
-    // chosen form reads the same cache entries (same columns) again, so
-    // building it adds no job. Null-freedom is proven against the DATA
-    // (cached null counts / catalog stats), never the schema flag, which
-    // Catalyst sets pessimistically for any parquet or %-derived column
-    // (ADVICE r10 item 2: the value inputs are checked, not only the
-    // group; round-10 verdict item 1: raw nullable-schema parquet facts
-    // with clean data pass).
-    lazy val nullFree = valuesNullFree(items, orders, priceCol, quantityCol, groupCol)
-    // the group domain's width max − min from cached min/max; None for
-    // an empty or all-NULL column (no stats: fall back, don't NPE —
-    // advice r9 item 3) and for a domain wider than 2^63, whose width
+    // the group domain's width max − min, from the cached min/max the
+    // dense form reads again (same columns, so no job). None for a group
+    // column the dense forms cannot index by (asked before the
+    // statistics, which only integral columns have as longs), for an
+    // empty or all-NULL column (no stats: fall back, don't NPE — advice
+    // r9 item 3) and for a domain wider than 2^63, whose width
     // subtraction wraps negative and would otherwise pass every cap
-    // with a garbage array size (advice r9 item 1)
-    lazy val width = minMaxLongsOpt(orders, Seq(groupCol)).collect {
-      case Seq((mn, mx)) if mx - mn >= 0L => mx - mn
-    }
-    // Partial-aggregation family with a domain that fits the per-task
-    // arrays: the dense-ARRAY partial aggregate replaces the per-task
-    // hash map — the r9 1e9 profile put the cold partial plan's cost in
-    // one uniform CPU-bound stage (~430 ns/row, zero spill) dominated by
-    // the ~1e6-entry aggregation-map probe; array indexing removes it,
-    // and the arrays merge by slot range instead of through a final hash
-    // aggregate, with the same arithmetic.
-    val denseAgg = !bypass && width.exists(_ < DenseAggMaxDomain)
-    // LOW shared mass means no exchange-based plan can win: partial
-    // aggregation collapses ~nothing, so every shuffle form ships ~every
-    // row through local disk. In a single JVM the reference's own answer
-    // applies — ONE shared sized table all threads CAS into
-    // (q4112.c:225-297), zero exchange — whenever the group domain
-    // provably fits 2^27 slots and the data is NULL-free (a NULL group
-    // has no slot). The same table takes the band ABOVE the per-task cap
-    // in the partial family: a 2^22..2^27 domain with HIGH shared mass
-    // still floods the partial hash maps with its singleton tail
-    // (cfg5-family at 1e9: 50 GB spill, ~10× the C), and the shared
-    // table + the per-task combine cache (the C's exact design) handles
-    // head and tail both. Cluster deployments route to the bucketed
-    // layout instead (part2SharedDense scaladoc).
-    val sharedDense = !denseAgg && sharedDenseLocalOk(items) &&
-      width.exists(_ < SharedDenseMaxDomain) && nullFree
-    // packing bound, measured only when it matters: group·2^34 + v must
-    // fit a signed long with NO negative and no NULL field — min checks
-    // included because a single negative price or quantity makes v
-    // borrow into the group bits and silently corrupt the aggregate
-    // (part2BypassPacked skips its per-row guard on exactly these facts).
-    // Missing stats (empty/all-NULL relation) ⇒ not provably packable —
-    // the unpacked bypass is always safe.
-    val packable = bypass &&
-      packBoundsProven(items, orders, priceCol, quantityCol, groupCol) && nullFree
-    System.err.println(f"[part2-adaptive] rows=$rows sampled=$tot " +
-      f"sampleNdv=$sampleNdv sharedMass=$sharedMass%.3f bypass=$bypass packable=$packable " +
-      f"sharedDense=$sharedDense " +
-      f"est=${(System.nanoTime() - t0) / 1e9}%.3f s")
-    // the missed-layout hint (round-4 verdict item 7): every exchange-
-    // based plan below ships rows through a shuffle that the bucketed
-    // layout would elide — say so AT PLAN TIME, strongest where the
-    // exchange is the scale-killer (low shared mass: partial agg
-    // collapses ~nothing). The shared-dense form is already
-    // exchange-free — no layout to recommend.
-    if (sharedDense) advise("")
-    else advise(f"this aggregate takes a ${if (bypass) "raw-row" else "partial/final"} " +
-      f"exchange on '$groupCol' (sampled sharedMass=$sharedMass%.2f); storing the " +
-      f"probe table bucketed on '$groupCol' (Tables.writeBucketed) would make it " +
-      "exchange-free")
-    if (sharedDense) {
-      lastChosenPlan = "shared_dense"
-      part2SharedDense(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
-    } else if (bypass) {
-      // linear extrapolation DELIBERATELY overestimates ndv on
-      // singleton-heavy samples (every sampled-once group scales by
-      // rows/tot; a Chao1-style correction would estimate ~6× lower on
-      // the 1e8-group shapes) — the estimate only sizes the reducer
-      // count, where erring toward MORE, smaller aggregation maps is
-      // the safe direction (bounded ~500k-entry maps, no spill), at the
-      // cost of more, cheaper tasks
-      val estGroups = (sampleNdv.toDouble * rows / math.max(1L, tot)).toLong
-      val parts = bypassPartitions(estGroups,
-        items.sparkSession.sessionState.conf.numShufflePartitions)
-      if (packable) {
-        lastChosenPlan = "packed"
-        part2BypassPacked(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol, parts)
-      } else {
-        lastChosenPlan = "bypass"
-        part2Bypass(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol, parts)
+    // (advice r9 item 1)
+    val width =
+      if (!integralColumn(orders, groupCol)) None
+      else minMaxLongsOpt(orders, Seq(groupCol)).collect {
+        case Seq((mn, mx)) if mx - mn >= 0L => mx - mn
       }
-    } else if (denseAgg) {
-      lastChosenPlan = "partial_dense"
+    lastChosenPlan =
+      if (width.exists(_ < DenseAggMaxDomain)) "partial_dense"
+      else if (useDense && width.exists(_ < RangeDenseMaxDomain)) "range_dense"
+      else "partial"
+    System.err.println(f"[part2-adaptive] groupDomain=${width.fold("none")(w => s"${w + 1}")} " +
+      f"denseBuild=$useDense -> $lastChosenPlan est=${(System.nanoTime() - t0) / 1e9}%.3f s")
+    // the missed-layout hint (round-4 verdict item 7): every plan below
+    // ships its partial aggregates through an exchange on the group key
+    // that the bucketed layout would elide — say so AT PLAN TIME
+    advise(f"this aggregate takes an exchange on '$groupCol'; storing the probe table " +
+      f"bucketed on '$groupCol' (Tables.writeBucketed) would make it exchange-free")
+    if (lastChosenPlan != "partial")
       part2DenseAgg(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
-    } else {
-      lastChosenPlan = "partial"
-      if (useDense) part2Dense(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
-      else part2(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol, BroadcastHash)
-    }
+    else if (useDense) part2Dense(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
+    else part2(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol, BroadcastHash)
   }
 
   /** Part 1 with the join plan chosen from the table LAYOUT — the same

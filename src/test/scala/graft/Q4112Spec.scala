@@ -108,15 +108,9 @@ class Q4112Spec extends SparkSpec {
     // a non-contiguous key domain: every form that works out its front
     // half from the relation takes the hash join instead of the probe
     val gappy = items.where(col("id") % 7 =!= 0)
-    def raises(msg: String)(df: => DataFrame): Unit = {
-      val e = intercept[Exception](result(df))
-      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .exists(t => String.valueOf(t.getMessage).contains(msg)), e)
-    }
     // every part-2 form against the broadcast-hash plan, over the dense
-    // and the gappy build side; `nulls`: the joined rows carry a NULL
-    // group or v, which the packed and shared-table forms refuse
-    def checkPart2(what: String, orders: DataFrame, nulls: Boolean): Unit =
+    // and the gappy build side
+    def checkPart2(what: String, orders: DataFrame): Unit =
       for (it <- Seq(items, gappy)) {
         val hash2 = result(part2(it, orders, "id", "itemId", "price", "quantity", "storeId",
           BroadcastHash))
@@ -127,27 +121,15 @@ class Q4112Spec extends SparkSpec {
         val p2 = part2DenseAgg(it, orders, "id", "itemId", "price", "quantity", "storeId")
         assert(result(p2) === hash2, on)
         if (!(it eq items)) assert(probeSources(p2).isEmpty, on)
-        assert(result(part2Bypass(it, orders, "id", "itemId", "price", "quantity", "storeId",
-          numPartitions = 5)) === hash2, on)
         assert(result(part2Adaptive(it, orders, "id", "itemId", "price", "quantity",
           "storeId")) === hash2, on)
-        val packed = part2BypassPacked(it, orders, "id", "itemId", "price", "quantity",
-          "storeId", numPartitions = 5)
-        def shared = part2SharedDense(it, orders, "id", "itemId", "price", "quantity", "storeId")
-        if (nulls) {
-          raises("unpackable row")(packed)
-          raises("received a NULL group or v")(shared)
-        } else {
-          assert(result(packed) === hash2, on)
-          assert(result(shared) === hash2, on)
-        }
       }
     // every form against the hash plans; returns the kernel's batch source
-    def check(what: String, orders: DataFrame, nulls: Boolean = false): String = {
+    def check(what: String, orders: DataFrame): String = {
       val p1 = part1Dense(items, orders, "id", "itemId", "price", "quantity")
       assert(result(p1) === result(part1(items, orders, "id", "itemId", "price", "quantity",
         BroadcastHash)), what)
-      checkPart2(what, orders, nulls)
+      checkPart2(what, orders)
       val p2 = part2DenseAgg(items, orders, "id", "itemId", "price", "quantity", "storeId")
       val sources = (probeSources(p1) ++ probeSources(p2)).distinct
       assert(sources.size === 1, s"$what: $sources")
@@ -175,13 +157,13 @@ class Q4112Spec extends SparkSpec {
         .otherwise(col("itemId")).as("itemId"),
       when(col("quantity") % 7 === 0, lit(null)).otherwise(col("quantity")).as("quantity"),
       when(col("quantity") % 11 === 0, lit(null)).otherwise(col("storeId")).as("storeId"))
-    check("nullable", holes, nulls = true)
+    check("nullable", holes)
     val holesCached = holes.cache()
-    try assert(check("nullable cached", holesCached, nulls = true) === "columnar")
+    try assert(check("nullable cached", holesCached) === "columnar")
     finally holesCached.unpersist(blocking = true)
     // every quantity NULL: no product, so every form answers NULL
     val noQty = gen.withColumn("quantity", lit(null).cast("long"))
-    check("all-NULL quantity", noQty, nulls = true)
+    check("all-NULL quantity", noQty)
     assert(result(part1Dense(items, noQty, "id", "itemId", "price", "quantity")) === None)
     // empty partitions, and a relation that plans no partition at all
     check("empty", gen.where(col("itemId") < 0))
@@ -197,37 +179,9 @@ class Q4112Spec extends SparkSpec {
       val expected = Q4112Gen.oracleFull(items, orders)
       def result(df: org.apache.spark.sql.DataFrame) =
         df.collect().headOption.flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
-      assert(result(part2Bypass(itemsDf(cfg), ordersDf(cfg),
-        "id", "itemId", "price", "quantity", "storeId", numPartitions = 7)) === expected)
       assert(result(part2Adaptive(itemsDf(cfg), ordersDf(cfg),
         "id", "itemId", "price", "quantity", "storeId")) === expected)
     }
-  }
-
-  test("adaptive sampler is not fooled by a structured singleton prefix") {
-    // regression pin for the 1e9 measurement: the q4112 generator opens
-    // with a one-row-per-group enumeration run, so a sample drawn from
-    // ONE partition's prefix reads only singletons and calls
-    // sharedMass = 0 on a config whose true task-window shared mass is
-    // ~0.9 (hhp=1.0), picking the packed bypass where partial/final is
-    // 3-6× faster. The sampler must spread across partitions: here the
-    // first partition (2.5M rows, > the 2M sample target) is ALL
-    // singletons while the remaining 7/8 of the data is 100 heavy
-    // groups — the correct call is partial.
-    import org.apache.spark.sql.functions.{col, when, lit}
-    val spark2 = spark
-    import spark2.implicits._
-    val n = 20000000L
-    val prefix = 2500000L // exactly partition 0 of 8
-    val orders = spark.range(0L, n, 1L, 8)
-      .select(lit(1L).as("itemId"),
-        (col("id") % 7L).as("quantity"),
-        when(col("id") < prefix, col("id") + 1000L)
-          .otherwise(col("id") % 100L).as("storeId"))
-    val items = Seq((1L, 5L)).toDF("id", "price")
-    Q4112.part2Adaptive(items, orders, "id", "itemId", "price", "quantity", "storeId")
-    assert(Set("partial", "partial_dense").contains(Q4112.lastChosenPlan),
-      s"prefix-biased sample mis-planned: ${Q4112.lastChosenPlan}")
   }
 
   test("dense-array partial aggregate equals the hash partial plan exactly") {
@@ -274,6 +228,25 @@ class Q4112Spec extends SparkSpec {
     check(spark.range(0L, 3000L, 1L, 8)
       .select((col("id") % 500L + 1L).as("itemId"), (col("id") % 9L).as("quantity"),
         (col("id") % 2000L * 47L + 1L).as("storeId")))
+    // a domain wider than 2^22 slots: 10 hot groups, a singleton tail
+    // over ~6e6 slots, a NULL group and a NULL v. The dense build side
+    // takes the combine cache (range_dense); the gappy one, which the
+    // cache cannot probe, takes the hash plan
+    val wide = spark.range(0L, 200000L, 1L, 4)
+      .select((col("id") % 500L + 1L).as("itemId"),
+        when(col("id") === 7L, lit(null)).otherwise(col("id") % 9L).as("quantity"),
+        when(col("id") === 11L, lit(null)).when(col("id") % 2L === 0L, col("id") % 20L)
+          .otherwise(col("id") * 31L % 6000000L).as("storeId"))
+    val wideHash = check(wide)
+    assert(Q4112.minMaxLongs(wide, Seq("storeId")).head._2 >= Q4112.DenseAggMaxDomain)
+    assert(result(Q4112.part2Adaptive(items, wide, "id", "itemId", "price", "quantity",
+      "storeId")) === wideHash)
+    assert(Q4112.lastChosenPlan === "range_dense", Q4112.lastChosenPlan)
+    val gappy = items.where(col("id") % 7L =!= 0L)
+    assert(result(Q4112.part2Adaptive(gappy, wide, "id", "itemId", "price", "quantity",
+      "storeId")) === result(Q4112.part2(gappy, wide, "id", "itemId", "price", "quantity",
+      "storeId", Q4112.BroadcastHash)))
+    assert(Q4112.lastChosenPlan === "partial", Q4112.lastChosenPlan)
     // the join drops every row: no group, NULL result
     assert(check(orders.withColumn("itemId", col("itemId") + 1000L)) === None)
     // a provably-empty relation plans zero partitions
@@ -296,8 +269,12 @@ class Q4112Spec extends SparkSpec {
     val orders = spark.range(0L, 2L, 1L, 2)
       .select(lit(1L).as("itemId"), lit(1L << 62).as("quantity"), (col("id") * 0L).as("storeId"))
     // both rows in ONE task: the in-task sum must raise too, on the row
-    // path, on the probe kernel and in the shared table's combine cache
+    // path, on the probe kernel and in the combine cache
     val oneTask = orders.coalesce(1)
+    // one more row in group 2^23 widens the domain past the per-task
+    // arrays: the dense build side then takes the combine cache
+    def wide(o: org.apache.spark.sql.DataFrame) = o.union(spark.range(1L)
+      .select(lit(1L).as("itemId"), lit(1L).as("quantity"), lit(1L << 23).as("storeId")))
     def overflows(df: => org.apache.spark.sql.DataFrame): Boolean = {
       val e = intercept[Exception](df.collect())
       Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
@@ -306,15 +283,13 @@ class Q4112Spec extends SparkSpec {
     for (o <- Seq(orders, oneTask)) {
       assert(overflows(Q4112.part2(items, o, "id", "itemId", "price", "quantity",
         "storeId", Q4112.BroadcastHash)))
-      for (it <- Seq(items, gappy)) {
+      for (it <- Seq(items, gappy))
         assert(overflows(Q4112.part2DenseAgg(it, o, "id", "itemId", "price", "quantity",
           "storeId")))
-        assert(overflows(Q4112.part2SharedDense(it, o, "id", "itemId", "price", "quantity",
-          "storeId")))
-      }
+      assert(overflows(Q4112.part2DenseAgg(items, wide(o), "id", "itemId", "price", "quantity",
+        "storeId")))
     }
     assert(overflows(Q4112.part1Dense(items, oneTask, "id", "itemId", "price", "quantity")))
-    assert(Q4112.sharedDenseLiveTables === 0)
     // with ANSI off every plan wraps, and the dense forms wrap the same way
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try {
@@ -322,35 +297,16 @@ class Q4112Spec extends SparkSpec {
       for (o <- Seq(orders, oneTask)) {
         val hash2 = one(Q4112.part2(items, o, "id", "itemId", "price", "quantity", "storeId",
           Q4112.BroadcastHash))
-        for (it <- Seq(items, gappy)) {
+        for (it <- Seq(items, gappy))
           assert(one(Q4112.part2DenseAgg(it, o, "id", "itemId", "price", "quantity",
             "storeId")) === hash2)
-          assert(one(Q4112.part2SharedDense(it, o, "id", "itemId", "price", "quantity",
-            "storeId")) === hash2)
-        }
+        assert(one(Q4112.part2DenseAgg(items, wide(o), "id", "itemId", "price", "quantity",
+          "storeId")) === one(Q4112.part2(items, wide(o), "id", "itemId", "price", "quantity",
+          "storeId", Q4112.BroadcastHash)))
         assert(one(Q4112.part1Dense(items, o, "id", "itemId", "price", "quantity")) ===
           one(Q4112.part1(items, o, "id", "itemId", "price", "quantity", Q4112.BroadcastHash)))
       }
     } finally spark.conf.unset("spark.sql.ansi.enabled")
-  }
-
-  test("adaptive sampler's (rows, ndv, shared mass) equals hash-map counting on a skewed sample") {
-    import org.apache.spark.sql.functions.{col, when}
-    // 8 x 50k rows, all inside the sample: half on one hot key, the rest
-    // a scatter of singletons and repeats, negative keys included
-    val orders = spark.range(0L, 400000L, 1L, 8)
-      .select(when(col("id") % 2L === 0L, 7L)
-        .otherwise(col("id") * 2654435761L % 150001L - 75000L).as("storeId"))
-    val counts = new java.util.HashMap[Long, Int]()
-    orders.collect().foreach(r => counts.merge(r.getLong(0), 1, Integer.sum))
-    var shared = 0L
-    counts.values.forEach(c => if (c > 1) shared += c)
-    val n = 400000L
-    val got = Q4112.sampleSharedMass(orders, "storeId")
-    assert(got === ((n, counts.size.toLong, shared.toDouble / n)))
-    assert(got._3 > 0.5 && got._3 < 1.0, got)
-    // a NULL key is one more key
-    assert(Q4112.sharedKeyMass(Array(3L, 1L, 3L), nulls = 2L) === ((5L, 3L, 0.8)))
   }
 
   test("dense-array partial aggregate reproduces hash-plan NULL semantics exactly") {
@@ -384,37 +340,35 @@ class Q4112Spec extends SparkSpec {
   }
 
   test("shared-CAS-table aggregate equals the hash plan; the router picks it on singleton groups; re-execution is fresh") {
+    // the singleton flood past the per-task arrays: every row evicts from
+    // the combine cache and ships to its range's reducer. The shuffle is
+    // stateless, so a second execution of the same frame recomputes it
     import org.apache.spark.sql.functions.col
     val items = spark.range(1L, 501L)
       .select(col("id"), (col("id") * 7L % 1000L).as("price"))
     val orders = spark.range(0L, 200000L, 1L, 8)
       .select((col("id") % 500L + 1L).as("itemId"),
         (col("id") % 9L).as("quantity"),
-        col("id").as("storeId")) // every group a singleton
+        (col("id") * 64L).as("storeId")) // every group a singleton, ~1.3e7 slots
     val viaHash = Q4112.part2(items, orders, "id", "itemId", "price",
       "quantity", "storeId", Q4112.BroadcastHash).collect()(0).getLong(0)
-    val direct = Q4112.part2SharedDense(items, orders, "id", "itemId", "price",
+    val direct = Q4112.part2DenseAgg(items, orders, "id", "itemId", "price",
       "quantity", "storeId")
     assert(direct.collect()(0).getLong(0) === viaHash)
-    // a SECOND execution of the same DataFrame runs as a new stage and
-    // must get a fresh shared table, not the consumed one
     assert(direct.collect()(0).getLong(0) === viaHash)
     val adaptive = Q4112.part2Adaptive(items, orders, "id", "itemId", "price",
       "quantity", "storeId")
     assert(adaptive.collect()(0).getLong(0) === viaHash)
-    assert(Q4112.lastChosenPlan === "shared_dense", Q4112.lastChosenPlan)
-    // exchange-free: the executed plan has no hashpartitioning exchange
-    val plan = direct.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"), plan)
+    assert(Q4112.lastChosenPlan === "range_dense", Q4112.lastChosenPlan)
   }
 
   test("the 2^22..2^27 domain band with heavy hitters routes to the shared table") {
     import org.apache.spark.sql.functions.{col, when}
     val items = spark.range(1L, 101L)
       .select(col("id"), (col("id") % 97L).as("price"))
-    // half the mass in 50 hot groups (high shared mass -> the partial
-    // family), the other half a singleton tail over a ~6e6-wide domain:
-    // too wide for the per-task dense arrays, inside the shared cap
+    // half the mass in 50 hot groups, which the combine cache collapses,
+    // the other half a singleton tail over a ~6e6-wide domain: too wide
+    // for the per-task dense arrays, inside the range form's cap
     val orders = spark.range(0L, 300000L, 1L, 8)
       .select((col("id") % 100L + 1L).as("itemId"),
         (col("id") % 7L).as("quantity"),
@@ -424,54 +378,59 @@ class Q4112Spec extends SparkSpec {
       "quantity", "storeId", Q4112.BroadcastHash).collect()(0).getLong(0)
     val adaptive = Q4112.part2Adaptive(items, orders, "id", "itemId", "price",
       "quantity", "storeId").collect()(0).getLong(0)
-    assert(Q4112.lastChosenPlan === "shared_dense", Q4112.lastChosenPlan)
+    assert(Q4112.lastChosenPlan === "range_dense", Q4112.lastChosenPlan)
     assert(adaptive === viaHash)
   }
 
   test("shared-dense survives partial consumption (show/limit/take) and never leaks state") {
-    // ADVICE r10 item 1: the lazy r10 form silently returned ZERO rows
-    // under executeTake (show/limit scan partition subsets across
-    // several jobs, so the last-task-out countdown never fired) and
-    // leaked one 2 GB table per job. The eager form materializes the
-    // row at call time, so every consumption mode sees it.
+    // show/limit/take scan partition subsets across several jobs; a
+    // lazy frame must still give its one row to every consumption mode
     import org.apache.spark.sql.functions.col
     val items = spark.range(1L, 101L)
       .select(col("id"), (col("id") * 3L % 100L).as("price"))
     val orders = spark.range(0L, 50000L, 1L, 8)
       .select((col("id") % 100L + 1L).as("itemId"),
         (col("id") % 5L).as("quantity"),
-        col("id").as("storeId"))
+        (col("id") * 100L).as("storeId"))
     val expected = Q4112.part2(items, orders, "id", "itemId", "price",
       "quantity", "storeId", Q4112.BroadcastHash).collect()(0).getLong(0)
-    val df = Q4112.part2SharedDense(items, orders, "id", "itemId", "price",
+    val df = Q4112.part2Adaptive(items, orders, "id", "itemId", "price",
       "quantity", "storeId")
+    assert(Q4112.lastChosenPlan === "range_dense", Q4112.lastChosenPlan)
     assert(df.limit(1).collect()(0).getLong(0) === expected)
     assert(df.take(1)(0).getLong(0) === expected)
     df.show() // must not throw or return an empty frame
     assert(df.head().getLong(0) === expected)
-    assert(Q4112.sharedDenseLiveTables === 0, "shared-dense state leaked")
   }
 
   test("shared-dense rejects a group outside the stats-proven domain with a diagnosis, and still cleans up") {
-    import org.apache.spark.sql.functions.col
+    // the data changes under an unchanged plan (a parquet directory
+    // overwritten in place) without clearRelationCaches: the cached
+    // min/max go stale, and a group past them must fail, not wrap
+    import org.apache.spark.sql.functions.{col, lit, when}
     val items = spark.range(1L, 11L)
       .select(col("id"), (col("id") * 3L).as("price"))
-    val orders = spark.range(0L, 1000L, 1L, 4)
-      .select((col("id") % 10L + 1L).as("itemId"),
-        (col("id") % 5L).as("quantity"),
-        col("id").as("storeId")) // true domain [0, 1000)
-    val gv = Q4112.groupedValues(items, orders, "id", "itemId", "price", "quantity", "storeId")
-      .select(col("storeId"), col("v"))
-    val e = intercept[Exception] {
-      // lie to the stage: claim the domain is [0, 100)
-      Q4112.sharedDenseGroupedAvg(gv, minGroup = 0L, domain = 100)
-    }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x =>
-        Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(e).exists(_.contains("outside the stats-proven domain")),
-      messages(e).mkString(" | "))
-    assert(Q4112.sharedDenseLiveTables === 0, "shared-dense state leaked on failure")
+    val dir = java.nio.file.Files.createTempDirectory("range_dense_stale").toString
+    def write(top: Long): Unit = spark.range(0L, 1000L, 1L, 4)
+      .select((col("id") % 10L + 1L).as("itemId"), (col("id") % 5L).as("quantity"),
+        when(col("id") === 999L, lit(top)).otherwise(col("id") * 5000L).as("storeId"))
+      .write.mode("overwrite").parquet(dir)
+    def run() = Q4112.part2Adaptive(items, spark.read.parquet(dir), "id", "itemId", "price",
+      "quantity", "storeId")
+    try {
+      write(5000000L) // domain [0, 5e6]
+      assert(run().collect()(0).getLong(0) === Q4112.part2(items, spark.read.parquet(dir),
+        "id", "itemId", "price", "quantity", "storeId").collect()(0).getLong(0))
+      assert(Q4112.lastChosenPlan === "range_dense", Q4112.lastChosenPlan)
+      write(9000000L)
+      val e = intercept[Exception](run().collect())
+      assert(Q4112.lastChosenPlan === "range_dense", Q4112.lastChosenPlan)
+      def messages(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(x =>
+          Option(x.getMessage).toSeq ++ messages(x.getCause))
+      assert(messages(e).exists(_.contains("group 9000000 outside the stats-proven domain")),
+        messages(e).mkString(" | "))
+    } finally Q4112.clearRelationCaches()
   }
 
   test("dense-array partial aggregate rejects a group outside its stated domain") {
@@ -494,8 +453,8 @@ class Q4112Spec extends SparkSpec {
 
   test("router proves null-freedom of the VALUE inputs, not just the group (ADVICE r10 #2)") {
     // a NULL quantity survives the join and makes v NULL — the hash
-    // plans' sum skips it; the shared loop cannot, so the router must
-    // fall back to a hash-family plan and still match the oracle
+    // plans' sum skips it, and so do the dense forms the router picks
+    // without asking whether the data carries NULLs
     val spark2 = spark
     import spark2.implicits._
     import org.apache.spark.sql.functions.col
@@ -511,10 +470,10 @@ class Q4112Spec extends SparkSpec {
       "quantity", "storeId", Q4112.BroadcastHash).collect()(0).getLong(0)
     val adaptive = Q4112.part2Adaptive(items, orders, "id", "itemId", "price",
       "quantity", "storeId").collect()(0).getLong(0)
-    assert(Q4112.lastChosenPlan !== "shared_dense",
-      s"router picked shared_dense over a NULL-carrying quantity column")
+    assert(Q4112.lastChosenPlan === "partial_dense", Q4112.lastChosenPlan)
     assert(adaptive === viaHash)
-    // same for a NULL price on the build side
+    // same for a NULL price on the build side, which the dense build
+    // refuses: the hash join feeds the dense aggregate
     val itemsN = items.unionByName(Seq[(java.lang.Long, java.lang.Long)](
       (100L, null)).toDF("id", "price"))
     val ordersClean = base
@@ -522,12 +481,10 @@ class Q4112Spec extends SparkSpec {
       "quantity", "storeId", Q4112.BroadcastHash).collect()(0).getLong(0)
     val adaptive2 = Q4112.part2Adaptive(itemsN, ordersClean, "id", "itemId",
       "price", "quantity", "storeId").collect()(0).getLong(0)
-    assert(Q4112.lastChosenPlan !== "shared_dense",
-      s"router picked shared_dense over a NULL-carrying price column")
+    assert(Q4112.lastChosenPlan === "partial_dense", Q4112.lastChosenPlan)
     assert(adaptive2 === viaHash2)
     // ten singleton groups of v = 1000, plus a NULL-quantity row in
-    // group 0: bypass-shaped, in pack bounds, but a NULL v has no packed
-    // form (unchecked it would move its row into a NULL group: 909, not 950)
+    // group 0: the NULL v must stay in its group (909 if it moved, not 950)
     val few = ((1L, Option.empty[Long], 0L) +: (0L until 10L).map(g => (1L, Option(100L), g)))
       .toDF("itemId", "quantity", "storeId")
     val itemsOne = Seq((1L, 10L)).toDF("id", "price")
@@ -536,50 +493,21 @@ class Q4112Spec extends SparkSpec {
     assert(viaHash3 === 950L)
     assert(Q4112.part2Adaptive(itemsOne, few, "id", "itemId", "price", "quantity",
       "storeId").collect()(0).getLong(0) === viaHash3, Q4112.lastChosenPlan)
-    assert(Q4112.lastChosenPlan === "bypass", Q4112.lastChosenPlan)
-  }
-
-  test("router falls back cleanly off-local: shared_dense is never chosen on a cluster") {
-    // round-10 verdict item 8: the require() inside part2SharedDense
-    // guarantees the OPERATOR refuses off-local; this asserts the
-    // ROUTER never routes there in the first place (simulated cluster)
-    import org.apache.spark.sql.functions.col
-    val items = spark.range(1L, 101L)
-      .select(col("id"), (col("id") * 7L % 1000L).as("price"))
-    val orders = spark.range(0L, 100000L, 1L, 8)
-      .select((col("id") % 100L + 1L).as("itemId"),
-        (col("id") % 9L).as("quantity"),
-        col("id").as("storeId")) // singleton groups: the shared-dense shape
-    val viaHash = Q4112.part2(items, orders, "id", "itemId", "price",
-      "quantity", "storeId", Q4112.BroadcastHash).collect()(0).getLong(0)
-    Q4112.simulateClusterForTest = true
-    try {
-      val adaptive = Q4112.part2Adaptive(items, orders, "id", "itemId",
-        "price", "quantity", "storeId").collect()(0).getLong(0)
-      assert(Q4112.lastChosenPlan !== "shared_dense",
-        "router chose the single-JVM form on a (simulated) cluster")
-      assert(adaptive === viaHash)
-    } finally Q4112.simulateClusterForTest = false
-    // and back on local the same shape DOES take the shared table
-    val again = Q4112.part2Adaptive(items, orders, "id", "itemId",
-      "price", "quantity", "storeId").collect()(0).getLong(0)
-    assert(Q4112.lastChosenPlan === "shared_dense", Q4112.lastChosenPlan)
-    assert(again === viaHash)
+    assert(Q4112.lastChosenPlan === "partial_dense", Q4112.lastChosenPlan)
   }
 
   test("shared-dense fires on raw nullable-schema parquet via stats-proven null-freedom") {
-    // round-10 verdict item 1: parquet schemas are always nullable; the
-    // router must prove null-freedom from DATA stats and route the
-    // un-coerced relations to shared_dense (no coalesce projection)
+    // parquet schemas are always nullable: the router takes the dense
+    // kernel on the un-coerced relations, with no NULL proof to make
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("shared_dense_pq").toString
+    val dir = java.nio.file.Files.createTempDirectory("range_dense_pq").toString
     spark.range(1L, 101L)
       .select(col("id"), (col("id") * 7L % 1000L).as("price"))
       .write.mode("overwrite").parquet(s"$dir/items")
     spark.range(0L, 100000L, 1L, 8)
       .select((col("id") % 100L + 1L).as("itemId"),
         (col("id") % 9L).as("quantity"),
-        col("id").as("storeId"))
+        (col("id") * 64L).as("storeId"))
       .write.mode("overwrite").parquet(s"$dir/orders")
     val items = spark.read.parquet(s"$dir/items")
     val orders = spark.read.parquet(s"$dir/orders")
@@ -589,9 +517,8 @@ class Q4112Spec extends SparkSpec {
       "quantity", "storeId", Q4112.BroadcastHash).collect()(0).getLong(0)
     val adaptive = Q4112.part2Adaptive(items, orders, "id", "itemId",
       "price", "quantity", "storeId").collect()(0).getLong(0)
-    assert(Q4112.lastChosenPlan === "shared_dense", Q4112.lastChosenPlan)
+    assert(Q4112.lastChosenPlan === "range_dense", Q4112.lastChosenPlan)
     assert(adaptive === viaHash)
-    assert(Q4112.sharedDenseLiveTables === 0)
   }
 
   test("adaptive part2 on an empty relation falls back instead of throwing") {
@@ -608,6 +535,19 @@ class Q4112Spec extends SparkSpec {
       "quantity", "storeId").collect()(0)
     assert(viaHash.isNullAt(0) && adaptive.isNullAt(0))
     assert(Q4112.lastChosenPlan === "partial", Q4112.lastChosenPlan)
+    // a DOUBLE group column has no integral min/max, and a cast to long
+    // would merge groups 2.5 and 2.0: the hash plan, asked before the
+    // statistics; the forced dense form fails a stated require
+    val halves = spark.range(0L, 1000L, 1L, 4).select((col("id") % 10L + 1L).as("itemId"),
+      (col("id") % 5L).as("quantity"), (col("id") % 7L + col("id") % 2L * 0.5).as("storeId"))
+    val hashHalves = Q4112.part2(items, halves, "id", "itemId", "price", "quantity", "storeId",
+      Q4112.BroadcastHash).collect()(0).getLong(0)
+    assert(Q4112.part2Adaptive(items, halves, "id", "itemId", "price", "quantity", "storeId")
+      .collect()(0).getLong(0) === hashHalves)
+    assert(Q4112.lastChosenPlan === "partial", Q4112.lastChosenPlan)
+    val e = intercept[IllegalArgumentException](Q4112.part2DenseAgg(items, halves, "id",
+      "itemId", "price", "quantity", "storeId"))
+    assert(e.getMessage.contains("'storeId' is double"), e.getMessage)
   }
 
   test("a group domain wider than 2^63 is rejected by the dense router, not wrapped") {
