@@ -1,11 +1,14 @@
 package graft
 
-/** Driver-run benchmark: times every SparkEntry query at
-  * SPARK_GRAFT_SF_DIR, prints ONE JSON line. Mirrors the reference's
-  * harness loop (q4112_main.c:114-132: repeat, time, append) — a JVM/
-  * codegen warm-up pass runs first so timings measure the engine, not
-  * class loading, and the headline q4112 queries report best-of-2 like
-  * the reference's best-of-5 CSV convention (BASELINE.md).
+/** Driver-run benchmark: times the run body of every SparkEntry query
+  * (`SparkEntry.queries`) at SPARK_GRAFT_SF_DIR and prints ONE JSON
+  * line. Mirrors the reference's harness loop (q4112_main.c:114-132:
+  * repeat, time, append). The timed body is the one Verify checks:
+  * Verify writes `SparkEntry.checked(name)`, which hands this same
+  * body's output to the query's check. A JVM/codegen warm-up pass runs
+  * first so timings measure the engine, not class loading, and every
+  * row reports best-of-2 like the reference's best-of-5 CSV convention
+  * (BASELINE.md).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -30,37 +33,11 @@ object Bench {
     try exec(SparkEntry.queries("q4112_part1")(spark, sfDir))
     catch { case _: Throwable => () }
 
-    // fixed-work calibration probe, run first and last: a deterministic
-    // CPU spin (128M xxh64 mixes across 32 tasks) + one tiny shuffle.
-    // Identical work every run, so calib_pre/calib_post quantify the
-    // box's effective throughput DURING this bench — a loaded machine
-    // (round-5's driver run recorded 9.3 s for a 0.4 s query under
-    // external load) is self-evident from inflated probe times instead
-    // of needing an idle-box reproduction to detect post-hoc.
-    def calibrate(): Double = {
-      import org.apache.spark.sql.functions._
-      time {
-        spark.range(0, 128L * 1024 * 1024, 1, 32)
-          .select(xxhash64(org.apache.spark.sql.functions.col("id")).as("h"))
-          .select(pmod(org.apache.spark.sql.functions.col("h"), lit(97)).as("b"))
-          .groupBy("b").count()
-          .write.format("noop").mode("overwrite").save()
-      }
-    }
-    // fixed-work SHUFFLE probe (round 8): ~1 GB of UnsafeRows through
-    // the local shuffle path — quantifies disk/page-cache contention,
-    // which the CPU spin cannot see (a session can read idle cpu calib
-    // while shuffle-heavy work degrades; Matrix cfg18, SCALING.md
-    // round-8 reading 4). Run once before and once after the sweep.
-    def calibrateShuffle(): Double = {
-      import org.apache.spark.sql.functions._
-      time {
-        spark.range(0, 64L * 1024 * 1024, 1, 32)
-          .repartition(64, org.apache.spark.sql.functions.col("id"))
-          .agg(count(lit(1)))
-          .write.format("noop").mode("overwrite").save()
-      }
-    }
+    // fixed-work calibration probes (Calibration), run first and last:
+    // calib_pre/calib_post quantify the host's effective throughput
+    // DURING this bench
+    def calibrate(): Double = Calibration.cpu(spark)
+    def calibrateShuffle(): Double = Calibration.shuffle(spark)
     calibrate(); calibrateShuffle() // warm both probes' codegen paths
 
     // previous committed payload (read BEFORE this run overwrites it):
@@ -130,22 +107,7 @@ object Bench {
         f"$sessionIdleShuffle%.3f s is >2x the prior round's band " +
         f"${priorIdleShuffle.get}%.3f s — this session is loaded")
 
-    /** Drain external load / writeback until the shuffle probe returns
-      * to its idle band (bounded wait). Measurement hygiene only: the
-      * probe columns still record whatever state the run was in.
-      */
-    def settleUntilQuiet(maxWaitSec: Int = 120): Unit = {
-      val deadline = System.nanoTime() + maxWaitSec * 1000000000L
-      var p = calibrateShuffle()
-      while (p > math.max(2.0 * idleShuffle, idleShuffle + 1.0) &&
-          System.nanoTime() < deadline) {
-        try new ProcessBuilder("sync").start().waitFor()
-        catch { case scala.util.control.NonFatal(_) => () }
-        Thread.sleep(5000)
-        p = calibrateShuffle()
-      }
-      System.err.println(f"[bench] settle: shuffle probe $p%.3f s (idle $idleShuffle%.3f s)")
-    }
+    def settleUntilQuiet(): Unit = Calibration.settleUntilQuiet(spark, idleShuffle, "bench")
 
     settleUntilQuiet()
     val calibPoints = scala.collection.mutable.ArrayBuffer[Double]()
@@ -166,11 +128,8 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val ordered = new scala.util.Random(20260814L)
       .shuffle(SparkEntry.queries.toSeq.sortBy(_._1))
-    val results = ordered.zipWithIndex.map { case ((name, gated), idx) =>
+    val results = ordered.zipWithIndex.map { case ((name, fn), idx) =>
       if (idx > 0 && idx % 25 == 0) calibPoints += calibrate()
-      // time the production form where the queries entry is an oracle
-      // gate (sketch + exhaustive verification) — see benchOverrides
-      val fn = SparkEntry.benchOverrides.getOrElse(name, gated)
       def once: Double =
         try time { exec(fn(spark, sfDir)) }
         catch {
@@ -203,7 +162,7 @@ object Bench {
       settleUntilQuiet()
     }
     val finalResults = results ++ suspects.flatMap { name =>
-      val fn = SparkEntry.benchOverrides.getOrElse(name, SparkEntry.queries(name))
+      val fn = SparkEntry.queries(name)
       val re = try Seq.fill(2)(time { exec(fn(spark, sfDir)) }).min
         catch { case _: Throwable => -1.0 }
       if (re < 0) None

@@ -14,10 +14,11 @@ import org.apache.spark.sql.graft.bridge
   * `inner,...,threads,repeat,ns,plan,calib,calib_shuffle,
   *  shuf_w_mb,shuf_r_mb,spill_mem_mb,spill_disk_mb`
   * (the reference's column order, q4112_main.c:128-131, plus the
-  * physical-plan label, TWO fixed-work calibration probes measured
-  * immediately before the rep — the CPU spin (idle ≈ 0.32-0.47 s) and
-  * the ~1 GB shuffle round-trip (idle ≈ 1-2 s; sees the disk/page-
-  * cache debt the spin is blind to) — and the rep's EXACT TaskMetrics
+  * physical-plan label, TWO fixed-work calibration probes
+  * ([[Calibration]]) — the CPU spin, measured immediately before the
+  * rep, and the ~1 GB shuffle round-trip (8-11 s on a 4-core host; sees
+  * the disk/page-cache debt the spin is blind to), measured once per
+  * cell before rep 1 — and the rep's EXACT TaskMetrics
   * IO: shuffle write/read and memory/disk spill MB. The probes make
   * ratios comparable ACROSS sessions, which the cfg17
   * 18.76/21.6/27.8 s spread on identical code showed raw times are
@@ -173,43 +174,15 @@ object Matrix {
       System.err.println("[matrix] warm-up done")
     }
 
-    // fixed-work calibration probe — the SAME deterministic spin Bench
-    // runs (128M xxh64 mixes over 32 tasks + one tiny shuffle), so a
-    // matrix session's effective box throughput is measurable inside the
-    // session itself: cfg17's auto readings moved 18.76 → 21.6 → 27.8 s
-    // across three rounds on byte-identical code, and without an
-    // in-session probe those numbers cannot be compared. Each CSV row
-    // carries the probe seconds measured immediately before its rep;
-    // idle on this box ≈ 0.41-0.77 s (BENCH_full_r7 calib array).
-    def calibrate(): Double = {
-      import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-      val t0 = System.nanoTime()
-      spark.range(0, 128L * 1024 * 1024, 1, 32)
-        .select(xxhash64(col("id")).as("h"))
-        .select(pmod(col("h"), lit(97)).as("b"))
-        .groupBy("b").count()
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // fixed-work SHUFFLE probe: 64M longs hashed into 64 partitions and
-    // re-counted — ~1 GB of UnsafeRows through the local shuffle path
-    // (disk write + fetch + page cache), the dimension the CPU spin is
-    // blind to: cfg18's 139 → 183 s rep drift read CLEAN cpu calib
-    // while each rep pushed ~16 GB of packed shuffle through /tmp
-    // (SCALING.md round-8 reading 4). Idle on this box ≈ 1-2 s.
-    def calibrateShuffle(): Double = {
-      import org.apache.spark.sql.functions.{col, count, lit}
-      val t0 = System.nanoTime()
-      spark.range(0, 64L * 1024 * 1024, 1, 32)
-        .repartition(64, col("id"))
-        .agg(count(lit(1)))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    calibrate(); calibrateShuffle() // warm both probes' codegen, untimed
+    // fixed-work calibration probes (Calibration): a matrix session's
+    // effective host throughput is measurable inside the session itself
+    // — cfg17's auto readings moved 18.76 → 21.6 → 27.8 s across three
+    // rounds on byte-identical code, and without an in-session probe
+    // those numbers cannot be compared
+    Calibration.cpu(spark); Calibration.shuffle(spark) // warm both probes' codegen, untimed
     val idleShuffle = {
-      System.err.println(f"[matrix] calib idle-check: cpu=${calibrate()}%.3f s")
-      val s = calibrateShuffle()
+      System.err.println(f"[matrix] calib idle-check: cpu=${Calibration.cpu(spark)}%.3f s")
+      val s = Calibration.shuffle(spark)
       System.err.println(f"[matrix] calib idle-check: shuffle=$s%.3f s")
       s
     }
@@ -218,22 +191,9 @@ object Matrix {
       * idle band (bounded): layout modes write a ~16 GB materialization
       * and the 1e9 oracle right before the rep loop, and the r9 cfg17
       * run showed the per-rep 1 s settle cannot absorb that tail — all
-      * three reps measured under shuffle probes at 5-6× idle. Waiting
-      * for quiet is measurement hygiene, not a speedup: the probe
-      * columns still record whatever state the rep actually ran under.
+      * three reps measured under shuffle probes at 5-6× idle.
       */
-    def settleUntilQuiet(maxWaitSec: Int = 120): Unit = {
-      val deadline = System.nanoTime() + maxWaitSec * 1000000000L
-      var p = calibrateShuffle()
-      while (p > math.max(2.0 * idleShuffle, idleShuffle + 1.0) &&
-          System.nanoTime() < deadline) {
-        try new ProcessBuilder("sync").start().waitFor()
-        catch { case scala.util.control.NonFatal(_) => () }
-        Thread.sleep(5000)
-        p = calibrateShuffle()
-      }
-      System.err.println(f"[matrix] settle: shuffle probe $p%.3f s (idle $idleShuffle%.3f s)")
-    }
+    def settleUntilQuiet(): Unit = Calibration.settleUntilQuiet(spark, idleShuffle, "matrix")
 
     // per-rep memory telemetry: heap-in-use after the post-rep GC plus
     // process RSS — the rep-3 GC collapse (27.8 → 178 s, SCALING.md
@@ -445,17 +405,20 @@ object Matrix {
         // settleUntilQuiet; probes still record the state reps ran under)
         if (p2Plan == "bucketed" || p2Plan == "joined_bucketed" || p1Bucketed)
           settleUntilQuiet()
+        // the shuffle probe runs once per cell, before rep 1 (8-11 s a
+        // probe on a 4-core host: per rep it cost more than the 1e-3
+        // matrix's timed queries together); every row of the cell
+        // carries its value in calib_shuffle
+        val calibSh = Calibration.shuffle(spark)
         for (rep <- 1 to reps) {
-          val calib = calibrate()
-          val calibSh = calibrateShuffle()
-          // settle between the shuffle probe and the timed rep: the
-          // probe just pushed ~1 GB through the shuffle dirs, and its
-          // dirty pages may still be flushing when t0 starts — a sync
+          val calib = Calibration.cpu(spark)
+          // settle between the probes and the timed rep: the shuffle
+          // probe pushed ~1 GB through the shuffle dirs, and its dirty
+          // pages may still be flushing when t0 starts — a sync
           // (best-effort) + short sleep drains the writeback so the
           // probe quantifies session load without contaminating the
           // measurement it annotates (ADVICE r8)
-          try new ProcessBuilder("sync").start().waitFor()
-          catch { case scala.util.control.NonFatal(_) => () }
+          Calibration.sync()
           Thread.sleep(1000)
           // reset AFTER the probes (which shuffle ~1 GB of their own):
           // the snapshot attributes the timed rep's tasks only

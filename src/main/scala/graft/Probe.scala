@@ -7,14 +7,14 @@ import org.apache.spark.sql.graft.bridge
 /** Query inspection and attribution on the shared session, reading
   * SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS like Bench:
   *
-  *  - `runMain graft.Probe show <query> [rows]` prints the gated form's
-  *    rows (booleans of an oracle gate must read true).
+  *  - `runMain graft.Probe show <query> [rows]` prints the rows of
+  *    `SparkEntry.checked(query)`: the run body's output passed through
+  *    the query's check (booleans a check emits must read true).
   *  - `runMain graft.Probe plans <outDir> <suffix> <query...>` writes
-  *    `<outDir>/<query>_<suffix>.txt` for the form Bench times: the
-  *    static formatted plan, then the final adaptive plan after one run.
-  *    A query whose gate is a separate form also gets its gate's plans
-  *    in `<query>_<suffix>_gate.txt`.
-  *  - `runMain graft.Probe time <reps> <query...>` times the bench form
+  *    `<outDir>/<query>_<suffix>.txt` for the run body, the form Bench
+  *    times: the static formatted plan, then the final adaptive plan
+  *    after one run.
+  *  - `runMain graft.Probe time <reps> <query...>` times the run body
   *    with the noop sink, `reps` reps after one warm-up. Per rep it
   *    prints each job's wall time and each stage's task metrics
   *    ([[TaskMetricsListener]]); per query a min/median line.
@@ -26,8 +26,6 @@ import org.apache.spark.sql.graft.bridge
   * see PLANS.md.
   */
 object Probe {
-  private type Query = (SparkSession, String) => DataFrame
-
   def main(args: Array[String]): Unit = {
     val spark = Engine.session()
     try run(spark, args.toSeq)
@@ -37,18 +35,15 @@ object Probe {
   def run(spark: SparkSession, args: Seq[String], sfDir: String = Engine.sfDir): Unit =
     args match {
       case Seq("show", name, rows @ _*) =>
-        SparkEntry.queries(name)(spark, sfDir)
+        SparkEntry.checked(name)(spark, sfDir)
           .show(rows.headOption.fold(20)(_.toInt), truncate = false)
       case Seq("plans", outDir, suffix, names @ _*) =>
         new java.io.File(outDir).mkdirs()
         for (name <- names) {
-          def write(form: Query, file: String): Unit =
-            java.nio.file.Files.writeString(
-              java.nio.file.Paths.get(outDir, file), plans(form(spark, sfDir)))
           try {
-            write(benchForm(name), s"${name}_$suffix.txt")
-            if (SparkEntry.benchOverrides.contains(name))
-              write(SparkEntry.queries(name), s"${name}_${suffix}_gate.txt")
+            java.nio.file.Files.writeString(
+              java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
+              plans(SparkEntry.queries(name)(spark, sfDir)))
             System.err.println(s"[probe] wrote $name")
           } catch {
             case e: Throwable => System.err.println(s"[probe] $name FAILED: ${e.getMessage}")
@@ -63,10 +58,6 @@ object Probe {
         throw new IllegalArgumentException("usage: Probe show <query> [rows] | " +
           "plans <outDir> <suffix> <query...> | time <reps> <query...>")
     }
-
-  /** The form Bench times. */
-  private def benchForm(name: String): Query =
-    SparkEntry.benchOverrides.getOrElse(name, SparkEntry.queries(name))
 
   private def exec(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
@@ -85,7 +76,7 @@ object Probe {
 
   private def time(spark: SparkSession, sfDir: String, metrics: TaskMetricsListener,
       reps: Int, name: String): Unit = {
-    val fn = benchForm(name)
+    val fn = SparkEntry.queries(name)
     try {
       exec(fn(spark, sfDir)) // warm-up
       val ts = (1 to reps).map { rep =>

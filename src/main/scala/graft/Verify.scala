@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each query's checked form
+  * (`SparkEntry.checked`: the run body Bench times, passed through the
+  * query's check) → parquet, plus oracle_sql.json, for the driver's
+  * DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [queryName ...] — names limit the dump to a
@@ -18,10 +20,10 @@ object Verify {
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // sorted: deterministic run order, so any cross-query session effect
     // (cache warmth, conf, catalog state) reproduces identically per run
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    SparkEntry.queries.keys.toSeq.sorted
+      .filter(name => only.isEmpty || only(name))
+      .foreach { name =>
+      try SparkEntry.checked(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)

@@ -281,9 +281,9 @@ object Similarity {
     val slim = knn.select(col("probe_id"), col("corpus_id"))
     // only checkpoint when re-scanning the input is actually expensive
     // (joins/aggregates/windows in its plan — the IVF route / window
-    // rank / all-pairs generators). An already-materialized input (the
-    // mutualKnnEdges path feeds the CACHED checkpointed kNN relation)
-    // must not be checkpointed AGAIN: that second pinned RDD is
+    // rank / all-pairs generators). An already-materialized input (a
+    // CACHED checkpointed kNN relation, [[knnGraphCached]]) must not be
+    // checkpointed AGAIN: that second pinned RDD is
     // invisible to the cache's unpersist hook, which walks only the
     // outer plan, so it would leak BlockManager memory on every
     // cache eviction.
@@ -315,27 +315,19 @@ object Similarity {
       case _ => ()
     }
 
-  private val mutualEdgeCache =
-    new BoundedModelCache[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Int, Int, Int), DataFrame](capacity = 4, onRemove = unpersistCheckpointed)
-
   private val knnCache =
     new BoundedModelCache[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       Int, Int, Int), DataFrame](capacity = 4, onRemove = unpersistCheckpointed)
 
-  private[graft] def clearMutualEdgeCache(): Unit = {
-    mutualEdgeCache.clear()
-    knnCache.clear()
-  }
+  private[graft] def clearKnnGraphCache(): Unit = knnCache.clear()
 
   /** [[knnGraph]] materialized once per (corpus plan, k, nCentroids,
     * nProbe) — the neighbor-list relation itself, shared by every
-    * consumer the way [[mutualKnnEdges]] shares the mutual graph:
-    * the kNN graph, the majority-vote classifier, and the mutual-edge
-    * builder all rank the SAME corpus, and each private re-run pays
-    * the full IVF route + window rank (~1.5 s at sf0.1). The list is
-    * ≤ k·n slim rows; same build-once-per-table-version contract and
-    * [[clearMutualEdgeCache]] boundary as the other relation caches.
+    * consumer that ranks the same corpus, where each private re-run
+    * pays the full IVF route + window rank (~1.5 s at sf0.1). The list
+    * is ≤ k·n slim rows; same build-once-per-table-version contract as
+    * the other relation caches, and [[clearKnnGraphCache]] is the
+    * boundary for callers that replace data under an unchanged plan.
     */
   def knnGraphCached(
       corpus: DataFrame, idCol: String, vecCol: String,
@@ -359,34 +351,6 @@ object Similarity {
       // (optimization round 12, guide §2.6).
       val width = Dedup.linearParallelism(corpus.select(col(idCol), col(vecCol)))
       if (ckpt.rdd.getNumPartitions > width) ckpt.coalesce(width) else ckpt
-    }
-  }
-
-  /** The IVF-routed mutual-kNN edge RELATION, materialized once per
-    * (corpus plan, k, nCentroids, nProbe) and shared by every consumer
-    * — kCore, label propagation, neighbor Jaccard, PageRank all analyze
-    * the SAME graph, and without sharing each of them re-runs the
-    * candidate generation (IVF route + window rank + mutuality join,
-    * ~1-2 s at sf0.1) privately: four graph queries in one session were
-    * paying ~4× the build (round-7 bench attribution). The edge list is
-    * ≤ k·n/2 slim (long, long) rows — the same build-once-per-table-
-    * version contract as the dense-array/stats caches, keyed on the
-    * canonicalized corpus plan; callers that replace data under an
-    * unchanged plan must [[clearMutualEdgeCache]].
-    */
-  def mutualKnnEdges(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, nCentroids: Int, nProbe: Int): DataFrame = {
-    val key = (corpus.select(col(idCol), col(vecCol))
-      .queryExecution.optimizedPlan.canonicalized, k, nCentroids, nProbe)
-    mutualEdgeCache.getOrElseTrain(key) {
-      // eager checkpoint: materialize the mutuality JOIN too, not just
-      // its input — consumers re-scan the finished edge list only;
-      // the neighbor list comes from the shared kNN relation
-      mutualEdges(
-        knnGraphCached(corpus, idCol, vecCol, k, nCentroids, nProbe)
-          .select(col("src_id").as("probe_id"), col("dst_id").as("corpus_id")))
-        .localCheckpoint(true)
     }
   }
 

@@ -3,8 +3,8 @@ package graft
 import java.nio.file.Files
 
 /** `Probe plans` and `Probe time` on the shared session. `distinct_hll`
-  * groups by a key (its plan has an exchange) and has a separate bench
-  * form, so `plans` writes both files.
+  * groups by a key (its plan has an exchange) and has a check, and
+  * `plans` writes the run body's plans only: one file, no gate file.
   */
 class ProbeSpec extends SparkSpec {
 
@@ -17,12 +17,11 @@ class ProbeSpec extends SparkSpec {
   test("plans writes the static and the final adaptive plan of both forms") {
     val dir = Files.createTempDirectory("probe-plans")
     Probe.run(spark, Seq("plans", dir.toString, "t", "distinct_hll"), sfDir)
-    for (f <- Seq("distinct_hll_t.txt", "distinct_hll_t_gate.txt")) {
-      val text = Files.readString(dir.resolve(f))
-      val Array(static, finalPlan) = text.split("=== final adaptive plan ===")
-      assert(static.contains("isFinalPlan=false") && static.contains("Exchange"), f)
-      assert(finalPlan.contains("isFinalPlan=true"), f)
-    }
+    val text = Files.readString(dir.resolve("distinct_hll_t.txt"))
+    val Array(static, finalPlan) = text.split("=== final adaptive plan ===")
+    assert(static.contains("isFinalPlan=false") && static.contains("Exchange"))
+    assert(finalPlan.contains("isFinalPlan=true"))
+    assert(!Files.exists(dir.resolve("distinct_hll_t_gate.txt")))
   }
 
   test("time prints per-job and per-stage lines and a parseable min/median line") {

@@ -246,8 +246,8 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("mutualEdges does not re-checkpoint a cheap-to-rescan input") {
-    // the mutualKnnEdges path feeds an ALREADY-materialized kNN
-    // relation; a second localCheckpoint there would pin RDD blocks the
+    // a cached kNN relation (knnGraphCached) is ALREADY materialized;
+    // a second localCheckpoint there would pin RDD blocks the
     // cache's unpersist hook never sees (it walks only the outer plan)
     val knn = Seq((1L, 2L), (2L, 1L), (1L, 3L)).toDF("probe_id", "corpus_id")
     val edges = Similarity.mutualEdges(knn)

@@ -57,9 +57,25 @@ class SparkEntrySpec extends SparkSpec {
       s"README does not state '$n named queries' — registry has $n")
   }
 
-  for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
+  // the checked form: the run body's output through its check, so
+  // every check runs here too
+  for (name <- SparkEntry.queries.keys.toSeq.sorted) {
     test(s"query $name returns rows on sf0.001") {
-      assert(fn(spark, sfDir).count() > 0, s"$name returned 0 rows")
+      assert(SparkEntry.checked(name)(spark, sfDir).count() > 0, s"$name returned 0 rows")
+    }
+  }
+
+  test("no check ignores its input: checking an emptied run throws or changes the rows") {
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    for (name <- SparkEntry.checks.keys.toSeq.sorted) {
+      val check = SparkEntry.checks(name)
+      val run = SparkEntry.queries(name)(spark, sfDir)
+      val full = rows(check(spark, sfDir, run))
+      val emptied =
+        try Some(rows(check(spark, sfDir, run.limit(0))))
+        catch { case scala.util.control.NonFatal(_) => None }
+      assert(!emptied.contains(full), s"$name's check returns the same rows for an empty run")
     }
   }
 
@@ -113,10 +129,10 @@ class SparkEntrySpec extends SparkSpec {
       .agg(org.apache.spark.sql.functions.countDistinct(col("k")),
         graft.functions.FlajoletMartin.fmCountDistinct(col("k"), logPartitions = 8))
       .head()
-    assert(SparkEntry.queries("distinct_fm")(spark, sfDir)
+    assert(SparkEntry.checked("distinct_fm")(spark, sfDir)
       .filter(!col("fm_ok")).isEmpty,
       s"FM outside [n/2, 4n]: exact=${fmDebug.getLong(0)} fm=${fmDebug.getLong(1)}")
-    assert(SparkEntry.queries("distinct_hll")(spark, sfDir)
+    assert(SparkEntry.checked("distinct_hll")(spark, sfDir)
       .filter(!col("hll_ok")).isEmpty, "HLL estimate outside 3·rsd")
     assert(SparkEntry.queries("agg_percentile_approx")(spark, sfDir)
       .filter(!col("approx_ok")).isEmpty, "approx percentile off by > 1")
@@ -131,7 +147,7 @@ class SparkEntrySpec extends SparkSpec {
         pr, "vec_id", "embedding", k = 5, nCentroids = 8, nProbe = 3)
         .select(col("probe_id"), col("corpus_id"))
       val nb = bt.count(); val nh = bt.join(iv, Seq("probe_id", "corpus_id"), "left_semi").count()
-      assert(SparkEntry.queries("sim_recall_ivf")(spark, d)
+      assert(SparkEntry.checked("sim_recall_ivf")(spark, d)
         .filter(!col("recall_ok")).isEmpty, s"IVF recall below floor at $d: $nh/$nb")
     }
   }
@@ -149,28 +165,27 @@ class SparkEntrySpec extends SparkSpec {
     // asserting the booleans across sfs guards the thresholds against
     // data-shape sensitivity the same way the sim_recall_ivf loop does
     for (d <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
-      val sh = SparkEntry.queries("dedup_simhash")(spark, d).head()
+      val sh = SparkEntry.checked("dedup_simhash")(spark, d).head()
       assert(sh.getBoolean(1), s"simhash banding != exhaustive hamming<=3 at $d")
       assert(sh.getBoolean(2), s"simhash pair below exact-Jaccard 0.8 at $d")
-      val wn = SparkEntry.queries("dedup_winnow")(spark, d).head()
+      val wn = SparkEntry.checked("dedup_winnow")(spark, d).head()
       assert(wn.getBoolean(1), s"winnow screen missed an exact J>=0.8 pair at $d")
       assert(wn.getBoolean(2), s"winnow pair below exact-Jaccard 0.5 at $d")
-      val em = SparkEntry.queries("dedup_embedding")(spark, d).head()
+      val em = SparkEntry.checked("dedup_embedding")(spark, d).head()
       assert(em.getBoolean(1), s"embedding LSH pair outside exact cos>=0.25 set at $d")
       assert(em.getBoolean(2), s"embedding LSH recall below 1% floor at $d")
-      val sd = SparkEntry.queries("dedup_semantic")(spark, d).head()
+      val sd = SparkEntry.checked("dedup_semantic")(spark, d).head()
       assert(sd.getBoolean(1), s"semantic pair outside exact cos>=0.25 set at $d")
       assert(sd.getBoolean(2), s"semantic within-cluster recall below 1/k floor at $d")
-      assert(SparkEntry.queries("text_fingerprint")(spark, d)
+      assert(SparkEntry.checked("text_fingerprint")(spark, d)
         .filter(!col("bounds_ok")).isEmpty, s"winnow sketch size outside bounds at $d")
     }
   }
 
-  test("bench overrides cover exactly the gated sketch queries, with query keys") {
-    // every override must shadow a real query (a typo'd key would make
-    // Bench silently time the gated form again)
-    val unknown = SparkEntry.benchOverrides.keySet.diff(SparkEntry.queries.keySet)
-    assert(unknown.isEmpty, s"benchOverrides keys not in queries: $unknown")
+  test("every checks key has a matching queries entry") {
+    // a typo'd key would leave its query's output unchecked
+    val unknown = SparkEntry.checks.keySet.diff(SparkEntry.queries.keySet)
+    assert(unknown.isEmpty, s"checks keys not in queries: $unknown")
   }
 
   test("tpch_q21 plans the EXISTS / NOT EXISTS pair as one semi and one anti join") {
