@@ -41,7 +41,8 @@ object Engine {
       .config("spark.sql.session.timeZone", "UTC")
       // surface catalog column stats (ANALYZE ... FOR COLUMNS) in
       // LogicalPlan.stats.attributeStats so planners (Q4112.minMaxLongs)
-      // can read min/max with ZERO jobs instead of scanning
+      // read min/max there with ZERO jobs; without them a materialized
+      // cache's per-batch bounds cost one job, anything else one scan
       .config("spark.sql.cbo.planStats.enabled", "true")
       // events.parquet carries TIMESTAMP(NANOS); Spark has no nanos type,
       // so read them as Long and convert explicitly (see nanosToTimestamp)

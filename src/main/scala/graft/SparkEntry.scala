@@ -3635,7 +3635,7 @@ object SparkEntry {
     // 0.375; with n sources the global average concentrates, so
     // exceeding the floor is a stronger statement than per-probe).
     "sim_knn_graph" -> ((s, dir) =>
-      Similarity.knnGraphCached(t(s, dir, "embeddings"), "vec_id", "embedding",
+      Similarity.knnGraph(t(s, dir, "embeddings"), "vec_id", "embedding",
         k = 5, nCentroids = 8, nProbe = 3)
         .select(col("src_id"), col("dst_id"), col("rank"))),
     // Product quantization (Jégou TPAMI'11) as a GATED surface: 96-bit
@@ -5261,12 +5261,9 @@ object SparkEntry {
     "sim_topk_ivf" -> ((s, dir, run) =>
       annRanks(run, "probe_id", 5)
         .crossJoin(annRecall(bruteTopK(t(s, dir, "embeddings"), 5), run, 0.375))),
-    // the uncached knnGraph is the reference of the shared materialized
-    // relation; structure and recall are read from the run
+    // structure and recall are read from the run
     "sim_knn_graph" -> ((s, dir, run) => {
       val e = t(s, dir, "embeddings")
-      requireSameRows(run, Similarity.knnGraph(e, "vec_id", "embedding",
-        k = 5, nCentroids = 8, nProbe = 3))
       val g = run.select(col("src_id").as("probe_id"), col("dst_id").as("corpus_id"),
         col("rank"))
       val brute = Similarity.bruteForceTopK(e, "vec_id", "embedding",

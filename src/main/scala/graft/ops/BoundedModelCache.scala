@@ -15,12 +15,6 @@ package graft.ops
   *    miss on the same key may train twice, but the trainers are
   *    deterministic (pure functions of the input), so either result is
   *    identical and the first write wins.
-  *  - `onRemove` release hook, fired for every value that leaves the
-  *    cache (LRU eviction, `clear()`, and the loser of a concurrent
-  *    train race): values that pin executor-side state — checkpointed
-  *    DataFrames hold RDD blocks in the BlockManager — must be
-  *    unpersisted explicitly, or the "evicted" memory stays resident
-  *    until GC + ContextCleaner happen to reclaim it.
   *
   * Reuse is keyed on plan-object equality of the CANONICALIZED logical
   * plan (Spark's own sameResult notion) — deliberately not a printed
@@ -30,19 +24,11 @@ package graft.ops
   * canonicalized-equal plan over CHANGED underlying data returns the
   * stale model; callers that mutate data in place must `clear()`.
   */
-private[graft] final class BoundedModelCache[K, V](
-    capacity: Int, onRemove: V => Unit = (_: V) => ()) {
+private[graft] final class BoundedModelCache[K, V](capacity: Int) {
   require(capacity > 0)
 
-  private def release(v: V): Unit =
-    try onRemove(v) catch { case scala.util.control.NonFatal(_) => () }
-
   private val map = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = {
-      val evict = size() > capacity
-      if (evict) release(e.getValue)
-      evict
-    }
+    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size() > capacity
   }
 
   def getOrElseTrain(key: K)(train: => V): V = {
@@ -52,14 +38,11 @@ private[graft] final class BoundedModelCache[K, V](
       val trained = train // long-running; never under the lock
       map.synchronized {
         val raced = map.get(key)
-        if (raced != null) { release(trained); raced } // loser's value leaves
+        if (raced != null) raced
         else { map.put(key, trained); trained }
       }
     }
   }
 
-  def clear(): Unit = map.synchronized {
-    map.values().forEach(v => release(v))
-    map.clear()
-  }
+  def clear(): Unit = map.synchronized(map.clear())
 }

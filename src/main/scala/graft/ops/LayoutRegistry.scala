@@ -25,7 +25,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    and every column name.
   *
   * Staleness contract — identical to every relation-keyed cache here
-  * (Q4112.denseCache, Similarity.knnCache): a canonicalized-equal plan
+  * (Q4112.denseCache and its siblings): a canonicalized-equal plan
   * over CHANGED underlying data returns the stale layout; callers that
   * replace data under an unchanged plan must [[clear]] at the boundary
   * (Q4112.clearRelationCaches does it). Registration is validated: the

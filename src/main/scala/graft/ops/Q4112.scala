@@ -5,9 +5,11 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, GenericInternalRow}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.columnar.{SimpleMetricsCachedBatch, SimpleMetricsCachedBatchSerializer}
 import org.apache.spark.sql.execution.{ColumnarToRowExec, ProjectExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
@@ -78,7 +80,11 @@ object Q4112 {
   // (a dimension-table index is built once per table version, not once
   // per query — round-4 measured the per-query build at 17.9 s of
   // cfg18's 28.6 s), (b) min/max column stats for the dense test and
-  // the group domain, and (c) row counts. This is the cache any engine
+  // the group domain, and (c) row counts. (b) and (c) come from the
+  // statistics the relation already has where it has them — catalog
+  // column stats, or the per-batch bounds and row counts of a
+  // materialized columnar cache — and from one job only where it has
+  // none ([[minMaxLongsOpt]]). This is the cache any engine
   // keeps next to its catalog; callers that REPLACE data under an
   // identical plan (e.g. the Matrix harness re-creating a catalog table
   // per config) must call [[clearRelationCaches]] at the boundary.
@@ -106,22 +112,28 @@ object Q4112 {
     LayoutRegistry.clear() // routed layouts are relation-keyed too
   }
 
-  /** min/max per column as Longs, from CATALOG/plan column statistics
-    * when present (ANALYZE TABLE ... FOR COLUMNS; zero jobs) — the
-    * 100 TB path, a planner must not pre-pay a scan for numbers the
-    * catalog already knows — falling back to ONE cached agg scan for
-    * bare un-analyzed sources (paid once per relation, not per query).
+  private def toLong(v: Any): Long = v match {
+    case l: Long => l
+    case i: Int => i.toLong
+    case s: Short => s.toLong
+    case b: Byte => b.toLong
+    case other => throw new IllegalArgumentException(
+      s"non-integral column stat: $other (${other.getClass.getName})")
+  }
+
+  /** min/max per column as Longs (None for an empty relation or an
+    * all-NULL column), from the first source that has them:
+    *  1. CATALOG/plan column statistics (ANALYZE TABLE ... FOR COLUMNS;
+    *     zero jobs) — the 100 TB path, a planner must not pre-pay a scan
+    *     for numbers the catalog already knows;
+    *  2. the per-batch statistics of a materialized columnar cache
+    *     ([[cachedBatchBounds]]; one job that decodes no column);
+    *  3. ONE aggregate over the relation, for anything else: bare
+    *     un-analyzed sources, filtered or derived plans over a cache.
+    * Sources 2 and 3 are paid once per relation, not per query.
     */
   def minMaxLongsOpt(df: DataFrame, cols: Seq[String]): Option[Seq[(Long, Long)]] = {
     val plan = df.queryExecution.optimizedPlan
-    def toLong(v: Any): Long = v match {
-      case l: Long => l
-      case i: Int => i.toLong
-      case s: Short => s.toLong
-      case b: Byte => b.toLong
-      case other => throw new IllegalArgumentException(
-        s"non-integral column stat: $other (${other.getClass.getName})")
-    }
     val fromStats: Option[Seq[(Long, Long)]] = {
       val stats = plan.stats
       val perCol = cols.map { c =>
@@ -135,17 +147,84 @@ object Q4112 {
     }
     fromStats.map(Some(_)).getOrElse {
       minMaxCache.computeIfAbsent((plan.canonicalized, cols), { _ =>
-        val aggs = cols.flatMap(c => Seq(min(col(c)), max(col(c))))
-        val r = df.agg(aggs.head, aggs.tail: _*).head()
-        // an empty relation (or an all-NULL column) yields NULL min/max —
-        // report "no stats" so callers fall back to the plain plan
-        // instead of NPE-ing in the planner (round-9 advice item 3);
-        // toLong, not getLong: int-stored columns aggregate to Int
-        if (cols.indices.exists(i => r.isNullAt(2 * i) || r.isNullAt(2 * i + 1))) None
-        else Some(cols.indices.map(i => (toLong(r.get(2 * i)), toLong(r.get(2 * i + 1)))))
+        cachedBatchBounds(plan, cols).getOrElse {
+          val aggs = cols.flatMap(c => Seq(min(col(c)), max(col(c))))
+          val r = df.agg(aggs.head, aggs.tail: _*).head()
+          // an empty relation (or an all-NULL column) yields NULL min/max —
+          // report "no stats" so callers fall back to the plain plan
+          // instead of NPE-ing in the planner (round-9 advice item 3);
+          // toLong, not getLong: int-stored columns aggregate to Int
+          if (cols.indices.exists(i => r.isNullAt(2 * i) || r.isNullAt(2 * i + 1))) None
+          else Some(cols.indices.map(i => (toLong(r.get(2 * i)), toLong(r.get(2 * i + 1)))))
+        }
       })
     }
   }
+
+  /** The materialized columnar cache whose rows are `plan`'s rows: a
+    * cached relation, or an attribute-only projection of one.
+    */
+  private def materializedCache(plan: LogicalPlan): Option[InMemoryRelation] = (plan match {
+    case r: InMemoryRelation => Some(r)
+    case Project(list, r: InMemoryRelation) if list.forall(_.isInstanceOf[Attribute]) => Some(r)
+    case _ => None
+  }).filter(_.cacheBuilder.isCachedColumnBuffersLoaded)
+
+  /** min/max of `cols` of a materialized columnar cache, from the exact
+    * bounds, null count and row count the cache keeps per batch
+    * (`SimpleMetricsCachedBatch.stats`, the row its own partition
+    * pruning reads): one job over the cached batches that decodes no
+    * column and runs no exchange. A batch whose column is all NULL has
+    * no bounds and is skipped. Some(None) for an empty relation or an
+    * all-NULL column, like the aggregate's NULL min/max.
+    *
+    * None — take the aggregate — when the plan is not such a cache (a
+    * filter's rows lie anywhere inside the batch bounds, and a derived
+    * column has none), when the cache's serializer keeps no per-batch
+    * metrics, or for a column that is not byte, short, int or long. A
+    * cache that is not materialized yet also takes the aggregate, which
+    * materializes it through the cache manager, so the planner never
+    * rebuilds the buffers of a cache that was dropped under a stale plan.
+    */
+  private def cachedBatchBounds(
+      plan: LogicalPlan, cols: Seq[String]): Option[Option[Seq[(Long, Long)]]] =
+    materializedCache(plan)
+      .filter(_.cacheBuilder.serializer.isInstanceOf[SimpleMetricsCachedBatchSerializer])
+      .flatMap { r =>
+        val attrs = cols.map(c => plan.output.find(_.name.equalsIgnoreCase(c)))
+        val stats = r.partitionStatistics
+        if (!attrs.forall(_.exists(a => integralType(a.dataType) && stats.forAttribute.contains(a))))
+          None
+        else {
+          // per column: the ordinals of its lower bound, upper bound,
+          // null count and row count in a batch's stats row, and its type
+          val at = attrs.flatten.map { a =>
+            val s = stats.forAttribute(a)
+            (Array(s.lowerBound, s.upperBound, s.nullCount, s.count).map(stats.schema.indexOf(_)),
+              a.dataType)
+          }
+          val perPart = r.cacheBuilder.cachedColumnBuffers.mapPartitions { batches =>
+            val lo = Array.fill(at.length)(Long.MaxValue)
+            val hi = Array.fill(at.length)(Long.MinValue)
+            val any = new Array[Boolean](at.length)
+            batches.foreach { b =>
+              val row = b.asInstanceOf[SimpleMetricsCachedBatch].stats
+              for (j <- at.indices) {
+                val (o, t) = at(j)
+                if (row.getInt(o(2)) != row.getInt(o(3))) {
+                  lo(j) = math.min(lo(j), toLong(row.get(o(0), t)))
+                  hi(j) = math.max(hi(j), toLong(row.get(o(1), t)))
+                  any(j) = true
+                }
+              }
+            }
+            Iterator.single((lo, hi, any))
+          }.collect()
+          Some(
+            if (!at.indices.forall(j => perPart.exists(_._3(j)))) None
+            else Some(at.indices.map(j => (perPart.map(_._1(j)).min, perPart.map(_._2(j)).max))))
+        }
+      }
 
   /** [[minMaxLongsOpt]] for callers that have already proven the relation
     * non-empty; throws on missing stats (empty/all-NULL input).
@@ -154,23 +233,28 @@ object Q4112 {
     minMaxLongsOpt(df, cols).getOrElse(throw new IllegalStateException(
       s"no min/max stats for ${cols.mkString(",")} (empty or all-NULL input)"))
 
-  /** Relation row count from plan/catalog statistics when present (zero
-    * jobs — a cached relation knows its row count, an ANALYZEd table has
-    * stats), else ONE count per relation, cached. Never a scan per query.
+  /** Relation row count with zero jobs where the plan knows it — plan
+    * or catalog statistics (an ANALYZEd table), or the row count a
+    * materialized columnar cache keeps, also under an attribute-only
+    * projection — else ONE count per relation, cached. Never a scan per
+    * query.
     */
-  private def relationRows(df: DataFrame): Long =
-    df.queryExecution.optimizedPlan.stats.rowCount.map(_.toLong).getOrElse {
-      rowCountCache.computeIfAbsent(
-        df.queryExecution.optimizedPlan.canonicalized,
-        _ => java.lang.Long.valueOf(df.count())).longValue()
-    }
+  private def relationRows(df: DataFrame): Long = {
+    val plan = df.queryExecution.optimizedPlan
+    plan.stats.rowCount.orElse(materializedCache(plan).flatMap(_.stats.rowCount))
+      .map(_.toLong).getOrElse {
+        rowCountCache.computeIfAbsent(plan.canonicalized,
+          _ => java.lang.Long.valueOf(df.count())).longValue()
+      }
+  }
 
   /** True when the build side's keys fill a contiguous domain exactly
     * once and small enough for one array — the shape of every
     * surrogate-key dimension, and the precondition for the dense-array
     * perfect-hash probe ([[part1Dense]]/[[part2Dense]]). The cheap test
-    * comes first, from CACHED statistics (catalog column stats or the
-    * once-per-relation min/max scan, plus the relation row count):
+    * comes first, from CACHED statistics (catalog column stats, a
+    * columnar cache's batch statistics or the once-per-relation min/max
+    * scan, plus the relation row count):
     * max − min + 1 == rows. That test alone passes duplicate-plus-gap
     * keys ((1, 1, 3) has min 1, max 3 and 3 rows), so an eligible
     * relation then takes the build itself, which verifies that every
@@ -312,11 +396,61 @@ object Q4112 {
   /** One partition's share of the dense build: its values, and either
     * the first key of an ascending contiguous run (`keys == null`) or
     * every key; `nulls` rows carried a NULL key or value and were not
-    * shipped.
+    * shipped. The values ship as 32-bit offsets from `base`
+    * (`values == null`) when the partition's values span less than 2^32
+    * — every uint32 column of the reference, and half the task-result
+    * bytes of longs — else as longs (`offsets == null`).
     */
-  private final case class DenseBuildChunk(
-      first: Long, keys: Array[Long], values: Array[Long], nulls: Long)
+  private[graft] final case class DenseBuildChunk(
+      first: Long, keys: Array[Long], base: Long, offsets: Array[Int], values: Array[Long],
+      nulls: Long) {
+    def length: Int = if (offsets != null) offsets.length else values.length
 
+    /** Value `i`, widened back from its offset. */
+    def value(i: Int): Long = if (offsets != null) base + (offsets(i) & 0xFFFFFFFFL) else values(i)
+
+    /** Write every value into `arr` from `at` on. */
+    def copyInto(arr: Array[Long], at: Int): Unit =
+      if (offsets == null) System.arraycopy(values, 0, arr, at, values.length)
+      else {
+        var i = 0
+        while (i < offsets.length) { arr(at + i) = value(i); i += 1 }
+      }
+  }
+
+  private[graft] object DenseBuildChunk {
+
+    /** The chunk of `values`, narrowed to 32-bit offsets from their
+      * minimum when their range max − min is at most 2^32 − 1.
+      */
+    def encode(first: Long, keys: Array[Long], values: Array[Long], nulls: Long): DenseBuildChunk = {
+      var lo = Long.MaxValue
+      var hi = Long.MinValue
+      var i = 0
+      while (i < values.length) {
+        lo = math.min(lo, values(i)); hi = math.max(hi, values(i)); i += 1
+      }
+      // hi − lo wraps past Long.MaxValue, but read unsigned it is the
+      // exact range
+      if (values.isEmpty || java.lang.Long.compareUnsigned(hi - lo, 0xFFFFFFFFL) > 0)
+        DenseBuildChunk(first, keys, 0L, null, values, nulls)
+      else {
+        val offsets = new Array[Int](values.length)
+        i = 0
+        while (i < values.length) { offsets(i) = (values(i) - lo).toInt; i += 1 }
+        DenseBuildChunk(first, keys, lo, offsets, null, nulls)
+      }
+    }
+  }
+
+  /** The dense build behind [[denseValuesArray]]: one job whose tasks
+    * read their partition's (key, value) batches and ship one
+    * [[DenseBuildChunk]] each, values as 32-bit offsets where the
+    * partition's range allows; the driver widens each chunk into the
+    * value array as it arrives and broadcasts that `Array[Long]`. Left
+    * with the reason when the keys or values break the dense contract:
+    * a NULL, a key outside [min, max], or a key twice or never.
+    */
   private def buildDenseValuesArray(
       items: DataFrame,
       itemKey: String,
@@ -338,12 +472,15 @@ object Q4112 {
     // batches natively; when the partition's keys are already an
     // ascending contiguous run — true for every range-partitioned
     // surrogate-key dim, e.g. spark.range output or a key-sorted parquet
-    // file — ship ONLY the values (8 B/key, keys reconstructed from the
-    // run start) and fill with one arraycopy. Non-contiguous partitions
-    // fall back to (keys, values) pairs. Either way the driver-side
+    // file — ship ONLY the values (keys reconstructed from the run
+    // start) and fill with one pass. Non-contiguous partitions fall back
+    // to (keys, values) pairs. The values ship as 4 B offsets where the
+    // partition's values span less than 2^32, else as 8 B longs
+    // ([[DenseBuildChunk]]): moving 8 B task results to the driver was
+    // most of the build's job (1e7 keys on 4 cores: 80 MB in a 0.48-0.60 s
+    // job; 40 MB at 4 B, 0.32-0.42 s). Either way the driver-side
     // assembly is the same data path Spark's own BroadcastExchangeExec
-    // uses (task results → build relation), at half the bytes on the
-    // fast path.
+    // uses (task results → build relation).
     val src = batchSource(items, Seq(itemKey, valueCol))
     val (kInt, vInt) = (src.isInt(0), src.isInt(1))
     val chunkOf = (bs: Iterator[ColumnarBatch]) => {
@@ -372,7 +509,7 @@ object Q4112 {
         }
       }
       val varr = vs.result()
-      if (contiguous) DenseBuildChunk(first, null, varr, nulls)
+      if (contiguous) DenseBuildChunk.encode(first, null, varr, nulls)
       else {
         // keys recorded only after the break — rebuild the full key array
         val tail = ks.result()
@@ -381,7 +518,7 @@ object Q4112 {
         var i = 0
         while (i < nContig) { all(i) = first + i; i += 1 }
         System.arraycopy(tail, 0, all, nContig, tail.length)
-        DenseBuildChunk(first, all, varr, nulls)
+        DenseBuildChunk.encode(first, all, varr, nulls)
       }
     }
     val arr = new Array[Long](n.toInt)
@@ -401,8 +538,8 @@ object Q4112 {
     // stream each partition's chunk into the target array AS IT ARRIVES
     // (runJob resultHandler — serialized calls, happens-before on
     // return) instead of collect()-ing all chunks first: the driver
-    // never holds the full 8-16 B/key chunk set NEXT TO `arr`, and each
-    // chunk is unreachable the moment its arraycopy finishes. Halves
+    // never holds the full 4-16 B/key chunk set NEXT TO `arr`, and each
+    // chunk is unreachable the moment it is copied in. Halves
     // peak driver allocation at inner=1e8 — the allocation spike that
     // made build times swing 3-58 s under a loaded heap (SCALING.md
     // round-4 footnote). A fault is recorded, not thrown: an exception
@@ -411,12 +548,11 @@ object Q4112 {
       nulls += c.nulls
       if (fault == null) {
         if (c.keys == null) {
-          if (c.values.nonEmpty && place(c.first - mn, c.values.length))
-            System.arraycopy(c.values, 0, arr, (c.first - mn).toInt, c.values.length)
+          if (c.length > 0 && place(c.first - mn, c.length)) c.copyInto(arr, (c.first - mn).toInt)
         } else {
           var i = 0
           while (fault == null && i < c.keys.length) {
-            if (place(c.keys(i) - mn, 1)) arr((c.keys(i) - mn).toInt) = c.values(i)
+            if (place(c.keys(i) - mn, 1)) arr((c.keys(i) - mn).toInt) = c.value(i)
             i += 1
           }
         }
@@ -804,11 +940,12 @@ object Q4112 {
     * columns: the kernel reads any other type through a cast to long,
     * which would merge groups (2.5 and 2.0 both read 2).
     */
-  private def integralColumn(df: DataFrame, c: String): Boolean =
-    df.schema(c).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
+  private def integralColumn(df: DataFrame, c: String): Boolean = integralType(df.schema(c).dataType)
+
+  private def integralType(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
 
   /** The group domain of `orders` as (min group, slots), from the cached
     * min/max statistics [[part2Adaptive]] routes on (same columns, so

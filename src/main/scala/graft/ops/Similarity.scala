@@ -282,11 +282,9 @@ object Similarity {
     // only checkpoint when re-scanning the input is actually expensive
     // (joins/aggregates/windows in its plan — the IVF route / window
     // rank / all-pairs generators). An already-materialized input (a
-    // CACHED checkpointed kNN relation, [[knnGraphCached]]) must not be
-    // checkpointed AGAIN: that second pinned RDD is
-    // invisible to the cache's unpersist hook, which walks only the
-    // outer plan, so it would leak BlockManager memory on every
-    // cache eviction.
+    // checkpointed or cached neighbor list) must not be checkpointed
+    // AGAIN: that second pinned RDD is invisible to whoever releases
+    // the first, so it would leak BlockManager memory.
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Window => WindowNode}
     val expensiveRescan = slim.queryExecution.optimizedPlan.collectFirst {
       case j: Join => j
@@ -299,59 +297,6 @@ object Similarity {
           col("a.corpus_id") === col("b.probe_id"))
       .filter(col("a.probe_id") < col("a.corpus_id"))
       .select(col("a.probe_id").as("src"), col("a.corpus_id").as("dst"))
-  }
-
-  /** Release a cached checkpointed relation the moment it leaves the
-    * cache: `localCheckpoint(true)` pins RDD blocks in the BlockManager,
-    * and dropping the DataFrame reference alone leaves those blocks
-    * resident until GC + ContextCleaner race to reclaim them — the same
-    * memory-pressure mode the Matrix rep hygiene fixes. The checkpointed
-    * RDD is the one the plan's LogicalRDD leaf wraps.
-    */
-  private def unpersistCheckpointed(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  private val knnCache =
-    new BoundedModelCache[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Int, Int, Int), DataFrame](capacity = 4, onRemove = unpersistCheckpointed)
-
-  private[graft] def clearKnnGraphCache(): Unit = knnCache.clear()
-
-  /** [[knnGraph]] materialized once per (corpus plan, k, nCentroids,
-    * nProbe) — the neighbor-list relation itself, shared by every
-    * consumer that ranks the same corpus, where each private re-run
-    * pays the full IVF route + window rank (~1.5 s at sf0.1). The list
-    * is ≤ k·n slim rows; same build-once-per-table-version contract as
-    * the other relation caches, and [[clearKnnGraphCache]] is the
-    * boundary for callers that replace data under an unchanged plan.
-    */
-  def knnGraphCached(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, nCentroids: Int, nProbe: Int): DataFrame = {
-    val key = (corpus.select(col(idCol), col(vecCol))
-      .queryExecution.optimizedPlan.canonicalized, k, nCentroids, nProbe)
-    knnCache.getOrElseTrain(key) {
-      val ckpt = knnGraph(corpus, idCol, vecCol, k, nCentroids, nProbe)
-        .localCheckpoint(true)
-      // the cached artifact's SCAN width, not the build's: bucketRank
-      // spreads the build across the session (its cosine ranking is the
-      // expensive stage), but the materialized neighbor list is ≤ k·n
-      // slim rows scanned repeatedly by every consumer — left at the
-      // build's width, each steady-state scan paid one tiny task per
-      // core (measured: sim_knn_classify 0.21 → 0.65 s in the bench,
-      // ~10 s of per-rep task time for a ~40k-row scan). Coalesce (a
-      // narrow op over the already-materialized blocks — nothing is
-      // recomputed) to the corpus' data-derived width: bytes/256 KB,
-      // capped at the session width, so at scale this keeps every core
-      // busy and locally it stops shattering a sub-MB relation
-      // (optimization round 12, guide §2.6).
-      val width = Dedup.linearParallelism(corpus.select(col(idCol), col(vecCol)))
-      if (ckpt.rdd.getNumPartitions > width) ckpt.coalesce(width) else ckpt
-    }
   }
 
   /** kNN majority-vote label prediction over a neighbor list: each

@@ -673,6 +673,58 @@ class Q4112Spec extends SparkSpec {
     assert(e.getMessage.contains("exactly once"), e.getMessage)
   }
 
+  test("dense build ships 32-bit offsets within a partition's value range, and answers as longs") {
+    val spark2 = spark
+    import spark2.implicits._
+    val span = 0xFFFFFFFFL // 2^32 - 1
+    // the narrow encoding exactly up to a range of 2^32 - 1
+    assert(DenseBuildChunk.encode(1L, null, Array(-7L, -7L + span, 5L), 0L).offsets != null)
+    assert(DenseBuildChunk.encode(1L, null, Array(-7L, -7L + span + 1L), 0L).offsets == null)
+    assert(DenseBuildChunk.encode(1L, null, Array(Long.MinValue, Long.MaxValue), 0L).offsets == null)
+    val narrow = DenseBuildChunk.encode(1L, null, Array(Long.MaxValue, Long.MaxValue - span), 0L)
+    assert(narrow.offsets != null)
+    assert(Seq(narrow.value(0), narrow.value(1)) === Seq(Long.MaxValue, Long.MaxValue - span))
+    // the broadcast array over keys 1..n, one partition per price list
+    def built(partitions: Seq[Long]*): Seq[Long] = {
+      Q4112.clearRelationCaches()
+      val starts = partitions.scanLeft(1L)(_ + _.length)
+      val items = spark.sparkContext
+        .parallelize(partitions.indices.map(p => (starts(p), partitions(p))), partitions.length)
+        .flatMap { case (first, ps) => ps.indices.map(i => (first + i, ps(i))) }
+        .toDF("id", "price")
+      assert(items.rdd.glom().collect().map(_.length).toSeq === partitions.map(_.length))
+      val (bc, mn) = Q4112.denseValuesArray(items, "id", "price")
+      assert(mn === 1L)
+      bc.value.toSeq
+    }
+    for (parts <- Seq(
+        Seq(Seq(-5L, 3L, -1000000000000L), Seq(7L, -1L)),        // negative prices
+        Seq(Seq(-3L, -3L + span, 0L), Seq(1L << 40, (1L << 40) - span)), // range 2^32 - 1
+        Seq(Seq(-3L, -3L + span + 1L), Seq(0L, span + 1L)),      // range 2^32
+        Seq(Seq(Long.MinValue, Long.MaxValue, 0L), Seq(Long.MaxValue), Seq(Long.MinValue))))
+      try assert(built(parts: _*) === parts.flatten, parts)
+      finally Q4112.clearRelationCaches()
+    // the dense contract's stated reasons, with narrow and wide values
+    def reason(rows: (java.lang.Long, java.lang.Long)*): String = {
+      Q4112.clearRelationCaches()
+      try intercept[IllegalArgumentException](
+        Q4112.denseValuesArray(rows.toDF("id", "price"), "id", "price")).getMessage
+      finally Q4112.clearRelationCaches()
+    }
+    for (big <- Seq(30L, 1L << 40)) {
+      // a duplicate plus a gap passes min, max and rows
+      val dupGap = reason((1L, 10L), (1L, 20L), (3L, big))
+      assert(dupGap.contains("exactly once") && dupGap.contains("occurs twice"), dupGap)
+      val nullValue = reason((1L, 10L), (2L, null), (3L, big))
+      assert(nullValue.contains("1 rows carry a NULL"), nullValue)
+      // keys 1, 2, 4 and a NULL: min 1, max 4 and 4 rows pass too
+      val nullKey = reason((1L, 10L), (2L, 20L), (4L, big), (null, 5L))
+      assert(nullKey.contains("1 rows carry a NULL"), nullKey)
+      val allNull = reason((null, 10L), (null, big))
+      assert(allNull.contains("'id' is all NULL"), allNull)
+    }
+  }
+
   test("priceOf closed form equals the generator's column expression") {
     val cfg = GenConfig(1000, 1.0, 99999, 5000, 1.0, 99999, 0, 0, 0.0, seed = 4112)
     val items = Q4112Gen.items(spark, cfg).collect()

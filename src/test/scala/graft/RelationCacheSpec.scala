@@ -24,9 +24,9 @@ class RelationCacheSpec extends SparkSpec {
       override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(l)
-    // listener events post asynchronously; give the bus time to drain
-    // so a late job-start can't escape a zero-jobs assertion
-    try { body; Thread.sleep(1500) }
+    // listener events post asynchronously; drain the bus so a late
+    // job-start can't escape a job-count assertion
+    try { body; bridge.drainListenerBus(spark.sparkContext) }
     finally spark.sparkContext.removeSparkListener(l)
     n.get()
   }
@@ -78,6 +78,121 @@ class RelationCacheSpec extends SparkSpec {
     }
     assert(jobs === 0, s"repeat over an unchanged relation must be free, ran $jobs")
     Q4112.clearRelationCaches()
+  }
+
+  // 30000 rows in 3 partitions, so 3 cached batches of 10000 rows: an
+  // int and a long column, both with negative values, and NULLs in the
+  // first batch only
+  private def mixed() = spark.range(0L, 30000L, 1L, 3).select(
+    when(col("id") % 7 === 3 && col("id") < 10000, lit(null))
+      .otherwise((col("id") - 20000).cast("int")).as("i"),
+    when(col("id") % 11 === 5 && col("id") < 10000, lit(null))
+      .otherwise((col("id") - 12345) * -1000000007L).as("l"))
+
+  private def aggMinMax(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) = {
+    val aggs = cols.flatMap(c => Seq(min(col(c)), max(col(c))))
+    val r = df.agg(aggs.head, aggs.tail: _*).head()
+    cols.indices.map(i =>
+      (r.getAs[Number](2 * i).longValue, r.getAs[Number](2 * i + 1).longValue))
+  }
+
+  private def withCached[T](df: org.apache.spark.sql.DataFrame)(
+      body: org.apache.spark.sql.DataFrame => T): T = {
+    val cached = df.cache()
+    try body(cached)
+    finally { cached.unpersist(blocking = true); Q4112.clearRelationCaches() }
+  }
+
+  test("minMaxLongs reads a materialized cache's batch statistics in one job") {
+    Q4112.clearRelationCaches()
+    val expected = aggMinMax(mixed(), Seq("i", "l"))
+    assert(expected.head._1 < 0L && expected(1)._1 < 0L, expected)
+    withCached(mixed()) { cached =>
+      assert(cached.rdd.getNumPartitions === 3)
+      cached.count()
+      var got: Seq[(Long, Long)] = Nil
+      assert(countJobs { got = Q4112.minMaxLongs(cached, Seq("i", "l")) } === 1)
+      assert(got === expected)
+      // an attribute-only projection of the cache reads the same batches
+      val reordered = cached.select(col("l"), col("i"))
+      assert(countJobs { got = Q4112.minMaxLongs(reordered, Seq("l", "i")) } === 1)
+      assert(got === expected.reverse)
+      // and its row count is the cache's: a dense test that finds the
+      // keys gappy runs the key's stats job and no count
+      assert(countJobs { assert(!Q4112.denseEligible(reordered, "l", "i")) } === 1)
+      // the answer is cached per relation: asking again runs no job
+      assert(countJobs { got = Q4112.minMaxLongs(cached, Seq("i", "l")) } === 0)
+      assert(got === expected)
+    }
+  }
+
+  test("an all-NULL cached column has no batch bounds, and part2Adaptive falls back") {
+    Q4112.clearRelationCaches()
+    val items = spark.range(1L, 101L, 1L, 3).select(col("id"), (col("id") % 13).as("price"))
+      .cache()
+    try {
+      withCached(spark.range(0L, 30000L, 1L, 3).select((col("id") % 100 + 1).as("itemId"),
+          (col("id") % 9).as("quantity"), lit(null).cast("long").as("storeId"))) { orders =>
+        items.count(); orders.count()
+        var got: Option[Seq[(Long, Long)]] = Some(Nil)
+        assert(countJobs { got = Q4112.minMaxLongsOpt(orders, Seq("storeId")) } === 1)
+        assert(got === None)
+        val adaptive = Q4112.part2Adaptive(items, orders, "id", "itemId", "price", "quantity",
+          "storeId").head().getLong(0)
+        assert(Q4112.lastChosenPlan === "partial", Q4112.lastChosenPlan)
+        assert(adaptive === Q4112.part2(items, orders, "id", "itemId", "price", "quantity",
+          "storeId").head().getLong(0))
+      }
+    } finally items.unpersist(blocking = true)
+  }
+
+  test("a filtered cache and an unmaterialized cache still get the exact min/max") {
+    Q4112.clearRelationCaches()
+    // a filter keeps rows anywhere inside its batches' bounds, so only
+    // the aggregate knows its exact min/max
+    val filtered = (df: org.apache.spark.sql.DataFrame) =>
+      df.where(col("i") > -15000 && col("i") < 5000)
+    val expected = aggMinMax(filtered(mixed()), Seq("i", "l"))
+    assert(expected.head === ((-14998L, 4999L))) // i = -14999 is NULL
+    withCached(mixed()) { cached =>
+      cached.count()
+      assert(Q4112.minMaxLongs(filtered(cached), Seq("i", "l")) === expected)
+    }
+    // a cache that no job has materialized yet
+    withCached(mixed()) { cached =>
+      assert(Q4112.minMaxLongs(cached, Seq("i", "l")) === aggMinMax(mixed(), Seq("i", "l")))
+    }
+  }
+
+  test("a cold plan over materialized cached relations runs only the stats jobs and the build") {
+    Q4112.clearRelationCaches()
+    val items = spark.range(1L, 2001L, 1L, 4)
+      .select(col("id"), (col("id") * 7 % 1000).as("price")).cache()
+    val orders = spark.range(0L, 40000L, 1L, 4).select((col("id") % 2000 + 1).as("itemId"),
+      (col("id") % 9).as("quantity"), (col("id") % 500).as("storeId")).cache()
+    try {
+      items.count(); orders.count()
+      var df: org.apache.spark.sql.DataFrame = null
+      // part 1: the key's batch statistics and the dense build
+      assert(countJobs {
+        df = Q4112.part1Adaptive(items, orders, "id", "itemId", "price", "quantity")
+      } === 2)
+      assert(Q4112.lastChosenPlan === "dense", Q4112.lastChosenPlan)
+      assert(df.head().getLong(0) === Q4112.part1(items, orders, "id", "itemId", "price",
+        "quantity").head().getLong(0))
+      // part 2: those two, and the group column's batch statistics
+      Q4112.clearRelationCaches()
+      assert(countJobs {
+        df = Q4112.part2Adaptive(items, orders, "id", "itemId", "price", "quantity", "storeId")
+      } === 3)
+      assert(Q4112.lastChosenPlan === "partial_dense", Q4112.lastChosenPlan)
+      assert(df.head().getLong(0) === Q4112.part2(items, orders, "id", "itemId", "price",
+        "quantity", "storeId").head().getLong(0))
+    } finally {
+      items.unpersist(blocking = true)
+      orders.unpersist(blocking = true)
+      Q4112.clearRelationCaches()
+    }
   }
 
   test("part2Adaptive plans a repeat query over an unchanged relation with zero jobs") {

@@ -246,9 +246,9 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("mutualEdges does not re-checkpoint a cheap-to-rescan input") {
-    // a cached kNN relation (knnGraphCached) is ALREADY materialized;
-    // a second localCheckpoint there would pin RDD blocks the
-    // cache's unpersist hook never sees (it walks only the outer plan)
+    // an already-materialized neighbor list must not be checkpointed
+    // again: a second localCheckpoint would pin RDD blocks that whoever
+    // releases the first never sees
     val knn = Seq((1L, 2L), (2L, 1L), (1L, 3L)).toDF("probe_id", "corpus_id")
     val edges = Similarity.mutualEdges(knn)
     val hasRddLeaf = edges.queryExecution.optimizedPlan.collectLeaves().exists {
