@@ -2,14 +2,18 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.FlajoletMartin
-import graft.ops._
+import graft.queries._
 
 /** Driver contract — see SURVEY.md §7.
   *
   * Every operator from SURVEY.md §2 (plus the beyond-reference pipeline
   * operators) is exposed as a named query over the driver testdata
   * (TESTDATA.md), with a DuckDB-equivalent oracle SQL where expressible.
+  * Each query is one [[SparkEntry.Record]] in its family's file under
+  * `graft/queries/`, which keeps its run body, check and oracle SQL
+  * together; to add a query, add one record to its family's `records`.
+  * This object holds the registry built from those records and the
+  * helpers two or more families share.
   *
   * q4112 → testdata mapping: items := part(p_partkey, floor(p_retailprice)),
   * orders := lineitem(l_partkey FK, l_suppkey group key, floor(l_quantity)).
@@ -18,7 +22,7 @@ import graft.ops._
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     Engine.table(s, dir, name)
 
   /** Spread a CPU-heavy per-row stage across the session's cores when the
@@ -33,16 +37,10 @@ object SparkEntry {
     * repartition on a caller-chosen key, not round-robin, so no
     * sort-before-repartition pass is paid (guide §2.5).
     */
-  private def spreadForCpu(df: DataFrame, key: Column): DataFrame = {
+  private[graft] def spreadForCpu(df: DataFrame, key: Column): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= cores) df else df.repartition(cores, key)
   }
-
-  /** sql_recursive_cyclic's simple-path depth cap, shared by the Spark
-    * query and its DuckDB oracle so a future testdata change cannot
-    * silently diverge the two recursions.
-    */
-  private val recursiveDepthCap = 6
 
   /** Cramer solve of the 3-unknown least-squares normal equations from
     * the 9 Gram sums (n, s1, s2, s11, s12, s22, sy, s1y, s2y), in
@@ -71,99 +69,6 @@ object SparkEntry {
     (milli(det0), milli(det1), milli(det2), ok)
   }
 
-  /** The standing corpus's winnow sketch store as a PERSISTED session
-    * table (written once per session) — the state a real ingest
-    * pipeline keeps between shards, shared by the run bodies of the
-    * winnow-index queries (dedup_incremental, dedup_stream_probe, ...)
-    * so they time the probe or the update, not the index build.
-    * Standing = documents outside the doc_id % 10 = 0 shard bucket.
-    */
-  private def standingSketchTable(s: SparkSession, dir: String): DataFrame = {
-    val tbl = s"dedup_inc_sketches_${sessionKey(s, dir)}"
-    if (!s.catalog.tableExists(tbl)) {
-      val path = tmpPath(s"graft-$tbl")
-      Dedup.winnowSketches(
-          t(s, dir, "documents").filter(!(col("doc_id") % 10 === 0)),
-          "doc_id", "text", k = 5, w = 4)
-        .write.mode("overwrite").option("path", path)
-        .format("parquet").saveAsTable(tbl)
-    }
-    s.table(tbl)
-  }
-
-  /** The standing store's maintained per-fingerprint df counts as a
-    * PERSISTED session table (written once) — the valve input the
-    * indexed probe reads instead of recounting (ModelStore's store
-    * layout, bench-shared like [[standingSketchTable]]).
-    */
-  private def standingDfTable(s: SparkSession, dir: String): DataFrame = {
-    val tbl = s"dedup_inc_df_${sessionKey(s, dir)}"
-    if (!s.catalog.tableExists(tbl)) {
-      val path = tmpPath(s"graft-$tbl")
-      ModelStore.winnowDfCounts(standingSketchTable(s, dir))
-        .write.mode("overwrite").option("path", path)
-        .format("parquet").saveAsTable(tbl)
-    }
-    s.table(tbl)
-  }
-
-  /** items-analog: (p_partkey, price: Long). */
-  private def partItems(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part").select(col("p_partkey"), floor(col("p_retailprice")).as("price"))
-
-  /** orders-analog: (l_partkey, l_suppkey, quantity: Long). */
-  private def liOrders(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .select(col("l_partkey"), col("l_suppkey"), floor(col("l_quantity")).as("quantity"))
-
-  /** `orders` with l_suppkey relabelled as l_suppkey · 65537, plus 2^22
-    * for odd keys: the same groups (even keys land on multiples of 65537,
-    * odd ones 65473 past one, so the map is injective) over a domain of
-    * 2^22 to 2^27 slots at every scale from sf0.001 (~4.7e6) to sf0.1
-    * (~7.0e7).
-    */
-  private def wideSuppkey(orders: DataFrame): DataFrame =
-    orders.withColumn("l_suppkey",
-      col("l_suppkey") * 65537L + col("l_suppkey") % 2L * (1L << 22))
-
-  /** text_clean_segments' whole pipeline, shared by the run body and
-    * the reference its check compares it to, so the segmentation, df
-    * threshold, and ordered-reassembly semantics cannot drift: segment
-    * df counted on the segment TEXT (oracle-exact) or on xxhash64 keys
-    * (8-byte shuffle rows, the at-scale form).
-    */
-  private def cleanSegments(docs: DataFrame, hashedDf: Boolean): DataFrame = {
-    val segs = docs
-      .select(col("doc_id"), split(col("text"), " ").as("words"))
-      .select(col("doc_id"), posexplode(expr(
-        "transform(sequence(0, cast(ceil(size(words) / 10.0) as int) - 1)," +
-          " i -> array_join(slice(words, i * 10 + 1, 10), ' '))")))
-      .select(col("doc_id"), col("pos"), col("col").as("seg"))
-      .withColumn("key", if (hashedDf) xxhash64(col("seg")) else col("seg"))
-    val docFreq = segs.select(col("doc_id"), col("key"))
-      .groupBy(col("key")).agg(countDistinct(col("doc_id")).as("df"))
-    segs.join(docFreq, Seq("key"))
-      .withColumn("kept", col("df") < 2)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_segs"),
-        sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"),
-        expr("concat_ws(' ', transform(array_sort(collect_list(" +
-          "CASE WHEN kept THEN named_struct('pos', pos, 'seg', seg) END))," +
-          " x -> x.seg))").as("clean"))
-      .select(col("doc_id"), col("n_segs"), col("n_kept"),
-        md5(col("clean")).as("clean_md5"),
-        length(col("clean")).cast("long").as("clean_len"))
-  }
-
-  /** 1-row (`name`: boolean) frame: a set-equals b on a's columns (both
-    * anti-join directions empty) — the shared proof shape of every
-    * equality gate. Array-typed columns compare structurally.
-    */
-  private def setEq(a: DataFrame, b: DataFrame, name: String): DataFrame =
-    a.join(b, a.columns.toSeq, "left_anti").agg(count(lit(1)).as("d1"))
-      .crossJoin(b.join(a, a.columns.toSeq, "left_anti").agg(count(lit(1)).as("d2")))
-      .select((col("d1") + col("d2") === 0).as(name))
-
   /** Evaluates a 1-row (long, boolean, boolean) invariant gate EAGERLY,
     * unpersists its scoped caches, and returns the result as a literal
     * row. Gate caches exist only because the gate reads its inputs 2-3×
@@ -171,7 +76,7 @@ object SparkEntry {
     * cached plans in executor storage across Verify + bench repetitions
     * for the session lifetime.
     */
-  private def evalGateRow(s: SparkSession, gate: DataFrame,
+  private[graft] def evalGateRow(s: SparkSession, gate: DataFrame,
       cached: Seq[DataFrame], names: (String, String, String)): DataFrame = {
     val row = try gate.collect()(0) finally cached.foreach(_.unpersist())
     import s.implicits._
@@ -190,7 +95,7 @@ object SparkEntry {
   /** Raises unless `run` and `reference` hold the same rows, duplicates
     * and NULLs included, on `run`'s columns.
     */
-  private def requireSameRows(run: DataFrame, reference: DataFrame): Unit = {
+  private[graft] def requireSameRows(run: DataFrame, reference: DataFrame): Unit = {
     val ref = reference.select(run.columns.toSeq.map(col): _*)
     require(run.exceptAll(ref).isEmpty && ref.exceptAll(run).isEmpty,
       "the run's rows differ from its reference body's")
@@ -200,7 +105,7 @@ object SparkEntry {
     * run holds the rows of `reference`, the body kept as its verifier,
     * and passes the run's rows through unchanged.
     */
-  private def sameRows(reference: Query): Check = (s, dir, run) => {
+  private[graft] def sameRows(reference: Query): Check = (s, dir, run) => {
     requireSameRows(run, reference(s, dir))
     run
   }
@@ -210,317 +115,48 @@ object SparkEntry {
     * each other's files, and one session reading two directories must
     * not read the other's.
     */
-  private def sessionKey(s: SparkSession, dir: String): String =
+  private[graft] def sessionKey(s: SparkSession, dir: String): String =
     s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") + "_" +
       Integer.toHexString(dir.hashCode)
 
-  private def tmpPath(name: String): String =
+  private[graft] def tmpPath(name: String): String =
     new java.io.File(System.getProperty("java.io.tmpdir"), name).getAbsolutePath
 
-  private def pathExists(s: SparkSession, path: String): Boolean = {
+  private[graft] def pathExists(s: SparkSession, path: String): Boolean = {
     val hp = new org.apache.hadoop.fs.Path(path)
     hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
   }
 
-  private def deletePath(s: SparkSession, path: String): Unit =
+  private[graft] def deletePath(s: SparkSession, path: String): Unit =
     try {
       val hp = new org.apache.hadoop.fs.Path(path)
       hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
     } catch { case _: Throwable => () }
 
-  /** Runs `body` with autoBucketedScan off, restoring the session's
-    * value after.
+  /** One named query: the run body, the check that turns its output
+    * into the rows the oracle compares (none when the run's output is
+    * already those rows), and the DuckDB SQL returning those rows.
     */
-  private def withoutAutoBucketedScan[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val old = s.conf.get(key)
-    s.conf.set(key, "false")
-    try body finally s.conf.set(key, old)
+  final case class Record(name: String, run: Query, check: Option[Check] = None,
+      oracle: String)
+
+  /** Every query family's records, one family file each under
+    * `graft/queries/`, rebuilt on every call.
+    */
+  private[graft] def families: Seq[Seq[Record]] = Seq(
+    Q4112Queries.records, JoinQueries.records, AggregationQueries.records,
+    DedupQueries.records, GraphQueries.records, TextQueries.records,
+    CurationQueries.records, CompositeQueries.records, SimilarityQueries.records,
+    MultimodalQueries.records, EventsQueries.records)
+
+  /** `records` by name; raises, naming them, on names registered twice. */
+  private[graft] def byName(records: Seq[Record]): Map[String, Record] = {
+    val twice = records.groupBy(_.name).collect { case (n, rs) if rs.size > 1 => n }
+    require(twice.isEmpty, s"query names registered twice: ${twice.toSeq.sorted.mkString(", ")}")
+    records.map(r => r.name -> r).toMap
   }
 
-  /** Writes `df`, bucketed and sorted on `key` into 8 buckets of one file
-    * each, as the table `<tag>_<sessionKey>` once per session and
-    * directory, and returns the table's name. The write is ingest cost:
-    * the first rep pays it and best-of-N drops it.
-    */
-  private def bucketedOnce(s: SparkSession, dir: String, tag: String, key: String)(
-      df: => DataFrame): String = {
-    val tbl = s"${tag}_${sessionKey(s, dir)}"
-    if (!s.catalog.tableExists(tbl))
-      df.repartition(8, col(key))
-        .write.mode("overwrite").option("path", tmpPath(s"graft-$tbl"))
-        .bucketBy(8, key).sortBy(key)
-        .format("parquet").saveAsTable(tbl)
-    tbl
-  }
-
-  /** The layout gates' row over a grouped run body that reads the
-    * bucketed table `tag`: the group count, the sum of `v`, and whether
-    * the run's plan is exchange-free over a scan clustered on the group
-    * key. The timed noop write plans its own QueryExecution after the
-    * conf restore, where (auto = default true)
-    * DisableUnnecessaryBucketedScan still KEEPS the bucketed scan — it
-    * only drops one no operator benefits from, and the groupBy on the
-    * bucket column benefits; the plan read here is planned the same way.
-    */
-  private def layoutRow(s: SparkSession, dir: String, run: DataFrame, tag: String,
-      v: String, total: String): DataFrame = {
-    val exchangeFree = Q4112.clusteredOn(s.table(s"${tag}_${sessionKey(s, dir)}"), "l_suppkey") &&
-      !run.queryExecution.executedPlan.toString.contains("Exchange")
-    run.agg(count(lit(1)).as("n_groups"), sum(col(v)).as(total))
-      .select(col("n_groups"), col(total), lit(exchangeFree).as("exchange_free_ok"))
-  }
-
-  /** lineitem ⋈ part's (l_suppkey, v = price · quantity) projection, the
-    * row set the joined-bucketed layout materializes.
-    */
-  private def joinedSuppValues(s: SparkSession, dir: String): DataFrame =
-    liOrders(s, dir)
-      .join(broadcast(partItems(s, dir)), col("l_partkey") === col("p_partkey"))
-      .select(col("l_suppkey"), (col("price") * col("quantity")).as("v"))
-
-  /** Posting-list cap of the winnow boilerplate valve: 1% of the corpus,
-    * floor 2, clamped (never Int-truncated) — nDocs > Int.MaxValue must
-    * saturate the cap, not wrap negative and cap everything.
-    */
-  private def docFreqCap(nDocs: Long): Int =
-    math.min(math.max(2L, nDocs / 100L), Int.MaxValue.toLong).toInt
-
-  /** `df`'s (id, payload) rows as a stream-shaped batch: one fixed event
-    * timestamp between them.
-    */
-  private def streamOf(df: DataFrame, id: String, payload: String): DataFrame =
-    df.select(col(id), lit("2026-01-01 00:00:00").cast("timestamp").as("ts"), col(payload))
-
-  /** dq profiles' columns of `orders`. */
-  private val profiledOrderCols =
-    Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
-
-  /** distinct_fm's counted key: injective (l_linenumber ∈ 1..7), so
-    * its ndv = |lineitem|.
-    */
-  private val fmRowKey = (col("l_orderkey") * 10 + col("l_linenumber")).as("k")
-
-  /** set_overlap_kmv's two key sets: the distinct word 5-grams of the
-    * 80% and 20% hash splits of the corpus.
-    */
-  private def overlapGrams(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val docs = t(s, dir, "documents")
-    val b = Sampling.hashBucket(col("doc_id"))
-    def grams(df: DataFrame) = df.select(explode(array_distinct(
-      graft.functions.TextHashFunctions.wordGrams(col("text"), 5))).as("gram"))
-    (grams(docs.filter(b < 80)), grams(docs.filter(b >= 80)))
-  }
-
-  /** gen_q4112's fixed-seed generator configuration. */
-  private val genQ4112Config = graft.model.GenConfig(
-    innerTuples = 1000, innerSelectivity = 1.0, innerValMax = 999,
-    outerTuples = 100000, outerSelectivity = 1.0, outerValMax = 999,
-    groups = 100, hhGroups = 5, hhProbability = 0.8, seed = 77)
-
-  /** The generated data source's rows, and the four id aggregates
-    * source_agg_pushdown pushes into it.
-    */
-  private def genSource(s: SparkSession): DataFrame =
-    s.read.format("graft.sources.GenSource")
-      .option("rows", 20000L).option("seed", 4112L)
-      .option("valMax", 1000000L).option("partitions", 8).load()
-
-  private def idAggregates(d: DataFrame): DataFrame =
-    d.agg(count(lit(1)).as("n"), min(col("id")).as("mn"),
-      max(col("id")).as("mx"), sum(col("id")).as("sm"))
-
-  /** Co-supplier edges (suppliers sharing a part, src < dst) over the
-    * parts whose key is a multiple of `partModulus`.
-    */
-  private def coSupplierEdges(s: SparkSession, dir: String, partModulus: Int): DataFrame = {
-    val ps = t(s, dir, "lineitem")
-      .filter(col("l_partkey") % partModulus === 0)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("sk"))
-      .distinct()
-    ps.as("x").join(ps.as("y"), Seq("p"))
-      .select(col("x.sk").as("src"), col("y.sk").as("dst"))
-      .filter(col("src") < col("dst"))
-  }
-
-  /** (n_nodes, n_edges, n_triangles) of `edges` (src < dst) by a plain
-    * three-way self-join: the reference for Graph.triangleCount's
-    * degree-oriented wedge plan.
-    */
-  private def naiveTriangles(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("src").as("a"), col("dst").as("b")).distinct()
-    val tri = e.as("x").join(e.as("y"), col("x.b") === col("y.a"))
-      .join(e.as("z"), col("z.a") === col("x.a") && col("z.b") === col("y.b"))
-      .agg(count(lit(1)).as("n_triangles"))
-    e.select(explode(array(col("a"), col("b"))).as("n"))
-      .agg(countDistinct(col("n")).as("n_nodes"))
-      .crossJoin(e.agg(count(lit(1)).as("n_edges")))
-      .crossJoin(tri)
-  }
-
-  /** graph_pagerank over the supplier–part bipartite co-occurrence graph
-    * (part nodes offset by 1e6): 10 rounds, stopping early after a
-    * zero-delta round when `tolAbs` = 0, always all 10 when it is -1.
-    */
-  private def coSupplierPageRank(s: SparkSession, dir: String, tolAbs: Long): DataFrame = {
-    val b = t(s, dir, "lineitem")
-      .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
-      .distinct()
-    val pairs = b.select(col("sk").as("id_a"), (col("pk") + 1000000L).as("id_b"))
-    Graph.pageRankFixedPoint(pairs, "id_a", "id_b", iterations = 10, tolAbs = tolAbs)
-  }
-
-  /** text_bpe_train's merge table (rank, lhs, rhs, pair_count), trained
-    * through the session's model cache or around it.
-    */
-  private def bpeMergeRows(s: SparkSession, dir: String, cached: Boolean): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val merges =
-      if (cached) Bpe.trainMerges(docs, "text", rounds = 8)
-      else Bpe.trainMergesUncached(docs, "text", rounds = 8)
-    import s.implicits._
-    merges.zipWithIndex
-      .map { case ((x, y, c), i) => (i + 1L, x, y, c) }
-      .toDF("merge_rank", "lhs", "rhs", "pair_count")
-  }
-
-  /** report_sources with its boilerplate flag from the hashed segment
-    * dedup (16-byte frequency shuffle) or the raw-string one.
-    */
-  private def reportSources(s: SparkSession, dir: String, hashed: Boolean): DataFrame = {
-    val d = t(s, dir, "documents")
-    val per = d.select(col("doc_id"), col("source"),
-      length(col("text")).cast("long").as("nc"),
-      TextAnalysis.tokenCount(col("text")).as("nt"),
-      (TextAnalysis.langId(col("text")) === "en").as("is_en"))
-    val boiler =
-      (if (hashed) TextAnalysis.segmentDedupHashed(d, "doc_id", "text", w = 5, maxDocs = 3)
-       else TextAnalysis.segmentDedup(d, "doc_id", "text", w = 5, maxDocs = 3))
-        .select(col("doc_id"), (col("n_kept") < col("n_segs")).as("has_boiler"))
-    per.join(boiler, Seq("doc_id"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("nc")).as("sum_chars"),
-        sum(col("nt")).as("sum_tokens"),
-        sum(when(col("is_en"), 1L).otherwise(0L)).as("n_en"),
-        sum(when(col("has_boiler"), 1L).otherwise(0L)).as("n_boiler_docs"))
-  }
-
-  /** text_decontaminate: training docs sharing a word 8-gram with the
-    * eval slice (doc_id % 10 == 0), joined on 8-byte gram hashes or on
-    * the exact gram text.
-    */
-  private def decontaminated(s: SparkSession, dir: String, hashGrams: Boolean): DataFrame = {
-    val docs = t(s, dir, "documents")
-    TextAnalysis.decontaminate(
-      docs.filter(col("doc_id") % 10 =!= 0),
-      docs.filter(col("doc_id") % 10 === 0),
-      "doc_id", "text", n = 8, hashGrams = hashGrams)
-  }
-
-  /** text_dup_substrings over literal 20-char substrings, the form DuckDB
-    * replays verbatim: the reference for the rolling-hash run body.
-    */
-  private def dupSubstringsExact(s: SparkSession, dir: String): DataFrame = {
-    val L = 20
-    val grams = t(s, dir, "documents")
-      .select(col("doc_id"), explode(array_distinct(
-        when(length(col("text")) >= L,
-          expr(s"transform(sequence(1, length(text) - ${L - 1}), i -> substring(text, i, $L))"))
-          .otherwise(array()))).as("g"))
-    val dfg = grams.groupBy(col("g"))
-      .agg(countDistinct(col("doc_id")).as("docs"))
-    grams.join(dfg, Seq("g"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_grams"),
-        sum(when(col("docs") >= 2, 1L).otherwise(0L)).as("n_shared_grams"))
-  }
-
-  /** The ANN queries' probes: vec_id ≤ 5. */
-  private def annProbes(e: DataFrame): DataFrame = e.filter(col("vec_id") <= 5)
-
-  /** The ANN queries' PQ model (m = 16, k = 64: 96-bit codes), cached
-    * per session by Quantization.
-    */
-  private def annPq(e: DataFrame): Quantization.PqModel =
-    Quantization.trainPq(e, "vec_id", "embedding", m = 16, k = 64, maxIter = 4)
-
-  /** Exact top-k (probe_id, corpus_id) of the ANN probes. */
-  private def bruteTopK(e: DataFrame, k: Int): DataFrame =
-    Similarity.bruteForceTopK(e, "vec_id", "embedding",
-      annProbes(e), "vec_id", "embedding", k = k)
-      .select(col("probe_id"), col("corpus_id"))
-
-  /** Per-probe STRUCTURE of an ANN result (probe, corpus_id, rank):
-    * exactly k results whose ranks are a permutation of 1..k.
-    */
-  private def annRanks(ann: DataFrame, probe: String, k: Int): DataFrame =
-    ann.groupBy(col(probe))
-      .agg(count(lit(1)).as("n_results"),
-        (count(lit(1)) === k && min(col("rank")) === 1 &&
-          max(col("rank")) === k && countDistinct(col("rank")) === k).as("ranks_ok"))
-
-  /** 1-row count of the exact pairs `brute` that `ann` also returns. */
-  private def annHits(brute: DataFrame, ann: DataFrame, name: String): DataFrame =
-    brute.join(ann.select(col("probe_id"), col("corpus_id")),
-      Seq("probe_id", "corpus_id"), "left_semi")
-      .agg(count(lit(1)).as(name))
-
-  /** 1-row recall_ok: `ann` recovers more than `floor` of `brute`. */
-  private def annRecall(brute: DataFrame, ann: DataFrame, floor: Double): DataFrame =
-    annHits(brute, ann, "n_hit").crossJoin(brute.agg(count(lit(1)).as("n_brute")))
-      .select((col("n_hit") > col("n_brute") * floor).as("recall_ok"))
-
-  /** q4112_layout_routed's two-stage routing proof, run on the RAW
-    * relations: (1) with only a bucketed copy of the probe relation
-    * registered, part2Adaptive's recorded choice must read
-    * bucketed_routed; (2) with the stronger joined-bucketed (group, v)
-    * materialization also registered, the choice must read
-    * joined_bucketed (strictly less query-time work wins). Returns both
-    * routed answers and both choice flags.
-    */
-  private def layoutRoutingProof(s: SparkSession, dir: String): (Long, Long, Boolean, Boolean) = {
-    val sid = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val tblB = s"layout_routed_bkt_$sid"
-    val tblJ = s"layout_routed_jb_$sid"
-    def dropAll(): Unit = Seq(tblB, tblJ).foreach { tb =>
-      try s.sql(s"DROP TABLE IF EXISTS $tb") catch { case _: Throwable => () }
-      deletePath(s, tmpPath(s"graft-$tb"))
-    }
-    try withoutAutoBucketedScan(s) {
-      dropAll()
-      def run(): Long = Q4112.part2Adaptive(partItems(s, dir), liOrders(s, dir),
-        "p_partkey", "l_partkey", "price", "quantity", "l_suppkey")
-        .collect()(0).getLong(0)
-      // stage 1: bucketed copy of the probe relation, same schema
-      liOrders(s, dir)
-        .repartition(8, col("l_suppkey"))
-        .write.mode("overwrite").option("path", tmpPath(s"graft-$tblB"))
-        .bucketBy(8, "l_suppkey").sortBy("l_suppkey")
-        .format("parquet").saveAsTable(tblB)
-      LayoutRegistry.registerBucketed(liOrders(s, dir), "l_suppkey", s.table(tblB))
-      val a = run()
-      val okB = Q4112.lastChosenPlan == "bucketed_routed"
-      // stage 2: query-specific joined materialization, clustered on
-      // the group key — must outrank the bucketed copy
-      joinedSuppValues(s, dir)
-        .repartition(8, col("l_suppkey"))
-        .write.mode("overwrite").option("path", tmpPath(s"graft-$tblJ"))
-        .bucketBy(8, "l_suppkey").sortBy("l_suppkey")
-        .format("parquet").saveAsTable(tblJ)
-      LayoutRegistry.registerJoined(partItems(s, dir), liOrders(s, dir),
-        "p_partkey", "l_partkey", "price", "quantity", "l_suppkey", s.table(tblJ))
-      val b = run()
-      val okJ = Q4112.lastChosenPlan == "joined_bucketed"
-      (a, b, okB, okJ)
-    } finally {
-      // the registry must not outlive the proof: its entries point at
-      // per-session tables dropped right here, and other queries use
-      // the same (liOrders, l_suppkey) plans
-      LayoutRegistry.clear()
-      dropAll()
-    }
-  }
+  private def registry: Map[String, Record] = byName(families.flatten)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -538,4128 +174,7 @@ object SparkEntry {
     * columns run [[checked]], the two composed. No query has a second
     * timed body.
     */
-  def queries: Map[String, Query] = Map(
-    // ------------------------------------------------ q4112 parity (§2.2-2.4)
-    // A1 + J3: broadcast hash join + ungrouped integer AVG (part 1)
-    "q4112_part1" -> ((s, dir) =>
-      Q4112.part1(partItems(s, dir), liOrders(s, dir),
-        "p_partkey", "l_partkey", "price", "quantity", Q4112.BroadcastHash)),
-    // J4-analog: same query, shuffled-hash strategy (reference's q4112_hj)
-    "q4112_part1_shuffle_hash" -> ((s, dir) =>
-      Q4112.part1(partItems(s, dir), liOrders(s, dir),
-        "p_partkey", "l_partkey", "price", "quantity", Q4112.ShuffledHash)
-        .withColumnRenamed("avg_value", "avg_value_sh")),
-    // J1/J2-analog: sort-merge strategy as the third physical engine
-    "q4112_part1_sort_merge" -> ((s, dir) =>
-      Q4112.part1(partItems(s, dir), liOrders(s, dir),
-        "p_partkey", "l_partkey", "price", "quantity", Q4112.SortMerge)
-        .withColumnRenamed("avg_value", "avg_value_sm")),
-    // dense-key array probe ("perfect hash join"): the join collapses to
-    // a bounds-check + array index per probe row, in one kernel loop
-    // over the scan's batches
-    "q4112_part1_dense" -> ((s, dir) =>
-      Q4112.part1Dense(partItems(s, dir), liOrders(s, dir),
-        "p_partkey", "l_partkey", "price", "quantity")
-        .withColumnRenamed("avg_value", "avg_value_dense")),
-    // J1/J2: the reference's nested-loop engines run THE equi-join as a
-    // nested loop (q4112_nlj.c:21-53, q4112_nlj_1.c:5-28) — every probe
-    // row scans the whole build side comparing keys. Express the same
-    // physical operator by denying Catalyst the equi-key extraction: a
-    // (<= AND >=) conjunction is semantically equality but has no
-    // extractable join key, so it plans as BroadcastNestedLoopJoin
-    // (asserted in GraftExtensionsSpec). O(n·m), so scoped to a key
-    // range that terminates at any sf — the reference likewise only
-    // runs its NLJ engines at the small configs (Makefile:7, PDF p.2).
-    "q4112_part1_nlj" -> ((s, dir) => {
-      val it = partItems(s, dir).filter(col("p_partkey") < 2000)
-      val or = liOrders(s, dir).filter(col("l_partkey") < 2000)
-      or.join(broadcast(it),
-          it("p_partkey") <= or("l_partkey") && it("p_partkey") >= or("l_partkey"),
-          "inner")
-        .agg(sum(col("price") * col("quantity")).as("s"), count(lit(1)).as("c"))
-        .select(expr("s div c").as("avg_value_nlj"))
-    }),
-    // A2 + A4 first level: per-group integer AVG
-    "q4112_grouped" -> ((s, dir) =>
-      Q4112.grouped(partItems(s, dir), liOrders(s, dir),
-        "p_partkey", "l_partkey", "price", "quantity", "l_suppkey", Q4112.BroadcastHash)),
-    // A4: full two-level query — integer avg of per-group integer avgs
-    "q4112_part2" -> ((s, dir) =>
-      Q4112.part2(partItems(s, dir), liOrders(s, dir),
-        "p_partkey", "l_partkey", "price", "quantity", "l_suppkey", Q4112.BroadcastHash)),
-    // the statistics plan chooser (stored layout, then the group
-    // domain's cached min/max) through the correctness gate
-    "q4112_part2_adaptive" -> ((s, dir) =>
-      Q4112.part2Adaptive(partItems(s, dir), liOrders(s, dir),
-        "p_partkey", "l_partkey", "price", "quantity", "l_suppkey")),
-    // the dense form past the per-task array cap (the combine cache and
-    // the range-partitioned merge) through the correctness gate in its
-    // own right: the injective relabelling of wideSuppkey keeps the
-    // oracle's groups and answer and widens the domain past 2^22. The
-    // name predates this form; the oracle records key on it.
-    "q4112_part2_packed" -> ((s, dir) =>
-      Q4112.part2DenseAgg(partItems(s, dir), wideSuppkey(liOrders(s, dir)),
-        "p_partkey", "l_partkey", "price", "quantity", "l_suppkey")),
-    // the dense-array partial aggregate through the correctness gate in
-    // its OWN right (not only via the adaptive chooser, whose routing
-    // could change); the form takes its group domain from the same
-    // cached statistics the chooser routes on
-    "q4112_part2_dense_agg" -> ((s, dir) =>
-      Q4112.part2DenseAgg(partItems(s, dir), liOrders(s, dir),
-        "p_partkey", "l_partkey", "price", "quantity", "l_suppkey")),
-    // the adaptive chooser on the widened group domain of
-    // q4112_part2_packed: it must route to range_dense on its own (the
-    // entry throws otherwise). The name predates this form; the oracle
-    // records key on it.
-    "q4112_part2_shared_dense" -> ((s, dir) => {
-      val out = Q4112.part2Adaptive(partItems(s, dir), wideSuppkey(liOrders(s, dir)),
-        "p_partkey", "l_partkey", "price", "quantity", "l_suppkey")
-      require(Q4112.lastChosenPlan == "range_dense",
-        s"router chose ${Q4112.lastChosenPlan}, not range_dense, on a 2^22..2^27 domain")
-      out
-    }),
-    // the adaptive route on RAW nullable-schema parquet facts: no
-    // coalesce, no nullability coercion, and the planner must take the
-    // dense kernel on its own (the entry throws if any other plan is
-    // chosen); the value is oracle-recomputed in DuckDB. Shape:
-    // customers joined to orders grouped by the UNIQUE o_orderkey — the
-    // all-singleton group profile that defeats map-side combining, in a
-    // domain narrow enough for per-task arrays.
-    "q4112_part2_shared_dense_parquet" -> ((s, dir) => {
-      val items = t(s, dir, "customer")
-        .select(col("c_custkey"), (col("c_custkey") % 1000L).as("price"))
-      val orders = t(s, dir, "orders")
-        .select(col("o_custkey"), floor(col("o_totalprice")).as("quantity"),
-          col("o_orderkey"))
-      require(orders.schema.forall(_.nullable),
-        "gate requires raw nullable parquet schemas")
-      val out = Q4112.part2Adaptive(items, orders, "c_custkey", "o_custkey",
-        "price", "quantity", "o_orderkey")
-      require(Q4112.lastChosenPlan == "partial_dense",
-        s"router chose ${Q4112.lastChosenPlan}, not partial_dense, on raw parquet")
-      out
-    }),
-    // the LAYOUT ROUTER through the correctness gate (round-8 verdict
-    // item 1): the user queries the RAW relations; the planner must
-    // discover a registered exchange-free layout by plan identity and
-    // route to it. Two-stage proof in one row: (1) with only a
-    // bucketed copy of the probe relation registered, part2Adaptive's
-    // recorded choice must read bucketed_routed; (2) with the stronger
-    // joined-bucketed (group, v) materialization also registered, the
-    // choice must read joined_bucketed (strictly less query-time work
-    // wins). Both routed answers must agree, and the value itself is
-    // oracle-recomputed from the RAW tables in DuckDB — a lossy layout
-    // write or a broken routed read breaks the hash, not just a flag.
-    "q4112_layout_routed" -> ((s, dir) => withoutAutoBucketedScan(s) {
-      val tbl = bucketedOnce(s, dir, "layout_jb", "l_suppkey")(joinedSuppValues(s, dir))
-      try {
-        LayoutRegistry.registerJoined(partItems(s, dir), liOrders(s, dir),
-          "p_partkey", "l_partkey", "price", "quantity", "l_suppkey", s.table(tbl))
-        Q4112.part2Adaptive(partItems(s, dir), liOrders(s, dir),
-          "p_partkey", "l_partkey", "price", "quantity", "l_suppkey")
-      } finally {
-        // routing is consulted at PLAN time (the call above), so the
-        // registration can be dropped before the timed collect — and it
-        // must be: q4112_part2_adaptive later in the same session uses
-        // the same (plans, group key) and must measure the stats path,
-        // not a silent reroute
-        LayoutRegistry.clear()
-      }
-    }),
-
-    // ------------------------------------------------ join library (§2.2 generalized)
-    "join_semi" -> ((s, dir) => {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      Joins.semi(c, o, c("c_custkey") === o("o_custkey")).select(col("c_custkey"))
-    }),
-    "join_anti" -> ((s, dir) => {
-      // orders whose customer is NOT in the BUILDING segment (filter +
-      // anti-join; every custkey has orders in this data, so the filter
-      // is what makes the anti side non-trivial)
-      val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val o = t(s, dir, "orders")
-      Joins.anti(o, c, o("o_custkey") === c("c_custkey")).select(col("o_orderkey"))
-    }),
-    "join_outer_count" -> ((s, dir) => {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("n_orders"))
-    }),
-    "join_nonequi" -> ((s, dir) => {
-      val su = t(s, dir, "supplier"); val n = t(s, dir, "nation")
-      Joins.nonEqui(su, n, su("s_nationkey") < n("n_nationkey"))
-        .groupBy(col("s_suppkey")).agg(count(lit(1)).as("n_pairs"))
-    }),
-    "join_asof" -> ((s, dir) => {
-      // for each click, the user's most recent purchase at or before it
-      val e = Engine.eventsTable(s, dir)
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          unix_millis(col("ts")).as("click_ms"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"),
-          unix_millis(col("ts")).as("p_ms"))
-      Joins.asof(clicks, purchases,
-        keyCols = Seq("user_id"), leftTime = "click_ms", rightTime = "p_ms",
-        leftCols = Seq("click_id", "user_id", "click_ms"),
-        rightCols = Seq("purchase_id"))
-        .withColumn("purchase_id", coalesce(col("purchase_id"), lit(-1L)))
-    }),
-    // forward as-of with tolerance: next purchase within 1h of each click
-    "join_asof_fwd" -> ((s, dir) => {
-      val e = Engine.eventsTable(s, dir)
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          unix_millis(col("ts")).as("click_ms"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"),
-          unix_millis(col("ts")).as("p_ms"))
-      Joins.asof(clicks, purchases,
-        keyCols = Seq("user_id"), leftTime = "click_ms", rightTime = "p_ms",
-        leftCols = Seq("click_id", "user_id", "click_ms"),
-        rightCols = Seq("purchase_id"),
-        direction = "forward", tolerance = 3600000L)
-        .withColumn("purchase_id", coalesce(col("purchase_id"), lit(-1L)))
-    }),
-    "join_range" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val buckets = t(s, dir, "region")
-        .select(col("r_regionkey"),
-          (col("r_regionkey") * 10).cast("double").as("lo"),
-          ((col("r_regionkey") + 1) * 10).cast("double").as("hi"))
-      Joins.rangeJoin(li, col("l_quantity"), buckets, col("lo"), col("hi"))
-        .groupBy(col("r_regionkey")).agg(count(lit(1)).as("n_rows"))
-    }),
-    // the two-large-sides form of join_range: equi-join on overlap
-    // buckets + residual filter instead of a broadcast BNLJ
-    "join_range_band" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val buckets = t(s, dir, "region")
-        .select(col("r_regionkey"),
-          (col("r_regionkey") * 10).cast("double").as("lo"),
-          ((col("r_regionkey") + 1) * 10).cast("double").as("hi"))
-      Joins.bandRangeJoin(li, col("l_quantity"), buckets, col("lo"), col("hi"),
-        bucketWidth = 7)
-        .groupBy(col("r_regionkey")).agg(count(lit(1)).as("n_band_rows"))
-    }),
-    // interval × interval overlap join: concurrent-session pairs across
-    // users (co-presence). Both sides are the sessionized events table
-    // (9.5k intervals at sf0.01), banded at 1 h so the join is a
-    // band-keyed equi-join with the overlap predicate as a residual —
-    // never a cross join — and each pair is emitted exactly once in the
-    // band of greatest(lo_a, lo_b). This IS the production form; the
-    // oracle replays sessionization + the naive
-    // non-equi join and must agree pair-for-pair via the aggregate
-    "join_interval_overlap" -> ((s, dir) => {
-      // explicit repartition on the sessionize window key: it REPLACES
-      // the window's planner exchange (same key, same count — at scale
-      // zero extra shuffles), and a user exchange is exempt from AQE
-      // coalescing, so the banded self-join's pair blow-up + residual
-      // filter downstream of the window run cores-wide instead of in
-      // the ONE post-coalesce task (JobProf: 0.76 s of the row's 1.1 s
-      // was a single-task join stage; r12 §2.5/§2.6, the window_ntile /
-      // fuzzy_join_lev medicine)
-      val sess = streaming.Events.sessionizeBatch(Engine.eventsTable(s, dir)
-        .repartition(s.sparkContext.defaultParallelism, col("user_id")))
-      val a = sess.select(col("user_id").as("user_a"),
-        col("session_start").as("lo_a"), col("session_end").as("hi_a"))
-      val b = sess.select(col("user_id").as("user_b"),
-        col("session_start").as("lo_b"), col("session_end").as("hi_b"))
-      Joins.intervalOverlapJoin(a, "lo_a", "hi_a", b, "lo_b", "hi_b",
-          bandWidth = 3600000L, extraOn = col("user_a") < col("user_b"))
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(least(col("hi_a"), col("hi_b")) -
-            greatest(col("lo_a"), col("lo_b"))).as("sum_overlap_ms"))
-    }),
-    // fuzzy (edit-distance) self-join with two-level blocking: equi-join
-    // on (brand, length-bucket) — |len diff| lower-bounds the edit
-    // distance, so bucketing lengths at width 4 and exploding side b to
-    // the buckets its ±3 window can touch keeps every distance-≤3 pair
-    // (each pair is produced once: a carries exactly one bucket). The
-    // residual length band + O(len·band) thresholded levenshtein run as
-    // post-filters. The probe side repartitions to cluster parallelism
-    // and the block side broadcasts: the pair blow-up and the lev CPU
-    // happen INSIDE the join stage, where AQE's byte-based coalescing
-    // can't see them — without the explicit spread, a few-MB input
-    // coalesces to 1-2 partitions and the CPU-bound stage runs serial
-    // (measured 6.0 s → 0.6 s at sf0.1, identical 503,800-row result).
-    // Past the broadcast threshold the same plan shape degrades to a
-    // co-partitioned hash join on (brand, lbucket) — drop the hint, keep
-    // the repartition.
-    "fuzzy_join_lev" -> ((s, dir) => {
-      val p = t(s, dir, "part")
-      val w = 4
-      val a = p.select(col("p_partkey").as("id_a"), col("p_brand").as("brand"),
-        col("p_name").as("name_a"),
-        floor(length(col("p_name")) / w).as("lbucket"))
-        .repartition(s.sparkContext.defaultParallelism, col("id_a"))
-      val b = p.select(col("p_partkey").as("id_b"), col("p_brand").as("brand"),
-        col("p_name").as("name_b"),
-        explode(sequence(
-          floor((length(col("p_name")) - 3) / w),
-          floor((length(col("p_name")) + 3) / w))).as("lbucket"))
-      a.join(broadcast(b), Seq("brand", "lbucket"))
-        .filter(col("id_a") < col("id_b") &&
-          // the bucket window over-covers; the exact band still prunes
-          abs(length(col("name_a")) - length(col("name_b"))) <= 3)
-        // thresholded levenshtein: banded DP + early exit, returns -1
-        // above the cutoff (and the exact distance at or below it)
-        .withColumn("lev_dist",
-          levenshtein(col("name_a"), col("name_b"), 3).cast("long"))
-        .filter(col("lev_dist") >= 0)
-        .select(col("id_a"), col("id_b"), col("lev_dist"))
-    }),
-    // full outer: per-nation deep-negative-balance customer vs supplier
-    // counts — both sides produce orphan nations, exercising both null
-    // directions
-    "join_full_outer" -> ((s, dir) => {
-      val c = t(s, dir, "customer").filter(col("c_acctbal") < -500)
-        .groupBy(col("c_nationkey")).agg(count(lit(1)).as("n_cust"))
-      val su = t(s, dir, "supplier").filter(col("s_acctbal") < -500)
-        .groupBy(col("s_nationkey")).agg(count(lit(1)).as("n_supp"))
-      c.join(su, col("c_nationkey") === col("s_nationkey"), "full")
-        .select(coalesce(col("c_nationkey"), col("s_nationkey")).as("nationkey"),
-          coalesce(col("n_cust"), lit(0L)).as("n_cust"),
-          coalesce(col("n_supp"), lit(0L)).as("n_supp"))
-    }),
-    // runtime-filter pattern as an explicit operator: bloom over the
-    // filtered dim keys prunes the fact scan before the join; the exact
-    // join removes bloom false positives, so the result is identical
-    "join_bloom_prefilter" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_suppkey"), floor(col("l_quantity")).as("qty"))
-      val dim = t(s, dir, "supplier").filter(col("s_nationkey") < 5)
-        .select(col("s_suppkey"), col("s_nationkey"))
-      Joins.bloomPrefilteredJoin(li, dim, col("l_suppkey"), col("s_suppkey"),
-        expectedDimRows = 100000)
-        .groupBy(col("s_nationkey"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"))
-    }),
-    // explicit salting for stable known skew (AQE skew-join is the
-    // runtime fallback); result identical to the plain join
-    "join_skew_salted" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_suppkey"), floor(col("l_quantity")).as("qty"))
-      val su = t(s, dir, "supplier").select(col("s_suppkey"), col("s_nationkey"))
-      Joins.saltedSkewJoin(li, su, col("l_suppkey"), col("s_suppkey"), saltBuckets = 8)
-        .groupBy(col("s_nationkey"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"))
-    }),
-
-    // ------------------------------------------------ aggregation library (§2.4)
-    "agg_rollup" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(floor(col("l_quantity")).cast("long")).as("sum_qty"),
-          count(lit(1)).as("cnt"))),
-    "agg_salted_skew" -> ((s, dir) =>
-      Aggregates.saltedSumCount(t(s, dir, "lineitem"),
-        col("l_suppkey"), floor(col("l_quantity")))),
-    "agg_topk_global" -> ((s, dir) =>
-      Aggregates.topK(
-        t(s, dir, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
-          floor(col("l_extendedprice")).as("price")),
-        10, col("price").desc, col("l_orderkey").asc, col("l_linenumber").asc)),
-    "agg_topk_per_group" -> ((s, dir) =>
-      Aggregates.topKPerGroup(
-        // hash-repartition: the partial (map-side) top-k sort runs per
-        // input partition and the single-file testdata scan yields ONE;
-        // hash exchange (unlike round-robin) adds no pre-exchange sort
-        t(s, dir, "lineitem").select(col("l_returnflag"), col("l_orderkey"),
-          col("l_linenumber"), floor(col("l_extendedprice")).as("price"))
-          .repartition(s.sparkContext.defaultParallelism, col("l_orderkey")),
-        Seq(col("l_returnflag")), 3,
-        col("price").desc, col("l_orderkey").asc, col("l_linenumber").asc)),
-    // Spark 4.1's approx_top_k sketch (two-phase: per-partition
-    // accumulate, merge, estimate). The quantity domain (~50 distinct)
-    // sits far under maxItemsTracked, so the sketch is provably exact
-    // here and the gate pins its output against the exact counts; the
-    // emitted sum-of-top-5 counts is tie-permutation-invariant (ties
-    // between equal counts may surface in any order)
-    "agg_approx_topk" -> ((s, dir) => {
-      val sk = t(s, dir, "lineitem")
-        .select(floor(col("l_quantity")).as("q"))
-        .agg(expr("approx_top_k(q, 5, 4096)").as("tk"))
-        .select(explode(col("tk")).as("e"))
-        .select(col("e.count").cast("long").as("cnt"))
-        .agg(count(lit(1)).as("k"), sum(col("cnt")).as("top5_mass"))
-      val exact = t(s, dir, "lineitem")
-        .select(floor(col("l_quantity")).as("q"))
-        .groupBy(col("q")).agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc).limit(5)
-        .agg(sum(col("cnt")).as("exact_top5_mass"))
-      sk.crossJoin(exact)
-        .select(col("k"), col("exact_top5_mass"),
-          (col("top5_mass") === col("exact_top5_mass")).as("topk_ok"))
-    }),
-    "agg_window_running" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      // default RANGE frame: peers (tied order keys) share the cumulative
-      // value, so the result is deterministic even with duplicate keys
-      val w = Window.partitionBy(col("l_suppkey"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-      t(s, dir, "lineitem")
-        .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-          floor(col("l_quantity")).as("qty"))
-        .withColumn("running_qty", sum(col("qty")).over(w))
-    }),
-    // cube: all grouping-set combinations of (returnflag, linestatus)
-    "agg_cube" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(floor(col("l_quantity")).cast("long")).as("sum_qty"),
-          count(lit(1)).as("cnt"))),
-    // pivot: per-returnflag quantity sums fanned across linestatus cols
-    "agg_pivot" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_linestatus"),
-          floor(col("l_quantity")).as("qty"))
-        .groupBy(col("l_returnflag"))
-        .pivot("l_linestatus", Seq("F", "O"))
-        .agg(sum(col("qty")))),
-    // explicit grouping sets (distinct from rollup/cube): per-flag,
-    // per-status, and grand-total rows in one aggregate
-    "agg_grouping_sets" -> ((s, dir) => {
-      t(s, dir, "lineitem").createOrReplaceTempView("gs_lineitem")
-      s.sql(
-        """SELECT l_returnflag, l_linestatus,
-          |       cast(grouping(l_returnflag) as bigint) AS g_flag,
-          |       cast(grouping(l_linestatus) as bigint) AS g_status,
-          |       sum(floor(l_quantity)) AS sum_qty, count(*) AS cnt
-          |FROM gs_lineitem
-          |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin)
-    }),
-    // unpivot/melt: wide metric columns to long (metric, value) rows
-    "agg_unpivot" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .select(col("l_returnflag"),
-          floor(col("l_quantity")).as("qty"),
-          floor(col("l_extendedprice")).as("extprice"),
-          floor(col("l_tax") * 100).as("tax_pct"))
-        .unpivot(Array(col("l_returnflag")),
-          Array(col("qty"), col("extprice"), col("tax_pct")), "metric", "value")
-        .groupBy(col("l_returnflag"), col("metric"))
-        .agg(sum(col("value")).as("sum_value"), count(lit(1)).as("cnt"))),
-    // ntile + percent_rank over a total order (qty, orderkey, linenumber
-    // — tie-free, so both window functions are deterministic)
-    "window_ntile" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("l_returnflag"))
-        .orderBy(col("qty"), col("l_orderkey"), col("l_linenumber"))
-      t(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
-          floor(col("l_quantity")).as("qty"))
-        // explicit repartition on the window key: AQE coalesces the
-        // planner's window exchange to ONE partition at this data size,
-        // serializing the three flags' full-order ntile/percent_rank
-        // into one task; a user repartition is exempt, restoring the
-        // operator's inherent per-flag parallelism (r12, §2.5/§2.6 —
-        // see agg_weighted_percentile)
-        .repartition(s.sparkContext.defaultParallelism, col("l_returnflag"))
-        .withColumn("tile", ntile(4).over(w).cast("long"))
-        .withColumn("pr", percent_rank().over(w))
-        .groupBy(col("l_returnflag"), col("tile"))
-        .agg(count(lit(1)).as("cnt"), sum(col("qty")).as("sum_qty"),
-          min(col("qty")).as("min_qty"), max(col("qty")).as("max_qty"),
-          max(col("pr")).as("max_pr"))
-    }),
-    // event-time RANGE frame: per event, activity in the trailing 10 min
-    // (peers at equal ts_ms are all included — frame is tie-insensitive)
-    "window_range_frame" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_ms"))
-        .rangeBetween(-600000L, 0L)
-      Engine.eventsTable(s, dir)
-        .select(col("event_id"), col("user_id"), unix_millis(col("ts")).as("ts_ms"),
-          floor(col("value") * 1000).cast("long").as("value_milli"))
-        .withColumn("n_prev_10m", count(lit(1)).over(w))
-        .withColumn("sum_value_milli_10m", sum(col("value_milli")).over(w))
-        .drop("value_milli")
-    }),
-    // first/last/nth over an explicit full frame (constants per
-    // partition under the total order → 3 distinct rows)
-    // first/last/nth over an unbounded frame are order statistics of a
-    // TOTAL order ((qty, orderkey, linenumber) is unique), so first and
-    // third are rank-1/rank-3 under ONE ascending window whose rk ≤ 3
-    // filter compiles to WindowGroupLimit (3 candidate rows per
-    // partition per map task cross the exchange, not the whole table —
-    // optimization round 11, guide §2.3), and last is a plain
-    // partial-aggregable max over the (qty, orderkey, linenumber)
-    // struct — no second window, no full-partition buffering anywhere.
-    // nth_value's null-when-short semantics survive (a flag with < 3
-    // rows has no rk = 3 row, so the max(when) is NULL).
-    "window_firstlast" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val base = t(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
-          floor(col("l_quantity")).as("qty"))
-      val wAsc = Window.partitionBy(col("l_returnflag"))
-        .orderBy(col("qty"), col("l_orderkey"), col("l_linenumber"))
-      val headAgg = base.withColumn("rk", row_number().over(wAsc))
-        .filter(col("rk") <= 3)
-        .groupBy(col("l_returnflag"))
-        .agg(max(when(col("rk") === 1, col("qty"))).as("first_qty"),
-          max(when(col("rk") === 3, col("qty"))).as("third_qty"))
-      val tailAgg = base
-        .groupBy(col("l_returnflag"))
-        .agg(max(struct(col("qty"), col("l_orderkey"), col("l_linenumber")))
-          .as("m"))
-        .select(col("l_returnflag"), col("m.qty").as("last_qty"))
-      headAgg.join(tailAgg, Seq("l_returnflag"))
-        .select(col("l_returnflag"), col("first_qty"), col("last_qty"),
-          col("third_qty"))
-    }),
-    // SQL subquery machinery: CTE + EXISTS (→ semi join) + scalar
-    // subquery (→ one-row broadcast), all through the parser
-    "sql_subqueries" -> ((s, dir) => {
-      t(s, dir, "customer").createOrReplaceTempView("sq_customer")
-      t(s, dir, "orders").createOrReplaceTempView("sq_orders")
-      s.sql(
-        """WITH big AS (SELECT o_custkey, count(*) AS n_orders
-          |             FROM sq_orders GROUP BY o_custkey)
-          |SELECT c.c_custkey, b.n_orders
-          |FROM sq_customer c JOIN big b ON c.c_custkey = b.o_custkey
-          |WHERE EXISTS (
-          |  SELECT 1 FROM sq_orders o
-          |  WHERE o.o_custkey = c.c_custkey
-          |    AND o.o_totalprice * 2 > (SELECT max(o_totalprice) FROM sq_orders))""".stripMargin)
-    }),
-    // VARIANT semi-structured surface (Spark 4): parse the JSON props
-    // column ONCE into a variant, extract typed fields from the binary
-    // encoding — the modern replacement for repeated get_json_object
-    // string re-parses. try_parse_json (not strict parse_json) so a
-    // malformed row yields NULL k instead of failing the query — the
-    // same lenient null semantics as the oracle's json_extract_string.
-    // Gate: typed extraction + per-type aggregate the oracle recomputes
-    // with its own JSON reader
-    "func_variant" -> ((s, dir) =>
-      Engine.eventsTable(s, dir)
-        .filter(col("props").isNotNull)
-        .select(col("event_type"),
-          try_variant_get(try_parse_json(col("props")), "$.k", "long").as("k"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          min(col("k")).as("min_k"), max(col("k")).as("max_k"))),
-    // the HARD variant case: a HETEROGENEOUS variant — an array mixing
-    // long / string / nested object, plus a nested object branch — all
-    // parsed once and extracted by typed path (array index, nested
-    // field, wrong-type probe). The JSON is constructed from base
-    // columns so the oracle can recompute every extraction without a
-    // JSON reader: sum_a0/sum_d prove the long extractions, s_ok proves
-    // the nested string path, n_wrong_nonnull proves try_variant_get
-    // yields NULL (not an error, not a coercion) when the target type
-    // mismatches the actual element ('$.a[1]' is a string)
-    "func_variant_array" -> ((s, dir) => {
-      val vk = floor(col("value") * 1000).cast("long")
-      // the "b" branch is emitted by to_json(struct(...)) — a
-      // JSON-producing function, so an event_type containing a quote or
-      // backslash is escaped instead of breaking parse_json (the
-      // heterogeneous "a" array has no string-valued dynamic parts, so
-      // raw concat is safe there). ignoreNullFields=false keeps the "s"
-      // field present as JSON null for a NULL event_type, and the s_ok
-      // comparison below is null-safe (<=>) so the null round-trips as
-      // "extracted s equals source" instead of flipping the gate
-      val j = concat(lit("{\"a\": ["), vk, lit(", \"t\", {\"d\": "),
-        (vk + lit(7L)), lit("}], \"b\": "),
-        to_json(struct(col("event_type").as("s")),
-          Map("ignoreNullFields" -> "false")), lit("}"))
-      // build the variant in its OWN projection (optimization round 11):
-      // inlined into the consuming select, the concat + to_json +
-      // parse_json subtree is copied into all four variant_get columns —
-      // CollapseProject keeps a multiply-referenced non-cheap alias in
-      // its own Project, so this materializes the variant once per row
-      val v = parse_json(j)
-      // project to the two source columns and spread them across cores
-      // BEFORE the variant build (optimization round 12, guide §2.6):
-      // the whole row cost is the JSON construct + parse_json + four
-      // variant_gets (~35 µs/row — measured 2.08 s in ONE task, the
-      // single-split local scan), so the ~30 B/row exchange buys a
-      // cores-wide variant stage; no-op at scale (see spreadForCpu)
-      spreadForCpu(Engine.eventsTable(s, dir)
-          .select(col("event_type"), col("value")), col("value"))
-        .select(col("event_type"), v.as("v"))
-        .select(col("event_type"),
-          variant_get(col("v"), "$.a[0]", "long").as("a0"),
-          variant_get(col("v"), "$.a[2].d", "long").as("d"),
-          variant_get(col("v"), "$.b.s", "string").as("sv"),
-          try_variant_get(col("v"), "$.a[1]", "long").as("wrong"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("a0")).as("sum_a0"),
-          sum(col("d")).as("sum_d"),
-          sum(when(col("wrong").isNotNull, 1L).otherwise(0L)).as("n_wrong_nonnull"),
-          sum(when(col("sv") <=> col("event_type"), 0L).otherwise(1L)).as("bad_s"))
-        .select(col("event_type"), col("n"), col("sum_a0"), col("sum_d"),
-          col("n_wrong_nonnull"), (col("bad_s") === 0L).as("s_ok"))
-    }),
-    // map-type scalar surface: build a map per row, transform its
-    // values with a lambda HOF, read entries back — the gate flattens
-    // everything to longs the oracle recomputes from the base columns,
-    // proving the map construction/transform/lookup round-trip
-    "func_map" -> ((s, dir) => {
-      val m = map(
-        lit("q"), floor(col("l_quantity")),
-        lit("p"), floor(col("l_extendedprice")))
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), m.as("m"))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          size(col("m")).cast("long").as("n_entries"),
-          element_at(col("m"), "q").as("q_val"),
-          element_at(transform_values(col("m"), (_, v) => v * 2), "p")
-            .as("p_doubled"))
-    }),
-    // WITH RECURSIVE through the parser (new SQL machinery in Spark 4):
-    // walk the synthetic parent chain k → k div 2 → … → 0 over the
-    // nation keys — per node, depth to root and the ancestor-key sum.
-    // Each recursion step is one self-join plan iteration; the identical
-    // SQL runs on the oracle engine
-    "sql_recursive" -> ((s, dir) => {
-      t(s, dir, "nation").createOrReplaceTempView("rc_nation")
-      s.sql(
-        """WITH RECURSIVE chain(node, cur, depth) AS (
-          |  SELECT n_nationkey, CAST(n_nationkey AS BIGINT), 0 FROM rc_nation
-          |  UNION ALL
-          |  SELECT node, cur DIV 2, depth + 1 FROM chain WHERE cur > 0)
-          |SELECT node, max(depth) AS depth_to_root,
-          |       sum(cur) AS ancestor_key_sum
-          |FROM chain GROUP BY node""".stripMargin)
-    }),
-    // the HARD recursive case: transitive closure over a deliberately
-    // CYCLIC graph (functional graph with 2 out-edges per node, incl. a
-    // self-loop at node 24) — naive recursion never terminates; the
-    // simple-path guard (NOT array_contains(path, dst)) plus a depth cap
-    // makes the fixed point finite. This is the cycle-guarded recursion
-    // pattern (frontier join per round; the path array is the visited
-    // set, carried per row — no global state)
-    "sql_recursive_cyclic" -> ((s, dir) => {
-      // STATIC UNROLL of the cycle-guarded recursion (optimization round
-      // 12, guide §2-fixed-cost): the depth cap is a compile-time
-      // constant shared with the DuckDB oracle (recursiveDepthCap), so
-      // the WITH RECURSIVE fixpoint is exactly `cap − 1` frontier
-      // expansions — unrolled, the whole query is ONE plan whose five
-      // joins all broadcast the same 50-row edge relation (plan:
-      // ReusedExchange), where the engine's UnionLoop executed each
-      // round as its own jobs (measured: ~50 jobs / 128 stages of
-      // 10-30 ms fixed cost each, 2.3 s for an 800-row reach set; the
-      // unrolled form is one job). Row-for-row identical by
-      // construction: level_i is the i-step frontier bag (UNION ALL
-      // semantics — Dataset.union), the simple-path guard and the
-      // depth cap are the same predicates, and the final aggregate is
-      // unchanged; the oracle still replays its own WITH RECURSIVE.
-      val nk = col("n_nationkey")
-      val nation = t(s, dir, "nation")
-      val edges = nation.select(nk.as("src"), ((nk * 2 + 1) % 25).as("dst"))
-        .union(nation.select(nk.as("src"), ((nk * 3 + 2) % 25).as("dst")))
-      var level = nation.select(nk.as("start"), nk.as("node"),
-        array(nk).as("path"))
-      var reach = level
-      for (i <- 1 until recursiveDepthCap) {
-        level = level.join(edges, col("node") === col("src"))
-          .filter(!array_contains(col("path"), col("dst")))
-          .select(col("start"), col("dst").as("node"),
-            array_append(col("path"), col("dst")).as("path"))
-        // truncate lineage every second level: without it level_i's plan
-        // re-embeds every previous join into both the union and the next
-        // level (Σi joins ≈ quadratic plan growth), and the rep cost was
-        // measured 80% DRIVER-side planning (guide §7.3 — large plans),
-        // 0.9 s of a 1.1 s rep. The checkpointed frontier is ≤ a few
-        // hundred slim rows.
-        if (i % 2 == 0 && i < recursiveDepthCap - 1)
-          level = level.localCheckpoint(true)
-        reach = reach.union(level)
-      }
-      reach.groupBy(col("start"))
-        .agg(countDistinct(col("node")).as("n_reachable"),
-          max(size(col("path"))).as("max_path_len"))
-    }),
-    // fixed-width integer histogram (group on a computed bucket key —
-    // single shuffle, min/max/count per bucket)
-    "agg_histogram" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .select(floor(col("l_quantity")).cast("long").as("q"))
-        .groupBy(expr("q div 5").as("bucket"))
-        .agg(count(lit(1)).as("n"), min(col("q")).as("min_q"),
-          max(col("q")).as("max_q"))),
-    // the full reference query through the SQL surface (parser →
-    // Catalyst → same physical plan family as the Dataset form)
-    "q4112_sql" -> ((s, dir) => {
-      partItems(s, dir).createOrReplaceTempView("sql_items")
-      liOrders(s, dir).createOrReplaceTempView("sql_orders")
-      s.sql(
-        """SELECT sum(g_avg) DIV count(*) AS avg_avg_value
-          |FROM (SELECT sum(price * quantity) DIV count(*) AS g_avg
-          |      FROM sql_orders JOIN sql_items ON l_partkey = p_partkey
-          |      GROUP BY l_suppkey)""".stripMargin)
-    }),
-    // exact interpolated percentiles (percentile_cont semantics)
-    "agg_percentiles" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .select(col("l_returnflag"), floor(col("l_quantity")).as("qty"))
-        .groupBy(col("l_returnflag"))
-        .agg(expr("percentile(qty, 0.25)").as("p25"),
-          expr("percentile(qty, 0.5)").as("p50"),
-          expr("percentile(qty, 0.95)").as("p95"))),
-    // sketch quantiles: Greenwald-Khanna approx_percentile — the scale
-    // path when an exact percentile's full sort-per-group is too costly;
-    // mergeable partials, one pass, bounded error (accuracy 10000 →
-    // ±0.01%). Sketch internals aren't engine-portable, so like the
-    // FM/HLL sketches this gets a rows-only driver check; the ScalaTest
-    // spec asserts each value against the exact percentile within the
-    // sketch's rank-error bound
-    // upgraded from rows-only to a CHECKED INVARIANT: emits the exact
-    // percentiles plus a boolean asserting every sketch value is within
-    // ±1 of exact (accuracy 10000 → rank error ≤ N·1e-4, far below one
-    // value step on this data); oracle recomputes exact and expects true.
-    // mergeable bottom-k-priority QUANTILE SAMPLE — the quantile member
-    // of the sketch suite (distinct: FM/HLL/KMV; frequency: CMS; set
-    // overlap: KMV theta). The sketch is the 1024 rows with smallest
-    // md5(event_id) priority: order-insensitive, mergeable (bottom-k of
-    // a union = merge of bottom-ks — Spark executes it as distributed
-    // TakeOrdered, i.e. per-partition sketches + driver merge), and
-    // content-deterministic, so the oracle replays the SAME sample and
-    // the estimates hash-gate exactly. Type-1 sample quantiles under
-    // the (v, event_id) total order; the p*_ok booleans pin the DKW
-    // rank-error contract |rank(est)/n − q| ≤ 0.08 in exact integer
-    // cross-multiplied form (k=1024 → violation odds ~2e-6; measured
-    // deviations ≤ 0.049 across sfs, ties included)
-    "agg_quantile_sample" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val ev = Engine.eventsTable(s, dir)
-      val pri = conv(substring(md5(col("event_id").cast("string")), 1, 8),
-        16, 10).cast("long")
-      val sample = ev
-        .select(floor(col("value")).cast("long").as("v"),
-          col("event_id"), pri.as("p"))
-        .orderBy(col("p").asc, col("event_id").asc).limit(1024)
-      val w = Window.orderBy(col("v").asc, col("event_id").asc)
-      val ranked = sample.withColumn("rk", row_number().over(w))
-        .withColumn("m", count(lit(1)).over(
-          Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      val est = ranked.agg(
-        max(when(col("rk") === ceil(lit(0.5) * col("m")), col("v"))).as("p50_est"),
-        max(when(col("rk") === ceil(lit(0.9) * col("m")), col("v"))).as("p90_est"),
-        max(when(col("rk") === ceil(lit(0.99) * col("m")), col("v"))).as("p99_est"))
-      ev.select(floor(col("value")).cast("long").as("v")).crossJoin(est)
-        .agg(count(lit(1)).as("n"),
-          max(col("p50_est")).as("p50_est"),
-          max(col("p90_est")).as("p90_est"),
-          max(col("p99_est")).as("p99_est"),
-          (abs(lit(100L) * sum(when(col("v") <= col("p50_est"), 1L).otherwise(0L))
-            - lit(50L) * count(lit(1))) <= lit(8L) * count(lit(1))).as("p50_ok"),
-          (abs(lit(100L) * sum(when(col("v") <= col("p90_est"), 1L).otherwise(0L))
-            - lit(90L) * count(lit(1))) <= lit(8L) * count(lit(1))).as("p90_ok"),
-          (abs(lit(100L) * sum(when(col("v") <= col("p99_est"), 1L).otherwise(0L))
-            - lit(99L) * count(lit(1))) <= lit(8L) * count(lit(1))).as("p99_ok"))
-    }),
-    // The emitted exact percentiles are rounded to 6 decimals: both
-    // engines interpolate linearly but may differ in the last ulp of
-    // a + f·(b−a), and this is a hash-exact gate
-    "agg_percentile_approx" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .select(col("l_returnflag"), floor(col("l_quantity")).as("qty"))
-        .groupBy(col("l_returnflag"))
-        .agg(expr("approx_percentile(qty, array(0.25, 0.5, 0.95), 10000)").as("pcts"),
-          expr("round(percentile(qty, 0.25), 6)").as("p25"),
-          expr("round(percentile(qty, 0.5), 6)").as("p50"),
-          expr("round(percentile(qty, 0.95), 6)").as("p95"))
-        .select(col("l_returnflag"), col("p25"), col("p50"), col("p95"),
-          (abs(element_at(col("pcts"), 1) - col("p25")) <= 1.0 &&
-            abs(element_at(col("pcts"), 2) - col("p50")) <= 1.0 &&
-            abs(element_at(col("pcts"), 3) - col("p95")) <= 1.0).as("approx_ok"))),
-    // set operations: customers with orders ∩ BUILDING segment,
-    // minus negative-balance accounts
-    "set_ops" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_custkey"))
-      val building = t(s, dir, "customer")
-        .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
-      val negative = t(s, dir, "customer")
-        .filter(col("c_acctbal") < 0).select(col("c_custkey"))
-      o.intersect(building).except(negative)
-    }),
-    // the BAG (multiset) set operators — INTERSECT ALL keeps the
-    // minimum multiplicity, EXCEPT ALL subtracts multiplicities, which
-    // the distinct forms above erase. Output keeps (key, multiplicity)
-    // per op so the bag semantics are hash-visible; orders custkeys
-    // carry real duplicate multiplicities against a two-slice customer
-    // side that itself has multiplicity 2 for the overlap
-    "set_ops_all" -> ((s, dir) => {
-      val a = t(s, dir, "orders").select(col("o_custkey").as("k"))
-      val c = t(s, dir, "customer")
-      val b = c.filter(col("c_mktsegment") === "BUILDING")
-        .select(col("c_custkey").as("k"))
-        .union(c.filter(col("c_mktsegment") === "BUILDING" &&
-          col("c_acctbal") > 5000).select(col("c_custkey").as("k")))
-      val inter = a.intersectAll(b).groupBy(col("k"))
-        .agg(count(lit(1)).as("n")).withColumn("op", lit("intersect_all"))
-      val exc = a.exceptAll(b).groupBy(col("k"))
-        .agg(count(lit(1)).as("n")).withColumn("op", lit("except_all"))
-      inter.union(exc).select(col("op"), col("k"), col("n"))
-    }),
-    // EXACT distinct via 64-bit bitmap chunks — the dense-int-domain
-    // OLAP technique roaring bitmaps generalize: bucket = key div 64,
-    // per (group, bucket) bit_or of (1 << key mod 64), then
-    // sum(bit_count) — every stage a plain partial-aggregable integer
-    // aggregate, mergeable across any partitioning, no hashing and no
-    // sort (countDistinct plans an extra dedup exchange; the bitmap
-    // form is two HashAggregates). eq_ok pins it against countDistinct
-    // in both engines
-    "distinct_bitmap" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_returnflag"), col("l_partkey"))
-      val bm = li
-        .withColumn("bucket", expr("l_partkey div 64"))
-        .withColumn("bit", expr("shiftleft(1L, cast(pmod(l_partkey, 64) as int))"))
-        .groupBy(col("l_returnflag"), col("bucket"))
-        .agg(expr("bit_or(bit)").as("w"))
-        .groupBy(col("l_returnflag"))
-        .agg(sum(expr("bit_count(w)")).cast("long").as("ndv_bitmap"))
-      val exact = li.groupBy(col("l_returnflag"))
-        .agg(countDistinct(col("l_partkey")).as("ndv_exact"))
-      bm.join(exact, Seq("l_returnflag"))
-        .select(col("l_returnflag"), col("ndv_bitmap"),
-          (col("ndv_bitmap") === col("ndv_exact")).as("eq_ok"))
-    }),
-    // the SQL PIVOT clause through the parser (agg_pivot covers the
-    // DataFrame groupBy().pivot() API; users also write the SQL form) —
-    // order-sum per status pivoted across three fixed priorities, CASE
-    // aggregation in the oracle (the semantics, not the syntax, is the
-    // contract)
-    "sql_pivot" -> ((s, dir) => {
-      Engine.table(s, dir, "orders").createOrReplaceTempView("pv_orders")
-      s.sql(
-        """SELECT * FROM (
-          |  SELECT o_orderstatus,
-          |         substring(o_orderpriority, 1, 1) AS prio,
-          |         cast(floor(o_totalprice) as bigint) AS v
-          |  FROM pv_orders)
-          |PIVOT (sum(v) AS s FOR prio IN ('1' AS p1, '2' AS p2, '3' AS p3))""".stripMargin)
-    }),
-    // COLUMN-PRUNING PROOF for payload-carrying media tables, as a
-    // gated fact (the layout_bucketed pattern: the scale property is
-    // asserted IN the query output, so a regression fails CORRECTNESS,
-    // not just a spec): a metadata-only aggregate over the media view
-    // must never read the payload source column — the parquet leaf's
-    // output names, inspected from the physical plan at build time,
-    // must exclude `text`. At 100 TB this pruning is the difference
-    // between scanning kilobytes of metadata and petabytes of bytes
-    "multimodal_prune" -> ((s, dir) => {
-      val media = Multimodal.asMediaTable(t(s, dir, "documents"), "doc_id", "text")
-      val agg = media.groupBy(col("modality"))
-        .agg(count(lit(1)).as("n_media"),
-          sum(col("width").cast("long") * col("height")).as("sum_pixels"),
-          max(col("duration_ms")).as("max_duration_ms"))
-      // sparkPlan, not executedPlan: under AQE the executed plan is an
-      // AdaptiveSparkPlanExec WRAPPER with no children — collectLeaves
-      // returns the wrapper itself (whose output is the final schema),
-      // never the parquet scan. Column pruning is a logical-phase
-      // optimization, so the pre-adaptive physical plan shows it
-      val scanned = agg.queryExecution.sparkPlan.collectLeaves()
-        .flatMap(_.output.map(_.name)).toSet
-      agg.withColumn("pruned_ok",
-        lit(!scanned.contains("text") && scanned.contains("doc_id")))
-    }),
-    // exact WEIGHTED median (lower): collapse ties first ((group,
-    // value) weight aggregate — the shuffle carries one row per
-    // distinct value, not per input row), then a running weight sum in
-    // value order picks the first value where 2·cum ≥ total. All
-    // integer, deterministic, replayable — where the float
-    // interpolation form (percentile(col, 0.5, weight)) is neither
-    // order-free nor engine-portable
-    "agg_weighted_percentile" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val g = t(s, dir, "lineitem")
-        .select(col("l_returnflag"),
-          floor(col("l_extendedprice")).cast("long").as("v"),
-          floor(col("l_quantity")).cast("long").as("w"))
-        .groupBy(col("l_returnflag"), col("v"))
-        .agg(sum(col("w")).as("w"))
-      val wOrd = Window.partitionBy(col("l_returnflag")).orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wTot = Window.partitionBy(col("l_returnflag"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      // explicit hash repartition on the window key: the planner's own
-      // exchange here is tiny enough that AQE coalesces it to ONE
-      // partition, serializing all three flags' running sums into one
-      // task (profiled: a 0.5 s single-task window stage). A
-      // user-specified repartition is exempt from coalescing, so the
-      // per-flag windows keep the operator's inherent 3-way parallelism
-      // — same exchange count, and a no-op change at scale where the
-      // exchange exceeds the advisory size anyway (r12, guide §2.5/§2.6)
-      g.repartition(s.sparkContext.defaultParallelism, col("l_returnflag"))
-        .withColumn("cum", sum(col("w")).over(wOrd))
-        .withColumn("tot", sum(col("w")).over(wTot))
-        .filter(col("cum") * 2 >= col("tot"))
-        .groupBy(col("l_returnflag"))
-        .agg(min(col("v")).as("w_median"), max(col("tot")).as("total_weight"))
-    }),
-    // deterministic per-epoch training shuffle — the data-loader
-    // primitive: each epoch is an independent, reproducible, seeded
-    // permutation of the corpus (priority = md5(doc_id | epoch), so
-    // epoch 2's order is uncorrelated with epoch 1's but identical on
-    // every re-run and engine — an RNG-free shuffle that resumes after
-    // failure at any offset). The head of each epoch's order is the
-    // gated sample; rank ≤ 20 pushes below the per-epoch exchange as
-    // WindowGroupLimit, so the shuffle carries candidates, not corpus
-    "sample_epoch_shuffle" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("epoch"))
-        .orderBy(col("prio"), col("doc_id"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), explode(array(lit(0), lit(1), lit(2))).as("epoch"))
-        .withColumn("prio", conv(substring(
-          md5(concat_ws("|", col("doc_id"), col("epoch"))), 1, 8), 16, 10)
-          .cast("long"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 20)
-        .select(col("epoch").cast("long").as("epoch"), col("doc_id"),
-          col("rank").cast("long").as("rank"))
-    }),
-    // running DISTINCT count per user (how many distinct event types
-    // seen so far at each event) — distinct doesn't decompose over
-    // frames, so the scale idiom is first-seen flags (row_number = 1
-    // in the (user, type) order) turned into a running sum in the
-    // (user) order: two window sorts, zero joins, no per-row set state
-    "events_cum_distinct" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val wFirst = Window.partitionBy(col("user_id"), col("event_type"))
-        .orderBy(col("ts_ms"), col("event_id"))
-      val wRun = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_ms"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Engine.eventsTable(s, dir)
-        .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"),
-          col("event_id"), col("event_type"))
-        .withColumn("first_seen",
-          when(row_number().over(wFirst) === 1, 1L).otherwise(0L))
-        .withColumn("cum_types", sum(col("first_seen")).over(wRun))
-        .select(col("user_id"), col("event_id"), col("cum_types"))
-    }),
-    "distinct_exact" -> ((s, dir) =>
-      Aggregates.distinctExact(t(s, dir, "lineitem"), col("l_returnflag"), col("l_partkey"))),
-    // KMV (bottom-k theta) distinct-count sketch — unlike FM/HLL the
-    // priorities are md5-derived and engine-portable, so the DuckDB
-    // oracle recomputes the ESTIMATE itself bit-for-bit (a hash-checked
-    // sketch, not a bounds-gated one); the check's err_ok additionally
-    // pins the estimate within ±25% of exact (k=256 ⇒ σ ≈ 6.3%, so
-    // ±25% ≈ 4σ). A pre-sketch spread of the md5-priority kernel (the
-    // 3-split scan ran the bounded-TreeSet pass in 3 tasks / 0.69 s
-    // wall, JobProf) was tried and REVERTED (r12): c32 minimums were
-    // inconclusive (0.80/0.94 spread vs 0.91 unspread on a noisy box)
-    // and the spread turned the row ANTI-scaling (c8/c32 0.68 — 32 tiny
-    // post-exchange tasks pay more dispatch than the ~0.7 s of md5 they
-    // split; the unspread form had ratio ~0.95).
-    "distinct_kmv" -> ((s, dir) =>
-      Kmv.ndvEstimate(
-        Kmv.sketch(t(s, dir, "lineitem"), col("l_orderkey"), 256), 256)),
-    // A5: FM/PCSA estimator (reference-faithful), upgraded from a
-    // rows-only check to a CHECKED INVARIANT: the query emits the exact
-    // ndv plus a boolean asserting the FM output honours its sizing
-    // contract — the oracle recomputes the exact ndv and expects `true`,
-    // so a broken sketch (wrong PHI, bad merge, dropped partitions)
-    // fails the hash gate. Two deliberate properties shape the bound:
-    // the output is ROUNDED UP TO A POWER OF TWO (q4112.c:356-371 — the
-    // reference sizes a hash table from it), so it sits up to 2× above
-    // the raw estimate; and the sketch is sized to the data (2^8
-    // partitions, rsd ≈ 5%, accurate from ~4k ndv — the 2^12 default is
-    // sized for the 1e8+-group matrix configs). Raw-estimate error ±30%
-    // and 2× quantization compose to the gate exact/2 ≤ fm ≤ 4·exact;
-    // unit/property tests cover raw tightness elsewhere. The counted key
-    // (l_orderkey*10 + l_linenumber) is injective (l_linenumber ∈ 1..7),
-    // so ndv = |lineitem|.
-    "distinct_fm" -> ((s, dir) =>
-      t(s, dir, "lineitem").select(fmRowKey)
-        .agg(FlajoletMartin.fmCountDistinct(col("k"), logPartitions = 8).as("fm"))),
-    // A5 pragmatic default: HLL++, same invariant upgrade — exact ndv per
-    // group plus a boolean gating the estimate within 3·rsd (rsd = 5%)
-    "distinct_hll" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(approx_count_distinct(col("l_partkey"), 0.05).as("hll"))),
-    // deterministic mode: most frequent value per group with an explicit
-    // (count DESC, value ASC) tie-break — Spark's mode() and DuckDB's
-    // mode() both return an ARBITRARY value on ties, so the portable
-    // form is the one that pins the tie; WindowGroupLimit keeps one row
-    // per group ahead of the ranking exchange
-    "agg_mode" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val counts = t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), floor(col("l_quantity")).as("qty"))
-        .agg(count(lit(1)).as("n"))
-      counts.withColumn("rk", row_number().over(
-          Window.partitionBy(col("l_returnflag"))
-            .orderBy(col("n").desc, col("qty").asc)))
-        .filter(col("rk") === 1)
-        .select(col("l_returnflag"), col("qty").as("mode_qty"), col("n"))
-    }),
-    // incremental aggregate maintenance: yesterday's aggregate + today's
-    // delta merge into the new aggregate WITHOUT rescanning the base —
-    // sum/count are mergeable partials, so the update costs O(delta) +
-    // O(groups). The gate proves merged == full recompute group-for-
-    // group (merge_equal_ok) and the oracle recomputes the full values
-    "agg_incremental" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_orderkey"),
-          floor(col("l_quantity")).as("qty"))
-      def agg(df: DataFrame) = df.groupBy(col("l_returnflag"))
-        .agg(sum(col("qty")).as("sum_qty"), count(lit(1)).as("n_rows"))
-      val base = agg(li.filter(col("l_orderkey") % 10 =!= 0))
-      val delta = agg(li.filter(col("l_orderkey") % 10 === 0))
-      val merged = base.unionByName(delta)
-        .groupBy(col("l_returnflag"))
-        .agg(sum(col("sum_qty")).as("sum_qty"), sum(col("n_rows")).as("n_rows"))
-      val full = agg(li)
-      full.join(merged.withColumnRenamed("sum_qty", "m_sum")
-          .withColumnRenamed("n_rows", "m_n"), Seq("l_returnflag"))
-        .select(col("l_returnflag"), col("sum_qty"), col("n_rows"),
-          (col("sum_qty") === col("m_sum") && col("n_rows") === col("m_n"))
-            .as("merge_equal_ok"))
-    }),
-    // bivariate statistics: correlation, covariance, least-squares
-    // slope/intercept per group — one partial/final aggregate pass (the
-    // merge formulas are Spark's DeclarativeAggregates, no second scan).
-    // Rounded to 6 dp on both engines: the values are O(1e3-1e4) with
-    // ~1e-10 absolute float noise from partial-aggregation order, so
-    // the rounding is 4 orders of magnitude above the noise floor
-    "agg_corr_regr" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .select(col("l_returnflag"), floor(col("l_extendedprice")).as("p"),
-          floor(col("l_quantity")).as("q"))
-        .groupBy(col("l_returnflag"))
-        .agg(round(corr(col("p"), col("q")), 6).as("corr_pq"),
-          round(covar_pop(col("p"), col("q")), 6).as("covar_pq"),
-          round(expr("regr_slope(p, q)"), 6).as("slope"),
-          round(expr("regr_intercept(p, q)"), 6).as("intercept"),
-          round(stddev_pop(col("q")), 6).as("sd_q"))),
-    // mergeable-sketch pattern (Apache DataSketches HLL): per-group
-    // sketches built independently, then UNIONED to a global estimate —
-    // the incremental-distinct design at 100 TB (store a per-day/per-
-    // partition sketch table, answer "distinct over any range" by
-    // merging binary sketches, never rescanning raw data). Gates:
-    // merge_lossless_ok — union-of-partial-sketches estimates EXACTLY
-    // what one direct whole-table sketch estimates (same lgK, the
-    // datasketches union contract), and accuracy_ok — the estimate is
-    // within 5% of the exact distinct count (lgK=14 → rsd ≈ 0.8%)
-    "distinct_hll_merge" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val perType = e.groupBy(col("event_type"))
-        .agg(hll_sketch_agg(col("user_id"), lit(14)).as("sk"))
-      val merged = perType
-        .agg(hll_sketch_estimate(hll_union_agg(col("sk"), lit(false)))
-          .as("est_merged"))
-      val direct = e
-        .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"), lit(14)))
-          .as("est_direct"))
-      val exact = e.agg(countDistinct(col("user_id")).as("n_exact"))
-      exact.crossJoin(merged).crossJoin(direct)
-        .select(col("n_exact"),
-          (col("est_merged") === col("est_direct")).as("merge_lossless_ok"),
-          (abs(col("est_merged") - col("n_exact"))
-            <= col("n_exact") * 0.05 + lit(10)).as("accuracy_ok"))
-    }),
-    // heavy hitters via sketch-prune + exact verify: a Count-Min sketch
-    // (one treeAggregate pass, no shuffle) filters the fact table down
-    // to candidate-key rows BEFORE the exact group-by, so the shuffle
-    // carries only heavy keys. CMS only over-counts, so the candidate
-    // set is a superset and the HAVING-checked output is EXACT — the
-    // oracle is a plain GROUP BY/HAVING
-    "hh_cms_exact" -> ((s, dir) => {
-      val threshold = 45L
-      val li = t(s, dir, "lineitem").select(col("l_partkey"))
-      val cms = li.stat.countMinSketch("l_partkey", 5, 1 << 16, 42)
-      val bc = s.sparkContext.broadcast(cms)
-      // codegen'd sketch probe (CmsMightBeHeavy) — not a UDF, so the
-      // candidate filter stays fused in the scan's codegen stage
-      li.filter(graft.functions.CmsLookup.mightBeHeavy(bc, threshold)(col("l_partkey")))
-        .groupBy(col("l_partkey"))
-        .agg(count(lit(1)).as("n_rows"))
-        .filter(col("n_rows") >= threshold)
-    }),
-
-    // ------------------------------------------------ dedup family
-    "dedup_exact" -> ((s, dir) =>
-      Dedup.exact(t(s, dir, "documents"), "doc_id", "text")),
-    // upgraded from rows-only to a FULL oracle gate: verified LSH output
-    // is provably ⊆ the exact-Jaccard pair set (candidates are re-checked
-    // with exact Jaccard), and at 32 bands × 2 rows the miss probability
-    // of a threshold pair is (1−j²)^32 ≤ 1e-4, so on this corpus the LSH
-    // result EQUALS the exact all-pairs result and the oracle is the
-    // same all-pairs 5-gram Jaccard SQL as dedup_ngram's. Banding is the
-    // recall/cost knob: recall-1 bands make low-similarity background
-    // pairs candidates too, so the GATED query runs on a bounded corpus
-    // slice (like dedup_ngram/dedup_cluster); at corpus scale the same
-    // operator runs 16×4 bands, paying a sharper S-curve for ~25× fewer
-    // candidates (scope change vs r02 bench: 5000→500 docs at sf0.1).
-    "dedup_minhash" -> ((s, dir) =>
-      Dedup.minhashPairs(t(s, dir, "documents").filter(col("doc_id") < 500),
-        "doc_id", "text", n = 5, numHashes = 64, bands = 32, threshold = 0.5)),
-    // upgraded from rows-only to a CHECKED INVARIANT (recipe of
-    // distinct_fm / sim_recall_ivf): emits (a) the exact count of
-    // Jaccard ≥ 0.9 pairs, which the oracle recomputes from the text,
-    // (b) band_ok — the pigeonhole-banded candidate set EQUALS the
-    // exhaustive all-pairs hamming ≤ 3 set (a theorem for 4×16-bit
-    // chunks: ≤3 differing bits leave ≥1 chunk identical, so banding
-    // loses nothing; a banding/dedup bug breaks the equality), and
-    // (c) prec_ok — every emitted pair is a true near-dup by exact
-    // 5-gram Jaccard ≥ 0.8 (measured min 0.94-0.97 across sfs).
-    // The run covers the whole corpus; the check restricts it to a
-    // 500-doc slice so the exhaustive check is O(500²) XORs.
-    "dedup_simhash" -> ((s, dir) =>
-      Dedup.simhashPairs(t(s, dir, "documents"), "doc_id", "text",
-        n = 5, maxHamming = 3)),
-    "dedup_ngram" -> ((s, dir) =>
-      // scoped to 200 docs: exact all-pairs is the verifier/oracle path,
-      // LSH (dedup_minhash) is the corpus-scale path
-      Dedup.ngramJaccardPairs(
-        t(s, dir, "documents").filter(col("doc_id") < 200), "doc_id", "text",
-        n = 5, threshold = 0.7)),
-    // near-dup clusters: pairwise evidence → connected components →
-    // per-cluster stats (the "keep one per cluster" decision input)
-    "dedup_cluster" -> ((s, dir) => {
-      val pairs = Dedup.ngramJaccardPairs(
-        t(s, dir, "documents").filter(col("doc_id") < 500), "doc_id", "text",
-        n = 5, threshold = 0.5)
-      Dedup.connectedComponents(pairs, "id_a", "id_b")
-        .groupBy(col("cluster_id"))
-        .agg(count(lit(1)).as("n_members"), max(col("node")).as("max_member"))
-    }),
-    // keep-BEST dedup application: per near-dup cluster keep the highest
-    // token-count member (ties to the smaller id) — the dataset-
-    // construction decision real pipelines make (keep the most complete
-    // version), vs dedup_keep's positional min-id keep. The argmax is
-    // min over (−q, doc_id) structs (partial-aggregable, no per-cluster
-    // sort); the oracle replays pairs, closure, token counts, and the
-    // argmax total order. Reports multi-member clusters only
-    "dedup_keep_best" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 500)
-      val q = docs.select(col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("q"))
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        n = 5, threshold = 0.5)
-      val labels = Dedup.connectedComponents(pairs, "id_a", "id_b")
-      labels.withColumnRenamed("node", "doc_id").join(q, Seq("doc_id"))
-        .groupBy(col("cluster_id"))
-        .agg(count(lit(1)).as("n_members"),
-          min(struct((-col("q")).as("nq"), col("doc_id"))).as("m"),
-          max(col("q")).as("q_kept"))
-        .select(col("cluster_id"), col("n_members"),
-          col("m.doc_id").as("keep_id"), col("q_kept"))
-    }),
-    // end-to-end dedup application: drop every cluster member except the
-    // min-id representative, report the surviving corpus size
-    "dedup_keep" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 500)
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        n = 5, threshold = 0.5)
-      val losers = Dedup.connectedComponents(pairs, "id_a", "id_b")
-        .filter(col("node") =!= col("cluster_id"))
-        .select(col("node").as("doc_id"))
-      docs.join(losers, Seq("doc_id"), "left_anti")
-        .agg(count(lit(1)).as("n_docs_kept"),
-          sum(length(col("text")).cast("long")).as("n_chars_kept"))
-    }),
-    // fixed-point integer PageRank over the supplier–part bipartite
-    // co-occurrence graph (near-dup clusters are cliques, where PageRank
-    // is constant by symmetry — this graph has real degree variance).
-    // Deterministic integer arithmetic → oracle-checked against a
-    // 10-round unrolled SQL power iteration; part nodes offset by 1e6.
-    // tolAbs = 0 makes the 10 rounds a CAP: a zero-delta round proves
-    // all later rounds identical (the update is a pure function of the
-    // score table), so early stop still matches the oracle's 10-round
-    // unroll bit-for-bit — graphs that converge shallow skip the dead
-    // rounds. The run disables the early stop (tolAbs = -1): this graph
-    // does not reach an exact fixed point within the cap, so the
-    // per-round zero-delta probe is pure overhead here; the check holds
-    // it equal to the early-stopping form.
-    "graph_pagerank" -> ((s, dir) => coSupplierPageRank(s, dir, tolAbs = -1L)),
-    // DIRECTED PageRank with dangling-mass redistribution on the same
-    // supplier→part edge set kept one-way: every part node is dangling
-    // (out-degree 0), so the redistribution term is exercised with real
-    // mass, not a degenerate zero. 6-round unrolled SQL oracle replays
-    // the full recurrence including the per-round dangling-mass scalar
-    // and the integer share division
-    "graph_pagerank_directed" -> ((s, dir) => {
-      val b = t(s, dir, "lineitem")
-        .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
-        .distinct()
-      Graph.pageRankDirected(
-        b.select(col("sk").as("src"), (col("pk") + 1000000L).as("dst")),
-        "src", "dst", iterations = 6)
-    }),
-    // the bucketed LAYOUT itself as an oracle-gated invariant — the
-    // 100 TB answer the scaling campaign leans on (SCALING.md): the run
-    // reads a slim projection bucketed+sorted on the group key (written
-    // once per session, ingest cost) and its check proves (a) the
-    // round-trip lost nothing (the oracle recomputes
-    // n_groups/total_qty from the RAW table) and (b) the grouped
-    // aggregate over the bucketed scan plans with ZERO Exchange nodes —
-    // the exchange-free plan part2Adaptive auto-detects via clusteredOn
-    "layout_bucketed" -> ((s, dir) => withoutAutoBucketedScan(s) {
-      val tbl = bucketedOnce(s, dir, "layout_bkt", "l_suppkey")(
-        t(s, dir, "lineitem").select(col("l_suppkey"), floor(col("l_quantity")).as("qty")))
-      s.table(tbl).groupBy(col("l_suppkey")).agg(sum(col("qty")).as("sum_qty"))
-    }),
-    // the JOINED-MATERIALIZATION layout as a first-class gated operator
-    // (SCALING.md cfg17: the C's hand-tuned part-2 runs 10.19 s at 1e9;
-    // a one-time materialization of the join result bucketed on the
-    // GROUP key turns every repeat of the grouped-avg query into a
-    // single exchange-free scan — measured 4.3 s steady-state, 0.42× the
-    // C, break-even ≈ 30 repetitions of the query against the ~437 s
-    // write). The run reads lineitem⋈part's (l_suppkey, val) projection
-    // bucketed+sorted on l_suppkey (written once per session, ingest
-    // cost), and its check proves (a) the grouped integer
-    // avg over the bucketed scan plans with ZERO Exchange nodes and
-    // (b) the result is IDENTICAL to computing the same query from the
-    // raw tables (the oracle recomputes n_groups/sum_avg from
-    // lineitem⋈part in DuckDB — a lossy materialization or a broken
-    // bucketed read breaks the hash)
-    "layout_joined_bucketed" -> ((s, dir) => withoutAutoBucketedScan(s) {
-      val tbl = bucketedOnce(s, dir, "layout_jb", "l_suppkey")(joinedSuppValues(s, dir))
-      s.table(tbl).groupBy(col("l_suppkey"))
-        .agg(expr("sum(v) div count(*)").as("avg_value"))
-    }),
-    // fixed-work calibration probe as a GATED row (the bench JSON's
-    // calib fields, judge-proofed into the correctness matrix): 64M
-    // xxhash64 mixes + one tiny shuffle; the check collects it twice
-    // (the first warms the probe's codegen), checksum pinned in the
-    // oracle. load_ok flags a
-    // verify session under load heavy enough to invalidate ANY timing
-    // read from it (>10 s for ~0.2 s of fixed work = >50× slowdown);
-    // the measured seconds go to stderr for post-hoc attribution
-    "probe_calibration" -> ((s, _) =>
-      s.range(0, 64L * 1024 * 1024, 1, 32)
-        .select(xxhash64(col("id")).as("h"))
-        .agg(sum(pmod(col("h"), lit(97L))).as("c"))),
-    // exact triangle count over the co-supplier graph (suppliers sharing
-    // a part): the classic edge-oriented wedge enumeration — orient
-    // low→high, join wedges on the middle node, close with a semi-join;
-    // each triangle counted once. Two slim equi-join shuffles, no
-    // all-pairs. The run counts a 1% part slice: at sf0.1 the 5% slice
-    // is ~300k edges / 35M triangles (~15 s of genuine wedge
-    // enumeration), which would dominate the bench total. The oracle
-    // pins the 5% slice, which the check emits after holding the run
-    // equal to a plain self-join recount of its own slice.
-    "graph_triangles" -> ((s, dir) =>
-      Graph.triangleCount(coSupplierEdges(s, dir, partModulus = 100), "src", "dst")),
-    // k-core decomposition over the mutual-3NN embedding graph (edge
-    // iff each vector is in the other's exact top-3 — the sparse
-    // dataset-cartography graph; the TPC-H co-occurrence graphs are
-    // union-of-cliques where peeling is vacuous). 2-core membership per
-    // node. The oracle is a Scala-GENERATED 16-round peeling unroll
-    // (kCoreOracleSql — pageRank's fixed-round convention): peeling is
-    // idempotent at the fixpoint, so Graph.kCore's zero-delta early
-    // stop matches the capped unroll bit-for-bit (this graph converges
-    // in ≤ 12 rounds at every sf)
-    "graph_kcore" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val mutual = Similarity.mutualEdges(
-        Similarity.bruteForceTopK(e, "vec_id", "embedding",
-          e, "vec_id", "embedding", k = 3))
-      val core = Graph.kCore(mutual, "src", "dst", k = 2, maxRounds = 16)
-      val nodes = mutual.select(col("src").as("node"))
-        .union(mutual.select(col("dst").as("node"))).distinct()
-      nodes.join(core.withColumn("in_core", lit(true)), Seq("node"), "left")
-        .select(col("node"), coalesce(col("in_core"), lit(false)).as("in_core"))
-    }),
-    // exact all-pairs baseline for the LSH form below (ids only — see
-    // Dedup.embeddingPairsExact on why the cosine value stays out of
-    // the hash-exact gate)
-    "dedup_embedding_exact" -> ((s, dir) =>
-      Dedup.embeddingPairsExact(t(s, dir, "embeddings"), "vec_id", "embedding",
-        threshold = 0.25)),
-    // upgraded from rows-only to a CHECKED INVARIANT: emits (a) the
-    // exact count of cos ≥ 0.25 pairs (oracle recomputes via
-    // list_cosine_similarity), (b) subset_ok — every LSH pair is in the
-    // exact set (guaranteed by construction: candidates are re-verified
-    // with the same cosine kernel as the exact path; a broken candidate
-    // join or verify filter breaks it), and (c) recall_ok — the
-    // hyperplane-LSH screen recovers ≥ 1% of the exact set. The floor is
-    // deliberately the LSH *math*, not a hope: on this corpus the
-    // near-threshold pairs collide per 8-plane band with prob
-    // (1−θ/π)^8 ≈ 0.013 (θ = acos 0.25), two bands ≈ 0.025; measured
-    // recall ≈ 0.032-0.033 across sfs — random routing or a dead band
-    // lands below 1%. Real near-dup corpora (cos ≥ 0.95) sit on the
-    // steep end of the S-curve where the same banding recalls ~0.9+.
-    "dedup_embedding" -> ((s, dir) =>
-      Dedup.embeddingPairs(t(s, dir, "embeddings"), "vec_id", "embedding",
-        threshold = 0.25, planes = 16)
-        .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))),
-
-    // ------------------------------------------------ text analysis
-    "text_stats" -> ((s, dir) => {
-      // every count from ONE TextStatsExpr kernel pass (CSE collapses
-      // the struct references inside whole-stage codegen)
-      val d = t(s, dir, "documents")
-      d.select(col("doc_id"),
-        length(col("text")).cast("long").as("n_chars_text"),
-        TextAnalysis.tokenCount(col("text")).as("n_tokens"),
-        TextAnalysis.digitCount(col("text")).as("n_digits"),
-        TextAnalysis.fingerprintMd5(col("text")).as("fingerprint"))
-    }),
-    "text_subwords" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.subwordCount(col("text")).as("n_subwords"))),
-    // corpus-trained BPE merge table (Sennrich 2016) — the trained
-    // tokenizer stage: k rounds of pair-count argmax + greedy merge
-    // over the word-TYPE table. The OUTPUT is the model itself (rank,
-    // lhs, rhs, pair_count), and the oracle replays the full training
-    // recurrence as a fixed-round CTE unroll (per-round argmax with the
-    // (count DESC, x, y) tie-break, merge via islands-parity windows) —
-    // the graph_lpa convention, so a wrong merge order, tie-break, or
-    // overlap rule in ANY round fails the gate. The run trains around
-    // the model cache (with it a second rep would time a map lookup);
-    // the check holds it equal to the cached trainer's table.
-    "text_bpe_train" -> ((s, dir) => bpeMergeRows(s, dir, cached = false)),
-    // the trained tokenizer's VOCABULARY artifact: every surviving
-    // token with its corpus occurrence count after the k merges — what
-    // a tokenizer ships next to its merge table (the id space, the
-    // frequency profile truncation decisions read). One aggregate over
-    // the word-type table through the same kernel; the oracle re-trains
-    // through the full unrolled recurrence and aggregates its final
-    // tok table, so vocab drift in ANY round fails the gate
-    "text_bpe_vocab" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val merges = Bpe.trainMerges(docs, "text", rounds = 8)
-      Bpe.wordFreq(docs, "text")
-        .select(col("freq"), explode(
-          graft.functions.BpeKernels.tokens(col("w"), Bpe.flatten(merges)))
-          .as("token"))
-        .groupBy(col("token"))
-        .agg(sum(col("freq")).as("n_occurrences"))
-    }),
-    // the serving path of the trained tokenizer: per-doc BPE token
-    // count via the codegen kernel (one pass over the normalized text,
-    // no explode/join/shuffle at scoring time); the oracle re-trains
-    // AND re-segments through the unrolled recurrence, then aggregates
-    // word-type token counts back to docs
-    "text_bpe_segment" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val merges = Bpe.trainMerges(docs, "text", rounds = 8)
-      docs.select(col("doc_id"),
-        graft.functions.BpeKernels.tokenCountCol(
-          graft.functions.BigramLm.normalize(col("text")),
-          Bpe.flatten(merges)).as("n_bpe_tokens"))
-    }),
-    // vocabulary-size-TARGETED BPE training (round-8 verdict item 10 —
-    // the way tokenizers are actually specced: |vocab| = V, not "run k
-    // rounds"): merge until the corpus's distinct-token count first
-    // reaches base-alphabet + 4, capped at 8 rounds. The target is
-    // RELATIVE to the corpus's own alphabet so the gate stops mid-run
-    // on any data; the oracle unrolls all 8 rounds, recomputes the
-    // per-round vocab sizes, derives the same stop round, and selects
-    // merges up to it — a wrong stop condition on either side fails
-    // the gate
-    "text_bpe_vocab_target" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val v0 = Bpe.wordFreq(docs, "text")
-        .select(explode(graft.functions.BpeKernels.tokens(
-          col("w"), Array.empty[String])).as("tk"))
-        .agg(countDistinct(col("tk"))).head().getLong(0)
-      val merges = Bpe.trainMergesToVocab(docs, "text",
-        targetVocab = v0 + 4, maxRounds = 8)
-      import s.implicits._
-      merges.zipWithIndex
-        .map { case ((x, y, c), i) => (i + 1L, x, y, c) }
-        .toDF("merge_rank", "lhs", "rhs", "pair_count")
-    }),
-    // sequence packing budgeted by the TRAINED tokenizer (round-8
-    // verdict item 6 — the composition a training-data user actually
-    // runs: text_pack's shard/window plan with n_tok = the BPE token
-    // count under the corpus-trained merges, not the whitespace
-    // heuristic). Same shard-parallel cumulative-window shape as
-    // text_pack (32 independent shards, no global sort); the scoring
-    // side is one codegen kernel pass, no explode/join. The oracle
-    // re-trains the tokenizer through the full unrolled recurrence,
-    // re-segments, and replays the packing arithmetic
-    "text_pack_bpe" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = t(s, dir, "documents")
-      val merges = Bpe.trainMerges(docs, "text", rounds = 8)
-      val d = docs.select(col("doc_id"),
-        pmod(col("doc_id"), lit(32)).cast("int").as("shard"),
-        graft.functions.BpeKernels.tokenCountCol(
-          graft.functions.BigramLm.normalize(col("text")),
-          Bpe.flatten(merges)).as("n_tok"))
-      val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
-      d.withColumn("cum", sum(col("n_tok")).over(w))
-        .withColumn("bin", expr("(cum - n_tok) div 512"))
-        .groupBy(col("shard"), col("bin"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
-    }),
-    // per-source corpus report card — the observability surface a
-    // pipeline operator reads between prep stages: volume (docs, chars,
-    // tokens), language mix (en share via the langId kernel), and
-    // boilerplate exposure (docs with >= 1 segment shared by >= 3 docs,
-    // the text_seg_dedup signal). One kernel scan for the per-doc
-    // metrics + the slim segment-frequency shuffle; all-integer, every
-    // column replayed by the oracle. The run takes the boilerplate flag
-    // from the hashed segment dedup (16-byte frequency shuffle); the
-    // check holds it equal to the raw-string form
-    "report_sources" -> ((s, dir) => reportSources(s, dir, hashed = true)),
-    "text_langid" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"), TextAnalysis.langId(col("text")).as("lang_pred"))),
-    // corpus-trained char-bigram LM quality score (the CCNet/KenLM
-    // stand-in) — integer log2 weights, so the oracle replays training
-    // AND scoring bit-for-bit via the naive explode+join plan the
-    // kernel-scored production form avoids
-    "text_lm_score" -> ((s, dir) =>
-      TextAnalysis.lmScore(t(s, dir, "documents"), "doc_id", "text")),
-    // CCNet's perplexity-bucket split (head/middle/tail) on the trained
-    // LM score: bucket 1 = most-typical third, by an exact global ntile
-    // (single-partition window — fine at this scale, and the DuckDB
-    // oracle replays it tie-for-tie under the (score DESC, doc_id)
-    // total order). The CCNet recipe that never globally sorts (one
-    // approx-percentile pass learns the two cut scores, a second scan
-    // buckets by comparison) puts tie docs at a cut in the lower bucket
-    // and sizes the buckets only approximately, so its output holds no
-    // contract against this exact split that a check could assert; it
-    // is not timed separately.
-    "text_ppl_buckets" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.orderBy(col("lm_score").desc, col("doc_id").asc)
-      TextAnalysis.lmScore(t(s, dir, "documents"), "doc_id", "text",
-          scale = 1000)
-        .withColumn("bucket", ntile(3).over(w).cast("long"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n_docs"),
-          min(col("lm_score")).as("min_score"),
-          max(col("lm_score")).as("max_score"),
-          sum(col("lm_score")).as("sum_score"))
-    }),
-    // winnowing (MOSS) rolling-hash sketch. XXH64 is not reproducible in
-    // the oracle engine, so the sketch SIZE is gated against its provable
-    // bounds instead (upgraded from rows-only): per doc the query emits
-    // n_windows and n_shingles — both independently recomputable from
-    // the text by the oracle (window count is normalized-length
-    // arithmetic; distinct 5-grams = distinct 5-gram hashes absent a
-    // 64-bit collision, none on this corpus) — plus bounds_ok asserting
-    // the winnow selection contract: (a) one fingerprint per window at
-    // most per position → s ≤ min(windows, shingles); (b) any window
-    // selects something → windows > 0 ⇒ s ≥ 1; (c) a selected hash
-    // covers ≤ w consecutive windows, so with all-distinct shingles
-    // s ≥ ⌈windows/w⌉. Wrong k/w, a broken rolling window, or a
-    // mis-normalization shifts n_windows/n_shingles or breaks a bound
-    // and fails the hash gate (measured violations = 0 at every sf).
-    "text_fingerprint" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        size(TextAnalysis.winnowFingerprint(col("text"), k = 5, w = 4))
-          .cast("long").as("n_fingerprints"))),
-    // near-dup pairs by winnow-sketch Jaccard: same verify kernel as
-    // dedup_ngram but over the ~2/(w+1)-sized sketch (the cheap
-    // all-pairs screen; LSH over sketches is the corpus-scale path).
-    // Upgraded from rows-only to a CHECKED INVARIANT: emits (a) the
-    // exact count of Jaccard ≥ 0.8 pairs (oracle recomputes from text),
-    // (b) cover_ok — the winnow screen at sketch-Jaccard ≥ 0.5 finds
-    // EVERY exact J ≥ 0.8 pair (winnowing guarantees shared substrings
-    // of length ≥ w+k−1 = 8 leave shared fingerprints; measured
-    // missed = 0 across sfs), and (c) prec_ok — every screened pair is
-    // a real overlap, exact J ≥ 0.5 (measured min 0.93-0.97). The run is
-    // the UNBOUNDED lossless inverted-index screen over the whole corpus
-    // (dedup_winnow_capped times the 1%-capped valve, so the two rows
-    // time two different operators); the check restricts it to a
-    // 200-doc slice.
-    "dedup_winnow" -> ((s, dir) =>
-      Dedup.winnowPairs(t(s, dir, "documents"), "doc_id", "text",
-        k = 5, w = 4, threshold = 0.5)),
-    // the winnow skew VALVE exercised (Dedup.winnowPairs maxDocFreq): a
-    // boilerplate fingerprint shared by f docs contributes f² candidate
-    // pairs, so production runs cap posting-list length at ~1% of the
-    // corpus (floor 2). Gate: (a) max_doc_freq is derived from the
-    // corpus size, so the oracle recomputes it; (b) subset_ok — the
-    // valve only DROPS pairs, never invents them; (c) noop_lossless_ok —
-    // a cap ≥ the corpus size reproduces the uncapped pair set exactly
-    // (the valve is a no-op until a posting list actually exceeds it).
-    // The kept/dropped split at the 1% cap goes to stderr for SCALING.md
-    // (data-dependent counts aren't DuckDB-recomputable for a winnow
-    // sketch)
-    "dedup_winnow_capped" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.winnowPairs(docs, "doc_id", "text", k = 5, w = 4,
-        threshold = 0.5, maxDocFreq = docFreqCap(docs.count()))
-    }),
-    // streaming ingest filter gated through its batch execution: the
-    // SAME dedupProbeStream plan (sketch → posting explode →
-    // stream-static join vs the standing index → pair dedup → Jaccard
-    // verify) run in batch mode must produce EXACTLY the cross-pair
-    // subset of incrementalWinnowPairs (pairs with exactly one
-    // batch-side id, re-oriented batch→standing); self_free_ok pins id
-    // disjointness. The streaming spec pins stream-vs-batch equality
-    // across micro-batches; within-batch pairs are the batch
-    // compaction's job by design (see the operator scaladoc). The run
-    // probes a MICRO-BATCH (a 2% slice) against the persisted standing
-    // store, not the whole 10% shard: the plan carries the incoming
-    // sketch array through the posting join (the price of needing no
-    // stream-stream re-join), so its cost scales with batch size ×
-    // sketch width; the check covers the micro-batch and the shard.
-    "dedup_stream_probe" -> ((s, dir) =>
-      graft.streaming.Events.dedupProbeStream(
-        streamOf(t(s, dir, "documents").filter(col("doc_id") % 50 === 0), "doc_id", "text"),
-        standingSketchTable(s, dir), k = 5, w = 4, threshold = 0.5)),
-    // incremental (new-batch-vs-standing-corpus) winnow dedup — the
-    // production ingest shape: the corpus splits by a deterministic
-    // bucket (doc_id % 10 = 0 → the "daily shard"), the batch probes the
-    // standing corpus's persisted sketch index + its own within-batch
-    // pairs, and the standing×standing self-join (the term that grows
-    // with corpus size, not shard size) never runs. Gate: (a) n_batch is
-    // oracle-recomputable; (b) equal_ok — the incremental pair set
-    // EQUALS the full-recompute winnowPairs over the whole corpus
-    // restricted to pairs touching the batch (exact set equality, both
-    // anti-join directions — the lossless-screen proof); (c) touches_ok
-    // — every emitted pair has a batch-side id.
-    "dedup_incremental" -> ((s, dir) =>
-      Dedup.incrementalWinnowPairs(standingSketchTable(s, dir),
-        t(s, dir, "documents").filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", k = 5, w = 4, threshold = 0.5)),
-    // the MAINTAINED-STATE form of the incremental probe (round-8
-    // verdict items 2+5): the valve reads the stored per-fingerprint
-    // df counts (one equi-join lookup) instead of re-windowing the full
-    // posting union per batch, and a bloom filter over the batch's
-    // fingerprints prunes the standing posting scan before the
-    // equi-join. Gate: (a) the indexed form (stored df + bloom) EQUALS
-    // the window-recount form at the same derived cap — the lookup
-    // valve is indistinguishable from the recount; (b) both EQUAL the
-    // capped full recompute restricted to batch-touching pairs — the
-    // whole incremental path stays lossless under the valve.
-    "dedup_incremental_indexed" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.incrementalWinnowPairs(standingSketchTable(s, dir),
-        docs.filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", k = 5, w = 4, threshold = 0.5,
-        maxDocFreq = docFreqCap(docs.count()),
-        standingDf = Some(standingDfTable(s, dir)), bloomProbe = true)
-    }),
-    // STANDING-INDEX MAINTENANCE — the other half of the ingest loop
-    // (round-8 verdict item 4): after the batch is probed and accepted,
-    // standing' = standing ∪ accepted sketches and the maintained df
-    // counts absorb the batch deltas. Gate: incremental upkeep is
-    // indistinguishable from rebuild — standing' set-equals
-    // winnowSketches of the GROWN corpus, df' set-equals the recomputed
-    // per-fingerprint counts.
-    "dedup_standing_update" -> ((s, dir) => {
-      val batchSk = Dedup.winnowSketches(
-        t(s, dir, "documents").filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", k = 5, w = 4)
-      val (_, grownDf) = Dedup.updateStandingIndex(
-        standingSketchTable(s, dir), standingDfTable(s, dir), batchSk)
-      grownDf
-    }),
-    // ARTIFACT PERSISTENCE for the winnow index (round-8 verdict item
-    // 3): train → write (sketches + df counts as parquet,
-    // ModelStore.saveWinnowIndex) → load → prove (a) the round-trip
-    // lost nothing (set equality on sketches AND df counts) and (b) the
-    // loaded store serves the incremental probe with output identical
-    // to the in-memory index — the cross-session serving contract.
-    "index_persist_winnow" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val path = tmpPath(s"graft-winnow-store-${sessionKey(s, dir)}")
-      if (!pathExists(s, path))
-        ModelStore.saveWinnowIndex(standingSketchTable(s, dir), path)
-      Dedup.incrementalWinnowPairs(ModelStore.loadWinnowSketches(s, path),
-        docs.filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", k = 5, w = 4, threshold = 0.5,
-        maxDocFreq = docFreqCap(docs.count()),
-        standingDf = Some(ModelStore.loadWinnowDf(s, path)), bloomProbe = true)
-    }),
-    // ARTIFACT PERSISTENCE for the trained models (round-8 verdict item
-    // 3): k-means/IVF centroids, PQ codebooks, and the BPE merge table
-    // each round-trip through parquet (ModelStore) and load back
-    // IDENTICAL — exact Double/string equality, which implies identical
-    // downstream scoring because every consumer is a pure function of
-    // the artifact. The loads read parquet and never consult the
-    // session model caches, so nothing serves from memory; the first
-    // rep pays training, later reps time the artifact round-trip.
-    "index_persist_models" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val base = tmpPath(s"graft-model-store-${sessionKey(s, dir)}")
-      val (annOk, bpeOk, nVec) = try {
-        val (_, km) = Clustering.kmeans(e, "vec_id", "embedding", k = 8, maxIter = 4)
-        val pq = Quantization.trainPq(e, "vec_id", "embedding", m = 4, k = 16, maxIter = 4)
-        val merges = Bpe.trainMerges(t(s, dir, "documents"), "text", rounds = 8)
-        ModelStore.saveKmeans(s, km, s"$base/kmeans")
-        ModelStore.savePq(s, pq, s"$base/pq")
-        ModelStore.saveBpe(s, merges, s"$base/bpe")
-        val km2 = ModelStore.loadKmeans(s, s"$base/kmeans")
-        val pq2 = ModelStore.loadPq(s, s"$base/pq")
-        val merges2 = ModelStore.loadBpe(s, s"$base/bpe")
-        val kmOk = km.centroids.length == km2.centroids.length &&
-          km.centroids.zip(km2.centroids).forall { case (a, b) => a.sameElements(b) } &&
-          km.inertiaTrace == km2.inertiaTrace
-        val pqOk = pq.m == pq2.m && pq.k == pq2.k && pq.subDim == pq2.subDim &&
-          pq.codebooks.zip(pq2.codebooks).forall { case (ba, bb) =>
-            ba.length == bb.length &&
-              ba.zip(bb).forall { case (a, b) => a.sameElements(b) } } &&
-          pq.errorTrace == pq2.errorTrace
-        (kmOk && pqOk, merges == merges2, e.count())
-      } finally deletePath(s, base)
-      import s.implicits._
-      Seq((nVec, annOk, bpeOk)).toDF("n_vectors", "ann_ok", "bpe_ok")
-    }),
-    // DELETION PROPAGATION through the standing index — the takedown /
-    // right-to-be-forgotten half of maintenance (the inverse of
-    // dedup_standing_update): docs leave the corpus, their sketches
-    // leave the store, and the maintained df counts shed exactly their
-    // contributions. Gate: forget is indistinguishable from rebuild —
-    // kept sketches set-equal winnowSketches of the surviving corpus,
-    // shrunk df set-equals the recomputed counts (zero-count
-    // fingerprints gone on both sides).
-    "index_forget" -> ((s, dir) => {
-      val (_, shrunk) = Dedup.forgetFromStandingIndex(
-        standingSketchTable(s, dir), standingDfTable(s, dir),
-        t(s, dir, "documents").filter(col("doc_id") % 7 === 0)
-          .select(col("doc_id").as("id")))
-      shrunk
-    }),
-    // INCREMENTAL VECTOR-INDEX MAINTENANCE — the ANN analog of
-    // dedup_standing_update: a new embedding batch is assigned to the
-    // FROZEN trained centroids (per-row pure function) and appended to
-    // the standing posting relation as a union; the quantizer is not
-    // retrained per batch (the production IVF contract — retraining is
-    // a scheduled rebuild). The run serves from the frozen quantizer's
-    // postings of the whole corpus. Check: (a) serving from the run's
-    // index and from the appended index both equal the from-scratch
-    // build over the full corpus (identical
-    // (probe, corpus, rank) sets), (b) the posting relation
-    // round-trips parquet (ModelStore.saveIvfPostings) and the LOADED
-    // store serves identically — the cross-session path.
-    "sim_ivf_append" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val (_, km) = Clustering.kmeans(e, "vec_id", "embedding", k = 8, maxIter = 4)
-      Similarity.ivfTopKServe(
-        Similarity.ivfAssign(e, "vec_id", "embedding", km.centroids),
-        e.filter(col("vec_id") % 37 === 0), "vec_id", "embedding",
-        km.centroids, k = 5, nProbe = 3)
-    }),
-    // VECTOR-STORE DELETION — the ANN analog of index_forget: departing
-    // vectors leave the posting relation by one anti-join; because
-    // assignment is a per-row pure function the forgotten store is
-    // EXACTLY the rebuild on the survivors. Gate: posting set equality
-    // AND identical serving output vs the from-scratch rebuild.
-    "sim_ivf_forget" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val (_, km) = Clustering.kmeans(e, "vec_id", "embedding", k = 8, maxIter = 4)
-      Similarity.ivfForget(
-        Similarity.ivfAssign(e, "vec_id", "embedding", km.centroids),
-        e.filter(col("vec_id") % 9 === 0).select(col("vec_id").as("id")))
-    }),
-    // STREAMING EMBEDDING-INGEST PROBE — the vector analog of
-    // dedup_stream_probe, closing the ingest loop for the sim_ivf_*
-    // family: incoming vectors route to their nProbe nearest buckets
-    // under the frozen quantizer, stream-static join against the
-    // standing postings, exact-cosine verify. Gate: batch execution of
-    // the streaming plan set-equals the independent batch comparator
-    // (ivfTopKServe with an unbounded k, thresholded) — same recall
-    // contract, different join/dedup/ranking path — and no self-pairs.
-    // The run probes a micro-batch-sized 2% slice (the
-    // dedup_stream_probe convention); the check covers it and the
-    // whole 10% shard.
-    "sim_stream_probe" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val (_, km) = Clustering.kmeans(e, "vec_id", "embedding", k = 8, maxIter = 4)
-      graft.streaming.Events.simProbeStream(
-        streamOf(e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding"),
-        Similarity.ivfAssign(e.filter(col("vec_id") % 10 =!= 0),
-          "vec_id", "embedding", km.centroids),
-        km.centroids, nProbe = 3, threshold = 0.35)
-    }),
-    // STREAMING VECTOR-STORE UPDATE — the other half of the streaming
-    // IVF lifecycle (sim_stream_probe reads the standing store; this
-    // GROWS it): accepted vectors stream in via AvailableNow +
-    // checkpoint, each micro-batch assigned under the frozen quantizer
-    // and upserted into a delta posting store by idempotent
-    // per-batch dynamic-partition overwrite. Gate: (base ∪ delta)
-    // set-equals ivfAssign of the grown corpus (a lossy sink, a
-    // double-applied batch, or a drifted assignment breaks it), AND
-    // serving from the streamed store equals serving from the rebuild.
-    "sim_ivf_stream_update" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val (_, km) = Clustering.kmeans(e, "vec_id", "embedding", k = 8, maxIter = 4)
-      val isBatch = col("vec_id") % 10 === 0
-      val sid = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft-ivf-stream-$sid").getAbsolutePath
-      val row = try {
-        ModelStore.saveIvfPostings(
-          Similarity.ivfAssign(e.filter(!isBatch), "vec_id", "embedding",
-            km.centroids), s"$base/postings")
-        graft.streaming.Events.ivfUpsertStream(
-          graft.streaming.Events.readTableStream(s, dir, "embeddings")
-            .filter(isBatch).select(col("vec_id"), col("embedding")),
-          km.centroids, s"$base/delta", s"$base/ckpt")
-        val store = ModelStore.loadIvfPostings(s, s"$base/postings")
-          .union(ModelStore.loadIvfDelta(s, s"$base/delta")).cache()
-        val rebuilt = Similarity.ivfAssign(e, "vec_id", "embedding",
-          km.centroids).cache()
-        val probes = e.filter(col("vec_id") % 37 === 0)
-        def sel(a: DataFrame) = Similarity.ivfTopKServe(a, probes,
-            "vec_id", "embedding", km.centroids, k = 5, nProbe = 3)
-          .select(col("probe_id"), col("corpus_id"), col("rank"))
-        try e.filter(isBatch).agg(count(lit(1)).as("n_batch"))
-          .crossJoin(setEq(store.select(col("corpus_id"), col("bucket")),
-            rebuilt.select(col("corpus_id"), col("bucket")), "store_ok"))
-          .crossJoin(setEq(sel(store), sel(rebuilt), "serve_ok"))
-          .select(col("n_batch"), col("store_ok"), col("serve_ok"))
-          .collect()(0)
-        finally Seq(store, rebuilt).foreach(_.unpersist())
-      } finally {
-        try {
-          val hp = new org.apache.hadoop.fs.Path(base)
-          hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-        } catch { case _: Throwable => () }
-      }
-      import s.implicits._
-      Seq((row.getLong(0), row.getBoolean(1), row.getBoolean(2)))
-        .toDF("n_batch", "store_ok", "serve_ok")
-    }),
-    // VECTOR-STORE COMPACTION — the maintenance step the rebuild
-    // policy's churn counter schedules: fold the accumulated per-batch
-    // delta partitions back into one compact base relation. Assignment
-    // purity makes it a pure rewrite; the gate proves (a) the compacted
-    // base set-equals the from-scratch assignment of the grown corpus,
-    // (b) serving from it is identical, and (c) the delta store is
-    // actually gone (a compaction that silently keeps feeding from the
-    // delta would pass (a)+(b) and lie about the maintenance).
-    "sim_ivf_compact" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val (_, km) = Clustering.kmeans(e, "vec_id", "embedding", k = 8, maxIter = 4)
-      val isBatch = col("vec_id") % 10 === 0
-      val sid = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft-ivf-compact-$sid").getAbsolutePath
-      val row = try {
-        ModelStore.saveIvfPostings(
-          Similarity.ivfAssign(e.filter(!isBatch), "vec_id", "embedding",
-            km.centroids), s"$base/postings")
-        // two ingest batches land as two delta partitions, then compact
-        val batch = Similarity.ivfAssign(e.filter(isBatch), "vec_id",
-          "embedding", km.centroids)
-        ModelStore.upsertIvfPostings(batch.filter(col("corpus_id") % 20 === 0),
-          s"$base/delta", batchId = 0L)
-        ModelStore.upsertIvfPostings(batch.filter(col("corpus_id") % 20 =!= 0),
-          s"$base/delta", batchId = 1L)
-        ModelStore.compactIvfPostings(s, s"$base/postings", s"$base/delta")
-        val store = ModelStore.loadIvfPostings(s, s"$base/postings").cache()
-        val rebuilt = Similarity.ivfAssign(e, "vec_id", "embedding",
-          km.centroids).cache()
-        val probes = e.filter(col("vec_id") % 37 === 0)
-        def sel(a: DataFrame) = Similarity.ivfTopKServe(a, probes,
-            "vec_id", "embedding", km.centroids, k = 5, nProbe = 3)
-          .select(col("probe_id"), col("corpus_id"), col("rank"))
-        val deltaGone = !new org.apache.hadoop.fs.Path(s"$base/delta")
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-          .exists(new org.apache.hadoop.fs.Path(s"$base/delta"))
-        try e.filter(isBatch).agg(count(lit(1)).as("n_batch"))
-          .crossJoin(setEq(store.select(col("corpus_id"), col("bucket")),
-            rebuilt.select(col("corpus_id"), col("bucket")), "eq")
-            .crossJoin(setEq(sel(store), sel(rebuilt), "serve_eq"))
-            .select((col("eq") && col("serve_eq")).as("compact_ok")))
-          .withColumn("delta_gone", lit(deltaGone))
-          .select(col("n_batch"), col("compact_ok"), col("delta_gone"))
-          .collect()(0)
-        finally Seq(store, rebuilt).foreach(_.unpersist())
-      } finally {
-        try {
-          val hp = new org.apache.hadoop.fs.Path(base)
-          hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-        } catch { case _: Throwable => () }
-      }
-      import s.implicits._
-      Seq((row.getLong(0), row.getBoolean(1), row.getBoolean(2)))
-        .toDF("n_batch", "compact_ok", "delta_gone")
-    }),
-    // THE MAINTENANCE LOOP CLOSED END-TO-END: the rebuild policy's
-    // ledger arithmetic DRIVES the compaction instead of just flagging
-    // it — policy fires ⇒ compactIvfPostings runs ⇒ the delta store is
-    // gone and serving reads one compact relation; policy doesn't fire
-    // ⇒ nothing moves and the delta stays. Two scenarios from
-    // deterministic id buckets make it falsifiable in both directions,
-    // and the oracle replays the trigger arithmetic itself (churn basis
-    // points over the ledger counts) — a mis-threshold breaks the hash,
-    // not just a flag. store_ok additionally requires the post-loop
-    // store (base ∪ surviving delta) to set-equal the from-scratch
-    // assignment AND the delta's existence to match the decision.
-    "index_maintenance_loop" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val (_, km) = Clustering.kmeans(e, "vec_id", "embedding", k = 8, maxIter = 4)
-      val sid = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-      val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft-ivf-maint-$sid").getAbsolutePath
-      def scenario(name: String, batchPred: Column)
-          : (String, Long, Long, Long, Boolean, Boolean) = {
-        val basePath = s"$root/$name/postings"
-        val deltaPath = s"$root/$name/delta"
-        val corpus0 = e.filter(!batchPred)
-        ModelStore.saveIvfPostings(Similarity.ivfAssign(corpus0, "vec_id",
-          "embedding", km.centroids), basePath)
-        ModelStore.upsertIvfPostings(Similarity.ivfAssign(e.filter(batchPred),
-          "vec_id", "embedding", km.centroids), deltaPath, batchId = 0L)
-        // one fused aggregate for both ledger counts (optimization
-        // round 11): two .count() actions were two scan jobs
-        val cnt = e.agg(
-          sum(when(batchPred, 0L).otherwise(1L)).as("n0"),
-          sum(when(batchPred, 1L).otherwise(0L)).as("na")).collect()(0)
-        val n0 = cnt.getLong(0)
-        val na = cnt.getLong(1)
-        val (_, churnBp, due) = ModelStore.rebuildDue(n0, 0L, na)
-        if (due) ModelStore.compactIvfPostings(s, basePath, deltaPath)
-        val dp = new org.apache.hadoop.fs.Path(deltaPath)
-        val deltaExists = dp.getFileSystem(
-          s.sparkContext.hadoopConfiguration).exists(dp)
-        val store = ModelStore.loadIvfPostings(s, basePath)
-          .union(if (deltaExists) ModelStore.loadIvfDelta(s, deltaPath)
-            else ModelStore.loadIvfPostings(s, basePath).limit(0))
-        val rebuilt = Similarity.ivfAssign(e, "vec_id", "embedding", km.centroids)
-        val eq = setEq(store.select(col("corpus_id"), col("bucket")),
-          rebuilt.select(col("corpus_id"), col("bucket")), "eq")
-          .collect()(0).getBoolean(0)
-        (name, n0, na, churnBp, due, eq && (deltaExists != due))
-      }
-      val rows = try Seq(
-        scenario("heavy_ingest", col("vec_id") % 4 === 0),  // ~33% churn: fires
-        scenario("light_ingest", col("vec_id") % 97 === 0)) // ~1%: must not
-      finally {
-        try {
-          val hp = new org.apache.hadoop.fs.Path(root)
-          hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-        } catch { case _: Throwable => () }
-      }
-      import s.implicits._
-      rows.toDF("scenario", "n_at_build", "n_added", "churn_bp",
-        "maintained", "store_ok")
-    }),
-    // THE RETRAIN HALF OF THE LIFECYCLE (round-10 verdict item 2):
-    // volume-triggered compaction (index_maintenance_loop) cannot see
-    // DISTRIBUTION drift — a batch of vectors that all land in one
-    // bucket leaves the trained centroids describing a corpus that no
-    // longer exists. ModelStore.retrainDue measures assignment-
-    // distribution drift (total-variation bp between the store's
-    // build-time bucket counts and its current ones — one KB-sized
-    // aggregate of what the index already materializes, never a vector
-    // scan) and, when it fires, the loop RETRAINS: new k-means
-    // centroids over the grown corpus + a full reassign replacing the
-    // store. Two scenarios from the same ingest volume make it
-    // falsifiable in both directions — "shifted_drift" ingests vectors
-    // displaced off the training manifold (all mass into few buckets ⇒
-    // fires ⇒ store must equal a from-scratch assignment under the NEW
-    // centroids), "stable_ingest" ingests unshifted vectors from the
-    // same distribution (distribution holds ⇒ must NOT fire ⇒ store
-    // still serves under the OLD centroids). store_ok is a set-equality
-    // proof against an independently recomputed assignment either way;
-    // a mis-threshold, a broken drift statistic, or a retrain that
-    // forgets to reassign flips a pinned boolean and breaks the hash.
-    "index_retrain_loop" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val isBatch = col("vec_id") % 4 === 0
-      val corpus0 = e.filter(!isBatch)
-      val (_, km0) = Clustering.kmeans(corpus0, "vec_id", "embedding", k = 8, maxIter = 4)
-      // scenario-invariant state, computed once: the store at build time
-      val basePostings = Similarity.ivfAssign(corpus0, "vec_id",
-        "embedding", km0.centroids).select(col("corpus_id"), col("cv"), col("bucket"))
-        .cache()
-      val buildCounts = basePostings.groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n")).select(col("bucket"), col("n"))
-      val nAtBuild = corpus0.count()
-      def scenario(name: String, batch: DataFrame)
-          : (String, Long, Long, Boolean, Boolean) = {
-        val deltaPostings = Similarity.ivfAssign(batch, "vec_id",
-          "embedding", km0.centroids).select(col("corpus_id"), col("cv"), col("bucket"))
-          .cache()
-        try {
-          val currentCounts = basePostings.unionByName(deltaPostings)
-            .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-            .select(col("bucket"), col("n"))
-          val (_, due) = ModelStore.retrainDue(buildCounts, currentCounts)
-          val corpus = corpus0.unionByName(batch)
-          // fires ⇒ retrain (new centroids over the grown corpus) + full
-          // reassign; quiet ⇒ the old store keeps serving. Either way the
-          // served store is constructed INCREMENTALLY — per-part
-          // assignment unioned, the way maintenance actually touches a
-          // store — never as the same one-shot expression the verifier
-          // below recomputes, so the set-equality is falsifiable: a
-          // maintenance bug that leaves any part under the old quantizer
-          // (e.g. a retrain that reassigns only the batch) breaks it.
-          val served =
-            if (due) {
-              val (_, km1) = Clustering.kmeans(corpus, "vec_id", "embedding",
-                k = 8, maxIter = 4)
-              (Similarity.ivfAssign(corpus0, "vec_id", "embedding", km1.centroids)
-                .unionByName(
-                  Similarity.ivfAssign(batch, "vec_id", "embedding", km1.centroids)),
-                km1.centroids)
-            } else (basePostings.unionByName(deltaPostings), km0.centroids)
-          // independent recomputation: the incrementally-maintained store
-          // must set-equal a from-scratch assignment of the grown corpus
-          // under the centroids the policy chose (assignment purity makes
-          // whole-vs-parts the invariant, as in sim_ivf_stream_update)
-          val expected = Similarity.ivfAssign(corpus, "vec_id", "embedding",
-            served._2)
-          val eq = setEq(served._1.select(col("corpus_id"), col("bucket")),
-            expected.select(col("corpus_id"), col("bucket")), "eq")
-            .collect()(0).getBoolean(0)
-          (name, nAtBuild, batch.count(), due, eq)
-        } finally { deltaPostings.unpersist(); () }
-      }
-      val shifted = e.filter(isBatch).withColumn("embedding",
-        transform(col("embedding"), x => x + lit(3.0f)))
-      val rows =
-        try Seq(
-          scenario("shifted_drift", shifted),
-          scenario("stable_ingest", e.filter(isBatch)))
-        finally { basePostings.unpersist(); () }
-      import s.implicits._
-      rows.toDF("scenario", "n_at_build", "n_added", "retrained", "store_ok")
-    }),
-    // AGGREGATE PUSHDOWN into the DSv2 source — COUNT/MIN/MAX/SUM over
-    // the generated id range answered ANALYTICALLY by the source
-    // (GenScanBuilder.pushAggregation, complete pushdown: Spark's
-    // Aggregate node disappears and the scan emits the 1-row answer;
-    // the query is O(1) at any scale — the strongest form of the
-    // footer-stats shortcut parquet gives COUNT(*)). Gate: (a) the
-    // pushed plan has NO logical Aggregate while the residual-filter
-    // plan (price ≥ 0 is not pushable, blocking agg pushdown) keeps
-    // one — falsifiable on both sides; (b) both paths return identical
-    // values; the oracle recomputes the arithmetic series.
-    "source_agg_pushdown" -> ((s, _) =>
-      idAggregates(genSource(s).filter(col("id") > 5000L))),
-    // PARTITIONED LAYOUT + DYNAMIC PARTITION PRUNING — the 100 TB
-    // fact-table idiom the flat testdata can't show: the fact written
-    // hive-partitioned on a derived key (order month), joined to a
-    // tiny dim filtered on an attribute (quarter), and Spark's DPP
-    // turns the dim's broadcast into a runtime partition filter on the
-    // fact scan — 9 of 12 partition directories are never opened.
-    // Gate: (a) the executed plan carries a dynamicpruning partition
-    // filter (falsifiable — flat scans never show one), (b) the
-    // pruned-join result equals the same aggregate replayed on the raw
-    // unpartitioned table (which the oracle recomputes). The partitioned
-    // write is ingest cost, paid once per session.
-    "layout_partitioned_dpp" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val path = tmpPath(s"graft-dpp-${sessionKey(s, dir)}")
-      if (!pathExists(s, path))
-        o.withColumn("om", month(col("o_orderdate")))
-          .write.mode("overwrite").partitionBy("om").parquet(path)
-      // the month→quarter dim derives from the raw PARQUET table, not a
-      // local Seq: Catalyst folds a filtered LocalRelation to literal
-      // rows, and with no selective predicate left on the filtering
-      // side the DPP rule never fires (measured — dpp_plan_ok false)
-      val dim = o.select(month(col("o_orderdate")).as("om")).distinct()
-        .withColumn("qtr", expr("(om - 1) div 3 + 1"))
-      s.read.parquet(path).join(dim.filter(col("qtr") === 1), Seq("om"))
-        .agg(count(lit(1)).as("n_q1"), sum(col("o_orderkey")).as("key_sum"))
-    }),
-    // one-pass TABLE PROFILER — the ANALYZE-style column statistics a
-    // pipeline collects before planning over unknown data: per column
-    // null count, exact distinct count, min/max (string-rendered for a
-    // uniform schema). One scan: Spark rewrites the multi-distinct
-    // aggregate through one Expand (row × #distinct-aggs), still a
-    // single pass over the table — at 100 TB the exact ndv swaps for
-    // the HLL sketch family (distinct_hll) with the same shape.
-    // one single-distinct aggregate PER COLUMN, crossJoined into the
-    // same 1-row relation (optimization round 11, guide §2.3): the old
-    // single aggregate with FOUR countDistinct columns rewrites through
-    // Expand — every input row multiplied ×5 (one projection per
-    // distinct column + one for the plain aggregates) at the table's
-    // full width before the shuffle, the documented 100 TB hazard that
-    // dq_profile_approx exists to avoid. Per-column aggregates plan as
-    // plain two-phase distinct aggregates (partial on the value — no
-    // Expand anywhere), each scanning ONE parquet column, and the
-    // subtrees execute as independent stages of one job. Same 16
-    // values, same stack(), bit-identical output.
-    "dq_profile" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val cols = profiledOrderCols
-      def prof(c: String) = o.agg(
-        count(when(col(c).isNull, 1)).as(s"${c}_nulls"),
-        countDistinct(col(c)).as(s"${c}_nd"),
-        min(col(c)).cast("string").as(s"${c}_min"),
-        max(col(c)).cast("string").as(s"${c}_max"))
-      val one = cols.map(prof).reduce(_.crossJoin(_))
-      one.select(expr("stack(" + cols.length + ", " +
-        cols.map(c => s"'$c', ${c}_nulls, ${c}_nd, ${c}_min, ${c}_max")
-          .mkString(", ") +
-        ") as (col_name, n_nulls, n_distinct, min_val, max_val)"))
-    }),
-    // the AT-SCALE profiler (round-9 verdict item 6): ndv from
-    // approx_count_distinct (HLL++, one pass, NO Expand — the exact
-    // multi-distinct above rewrites through Expand, a cols× row
-    // multiplication that is a full-width shuffle per distinct column
-    // at 100 TB; see PLANS.md). Null counts and min/max stay exact
-    // (cheap single-pass aggregates). The run is the sketch-only
-    // profile; its check recomputes the exact ndv (the VERIFIER, not
-    // the operator) and emits the same row shape with
-    // nd_ok = |hll − exact| ≤ 15%·exact per column.
-    "dq_profile_approx" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      def prof(c: String) = Seq(
-        count(when(col(c).isNull, 1)).as(s"${c}_nulls"),
-        approx_count_distinct(col(c), 0.05).as(s"${c}_and"),
-        min(col(c)).cast("string").as(s"${c}_min"),
-        max(col(c)).cast("string").as(s"${c}_max"))
-      val exprs = profiledOrderCols.flatMap(prof)
-      o.agg(exprs.head, exprs.tail: _*)
-        .select(expr("stack(" + profiledOrderCols.length + ", " +
-          profiledOrderCols.map(c => s"'$c', ${c}_nulls, ${c}_and, ${c}_min, ${c}_max")
-            .mkString(", ") +
-          ") as (col_name, n_nulls, n_distinct_approx, min_val, max_val)"))
-    }),
-    // APPROXIMATE EQUI-DEPTH HISTOGRAM with a tolerance gate (round-10
-    // verdict item 5, the dq_profile_approx pattern for quantiles): the
-    // scale path is percentile_approx's mergeable sketch — one pass, no
-    // sort, bounded rank error ε = 1/accuracy — and the gate holds it
-    // to the sketch's own contract: for each decile edge the sketch
-    // returns, the edge's TRUE rank (count of rows ≤ it, one broadcast
-    // of 9 edges over a second scan) must sit within a 10·ε·n window of
-    // the target rank. The exact edges come from a rank computation and
-    // are oracle-replayed in DuckDB; the approximate values themselves
-    // stay OUT of the hashed output (a sketch may legally vary), only
-    // their gated booleans land. The exact side's single-partition
-    // window sort is the ORACLE baseline, same class as the dedup
-    // *Exhaustive forms — at 100 TB only the sketch path runs.
-    "dq_histogram_approx" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val b = t(s, dir, "orders").select(floor(col("o_totalprice")).as("x"))
-      val n = b.count()
-      val targets = (1 to 9).map(k => (k, k * n / 10L))
-      val spark2 = s
-      import spark2.implicits._
-      val targetDf = targets.toDF("decile", "target_rank")
-      val exact = b
-        .select(col("x"), row_number().over(Window.orderBy(col("x"))).as("rn"))
-        .join(broadcast(targetDf), col("rn") === col("target_rank"))
-        .select(col("decile"), col("x").as("exact_edge"))
-      val approx = b
-        .agg(percentile_approx(col("x"),
-          array((1 to 9).map(k => lit(k / 10.0)): _*), lit(1000)).as("ap"))
-        .select(posexplode(col("ap")).as(Seq("pos", "approx_edge")))
-        .select((col("pos") + 1).cast("int").as("decile"), col("approx_edge"))
-      val approxRanks = b.join(broadcast(approx))
-        .groupBy(col("decile"), col("approx_edge"))
-        .agg(sum(when(col("x") <= col("approx_edge"), 1L).otherwise(0L))
-          .as("approx_rank"))
-      exact.join(approxRanks, "decile").join(broadcast(targetDf), "decile")
-        .select(col("decile").cast("long").as("decile"), col("exact_edge"),
-          (abs(col("approx_rank") - col("target_rank")) <= lit(10L * n / 1000L + 1L))
-            .as("rank_ok"))
-    }),
-    // DOMAIN-MIXTURE RESAMPLING — rebalance the corpus toward a
-    // uniform per-domain mixture under a 30% token budget (the
-    // Pile/Dolma-style source reweighting step): per-domain acceptance
-    // rate in basis points = the domain's share of the uniform budget,
-    // capped at keep-all; membership decided by a deterministic
-    // multiplicative hash of the doc id, so the sample is reproducible
-    // (and oracle-replayable) independent of partitioning. One scan +
-    // two tiny broadcast relations (counts, rates); all arithmetic
-    // integer (div truncation pinned on both sides).
-    "sample_mixture" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      // the uniform mixture is the weights ≡ 1 case of the
-      // parameterized resampler (Sampling.mixtureResample)
-      val weights = docs.select(col("source")).distinct()
-        .withColumn("weight", lit(1L))
-      Sampling.mixtureResample(docs, "doc_id", "source", weights)
-        .select(col("source"), col("n_domain"), col("rate_bp"), col("n_sampled"))
-    }),
-    // the SAME resampler under a NON-UNIFORM target distribution
-    // (round-9 verdict item 5: an operator that computes one mixture is
-    // a demo) — per-domain weights arrive as a relation; here a
-    // deterministic non-uniform weighting derived from the source name
-    // so the full integer replay stays oracle-checkable. A real
-    // pipeline passes its curated (domain, weight) table.
-    "sample_mixture_weighted" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val weights = docs.select(col("source")).distinct()
-        .withColumn("weight", length(col("source")).cast("long") % 5L + 1L)
-      Sampling.mixtureResample(docs, "doc_id", "source", weights)
-    }),
-    // closed-form model DISTILLATION — fit a cheap linear proxy of the
-    // corpus-trained LM quality score from scan-time features
-    // (lm_score ≈ b0 + b1·n_chars + b2·n_tokens) by exact least
-    // squares: the 3-unknown normal equations' Gram matrix accumulates
-    // in ONE aggregation pass (9 integer sums — at 100 TB this is a
-    // single map-side-combined scan, the MLlib-free regression
-    // primitive), then Cramer's rule solves it on the driver in BigInt
-    // (determinants overflow long; nothing data-sized leaves the
-    // executors). Coefficients emitted in truncated milli units —
-    // BigInt /, DuckDB //, and Spark div all truncate toward zero, so
-    // the oracle replays the entire fit exactly, negative slopes
-    // included. The distilled scorer is what a pipeline runs at ingest
-    // when the full LM pass is too expensive per shard.
-    "ml_linreg_distill" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val d = docs
-        .select(col("doc_id"), col("n_chars").as("x1"),
-          TextAnalysis.tokenCount(col("text")).as("x2"))
-        .join(TextAnalysis.lmScore(docs, "doc_id", "text"), Seq("doc_id"))
-        .select(col("x1"), col("x2"), col("lm_score").as("yv"))
-      // Gram sums accumulate in decimal(38,0), not LongType: Spark's
-      // long sum WRAPS silently at 2^63, and at the 100 TB design point
-      // sum(x1*x1) approaches Long range where no oracle would catch the
-      // corruption. The DuckDB oracle already sums in HUGEINT; decimal
-      // keeps both sides exact (row count bounded by 38-digit headroom,
-      // ~1e19 rows at x1*x1 ≤ 1e19 — far past any real corpus).
-      // factors cast BEFORE the multiply — a Long×Long product wraps
-      // before any widening cast could save it
-      def dec(name: String): Column = col(name).cast("decimal(19,0)")
-      def dsum(c: Column): Column = sum(c.cast("decimal(38,0)"))
-      val r = d.agg(
-        count(lit(1)).as("n"),
-        dsum(dec("x1")).as("s1"), dsum(dec("x2")).as("s2"),
-        dsum(dec("x1") * dec("x1")).as("s11"),
-        dsum(dec("x1") * dec("x2")).as("s12"),
-        dsum(dec("x2") * dec("x2")).as("s22"),
-        dsum(dec("yv")).as("sy"),
-        dsum(dec("x1") * dec("yv")).as("s1y"),
-        dsum(dec("x2") * dec("yv")).as("s2y")).collect()(0)
-      val sums = BigInt(r.getLong(0)) +:
-        (1 until 9).map(i => BigInt(r.getDecimal(i).toBigInteger))
-      val (b0, b1, b2, ok) = linregMilliBig(sums)
-      import s.implicits._
-      Seq((r.getLong(0), b0, b1, b2, ok))
-        .toDF("n_docs", "beta0_milli", "beta1_milli", "beta2_milli",
-          "det_nonzero")
-    }),
-    "text_quality" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"), TextAnalysis.qualityScore(col("text")).as("quality"))),
-    // frequency-based quality signal (the KenLM-free cousin of
-    // perplexity filtering): score each doc by the corpus frequency of
-    // its tokens — rare-token-heavy docs (garbled text, codes, OCR
-    // noise) score low. Integer surface: per-doc token count, summed
-    // corpus frequency, and their integer quotient. One explode, one
-    // frequency aggregate, one re-join keyed on the token
-    "text_token_freq_score" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(split(lower(col("text")), "[\\t\\n\\x0B\\f\\r ]+")).as("term"))
-        .filter(col("term") =!= "")
-      val freq = toks.groupBy(col("term")).agg(count(lit(1)).as("f"))
-      toks.join(freq, Seq("term"))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_tokens"), sum(col("f")).as("sum_tok_freq"))
-        .select(col("doc_id"), col("n_tokens"), col("sum_tok_freq"),
-          expr("sum_tok_freq div n_tokens").as("avg_tok_freq"))
-    }),
-    // corpus vocabulary: top terms by document frequency
-    "text_topterms" -> ((s, dir) =>
-      TextAnalysis.topTerms(t(s, dir, "documents"), "doc_id", "text", k = 30)),
-    // sequence-packing plan: concatenate-and-cut docs into 512-token
-    // context windows, 32 independent shards (each shard packs its own
-    // doc_id-ordered stream, so the cumulative sum is a per-shard
-    // window — partition-parallel, no global sort; the shard count is
-    // the parallelism knob at corpus scale). A doc's bin is the window
-    // containing its FIRST token: (cum - n_tok) div 512 — exact
-    // integer arithmetic, replayed verbatim by the oracle. 512 (not
-    // 2048) so the sf0.01 gate crosses bin boundaries within a shard
-    "text_pack" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"),
-          pmod(col("doc_id"), lit(32)).cast("int").as("shard"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n_tok"))
-      val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
-      d.withColumn("cum", sum(col("n_tok")).over(w))
-        .withColumn("bin", expr("(cum - n_tok) div 512"))
-        .groupBy(col("shard"), col("bin"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
-    }),
-    // per-document tf·idf top-3 (integer-only surface: score stays in
-    // the plan, ranking proven identical because idf = N/df orders the
-    // same as log(N/df))
-    "text_tfidf" -> ((s, dir) =>
-      TextAnalysis.tfidfTopTerms(
-        spreadForCpu(t(s, dir, "documents").select(col("doc_id"), col("text")),
-          col("doc_id")),
-        "doc_id", "text", k = 3)),
-    // PII scrub: redaction counts + hash of the scrubbed text (proves
-    // the replacement itself matches, not just the counts)
-    "text_pii_scrub" -> ((s, dir) => {
-      val (nEmail, nPhone) = TextAnalysis.piiCounts(col("text"))
-      t(s, dir, "documents").select(col("doc_id"),
-        nEmail.as("n_emails"), nPhone.as("n_phones"),
-        md5(TextAnalysis.scrubPii(col("text"))).as("scrubbed_hash"))
-    }),
-    // boilerplate: word 8-grams recurring across >= 2 distinct docs
-    // (MassiveText-style repeated-n-gram cleaning signal)
-    "text_boilerplate" -> ((s, dir) =>
-      TextAnalysis.repeatedPhrases(t(s, dir, "documents"), "doc_id", "text",
-        n = 8, minDocs = 2, k = 20)),
-    // cross-doc segment dedup (CCNet's "drop duplicated lines",
-    // generalized to 5-word segments — this corpus has no newlines):
-    // segments appearing in >= 3 distinct docs are dropped everywhere
-    // and each doc is reassembled from its kept segments in order. The
-    // oracle replays the whole thing string-for-string (split, slice,
-    // doc-frequency, filter, ordered reassembly). The run is the hashed
-    // production form (8-byte keys in the frequency shuffle, Zipf-head
-    // dropped set broadcast); its check holds it equal to the
-    // raw-string segmentDedup
-    "text_seg_dedup" -> ((s, dir) =>
-      // spread the segment/hash kernel stages: both of the operator's
-      // consumers (df build + reassembly re-scan) descend from the
-      // single-split local scan and ran as 1-task stages (JobProf:
-      // all 5 jobs 1-task, ~1.0 s serial); measured 0.88 → 0.73 s.
-      // Caller-level, not inside segmentDedupHashed: report_sources
-      // joins the narrow boiler output against its own per-doc scan
-      // and measured 1.6× WORSE with the spread inside the operator.
-      // No-op at scale (≥ cores splits from maxPartitionBytes).
-      TextAnalysis.segmentDedupHashed(
-        spreadForCpu(t(s, dir, "documents").select(col("doc_id"), col("text")),
-          col("doc_id")),
-        "doc_id", "text", w = 5, maxDocs = 3)),
-    // context-window packing: fixed-char chunks with overlap
-    "text_chunks" -> ((s, dir) =>
-      TextAnalysis.chunk(t(s, dir, "documents"), "doc_id", "text",
-        size = 400, overlap = 100)),
-    // benchmark decontamination: training docs sharing any word 8-gram
-    // with the eval slice (doc_id % 10 == 0) — the GPT-3/PaLM overlap
-    // filter. The run broadcasts 8-byte gram hashes; its check holds it
-    // equal to the exact-gram join, which DuckDB replays verbatim
-    "text_decontaminate" -> ((s, dir) => decontaminated(s, dir, hashGrams = true)),
-    // corpus-overlap ESTIMATION (the scale path decontaminate can't
-    // take): KMV-sketch the 5-gram shingle sets of the train and eval
-    // splits and estimate their Jaccard from two k=1024 sketches —
-    // at 100 TB the exact shingle join is the thing you cannot afford,
-    // and HLL can union but not intersect. The estimate is md5-based
-    // and deterministic, so the oracle recomputes it EXACTLY. The run is
-    // the sketch-only estimate; its check computes the exact Jaccard
-    // (affordable at sf, the verifier) and gates |est − exact| ≤ 300 bp
-    // (k=1024 ⇒ σ ≈ 39 bp at J ≈ 1.6%, so ~7σ). A pre-explode spread of
-    // the corpus scan was tried and REVERTED (r12): 0.58 → 1.03 s — the
-    // exchange barrier costs more than the two branches' 1-task
-    // explodes, which already run concurrently.
-    "set_overlap_kmv" -> ((s, dir) => {
-      val (ga, gb) = overlapGrams(s, dir)
-      Kmv.jaccardEstimate(
-        Kmv.sketch(ga, col("gram"), 1024), Kmv.sketch(gb, col("gram"), 1024), k = 1024)
-    }),
-    // token-budget source mixing (the training-data curriculum weighting
-    // step): each source is assigned a share of a global TOKEN budget
-    // (40/30/20/10% of a 30%-of-corpus budget, in integer basis points),
-    // and docs are admitted per source in deterministic md5-priority
-    // order until the source's budget fills. Admission is a per-source
-    // cumulative window over slim (source, prio, n_tok) rows — the
-    // corpus text itself never shuffles, and the priority is engine-
-    // independent (md5, not a Spark-private hash), so re-runs and the
-    // oracle admit IDENTICAL docs
-    "sample_token_budget" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"),
-          pmod(col("doc_id"), lit(4)).cast("int").as("source"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n_tok"),
-          conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-            .cast("long").as("prio"))
-      val total = d.agg(sum(col("n_tok")).as("total_tok"))
-      val w = Window.partitionBy(col("source")).orderBy(col("prio"), col("doc_id"))
-      d.crossJoin(broadcast(total))
-        .withColumn("bp", expr(
-          "CASE source WHEN 0 THEN 1200 WHEN 1 THEN 900 WHEN 2 THEN 600 ELSE 300 END"))
-        .withColumn("budget_tok", expr("(total_tok * bp) div 10000"))
-        .withColumn("cum", sum(col("n_tok")).over(w))
-        .filter(col("cum") <= col("budget_tok"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs_kept"),
-          sum(col("n_tok")).as("n_tokens_kept"),
-          max(col("budget_tok")).as("budget_tok"))
-    }),
-    // within-doc repetition signals (Gopher dup-n-gram quality filters):
-    // unigram + word-3-gram duplicate counts and the top-gram
-    // multiplicity, all computed inside the row (no explode/shuffle);
-    // the oracle replays the unnest+groupBy form
-    "text_repetition" -> ((s, dir) =>
-      TextAnalysis.repetitionSignals(t(s, dir, "documents"),
-        "doc_id", "text", n = 3)),
-    // cross-document EXACT-SUBSTRING duplication signal (the ExactSubstr
-    // dedup measure of Lee et al. 2022, arXiv:2107.06499): per doc, how
-    // many of its distinct char-20-grams also occur in at least one
-    // OTHER document. The run shuffles 8-byte rolling-hash grams (one
-    // codegen'd kernel pass per doc), not 20-char substrings; the
-    // per-gram doc count is a WINDOW over the posting list (postings
-    // are distinct per (doc, gram), so count(*) = doc count) — one
-    // gram-keyed exchange + one doc-keyed aggregate exchange, instead of
-    // the literal-substring form's groupBy + re-join (three). Its check
-    // holds it equal to that literal form (dupSubstringsExact), which
-    // DuckDB replays verbatim
-    "text_dup_substrings" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      // spread the rolling-hash kernel stage: the single-split local
-      // scan serialized scan+kernel+explode into ONE task (JobProf:
-      // 0.9 s of the row); no-op at scale where maxPartitionBytes
-      // supplies the split count (r12 §2.6, the text_tfidf medicine)
-      val grams = spreadForCpu(
-          t(s, dir, "documents").select(col("doc_id"), col("text")),
-          col("doc_id"))
-        .select(col("doc_id"),
-          explode(Dedup.shingleHashes(col("text"), 20)).as("g"))
-      grams
-        .withColumn("docs", count(lit(1)).over(Window.partitionBy(col("g"))))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_grams"),
-          sum(when(col("docs") >= 2, 1L).otherwise(0L)).as("n_shared_grams"))
-    }),
-    // the full training-data prep pipeline as ONE declarative plan:
-    // language filter → quality floor → exact dedup keep-first →
-    // benchmark decontamination → chunk count. Single-pass scoring in
-    // the scan stage (langid/quality are codegen'd kernels), one
-    // content-hash shuffle for the dedup window, broadcast gram
-    // semi-join for decontamination — no stage reads the corpus twice
-    "pipeline_prepare" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = t(s, dir, "documents")
-      val bench = docs.filter(col("doc_id") % 10 === 0)
-      val scored = docs.filter(col("doc_id") % 10 =!= 0)
-        .withColumn("lang_pred", TextAnalysis.langId(col("text")))
-        .withColumn("quality", TextAnalysis.qualityScore(col("text")))
-        .filter(col("lang_pred") === "en" && col("quality") >= 0.5)
-      val w = Window
-        .partitionBy(TextAnalysis.fingerprintMd5(col("text")))
-        .orderBy(col("doc_id"))
-      val kept = scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).drop("rn")
-      val contaminated = TextAnalysis
-        .decontaminate(kept, bench, "doc_id", "text", n = 8)
-        .select(col("doc_id"))
-      kept.join(contaminated, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("quality"),
-          expr("(length(text) - 1) div 300 + 1").cast("long").as("n_chunks"))
-    }),
-    // data-quality assertions as a query: per event_type null/range/
-    // duplicate-id counters — the pipeline gate that runs before training
-    "events_dq" -> ((s, dir) =>
-      Engine.eventsTable(s, dir)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(when(col("props").isNull, 1L).otherwise(0L)).as("n_null_props"),
-          sum(when(col("value") < 0, 1L).otherwise(0L)).as("n_neg_value"),
-          (count(lit(1)) - countDistinct(col("event_id"))).as("n_dup_ids"),
-          min(col("value")).as("min_value"), max(col("value")).as("max_value"))),
-    // distribution drift between the train and test splits: token-count
-    // histogram L1 distance in CROSS-MULTIPLIED integer form —
-    // Σ_b |c_train[b]·N_test − c_test[b]·N_train| is the L1 distance
-    // scaled by N_train·N_test, so the drift statistic is exact integer
-    // arithmetic (no normalization floats) and hash-gateable. The mix-
-    // monitoring probe of a training pipeline: a biased split or a
-    // shifted ingest batch moves it sharply; rerun it per snapshot and
-    // diff. One scan + one 10-row aggregate
-    "drift_l1" -> ((s, dir) => {
-      val d = Sampling.deterministicSplit(
-        t(s, dir, "documents")
-          .select(col("doc_id"),
-            TextAnalysis.tokenCount(col("text")).cast("long").as("n_tok")),
-        col("doc_id"))
-      val counts = d
-        .withColumn("bucket", least(lit(9L), expr("n_tok div 10")))
-        .groupBy(col("bucket"))
-        .agg(sum(when(col("split") === "train", 1L).otherwise(0L)).as("c_train"),
-          sum(when(col("split") === "test", 1L).otherwise(0L)).as("c_test"))
-      val tot = counts.agg(sum(col("c_train")).as("n_train"),
-        sum(col("c_test")).as("n_test"))
-      counts.crossJoin(broadcast(tot))
-        .agg(sum(abs(col("c_train") * col("n_test")
-          - col("c_test") * col("n_train"))).as("l1_cross"),
-          max(col("n_train")).as("n_train"), max(col("n_test")).as("n_test"))
-    }),
-    // PSI over the same fixed token-count bins (round-10 verdict item
-    // 5): the monitoring-standard drift statistic — Σ (p−q)·ln(p/q)
-    // with +1 Laplace smoothing per observed bin (denominator n +
-    // n_buckets), so an empty bin on one side contributes a finite
-    // penalty instead of ±∞. Reported in floor'd micro-units; every
-    // count feeding the formula is exact-integer and replayed by the
-    // oracle, ln is IEEE double in both engines over identical
-    // rationals. Same plan shape as drift_l1: one scan, one tiny
-    // aggregate broadcast back — nothing corpus-sized moves.
-    "drift_psi" -> ((s, dir) => {
-      val d = Sampling.deterministicSplit(
-        t(s, dir, "documents")
-          .select(col("doc_id"),
-            TextAnalysis.tokenCount(col("text")).cast("long").as("n_tok")),
-        col("doc_id"))
-      val counts = d
-        .withColumn("bucket", least(lit(9L), expr("n_tok div 10")))
-        .groupBy(col("bucket"))
-        .agg(sum(when(col("split") === "train", 1L).otherwise(0L)).as("c_train"),
-          sum(when(col("split") === "test", 1L).otherwise(0L)).as("c_test"))
-      val tot = counts.agg(sum(col("c_train")).as("n_train"),
-        sum(col("c_test")).as("n_test"), count(lit(1)).as("n_buckets"))
-      counts.crossJoin(broadcast(tot))
-        .select(
-          ((col("c_train") + 1L).cast("double")
-            / (col("n_train") + col("n_buckets")).cast("double")).as("p"),
-          ((col("c_test") + 1L).cast("double")
-            / (col("n_test") + col("n_buckets")).cast("double")).as("q"),
-          col("n_train"), col("n_test"))
-        // floor each bucket's term to micro-units BEFORE summing: the
-        // per-term doubles are identical rationals in both engines, but
-        // a double SUM is order-dependent (partial aggregation vs the
-        // oracle's order) — summing already-floored integers makes the
-        // pinned value order-free. Residual cross-engine risk is the
-        // ln libm ulp (Math.log vs DuckDB's log are each ≤1 ulp off
-        // correctly-rounded, so a term within ~1e-10 micro-units of a
-        // floor boundary could flip); MEASURED margin on this data:
-        // the nearest term-to-boundary distance across sf0.001/0.01/
-        // 0.1 is 0.036 micro-units — 8 orders of magnitude above the
-        // noise, same margin class as the cosine-threshold pair gates
-        // (dedup_embedding_exact's 8e-6 vs 1e-7 note). PSI terms are
-        // non-negative ((p−q) and ln(p/q) share sign), so each floor
-        // drops < 1 micro-unit.
-        .select(
-          floor((col("p") - col("q")) * log(col("p") / col("q")) * 1e6)
-            .cast("long").as("term_micro"),
-          col("n_train"), col("n_test"))
-        .agg(
-          sum(col("term_micro")).as("psi_micro"),
-          max(col("n_train")).as("n_train"), max(col("n_test")).as("n_test"))
-    }),
-    // referential-integrity audit: fact rows whose FK has no dim match,
-    // per FK — left-anti probes (broadcast for dims, shuffled at scale).
-    // n_orphan_* = 0 gates the testdata's integrity; the _halfdim
-    // column PROVES the probe detects breaks (dim restricted to even
-    // keys → real orphan count)
-    // one-pass expectation suite (the Deequ/great-expectations shape):
-    // null / range / set-membership / uniqueness checks all ride ONE
-    // scan of the fact table as conditional aggregates — no rule pays
-    // its own pass; referential rules stay in dq_orphans (they need an
-    // anti-join, not a scan)
-    "dq_rules" -> ((s, dir) =>
-      t(s, dir, "orders").agg(
-        count(lit(1)).as("n_rows"),
-        sum(when(col("o_custkey").isNull, 1L).otherwise(0L)).as("n_null_cust"),
-        sum(when(col("o_totalprice") <= 0, 1L).otherwise(0L)).as("n_nonpos_price"),
-        sum(when(!col("o_orderstatus").isin("O", "F", "P"), 1L).otherwise(0L))
-          .as("n_bad_status"),
-        sum(when(col("o_orderdate").isNull ||
-          col("o_orderdate") < to_timestamp(lit("1990-01-01")), 1L).otherwise(0L))
-          .as("n_bad_date"),
-        (count(lit(1)) - countDistinct(col("o_orderkey"))).as("n_dup_keys"))),
-    // statistical outlier audit, EXACT integer arithmetic end-to-end:
-    // per group, count rows with |x − μ| > 1.5σ via the cross-multiplied
-    // inequality 4·(n·x − S)² > 9·(n·Q − S²) where S = Σx, Q = Σx² —
-    // no float mean/stddev ever materializes, so the gate hash-matches
-    // DuckDB's hugeint evaluation bit-for-bit. (1.5σ, not 3σ: the
-    // testdata's bounded-uniform columns have NO mass beyond √3·σ ≈
-    // 1.73σ by construction; the arithmetic pattern is identical at any
-    // threshold.) Decimal(38) products keep the cross-multiplication
-    // exact far past Long range (n·x up to ~1e19 at a 1e9-row group ×
-    // 50-bounded metric would overflow Long). Plan: one stats aggregate
-    // (3 rows) broadcast back over one fact scan — two passes, no
-    // per-group window sort.
-    "dq_outliers_z" -> ((s, dir) => {
-      val dec = "decimal(38,0)"
-      val base = t(s, dir, "lineitem")
-        .select(col("l_returnflag"), floor(col("l_quantity")).as("x"))
-      val stats = base.groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
-          sum(col("x") * col("x")).as("q"))
-      val dev = (col("n").cast(dec) * col("x") - col("s").cast(dec))
-      val varN2 = (col("n").cast(dec) * col("q").cast(dec)
-        - col("s").cast(dec) * col("s").cast(dec))
-      base.join(broadcast(stats), Seq("l_returnflag"))
-        .select(col("l_returnflag"), col("n"),
-          when(dev * dev * 4 > varN2 * 9, 1L).otherwise(0L).as("is_out"))
-        .groupBy(col("l_returnflag"))
-        .agg(max(col("n")).as("n_rows"), sum(col("is_out")).as("n_outliers"))
-    }),
-    "dq_orphans" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"))
-      def orphans(fk: String, dim: DataFrame, dk: String) =
-        li.join(dim, col(fk) === col(dk), "left_anti")
-          .agg(count(lit(1)).as(s"n_orphan_$fk"))
-      val halfDim = t(s, dir, "part")
-        .filter(col("p_partkey") % 2 === 0).select(col("p_partkey"))
-      orphans("l_partkey", t(s, dir, "part").select(col("p_partkey")), "p_partkey")
-        .crossJoin(orphans("l_suppkey",
-          t(s, dir, "supplier").select(col("s_suppkey")), "s_suppkey")
-          .withColumnRenamed("n_orphan_l_suppkey", "n_orphan_supp"))
-        .withColumnRenamed("n_orphan_l_partkey", "n_orphan_part")
-        .crossJoin(li.join(halfDim, col("l_partkey") === col("p_partkey"), "left_anti")
-          .agg(count(lit(1)).as("n_orphan_halfdim")))
-    }),
-    // deterministic content-hash train/valid/test split (stable across
-    // runs, partitionings, and engines — md5-derived bucket)
-    "sample_split" -> ((s, dir) =>
-      Sampling.deterministicSplit(t(s, dir, "documents"), col("doc_id"))
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(length(col("text")).cast("long")).as("n_chars"))),
-
-    // leakage-free split (GroupShuffleSplit over near-dup clusters): a
-    // hash split of raw doc_ids puts near-duplicates of training docs
-    // into the test set — the classic eval-contamination bug. Here the
-    // split key is the near-dup CLUSTER label (min doc_id per connected
-    // component of exact 5-gram-Jaccard >= 0.5 pairs; singletons label
-    // themselves), so a whole duplicate family lands in ONE split by
-    // construction. The oracle replays everything — pair generation,
-    // the transitive closure, the md5 split — so a wrong component
-    // label shifts a count and fails the hash. The corpus-scale path
-    // (banded-LSH candidates instead of exact all-pairs, over the full
-    // table) can miss a pair and so merge fewer clusters; its counts hold
-    // no contract against these, so it is not timed separately
-    "sample_split_safe" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 500)
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        n = 5, threshold = 0.5)
-      val cc = Dedup.connectedComponents(pairs, "id_a", "id_b")
-      val labeled = docs
-        .join(cc.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-        .withColumn("label", coalesce(col("cluster_id"), col("doc_id")))
-      Sampling.deterministicSplit(labeled, col("label"))
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("label")).as("n_groups"),
-          sum(length(col("text")).cast("long")).as("n_chars"))
-    }),
-
-    // exactly-k-per-group deterministic sample (reservoir semantics,
-    // RNG-free): rank by md5(doc_id) within each source, keep the 10
-    // lowest — the "k docs per source" curation/eyeball sample, stable
-    // across runs and engines; the oracle replays the identical ranking
-    "sample_bottomk" -> ((s, dir) =>
-      Sampling.bottomKPerGroup(t(s, dir, "documents"), col("doc_id"),
-          col("source"), k = 10)
-        .select(col("source"), col("doc_id"), col("rk").cast("long").as("rk"))),
-
-    // stratified deterministic sample: per-stratum keep percentage
-    // (downsample the boilerplate strata, keep the rare ones)
-    "sample_stratified" -> ((s, dir) =>
-      Sampling.stratifiedSample(Engine.eventsTable(s, dir), col("event_id"),
-        col("event_type"),
-        Map("view" -> 10, "click" -> 75, "purchase" -> 100), defaultPct = 50)
-        .groupBy(col("event_type")).agg(count(lit(1)).as("n_kept"))),
-    // deterministic importance sampling: keep probability ∝ token count
-    // (capped at 90%) — the quality-weighted mix step, RNG-free so the
-    // oracle recomputes the exact kept set from the same md5 buckets
-    "sample_weighted" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val w = least(lit(90L), TextAnalysis.tokenCount(col("text")).cast("long"))
-      // ONE conditional-aggregate pass (optimization round 12, guide
-      // §1.2/§2.3): the filtered-subset aggregates and the whole-corpus
-      // denominator previously ran as two scans of `documents`
-      // crossJoined (4 jobs, the corpus read twice — at 100 TB the
-      // second scan doubles the row's I/O). count(when(keep,1)) /
-      // sum(when(keep,len)) over one scan equal count/sum over the
-      // filtered subset exactly (nulls are not counted/summed), which
-      // is also precisely the oracle's one-pass `FILTER (WHERE …)`
-      // form. The membership predicate is the operator's own
-      // (Sampling.weightedKeep — the weightedSample filter column).
-      val keep = Sampling.weightedKeep(col("doc_id"), w)
-      d.agg(count(when(keep, lit(1))).as("n_kept"),
-        sum(when(keep, length(col("text")).cast("long"))).as("n_chars_kept"),
-        count(lit(1)).as("n_total"))
-    }),
-    // Z-order (Morton) clustering value: bit-interleave of the two join
-    // keys — the multi-column layout key (see ops/Layout.scaladoc and
-    // LayoutSpec's measured file-pruning comparison); the oracle replays
-    // the identical shift/and/or arithmetic
-    "layout_zorder" -> ((s, dir) =>
-      t(s, dir, "lineitem").filter(col("l_orderkey") <= 100)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"), col("l_suppkey"),
-          Layout.mortonInterleave(col("l_partkey"), col("l_suppkey"), 21)
-            .as("zval"))),
-
-    // ------------------------------------------------ scalar function surface
-    // JSON: extract a typed field from a JSON string column, aggregate it
-    "func_json" -> ((s, dir) =>
-      Engine.eventsTable(s, dir)
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          min(col("k")).as("min_k"), max(col("k")).as("max_k"))),
-    // date/time: truncation, field extraction, epoch conversion
-    "func_datetime" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .select(year(col("o_orderdate")).cast("long").as("yr"),
-          month(col("o_orderdate")).cast("long").as("mo"),
-          unix_timestamp(date_trunc("month", col("o_orderdate"))).as("month_start_s"),
-          dayofmonth(col("o_orderdate")).cast("long").as("dom"),
-          floor(col("o_totalprice")).as("price"))
-        .groupBy(col("yr"), col("mo"), col("month_start_s"))
-        .agg(count(lit(1)).as("n_orders"), sum(col("price")).as("sum_price"),
-          min(col("dom")).as("min_dom"), max(col("dom")).as("max_dom"))),
-    // strings: case, substring, search, replace, concat, pad, LIKE
-    "func_string" -> ((s, dir) =>
-      t(s, dir, "part")
-        .select(col("p_partkey"),
-          upper(col("p_brand")).as("brand_u"),
-          lower(col("p_type")).as("type_l"),
-          substring(col("p_name"), 1, 8).as("name_prefix"),
-          length(col("p_name")).cast("long").as("name_len"),
-          instr(col("p_name"), "o").cast("long").as("o_pos"),
-          regexp_replace(col("p_type"), " ", "_").as("type_snake"),
-          concat_ws("|", col("p_brand"), col("p_type")).as("brand_type"),
-          when(col("p_name").like("%ring%"), 1L).otherwise(0L).as("has_ring"),
-          lpad(col("p_partkey").cast("string"), 8, "0").as("key_pad"))),
-    // arrays: per-group collect + numeric sort, rendered as a canonical
-    // string (engine-portable array comparison)
-    "func_array" -> ((s, dir) =>
-      t(s, dir, "supplier")
-        .groupBy(col("s_nationkey"))
-        .agg(count(lit(1)).as("n_supp"),
-          concat_ws(",", array_sort(collect_list(col("s_suppkey"))).cast("array<string>"))
-            .as("supp_keys"))),
-
-    // ------------------------------------------------ composite analytics
-    // TPC-H Q1 shape: scan-side date filter, multi-aggregate pricing
-    // summary, integer-safe arithmetic (per-row floor before sum)
-    "tpch_q1" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= to_timestamp(lit("1998-06-01")))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(floor(col("l_quantity"))).as("sum_qty"),
-          sum(floor(col("l_extendedprice"))).as("sum_base_price"),
-          sum(floor(col("l_extendedprice") * (lit(1) - col("l_discount"))))
-            .as("sum_disc_price"),
-          count(lit(1)).as("count_order"),
-          expr("sum(floor(l_quantity)) div count(*)").as("avg_qty"))),
-    // TPC-H Q3 shape: 3-way join, filtered fact + dims, grouped revenue,
-    // deterministic global top-10
-    "tpch_q3" -> ((s, dir) => {
-      val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-        .select(col("c_custkey"))
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate") < to_timestamp(lit("1997-01-01")))
-        .select(col("o_orderkey"), col("o_custkey"),
-          // NTZ → TZ cast interprets in the session tz (UTC), matching
-          // the oracle's epoch_ms on the naive timestamp
-          unix_millis(col("o_orderdate").cast("timestamp")).as("o_orderdate_ms"))
-      val l = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") > to_timestamp(lit("1997-01-01")))
-        .select(col("l_orderkey"),
-          floor(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate_ms"))
-        .agg(sum(col("rev")).as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey").asc)
-        .limit(10)
-    }),
-    // TPC-H Q6 shape: tight selective scan + ungrouped sum — the
-    // pushdown showcase (all three predicates reach the parquet reader)
-    "tpch_q6" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= to_timestamp(lit("1997-01-01")) &&
-          col("l_shipdate") < to_timestamp(lit("1998-01-01")) &&
-          col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
-          col("l_quantity") < 24)
-        .agg(sum(floor(col("l_extendedprice") * col("l_discount")))
-          .as("revenue"))),
-    // TPC-H Q10 shape: returned-item customer revenue — 4-way join
-    // (fact + 3 broadcast dims), grouped by customer, deterministic
-    // top-20 via TakeOrderedAndProject (no full sort)
-    "tpch_q10" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= to_timestamp(lit("1996-10-01")) &&
-          col("o_orderdate") < to_timestamp(lit("1997-01-01")))
-        .select(col("o_orderkey"), col("o_custkey"))
-      val l = t(s, dir, "lineitem")
-        .filter(col("l_returnflag") === "R")
-        .select(col("l_orderkey"),
-          floor(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
-      val n = t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(n, col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
-        .agg(sum(col("rev")).as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey").asc)
-        .limit(20)
-    }),
-    // TPC-H Q14 shape: promo revenue share. The ratio is reported as an
-    // integer pair (promo_rev, total_rev) instead of the float percentage
-    // so the result stays hash-exact under integer-only arithmetic — the
-    // same stance as every q4112 average
-    "tpch_q14" -> ((s, dir) => {
-      val p = t(s, dir, "part").select(col("p_partkey"), col("p_type"))
-      val l = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= to_timestamp(lit("1997-03-01")) &&
-          col("l_shipdate") < to_timestamp(lit("1997-04-01")))
-        .select(col("l_partkey"),
-          floor(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
-      l.join(p, col("l_partkey") === col("p_partkey"))
-        .agg(
-          sum(when(col("p_type") === "PROMO", col("rev")).otherwise(0L))
-            .as("promo_rev"),
-          sum(col("rev")).as("total_rev"))
-    }),
-    // TPC-H Q19 shape: disjunctive bracket predicates over a dim join —
-    // the OR of three (brand, size-range, quantity-range) brackets; the
-    // join-key conjuncts still reach both parquet scans as pushed
-    // filters, the brackets evaluate post-join in one codegen stage
-    "tpch_q19" -> ((s, dir) => {
-      val p = t(s, dir, "part")
-        .select(col("p_partkey"), col("p_brand"), col("p_size"))
-      val l = t(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_quantity"),
-          floor(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
-      val brackets =
-        (col("p_brand") === "Brand#12" && col("p_size").between(1, 15) &&
-          col("l_quantity").between(1, 11)) ||
-        (col("p_brand") === "Brand#23" && col("p_size").between(1, 25) &&
-          col("l_quantity").between(10, 20)) ||
-        (col("p_brand") === "Brand#3" && col("p_size").between(1, 35) &&
-          col("l_quantity").between(20, 30))
-      l.join(p, col("l_partkey") === col("p_partkey"))
-        .filter(brackets)
-        .agg(sum(col("rev")).as("revenue"), count(lit(1)).as("n_lines"))
-    }),
-    // TPC-H Q18 shape: large-volume customers — a HAVING subquery over
-    // the fact table semi-joins back onto itself. The qualifying-order
-    // set (sum(qty) > 250 ≈ the 98th percentile) is tiny, so Spark
-    // broadcasts it into the left-semi probe and the fact table streams
-    // once per leg; the big groupBy shuffles only after the semi filter
-    "tpch_q18" -> ((s, dir) => {
-      val l = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), floor(col("l_quantity")).as("qty"))
-      val big = l.groupBy(col("l_orderkey"))
-        .agg(sum(col("qty")).as("sum_qty"))
-        .filter(col("sum_qty") > 250)
-        .select(col("l_orderkey"))
-      val o = t(s, dir, "orders")
-        .join(big, col("o_orderkey") === col("l_orderkey"), "left_semi")
-        .select(col("o_orderkey"), col("o_custkey"),
-          unix_millis(col("o_orderdate").cast("timestamp")).as("o_orderdate_ms"),
-          floor(col("o_totalprice")).as("o_totalprice_fl"))
-      val c = t(s, dir, "customer").select(col("c_custkey"), col("c_name"))
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_name"), col("c_custkey"), col("o_orderkey"),
-          col("o_orderdate_ms"), col("o_totalprice_fl"))
-        .agg(sum(col("qty")).as("sum_qty"))
-    }),
-    // TPC-H Q5 shape: 6-table star join — fact joined to two dim chains
-    // that must agree on nation; dims broadcast, fact never shuffled
-    // until the final group-by
-    "tpch_q5" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= to_timestamp(lit("1996-01-01")) &&
-          col("o_orderdate") < to_timestamp(lit("1998-01-01")))
-        .select(col("o_orderkey"), col("o_custkey"))
-      val l = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"),
-        floor(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
-      val su = t(s, dir, "supplier").select(col("s_suppkey"), col("s_nationkey"))
-      val n = t(s, dir, "nation").select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-      val r = t(s, dir, "region").filter(col("r_name") === "ASIA").select(col("r_regionkey"))
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(su), col("l_suppkey") === col("s_suppkey"))
-        .join(c, col("o_custkey") === col("c_custkey") &&
-          col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("n_name"))
-        .agg(sum(col("rev")).as("revenue"))
-    }),
-    // TPC-H Q4 shape: priority counts over orders that have at least one
-    // qualifying line — a decorrelated EXISTS, planned as a LEFT SEMI
-    // join that probes the orders scan once (the testdata has no
-    // commit/receipt dates, so "late line" becomes "returned line")
-    "tpch_q4" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= to_timestamp(lit("1996-07-01")) &&
-          col("o_orderdate") < to_timestamp(lit("1996-10-01")))
-        .select(col("o_orderkey"), col("o_orderpriority"))
-      val returned = t(s, dir, "lineitem")
-        .filter(col("l_returnflag") === "R").select(col("l_orderkey"))
-      o.join(returned, col("o_orderkey") === col("l_orderkey"), "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("order_count"))
-    }),
-    // TPC-H Q7 shape: volume shipping between a nation pair — the fact
-    // table joins BOTH dim chains (supplier-nation and
-    // orders-customer-nation); all four dims broadcast, the symmetric
-    // nation-pair disjunction evaluates post-join, and the fact table
-    // only shuffles for the final (supp, cust, year) group-by
-    "tpch_q7" -> ((s, dir) => {
-      val l = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= to_timestamp(lit("1996-01-01")) &&
-          col("l_shipdate") < to_timestamp(lit("1998-01-01")))
-        .select(col("l_orderkey"), col("l_suppkey"),
-          year(col("l_shipdate")).cast("long").as("l_year"),
-          floor(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("volume"))
-      val su = t(s, dir, "supplier").select(col("s_suppkey"), col("s_nationkey"))
-      val n1 = t(s, dir, "nation")
-        .select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
-      val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val c = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-      val n2 = t(s, dir, "nation")
-        .select(col("n_nationkey").as("c_nk"), col("n_name").as("cust_nation"))
-      l.join(broadcast(su), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(n1), col("s_nationkey") === col("s_nk"))
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n2), col("c_nationkey") === col("c_nk"))
-        .filter(col("supp_nation").isin("NATION_1", "NATION_2", "NATION_3") &&
-          col("cust_nation").isin("NATION_1", "NATION_2", "NATION_3") &&
-          col("supp_nation") =!= col("cust_nation"))
-        .groupBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-        .agg(sum(col("volume")).as("revenue"))
-    }),
-    // TPC-H Q12 shape: conditional counts split by a dimension attribute
-    // carried through the join (shipmode → l_linestatus here); the CASE
-    // pair collapses map-side in the partial aggregate — two counters
-    // per status, not two passes
-    "tpch_q12" -> ((s, dir) => {
-      val l = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= to_timestamp(lit("1997-01-01")) &&
-          col("l_shipdate") < to_timestamp(lit("1998-01-01")))
-        .select(col("l_orderkey"), col("l_linestatus"))
-      val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_orderpriority"))
-      val high = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_linestatus"))
-        .agg(sum(when(high, 1L).otherwise(0L)).as("high_line_count"),
-          sum(when(high, 0L).otherwise(1L)).as("low_line_count"))
-    }),
-    // TPC-H Q13 shape: customer order-count distribution — the LEFT
-    // OUTER join keeps zero-order customers (count(o) = 0 for them, not
-    // a dropped row), then a second aggregate histograms the counts.
-    // Two shuffles total, both on small post-agg sets
-    "tpch_q13" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_custkey"))
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderpriority") =!= "5-LOW")
-        .select(col("o_custkey"))
-      c.join(o, col("c_custkey") === col("o_custkey"), "left")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_custkey")).as("c_count"))
-        .groupBy(col("c_count"))
-        .agg(count(lit(1)).as("custdist"))
-    }),
-    // TPC-H Q17 shape: rows below a fifth of their part's average
-    // quantity. The correlated AVG subquery decorrelates into a
-    // per-part aggregate joined back to the fact table; the comparison
-    // stays integer-exact as qty*5*n < sum (never a float average) —
-    // the same stance as every q4112 average
-    "tpch_q17" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_partkey"), floor(col("l_quantity")).as("qty"),
-          floor(col("l_extendedprice")).as("price_fl"))
-      val brand = t(s, dir, "part")
-        .filter(col("p_brand") === "Brand#23").select(col("p_partkey"))
-      val stats = li.groupBy(col("l_partkey"))
-        .agg(sum(col("qty")).as("sum_qty"), count(lit(1)).as("n_li"))
-      li.join(broadcast(brand), col("l_partkey") === col("p_partkey"))
-        .join(stats, Seq("l_partkey"))
-        .filter(col("qty") * lit(5L) * col("n_li") < col("sum_qty"))
-        .agg(sum(col("price_fl")).as("total_price_fl"),
-          count(lit(1)).as("n_small"))
-    }),
-    // TPC-H Q21 shape: the EXISTS + NOT EXISTS double self-join on the
-    // fact table (suppliers whose line is the ONLY returned line of a
-    // multi-supplier order — the testdata carries no receipt dates, so
-    // "late" becomes "returned"). Planned as one LEFT SEMI and one LEFT
-    // ANTI probe over the same slim (orderkey, suppkey) projection;
-    // deterministic top-20 via (numwait DESC, s_name ASC)
-    "tpch_q21" -> ((s, dir) => {
-      val l = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_returnflag"))
-      val r1 = l.filter(col("l_returnflag") === "R")
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val others = l.select(col("l_orderkey").as("o2"), col("l_suppkey").as("s2"))
-      val othersR = r1.select(col("l_orderkey").as("o3"), col("l_suppkey").as("s3"))
-      val sole = r1
-        .join(others, col("l_orderkey") === col("o2") &&
-          col("l_suppkey") =!= col("s2"), "left_semi")
-        .join(othersR, col("l_orderkey") === col("o3") &&
-          col("l_suppkey") =!= col("s3"), "left_anti")
-      val su = t(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))
-      sole.join(broadcast(su), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("s_name"))
-        .agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name").asc)
-        .limit(20)
-    }),
-    // TPC-H Q22 shape: above-average balances with an anti-join (the
-    // testdata has no phone column and every customer has orders, so
-    // cntrycode := c_nationkey % 10 and the NOT EXISTS excludes
-    // customers with any URGENT order). The global threshold is a
-    // 1-row broadcast scalar; balances stay integer cents end-to-end
-    // so the average threshold is exact on both engines
-    "tpch_q22" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-        .select(col("c_custkey"),
-          pmod(col("c_nationkey"), lit(10)).cast("int").as("cntrycode"),
-          floor(col("c_acctbal") * 100).as("bal_cents"))
-        .filter(col("cntrycode").isin(1, 3, 5, 7, 9))
-      val thr = cust.filter(col("bal_cents") > 0L)
-        .agg(expr("sum(bal_cents) div count(1)").as("t"))
-      val urgent = t(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT").select(col("o_custkey"))
-      cust.join(broadcast(thr))
-        .filter(col("bal_cents") > col("t"))
-        .join(urgent, col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy(col("cntrycode"))
-        .agg(count(lit(1)).as("numcust"),
-          sum(col("bal_cents")).as("totacctbal_cents"))
-    }),
-    // TPC-H Q2 shape: min-cost supplier per part. No partsupp table in
-    // the testdata, so the supplier-part catalog derives from lineitem
-    // (ps_cost := min floor(l_extendedprice) per pair) — the query
-    // SHAPE is Q2's: dim-filtered catalog, region-filtered supplier
-    // chain, and the correlated min-cost subquery expressed as a
-    // per-part window min (the Spark-idiomatic equivalent — one pass,
-    // no re-join of the catalog against itself)
-    "tpch_q2" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val supplies = t(s, dir, "lineitem")
-        .groupBy(col("l_partkey").as("ps_partkey"), col("l_suppkey").as("ps_suppkey"))
-        .agg(min(floor(col("l_extendedprice"))).as("ps_cost"))
-      val eu = t(s, dir, "supplier")
-        .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-        .filter(col("r_name") === "EUROPE")
-        .select(col("s_suppkey"), col("s_name"), col("n_name"))
-      val pf = t(s, dir, "part")
-        .filter(col("p_size") <= 25 && col("p_type") === "LARGE")
-        .select(col("p_partkey"))
-      val cand = supplies
-        .join(broadcast(pf), col("ps_partkey") === col("p_partkey"))
-        .join(broadcast(eu), col("ps_suppkey") === col("s_suppkey"))
-      cand.withColumn("min_cost",
-          min(col("ps_cost")).over(Window.partitionBy(col("p_partkey"))))
-        .filter(col("ps_cost") === col("min_cost"))
-        .select(col("p_partkey"), col("s_name"), col("n_name"),
-          col("ps_cost").as("cost"))
-    }),
-    // TPC-H Q9 shape: profit per supplier-nation per year. Cost side
-    // adapted to floor(p_retailprice) (no ps_supplycost in testdata);
-    // all dims broadcast, the only exchanges are the orders join on
-    // l_orderkey and the final 2-key aggregate
-    "tpch_q9" -> ((s, dir) => {
-      val p = t(s, dir, "part").filter(col("p_name").like("%widget%"))
-        .select(col("p_partkey"), floor(col("p_retailprice")).as("p_cost"))
-      val sn = t(s, dir, "supplier")
-        .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name"))
-      val o = t(s, dir, "orders")
-        .select(col("o_orderkey"), year(col("o_orderdate")).cast("long").as("o_year"))
-      t(s, dir, "lineitem")
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(sn), col("l_suppkey") === col("s_suppkey"))
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("n_name"), col("o_year"))
-        .agg(sum(floor(col("l_extendedprice") * (lit(1) - col("l_discount")))
-          - col("p_cost") * floor(col("l_quantity"))).as("profit"))
-    }),
-    // TPC-H Q11 shape: important parts by inventory value within one
-    // region's suppliers. Value derives from lineitem (no partsupp);
-    // the threshold is 2× the MEAN part value — self-normalizing, so
-    // the predicate keeps selecting at any scale (TPC-H's fixed
-    // fraction must be re-tuned per SF; a mean-relative cut is the
-    // form that survives 100 TB unchanged). The 1-row threshold
-    // broadcasts back over the per-part aggregate.
-    "tpch_q11" -> ((s, dir) => {
-      val supplies = t(s, dir, "lineitem")
-        .groupBy(col("l_partkey").as("ps_partkey"), col("l_suppkey").as("ps_suppkey"))
-        .agg(sum(floor(col("l_extendedprice"))).as("val"))
-      val asia = t(s, dir, "supplier")
-        .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-        .filter(col("r_name") === "ASIA")
-        .select(col("s_suppkey"))
-      val pv = supplies
-        .join(broadcast(asia), col("ps_suppkey") === col("s_suppkey"), "left_semi")
-        .groupBy(col("ps_partkey"))
-        .agg(sum(col("val")).as("value"))
-      val thr = pv.agg(expr("2 * sum(value) div count(1)").as("thr"))
-      pv.join(broadcast(thr)).filter(col("value") > col("thr"))
-        .select(col("ps_partkey"), col("value"))
-    }),
-    // TPC-H Q16 shape: supplier diversity per part attribute triple,
-    // excluding a brand/type slice and flagged suppliers (complaint
-    // filter adapted to a name pattern). The distinct (part, supplier)
-    // catalog derives from lineitem; the final count(DISTINCT) shuffles
-    // only the surviving slim triples.
-    "tpch_q16" -> ((s, dir) => {
-      val supplies = t(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey")).distinct()
-      val okSupp = t(s, dir, "supplier")
-        .filter(!col("s_name").like("%7")).select(col("s_suppkey"))
-      val pf = t(s, dir, "part")
-        .filter(col("p_brand") =!= "Brand#3" && col("p_type") =!= "PROMO" &&
-          col("p_size").isin(1, 4, 9, 16, 25, 36, 49))
-        .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_size"))
-      supplies
-        .join(broadcast(okSupp), col("l_suppkey") === col("s_suppkey"), "left_semi")
-        .join(broadcast(pf), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-    }),
-    // TPC-H Q20 shape: suppliers holding excess stock of a part slice —
-    // the nested per-(part, supplier) aggregate with a correlated
-    // quantity comparison (availqty adapted to all-time shipped
-    // quantity vs 2× the 1997 slice; both sides come out of ONE scan
-    // as a conditional aggregate, not two scans of lineitem), then a
-    // semi-join up to the supplier dimension
-    "tpch_q20" -> ((s, dir) => {
-      val qty = t(s, dir, "lineitem")
-        .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(sum(floor(col("l_quantity"))).as("total_qty"),
-          sum(when(year(col("l_shipdate")) === 1997,
-            floor(col("l_quantity"))).otherwise(0L)).as("qty97"))
-      val pf = t(s, dir, "part")
-        .filter(col("p_name").like("small%")).select(col("p_partkey"))
-      val excess = qty
-        .join(broadcast(pf), col("l_partkey") === col("p_partkey"), "left_semi")
-        .filter(col("total_qty") > col("qty97") * 2)
-        .select(col("l_suppkey")).distinct()
-      t(s, dir, "supplier")
-        .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-        .join(excess, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .select(col("s_name"), col("n_name"))
-    }),
-    // TPC-H Q15 shape: top supplier(s) by quarterly revenue — the
-    // revenue view is aggregated once, its scalar max broadcasts back
-    // as a 1-row frame, and ties all surface (both engines agree on
-    // the full max set, keeping the gate deterministic without LIMIT)
-    "tpch_q15" -> ((s, dir) => {
-      val rev = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= to_timestamp(lit("1997-01-01")) &&
-          col("l_shipdate") < to_timestamp(lit("1997-04-01")))
-        .groupBy(col("l_suppkey"))
-        .agg(sum(floor(col("l_extendedprice") * (lit(1) - col("l_discount"))))
-          .as("total_revenue"))
-      val mx = rev.agg(max(col("total_revenue")).as("mx"))
-      val su = t(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))
-      rev.join(broadcast(mx)).filter(col("total_revenue") === col("mx"))
-        .join(broadcast(su), col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
-    }),
-    // TPC-H Q8 shape: market share — one supplier nation's slice of a
-    // region's market for a part type, per year. The ratio is the
-    // integer pair (nation_rev, total_rev) like tpch_q14; the fact
-    // table threads two dim chains (supplier→nation for the numerator
-    // tag, customer→nation→region for the market filter), all dims
-    // broadcast, one group-by exchange on the year
-    "tpch_q8" -> ((s, dir) => {
-      val p = t(s, dir, "part")
-        .filter(col("p_type") === "STANDARD").select(col("p_partkey"))
-      val l = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-          floor(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("volume"))
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= to_timestamp(lit("1996-01-01")) &&
-          col("o_orderdate") < to_timestamp(lit("1998-01-01")))
-        .select(col("o_orderkey"), col("o_custkey"),
-          year(col("o_orderdate")).cast("long").as("o_year"))
-      val c = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-      val n1 = t(s, dir, "nation")
-        .select(col("n_nationkey").as("c_nk"), col("n_regionkey"))
-      val r = t(s, dir, "region")
-        .filter(col("r_name") === "ASIA").select(col("r_regionkey"))
-      val su = t(s, dir, "supplier").select(col("s_suppkey"), col("s_nationkey"))
-      val n2 = t(s, dir, "nation")
-        .select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
-      l.join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n1), col("c_nationkey") === col("c_nk"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .join(broadcast(su), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(n2), col("s_nationkey") === col("s_nk"))
-        .groupBy(col("o_year"))
-        .agg(sum(when(col("supp_nation") === "NATION_3", col("volume"))
-          .otherwise(0L)).as("nation_rev"),
-          sum(col("volume")).as("total_rev"))
-    }),
-
-    // ------------------------------------------------ similarity search
-    "sim_topk_brute" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.bruteForceTopK(e, "vec_id", "embedding",
-        e.filter(col("vec_id") <= 5), "vec_id", "embedding", k = 5)
-        .select(col("probe_id"), col("corpus_id"), col("rank"))
-    }),
-    // kNN classification over the labeled embedding corpus: every
-    // vector's label predicted by 5-NN majority vote (ties to the
-    // smaller label), accuracy reported per true label. The gate runs
-    // the EXACT neighbor graph — DuckDB replays cosine, ranking, vote,
-    // argmax end-to-end. The same vote over the IVF-routed
-    // [[Similarity.knnGraph]] (the corpus-scale candidate generator) can
-    // miss true neighbors, so its accuracy holds no contract against
-    // this one; it is not timed separately
-    "sim_knn_classify" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val lab = e.select(col("vec_id"), col("label").cast("long").as("label"))
-      val knn = Similarity.bruteForceTopK(e, "vec_id", "embedding",
-        e, "vec_id", "embedding", k = 5)
-        .select(col("probe_id"), col("corpus_id"))
-      Similarity.majorityVote(knn, lab)
-        .join(lab, Seq("vec_id"))
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n_vecs"),
-          sum(when(col("pred") === col("label"), 1L).otherwise(0L))
-            .as("n_correct"))
-    }),
-    // IVF top-k as a GATED surface (the run is the raw neighbor list —
-    // IVF ids are not DuckDB-derivable, so the check emits invariants
-    // instead): per-probe STRUCTURE
-    // (exactly k results whose ranks are a permutation of 1..k) plus the
-    // same global recall floor as sim_recall_ivf (scanned fraction
-    // nProbe/nCentroids = 0.375 — arbitrary bucket routing lands AT the
-    // floor, so exceeding it proves the quantizer concentrates true
-    // neighbors into the probed buckets). Broken bucketing, routing, or
-    // ranking flips a boolean and fails the hash gate.
-    "sim_topk_ivf" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.ivfTopK(e, "vec_id", "embedding", annProbes(e), "vec_id", "embedding",
-        k = 5, nCentroids = 8, nProbe = 3)
-        .select(col("probe_id"), col("corpus_id"), col("rank"))
-    }),
-    // ANN quality as a GATED metric: recall@5 of the IVF probe path
-    // against the brute-force exact top-k on the same probes, asserted
-    // above the stated floor. The floor is the SCANNED FRACTION,
-    // nProbe/nCentroids = 3/8: on this corpus (uniform-random vectors —
-    // the worst case for any clustering index) an index that routed
-    // probes to ARBITRARY buckets would land recall ≈ 0.375, so
-    // exceeding it proves the coarse quantizer concentrates true
-    // neighbors into the probed buckets (measured ≈ 0.47-0.6 across
-    // sfs; near 1.0 on clustered real-embedding corpora, SimilaritySpec).
-    // The oracle expects (k, recall_floor, true): broken bucketing or
-    // routing drops recall to ≤ the floor and fails the hash gate.
-    "sim_recall_ivf" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.ivfTopK(e, "vec_id", "embedding", annProbes(e), "vec_id", "embedding",
-        k = 5, nCentroids = 8, nProbe = 3)
-        .select(col("probe_id"), col("corpus_id"), col("rank"))
-    }),
-    // corpus-wide kNN GRAPH (every vector's top-k neighbors — the
-    // SemDeDup/dataset-cartography primitive) as a GATED surface. The
-    // probe side is the whole corpus, so unlike sim_topk_ivf nothing is
-    // broadcast: sources replicate into their nProbe nearest buckets
-    // and equi-join the home-bucketed corpus. Gates: per-SOURCE
-    // structure (exactly k results, ranks a permutation of 1..k — every
-    // source's home bucket is among its probed buckets, so candidates
-    // ≥ |home| − 1 ≥ k on this data) and the global recall floor vs the
-    // exact all-pairs graph (scanned fraction nProbe/nCentroids =
-    // 0.375; with n sources the global average concentrates, so
-    // exceeding the floor is a stronger statement than per-probe).
-    "sim_knn_graph" -> ((s, dir) =>
-      Similarity.knnGraph(t(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 5, nCentroids = 8, nProbe = 3)
-        .select(col("src_id"), col("dst_id"), col("rank"))),
-    // Product quantization (Jégou TPAMI'11) as a GATED surface: 96-bit
-    // codes (m=16, k=64 — 21× compression) + ADC shortlist-50 + exact
-    // re-rank. Gates: (a) per-probe STRUCTURE (exactly 10 results,
-    // ranks a permutation of 1..10); (b) recall@10 vs the exact
-    // brute-force top-10 above 0.5 — random shortlist routing lands at
-    // shortlist/N = 0.1, measured 0.88-0.92 (uniform-random vectors,
-    // PQ's worst case); (c) the per-iteration quantization error of the
-    // m independent Lloyd's trainings is non-increasing. Broken
-    // codebooks, encode, LUT, ADC, or re-rank flips a boolean.
-    "sim_topk_pq" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Quantization.adcRerankTopK(e, "vec_id", "embedding",
-        annProbes(e), "vec_id", "embedding", annPq(e), shortlist = 50, topK = 10)
-        .select(col("probe_id"), col("corpus_id"), col("rank"))
-    }),
-    // the COMPOSED FAISS-style index — IVF coarse routing AND PQ-ADC
-    // screening AND exact re-rank in one serving path
-    // (Quantization.ivfPqTopK). Gate: per-probe result-structure
-    // invariants plus a recall floor vs brute force; the floor is the
-    // IVF routing mass (nProbe/nCentroids = 0.375) times a conservative
-    // PQ-shortlist factor — measured recall@10 = 0.45-0.55 across
-    // sfs (27-33 of 60 brute-force hits on uniform-random vectors,
-    // PQ's worst case), gate at 0.2
-    "sim_topk_ivfpq" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Quantization.ivfPqTopK(e, "vec_id", "embedding",
-        annProbes(e), "vec_id", "embedding", annPq(e),
-        nCentroids = 8, nProbe = 3, shortlist = 50, topK = 10)
-        .select(col("probe_id"), col("corpus_id"), col("rank"))
-    }),
-    // the FULL trained FAISS composition: k-means centroids route the
-    // coarse layer (corpus bucketing + probe fan-out) AND the PQ-ADC
-    // screen + exact re-rank run inside the probed buckets
-    // (Quantization.ivfPqTopKTrained). Gate: per-probe structure + the
-    // same conservative 0.2 recall floor as the pseudo-routed form +
-    // trained_gain_ok (trained routing recovers at least as many
-    // brute-force hits as pseudo routing at identical PQ params —
-    // measured 0.85-0.97 vs 0.45-0.55 recall@10 across sfs)
-    "sim_topk_ivfpq_trained" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val (_, km) = Clustering.kmeans(e, "vec_id", "embedding", k = 8, maxIter = 4)
-      Quantization.ivfPqTopKTrained(e, "vec_id", "embedding",
-        annProbes(e), "vec_id", "embedding", annPq(e), km.centroids,
-        nProbe = 3, shortlist = 50, topK = 10)
-        .select(col("probe_id"), col("corpus_id"), col("rank"))
-    }),
-    // TRAINED-centroid IVF — Clustering.kmeans' learned centroids fed
-    // into the coarse quantizer (Similarity.ivfTopKTrained), replacing
-    // the data-independent pseudo-centroids: the real FAISS pipeline
-    // composition. Gate: per-probe structure, the arbitrary-routing
-    // recall floor (nProbe/nCentroids = 0.375), and trained_gain_ok —
-    // the learned quantizer recovers MORE brute-force hits than the
-    // pseudo-centroid one on the same corpus/params (measured: trained
-    // ≈0.87-1.0 vs pseudo ≈0.47-0.60 recall across sfs; training adapts
-    // the buckets to the actual point cloud)
-    "sim_topk_ivf_trained" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val (_, km) = Clustering.kmeans(e, "vec_id", "embedding", k = 8, maxIter = 4)
-      Similarity.ivfTopKTrained(e, "vec_id", "embedding",
-        annProbes(e), "vec_id", "embedding", km.centroids, k = 5, nProbe = 3)
-        .select(col("probe_id"), col("corpus_id"), col("rank"))
-    }),
-    // exact fixed-radius neighbors (ids only — see Similarity.rangeSearch
-    // on why the cosine value stays out of the hash-exact gate)
-    "sim_range_search" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.rangeSearch(e, "vec_id", "embedding",
-        e.filter(col("vec_id") <= 5), "vec_id", "embedding", threshold = 0.2)
-    }),
-
-    // ------------------------------------------------ embedding clustering
-    // Trained k-means (Lloyd's, k=8, 6 iterations, deterministic seeds) —
-    // oracle gate: (a) the inertia trace is non-increasing (Lloyd's
-    // invariant, checked driver-side over the per-iteration traces);
-    // (b) the native codegen argmin agrees row-for-row with an
-    // INDEPENDENT declarative recomputation (transform/zip_with/aggregate
-    // HOFs over the same centroid matrix — same element order and double
-    // arithmetic, so agreement is exact, and the two code paths share no
-    // evaluation machinery).
-    "embed_kmeans" -> ((s, dir) => {
-      val (assigned, _) = Clustering.kmeans(
-        t(s, dir, "embeddings"), "vec_id", "embedding", k = 8, maxIter = 6)
-      assigned
-    }),
-    // Cluster-stratified diversity sample on the trained model — oracle
-    // gate: every cluster contributes exactly min(perCluster, |cluster|)
-    // rows (cap + coverage in one predicate), checked by joining sampled
-    // counts against full cluster sizes.
-    "sample_diverse" -> ((s, dir) => {
-      val (assigned, _) = Clustering.kmeans(
-        t(s, dir, "embeddings"), "vec_id", "embedding", k = 8, maxIter = 4)
-      Clustering.diverseSample(assigned, "vec_id", perCluster = 5)
-    }),
-    // SemDeDup-style semantic dedup (Abbas et al. 2023): cluster the
-    // embedding space with the trained k-means, then search near-dup
-    // pairs ONLY within a cluster — the candidate join is an equi-join
-    // on the cluster id, never all-pairs, so at corpus scale the work is
-    // Σ|cluster|² ≪ n². Gate: (a) n_exact_pairs — the oracle recomputes
-    // the full cos ≥ 0.25 pair count via list_cosine_similarity;
-    // (b) subset_ok — every within-cluster pair is in the exact set
-    // (same cosine kernel re-verifies each candidate); (c) recall_ok —
-    // within-cluster recall must beat 1/k = 0.125, the expected recall
-    // of ARBITRARY 8-way routing: exceeding it proves the clustering
-    // concentrates similar vectors, which is the SemDeDup premise
-    // (measured ≈ 0.2-0.5 across sfs on this corpus).
-    "dedup_semantic" -> ((s, dir) =>
-      Dedup.semanticPairs(t(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 8, maxIter = 4, threshold = 0.25)
-        .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))),
-
-    // ------------------------------------------------ multimodal plumbing
-    "multimodal_features" -> ((s, dir) => {
-      val media = Multimodal.asMediaTable(t(s, dir, "documents"), "doc_id", "text")
-      Multimodal.extractFeatures(media, dims = 8).toDF()
-        .select(col("media_id"), col("modality"), col("n_bytes"), col("payload_hash"))
-    }),
-    "multimodal_resize" -> ((s, dir) => {
-      val media = Multimodal.asMediaTable(t(s, dir, "documents"), "doc_id", "text")
-      Multimodal.resizePlan(media, maxSide = 256)
-    }),
-    "multimodal_frames" -> ((s, dir) => {
-      val media = Multimodal.asMediaTable(t(s, dir, "documents"), "doc_id", "text")
-      Multimodal.sampleFrames(media, everyMs = 60000L)
-        .select(col("media_id"), col("frame_ts_ms"), col("frame_ref"))
-    }),
-    // byte-block banded near-dup over BINARY payloads (round-8 verdict
-    // item 8 — the dedup family extended to opaque media bytes):
-    // signature = distinct xxhash64 per 32-byte block, inverted-index
-    // screen (lossless for threshold > 0), exact Jaccard verify over
-    // the sorted block-hash sets. The oracle replays the ENTIRE
-    // pipeline on the text payloads (pure ASCII here, so char slices ==
-    // byte blocks): per-block md5 signatures, the shared-block
-    // candidate join, and the same correctly-rounded Jaccard division
-    "dedup_multimodal" -> ((s, dir) => {
-      val media = Multimodal.asMediaTable(t(s, dir, "documents"), "doc_id", "text")
-      Multimodal.payloadNearDupPairs(media, blockSize = 32, threshold = 0.5)
-    }),
-    // CONTENT-SHIFTED multimodal near-dup (round-9 verdict item 8) —
-    // the class the byte-block screen above documents as out of scope:
-    // a shifted/re-encoded payload shares no aligned blocks, but its
-    // DECODED features survive. Compose the decode stage
-    // (Multimodal.extractFeatures — deterministic stub codec, real
-    // schema/batching) with the embedding dedup family: hyperplane-LSH
-    // banding screens candidates, exact cosine verifies. Gate mirrors
-    // dedup_embedding: every LSH pair is in the exact all-pairs set
-    // (subset_ok — candidates re-verify with the same cosine kernel),
-    // and the screen recalls ≥1% of it (recall_ok — the 8-plane band
-    // collision floor for near-threshold pairs; identical payloads
-    // collide with prob 1). n_media is the SQL-replayable count.
-    "dedup_multimodal_semantic" -> ((s, dir) => {
-      val media = Multimodal.asMediaTable(t(s, dir, "documents"), "doc_id", "text")
-      // spread the decode stage across cores (the single-split local scan
-      // ran it serially — see spreadForCpu) and FILL the three caches in
-      // dependency order before the gate's one collect: the gate plan's
-      // broadcast-exchange futures otherwise all hit the still-empty
-      // caches at once and each recomputes the full subtree — profiled
-      // at 31 jobs/rep with the exact-cosine crossJoin evaluated 3×
-      // (taskSum 9.3 s + 4.5 s + 3.1 s for one 9.3 s computation).
-      // Optimization round 12, guide §2-fixed-cost / §5-caching.
-      val feats = Multimodal.extractFeatures(
-          spreadForCpu(media, col("media_id")), dims = 16).toDF()
-        .select(col("media_id"), col("feature")).cache()
-      feats.count()
-      val lsh = Dedup.embeddingPairs(feats, "media_id", "feature",
-        threshold = 0.6, planes = 16)
-        .select(col("id_a"), col("id_b")).cache()
-      val exact = Dedup.embeddingPairsExact(feats, "media_id", "feature",
-        threshold = 0.6).cache()
-      val (nMedia, nLsh, nExact, nHit) = try {
-        lsh.union(exact).count() // one job fills BOTH pair caches
-        // both pair sets are distinct by construction (candidates pass a
-        // .distinct(); the exact crossJoin emits each ordered pair once),
-        // so |lsh ∖ exact| = |lsh| − |lsh ∩ exact| — the anti-join of the
-        // old 4-subtree gate plan collapses into count arithmetic over
-        // one semi-join, and the 1-row invariant is assembled on the
-        // driver instead of as crossJoined aggregates (each extra
-        // subtree cost its own exchanges + broadcast-build jobs; the
-        // whole row is 3 counts the oracle replays anyway)
-        (media.count(), lsh.count(), exact.count(),
-          lsh.join(exact, Seq("id_a", "id_b"), "left_semi").count())
-      } finally Seq(feats, lsh, exact).foreach(_.unpersist())
-      import s.implicits._
-      Seq((nMedia, nHit == nLsh,
-        nExact > 0 && nHit >= nExact * 0.01))
-        .toDF("n_media", "subset_ok", "recall_ok")
-    }),
-    // INDEX REBUILD POLICY (round-9 verdict item 7) — incremental
-    // upkeep is provably exact (the standing-update/forget gates), so
-    // the remaining operational question is WHEN drift warrants a
-    // scheduled rebuild. The ledger is the three counters every
-    // maintenance op increments; the policy is pure basis-point
-    // arithmetic (ModelStore.rebuildDue), replayed integer-for-integer
-    // by the oracle. Two scenarios, both from deterministic id buckets:
-    // heavy churn (batch ingest + 1-in-7 takedowns) must flag, light
-    // churn (1-in-97 takedowns, no ingest) must not — falsifiable in
-    // both directions.
-    "index_rebuild_policy" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val corpus0 = docs.filter(col("doc_id") % 10 =!= 0)
-      def ledger(deleted: DataFrame, added: DataFrame) =
-        corpus0.agg(count(lit(1)).as("n0"))
-          .crossJoin(deleted.agg(count(lit(1)).as("nd")))
-          .crossJoin(added.agg(count(lit(1)).as("na"))).collect()(0)
-      def rowOf(scenario: String, r: org.apache.spark.sql.Row) = {
-        val (delBp, churnBp, due) =
-          ModelStore.rebuildDue(r.getLong(0), r.getLong(1), r.getLong(2))
-        (scenario, r.getLong(0), r.getLong(1), r.getLong(2), delBp, churnBp, due)
-      }
-      val heavy = rowOf("heavy_churn", ledger(
-        corpus0.filter(col("doc_id") % 7 === 0),
-        docs.filter(col("doc_id") % 10 === 0)))
-      val light = rowOf("light_churn", ledger(
-        corpus0.filter(col("doc_id") % 97 === 0),
-        docs.limit(0)))
-      import s.implicits._
-      Seq(heavy, light).toDF("scenario", "n_at_build", "n_deleted",
-        "n_added", "deleted_bp", "churn_bp", "rebuild_due")
-    }),
-
-    // ------------------------------------------------ generator (§2.1 S1)
-    // Seeded distributed q4112_gen-contract generator + the full query
-    // over it, emitted as the reference's own contract
-    // `assert(gen_res == run_res)` (q4112_main.c:127): the Catalyst
-    // plan's answer, the generator's independent RDD-oracle answer, and
-    // their equality. The config is fixed-seed so both answers are
-    // deterministic constants — the oracle SQL pins them, turning this
-    // into a real regression gate on BOTH the generator and the engine.
-    "gen_q4112" -> ((s, _) =>
-      Q4112.part2(
-        graft.gen.Q4112Gen.items(s, genQ4112Config).toDF(),
-        graft.gen.Q4112Gen.orders(s, genQ4112Config).toDF(),
-        "id", "itemId", "price", "quantity", "storeId")),
-
-    // ------------------------------------------------ events (batch forms)
-    "events_window_agg" -> ((s, dir) =>
-      Engine.eventsTable(s, dir)
-        .groupBy(window(col("ts"), "5 minutes").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(floor(col("value") * 1000).cast("long")).as("sum_value_milli"))
-        .select(unix_timestamp(col("w.start")).as("window_start_s"),
-          col("event_type"), col("n_events"), col("sum_value_milli"))),
-    "events_hop_window" -> ((s, dir) =>
-      // sliding 10-min windows every 5 min: each event lands in 2 windows
-      Engine.eventsTable(s, dir)
-        .groupBy(window(col("ts"), "10 minutes", "5 minutes").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(unix_timestamp(col("w.start")).as("window_start_s"),
-          col("event_type"), col("n_events"))),
-    "events_sessionize" -> ((s, dir) =>
-      streaming.Events.sessionizeBatch(Engine.eventsTable(s, dir), gapMs = 30 * 60 * 1000L)),
-    // Spark's NATIVE session_window operator (streaming-capable gap
-    // sessionization as a groupBy key; batch execution is the oracle
-    // path). end = last event + gap by definition.
-    "events_session_window" -> ((s, dir) =>
-      Engine.eventsTable(s, dir)
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"), unix_millis(col("w.start")).as("session_start_ms"),
-          unix_millis(col("w.end")).as("session_end_ms"), col("n_events"))),
-    // stream-stream interval join, batch execution of the same plan
-    "events_stream_join" -> ((s, dir) =>
-      streaming.Events.clickPurchaseJoin(Engine.eventsTable(s, dir),
-        withinMs = 10 * 60 * 1000L)),
-    // stream-stream LEFT OUTER interval join: non-converting clicks
-    // survive with -1 sentinels. In streaming execution the outer row
-    // emits at state eviction (watermark past click_ts + interval), so
-    // append mode stays correct; batch execution is the oracle form
-    // (StreamingSpec pins stream-vs-batch equivalence incl. the
-    // watermark-gated outer rows)
-    "events_stream_join_outer" -> ((s, dir) =>
-      streaming.Events.clickPurchaseJoin(Engine.eventsTable(s, dir),
-        withinMs = 10 * 60 * 1000L, joinType = "left_outer")),
-    // funnel: per user with a click, the first purchase at or after the
-    // first click (-1 = never converted); ms granularity on both the
-    // query and the oracle
-    "events_funnel" -> ((s, dir) => {
-      val e = Engine.eventsTable(s, dir)
-        .select(col("user_id"), col("event_type"), unix_millis(col("ts")).as("ts_ms"))
-      val clicks = e.filter(col("event_type") === "click")
-        .groupBy(col("user_id")).agg(min(col("ts_ms")).as("first_click_ms"))
-      val conv = e.filter(col("event_type") === "purchase")
-        .join(clicks, Seq("user_id"))
-        .filter(col("ts_ms") >= col("first_click_ms"))
-        .groupBy(col("user_id")).agg(min(col("ts_ms")).as("first_purchase_ms"))
-      clicks.join(conv, Seq("user_id"), "left")
-        .select(col("user_id"), col("first_click_ms"),
-          coalesce(col("first_purchase_ms"), lit(-1L)).as("first_purchase_ms"))
-    }),
-    // retention cohorts: per signup day, users who returned within
-    // 1 day / 7 days (integer day buckets, ms arithmetic both sides)
-    "events_retention" -> ((s, dir) => {
-      val e = Engine.eventsTable(s, dir)
-        .select(col("user_id"), col("event_type"), unix_millis(col("ts")).as("ts_ms"))
-      val day = 86400000L
-      val signups = e.filter(col("event_type") === "signup")
-        .groupBy(col("user_id")).agg(min(col("ts_ms")).as("signup_ms"))
-      val ret = e.join(signups, Seq("user_id"))
-        .filter(col("ts_ms") > col("signup_ms"))
-        .groupBy(col("user_id"), col("signup_ms"))
-        .agg(max(when(col("ts_ms") <= col("signup_ms") + day, 1L).otherwise(0L)).as("r1"),
-          max(when(col("ts_ms") <= col("signup_ms") + 7 * day, 1L).otherwise(0L)).as("r7"))
-      signups.join(ret, Seq("user_id", "signup_ms"), "left")
-        .select(expr(s"signup_ms div $day").as("cohort_day"),
-          coalesce(col("r1"), lit(0L)).as("r1"),
-          coalesce(col("r7"), lit(0L)).as("r7"))
-        .groupBy(col("cohort_day"))
-        .agg(count(lit(1)).as("n_signups"),
-          sum(col("r1")).as("n_d1"), sum(col("r7")).as("n_d7"))
-    }),
-    // stream-static join (batch execution of the same plan): enrich
-    // events against a broadcast dimension, aggregate per category
-    "events_enrich_static" -> ((s, dir) =>
-      streaming.Events.enrichWithTypeDim(Engine.eventsTable(s, dir))
-        .groupBy(col("category"))
-        .agg(count(lit(1)).as("n_events"), sum(col("weight")).as("sum_weight"),
-          sum(floor(col("value") * 1000).cast("long")).as("sum_value_milli"))),
-    // lead/lag analytics: per-user inter-event gap
-    "events_lag_delta" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_ms"), col("event_id"))
-      Engine.eventsTable(s, dir)
-        .select(col("user_id"), col("event_id"), unix_millis(col("ts")).as("ts_ms"))
-        .withColumn("delta_ms", col("ts_ms") - lag(col("ts_ms"), 1).over(w))
-        .withColumn("delta_ms", coalesce(col("delta_ms"), lit(-1L)))
-    }),
-    // time-series gap fill: per-user daily series densified with
-    // sequence+explode between each user's own min/max day, missing
-    // days zero-filled — generator rows stay proportional to the span,
-    // never a global cross join
-    "ts_gapfill" -> ((s, dir) => {
-      val days = Engine.eventsTable(s, dir)
-        .select(col("user_id"), date_trunc("DAY", col("ts")).as("day"))
-        .groupBy(col("user_id"), col("day"))
-        .agg(count(lit(1)).as("n_events"))
-      val spans = days.groupBy(col("user_id"))
-        .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
-      spans
-        .select(col("user_id"),
-          explode(sequence(col("mn"), col("mx"), expr("interval 1 day"))).as("day"))
-        .join(days, Seq("user_id", "day"), "left")
-        .select(col("user_id"), unix_millis(col("day")).as("day_ms"),
-          coalesce(col("n_events"), lit(0L)).as("n_events"))
-    }),
-    // SCD-1 upsert (MERGE semantics without a table format): a derived
-    // changes set (per-customer order spend, plus synthetic NEW keys
-    // offset by 1e6) applied over the customer base — matched keys take
-    // the update, unmatched keep the base, inserts append. One
-    // full-outer hash join on the key; at 100 TB both sides shuffle
-    // once on c_custkey (or ride a shared bucketed layout), and the
-    // coalesce projection is codegen'd — no driver-side diffing
-    // CDC changelog apply WITH deletes — the missing third of the
-    // maintenance family (merge_upsert APPLIES upserts, scd2 keeps
-    // history, this one compacts an ordered I/U/D log): last-op-wins
-    // compaction is ONE window shuffle on the key (at 100 TB the log
-    // compacts before ever touching the base table), then one co-keyed
-    // full-outer apply; a trailing D tombstone drops the key
-    "merge_cdc" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val base = t(s, dir, "customer")
-        .select(col("c_custkey"), floor(col("c_acctbal")).as("balance"))
-      val log = t(s, dir, "orders")
-        .select(col("o_custkey").as("c_custkey"),
-          col("o_orderdate").as("ts"), col("o_orderkey"),
-          when(col("o_orderkey") % 7 === 0, "D").otherwise("U").as("op"),
-          floor(col("o_totalprice")).as("new_balance"))
-      val lastOp = log.withColumn("rn", row_number().over(
-          Window.partitionBy(col("c_custkey"))
-            .orderBy(col("ts").desc, col("o_orderkey").desc)))
-        .filter(col("rn") === 1)
-        .select(col("c_custkey"), col("op"), col("new_balance"))
-      base.join(lastOp, Seq("c_custkey"), "full_outer")
-        .filter(coalesce(col("op"), lit("K")) =!= "D")
-        .select(col("c_custkey"),
-          coalesce(col("new_balance"), col("balance")).as("balance"),
-          coalesce(col("op"), lit("K")).as("last_op"))
-    }),
-    "merge_upsert" -> ((s, dir) => {
-      val base = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey").cast("long").as("nation"),
-          floor(col("c_acctbal")).as("balance"))
-      val upd = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(sum(floor(col("o_totalprice"))).as("balance"))
-        .select(
-          when(col("o_custkey") % 10 === 0, col("o_custkey") + 1000000L)
-            .otherwise(col("o_custkey")).as("c_custkey"),
-          col("balance"))
-      base.join(upd.withColumnRenamed("balance", "upd_balance"),
-          Seq("c_custkey"), "full_outer")
-        .select(col("c_custkey"),
-          coalesce(col("nation"), lit(-1L)).as("nation"),
-          coalesce(col("upd_balance"), col("balance")).as("balance"),
-          when(col("upd_balance").isNotNull && col("nation").isNotNull, "update")
-            .when(col("upd_balance").isNotNull, "insert")
-            .otherwise("keep").as("action"))
-    }),
-    // DataSource V2 generator (sources/GenSource): the q4112 items
-    // generator as a REAL pushdown-aware Spark source. Gate: the
-    // source's row SET is exactly the declarative generator's (anti-
-    // joins both ways), aggregates agree, and the count matches the
-    // constant the oracle expects. Pruning/pushdown/statistics behavior
-    // is pinned by SourceV2Spec
-    "source_gen_v2" -> ((s, dir) => {
-      val rows = 20000L; val genSeed = 4112L; val valMax = 1000000L
-      val v2 = s.read.format("graft.sources.GenSource")
-        .option("rows", rows).option("seed", genSeed)
-        .option("valMax", valMax).option("partitions", 8).load()
-      val decl = gen.Q4112Gen.items(s, graft.model.GenConfig(
-        innerTuples = rows, innerSelectivity = 1.0, innerValMax = valMax,
-        outerTuples = rows, outerSelectivity = 1.0, outerValMax = 100L,
-        groups = 1L, hhGroups = 0L, hhProbability = 0.0, seed = genSeed)).toDF()
-      val aggV2 = v2.agg(count(lit(1)).as("n_v2"), sum(col("price")).as("s_v2"))
-      val aggD = decl.agg(count(lit(1)).as("n_d"), sum(col("price")).as("s_d"))
-      val extra = v2.join(decl, Seq("id", "price"), "left_anti")
-        .agg(count(lit(1)).as("n_extra"))
-      val missing = decl.join(v2, Seq("id", "price"), "left_anti")
-        .agg(count(lit(1)).as("n_missing"))
-      aggV2.crossJoin(aggD).crossJoin(extra).crossJoin(missing)
-        .select(col("n_v2").as("n_rows"),
-          (col("n_v2") === col("n_d") && col("s_v2") === col("s_d"))
-            .as("agg_agree_ok"),
-          (col("n_extra") === 0L && col("n_missing") === 0L)
-            .as("rowset_equal_ok"))
-    }),
-    // snapshot diff: two deterministic versions of the orders table
-    // (old drops keys %97=0, new drops %89=0 and rewrites the priority
-    // of %101=0) reconciled into added/removed/changed/unchanged counts.
-    // The shuffle carries (key, md5) digests only — see Joins.tableDiff
-    "table_diff" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val oldSnap = o.filter(col("o_orderkey") % 97 =!= 0)
-        .select(col("o_orderkey"),
-          concat_ws("|", col("o_orderstatus"), col("o_orderpriority")).as("p"))
-      val newSnap = o.filter(col("o_orderkey") % 89 =!= 0)
-        .select(col("o_orderkey"),
-          concat_ws("|", col("o_orderstatus"),
-            when(col("o_orderkey") % 101 === 0, lit("9-CHANGED"))
-              .otherwise(col("o_orderpriority"))).as("p"))
-      Joins.tableDiff(oldSnap, newSnap, "o_orderkey", "p")
-    }),
-    // order-independent table checksum: bit_xor of a 60-bit md5 prefix
-    // per row — equal multisets of rows give equal checksums whatever
-    // the partitioning or row order, the cheap cross-engine integrity
-    // probe at 100 TB (one scan, one 8-byte partial per partition, no
-    // shuffle; only key/string columns feed the digest so the text form
-    // is engine-portable)
-    "agg_checksum" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val rowHash = conv(substring(md5(concat_ws("|",
-        col("o_orderkey"), col("o_custkey"),
-        col("o_orderstatus"), col("o_orderpriority"))), 1, 15), 16, 10)
-        .cast("long")
-      o.select(rowHash.as("h"))
-        .agg(count(lit(1)).as("n_rows"),
-          expr("bit_xor(h)").as("checksum"))
-    }),
-    // SCD-2 history: per (user, event_type) value-change intervals —
-    // [valid_from, valid_to) rows built with one lead() window over the
-    // (ts, event_id) total order; open intervals close at +inf (-1).
-    // The standard "events to dimension history" transform; one sort
-    // per key group, shuffle carries only (user, type, ts, value)
-    "scd2_history" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"), col("event_type"))
-        .orderBy(col("ts_ms"), col("event_id"))
-      Engine.eventsTable(s, dir)
-        .select(col("user_id"), col("event_type"), col("event_id"),
-          unix_millis(col("ts")).as("ts_ms"), floor(col("value")).as("v"))
-        .withColumn("valid_to_ms", coalesce(lead(col("ts_ms"), 1).over(w), lit(-1L)))
-        .select(col("user_id"), col("event_type"), col("v").as("value_fl"),
-          col("ts_ms").as("valid_from_ms"), col("valid_to_ms"))
-    }),
-    // OHLC-style downsampling: per (user, hour) open/close/lo/hi/count.
-    // open/close are SELECTIONS via min/max over (ts, event_id, value)
-    // structs — (ts, event_id) is a unique total order, so the result
-    // is deterministic AND the whole resample is one partial-aggregable
-    // HashAggregate pass: no window sort, the shuffle carries one slim
-    // row per (user, hour) — where the textbook row_number() plan sorts
-    // every event inside an exchange of the full table
-    "ts_resample" -> ((s, dir) => {
-      val e = Engine.eventsTable(s, dir)
-        .select(col("user_id"), date_trunc("HOUR", col("ts")).as("hr"),
-          unix_millis(col("ts")).as("ts_ms"), col("event_id"), col("value"))
-      e.groupBy(col("user_id"), col("hr"))
-        .agg(
-          min(struct(col("ts_ms"), col("event_id"), col("value")))
-            .getField("value").as("open_value"),
-          max(struct(col("ts_ms"), col("event_id"), col("value")))
-            .getField("value").as("close_value"),
-          min(col("value")).as("lo_value"),
-          max(col("value")).as("hi_value"),
-          count(lit(1)).as("n_events"))
-        .select(col("user_id"), unix_millis(col("hr")).as("hour_ms"),
-          col("open_value"), col("close_value"),
-          col("lo_value"), col("hi_value"), col("n_events"))
-    }),
-    // the watermarked streaming dedup's batch-equivalent surface:
-    // keep-first per content key (user, type, props) under the
-    // (ts, event_id) total order, reported per event_type. The
-    // streaming form (Events.dedupStream, dropDuplicatesWithinWatermark)
-    // is asserted equivalent in StreamingSpec
-    "events_stream_dedup" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window
-        .partitionBy(col("user_id"), col("event_type"), col("props"))
-        .orderBy(col("ts"), col("event_id"))
-      Engine.eventsTable(s, dir)
-        .withColumn("rn", row_number().over(w))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(when(col("rn") === 1, 1L).otherwise(0L)).as("n_kept"))
-    }),
-    // per-user integer EWMA (alpha = 1/2, fixed-point: s := (s + v) div 2)
-    // over the event stream in (ts, event_id) order — a SEQUENTIAL
-    // recurrence no window frame can express, run as a one-pass
-    // streaming fold after repartition(user) + sortWithinPartitions
-    // (TimeSeries.ewmaIntFold) with O(1) state per user: no per-key
-    // collect_list array, so an unbounded per-user history can't OOM a
-    // single row at corpus scale. Seeded with the first element so the
-    // fold matches DuckDB's list_reduce semantics; integer arithmetic
-    // keeps the result order-deterministic. nonneg_ok pins the
-    // truncate-vs-floor division agreement: Spark `div` truncates toward
-    // zero while DuckDB `//` floors, identical only while every
-    // (acc + v) stays ≥ 0 — the oracle expects TRUE, so testdata going
-    // negative fails the gate loudly instead of silently diverging
-    "ts_ewma" -> ((s, dir) => {
-      val ev = Engine.eventsTable(s, dir)
-        .select(col("user_id"), unix_millis(col("ts")).as("t"),
-          col("event_id").as("e"),
-          floor(col("value") * 1000).cast("long").as("v"))
-      TimeSeries.ewmaIntFold(ev, "user_id", "t", "e", "v")
-        .select(col("user_id"), col("n_events"),
-          col("ewma").as("ewma_milli"), (col("min_v") >= 0L).as("nonneg_ok"))
-    }),
-    // rank-statistics window functions (percent_rank/cume_dist share
-    // one sort with dense_rank — a single Window physical node)
-    "window_rank_stats" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("s_nationkey"))
-        .orderBy(col("bal_cents"), col("s_suppkey"))
-      t(s, dir, "supplier")
-        .select(col("s_suppkey"), col("s_nationkey"),
-          floor(col("s_acctbal") * 100).cast("long").as("bal_cents"))
-        .select(col("s_suppkey"), col("s_nationkey"),
-          percent_rank().over(w).as("pct_rank"),
-          cume_dist().over(w).as("cume"),
-          dense_rank().over(w).cast("long").as("drank"))
-    }),
-    // linear gap INTERPOLATION — ts_gapfill's zero-fill upgraded to the
-    // value model a downstream consumer actually wants for a sampled
-    // metric: missing days take the line between the surrounding
-    // observations. Exact integer arithmetic throughout: daily values in
-    // milli-units, interp = (pv*(nd-d) + nv*(d-pd)) div (nd-pd) with
-    // every factor ≥ 0 (nonneg_ok pins it), so Spark's truncating `div`
-    // and DuckDB's flooring `//` agree. Plan shape: the observed-day
-    // aggregate and the spine share one shuffle on user_id; prev/next
-    // neighbors are two frames of the SAME window sort (one Sort, no
-    // second exchange) via last/first with ignoreNulls — no self-join
-    // against the observation set, which is the textbook-but-wrong plan
-    // (an extra range join per gap). Day index (days since epoch) keeps
-    // the divisor small; spine rows bounded by users × span-days
-    "ts_interpolate" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val daily = Engine.eventsTable(s, dir)
-        .select(col("user_id"), date_trunc("DAY", col("ts")).as("day"),
-          floor(col("value") * 1000).cast("long").as("v"))
-        .groupBy(col("user_id"), col("day"))
-        .agg(sum(col("v")).as("v"))
-      val spine = daily.groupBy(col("user_id"))
-        .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
-        .select(col("user_id"),
-          explode(sequence(col("mn"), col("mx"), expr("interval 1 day"))).as("day"))
-      val j = spine.join(daily, Seq("user_id", "day"), "left")
-        .select(col("user_id"), col("day"),
-          unix_date(col("day").cast("date")).cast("long").as("d"), col("v"))
-      val wPrev = Window.partitionBy(col("user_id")).orderBy(col("d"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wNext = Window.partitionBy(col("user_id")).orderBy(col("d"))
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      j.withColumn("pv", last(col("v"), ignoreNulls = true).over(wPrev))
-        .withColumn("pd",
-          last(when(col("v").isNotNull, col("d")), ignoreNulls = true).over(wPrev))
-        .withColumn("nv", first(col("v"), ignoreNulls = true).over(wNext))
-        .withColumn("nd",
-          first(when(col("v").isNotNull, col("d")), ignoreNulls = true).over(wNext))
-        .select(col("user_id"), unix_millis(col("day")).as("day_ms"),
-          when(col("v").isNotNull, col("v"))
-            .otherwise(expr("(pv * (nd - d) + nv * (d - pd)) div (nd - pd)"))
-            .as("v_milli"),
-          col("v").isNull.as("is_interp"),
-          (coalesce(col("pv"), col("v")) >= 0L &&
-            coalesce(col("nv"), col("v")) >= 0L).as("nonneg_ok"))
-    }),
-    // rolling anomaly flags — the per-event z-score test (|x − μ| > 2σ
-    // over the user's previous 8 events) done WITHOUT floats: squaring
-    // the test gives (n·x − s)² > 4·(n·ss − s²), all integer, so both
-    // engines evaluate the identical predicate bit-for-bit (a float σ
-    // would hash-diverge at the boundary). One window sort per user
-    // carries count/sum/sum-of-squares in a single frame; the per-user
-    // rollup is a partial-aggregable HashAggregate. bounds_ok pins
-    // max(|v|) < 1e8 over EVERY row of the user — not just scored rows
-    // and not just positive values: unscored early events still feed
-    // later windows' sums, and a large-magnitude NEGATIVE value
-    // overflows dev² just as surely (DuckDB's hugeint sums would raise
-    // where a wrapped Spark long stays silent — the gate must fail
-    // loudly first). The full-partition max rides the SAME window sort
-    // as the sliding frame. Scored rows need n ≥ 4 history events so
-    // the variance is meaningful
-    "ts_anomaly" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_ms"), col("event_id")).rowsBetween(-8, -1)
-      val wAll = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_ms"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      Engine.eventsTable(s, dir)
-        .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"),
-          col("event_id"), floor(col("value") * 1000).cast("long").as("v"))
-        .withColumn("n", count(col("v")).over(w))
-        .withColumn("sm", sum(col("v")).over(w))
-        .withColumn("ss", sum(col("v") * col("v")).over(w))
-        .withColumn("mxa", max(abs(col("v"))).over(wAll))
-        .filter(col("n") >= 4)
-        .withColumn("dev", col("n") * col("v") - col("sm"))
-        .withColumn("flag", (col("dev") * col("dev")) >
-          lit(4L) * (col("n") * col("ss") - col("sm") * col("sm")))
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_scored"),
-          sum(when(col("flag"), 1L).otherwise(0L)).as("n_anomalies"),
-          (max(col("mxa")) < 100000000L).as("bounds_ok"))
-    }),
-    // duplicated-span REMOVAL (the C4/RefinedWeb cleaning transform —
-    // text_seg_dedup IDENTIFIES cross-doc duplicate spans; this one
-    // produces the cleaned corpus): each doc splits into consecutive
-    // non-overlapping 10-word segments, segments appearing in >= 2
-    // distinct documents are dropped, the survivors reassemble in
-    // original order. Output is the per-doc cleaned-text digest +
-    // kept/total counts, so the oracle replays the whole transform.
-    // Plan: one segment explode, one df aggregate (seg -> distinct-doc
-    // count), one join back, one per-doc ordered reassembly; the
-    // collect_list is DOC-bounded (a document's own segments), never
-    // corpus-bounded. At 100 TB the df shuffle should carry xxhash64
-    // segment keys with the dropped set broadcast (text_seg_dedup's
-    // hashed form) — the gate keeps full segment text so DuckDB can
-    // replay exactly
-    "text_clean_segments" -> ((s, dir) =>
-      cleanSegments(t(s, dir, "documents"), hashedDf = true)),
-    // random-projection dimensionality reduction (Johnson–Lindenstrauss
-    // with a ±1 Achlioptas matrix): 64-dim float embeddings down to 16
-    // integer components, y_j = Σ_i milli(v_i)·s(i,j). The sign matrix
-    // is PUBLIC and engine-portable — s(i,j) = +1 iff the first hex
-    // nibble of md5("i|j") < 8 — so the oracle derives the same matrix
-    // from its own md5 and replays the projection bit-for-bit (inputs
-    // quantized to milli via float→double→floor, IEEE-identical in both
-    // engines). Plan shape: the 64×16 signs fold into LITERAL arrays at
-    // plan time (zero per-row hashing), the projection is 16 codegen'd
-    // aggregate(zip_with(...)) folds in ONE scan — no shuffle, no
-    // explode of the input; the output explode to (vec_id, j, y) is
-    // 16 slim rows per vector. At 100 TB this is a map-only pass
-    "embed_rp" -> ((s, dir) => {
-      val dims = 64; val out = 16
-      def sign(i: Int, j: Int): Long = {
-        val d = java.security.MessageDigest.getInstance("MD5")
-          .digest(s"$i|$j".getBytes("UTF-8"))
-        if (((d(0) >> 4) & 0xF) < 8) 1L else -1L
-      }
-      val proj = (0 until out).map { j =>
-        val signs = (0 until dims).map(i => sign(i, j)).mkString(",")
-        expr(s"aggregate(zip_with(m, array($signs)," +
-          " (v, s) -> v * s), 0L, (acc, x) -> acc + x)").as(s"y$j")
-      }
-      t(s, dir, "embeddings")
-        .select(col("vec_id"), expr("transform(embedding," +
-          " v -> cast(floor(cast(v as double) * 1000) as bigint))").as("m"))
-        .select(col("vec_id") +: proj: _*)
-        .select(col("vec_id"),
-          posexplode(array((0 until out).map(j => col(s"y$j")): _*)))
-        .select(col("vec_id"), col("pos").cast("long").as("j"),
-          col("col").as("y"))
-    }),
-    // hard-negative mining (contrastive-training data prep): for each
-    // probe vector, the 5 most similar vectors with a DIFFERENT label —
-    // random negatives are easy, near-boundary ones are what the loss
-    // needs. The exact form over 21 probes (the oracle replays cosine
-    // ranking + the label filter verbatim, like sim_topk_brute). The
-    // corpus-wide IVF-routed form (Similarity.hardNegatives) returns
-    // different negatives wherever routing misses a candidate, so it
-    // holds no contract against this one; it is not timed separately
-    "sample_hardneg" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.hardNegativesExact(e, e.filter(col("vec_id") <= 20),
-          "vec_id", "embedding", "label", k = 5)
-        .select(col("probe_id"), col("corpus_id"), col("rank"))
-    }),
-    // ASYMMETRIC containment dedup: ordered pairs where ≥ 70% of doc a's
-    // distinct 5-char shingles also occur in doc b — the quote/substring
-    // duplication Jaccard misses (a short doc embedded in a long one has
-    // low Jaccard but containment ≈ 1). Gate = the exact all-pairs form
-    // on shingle STRINGS over the same 200-doc scope as dedup_winnow, so
-    // DuckDB replays every (n_common, n_a) integer with its own substr
-    // shingling; the threshold test is all-integer (10·common ≥ 7·|A|),
-    // no float boundary. The corpus-scale form, Dedup.containmentPairs
-    // (a shared-gram inverted-index screen over 64-bit shingle hashes
-    // with the maxDocFreq boilerplate valve), drops valve-capped pairs
-    // and counts hashes, not strings, so it holds no contract against
-    // this one; it is not timed separately
-    "dedup_containment" -> ((s, dir) => {
-      val prep = t(s, dir, "documents").filter(col("doc_id") < 200)
-        .select(col("doc_id").as("id"),
-          graft.functions.TextHashFunctions.shingleSet(col("text"), 5).as("sh"))
-        .repartition(s.sparkContext.defaultParallelism, col("id"))
-      val a = prep.select(col("id").as("id_a"), col("sh").as("sh_a"))
-      val b = prep.select(col("id").as("id_b"), col("sh").as("sh_b"))
-      a.crossJoin(b).filter(col("id_a") =!= col("id_b"))
-        .select(col("id_a"), col("id_b"),
-          size(array_intersect(col("sh_a"), col("sh_b"))).cast("long").as("n_common"),
-          size(col("sh_a")).cast("long").as("n_a"))
-        .filter(col("n_common") * 10L >= col("n_a") * 7L)
-    }),
-    // last-touch attribution: each purchase attributes to the user's
-    // most recent STRICTLY-PRIOR click (the marketing-analytics as-of
-    // primitive). The scale-correct plan is NOT a per-purchase range
-    // join (quadratic in events-per-user): both event types merge into
-    // ONE ordered stream per user and the last-click id/ts carry
-    // forward in a single window sort — rowsBetween(-∞, -1) makes
-    // "strictly prior" explicit, so a click at the same timestamp
-    // attributes only if its event_id orders first. Unattributed
-    // purchases (no prior click) keep NULLs — the funnel's cold starts
-    "events_attribution" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_ms"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      Engine.eventsTable(s, dir)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"),
-          col("event_id"), col("event_type"))
-        .withColumn("click_id", last(
-          when(col("event_type") === "click", col("event_id")),
-          ignoreNulls = true).over(w))
-        .withColumn("click_ts", last(
-          when(col("event_type") === "click", col("ts_ms")),
-          ignoreNulls = true).over(w))
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          col("click_id"), (col("ts_ms") - col("click_ts")).as("lag_ms"))
-    }),
-    // neighbor-set Jaccard per edge (the classic link-prediction /
-    // community-strength feature) over the same mutual-3NN embedding
-    // graph as graph_kcore: for each undirected edge (a,b),
-    // n_common = |N(a) ∩ N(b)| via the wedge join (two directed-edge
-    // scans equi-joined on the shared endpoint — the triangle-counting
-    // plan, never a per-node set materialization) and
-    // n_union = (deg(a)-1) + (deg(b)-1) - n_common (b ∈ N(a) by
-    // edge-ness, so each side excludes the other endpoint). All
-    // integers — the oracle replays the wedge count and degree
-    // arithmetic exactly. At 100 TB the wedge join is the one heavy
-    // shuffle and is bounded by Σ deg² — on a mutual-kNN graph deg ≤ k
-    // by construction, so it's ≤ k²·n, not corpus-quadratic
-    "graph_jaccard_neighbors" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      // NOT re-materialized: mutualEdges already checkpoints the knn
-      // list (the expensive part); the mutuality join above it is a
-      // ReusedExchange under AQE's stage cache across all four
-      // references — measured 2.2 s lazy vs 3.0 s with an extra eager
-      // localCheckpoint (the checkpoint write costs more than the reuse)
-      Graph.neighborJaccard(Similarity.mutualEdges(
-        Similarity.bruteForceTopK(e, "vec_id", "embedding",
-          e, "vec_id", "embedding", k = 3)))
-    }),
-    // NEAREST-in-time as-of join (join_asof looks backward, _fwd looks
-    // forward; this picks whichever is closer, ties to the earlier):
-    // each purchase pairs with the user's nearest click in EITHER
-    // direction. Same single-window-sort plan as events_attribution —
-    // prev click carries forward over rowsBetween(-∞,-1), next click
-    // carries backward over rowsBetween(+1,+∞), both frames of ONE sort;
-    // never a per-row |Δt| range join. The chooser is pure integer
-    // arithmetic on the two candidates, replayed by the oracle verbatim
-    "join_asof_nearest" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val base = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_ms"), col("event_id"))
-      val wPrev = base.rowsBetween(Window.unboundedPreceding, -1)
-      val wNext = base.rowsBetween(1, Window.unboundedFollowing)
-      def clickCol(c: String) = when(col("event_type") === "click", col(c))
-      Engine.eventsTable(s, dir)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"),
-          col("event_id"), col("event_type"))
-        .withColumn("pid", last(clickCol("event_id"), ignoreNulls = true).over(wPrev))
-        .withColumn("pts", last(clickCol("ts_ms"), ignoreNulls = true).over(wPrev))
-        .withColumn("nid", first(clickCol("event_id"), ignoreNulls = true).over(wNext))
-        .withColumn("nts", first(clickCol("ts_ms"), ignoreNulls = true).over(wNext))
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          when(col("pid").isNotNull &&
-              (col("nid").isNull ||
-                (col("ts_ms") - col("pts")) <= (col("nts") - col("ts_ms"))),
-              col("pid"))
-            .otherwise(col("nid")).as("click_id"),
-          when(col("pid").isNotNull &&
-              (col("nid").isNull ||
-                (col("ts_ms") - col("pts")) <= (col("nts") - col("ts_ms"))),
-              col("ts_ms") - col("pts"))
-            .otherwise(col("nts") - col("ts_ms")).as("abs_lag_ms"))
-    }),
-    // rolling 7-day distinct users per window-end day — the sliding
-    // COUNT DISTINCT no window frame computes (distinct doesn't
-    // decompose over frames). The scale-shaped exact plan: collapse to
-    // distinct (user, day) pairs FIRST (one slim shuffle), then explode
-    // each pair into the ≤ 7 window-end days it supports and count
-    // distinct per end day — the shuffle is 7× the distinct-pair count,
-    // never 7× the event count, and nothing resembles a range join.
-    // Window ends past the data's last day are trimmed in both engines
-    "agg_rolling_distinct" -> ((s, dir) => {
-      val pairs = Engine.eventsTable(s, dir)
-        .select(col("user_id"), date_trunc("DAY", col("ts")).as("day"))
-        .distinct()
-      val mx = pairs.agg(max(col("day")).as("mx"))
-      pairs.crossJoin(broadcast(mx))
-        .select(col("user_id"), explode(sequence(col("day"),
-          least(col("mx"), col("day") + expr("interval 6 days")),
-          expr("interval 1 day"))).as("wend"))
-        .groupBy(col("wend"))
-        .agg(countDistinct(col("user_id")).as("n_active_7d"))
-        .select(unix_millis(col("wend")).as("window_end_ms"),
-          col("n_active_7d"))
-    }),
-    // temperature-scaled source mixing (the UniMax / T5 data-mixing
-    // math): sampling weight per source ∝ n_tokens^(1/T) with T = 2,
-    // i.e. sqrt — upweights tail sources, downweights the head, the
-    // knob every multilingual/multi-source training mix turns. Output
-    // per source: token mass, the temperature weight in basis points,
-    // and the token allocation under a 10%-of-corpus budget. The one
-    // sqrt is IEEE-correctly-rounded in both engines on an exact
-    // integer < 2^52, then IMMEDIATELY floored to integer milli-units —
-    // every sum and division after that is exact integer arithmetic, so
-    // no accumulation-order ulps can reach the hash gate. One aggregate
-    // + one broadcast total — no second corpus pass
-    "sample_temperature" -> ((s, dir) => {
-      val perSrc = t(s, dir, "documents")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TextAnalysis.tokenCount(col("text")).cast("long")).as("n_tok"))
-        .withColumn("w",
-          floor(sqrt(col("n_tok").cast("double")) * 1000.0).cast("long"))
-      val totals = perSrc.agg(sum(col("w")).as("w_sum"),
-        sum(col("n_tok")).as("tok_sum"))
-      perSrc.crossJoin(broadcast(totals))
-        .withColumn("weight_bp", expr("(w * 10000) div w_sum"))
-        // allocation goes through the bp-quantized weight, not w
-        // directly: w·tok_sum would overflow a long near trillion-token
-        // corpora, while weight_bp ≤ 10000 keeps the product inside a
-        // long to ~10^14 tokens — the bp quantization is the price
-        .select(col("source"), col("n_docs"), col("n_tok"),
-          col("weight_bp"),
-          expr("(weight_bp * (tok_sum div 10)) div 10000").as("alloc_tok"))
-    }),
-    // gaps-and-islands: per-user consecutive-active-day streaks via the
-    // classic d − row_number() island key (constant within a run of
-    // consecutive days, strictly decreasing across gaps). Collapse to
-    // distinct (user, day) FIRST so the window sorts pair counts, not
-    // event counts; two partial-aggregable rollups after. The streak /
-    // retention primitive every engagement pipeline computes
-    "window_gaps_islands" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
-      Engine.eventsTable(s, dir)
-        .select(col("user_id"),
-          unix_date(date_trunc("DAY", col("ts")).cast("date"))
-            .cast("long").as("d"))
-        .distinct()
-        .withColumn("island", col("d") - row_number().over(w))
-        .groupBy(col("user_id"), col("island"))
-        .agg(count(lit(1)).as("len"))
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_streaks"),
-          max(col("len")).as("longest_streak"),
-          sum(col("len")).as("n_active_days"))
-    }),
-    // event-type transition counts (the first-order Markov model of
-    // user behavior): one lag window per user in (ts, event_id) order,
-    // then a (prev, next) aggregate; transition probability in basis
-    // points by integer division against the per-prev total — a window
-    // over the 25-row aggregate, not the event stream
-    "events_markov" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_ms"), col("event_id"))
-      val trans = Engine.eventsTable(s, dir)
-        .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"),
-          col("event_id"), col("event_type"))
-        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-        .filter(col("prev_type").isNotNull)
-        .groupBy(col("prev_type"), col("event_type").as("next_type"))
-        .agg(count(lit(1)).as("n"))
-      val wp = Window.partitionBy(col("prev_type"))
-      trans
-        .withColumn("tot", sum(col("n")).over(wp))
-        .select(col("prev_type"), col("next_type"), col("n"),
-          expr("(n * 10000) div tot").as("p_bp"))
-    }),
-    // community detection by synchronous label propagation over the
-    // mutual-3NN embedding graph (the graph family's fourth member:
-    // pagerank ranks, triangles count, kcore peels, LPA partitions).
-    // Deterministic by construction — plurality label with ties to the
-    // smaller, a total order — so the oracle replays all 4 rounds as
-    // chained CTEs (lpaOracleSql, the kcore unroll pattern). Sync LPA
-    // can 2-cycle on bipartite structures, hence a FIXED unroll rather
-    // than a convergence stop; the argmax runs as min over
-    // (−count, label) structs (partial-aggregable, no per-node sort)
-    "graph_lpa" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val mutual = Similarity.mutualEdges(
-        Similarity.bruteForceTopK(e, "vec_id", "embedding",
-          e, "vec_id", "embedding", k = 3))
-      Graph.labelPropagation(mutual, "src", "dst", rounds = 4)
-    }),
-    // HDR-style log-bucketed histogram: bucket = bit length of the
-    // milli value (power-of-2 boundaries) — integer-exact, mergeable
-    // (bucket counts are plain sums), and constant memory per key
-    // whatever the value range; the latency-distribution primitive.
-    // One partial-aggregable pass; both engines compute the bucket as
-    // length(bin(v)) on v >= 1 (0 pinned to bucket 0)
-    "agg_log_histogram" -> ((s, dir) =>
-      Engine.eventsTable(s, dir)
-        .select(col("event_type"),
-          floor(col("value") * 1000).cast("long").as("v"))
-        .withColumn("bucket",
-          when(col("v") <= 0L, lit(0L))
-            .otherwise(length(bin(col("v"))).cast("long")))
-        .groupBy(col("event_type"), col("bucket"))
-        .agg(count(lit(1)).as("n"),
-          min(col("v")).as("v_min"), max(col("v")).as("v_max"))),
-    // LATERAL correlated derived table — the SQL surface for per-row
-    // top-N subqueries (Spark supports JOIN LATERAL since 3.2): the two
-    // highest-balance customers per nation, the correlated limit the
-    // optimizer decorrelates; DuckDB runs the identical text
-    "sql_lateral" -> ((s, dir) => {
-      Engine.table(s, dir, "nation").createOrReplaceTempView("lat_nation")
-      Engine.table(s, dir, "customer").createOrReplaceTempView("lat_customer")
-      s.sql(
-        """SELECT n.n_name, t.c_custkey, t.bal_cents
-          |FROM lat_nation n
-          |JOIN LATERAL (
-          |  SELECT c_custkey,
-          |         cast(floor(c_acctbal * 100) as bigint) AS bal_cents
-          |  FROM lat_customer
-          |  WHERE c_nationkey = n.n_nationkey
-          |  ORDER BY bal_cents DESC, c_custkey ASC
-          |  LIMIT 2) t""".stripMargin)
-    }),
-    // BM25 search scoring over the corpus, all-integer: the retrieval
-    // primitive a text engine owes its users. Exact-portability choices:
-    // idf is the linearized odds ratio ((N − df)·1000) div df (monotone
-    // in the classic ln((N−df+.5)/(df+.5)), positive, and — unlike a
-    // floor-log2 — not quantized to zero on a corpus where every query
-    // term sits in ~78% of docs); tf saturation is BM25's k1 = 1.2,
-    // b = 0.75 in milli-units (2200·tf numerator; tf·1000 + 300 +
-    // 900·len_milli div 1000 denominator, len_milli = relative doc
-    // length). Every step is integer multiply/div, so DuckDB replays
-    // the scores bit-for-bit. Plan: tokens filter to the 3-term query
-    // INSIDE the array before the explode (slim explode), tf/df are two
-    // aggregates, corpus stats broadcast, top-50 via rank — the
-    // WindowGroupLimit/TakeOrdered shape at scale
-    "text_bm25" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val q = Seq("table", "query", "vector")
-      val qLit = q.map(x => s"'$x'").mkString(",")
-      val toks = t(s, dir, "documents")
-        .select(col("doc_id"), expr(
-          "filter(split(lower(text), '[\\\\t\\\\n\\\\x0b\\\\f\\\\r ]+'), x -> x != '')")
-          .as("all_toks"))
-        .select(col("doc_id"), size(col("all_toks")).cast("long").as("len"),
-          expr(s"filter(all_toks, x -> x IN ($qLit))").as("hits"))
-      val corpus = toks.agg(count(lit(1)).as("n_docs"),
-        sum(col("len")).as("tot_tok"))
-      val tf = toks.select(col("doc_id"), col("len"), explode(col("hits")).as("term"))
-        .groupBy(col("doc_id"), col("len"), col("term"))
-        .agg(count(lit(1)).as("tf"))
-      val df_ = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val scored = tf.join(broadcast(df_), Seq("term"))
-        .crossJoin(broadcast(corpus))
-        .withColumn("idf_milli", expr("((n_docs - df) * 1000) div df"))
-        .withColumn("len_milli", expr("(len * 1000) div (tot_tok div n_docs)"))
-        .withColumn("s_milli", expr(
-          "(idf_milli * tf * 2200) div (tf * 1000 + 300 + (900 * len_milli) div 1000)"))
-        .groupBy(col("doc_id"))
-        .agg(sum(col("s_milli")).as("score_milli"))
-      // heavy ranking as TakeOrderedAndProject (per-partition bottom-k
-      // + merge — never a single-partition global window over the full
-      // scored set); the rank window then orders only the 50 survivors
-      scored.orderBy(col("score_milli").desc, col("doc_id").asc).limit(50)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score_milli").desc, col("doc_id").asc)))
-        .select(col("doc_id"), col("score_milli"), col("rank").cast("long").as("rank"))
-    }),
-    // recency-decayed engagement score with EXACT integer decay: the
-    // float form (Σ v·2^(−age/h)) is accumulation-order-sensitive; the
-    // halving-buckets form (v div 2^⌊age/7d⌋) is order-free integer
-    // arithmetic, so the per-user sum hash-gates in any engine. age is
-    // against the corpus max day (broadcast 1-row total); the shift is
-    // capped at 62 because Java/long shifts MASK the count mod 64 — an
-    // uncapped 64-day-halflife-old row would silently decay by 2^0.
-    // nonneg_ok pins v ≥ 0 (shift-as-floor-division needs it)
-    "agg_decay_sum" -> ((s, dir) => {
-      val daily = Engine.eventsTable(s, dir)
-        .select(col("user_id"),
-          unix_date(date_trunc("DAY", col("ts")).cast("date"))
-            .cast("long").as("d"),
-          floor(col("value") * 1000).cast("long").as("v"))
-      val mx = daily.agg(max(col("d")).as("mx"))
-      daily.crossJoin(broadcast(mx))
-        .withColumn("k", expr("cast(least((mx - d) div 7, 62L) as int)"))
-        .withColumn("dec", expr("v div shiftleft(1L, k)"))
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("dec")).as("decayed_sum"),
-          (min(col("v")) >= 0L).as("nonneg_ok"))
-    }),
-  )
+  def queries: Map[String, Query] = registry.map { case (n, r) => n -> r.run }
 
   /** Checks: for a query whose run body's output is not itself the rows
     * the oracle compares, the verifier, as a function of that output
@@ -4668,3592 +183,21 @@ object SparkEntry {
     * output to the oracle's slice; it never substitutes another body for
     * the run. `SparkEntry.checked` composes the two.
     */
-  def checks: Map[String, Check] = Map(
-    // the exact ndv per column is the verifier: nd_ok pins the sketch
-    // within 15% of it
-    "dq_profile_approx" -> ((s, dir, run) => {
-      val o = t(s, dir, "orders")
-      val exact = profiledOrderCols
-        .map(c => o.agg(lit(c).as("col_name"), countDistinct(col(c)).as("n_distinct")))
-        .reduce(_ union _)
-      run.join(exact, Seq("col_name"))
-        .select(col("col_name"), col("n_nulls"),
-          (abs(col("n_distinct_approx") - col("n_distinct")) * 100
-            <= col("n_distinct") * 15).as("nd_ok"),
-          col("min_val"), col("max_val"))
-    }),
-    "distinct_fm" -> ((s, dir, run) =>
-      run.crossJoin(t(s, dir, "lineitem").select(fmRowKey)
-          .agg(countDistinct(col("k")).as("n_distinct_rowkey")))
-        .select(col("n_distinct_rowkey"),
-          (col("fm") >= col("n_distinct_rowkey") / 2 &&
-            col("fm") <= col("n_distinct_rowkey") * 4).as("fm_ok"))),
-    "distinct_hll" -> ((s, dir, run) =>
-      run.join(t(s, dir, "lineitem").groupBy(col("l_returnflag"))
-          .agg(countDistinct(col("l_partkey")).as("n_distinct")), Seq("l_returnflag"))
-        .select(col("l_returnflag"), col("n_distinct"),
-          (abs(col("hll") - col("n_distinct"))
-            <= col("n_distinct") * 0.15).as("hll_ok"))),
-    "distinct_kmv" -> ((s, dir, run) =>
-      run.crossJoin(t(s, dir, "lineitem").agg(countDistinct(col("l_orderkey")).as("ndv_exact")))
-        .select(col("ndv_est"), col("ndv_exact"),
-          (abs(col("ndv_est") - col("ndv_exact")) * 100
-            <= col("ndv_exact") * 25).as("err_ok"))),
-    "set_overlap_kmv" -> ((s, dir, run) => {
-      val (ga, gb) = overlapGrams(s, dir)
-      val da = ga.distinct()
-      val db = gb.distinct()
-      val exact = da.agg(count(lit(1)).as("na"))
-        .crossJoin(db.agg(count(lit(1)).as("nb")))
-        .crossJoin(da.join(db, Seq("gram"), "left_semi")
-          .agg(count(lit(1)).as("ni")))
-        .select(expr("10000 * ni div greatest(na + nb - ni, 1)")
-          .as("jaccard_bp_exact"))
-      run.crossJoin(exact)
-        .select(col("n_union_sk"), col("n_both"), col("jaccard_bp_est"),
-          col("jaccard_bp_exact"),
-          (abs(col("jaccard_bp_est") - col("jaccard_bp_exact")) <= 300)
-            .as("err_ok"))
-    }),
-    // simhashPairs is pairwise-local (a pair's fate depends only on the
-    // two docs' signatures), so the run's pairs inside the 500-doc slice
-    // are exactly simhashPairs of the slice
-    "dedup_simhash" -> ((s, dir, run) => {
-      val slice = t(s, dir, "documents").filter(col("doc_id") < 500)
-      val sim = run.filter(col("id_a") < 500 && col("id_b") < 500)
-        .select(col("id_a"), col("id_b")).cache()
-      val exhaustive = Dedup.simhashPairsExhaustive(slice, "doc_id", "text",
-        n = 5, maxHamming = 3).select(col("id_a"), col("id_b"))
-      val sh = slice.select(col("doc_id"),
-        Dedup.shingleHashes(col("text"), 5).as("sh"))
-      val simJ = sim
-        .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-        .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-        .select(graft.functions.TextHashFunctions
-          .jaccardSorted(col("sh_a"), col("sh_b")).as("j"))
-      val nearExact = Dedup.ngramJaccardPairs(slice, "doc_id", "text",
-        n = 5, threshold = 0.9)
-      evalGateRow(s, nearExact.agg(count(lit(1)).as("n_near09"))
-        .crossJoin(setEq(sim, exhaustive, "band_ok"))
-        .crossJoin(simJ.agg(coalesce(min(col("j")), lit(1.0)).as("min_j"))
-          .select((col("min_j") >= 0.8).as("prec_ok")))
-        .select(col("n_near09"), col("band_ok"), col("prec_ok")),
-        Seq(sim), ("n_near09", "band_ok", "prec_ok"))
-    }),
-    // the routed run's answer must equal both answers of the two-stage
-    // routing proof
-    "q4112_layout_routed" -> ((s, dir, run) => {
-      val answer = run.collect()(0).getLong(0)
-      val (r1, r2, routedBucketed, routedJoined) = layoutRoutingProof(s, dir)
-      import s.implicits._
-      Seq((answer, r1 == answer && r2 == answer, routedBucketed, routedJoined))
-        .toDF("avg_avg_value", "plans_agree", "routed_bucketed_ok", "routed_joined_ok")
-    }),
-    "layout_bucketed" -> ((s, dir, run) => {
-      requireSameRows(run, t(s, dir, "lineitem").groupBy(col("l_suppkey"))
-        .agg(sum(floor(col("l_quantity"))).as("sum_qty")))
-      layoutRow(s, dir, run, "layout_bkt", "sum_qty", "total_qty")
-    }),
-    "layout_joined_bucketed" -> ((s, dir, run) => {
-      requireSameRows(run, joinedSuppValues(s, dir).groupBy(col("l_suppkey"))
-        .agg(expr("sum(v) div count(*)").as("avg_value")))
-      layoutRow(s, dir, run, "layout_jb", "avg_value", "sum_avg")
-    }),
-    // the generator's independent RDD oracle is the verifier
-    "gen_q4112" -> ((s, _, run) => {
-      val genAnswer = graft.gen.Q4112Gen
-        .oracleFullRdd(graft.gen.Q4112Gen.orders(s, genQ4112Config), genQ4112Config)
-        .getOrElse(sys.error("generator oracle produced no groups"))
-      run.select(col("avg_avg_value").as("engine_answer"),
-        lit(genAnswer).as("gen_answer"),
-        (col("avg_avg_value") === lit(genAnswer)).as("answers_equal"))
-    }),
-    // winnowPairs is pairwise-local and, uncapped, a lossless screen
-    // (see its prefix filter), so the run's pairs inside the 200-doc
-    // slice are exactly the sketch-Jaccard ≥ 0.5 pairs of the slice
-    "dedup_winnow" -> ((s, dir, run) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 200)
-      val win = run.filter(col("id_a") < 200 && col("id_b") < 200)
-        .select(col("id_a"), col("id_b")).cache()
-      val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        n = 5, threshold = 0.0).cache()
-      val r08 = exact.filter(col("jaccard") >= 0.8)
-        .select(col("id_a"), col("id_b"))
-      val winJ = win.join(exact, Seq("id_a", "id_b"), "left")
-        .select(coalesce(col("jaccard"), lit(0.0)).as("j"))
-      evalGateRow(s, r08.agg(count(lit(1)).as("n_r08"))
-        .crossJoin(r08.join(win, Seq("id_a", "id_b"), "left_anti")
-          .agg((count(lit(1)) === 0).as("cover_ok")))
-        .crossJoin(winJ.agg(coalesce(min(col("j")), lit(1.0)).as("min_j"))
-          .select((col("min_j") >= 0.5).as("prec_ok")))
-        .select(col("n_r08"), col("cover_ok"), col("prec_ok")),
-        Seq(win, exact), ("n_r08", "cover_ok", "prec_ok"))
-    }),
-    // the run is the capped screen; the uncapped screen and the no-op
-    // cap (≥ the corpus size) are the verifiers. The kept/dropped split
-    // at the 1% cap goes to stderr for SCALING.md (data-dependent counts
-    // aren't DuckDB-recomputable for a winnow sketch)
-    "dedup_winnow_capped" -> ((s, dir, run) => {
-      val docs = t(s, dir, "documents")
-      val nDocs = docs.count()
-      val cap = docFreqCap(nDocs)
-      def pairs(maxDf: Int) =
-        Dedup.winnowPairs(docs, "doc_id", "text", k = 5, w = 4,
-          threshold = 0.5, maxDocFreq = maxDf)
-          .select(col("id_a"), col("id_b"))
-      val capped = run.select(col("id_a"), col("id_b")).cache()
-      val uncapped = pairs(Int.MaxValue).cache()
-      val noop = pairs(math.min(math.max(nDocs, 2L), Int.MaxValue.toLong).toInt).cache()
-      val row = try {
-        // the valve's exact contract: the capped pairs are the uncapped
-        // pairs that share at least one fingerprint held by ≤ cap docs
-        val posting = Dedup.winnowSketches(docs, "doc_id", "text", k = 5, w = 4)
-          .select(col("id"), explode(col("fp")).as("f"))
-        val rare = posting.join(posting.groupBy(col("f")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= cap), Seq("f"))
-        val sharesRare = rare.select(col("f"), col("id").as("id_a"))
-          .join(rare.select(col("f"), col("id").as("id_b")), Seq("f"))
-        requireSameRows(capped,
-          uncapped.join(sharesRare, Seq("id_a", "id_b"), "left_semi"))
-        capped.join(uncapped, Seq("id_a", "id_b"), "left_anti")
-          .agg((count(lit(1)) === 0).as("subset_ok"))
-          .crossJoin(setEq(noop, uncapped, "noop_lossless_ok"))
-          .crossJoin(capped.agg(count(lit(1)).as("n_kept")))
-          .crossJoin(uncapped.join(capped, Seq("id_a", "id_b"), "left_anti")
-            .agg(count(lit(1)).as("n_dropped")))
-          .select(lit(cap.toLong).as("max_doc_freq"),
-            col("subset_ok"), col("noop_lossless_ok"),
-            col("n_kept"), col("n_dropped"))
-          .collect()(0)
-      } finally Seq(uncapped, capped, noop).foreach(_.unpersist())
-      System.err.println(s"[dedup_winnow_capped] max_doc_freq=$cap " +
-        s"pairs_kept=${row.getLong(3)} pairs_dropped=${row.getLong(4)}")
-      import s.implicits._
-      Seq((row.getLong(0), row.getBoolean(1), row.getBoolean(2)))
-        .toDF("max_doc_freq", "subset_ok", "noop_lossless_ok")
-    }),
-    // the run probes a 2% micro-batch; the check holds it, and the same
-    // plan over the whole 10% shard, equal to the cross-pair subset of
-    // incrementalWinnowPairs (pairs with exactly one batch-side id,
-    // re-oriented batch→standing)
-    "dedup_stream_probe" -> ((s, dir, run) => {
-      val docs = t(s, dir, "documents")
-      val isBatch = col("doc_id") % 10 === 0
-      val standing = Dedup.winnowSketches(docs.filter(!isBatch),
-        "doc_id", "text", k = 5, w = 4).cache()
-      def cross(batch: DataFrame) = Dedup.incrementalWinnowPairs(standing, batch,
-          "doc_id", "text", k = 5, w = 4, threshold = 0.5)
-        .filter((col("id_a") % 10 === 0) =!= (col("id_b") % 10 === 0))
-        .select(
-          when(col("id_a") % 10 === 0, col("id_a")).otherwise(col("id_b"))
-            .as("doc_id"),
-          when(col("id_a") % 10 === 0, col("id_b")).otherwise(col("id_a"))
-            .as("dup_of"))
-      val micro = run.select(col("doc_id"), col("dup_of")).cache()
-      val shard = graft.streaming.Events.dedupProbeStream(
-          streamOf(docs.filter(isBatch), "doc_id", "text"),
-          standing, k = 5, w = 4, threshold = 0.5)
-        .select(col("doc_id"), col("dup_of")).cache()
-      System.err.println(s"[dedup_stream_probe] micro_pairs=${micro.count()} " +
-        s"shard_pairs=${shard.count()}")
-      evalGateRow(s,
-        docs.filter(isBatch).agg(count(lit(1)).as("n_batch"))
-          .crossJoin(setEq(micro, cross(docs.filter(col("doc_id") % 50 === 0)), "m")
-            .crossJoin(setEq(shard, cross(docs.filter(isBatch)), "b"))
-            .select((col("m") && col("b")).as("equal_cross_ok")))
-          .crossJoin(micro.union(shard).filter(col("doc_id") === col("dup_of"))
-            .agg((count(lit(1)) === 0).as("self_free_ok")))
-          .select(col("n_batch"), col("equal_cross_ok"), col("self_free_ok")),
-        Seq(standing, micro, shard), ("n_batch", "equal_cross_ok", "self_free_ok"))
-    }),
-    // the full recompute over the whole corpus, restricted to pairs
-    // touching the batch, is the verifier
-    "dedup_incremental" -> ((s, dir, run) => {
-      val docs = t(s, dir, "documents")
-      val touches = col("id_a") % 10 === 0 || col("id_b") % 10 === 0
-      val inc = run.select(col("id_a"), col("id_b")).cache()
-      val full = Dedup.winnowPairs(docs, "doc_id", "text",
-        k = 5, w = 4, threshold = 0.5)
-        .filter(touches).select(col("id_a"), col("id_b")).cache()
-      System.err.println(s"[dedup_incremental] pairs_incremental=${inc.count()} " +
-        s"pairs_full_touching=${full.count()}")
-      evalGateRow(s,
-        docs.filter(col("doc_id") % 10 === 0).agg(count(lit(1)).as("n_batch"))
-          .crossJoin(setEq(inc, full, "equal_ok"))
-          .crossJoin(inc.filter(!touches).agg((count(lit(1)) === 0).as("touches_ok")))
-          .select(col("n_batch"), col("equal_ok"), col("touches_ok")),
-        Seq(inc, full), ("n_batch", "equal_ok", "touches_ok"))
-    }),
-    // the window-recount valve over an in-memory standing index and the
-    // capped full recompute are the verifiers
-    "dedup_incremental_indexed" -> ((s, dir, run) => {
-      val docs = t(s, dir, "documents")
-      val isBatch = col("doc_id") % 10 === 0
-      val cap = docFreqCap(docs.count())
-      val standing = Dedup.winnowSketches(
-        docs.filter(!isBatch), "doc_id", "text", k = 5, w = 4).cache()
-      def sel(df: DataFrame) = df.select(col("id_a"), col("id_b"))
-      val indexed = sel(run).cache()
-      val recount = sel(Dedup.incrementalWinnowPairs(standing, docs.filter(isBatch),
-        "doc_id", "text", k = 5, w = 4, threshold = 0.5, maxDocFreq = cap)).cache()
-      val full = sel(Dedup.winnowPairs(docs, "doc_id", "text",
-        k = 5, w = 4, threshold = 0.5, maxDocFreq = cap)
-        .filter(col("id_a") % 10 === 0 || col("id_b") % 10 === 0)).cache()
-      System.err.println(s"[dedup_incremental_indexed] cap=$cap " +
-        s"pairs_indexed=${indexed.count()} pairs_recount=${recount.count()} " +
-        s"pairs_full_touching=${full.count()}")
-      evalGateRow(s,
-        docs.filter(isBatch).agg(count(lit(1)).as("n_batch"))
-          .crossJoin(setEq(indexed, recount, "lookup_valve_ok"))
-          .crossJoin(setEq(indexed, full, "full_equal_ok"))
-          .select(col("n_batch"), col("lookup_valve_ok"), col("full_equal_ok")),
-        Seq(standing, indexed, recount, full),
-        ("n_batch", "lookup_valve_ok", "full_equal_ok"))
-    }),
-    // the run is the grown df counts; the rebuild over the grown corpus
-    // is the verifier of both halves of the update
-    "dedup_standing_update" -> ((s, dir, run) => {
-      val docs = t(s, dir, "documents")
-      val isBatch = col("doc_id") % 10 === 0
-      val batchSk = Dedup.winnowSketches(
-        docs.filter(isBatch), "doc_id", "text", k = 5, w = 4).cache()
-      val (grownSk, _) = Dedup.updateStandingIndex(
-        standingSketchTable(s, dir), standingDfTable(s, dir), batchSk)
-      val rebuiltSk = Dedup.winnowSketches(docs, "doc_id", "text", k = 5, w = 4)
-      evalGateRow(s,
-        docs.filter(isBatch).agg(count(lit(1)).as("n_batch"))
-          .crossJoin(setEq(grownSk, rebuiltSk, "sketches_ok"))
-          .crossJoin(setEq(run, ModelStore.winnowDfCounts(rebuiltSk), "df_ok"))
-          .select(col("n_batch"), col("sketches_ok"), col("df_ok")),
-        Seq(batchSk), ("n_batch", "sketches_ok", "df_ok"))
-    }),
-    // the in-memory index is the verifier: the store the run loaded
-    // round-trips it, and the run's pairs equal its probe's
-    "index_persist_winnow" -> ((s, dir, run) => {
-      val docs = t(s, dir, "documents")
-      val isBatch = col("doc_id") % 10 === 0
-      val path = tmpPath(s"graft-winnow-store-${sessionKey(s, dir)}")
-      val standing = Dedup.winnowSketches(
-        docs.filter(!isBatch), "doc_id", "text", k = 5, w = 4).cache()
-      def sel(df: DataFrame) = df.select(col("id_a"), col("id_b"))
-      val fromLoaded = sel(run).cache()
-      val fromMem = sel(Dedup.incrementalWinnowPairs(standing, docs.filter(isBatch),
-        "doc_id", "text", k = 5, w = 4, threshold = 0.5,
-        maxDocFreq = docFreqCap(docs.count()))).cache()
-      evalGateRow(s,
-        docs.filter(isBatch).agg(count(lit(1)).as("n_batch"))
-          .crossJoin(setEq(standing, ModelStore.loadWinnowSketches(s, path), "sk_rt")
-            .crossJoin(setEq(ModelStore.winnowDfCounts(standing),
-              ModelStore.loadWinnowDf(s, path), "df_rt"))
-            .select((col("sk_rt") && col("df_rt")).as("roundtrip_ok")))
-          .crossJoin(setEq(fromLoaded, fromMem, "probe_ok"))
-          .select(col("n_batch"), col("roundtrip_ok"), col("probe_ok")),
-        Seq(standing, fromLoaded, fromMem), ("n_batch", "roundtrip_ok", "probe_ok"))
-    }),
-    // the run is the shrunk df counts; the rebuild over the surviving
-    // standing corpus is the verifier of both halves of the forget
-    "index_forget" -> ((s, dir, run) => {
-      val docs = t(s, dir, "documents")
-      val isGone = col("doc_id") % 7 === 0
-      val (kept, _) = Dedup.forgetFromStandingIndex(
-        standingSketchTable(s, dir), standingDfTable(s, dir),
-        docs.filter(isGone).select(col("doc_id").as("id")))
-      val rebuiltSk = Dedup.winnowSketches(
-        docs.filter(!(col("doc_id") % 10 === 0) && !isGone),
-        "doc_id", "text", k = 5, w = 4)
-      evalGateRow(s,
-        docs.filter(isGone).agg(count(lit(1)).as("n_deleted"))
-          .crossJoin(setEq(kept, rebuiltSk, "sketches_ok"))
-          .crossJoin(setEq(run, ModelStore.winnowDfCounts(rebuiltSk), "df_ok"))
-          .select(col("n_deleted"), col("sketches_ok"), col("df_ok")),
-        Seq.empty, ("n_deleted", "sketches_ok", "df_ok"))
-    }),
-    // from-scratch serving over the full corpus is the verifier of the
-    // run and of the appended (base ∪ batch) index; the appended posting
-    // relation round-trips parquet and serves the run's rows
-    "sim_ivf_append" -> ((s, dir, run) => {
-      val e = t(s, dir, "embeddings")
-      val (_, km) = Clustering.kmeans(e, "vec_id", "embedding", k = 8, maxIter = 4)
-      val isBatch = col("vec_id") % 10 === 0
-      val probes = e.filter(col("vec_id") % 37 === 0)
-      val grown = Similarity.ivfAssign(
-          e.filter(!isBatch), "vec_id", "embedding", km.centroids)
-        .union(Similarity.ivfAssign(
-          e.filter(isBatch), "vec_id", "embedding", km.centroids))
-      def sel(df: DataFrame) =
-        df.select(col("probe_id"), col("corpus_id"), col("rank"))
-      def serve(postings: DataFrame) = sel(Similarity.ivfTopKServe(postings, probes,
-        "vec_id", "embedding", km.centroids, k = 5, nProbe = 3))
-      val served = sel(run).cache()
-      val appended = serve(grown).cache()
-      val direct = sel(Similarity.ivfTopKTrained(e, "vec_id", "embedding",
-        probes, "vec_id", "embedding", km.centroids, k = 5, nProbe = 3)).cache()
-      val path = tmpPath(s"graft-ivf-store-${sessionKey(s, dir)}")
-      try {
-        ModelStore.saveIvfPostings(grown, path)
-        evalGateRow(s,
-          e.filter(isBatch).agg(count(lit(1)).as("n_batch"))
-            .crossJoin(setEq(served, direct, "d1")
-              .crossJoin(setEq(appended, direct, "d2"))
-              .select((col("d1") && col("d2")).as("append_ok")))
-            .crossJoin(setEq(serve(ModelStore.loadIvfPostings(s, path)), served,
-              "persist_ok"))
-            .select(col("n_batch"), col("append_ok"), col("persist_ok")),
-          Seq(served, appended, direct), ("n_batch", "append_ok", "persist_ok"))
-      } finally deletePath(s, path)
-    }),
-    // the rebuild on the survivors is the verifier: same postings, same
-    // serving output
-    "sim_ivf_forget" -> ((s, dir, run) => {
-      val e = t(s, dir, "embeddings")
-      val (_, km) = Clustering.kmeans(e, "vec_id", "embedding", k = 8, maxIter = 4)
-      val isGone = col("vec_id") % 9 === 0
-      val probes = e.filter(col("vec_id") % 37 === 0)
-      val forgotten = run.cache()
-      val rebuilt = Similarity.ivfAssign(
-        e.filter(!isGone), "vec_id", "embedding", km.centroids).cache()
-      def sel(a: DataFrame) = Similarity.ivfTopKServe(a, probes,
-          "vec_id", "embedding", km.centroids, k = 5, nProbe = 3)
-        .select(col("probe_id"), col("corpus_id"), col("rank"))
-      evalGateRow(s,
-        e.filter(isGone).agg(count(lit(1)).as("n_deleted"))
-          .crossJoin(setEq(forgotten.select(col("corpus_id"), col("bucket")),
-            rebuilt.select(col("corpus_id"), col("bucket")), "posting_ok"))
-          .crossJoin(setEq(sel(forgotten), sel(rebuilt), "serve_ok"))
-          .select(col("n_deleted"), col("posting_ok"), col("serve_ok")),
-        Seq(forgotten, rebuilt), ("n_deleted", "posting_ok", "serve_ok"))
-    }),
-    // the run probes a 2% micro-batch; the check holds it, and the same
-    // plan over the whole 10% shard, equal to the independent batch
-    // comparator (ivfTopKServe with an unbounded k, thresholded)
-    "sim_stream_probe" -> ((s, dir, run) => {
-      val e = t(s, dir, "embeddings")
-      val (_, km) = Clustering.kmeans(e, "vec_id", "embedding", k = 8, maxIter = 4)
-      val isBatch = col("vec_id") % 10 === 0
-      val standing = Similarity.ivfAssign(
-        e.filter(!isBatch), "vec_id", "embedding", km.centroids).cache()
-      def comparator(batch: DataFrame) = Similarity.ivfTopKServe(standing, batch,
-          "vec_id", "embedding", km.centroids, k = Int.MaxValue, nProbe = 3)
-        .filter(col("cosine") >= 0.35)
-        .select(col("probe_id").as("vec_id"), col("corpus_id").as("dup_of"))
-      val micro = run.select(col("vec_id"), col("dup_of")).cache()
-      val shard = graft.streaming.Events.simProbeStream(
-          streamOf(e.filter(isBatch), "vec_id", "embedding"),
-          standing, km.centroids, nProbe = 3, threshold = 0.35)
-        .select(col("vec_id"), col("dup_of")).cache()
-      System.err.println(s"[sim_stream_probe] micro_pairs=${micro.count()} " +
-        s"shard_pairs=${shard.count()}")
-      evalGateRow(s,
-        e.filter(isBatch).agg(count(lit(1)).as("n_batch"))
-          .crossJoin(setEq(micro, comparator(e.filter(col("vec_id") % 50 === 0)), "m")
-            .crossJoin(setEq(shard, comparator(e.filter(isBatch)), "b"))
-            .select((col("m") && col("b")).as("equal_cross_ok")))
-          .crossJoin(micro.union(shard).filter(col("vec_id") === col("dup_of"))
-            .agg((count(lit(1)) === 0).as("self_free_ok")))
-          .select(col("n_batch"), col("equal_cross_ok"), col("self_free_ok")),
-        Seq(standing, micro, shard), ("n_batch", "equal_cross_ok", "self_free_ok"))
-    }),
-    // the residual-filter plan (price ≥ 0 is not pushable, blocking agg
-    // pushdown) is the verifier: it keeps its Aggregate node, the run's
-    // plan has none, and both return identical values
-    "source_agg_pushdown" -> ((s, _, run) => {
-      val raw = idAggregates(genSource(s).filter(col("id") > 5000L && col("price") >= 0L))
-      def hasAgg(d: DataFrame): Boolean = d.queryExecution.optimizedPlan
-        .collectFirst {
-          case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-        }.isDefined
-      val p = run.collect()(0)
-      val r = raw.collect()(0)
-      import s.implicits._
-      Seq((p.getLong(3), !hasAgg(run) && hasAgg(raw),
-        (0 until 4).forall(i => p.getLong(i) == r.getLong(i))))
-        .toDF("sum_id", "pushed_ok", "equal_ok")
-    }),
-    // the same aggregate over the raw unpartitioned table is the verifier
-    "layout_partitioned_dpp" -> ((s, dir, run) => {
-      val dppOk = run.queryExecution.executedPlan.toString
-        .toLowerCase.contains("dynamicpruning")
-      val raw = t(s, dir, "orders").filter(month(col("o_orderdate")) <= 3)
-        .agg(count(lit(1)).as("n_raw"), sum(col("o_orderkey")).as("sum_raw"))
-      run.crossJoin(raw)
-        .select(col("n_q1"), lit(dppOk).as("dpp_plan_ok"),
-          (col("n_q1") === col("n_raw") &&
-            col("key_sum") === col("sum_raw")).as("equal_raw_ok"))
-    }),
-    "sim_topk_ivf_trained" -> ((s, dir, run) => {
-      val e = t(s, dir, "embeddings")
-      val brute = bruteTopK(e, 5)
-      val pseudo = Similarity.ivfTopK(e, "vec_id", "embedding",
-        annProbes(e), "vec_id", "embedding", k = 5, nCentroids = 8, nProbe = 3)
-      annRanks(run, "probe_id", 5)
-        .crossJoin(annHits(brute, run, "n_hit_t")
-          .crossJoin(annHits(brute, pseudo, "n_hit_p"))
-          .crossJoin(brute.agg(count(lit(1)).as("n_brute")))
-          .select((col("n_hit_t") > col("n_brute") * 0.375).as("recall_ok"),
-            (col("n_hit_t") >= col("n_hit_p")).as("trained_gain_ok")))
-    }),
-    // a second, timed collect of the warmed spin: load_ok flags a
-    // session under load heavy enough to invalidate ANY timing read from
-    // it (>10 s for ~0.2 s of fixed work = >50× slowdown); the seconds
-    // and their load band go to stderr. The band VALUE is load-dependent
-    // by design, so an exact-compare oracle cannot pin it; band_ok pins
-    // the BANDING FUNCTION itself, falsifiably: it evaluates it at fixed
-    // probe values straddling every threshold (strict-< boundary
-    // semantics included) against the expected enums — change a
-    // threshold, the comparison direction, or the enum order and the
-    // row goes red (ADVICE r8: the previous membership-in-closed-set
-    // check was tautologically true).
-    "probe_calibration" -> ((s, _, run) => {
-      run.collect() // warms the probe's codegen
-      val t0 = System.nanoTime()
-      val checksum = run.collect()(0).getLong(0)
-      val secs = (System.nanoTime() - t0) / 1e9
-      val thresholds = Seq(0.75 -> "idle", 2.5 -> "light", 10.0 -> "heavy")
-      def bandOf(sec: Double): String = thresholds.collectFirst {
-        case (cap, name) if sec < cap => name
-      }.getOrElse("invalid")
-      val bandOk = Seq(
-        0.0 -> "idle", 0.74 -> "idle", 0.75 -> "light", 2.49 -> "light",
-        2.5 -> "heavy", 9.99 -> "heavy", 10.0 -> "invalid", 100.0 -> "invalid")
-        .forall { case (probe, expected) => bandOf(probe) == expected }
-      System.err.println(
-        f"[probe_calibration] fixed-work spin: $secs%.3f s band=${bandOf(secs)}")
-      import s.implicits._
-      Seq((checksum, secs < 10.0, bandOk)).toDF("checksum", "load_ok", "band_ok")
-    }),
-    "dedup_embedding" -> ((s, dir, run) => {
-      val lsh = run.select(col("id_a"), col("id_b")).cache()
-      val exact = Dedup.embeddingPairsExact(t(s, dir, "embeddings"), "vec_id", "embedding",
-        threshold = 0.25).cache()
-      evalGateRow(s, exact.agg(count(lit(1)).as("n_exact_pairs"))
-        .crossJoin(lsh.join(exact, Seq("id_a", "id_b"), "left_anti")
-          .agg((count(lit(1)) === 0).as("subset_ok")))
-        .crossJoin(lsh.join(exact, Seq("id_a", "id_b"), "left_semi")
-          .agg(count(lit(1)).as("n_hit")))
-        .select(col("n_exact_pairs"), col("subset_ok"),
-          (col("n_hit") >= col("n_exact_pairs") * 0.01).as("recall_ok")),
-        Seq(lsh, exact), ("n_exact_pairs", "subset_ok", "recall_ok"))
-    }),
-    // the early-stopping form is the reference: a zero-delta round
-    // proves every later round identical, so the fixed 10 rounds must
-    // give the same scores
-    "graph_pagerank" -> sameRows((s, dir) => coSupplierPageRank(s, dir, tolAbs = 0L)),
-    "text_clean_segments" -> sameRows((s, dir) =>
-      cleanSegments(t(s, dir, "documents"), hashedDf = false)),
-    "dedup_semantic" -> ((s, dir, run) => {
-      val sem = run.select(col("id_a"), col("id_b")).cache()
-      val exact = Dedup.embeddingPairsExact(t(s, dir, "embeddings"), "vec_id", "embedding",
-        threshold = 0.25).cache()
-      evalGateRow(s, exact.agg(count(lit(1)).as("n_exact_pairs"))
-        .crossJoin(sem.join(exact, Seq("id_a", "id_b"), "left_anti")
-          .agg((count(lit(1)) === 0).as("subset_ok")))
-        .crossJoin(sem.join(exact, Seq("id_a", "id_b"), "left_semi")
-          .agg(count(lit(1)).as("n_hit")))
-        .select(col("n_exact_pairs"), col("subset_ok"),
-          // >= so the gate is vacuously true on a corpus with zero
-          // exact pairs (same convention as dedup_embedding's floor)
-          (col("n_hit") >= col("n_exact_pairs") * 0.125).as("recall_ok")),
-        Seq(sem, exact), ("n_exact_pairs", "subset_ok", "recall_ok"))
-    }),
-    // the run's sketch sizes against bounds recomputed from the text
-    "text_fingerprint" -> ((s, dir, run) =>
-      t(s, dir, "documents").select(col("doc_id"),
-          length(regexp_replace(lower(col("text")), "[\\s]+", " "))
-            .cast("long").as("normlen"),
-          size(Dedup.shingleHashes(col("text"), 5)).cast("long").as("n_shingles"))
-        .join(run, Seq("doc_id"))
-        .withColumn("m", greatest(col("normlen") - 4, lit(0L)))
-        .withColumn("n_windows", greatest(col("m") - 3, lit(0L)))
-        .select(col("doc_id"), col("n_windows"), col("n_shingles"),
-          (col("n_fingerprints") <= least(col("n_windows"), col("n_shingles")) &&
-            (col("n_windows") === 0 || col("n_fingerprints") >= 1) &&
-            (col("n_shingles") =!= col("m") || col("n_windows") === 0 ||
-              col("n_fingerprints") >= ceil(col("n_windows") / lit(4.0)))).as("bounds_ok"))),
-    // the run counts the 1% part slice, and the verifier recounts that
-    // slice with a plain three-way self-join (no degree orientation, no
-    // wedge pruning), raising on any difference; the check then emits
-    // the exact count over the 5% slice the oracle pins
-    "graph_triangles" -> ((s, dir, run) => {
-      requireSameRows(run, naiveTriangles(coSupplierEdges(s, dir, partModulus = 100)))
-      Graph.triangleCount(coSupplierEdges(s, dir, partModulus = 20), "src", "dst")
-    }),
-    "text_dup_substrings" -> sameRows(dupSubstringsExact),
-    "report_sources" -> sameRows((s, dir) => reportSources(s, dir, hashed = false)),
-    "text_seg_dedup" -> sameRows((s, dir) =>
-      TextAnalysis.segmentDedup(t(s, dir, "documents"), "doc_id", "text",
-        w = 5, maxDocs = 3)),
-    "text_decontaminate" -> sameRows((s, dir) => decontaminated(s, dir, hashGrams = false)),
-    "text_bpe_train" -> sameRows((s, dir) => bpeMergeRows(s, dir, cached = true)),
-    // the native codegen argmin of the run agrees row-for-row with an
-    // INDEPENDENT declarative recomputation over the run's model
-    "embed_kmeans" -> ((s, dir, run) => {
-      val e = t(s, dir, "embeddings")
-      val (_, model) = Clustering.kmeans(e, "vec_id", "embedding", k = 8, maxIter = 6)
-      val monotone = model.inertiaTrace.sliding(2).forall {
-        case Seq(a, b) => b <= a + 1e-6; case _ => true
-      }
-      val cLit = typedlit(model.centroids.map(_.toIndexedSeq).toIndexedSeq)
-      val dists = transform(cLit, c =>
-        aggregate(
-          zip_with(col("embedding"), c,
-            (x, cv) => (x.cast("double") - cv) * (x.cast("double") - cv)),
-          lit(0.0), (acc, v) => acc + v))
-      e.join(run, Seq("vec_id"))
-        .withColumn("dists", dists)
-        .withColumn("c_hof",
-          (array_position(col("dists"), array_min(col("dists"))) - 1).cast("int"))
-        .agg(
-          count(lit(1)).as("n_points"),
-          sum(when(col("cluster") === col("c_hof"), 0L).otherwise(1L))
-            .as("n_mismatch"),
-          countDistinct(col("cluster")).as("n_clusters"))
-        .select(
-          lit(8).as("k"),
-          col("n_points"),
-          (col("n_mismatch") === 0L).as("argmin_consistent_ok"),
-          lit(monotone).as("inertia_monotone_ok"),
-          (col("n_clusters") >= 1L && col("n_clusters") <= 8L)
-            .as("cluster_count_ok"))
-    }),
-    // every cluster of the run's model contributes exactly
-    // min(perCluster, |cluster|) rows
-    "sample_diverse" -> ((s, dir, run) => {
-      val (assigned, _) = Clustering.kmeans(
-        t(s, dir, "embeddings"), "vec_id", "embedding", k = 8, maxIter = 4)
-      val sizes = assigned.groupBy("cluster").agg(count(lit(1)).as("n_total"))
-      val sampled = run.groupBy("cluster").agg(count(lit(1)).as("n_samp"))
-      sizes.join(sampled, Seq("cluster"), "left")
-        .agg(
-          sum(when(coalesce(col("n_samp"), lit(0L)) ===
-            least(col("n_total"), lit(5L)), 0L).otherwise(1L)).as("n_bad"))
-        .select(
-          lit(5).as("per_cluster"),
-          (col("n_bad") === 0L).as("strata_ok"))
-    }),
-    "sim_topk_pq" -> ((s, dir, run) => {
-      val e = t(s, dir, "embeddings")
-      val monotone = annPq(e).errorTrace.sliding(2).forall {
-        case Seq(a, b) => b <= a + 1e-6; case _ => true
-      }
-      annRanks(run, "probe_id", 10)
-        .crossJoin(annRecall(bruteTopK(e, 10), run, 0.5))
-        .withColumn("pq_error_monotone_ok", lit(monotone))
-    }),
-    "sim_recall_ivf" -> ((s, dir, run) =>
-      annRecall(bruteTopK(t(s, dir, "embeddings"), 5), run, 0.375)
-        .select(lit(5L).as("k"), lit(0.375).as("recall_floor"), col("recall_ok"))),
-    "sim_topk_ivfpq" -> ((s, dir, run) =>
-      annRanks(run, "probe_id", 10)
-        .crossJoin(annRecall(bruteTopK(t(s, dir, "embeddings"), 10), run, 0.2))),
-    "sim_topk_ivfpq_trained" -> ((s, dir, run) => {
-      val e = t(s, dir, "embeddings")
-      val brute = bruteTopK(e, 10)
-      val pseudo = Quantization.ivfPqTopK(e, "vec_id", "embedding",
-        annProbes(e), "vec_id", "embedding", annPq(e),
-        nCentroids = 8, nProbe = 3, shortlist = 50, topK = 10)
-      annRanks(run, "probe_id", 10)
-        .crossJoin(annHits(brute, run, "n_hit_t")
-          .crossJoin(annHits(brute, pseudo, "n_hit_p"))
-          .crossJoin(brute.agg(count(lit(1)).as("n_brute")))
-          .select((col("n_hit_t") > col("n_brute") * 0.2).as("recall_ok"),
-            (col("n_hit_t") >= col("n_hit_p")).as("trained_gain_ok")))
-    }),
-    "sim_topk_ivf" -> ((s, dir, run) =>
-      annRanks(run, "probe_id", 5)
-        .crossJoin(annRecall(bruteTopK(t(s, dir, "embeddings"), 5), run, 0.375))),
-    // structure and recall are read from the run
-    "sim_knn_graph" -> ((s, dir, run) => {
-      val e = t(s, dir, "embeddings")
-      val g = run.select(col("src_id").as("probe_id"), col("dst_id").as("corpus_id"),
-        col("rank"))
-      val brute = Similarity.bruteForceTopK(e, "vec_id", "embedding",
-        e, "vec_id", "embedding", k = 5).select(col("probe_id"), col("corpus_id"))
-      annRanks(g, "probe_id", 5).withColumnRenamed("probe_id", "src_id")
-        .crossJoin(annRecall(brute, g, 0.375))
-    }),
-  )
+  def checks: Map[String, Check] =
+    registry.collect { case (n, Record(_, _, Some(check), _)) => n -> check }
 
   /** The form Verify, Probe `show` and the gate-reading specs run: the
     * run body's output handed to the query's check, or the run body
     * itself for a query without one.
     */
   def checked(name: String): Query = {
-    val run = queries(name)
-    checks.get(name).fold(run)(check => (s, dir) => check(s, dir, run(s, dir)))
-  }
-
-  /** graph_kcore's oracle: mutual-kNN edge build + a fixed-`rounds`
-    * peeling unroll, generated round by round (the pageRank 10-round
-    * convention, but mechanical). Every CTE is MATERIALIZED — each
-    * round references the previous one three times, so DuckDB's default
-    * CTE inlining would expand the chain 3^rounds-fold (measured: "too
-    * many open files" before the first row).
-    */
-  private def kCoreOracleSql(rounds: Int, k: Int, knnK: Int): String = {
-    val head =
-      s"""WITH knn AS MATERIALIZED (
-         |  SELECT probe_id, corpus_id FROM (
-         |    SELECT p.vec_id AS probe_id, c.vec_id AS corpus_id,
-         |           row_number() OVER (PARTITION BY p.vec_id
-         |             ORDER BY list_cosine_similarity(c.embedding::DOUBLE[],
-         |                                             p.embedding::DOUBLE[]) DESC,
-         |                      c.vec_id ASC) AS rk
-         |    FROM embeddings c JOIN embeddings p ON c.vec_id <> p.vec_id)
-         |  WHERE rk <= $knnK),
-         |m AS MATERIALIZED (SELECT a.probe_id AS src, a.corpus_id AS dst
-         |  FROM knn a JOIN knn b ON a.probe_id = b.corpus_id
-         |                       AND a.corpus_id = b.probe_id
-         |  WHERE a.probe_id < a.corpus_id),
-         |e0 AS MATERIALIZED (
-         |  SELECT src AS u, dst AS v FROM m UNION ALL SELECT dst, src FROM m)""".stripMargin
-    val peel = (1 to rounds).map { i =>
-      s""",
-         |s$i AS MATERIALIZED (SELECT u FROM e${i - 1} GROUP BY u HAVING count(*) >= $k),
-         |e$i AS MATERIALIZED (SELECT e.u, e.v FROM e${i - 1} e
-         |  JOIN s$i a ON e.u = a.u JOIN s$i b ON e.v = b.u)""".stripMargin
-    }.mkString
-    head + peel +
-      s"""
-         |SELECT n.node, (c.u IS NOT NULL) AS in_core
-         |FROM (SELECT DISTINCT u AS node FROM e0) n
-         |LEFT JOIN (SELECT DISTINCT u FROM e$rounds) c ON c.u = n.node""".stripMargin
-  }
-
-  /** Fixed-round synchronous LPA unroll over the mutual-kNN graph —
-    * the kCoreOracleSql pattern: every CTE MATERIALIZED (each round is
-    * referenced by the next; inlining would re-expand the knn n² scan
-    * per round), argmax replayed as row_number over (count DESC,
-    * label ASC) — the same total order as the engine's min-struct form.
-    */
-  /** Shared CTE chain replaying BPE training: normalized corpus → word
-    * types → per-round (pair count → argmax → greedy leftmost
-    * non-overlapping merge). The merge step uses the islands-parity
-    * form: within each maximal run of consecutive matching positions,
-    * the 1st, 3rd, ... positions merge — provably the same result as
-    * the kernel's single left-to-right scan (runs only arise when
-    * x = y, and both select every other position from the left).
-    * NOTE: assumes the corpus yields ≥ `rounds` distinct pairs (true
-    * for every driver sf); on a degenerate corpus the Spark side stops
-    * early while tok{r} here goes empty.
-    */
-  private def bpeOracleCtes(rounds: Int): String = {
-    val head =
-      """WITH nr AS MATERIALIZED (
-        |  SELECT doc_id,
-        |         regexp_replace(regexp_replace(lower(text), '[\t\n\x0b\f\r ]', ' ', 'g'),
-        |                        '[^a-z ]', '#', 'g') AS t
-        |  FROM documents),
-        |wrd AS MATERIALIZED (
-        |  SELECT w, count(*)::BIGINT AS freq
-        |  FROM (SELECT unnest(str_split(t, ' ')) AS w FROM nr)
-        |  WHERE w <> '' GROUP BY w),
-        |tok0 AS MATERIALIZED (
-        |  SELECT w, freq, i, substr(w, i, 1) AS t
-        |  FROM (SELECT w, freq, unnest(range(1, len(w) + 1)) AS i FROM wrd))""".stripMargin
-    val iter = (1 to rounds).map { r =>
-      s""",
-         |cnt$r AS (
-         |  SELECT x, y, sum(freq)::BIGINT AS c FROM (
-         |    SELECT t AS x, lead(t) OVER (PARTITION BY w ORDER BY i) AS y, freq
-         |    FROM tok${r - 1})
-         |  WHERE y IS NOT NULL GROUP BY x, y),
-         |best$r AS MATERIALIZED (
-         |  SELECT x, y, c FROM cnt$r ORDER BY c DESC, x ASC, y ASC LIMIT 1),
-         |mk$r AS (
-         |  SELECT k.w, k.freq, k.i, k.t,
-         |         coalesce(k.t = b.x AND
-         |           lead(k.t) OVER (PARTITION BY k.w ORDER BY k.i) = b.y, false) AS mt
-         |  FROM tok${r - 1} k CROSS JOIN best$r b),
-         |s1$r AS (SELECT *, CASE WHEN mt THEN i - row_number()
-         |           OVER (PARTITION BY w, mt ORDER BY i) END AS isl FROM mk$r),
-         |s2$r AS (SELECT *, CASE WHEN mt THEN row_number()
-         |           OVER (PARTITION BY w, isl ORDER BY i) END AS rn FROM s1$r),
-         |s3$r AS (SELECT *, (mt AND rn % 2 = 1) AS sel,
-         |                lead(t) OVER (PARTITION BY w ORDER BY i) AS nxt,
-         |                lag(mt AND rn % 2 = 1) OVER (PARTITION BY w ORDER BY i) AS psel
-         |         FROM s2$r),
-         |tok$r AS MATERIALIZED (
-         |  SELECT w, freq, row_number() OVER (PARTITION BY w ORDER BY i) AS i,
-         |         CASE WHEN sel THEN t || nxt ELSE t END AS t
-         |  FROM s3$r WHERE NOT coalesce(psel, false))""".stripMargin
-    }.mkString
-    head + iter
-  }
-
-  private def bpeVocabOracleSql(rounds: Int): String =
-    bpeOracleCtes(rounds) +
-      s"""
-         |SELECT t AS token, sum(freq)::BIGINT AS n_occurrences
-         |FROM tok$rounds GROUP BY t""".stripMargin
-
-  private def bpeTrainOracleSql(rounds: Int): String =
-    bpeOracleCtes(rounds) + "\n" +
-      (1 to rounds).map(r =>
-        s"SELECT ${r}::BIGINT AS merge_rank, x AS lhs, y AS rhs, c AS pair_count FROM best$r")
-        .mkString("\nUNION ALL\n")
-
-  /** Per-doc BPE token counts under the trained merges, as chained CTEs
-    * (docw/wtok/cnts) — the shared tail of the segment and pack oracles.
-    */
-  private def bpePerDocCtes(rounds: Int): String =
-    s""",
-       |docw AS (SELECT doc_id, w, count(*)::BIGINT AS n
-       |         FROM (SELECT doc_id, unnest(str_split(t, ' ')) AS w FROM nr)
-       |         WHERE w <> '' GROUP BY doc_id, w),
-       |wtok AS (SELECT w, count(*)::BIGINT AS ntok FROM tok$rounds GROUP BY w),
-       |cnts AS (SELECT doc_id, sum(n * ntok)::BIGINT AS s
-       |         FROM docw JOIN wtok USING (w) GROUP BY doc_id)""".stripMargin
-
-  private def bpeSegmentOracleSql(rounds: Int): String =
-    bpeOracleCtes(rounds) + bpePerDocCtes(rounds) +
-      s"""
-         |SELECT d.doc_id, coalesce(c.s, 0)::BIGINT AS n_bpe_tokens
-         |FROM documents d LEFT JOIN cnts c USING (doc_id)""".stripMargin
-
-  /** Pack replay over BPE token counts: text_pack's shard/window
-    * arithmetic with n_tok from the trained tokenizer.
-    */
-  private def bpePackOracleSql(rounds: Int): String =
-    bpeOracleCtes(rounds) + bpePerDocCtes(rounds) +
-      s""",
-         |perdoc AS (SELECT d.doc_id, cast(d.doc_id % 32 as int) AS shard,
-         |                  coalesce(c.s, 0)::BIGINT AS n_tok
-         |           FROM documents d LEFT JOIN cnts c USING (doc_id)),
-         |cc AS (SELECT shard, doc_id, n_tok,
-         |    sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id) AS cum FROM perdoc)
-         |SELECT shard, cast((cum - n_tok) // 512 AS BIGINT) AS bin,
-         |       count(*) AS n_docs, cast(sum(n_tok) as bigint) AS n_tokens
-         |FROM cc GROUP BY 1, 2""".stripMargin
-
-  /** Vocab-size-targeted training replay: unroll `maxRounds`, compute
-    * the per-round distinct-token counts, derive the stop round (first
-    * round whose vocab reaches base-alphabet + `delta`, else all), and
-    * select merges up to it — the exact recurrence
-    * [[graft.ops.Bpe.trainMergesToVocab]] runs.
-    */
-  private def bpeVocabTargetOracleSql(maxRounds: Int, delta: Int): String = {
-    val sizes = (0 to maxRounds).map(r =>
-      s"SELECT $r AS r, count(DISTINCT t)::BIGINT AS v FROM tok$r")
-      .mkString("\nUNION ALL\n")
-    val merges = (1 to maxRounds).map(r =>
-      s"SELECT ${r}::BIGINT AS merge_rank, x AS lhs, y AS rhs, c AS pair_count " +
-        s"FROM best$r, rstar WHERE $r <= rs")
-      .mkString("\nUNION ALL\n")
-    bpeOracleCtes(maxRounds) +
-      s""",
-         |vs AS MATERIALIZED ($sizes),
-         |tgt AS (SELECT v + $delta AS tv FROM vs WHERE r = 0),
-         |rstar AS (SELECT coalesce(min(r), $maxRounds) AS rs
-         |          FROM vs, tgt WHERE r >= 1 AND v >= tv)
-         |$merges""".stripMargin
-  }
-
-  private def lpaOracleSql(rounds: Int, knnK: Int): String = {
-    val head =
-      s"""WITH knn AS MATERIALIZED (
-         |  SELECT probe_id, corpus_id FROM (
-         |    SELECT p.vec_id AS probe_id, c.vec_id AS corpus_id,
-         |           row_number() OVER (PARTITION BY p.vec_id
-         |             ORDER BY list_cosine_similarity(c.embedding::DOUBLE[],
-         |                                             p.embedding::DOUBLE[]) DESC,
-         |                      c.vec_id ASC) AS rk
-         |    FROM embeddings c JOIN embeddings p ON c.vec_id <> p.vec_id)
-         |  WHERE rk <= $knnK),
-         |m AS MATERIALIZED (SELECT a.probe_id AS src, a.corpus_id AS dst
-         |  FROM knn a JOIN knn b ON a.probe_id = b.corpus_id
-         |                       AND a.corpus_id = b.probe_id
-         |  WHERE a.probe_id < a.corpus_id),
-         |e0 AS MATERIALIZED (
-         |  SELECT src AS u, dst AS v FROM m UNION ALL SELECT dst, src FROM m),
-         |l0 AS MATERIALIZED (SELECT DISTINCT u AS node, u AS label FROM e0)""".stripMargin
-    val iter = (1 to rounds).map { i =>
-      s""",
-         |l$i AS MATERIALIZED (
-         |  SELECT u AS node, label FROM (
-         |    SELECT e.u, l.label, count(*) AS c,
-         |           row_number() OVER (PARTITION BY e.u
-         |             ORDER BY count(*) DESC, l.label ASC) AS rk
-         |    FROM e0 e JOIN l${i - 1} l ON e.v = l.node
-         |    GROUP BY e.u, l.label)
-         |  WHERE rk = 1)""".stripMargin
-    }.mkString
-    head + iter +
-      s"""
-         |SELECT node, label AS community FROM l$rounds""".stripMargin
+    val r = registry(name)
+    r.check.fold(r.run)(check => (s, dir) => check(s, dir, r.run(s, dir)))
   }
 
   /** For each key in queries, ANSI SQL runnable by DuckDB on the same
     * parquet tables that returns the rows of the query's checked form
     * ([[checked]]).
     */
-  def oracleSql: Map[String, String] = {
-    val p1 =
-      """SELECT cast(sum(cast(floor(p_retailprice) as bigint) * cast(floor(l_quantity) as bigint))
-        |        // count(*) as bigint) AS %s
-        |FROM lineitem JOIN part ON l_partkey = p_partkey""".stripMargin
-    val groupedCte =
-      """SELECT l_suppkey,
-        |       cast(sum(cast(floor(p_retailprice) as bigint) * cast(floor(l_quantity) as bigint))
-        |            // count(*) as bigint) AS avg_value
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY l_suppkey""".stripMargin
-    // graph_pagerank: aggregation is illegal in a recursive CTE term, so
-    // the 10 fixed-point power-iteration rounds are unrolled as chained
-    // CTEs over the supplier–part bipartite edge set
-    val prEdges =
-      """b AS (SELECT DISTINCT l_suppkey AS sk, l_partkey AS pk FROM lineitem),
-        |e AS (SELECT sk AS s, 1000000 + pk AS d FROM b
-        |      UNION SELECT 1000000 + pk, sk FROM b),
-        |deg AS (SELECT s, count(*) AS deg FROM e GROUP BY s),
-        |it0 AS (SELECT s AS node, CAST(1000000 AS BIGINT) AS score FROM deg)""".stripMargin
-    val prIters = (1 to 10).map { i =>
-      s"""it$i AS (SELECT n.node,
-         |  CAST(150000 + (85 * coalesce(x.insum, 0)) // 100 AS BIGINT) AS score
-         |  FROM (SELECT s AS node FROM deg) n LEFT JOIN (
-         |    SELECT e.d AS node, CAST(sum(i.score // dg.deg) AS BIGINT) AS insum
-         |    FROM e JOIN it${i - 1} i ON e.s = i.node JOIN deg dg ON e.s = dg.s
-         |    GROUP BY e.d) x ON n.node = x.node)""".stripMargin
-    }.mkString(",\n")
-    val prSql =
-      s"WITH $prEdges,\n$prIters\nSELECT node, score AS pagerank FROM it10"
-    // directed PageRank: same edge set kept one-way (supplier → part,
-    // every part dangling); each unrolled round adds the dangling-mass
-    // scalar + integer share, then the nodes-side left join
-    val prdEdges =
-      """b AS (SELECT DISTINCT l_suppkey AS sk, l_partkey AS pk FROM lineitem),
-        |e AS (SELECT sk AS s, 1000000 + pk AS d FROM b),
-        |deg AS (SELECT s, count(*) AS deg FROM e GROUP BY s),
-        |nodes AS (SELECT DISTINCT node FROM
-        |            (SELECT s AS node FROM e UNION ALL SELECT d FROM e)),
-        |nn AS (SELECT count(*)::BIGINT AS n FROM nodes),
-        |dang AS (SELECT node FROM nodes
-        |         WHERE node NOT IN (SELECT s FROM deg)),
-        |dt0 AS (SELECT node, CAST(1000000 AS BIGINT) AS score FROM nodes)""".stripMargin
-    val prdIters = (1 to 6).map { i =>
-      s"""sh$i AS (SELECT (coalesce((SELECT sum(p.score) FROM dt${i - 1} p
-         |                           JOIN dang USING (node)), 0) // n)::BIGINT AS share
-         |         FROM nn),
-         |dt$i AS (SELECT nd.node,
-         |  CAST(150000 + (85 * (coalesce(x.insum, 0) + sh.share)) // 100 AS BIGINT) AS score
-         |  FROM nodes nd CROSS JOIN sh$i sh LEFT JOIN (
-         |    SELECT e.d AS node, CAST(sum(p.score // dg.deg) AS BIGINT) AS insum
-         |    FROM e JOIN dt${i - 1} p ON e.s = p.node JOIN deg dg ON e.s = dg.s
-         |    GROUP BY e.d) x ON nd.node = x.node)""".stripMargin
-    }.mkString(",\n")
-    val prdSql =
-      s"WITH $prdEdges,\n$prdIters\nSELECT node, score AS pagerank FROM dt6"
-    Map(
-      "graph_pagerank" -> prSql,
-      "graph_pagerank_directed" -> prdSql,
-      "graph_kcore" -> kCoreOracleSql(rounds = 16, k = 2, knnK = 3),
-      "graph_lpa" -> lpaOracleSql(rounds = 4, knnK = 3),
-      "text_bpe_train" -> bpeTrainOracleSql(rounds = 8),
-      "text_bpe_segment" -> bpeSegmentOracleSql(rounds = 8),
-      "text_bpe_vocab" -> bpeVocabOracleSql(rounds = 8),
-      "text_bpe_vocab_target" -> bpeVocabTargetOracleSql(maxRounds = 8, delta = 4),
-      "text_pack_bpe" -> bpePackOracleSql(rounds = 8),
-      // full replay of the closed-form fit: the text_lm_score training
-      // CTEs produce y, the Gram sums accumulate in HUGEINT (the 3×3
-      // determinants reach ~1e34), Cramer's rule verbatim; // and
-      // BigInt / both truncate toward zero (verified incl. negatives)
-      "ml_linreg_distill" ->
-        """WITH nr AS (SELECT doc_id, text,
-          |    regexp_replace(regexp_replace(lower(text), '[\t\n\x0b\f\r ]', ' ', 'g'),
-          |                   '[^a-z ]', '#', 'g') AS t
-          |  FROM documents),
-          |g AS (SELECT doc_id, unnest([substr(t, i, 2) for i in range(1, len(t))]) AS bg
-          |      FROM nr WHERE len(t) >= 2),
-          |w AS (SELECT bg, length(bin(1 + count(*))) - 1 AS w FROM g GROUP BY bg),
-          |sc AS (SELECT doc_id, sum(w)::BIGINT AS sw, count(*)::BIGINT AS nb
-          |       FROM g JOIN w USING (bg) GROUP BY doc_id),
-          |f AS (SELECT d.n_chars::BIGINT AS x1,
-          |             len(regexp_extract_all(d.text, '[^\t\n\x0b\f\r ]+'))::BIGINT AS x2,
-          |             coalesce(s.sw // s.nb, 0)::BIGINT AS y
-          |      FROM documents d LEFT JOIN sc s USING (doc_id)),
-          |m AS (SELECT count(*)::HUGEINT AS n,
-          |             sum(x1)::HUGEINT AS s1, sum(x2)::HUGEINT AS s2,
-          |             sum(x1*x1)::HUGEINT AS s11, sum(x1*x2)::HUGEINT AS s12,
-          |             sum(x2*x2)::HUGEINT AS s22, sum(y)::HUGEINT AS sy,
-          |             sum(x1*y)::HUGEINT AS s1y, sum(x2*y)::HUGEINT AS s2y
-          |      FROM f),
-          |d3 AS (SELECT n,
-          |  n*(s11*s22 - s12*s12) - s1*(s1*s22 - s12*s2) + s2*(s1*s12 - s11*s2) AS det,
-          |  sy*(s11*s22 - s12*s12) - s1*(s1y*s22 - s12*s2y) + s2*(s1y*s12 - s11*s2y) AS det0,
-          |  n*(s1y*s22 - s12*s2y) - sy*(s1*s22 - s12*s2) + s2*(s1*s2y - s1y*s2) AS det1,
-          |  n*(s11*s2y - s1y*s12) - s1*(s1*s2y - s1y*s2) + sy*(s1*s12 - s11*s2) AS det2
-          |  FROM m)
-          |SELECT n::BIGINT AS n_docs,
-          |  (CASE WHEN det <> 0 THEN ((det0 * 1000) // det)::BIGINT ELSE 0 END) AS beta0_milli,
-          |  (CASE WHEN det <> 0 THEN ((det1 * 1000) // det)::BIGINT ELSE 0 END) AS beta1_milli,
-          |  (CASE WHEN det <> 0 THEN ((det2 * 1000) // det)::BIGINT ELSE 0 END) AS beta2_milli,
-          |  det <> 0 AS det_nonzero
-          |FROM d3""".stripMargin,
-      "dq_rules" ->
-        """SELECT count(*) AS n_rows,
-          |       cast(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) as bigint) AS n_null_cust,
-          |       cast(sum(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END) as bigint) AS n_nonpos_price,
-          |       cast(sum(CASE WHEN o_orderstatus NOT IN ('O','F','P') THEN 1 ELSE 0 END) as bigint) AS n_bad_status,
-          |       cast(sum(CASE WHEN o_orderdate IS NULL
-          |                       OR o_orderdate < TIMESTAMP '1990-01-01' THEN 1 ELSE 0 END) as bigint) AS n_bad_date,
-          |       count(*) - count(DISTINCT o_orderkey) AS n_dup_keys
-          |FROM orders""".stripMargin,
-      // exact integer z-score outliers: DuckDB's hugeint evaluates the
-      // cross-multiplied inequality exactly, Spark's decimal(38) dito —
-      // bit-equal by construction (no float mean/stddev on either side)
-      "dq_outliers_z" ->
-        """WITH b AS (SELECT l_returnflag, cast(floor(l_quantity) as bigint) AS x
-          |           FROM lineitem),
-          |st AS (SELECT l_returnflag, count(*) AS n, sum(x) AS s, sum(x*x) AS q
-          |       FROM b GROUP BY 1)
-          |SELECT l_returnflag, cast(max(n) as bigint) AS n_rows,
-          |       cast(sum(CASE WHEN 4*(n*x - s)*(n*x - s) > 9*(n*q - s*s)
-          |                     THEN 1 ELSE 0 END) as bigint) AS n_outliers
-          |FROM b JOIN st USING (l_returnflag) GROUP BY l_returnflag""".stripMargin,
-      "text_token_freq_score" ->
-        """WITH toks AS (
-          |  SELECT doc_id,
-          |         unnest(string_split_regex(lower(text), '[\t\n\x0b\f\r ]+')) AS term
-          |  FROM documents),
-          |t2 AS (SELECT doc_id, term FROM toks WHERE term <> ''),
-          |freq AS (SELECT term, count(*) AS f FROM t2 GROUP BY 1)
-          |SELECT doc_id, count(*) AS n_tokens,
-          |       cast(sum(f) as bigint) AS sum_tok_freq,
-          |       cast(sum(f) // count(*) as bigint) AS avg_tok_freq
-          |FROM t2 JOIN freq USING (term)
-          |GROUP BY doc_id""".stripMargin,
-      // layout gate: the oracle recomputes the aggregate from the RAW
-      // table — equality proves the bucketed write/read round-trip; the
-      // boolean proves the exchange-free plan
-      "layout_bucketed" ->
-        """SELECT count(DISTINCT l_suppkey) AS n_groups,
-          |       cast(sum(cast(floor(l_quantity) as bigint)) as bigint) AS total_qty,
-          |       true AS exchange_free_ok
-          |FROM lineitem""".stripMargin,
-      // the materialized joined layout must round-trip the EXACT grouped
-      // integer-avg answer the raw tables give (plus the exchange-free
-      // plan invariant computed Spark-side)
-      "layout_joined_bucketed" ->
-        """WITH g AS (
-          |  SELECT l_suppkey,
-          |         cast(sum(cast(floor(p_retailprice) as bigint) * cast(floor(l_quantity) as bigint))
-          |              // count(*) as bigint) AS avg_value
-          |  FROM lineitem JOIN part ON l_partkey = p_partkey
-          |  GROUP BY l_suppkey)
-          |SELECT count(*) AS n_groups, cast(sum(avg_value) as bigint) AS sum_avg,
-          |       true AS exchange_free_ok
-          |FROM g""".stripMargin,
-      // fixed-work probe: the checksum is a pinned engine-independent
-      // constant (sum of xxhash64(id) mod 97 over id < 2^26, the same
-      // recipe as gen_q4112's pinned oracle); load_ok flips only under
-      // >50× slowdown of the fixed work; band_ok pins the load-band
-      // ENUM (membership + threshold coherence — the band value itself
-      // is load-dependent and goes to stderr)
-      "probe_calibration" ->
-        """SELECT cast(3221230707 as bigint) AS checksum, true AS load_ok,
-          |       true AS band_ok""".stripMargin,
-      // winnow valve gate: the cap is a pure function of the corpus
-      // size (1% with floor 2); subset/no-op-losslessness are computed
-      // Spark-side from the pair-set comparisons
-      "dedup_winnow_capped" ->
-        """SELECT cast(greatest(2, count(*) // 100) as bigint) AS max_doc_freq,
-          |       true AS subset_ok, true AS noop_lossless_ok
-          |FROM documents""".stripMargin,
-      // incremental dedup gate: the batch is the deterministic
-      // doc_id % 10 = 0 bucket; equality/touching proofs are computed
-      // Spark-side from the two pair-set anti-joins
-      "dedup_incremental" ->
-        """SELECT cast(count(*) as bigint) AS n_batch,
-          |       true AS equal_ok, true AS touches_ok
-          |FROM documents WHERE doc_id % 10 = 0""".stripMargin,
-      // maintained-df valve + bloom probe: equality proofs are
-      // Spark-side anti-joins; the batch size is oracle-recomputable
-      "dedup_incremental_indexed" ->
-        """SELECT cast(count(*) as bigint) AS n_batch,
-          |       true AS lookup_valve_ok, true AS full_equal_ok
-          |FROM documents WHERE doc_id % 10 = 0""".stripMargin,
-      "dedup_standing_update" ->
-        """SELECT cast(count(*) as bigint) AS n_batch,
-          |       true AS sketches_ok, true AS df_ok
-          |FROM documents WHERE doc_id % 10 = 0""".stripMargin,
-      "index_persist_winnow" ->
-        """SELECT cast(count(*) as bigint) AS n_batch,
-          |       true AS roundtrip_ok, true AS probe_ok
-          |FROM documents WHERE doc_id % 10 = 0""".stripMargin,
-      "index_persist_models" ->
-        """SELECT cast(count(*) as bigint) AS n_vectors,
-          |       true AS ann_ok, true AS bpe_ok
-          |FROM embeddings""".stripMargin,
-      // forget gate: the delete set is the deterministic doc_id % 7 = 0
-      // bucket; rebuild-equality proofs are Spark-side anti-joins
-      "index_forget" ->
-        """SELECT cast(count(*) as bigint) AS n_deleted,
-          |       true AS sketches_ok, true AS df_ok
-          |FROM documents WHERE doc_id % 7 = 0""".stripMargin,
-      // IVF append gate: batch bucket is vec_id % 10 = 0; the
-      // append-vs-rebuild and loaded-vs-memory serving equalities are
-      // Spark-side anti-joins over (probe, corpus, rank) sets
-      "sim_ivf_append" ->
-        """SELECT cast(count(*) as bigint) AS n_batch,
-          |       true AS append_ok, true AS persist_ok
-          |FROM embeddings WHERE vec_id % 10 = 0""".stripMargin,
-      // IVF forget gate: delete set is vec_id % 9 = 0; posting and
-      // serving equalities are Spark-side anti-joins
-      "sim_ivf_forget" ->
-        """SELECT cast(count(*) as bigint) AS n_deleted,
-          |       true AS posting_ok, true AS serve_ok
-          |FROM embeddings WHERE vec_id % 9 = 0""".stripMargin,
-      // streaming vector probe gate: batch bucket is vec_id % 10 = 0;
-      // the comparator equality and self-freeness are Spark-side
-      "sim_stream_probe" ->
-        """SELECT cast(count(*) as bigint) AS n_batch,
-          |       true AS equal_cross_ok, true AS self_free_ok
-          |FROM embeddings WHERE vec_id % 10 = 0""".stripMargin,
-      // streaming store-update gate: same batch bucket; the
-      // store-vs-rebuild and serve equalities are Spark-side anti-joins
-      "sim_ivf_stream_update" ->
-        """SELECT cast(count(*) as bigint) AS n_batch,
-          |       true AS store_ok, true AS serve_ok
-          |FROM embeddings WHERE vec_id % 10 = 0""".stripMargin,
-      // compaction gate: same batch bucket; rebuild/serve equality and
-      // the delta-store removal are Spark-side proofs
-      "sim_ivf_compact" ->
-        """SELECT cast(count(*) as bigint) AS n_batch,
-          |       true AS compact_ok, true AS delta_gone
-          |FROM embeddings WHERE vec_id % 10 = 0""".stripMargin,
-      // maintenance loop: the oracle replays the TRIGGER arithmetic
-      // (churn bp over the ledger counts, threshold 2000) per scenario;
-      // the store/delta consistency proof is Spark-side
-      "index_maintenance_loop" ->
-        """WITH h AS (SELECT count(*) FILTER (vec_id % 4 <> 0) AS n0,
-          |                  count(*) FILTER (vec_id % 4 = 0) AS na
-          |           FROM embeddings),
-          |l AS (SELECT count(*) FILTER (vec_id % 97 <> 0) AS n0,
-          |             count(*) FILTER (vec_id % 97 = 0) AS na
-          |      FROM embeddings)
-          |SELECT 'heavy_ingest' AS scenario,
-          |       cast(n0 as bigint) AS n_at_build,
-          |       cast(na as bigint) AS n_added,
-          |       cast(na * 10000 // n0 as bigint) AS churn_bp,
-          |       na * 10000 // n0 >= 2000 AS maintained,
-          |       true AS store_ok
-          |FROM h
-          |UNION ALL
-          |SELECT 'light_ingest',
-          |       cast(n0 as bigint), cast(na as bigint),
-          |       cast(na * 10000 // n0 as bigint),
-          |       na * 10000 // n0 >= 2000, true
-          |FROM l""".stripMargin,
-      // retrain gate: the ledger counts are replayed from the id
-      // buckets; the drift decision and the store set-equality are
-      // pinned booleans — the shifted scenario MUST fire (vectors
-      // displaced off the training manifold concentrate the bucket
-      // distribution), the stable one MUST NOT, and either way the
-      // served store must equal a from-scratch assignment under the
-      // centroids the policy chose (Spark-side proof)
-      "index_retrain_loop" ->
-        """WITH c AS (SELECT count(*) FILTER (vec_id % 4 <> 0) AS n0,
-          |                  count(*) FILTER (vec_id % 4 = 0) AS na
-          |           FROM embeddings)
-          |SELECT 'shifted_drift' AS scenario,
-          |       cast(n0 as bigint) AS n_at_build,
-          |       cast(na as bigint) AS n_added,
-          |       true AS retrained, true AS store_ok
-          |FROM c
-          |UNION ALL
-          |SELECT 'stable_ingest', cast(n0 as bigint), cast(na as bigint),
-          |       false, true
-          |FROM c""".stripMargin,
-      // equi-depth histogram gate: exact decile edges replayed via the
-      // rank computation; the sketch's rank-window booleans pinned true
-      "dq_histogram_approx" ->
-        """WITH b AS (SELECT cast(floor(o_totalprice) as bigint) AS x FROM orders),
-          |n AS (SELECT count(*) AS n FROM b),
-          |r AS (SELECT x, row_number() OVER (ORDER BY x) AS rn FROM b),
-          |k AS (SELECT unnest(generate_series(1, 9)) AS decile)
-          |SELECT cast(k.decile as bigint) AS decile, r.x AS exact_edge,
-          |       true AS rank_ok
-          |FROM k CROSS JOIN n JOIN r ON r.rn = k.decile * n.n // 10""".stripMargin,
-      // aggregate-pushdown gate: the oracle recomputes the pushed
-      // SUM(id) as the arithmetic series over the filtered id range
-      // (id > 5000 of 1..20000); plan-shape and pushed-vs-raw equality
-      // are Spark-side
-      "source_agg_pushdown" ->
-        """SELECT cast(sum(i) as bigint) AS sum_id,
-          |       true AS pushed_ok, true AS equal_ok
-          |FROM range(5001, 20001) t(i)""".stripMargin,
-      // DPP gate: the oracle recomputes the Q1 rowcount from the raw
-      // table (month 1-3); the dynamicpruning plan assertion and the
-      // partitioned-vs-raw equality are Spark-side
-      "layout_partitioned_dpp" ->
-        """SELECT cast(count(*) as bigint) AS n_q1,
-          |       true AS dpp_plan_ok, true AS equal_raw_ok
-          |FROM orders WHERE month(o_orderdate) <= 3""".stripMargin,
-      "dq_profile" ->
-        """SELECT 'o_orderkey' AS col_name,
-          |       cast(count(*) FILTER (o_orderkey IS NULL) as bigint) AS n_nulls,
-          |       cast(count(DISTINCT o_orderkey) as bigint) AS n_distinct,
-          |       cast(min(o_orderkey) as varchar) AS min_val,
-          |       cast(max(o_orderkey) as varchar) AS max_val
-          |FROM orders
-          |UNION ALL
-          |SELECT 'o_custkey',
-          |       cast(count(*) FILTER (o_custkey IS NULL) as bigint),
-          |       cast(count(DISTINCT o_custkey) as bigint),
-          |       cast(min(o_custkey) as varchar),
-          |       cast(max(o_custkey) as varchar)
-          |FROM orders
-          |UNION ALL
-          |SELECT 'o_orderstatus',
-          |       cast(count(*) FILTER (o_orderstatus IS NULL) as bigint),
-          |       cast(count(DISTINCT o_orderstatus) as bigint),
-          |       min(o_orderstatus), max(o_orderstatus)
-          |FROM orders
-          |UNION ALL
-          |SELECT 'o_orderpriority',
-          |       cast(count(*) FILTER (o_orderpriority IS NULL) as bigint),
-          |       cast(count(DISTINCT o_orderpriority) as bigint),
-          |       min(o_orderpriority), max(o_orderpriority)
-          |FROM orders""".stripMargin,
-      // mixture resampling: full integer replay — per-domain counts,
-      // uniform 30%-budget share, bp rate, and the multiplicative-hash
-      // membership test
-      "sample_mixture" ->
-        """WITH c AS (SELECT source, count(*) AS n_domain
-          |           FROM documents GROUP BY source),
-          |t AS (SELECT count(*) AS n, count(DISTINCT source) AS k
-          |      FROM documents),
-          |r AS (SELECT source, n_domain,
-          |             least(10000, ((n * 3 // 10) // k) * 10000 // n_domain)
-          |               AS rate_bp
-          |      FROM c, t)
-          |SELECT r.source, cast(r.n_domain as bigint) AS n_domain,
-          |       cast(r.rate_bp as bigint) AS rate_bp,
-          |       cast(count(*) FILTER (
-          |         (d.doc_id * 2654435761) % 10000 < r.rate_bp) as bigint)
-          |         AS n_sampled
-          |FROM documents d JOIN r ON d.source = r.source
-          |GROUP BY r.source, r.n_domain, r.rate_bp""".stripMargin,
-      // weighted mixture: identical integer replay with the
-      // name-derived non-uniform weights (length(source) % 5 + 1)
-      "sample_mixture_weighted" ->
-        """WITH c AS (SELECT source, count(*) AS n_domain
-          |           FROM documents GROUP BY source),
-          |w AS (SELECT source, length(source) % 5 + 1 AS weight
-          |      FROM (SELECT DISTINCT source FROM documents)),
-          |t AS (SELECT count(*) AS n FROM documents),
-          |wt AS (SELECT cast(sum(weight) as bigint) AS w_total FROM w),
-          |r AS (SELECT c.source, c.n_domain, w.weight,
-          |             least(10000, ((n * 3 // 10) * weight // w_total)
-          |               * 10000 // n_domain) AS rate_bp
-          |      FROM c JOIN w ON c.source = w.source, t, wt)
-          |SELECT r.source, cast(r.n_domain as bigint) AS n_domain,
-          |       cast(r.weight as bigint) AS weight,
-          |       cast(r.rate_bp as bigint) AS rate_bp,
-          |       cast(count(*) FILTER (
-          |         (d.doc_id * 2654435761) % 10000 < r.rate_bp) as bigint)
-          |         AS n_sampled
-          |FROM documents d JOIN r ON d.source = r.source
-          |GROUP BY r.source, r.n_domain, r.weight, r.rate_bp""".stripMargin,
-      // approx profiler gate: nulls/min/max replay exactly; the HLL
-      // tolerance check is Spark-side (the exact ndv is the verifier)
-      "dq_profile_approx" ->
-        """SELECT 'o_orderkey' AS col_name,
-          |       cast(count(*) FILTER (o_orderkey IS NULL) as bigint) AS n_nulls,
-          |       true AS nd_ok,
-          |       cast(min(o_orderkey) as varchar) AS min_val,
-          |       cast(max(o_orderkey) as varchar) AS max_val
-          |FROM orders
-          |UNION ALL
-          |SELECT 'o_custkey',
-          |       cast(count(*) FILTER (o_custkey IS NULL) as bigint),
-          |       true,
-          |       cast(min(o_custkey) as varchar),
-          |       cast(max(o_custkey) as varchar)
-          |FROM orders
-          |UNION ALL
-          |SELECT 'o_orderstatus',
-          |       cast(count(*) FILTER (o_orderstatus IS NULL) as bigint),
-          |       true,
-          |       min(o_orderstatus), max(o_orderstatus)
-          |FROM orders
-          |UNION ALL
-          |SELECT 'o_orderpriority',
-          |       cast(count(*) FILTER (o_orderpriority IS NULL) as bigint),
-          |       true,
-          |       min(o_orderpriority), max(o_orderpriority)
-          |FROM orders""".stripMargin,
-      // rebuild policy: full integer basis-point replay of the ledger
-      // arithmetic over the same deterministic id buckets
-      "index_rebuild_policy" ->
-        """WITH n0 AS (SELECT count(*) AS n0 FROM documents WHERE doc_id % 10 <> 0),
-          |hd AS (SELECT count(*) AS nd FROM documents
-          |       WHERE doc_id % 10 <> 0 AND doc_id % 7 = 0),
-          |ha AS (SELECT count(*) AS na FROM documents WHERE doc_id % 10 = 0),
-          |ld AS (SELECT count(*) AS nd FROM documents
-          |       WHERE doc_id % 10 <> 0 AND doc_id % 97 = 0)
-          |SELECT 'heavy_churn' AS scenario,
-          |       cast(n0 as bigint) AS n_at_build,
-          |       cast(hd.nd as bigint) AS n_deleted,
-          |       cast(ha.na as bigint) AS n_added,
-          |       cast(hd.nd * 10000 // n0 as bigint) AS deleted_bp,
-          |       cast((hd.nd + ha.na) * 10000 // n0 as bigint) AS churn_bp,
-          |       (hd.nd * 10000 // n0 >= 500
-          |         OR (hd.nd + ha.na) * 10000 // n0 >= 2000) AS rebuild_due
-          |FROM n0, hd, ha
-          |UNION ALL
-          |SELECT 'light_churn',
-          |       cast(n0 as bigint),
-          |       cast(ld.nd as bigint),
-          |       cast(0 as bigint),
-          |       cast(ld.nd * 10000 // n0 as bigint),
-          |       cast(ld.nd * 10000 // n0 as bigint),
-          |       (ld.nd * 10000 // n0 >= 500 OR ld.nd * 10000 // n0 >= 2000)
-          |FROM n0, ld""".stripMargin,
-      // streaming probe gate: same batch bucket; the cross-pair set
-      // equality and self-freeness are Spark-side anti-join proofs
-      "dedup_stream_probe" ->
-        """SELECT cast(count(*) as bigint) AS n_batch,
-          |       true AS equal_cross_ok, true AS self_free_ok
-          |FROM documents WHERE doc_id % 10 = 0""".stripMargin,
-      "graph_triangles" ->
-        """WITH ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s
-          |            FROM lineitem WHERE l_partkey % 20 = 0),
-          |e AS (SELECT DISTINCT x.s AS lo, y.s AS hi
-          |      FROM ps x JOIN ps y USING (p) WHERE x.s < y.s),
-          |tri AS (SELECT count(*) AS n_triangles
-          |        FROM e e1 JOIN e e2 ON e1.hi = e2.lo
-          |                  JOIN e e3 ON e3.lo = e1.lo AND e3.hi = e2.hi),
-          |n AS (SELECT count(DISTINCT u) AS n_nodes FROM (
-          |        SELECT lo AS u FROM e UNION ALL SELECT hi FROM e)),
-          |m AS (SELECT count(*) AS n_edges FROM e)
-          |SELECT n_nodes, n_edges, n_triangles FROM n, m, tri""".stripMargin,
-      "sql_subqueries" ->
-        """WITH big AS (SELECT o_custkey, count(*) AS n_orders
-          |             FROM orders GROUP BY o_custkey)
-          |SELECT c.c_custkey, b.n_orders
-          |FROM customer c JOIN big b ON c.c_custkey = b.o_custkey
-          |WHERE EXISTS (
-          |  SELECT 1 FROM orders o
-          |  WHERE o.o_custkey = c.c_custkey
-          |    AND o.o_totalprice * 2 > (SELECT max(o_totalprice) FROM orders))""".stripMargin,
-      "agg_histogram" ->
-        """SELECT cast(floor(l_quantity) as bigint) // 5 AS bucket, count(*) AS n,
-          |       min(cast(floor(l_quantity) as bigint)) AS min_q,
-          |       max(cast(floor(l_quantity) as bigint)) AS max_q
-          |FROM lineitem
-          |GROUP BY 1""".stripMargin,
-      "q4112_part1" -> p1.format("avg_value"),
-      "q4112_part1_shuffle_hash" -> p1.format("avg_value_sh"),
-      "q4112_part1_sort_merge" -> p1.format("avg_value_sm"),
-      "q4112_part1_dense" -> p1.format("avg_value_dense"),
-      "q4112_part1_nlj" ->
-        """SELECT cast(sum(cast(floor(p_retailprice) as bigint) * cast(floor(l_quantity) as bigint))
-          |        // count(*) as bigint) AS avg_value_nlj
-          |FROM lineitem JOIN part ON l_partkey = p_partkey
-          |WHERE p_partkey < 2000 AND l_partkey < 2000""".stripMargin,
-      "q4112_grouped" -> groupedCte,
-      "q4112_part2" ->
-        s"""WITH g AS ($groupedCte)
-           |SELECT cast(sum(avg_value) // count(*) as bigint) AS avg_avg_value FROM g""".stripMargin,
-      "q4112_part2_adaptive" ->
-        s"""WITH g AS ($groupedCte)
-           |SELECT cast(sum(avg_value) // count(*) as bigint) AS avg_avg_value FROM g""".stripMargin,
-      "q4112_part2_dense_agg" ->
-        s"""WITH g AS ($groupedCte)
-           |SELECT cast(sum(avg_value) // count(*) as bigint) AS avg_avg_value FROM g""".stripMargin,
-      "q4112_part2_shared_dense" ->
-        s"""WITH g AS ($groupedCte)
-           |SELECT cast(sum(avg_value) // count(*) as bigint) AS avg_avg_value FROM g""".stripMargin,
-      // raw-parquet adaptive gate: the oracle recomputes the
-      // customers⋈orders avg-of-avgs grouped by the unique o_orderkey;
-      // the plan-label requirement (router MUST pick partial_dense) is
-      // enforced Spark-side — a routing miss throws and the row errors
-      "q4112_part2_shared_dense_parquet" ->
-        """WITH j AS (
-          |  SELECT o.o_orderkey AS grp,
-          |         (c.c_custkey % 1000) * cast(floor(o.o_totalprice) as bigint) AS v
-          |  FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey),
-          |g AS (SELECT grp, cast(sum(v) as bigint) // count(*) AS avg_value
-          |      FROM j GROUP BY grp)
-          |SELECT cast(cast(sum(avg_value) as bigint) // count(*) as bigint)
-          |         AS avg_avg_value
-          |FROM g""".stripMargin,
-      "q4112_part2_packed" ->
-        s"""WITH g AS ($groupedCte)
-           |SELECT cast(sum(avg_value) // count(*) as bigint) AS avg_avg_value FROM g""".stripMargin,
-      // the routed answer must equal the raw-table computation — the
-      // flags are pinned true: a routing miss (plan label wrong) or a
-      // layout/raw divergence turns a literal false and breaks the hash
-      "q4112_layout_routed" ->
-        s"""WITH g AS ($groupedCte)
-           |SELECT cast(sum(avg_value) // count(*) as bigint) AS avg_avg_value,
-           |       true AS plans_agree,
-           |       true AS routed_bucketed_ok,
-           |       true AS routed_joined_ok
-           |FROM g""".stripMargin,
-
-      "join_semi" ->
-        """SELECT c_custkey FROM customer
-          |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin,
-      "join_anti" ->
-        """SELECT o_orderkey FROM orders
-          |WHERE NOT EXISTS (SELECT 1 FROM customer
-          |                  WHERE c_custkey = o_custkey AND c_mktsegment = 'BUILDING')""".stripMargin,
-      "join_outer_count" ->
-        """SELECT c_custkey, count(o_orderkey) AS n_orders
-          |FROM customer LEFT JOIN orders ON o_custkey = c_custkey
-          |GROUP BY c_custkey""".stripMargin,
-      "join_nonequi" ->
-        """SELECT s_suppkey, count(*) AS n_pairs
-          |FROM supplier JOIN nation ON s_nationkey < n_nationkey
-          |GROUP BY s_suppkey""".stripMargin,
-      // compares at the SAME ms granularity as the Spark query
-      // (unix_millis both sides); ties at equal p_ms break to the max
-      // purchase_id, matching Joins.asof's deterministic tie-break
-      "join_asof" ->
-        """WITH c AS (SELECT event_id AS click_id, user_id, epoch_ms(ts) AS click_ms
-          |           FROM events WHERE event_type = 'click'),
-          |     p AS (SELECT event_id AS purchase_id, user_id, epoch_ms(ts) AS p_ms
-          |           FROM events WHERE event_type = 'purchase'),
-          |     m AS (SELECT c.click_id, c.user_id, c.click_ms, max(p.p_ms) AS best_ms
-          |           FROM c LEFT JOIN p ON p.user_id = c.user_id AND p.p_ms <= c.click_ms
-          |           GROUP BY 1, 2, 3)
-          |SELECT m.click_id, m.user_id, m.click_ms,
-          |       coalesce(max(p.purchase_id), -1) AS purchase_id
-          |FROM m LEFT JOIN p ON p.user_id = m.user_id AND p.p_ms = m.best_ms
-          |GROUP BY 1, 2, 3""".stripMargin,
-      // forward direction, 1h tolerance; ties at equal p_ms break to the
-      // max purchase_id, matching Joins.asof's deterministic tie-break
-      "join_asof_fwd" ->
-        """WITH c AS (SELECT event_id AS click_id, user_id, epoch_ms(ts) AS click_ms
-          |           FROM events WHERE event_type = 'click'),
-          |     p AS (SELECT event_id AS purchase_id, user_id, epoch_ms(ts) AS p_ms
-          |           FROM events WHERE event_type = 'purchase'),
-          |     m AS (SELECT c.click_id, c.user_id, c.click_ms, min(p.p_ms) AS best_ms
-          |           FROM c LEFT JOIN p ON p.user_id = c.user_id
-          |             AND p.p_ms >= c.click_ms AND p.p_ms - c.click_ms <= 3600000
-          |           GROUP BY 1, 2, 3)
-          |SELECT m.click_id, m.user_id, m.click_ms,
-          |       coalesce(max(p.purchase_id), -1) AS purchase_id
-          |FROM m LEFT JOIN p ON p.user_id = m.user_id AND p.p_ms = m.best_ms
-          |GROUP BY 1, 2, 3""".stripMargin,
-      "join_range" ->
-        """SELECT r_regionkey, count(*) AS n_rows
-          |FROM lineitem JOIN region
-          |  ON l_quantity >= r_regionkey * 10 AND l_quantity < (r_regionkey + 1) * 10
-          |GROUP BY r_regionkey""".stripMargin,
-      // sessionize replay (same CTE as events_sessionize), then the
-      // naive non-equi overlap self-join the banded plan must equal
-      "join_interval_overlap" ->
-        """WITH e AS (
-          |  SELECT user_id, cast(epoch_ms(ts) as bigint) AS ts_ms,
-          |         lag(cast(epoch_ms(ts) as bigint)) OVER (
-          |           PARTITION BY user_id ORDER BY ts) AS prev_ms
-          |  FROM events),
-          |s AS (
-          |  SELECT user_id, ts_ms,
-          |         sum(CASE WHEN prev_ms IS NULL OR ts_ms - prev_ms > 1800000
-          |                  THEN 1 ELSE 0 END) OVER (
-          |           PARTITION BY user_id ORDER BY ts_ms
-          |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seq
-          |  FROM e),
-          |sess AS (SELECT user_id, min(ts_ms) AS lo, max(ts_ms) AS hi
-          |         FROM s GROUP BY user_id, seq)
-          |SELECT count(*) AS n_pairs,
-          |       cast(sum(least(a.hi, b.hi) - greatest(a.lo, b.lo)) as bigint)
-          |         AS sum_overlap_ms
-          |FROM sess a JOIN sess b
-          |  ON a.user_id < b.user_id AND a.lo <= b.hi AND b.lo <= a.hi""".stripMargin,
-      "join_range_band" ->
-        """SELECT r_regionkey, count(*) AS n_band_rows
-          |FROM lineitem JOIN region
-          |  ON l_quantity >= r_regionkey * 10 AND l_quantity < (r_regionkey + 1) * 10
-          |GROUP BY r_regionkey""".stripMargin,
-      "join_skew_salted" ->
-        """SELECT s_nationkey, count(*) AS n_rows,
-          |       cast(sum(cast(floor(l_quantity) as bigint)) as bigint) AS sum_qty
-          |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-          |GROUP BY s_nationkey""".stripMargin,
-
-      "join_full_outer" ->
-        """WITH c AS (SELECT c_nationkey AS nk, count(*) AS n_cust
-          |           FROM customer WHERE c_acctbal < -500 GROUP BY 1),
-          |     s AS (SELECT s_nationkey AS nk, count(*) AS n_supp
-          |           FROM supplier WHERE s_acctbal < -500 GROUP BY 1)
-          |SELECT coalesce(c.nk, s.nk) AS nationkey,
-          |       coalesce(n_cust, 0) AS n_cust,
-          |       coalesce(n_supp, 0) AS n_supp
-          |FROM c FULL JOIN s ON c.nk = s.nk""".stripMargin,
-      "join_bloom_prefilter" ->
-        """SELECT s_nationkey, count(*) AS n_rows,
-          |       cast(sum(cast(floor(l_quantity) as bigint)) as bigint) AS sum_qty
-          |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-          |WHERE s_nationkey < 5
-          |GROUP BY s_nationkey""".stripMargin,
-      "agg_rollup" ->
-        """SELECT l_returnflag, l_linestatus,
-          |       cast(sum(cast(floor(l_quantity) as bigint)) as bigint) AS sum_qty,
-          |       count(*) AS cnt
-          |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-      "agg_cube" ->
-        """SELECT l_returnflag, l_linestatus,
-          |       cast(sum(cast(floor(l_quantity) as bigint)) as bigint) AS sum_qty,
-          |       count(*) AS cnt
-          |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
-      "agg_salted_skew" ->
-        """SELECT l_suppkey AS k,
-          |       cast(sum(cast(floor(l_quantity) as bigint)) as bigint) AS sum_value,
-          |       count(*) AS cnt
-          |FROM lineitem GROUP BY l_suppkey""".stripMargin,
-      "agg_topk_global" ->
-        """SELECT l_orderkey, l_linenumber, cast(floor(l_extendedprice) as bigint) AS price
-          |FROM lineitem
-          |ORDER BY price DESC, l_orderkey ASC, l_linenumber ASC
-          |LIMIT 10""".stripMargin,
-      "agg_topk_per_group" ->
-        """SELECT l_returnflag, l_orderkey, l_linenumber, price FROM (
-          |  SELECT l_returnflag, l_orderkey, l_linenumber,
-          |         cast(floor(l_extendedprice) as bigint) AS price,
-          |         row_number() OVER (PARTITION BY l_returnflag
-          |           ORDER BY floor(l_extendedprice) DESC, l_orderkey ASC, l_linenumber ASC) AS rn
-          |  FROM lineitem) WHERE rn <= 3""".stripMargin,
-      "agg_window_running" ->
-        """SELECT l_suppkey, l_orderkey, l_linenumber,
-          |       cast(floor(l_quantity) as bigint) AS qty,
-          |       cast(sum(cast(floor(l_quantity) as bigint)) OVER (
-          |         PARTITION BY l_suppkey ORDER BY l_orderkey, l_linenumber) as bigint) AS running_qty
-          |FROM lineitem""".stripMargin,
-      "distinct_exact" ->
-        """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_distinct
-          |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-      // generator contract gate: the fixed-seed config makes both the
-      // engine's and the generator-oracle's answer a deterministic
-      // constant; pinning them here turns `assert(gen_res == run_res)`
-      // (q4112_main.c:127) into a regression gate on generator AND engine
-      "gen_q4112" ->
-        """SELECT cast(246440 AS BIGINT) AS engine_answer,
-          |       cast(246440 AS BIGINT) AS gen_answer,
-          |       true AS answers_equal""".stripMargin,
-      // sketch-invariant gates: the oracle recomputes the exact ndv and
-      // expects the within-tolerance boolean to be true — a broken
-      // estimator fails the hash compare
-      "distinct_fm" ->
-        """SELECT count(DISTINCT l_orderkey * 10 + l_linenumber) AS n_distinct_rowkey,
-          |       true AS fm_ok
-          |FROM lineitem""".stripMargin,
-      // KMV: md5 priorities are engine-portable, so the oracle replays
-      // the WHOLE estimator (not just the exact side + a true literal)
-      "distinct_kmv" ->
-        """WITH p AS (SELECT DISTINCT
-          |    CAST(('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) AS pri
-          |  FROM lineitem),
-          |sk AS (SELECT pri FROM p ORDER BY pri LIMIT 256),
-          |st AS (SELECT count(*) AS n_sk, max(pri) AS v_k FROM sk),
-          |est AS (SELECT CASE WHEN n_sk < 256 THEN CAST(n_sk AS BIGINT)
-          |    ELSE CAST((255::HUGEINT * 1152921504606846976::HUGEINT) // v_k AS BIGINT)
-          |  END AS ndv_est FROM st),
-          |e AS (SELECT count(DISTINCT l_orderkey) AS exact FROM lineitem)
-          |SELECT ndv_est, CAST(exact AS BIGINT) AS ndv_exact,
-          |       abs(ndv_est - exact) * 100 <= exact * 25 AS err_ok
-          |FROM est, e""".stripMargin,
-      "distinct_hll" ->
-        """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_distinct,
-          |       true AS hll_ok
-          |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-      "func_variant" ->
-        """SELECT event_type, count(*) AS n,
-          |       cast(sum(k) as bigint) AS sum_k,
-          |       min(k) AS min_k, max(k) AS max_k
-          |FROM (SELECT event_type,
-          |        CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-          |      FROM events WHERE props IS NOT NULL)
-          |GROUP BY event_type""".stripMargin,
-      "func_map" ->
-        """SELECT l_orderkey, l_linenumber,
-          |       CAST(2 AS BIGINT) AS n_entries,
-          |       cast(floor(l_quantity) as bigint) AS q_val,
-          |       cast(floor(l_extendedprice) as bigint) * 2 AS p_doubled
-          |FROM lineitem""".stripMargin,
-      "sql_recursive" ->
-        """WITH RECURSIVE chain(node, cur, depth) AS (
-          |  SELECT n_nationkey, CAST(n_nationkey AS BIGINT), 0 FROM nation
-          |  UNION ALL
-          |  SELECT node, cur // 2, depth + 1 FROM chain WHERE cur > 0)
-          |SELECT node, max(depth) AS depth_to_root,
-          |       cast(sum(cur) as bigint) AS ancestor_key_sum
-          |FROM chain GROUP BY node""".stripMargin,
-      "sql_recursive_cyclic" ->
-        s"""WITH RECURSIVE reach(start, node, path) AS (
-          |    SELECT n_nationkey, n_nationkey, [n_nationkey]
-          |    FROM nation
-          |  UNION ALL
-          |    SELECT r.start, e.dst, list_append(r.path, e.dst)
-          |    FROM reach r JOIN (
-          |      SELECT n_nationkey AS src, (2 * n_nationkey + 1) % 25 AS dst
-          |      FROM nation
-          |      UNION ALL
-          |      SELECT n_nationkey, (3 * n_nationkey + 2) % 25 FROM nation
-          |    ) e ON r.node = e.src
-          |    WHERE NOT list_contains(r.path, e.dst)
-          |      AND len(r.path) < $recursiveDepthCap)
-          |SELECT start, count(DISTINCT node) AS n_reachable,
-          |       cast(max(len(path)) as bigint) AS max_path_len
-          |FROM reach GROUP BY start""".stripMargin,
-      "func_variant_array" ->
-        """SELECT event_type, count(*) AS n,
-          |       cast(sum(cast(floor(value * 1000) as bigint)) as bigint) AS sum_a0,
-          |       cast(sum(cast(floor(value * 1000) as bigint) + 7) as bigint) AS sum_d,
-          |       cast(0 as bigint) AS n_wrong_nonnull,
-          |       true AS s_ok
-          |FROM events GROUP BY 1""".stripMargin,
-      "agg_mode" ->
-        """SELECT l_returnflag, mode_qty, n FROM (
-          |  SELECT l_returnflag, cast(floor(l_quantity) as bigint) AS mode_qty,
-          |         count(*) AS n,
-          |         row_number() OVER (PARTITION BY l_returnflag
-          |           ORDER BY count(*) DESC, cast(floor(l_quantity) as bigint) ASC) AS rk
-          |  FROM lineitem GROUP BY 1, 2)
-          |WHERE rk = 1""".stripMargin,
-      // gated incremental maintenance: full values recomputed by the
-      // oracle; the merged-equals-full boolean is Spark-side
-      "agg_incremental" ->
-        """SELECT l_returnflag,
-          |       cast(sum(cast(floor(l_quantity) as bigint)) as bigint) AS sum_qty,
-          |       count(*) AS n_rows, true AS merge_equal_ok
-          |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-      "agg_corr_regr" ->
-        """SELECT l_returnflag,
-          |  round(corr(floor(l_extendedprice), floor(l_quantity)), 6) AS corr_pq,
-          |  round(covar_pop(floor(l_extendedprice), floor(l_quantity)), 6) AS covar_pq,
-          |  round(regr_slope(floor(l_extendedprice), floor(l_quantity)), 6) AS slope,
-          |  round(regr_intercept(floor(l_extendedprice), floor(l_quantity)), 6) AS intercept,
-          |  round(stddev_pop(floor(l_quantity)), 6) AS sd_q
-          |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-      // gated mergeable-sketch invariants: exact count recomputed; the
-      // union-vs-direct equality and accuracy booleans are Spark-side
-      "distinct_hll_merge" ->
-        """SELECT count(DISTINCT user_id) AS n_exact,
-          |       true AS merge_lossless_ok, true AS accuracy_ok
-          |FROM events""".stripMargin,
-      // gated DSv2 source: the equality booleans are computed Spark-side
-      // (the oracle engine cannot evaluate the xxhash64 fold)
-      "source_gen_v2" ->
-        """SELECT CAST(20000 AS BIGINT) AS n_rows,
-          |       true AS agg_agree_ok, true AS rowset_equal_ok""".stripMargin,
-      "table_diff" ->
-        """WITH oldv AS (
-          |  SELECT o_orderkey AS k,
-          |         concat_ws('|', o_orderstatus, o_orderpriority) AS p
-          |  FROM orders WHERE o_orderkey % 97 <> 0),
-          |newv AS (
-          |  SELECT o_orderkey AS k, concat_ws('|', o_orderstatus,
-          |    CASE WHEN o_orderkey % 101 = 0 THEN '9-CHANGED'
-          |         ELSE o_orderpriority END) AS p
-          |  FROM orders WHERE o_orderkey % 89 <> 0)
-          |SELECT CASE WHEN o.p IS NULL THEN 'added'
-          |            WHEN n.p IS NULL THEN 'removed'
-          |            WHEN o.p <> n.p THEN 'changed'
-          |            ELSE 'unchanged' END AS diff_class,
-          |       count(*) AS n_rows
-          |FROM oldv o FULL OUTER JOIN newv n ON o.k = n.k
-          |GROUP BY 1""".stripMargin,
-      // identical md5 and 60-bit prefix on both engines; bit_xor is
-      // order-independent so partitioning never changes the value
-      "agg_checksum" ->
-        """SELECT count(*) AS n_rows,
-          |       bit_xor(CAST(('0x' || substr(md5(concat_ws('|',
-          |         o_orderkey, o_custkey, o_orderstatus, o_orderpriority)),
-          |         1, 15)) AS BIGINT)) AS checksum
-          |FROM orders""".stripMargin,
-      // identical sample (same md5 priority, same LIMIT), identical
-      // type-1 quantile definition, identical integer DKW bound
-      "agg_quantile_sample" ->
-        """WITH s AS (
-          |  SELECT cast(floor(value) as bigint) AS v, event_id
-          |  FROM events
-          |  ORDER BY CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT) ASC,
-          |           event_id ASC
-          |  LIMIT 1024),
-          |r AS (SELECT v, row_number() OVER (ORDER BY v ASC, event_id ASC) AS rk,
-          |             count(*) OVER () AS m FROM s),
-          |est AS (SELECT
-          |  max(CASE WHEN rk = ceil(0.5 * m) THEN v END) AS p50_est,
-          |  max(CASE WHEN rk = ceil(0.9 * m) THEN v END) AS p90_est,
-          |  max(CASE WHEN rk = ceil(0.99 * m) THEN v END) AS p99_est FROM r),
-          |f AS (SELECT cast(floor(value) as bigint) AS v FROM events)
-          |SELECT count(*) AS n,
-          |       max(e.p50_est) AS p50_est, max(e.p90_est) AS p90_est,
-          |       max(e.p99_est) AS p99_est,
-          |       (abs(100 * sum(CASE WHEN f.v <= e.p50_est THEN 1 ELSE 0 END)
-          |            - 50 * count(*)) <= 8 * count(*)) AS p50_ok,
-          |       (abs(100 * sum(CASE WHEN f.v <= e.p90_est THEN 1 ELSE 0 END)
-          |            - 90 * count(*)) <= 8 * count(*)) AS p90_ok,
-          |       (abs(100 * sum(CASE WHEN f.v <= e.p99_est THEN 1 ELSE 0 END)
-          |            - 99 * count(*)) <= 8 * count(*)) AS p99_ok
-          |FROM f CROSS JOIN est e""".stripMargin,
-      "agg_percentile_approx" ->
-        """SELECT l_returnflag,
-          |       round(quantile_cont(floor(l_quantity), 0.25), 6) AS p25,
-          |       round(quantile_cont(floor(l_quantity), 0.5), 6) AS p50,
-          |       round(quantile_cont(floor(l_quantity), 0.95), 6) AS p95,
-          |       true AS approx_ok
-          |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-      // gated ANN quality metric: constant shape, but recall_ok is
-      // computed from the IVF-vs-brute join — a recall drop below the
-      // stated floor flips it to false and fails the gate
-      "sim_recall_ivf" ->
-        "SELECT CAST(5 AS BIGINT) AS k, 0.375 AS recall_floor, true AS recall_ok",
-      "sim_topk_pq" ->
-        """SELECT vec_id AS probe_id, CAST(10 AS BIGINT) AS n_results,
-          |       true AS ranks_ok, true AS recall_ok,
-          |       true AS pq_error_monotone_ok
-          |FROM embeddings WHERE vec_id <= 5""".stripMargin,
-      "sim_topk_ivfpq" ->
-        """SELECT vec_id AS probe_id, CAST(10 AS BIGINT) AS n_results,
-          |       true AS ranks_ok, true AS recall_ok
-          |FROM embeddings WHERE vec_id <= 5""".stripMargin,
-      "sim_topk_ivfpq_trained" ->
-        """SELECT vec_id AS probe_id, CAST(10 AS BIGINT) AS n_results,
-          |       true AS ranks_ok, true AS recall_ok, true AS trained_gain_ok
-          |FROM embeddings WHERE vec_id <= 5""".stripMargin,
-      // gated trained k-means: constant expected shape; the booleans are
-      // computed Spark-side (monotone Lloyd's inertia, codegen-vs-HOF
-      // argmin agreement, cluster-count bound) and flip to false on any
-      // invariant break
-      "embed_kmeans" ->
-        """SELECT CAST(8 AS INT) AS k, count(*) AS n_points,
-          |       true AS argmin_consistent_ok, true AS inertia_monotone_ok,
-          |       true AS cluster_count_ok
-          |FROM embeddings""".stripMargin,
-      // gated diversity sampler: every cluster must contribute exactly
-      // min(per_cluster, cluster size) rows
-      "sample_diverse" ->
-        "SELECT CAST(5 AS INT) AS per_cluster, true AS strata_ok",
-      // gated IVF top-k: one row per probe, constant expected shape;
-      // ranks_ok/recall_ok are computed Spark-side from the IVF-vs-brute
-      // comparison and flip to false on any structural or recall break
-      "sim_topk_ivf" ->
-        """SELECT vec_id AS probe_id, CAST(5 AS BIGINT) AS n_results,
-          |       true AS ranks_ok, true AS recall_ok
-          |FROM embeddings WHERE vec_id <= 5""".stripMargin,
-      // kNN-graph gate: constant shape over EVERY vector (each source
-      // must produce exactly k well-ranked neighbors and the global
-      // recall floor must hold)
-      "sim_knn_graph" ->
-        """SELECT vec_id AS src_id, CAST(5 AS BIGINT) AS n_results,
-          |       true AS ranks_ok, true AS recall_ok
-          |FROM embeddings""".stripMargin,
-      // trained-IVF gate: same constant shape, plus the trained-beats-
-      // pseudo recall comparison computed Spark-side
-      "sim_topk_ivf_trained" ->
-        """SELECT vec_id AS probe_id, CAST(5 AS BIGINT) AS n_results,
-          |       true AS ranks_ok, true AS recall_ok, true AS trained_gain_ok
-          |FROM embeddings WHERE vec_id <= 5""".stripMargin,
-      "agg_pivot" ->
-        """SELECT l_returnflag,
-          |       sum(cast(floor(l_quantity) as bigint))
-          |         FILTER (l_linestatus = 'F')::BIGINT AS "F",
-          |       sum(cast(floor(l_quantity) as bigint))
-          |         FILTER (l_linestatus = 'O')::BIGINT AS "O"
-          |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-      "window_firstlast" ->
-        """SELECT DISTINCT l_returnflag,
-          |       first_value(qty) OVER w AS first_qty,
-          |       last_value(qty) OVER w AS last_qty,
-          |       nth_value(qty, 3) OVER w AS third_qty
-          |FROM (SELECT l_returnflag, l_orderkey, l_linenumber,
-          |             cast(floor(l_quantity) as bigint) AS qty FROM lineitem)
-          |WINDOW w AS (PARTITION BY l_returnflag
-          |             ORDER BY qty, l_orderkey, l_linenumber
-          |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin,
-      "q4112_sql" ->
-        """WITH g AS (
-          |  SELECT l_suppkey,
-          |         cast(sum(cast(floor(p_retailprice) as bigint) * cast(floor(l_quantity) as bigint))
-          |              // count(*) as bigint) AS g_avg
-          |  FROM lineitem JOIN part ON l_partkey = p_partkey
-          |  GROUP BY l_suppkey)
-          |SELECT cast(sum(g_avg) // count(*) as bigint) AS avg_avg_value FROM g""".stripMargin,
-      "agg_percentiles" ->
-        """SELECT l_returnflag,
-          |       quantile_cont(floor(l_quantity), 0.25) AS p25,
-          |       quantile_cont(floor(l_quantity), 0.5) AS p50,
-          |       quantile_cont(floor(l_quantity), 0.95) AS p95
-          |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-      "agg_grouping_sets" ->
-        """SELECT l_returnflag, l_linestatus,
-          |       cast(grouping(l_returnflag) as bigint) AS g_flag,
-          |       cast(grouping(l_linestatus) as bigint) AS g_status,
-          |       cast(sum(cast(floor(l_quantity) as bigint)) as bigint) AS sum_qty,
-          |       count(*) AS cnt
-          |FROM lineitem
-          |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin,
-      "agg_unpivot" ->
-        """SELECT l_returnflag, metric,
-          |       cast(sum(v) as bigint) AS sum_value, count(*) AS cnt
-          |FROM (
-          |  SELECT l_returnflag, 'qty' AS metric,
-          |         cast(floor(l_quantity) as bigint) AS v FROM lineitem
-          |  UNION ALL SELECT l_returnflag, 'extprice',
-          |         cast(floor(l_extendedprice) as bigint) FROM lineitem
-          |  UNION ALL SELECT l_returnflag, 'tax_pct',
-          |         cast(floor(l_tax * 100) as bigint) FROM lineitem)
-          |GROUP BY l_returnflag, metric""".stripMargin,
-      "window_ntile" ->
-        """WITH r AS (
-          |  SELECT l_returnflag, cast(floor(l_quantity) as bigint) AS qty,
-          |         ntile(4) OVER w AS tile, percent_rank() OVER w AS pr
-          |  FROM lineitem
-          |  WINDOW w AS (PARTITION BY l_returnflag
-          |               ORDER BY cast(floor(l_quantity) as bigint),
-          |                        l_orderkey, l_linenumber))
-          |SELECT l_returnflag, cast(tile as bigint) AS tile, count(*) AS cnt,
-          |       cast(sum(qty) as bigint) AS sum_qty,
-          |       min(qty) AS min_qty, max(qty) AS max_qty, max(pr) AS max_pr
-          |FROM r GROUP BY 1, 2""".stripMargin,
-      "window_range_frame" ->
-        """SELECT event_id, user_id, epoch_ms(ts) AS ts_ms,
-          |       count(*) OVER w AS n_prev_10m,
-          |       cast(sum(cast(floor(value * 1000) as bigint)) OVER w as bigint)
-          |         AS sum_value_milli_10m
-          |FROM events
-          |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ms(ts)
-          |             RANGE BETWEEN 600000 PRECEDING AND CURRENT ROW)""".stripMargin,
-      "set_ops" ->
-        """(SELECT o_custkey FROM orders
-          | INTERSECT
-          | SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-          |EXCEPT
-          |SELECT c_custkey FROM customer WHERE c_acctbal < 0""".stripMargin,
-
-      "set_ops_all" ->
-        """WITH a AS (SELECT o_custkey AS k FROM orders),
-          |b AS (SELECT c_custkey AS k FROM customer
-          |      WHERE c_mktsegment = 'BUILDING'
-          |      UNION ALL
-          |      SELECT c_custkey FROM customer
-          |      WHERE c_mktsegment = 'BUILDING' AND c_acctbal > 5000),
-          |i AS (SELECT k FROM a INTERSECT ALL SELECT k FROM b),
-          |x AS (SELECT k FROM a EXCEPT ALL SELECT k FROM b)
-          |SELECT 'intersect_all' AS op, k, count(*) AS n FROM i GROUP BY k
-          |UNION ALL
-          |SELECT 'except_all' AS op, k, count(*) AS n FROM x GROUP BY k""".stripMargin,
-
-      "sql_pivot" ->
-        """WITH b AS (
-          |  SELECT o_orderstatus, substring(o_orderpriority, 1, 1) AS prio,
-          |         cast(floor(o_totalprice) as bigint) AS v
-          |  FROM orders)
-          |SELECT o_orderstatus,
-          |       cast(sum(CASE WHEN prio = '1' THEN v END) as bigint) AS p1,
-          |       cast(sum(CASE WHEN prio = '2' THEN v END) as bigint) AS p2,
-          |       cast(sum(CASE WHEN prio = '3' THEN v END) as bigint) AS p3
-          |FROM b GROUP BY o_orderstatus""".stripMargin,
-
-      // the oracle recomputes the LCG metadata from doc_id (the media
-      // view's arithmetic is engine-portable by design) and pins
-      // pruned_ok — a plan that starts reading the payload column
-      // flips the boolean and fails the hash gate
-      "multimodal_prune" ->
-        """SELECT 'image' AS modality, count(*) AS n_media,
-          |       cast(sum(((doc_id * 48271 + 11) % 1920 + 1) *
-          |                ((doc_id * 69621 + 7) % 1080 + 1)) as bigint)
-          |         AS sum_pixels,
-          |       cast(max((doc_id * 16807 + 3) % 600000) as bigint)
-          |         AS max_duration_ms,
-          |       true AS pruned_ok
-          |FROM documents""".stripMargin,
-
-      "agg_weighted_percentile" ->
-        """WITH g AS (
-          |  SELECT l_returnflag, cast(floor(l_extendedprice) as bigint) AS v,
-          |         cast(sum(cast(floor(l_quantity) as bigint)) as bigint) AS w
-          |  FROM lineitem GROUP BY 1, 2),
-          |c AS (
-          |  SELECT l_returnflag, v, w,
-          |         cast(sum(w) OVER (PARTITION BY l_returnflag ORDER BY v
-          |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          |           as bigint) AS cum,
-          |         cast(sum(w) OVER (PARTITION BY l_returnflag) as bigint) AS tot
-          |  FROM g)
-          |SELECT l_returnflag, cast(min(v) as bigint) AS w_median,
-          |       cast(max(tot) as bigint) AS total_weight
-          |FROM c WHERE cum * 2 >= tot GROUP BY l_returnflag""".stripMargin,
-
-      "sample_epoch_shuffle" ->
-        """WITH x AS (
-          |  SELECT doc_id, epoch,
-          |         CAST(('0x' || substr(md5(doc_id || '|' || epoch), 1, 8))
-          |              AS BIGINT) AS prio
-          |  FROM documents, unnest([0, 1, 2]) AS t(epoch))
-          |SELECT cast(epoch as bigint) AS epoch, doc_id,
-          |       cast("rank" as bigint) AS "rank"
-          |FROM (
-          |  SELECT *, row_number() OVER (PARTITION BY epoch
-          |    ORDER BY prio, doc_id) AS "rank"
-          |  FROM x)
-          |WHERE "rank" <= 20""".stripMargin,
-
-      "events_cum_distinct" ->
-        """WITH e AS (
-          |  SELECT user_id, cast(epoch_ms(ts) as bigint) AS ts_ms,
-          |         event_id, event_type
-          |  FROM events),
-          |f AS (
-          |  SELECT user_id, ts_ms, event_id,
-          |         CASE WHEN row_number() OVER (
-          |                PARTITION BY user_id, event_type
-          |                ORDER BY ts_ms, event_id) = 1
-          |              THEN 1 ELSE 0 END AS first_seen
-          |  FROM e)
-          |SELECT user_id, event_id,
-          |       cast(sum(first_seen) OVER (PARTITION BY user_id
-          |         ORDER BY ts_ms, event_id
-          |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          |         as bigint) AS cum_types
-          |FROM f""".stripMargin,
-
-      "distinct_bitmap" ->
-        """WITH li AS (SELECT l_returnflag, l_partkey FROM lineitem),
-          |bm AS (
-          |  SELECT l_returnflag, l_partkey // 64 AS bucket,
-          |         bit_or(1::UBIGINT << cast(l_partkey % 64 as int)) AS w
-          |  FROM li GROUP BY 1, 2),
-          |n AS (
-          |  SELECT l_returnflag,
-          |         cast(sum(bit_count(w)) as bigint) AS ndv_bitmap
-          |  FROM bm GROUP BY 1),
-          |e AS (
-          |  SELECT l_returnflag, count(DISTINCT l_partkey) AS ndv_exact
-          |  FROM li GROUP BY 1)
-          |SELECT n.l_returnflag, ndv_bitmap,
-          |       (ndv_bitmap = ndv_exact) AS eq_ok
-          |FROM n JOIN e ON n.l_returnflag = e.l_returnflag""".stripMargin,
-      "events_lag_delta" ->
-        """SELECT user_id, event_id, epoch_ns(ts) // 1000000 AS ts_ms,
-          |       coalesce(epoch_ns(ts) // 1000000
-          |         - lag(epoch_ns(ts) // 1000000) OVER (
-          |             PARTITION BY user_id
-          |             ORDER BY epoch_ns(ts) // 1000000, event_id), -1) AS delta_ms
-          |FROM events""".stripMargin,
-
-      // ms granularity on both comparands (unix_millis / epoch_ms)
-      "events_funnel" ->
-        """WITH c AS (SELECT user_id, min(epoch_ms(ts)) AS first_click_ms
-          |           FROM events WHERE event_type = 'click' GROUP BY 1),
-          |     p AS (SELECT c.user_id, min(epoch_ms(e.ts)) AS first_purchase_ms
-          |           FROM c JOIN events e
-          |             ON e.user_id = c.user_id AND e.event_type = 'purchase'
-          |            AND epoch_ms(e.ts) >= c.first_click_ms
-          |           GROUP BY 1)
-          |SELECT c.user_id, c.first_click_ms,
-          |       coalesce(p.first_purchase_ms, -1) AS first_purchase_ms
-          |FROM c LEFT JOIN p ON p.user_id = c.user_id""".stripMargin,
-
-      "dedup_exact" ->
-        """SELECT md5(lower(regexp_replace(text, '[\t\n\x0b\f\r ]+', ' ', 'g'))) AS content_hash,
-          |       min(doc_id) AS keep_id, count(*) AS n_copies
-          |FROM documents GROUP BY 1""".stripMargin,
-
-      // pairs only — the cosine VALUE differs between engines in its
-      // last ulps (float vs double accumulation); the pair SET is
-      // stable: min |cos − 0.25| on this data ≈ 8e-6 vs ~1e-7 noise
-      "dedup_embedding_exact" ->
-        """SELECT a.vec_id AS id_a, b.vec_id AS id_b
-          |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-          |WHERE list_cosine_similarity(a.embedding::DOUBLE[],
-          |                             b.embedding::DOUBLE[]) >= 0.25""".stripMargin,
-
-      // exact all-pairs Jaccard over the FULL corpus: valid as the LSH
-      // oracle because (a) minhashPairs re-verifies candidates with
-      // exact Jaccard → output ⊆ this set, (b) 32×2 banding misses a
-      // j ≥ 0.5 pair with prob (1−j²)^32 ≤ 1e-4 → equality on this
-      // corpus (deterministic seeded hashes; verified at sf0.001/0.01/0.1)
-      "dedup_minhash" ->
-        """WITH d AS (
-          |  SELECT doc_id, lower(regexp_replace(text, '[\t\n\x0b\f\r ]+', ' ', 'g')) AS t
-          |  FROM documents WHERE doc_id < 500),
-          |g AS (
-          |  SELECT doc_id,
-          |         CASE WHEN length(t) < 5 THEN [t]
-          |              ELSE list_distinct([substr(t, i, 5) for i in range(1, length(t) - 3)]) END AS sh
-          |  FROM d)
-          |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-          |       len(list_intersect(a.sh, b.sh))::DOUBLE /
-          |         (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jaccard
-          |FROM g a JOIN g b ON a.doc_id < b.doc_id
-          |WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
-          |      (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5""".stripMargin,
-      "dedup_ngram" ->
-        """WITH d AS (
-          |  SELECT doc_id, lower(regexp_replace(text, '[\t\n\x0b\f\r ]+', ' ', 'g')) AS t
-          |  FROM documents WHERE doc_id < 200),
-          |g AS (
-          |  SELECT doc_id,
-          |         CASE WHEN length(t) < 5 THEN [t]
-          |              ELSE list_distinct([substr(t, i, 5) for i in range(1, length(t) - 3)]) END AS sh
-          |  FROM d)
-          |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-          |       len(list_intersect(a.sh, b.sh))::DOUBLE /
-          |         (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jaccard
-          |FROM g a JOIN g b ON a.doc_id < b.doc_id
-          |WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
-          |      (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.7""".stripMargin,
-      // sketch-invariant gates (same recipe as distinct_fm /
-      // sim_recall_ivf): the oracle recomputes the exact-counterpart
-      // count from the raw text/vectors; the booleans are computed by
-      // the Spark query from its own exhaustive/exact verification
-      // joins, so a broken banding, screen, or sketch flips one to
-      // false and fails the hash compare
-      "dedup_simhash" ->
-        """WITH d AS (
-          |  SELECT doc_id, lower(regexp_replace(text, '[\t\n\x0b\f\r ]+', ' ', 'g')) AS t
-          |  FROM documents WHERE doc_id < 500),
-          |g AS (
-          |  SELECT doc_id,
-          |         CASE WHEN length(t) < 5 THEN [t]
-          |              ELSE list_distinct([substr(t, i, 5) for i in range(1, length(t) - 3)]) END AS sh
-          |  FROM d)
-          |SELECT count(*) AS n_near09, true AS band_ok, true AS prec_ok
-          |FROM g a JOIN g b ON a.doc_id < b.doc_id
-          |WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
-          |      (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.9""".stripMargin,
-      "dedup_winnow" ->
-        """WITH d AS (
-          |  SELECT doc_id, lower(regexp_replace(text, '[\t\n\x0b\f\r ]+', ' ', 'g')) AS t
-          |  FROM documents WHERE doc_id < 200),
-          |g AS (
-          |  SELECT doc_id,
-          |         CASE WHEN length(t) < 5 THEN [t]
-          |              ELSE list_distinct([substr(t, i, 5) for i in range(1, length(t) - 3)]) END AS sh
-          |  FROM d)
-          |SELECT count(*) AS n_r08, true AS cover_ok, true AS prec_ok
-          |FROM g a JOIN g b ON a.doc_id < b.doc_id
-          |WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
-          |      (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.8""".stripMargin,
-      "dedup_embedding" ->
-        """SELECT count(*) AS n_exact_pairs, true AS subset_ok, true AS recall_ok
-          |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-          |WHERE list_cosine_similarity(a.embedding::DOUBLE[],
-          |                             b.embedding::DOUBLE[]) >= 0.25""".stripMargin,
-      // gated SemDeDup: same exact-pair count as dedup_embedding;
-      // subset_ok/recall_ok computed Spark-side (within-cluster pairs vs
-      // the exact set; the recall floor is 1/k — arbitrary routing)
-      "dedup_semantic" ->
-        """SELECT count(*) AS n_exact_pairs, true AS subset_ok, true AS recall_ok
-          |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-          |WHERE list_cosine_similarity(a.embedding::DOUBLE[],
-          |                             b.embedding::DOUBLE[]) >= 0.25""".stripMargin,
-      // winnow-sketch size bounds: n_windows and n_shingles recomputed
-      // from the text, bounds_ok expected true (see the query's scaladoc)
-      "text_fingerprint" ->
-        """WITH d AS (
-          |  SELECT doc_id, lower(regexp_replace(text, '[\t\n\x0b\f\r ]+', ' ', 'g')) AS t
-          |  FROM documents),
-          |g AS (
-          |  SELECT doc_id, length(t) AS normlen,
-          |         CASE WHEN length(t) < 5 THEN [t]
-          |              ELSE list_distinct([substr(t, i, 5) for i in range(1, length(t) - 3)]) END AS sh
-          |  FROM d)
-          |SELECT doc_id,
-          |       greatest(greatest(normlen - 4, 0) - 3, 0)::BIGINT AS n_windows,
-          |       len(sh)::BIGINT AS n_shingles,
-          |       true AS bounds_ok
-          |FROM g""".stripMargin,
-
-      // same closure as dedup_cluster; losers = non-representative
-      // members, kept corpus = everything else
-      "dedup_keep" ->
-        """WITH RECURSIVE
-          |dd AS (SELECT doc_id, lower(regexp_replace(text, '[\t\n\x0b\f\r ]+', ' ', 'g')) AS t
-          |       FROM documents WHERE doc_id < 500),
-          |g AS (SELECT doc_id,
-          |        CASE WHEN length(t) < 5 THEN [t]
-          |             ELSE list_distinct([substr(t, i, 5) for i in range(1, length(t) - 3)]) END AS sh
-          |      FROM dd),
-          |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          |      FROM g a JOIN g b ON a.doc_id < b.doc_id
-          |      WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
-          |            (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5),
-          |e AS (SELECT id_a AS s, id_b AS d FROM p UNION SELECT id_b, id_a FROM p),
-          |reach(s, d) AS (SELECT s, d FROM e
-          |                UNION
-          |                SELECT r.s, e.d FROM reach r JOIN e ON r.d = e.s),
-          |labels AS (SELECT s AS node, least(s, min(d)) AS cluster_id
-          |           FROM reach GROUP BY s)
-          |SELECT count(*) AS n_docs_kept,
-          |       cast(sum(length(text)) as bigint) AS n_chars_kept
-          |FROM documents
-          |WHERE doc_id < 500
-          |  AND doc_id NOT IN (SELECT node FROM labels WHERE node <> cluster_id)""".stripMargin,
-
-      // transitive closure over the SAME pair set the Spark side builds
-      // (dedup_ngram semantics at n=5, t=0.5, doc_id < 500); cluster_id =
-      // min id per component on both sides
-      "dedup_cluster" ->
-        """WITH RECURSIVE
-          |dd AS (SELECT doc_id, lower(regexp_replace(text, '[\t\n\x0b\f\r ]+', ' ', 'g')) AS t
-          |       FROM documents WHERE doc_id < 500),
-          |g AS (SELECT doc_id,
-          |        CASE WHEN length(t) < 5 THEN [t]
-          |             ELSE list_distinct([substr(t, i, 5) for i in range(1, length(t) - 3)]) END AS sh
-          |      FROM dd),
-          |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          |      FROM g a JOIN g b ON a.doc_id < b.doc_id
-          |      WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
-          |            (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5),
-          |e AS (SELECT id_a AS s, id_b AS d FROM p UNION SELECT id_b, id_a FROM p),
-          |reach(s, d) AS (SELECT s, d FROM e
-          |                UNION
-          |                SELECT r.s, e.d FROM reach r JOIN e ON r.d = e.s),
-          |labels AS (SELECT s AS node, least(s, min(d)) AS cluster_id
-          |           FROM reach GROUP BY s)
-          |SELECT cluster_id, count(*) AS n_members, max(node) AS max_member
-          |FROM labels GROUP BY cluster_id""".stripMargin,
-
-      "dedup_keep_best" ->
-        """WITH RECURSIVE
-          |dd AS (SELECT doc_id, text,
-          |         lower(regexp_replace(text, '[\t\n\x0b\f\r ]+', ' ', 'g')) AS t
-          |       FROM documents WHERE doc_id < 500),
-          |g AS (SELECT doc_id,
-          |        CASE WHEN length(t) < 5 THEN [t]
-          |             ELSE list_distinct([substr(t, i, 5) for i in range(1, length(t) - 3)]) END AS sh
-          |      FROM dd),
-          |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          |      FROM g a JOIN g b ON a.doc_id < b.doc_id
-          |      WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
-          |            (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5),
-          |e AS (SELECT id_a AS s, id_b AS d FROM p UNION SELECT id_b, id_a FROM p),
-          |reach(s, d) AS (SELECT s, d FROM e
-          |                UNION
-          |                SELECT r.s, e.d FROM reach r JOIN e ON r.d = e.s),
-          |labels AS (SELECT s AS node, least(s, min(d)) AS cluster_id
-          |           FROM reach GROUP BY s),
-          |q AS (SELECT doc_id,
-          |        len(regexp_extract_all(text, '[^\t\n\x0b\f\r ]+'))::BIGINT AS q
-          |      FROM dd),
-          |r AS (SELECT l.cluster_id, l.node, q.q,
-          |        row_number() OVER (PARTITION BY l.cluster_id
-          |          ORDER BY q.q DESC, l.node ASC) AS rk
-          |      FROM labels l JOIN q ON q.doc_id = l.node)
-          |SELECT cluster_id, count(*) AS n_members,
-          |       cast(max(CASE WHEN rk = 1 THEN node END) as bigint) AS keep_id,
-          |       cast(max(q) as bigint) AS q_kept
-          |FROM r GROUP BY cluster_id""".stripMargin,
-
-      "events_retention" ->
-        """WITH e AS (SELECT user_id, event_type, epoch_ms(ts) AS ts_ms FROM events),
-          |s AS (SELECT user_id, min(ts_ms) AS signup_ms FROM e
-          |      WHERE event_type = 'signup' GROUP BY 1),
-          |r AS (SELECT s.user_id, s.signup_ms,
-          |        max(CASE WHEN e.ts_ms <= s.signup_ms + 86400000 THEN 1 ELSE 0 END) AS r1,
-          |        max(CASE WHEN e.ts_ms <= s.signup_ms + 604800000 THEN 1 ELSE 0 END) AS r7
-          |      FROM s JOIN e ON e.user_id = s.user_id AND e.ts_ms > s.signup_ms
-          |      GROUP BY 1, 2)
-          |SELECT s.signup_ms // 86400000 AS cohort_day,
-          |       count(*) AS n_signups,
-          |       cast(sum(coalesce(r1, 0)) as bigint) AS n_d1,
-          |       cast(sum(coalesce(r7, 0)) as bigint) AS n_d7
-          |FROM s LEFT JOIN r ON r.user_id = s.user_id
-          |GROUP BY 1""".stripMargin,
-
-      "text_subwords" ->
-        """SELECT doc_id,
-          |       len(regexp_extract_all(text,
-          |         '\p{L}+|\p{N}+|[^\p{L}\p{N}\t\n\x0b\f\r ]'))::BIGINT AS n_subwords
-          |FROM documents""".stripMargin,
-
-      // mirrors qualityScore's IEEE arithmetic term by term, same
-      // left-associated evaluation order → bit-exact doubles
-      "text_quality" ->
-        """WITH s AS (SELECT doc_id,
-          |    length(text)::DOUBLE AS len,
-          |    len(regexp_extract_all(text, '\p{L}'))::DOUBLE AS n_alpha,
-          |    len(regexp_extract_all(text, '[!-/:-@\[-`{-~]'))::DOUBLE AS n_punct,
-          |    len(regexp_extract_all(text, '[^\t\n\x0b\f\r ]+'))::DOUBLE AS n_tokens
-          |  FROM documents)
-          |SELECT doc_id,
-          |  greatest(0.0, least(1.0,
-          |    (CASE WHEN len = 0 THEN 0.0 ELSE n_alpha / len END) * 0.4
-          |    + least(len / 200.0, 1.0) * 0.2
-          |    + least(n_tokens / 30.0, 1.0) * 0.2
-          |    + greatest(0.0, 1.0 - (CASE WHEN len = 0 THEN 0.0 ELSE n_punct / len END) * 4.0) * 0.2
-          |  )) AS quality
-          |FROM s""".stripMargin,
-
-      // stopword-token counts per language; argmax with ties to the
-      // full replay of BigramLm: identical normalization, training
-      // (length(bin(1+c))-1 = floor(log2(1+c))) and integer-average
-      // scoring — as the naive explode+join+groupBy plan
-      "text_lm_score" ->
-        """WITH nr AS (SELECT doc_id,
-          |    regexp_replace(regexp_replace(lower(text), '[\t\n\x0b\f\r ]', ' ', 'g'),
-          |                   '[^a-z ]', '#', 'g') AS t
-          |  FROM documents),
-          |g AS (SELECT doc_id, unnest([substr(t, i, 2) for i in range(1, len(t))]) AS bg
-          |      FROM nr WHERE len(t) >= 2),
-          |w AS (SELECT bg, length(bin(1 + count(*))) - 1 AS w FROM g GROUP BY bg),
-          |sc AS (SELECT doc_id, sum(w)::BIGINT AS sw, count(*)::BIGINT AS nb
-          |       FROM g JOIN w USING (bg) GROUP BY doc_id)
-          |SELECT nr.doc_id, coalesce(sw // nb, 0)::BIGINT AS lm_score
-          |FROM nr LEFT JOIN sc USING (doc_id)""".stripMargin,
-      // text_lm_score's training+scoring replay, then the same exact
-      // tertile split under the (score DESC, doc_id) total order
-      "text_ppl_buckets" ->
-        """WITH nr AS (SELECT doc_id,
-          |    regexp_replace(regexp_replace(lower(text), '[\t\n\x0b\f\r ]', ' ', 'g'),
-          |                   '[^a-z ]', '#', 'g') AS t
-          |  FROM documents),
-          |g AS (SELECT doc_id, unnest([substr(t, i, 2) for i in range(1, len(t))]) AS bg
-          |      FROM nr WHERE len(t) >= 2),
-          |w AS (SELECT bg, length(bin(1 + count(*))) - 1 AS w FROM g GROUP BY bg),
-          |sc AS (SELECT doc_id, sum(w)::BIGINT AS sw, count(*)::BIGINT AS nb
-          |       FROM g JOIN w USING (bg) GROUP BY doc_id),
-          |scores AS (SELECT nr.doc_id, coalesce((sw * 1000) // nb, 0)::BIGINT AS lm_score
-          |           FROM nr LEFT JOIN sc USING (doc_id)),
-          |b AS (SELECT lm_score,
-          |             ntile(3) OVER (ORDER BY lm_score DESC, doc_id) AS bucket
-          |      FROM scores)
-          |SELECT cast(bucket as bigint) AS bucket, count(*) AS n_docs,
-          |       min(lm_score) AS min_score, max(lm_score) AS max_score,
-          |       cast(sum(lm_score) as bigint) AS sum_score
-          |FROM b GROUP BY 1""".stripMargin,
-      // earlier language in (en,de,fr,es,it), 'und' when all zero —
-      // exactly LangIdKernel's strict-> update order
-      "text_langid" ->
-        """WITH w AS (SELECT doc_id,
-          |    str_split(regexp_replace(lower(text), '[\t\n\x0b\f\r ]+', ' ', 'g'), ' ') AS t
-          |  FROM documents),
-          |c AS (SELECT doc_id,
-          |    len(list_filter(t, x -> x IN ('the','and','of','to','is','in','that','it'))) AS en,
-          |    len(list_filter(t, x -> x IN ('der','die','das','und','ist','nicht','ein','zu'))) AS de,
-          |    len(list_filter(t, x -> x IN ('le','la','les','et','est','une','que','pas'))) AS fr,
-          |    len(list_filter(t, x -> x IN ('el','la','los','y','es','una','que','no'))) AS es,
-          |    len(list_filter(t, x -> x IN ('il','la','che','e','di','un','per','non'))) AS it
-          |  FROM w)
-          |SELECT doc_id,
-          |  CASE WHEN greatest(en, de, fr, es, it) = 0 THEN 'und'
-          |       WHEN en >= de AND en >= fr AND en >= es AND en >= it THEN 'en'
-          |       WHEN de >= fr AND de >= es AND de >= it THEN 'de'
-          |       WHEN fr >= es AND fr >= it THEN 'fr'
-          |       WHEN es >= it THEN 'es'
-          |       ELSE 'it' END AS lang_pred
-          |FROM c""".stripMargin,
-
-      // same md5-derived bucket as sample_split, per-stratum percentage
-      "sample_stratified" ->
-        """WITH d AS (SELECT event_type,
-          |    CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS b
-          |  FROM events)
-          |SELECT event_type, count(*) AS n_kept
-          |FROM d
-          |WHERE b < CASE event_type WHEN 'view' THEN 10 WHEN 'click' THEN 75
-          |                          WHEN 'purchase' THEN 100 ELSE 50 END
-          |GROUP BY event_type""".stripMargin,
-      "sample_weighted" ->
-        """WITH d AS (SELECT doc_id, text,
-          |    least(90, len(regexp_extract_all(text, '[^\t\n\x0b\f\r ]+'))::BIGINT) AS w,
-          |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS b
-          |  FROM documents)
-          |SELECT count(*) FILTER (WHERE b < w) AS n_kept,
-          |       cast(sum(length(text)) FILTER (WHERE b < w) as bigint) AS n_chars_kept,
-          |       count(*) AS n_total
-          |FROM d""".stripMargin,
-      "layout_zorder" ->
-        s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-           |       cast(${graft.ops.Layout.mortonSql("l_partkey", "l_suppkey", 21)} as bigint) AS zval
-           |FROM lineitem WHERE l_orderkey <= 100""".stripMargin,
-
-      "func_json" ->
-        """SELECT event_type, count(*) AS n,
-          |       cast(sum(k) as bigint) AS sum_k,
-          |       min(k) AS min_k, max(k) AS max_k
-          |FROM (SELECT event_type,
-          |        CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-          |      FROM events)
-          |GROUP BY event_type""".stripMargin,
-      "func_datetime" ->
-        """SELECT year(o_orderdate) AS yr, month(o_orderdate) AS mo,
-          |       epoch_ms(date_trunc('month', o_orderdate)) // 1000 AS month_start_s,
-          |       count(*) AS n_orders,
-          |       cast(sum(cast(floor(o_totalprice) as bigint)) as bigint) AS sum_price,
-          |       min(day(o_orderdate)) AS min_dom, max(day(o_orderdate)) AS max_dom
-          |FROM orders GROUP BY 1, 2, 3""".stripMargin,
-      "func_string" ->
-        """SELECT p_partkey,
-          |       upper(p_brand) AS brand_u,
-          |       lower(p_type) AS type_l,
-          |       substr(p_name, 1, 8) AS name_prefix,
-          |       length(p_name) AS name_len,
-          |       strpos(p_name, 'o') AS o_pos,
-          |       replace(p_type, ' ', '_') AS type_snake,
-          |       concat_ws('|', p_brand, p_type) AS brand_type,
-          |       CASE WHEN p_name LIKE '%ring%' THEN 1 ELSE 0 END AS has_ring,
-          |       lpad(CAST(p_partkey AS VARCHAR), 8, '0') AS key_pad
-          |FROM part""".stripMargin,
-      "func_array" ->
-        """SELECT s_nationkey, count(*) AS n_supp,
-          |       string_agg(CAST(s_suppkey AS VARCHAR), ',' ORDER BY s_suppkey)
-          |         AS supp_keys
-          |FROM supplier GROUP BY s_nationkey""".stripMargin,
-
-      "tpch_q1" ->
-        """SELECT l_returnflag, l_linestatus,
-          |       cast(sum(cast(floor(l_quantity) as bigint)) as bigint) AS sum_qty,
-          |       cast(sum(cast(floor(l_extendedprice) as bigint)) as bigint) AS sum_base_price,
-          |       cast(sum(cast(floor(l_extendedprice * (1 - l_discount)) as bigint)) as bigint)
-          |         AS sum_disc_price,
-          |       count(*) AS count_order,
-          |       cast(sum(cast(floor(l_quantity) as bigint)) // count(*) as bigint) AS avg_qty
-          |FROM lineitem
-          |WHERE l_shipdate <= TIMESTAMP '1998-06-01'
-          |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-      "tpch_q3" ->
-        """SELECT l_orderkey, epoch_ms(o_orderdate) AS o_orderdate_ms,
-          |       cast(sum(cast(floor(l_extendedprice * (1 - l_discount)) as bigint)) as bigint)
-          |         AS revenue
-          |FROM lineitem
-          |JOIN orders ON l_orderkey = o_orderkey
-          |JOIN customer ON o_custkey = c_custkey
-          |WHERE c_mktsegment = 'BUILDING'
-          |  AND o_orderdate < TIMESTAMP '1997-01-01'
-          |  AND l_shipdate > TIMESTAMP '1997-01-01'
-          |GROUP BY 1, 2
-          |ORDER BY revenue DESC, l_orderkey ASC
-          |LIMIT 10""".stripMargin,
-      "tpch_q10" ->
-        """SELECT c_custkey, c_name, n_name,
-          |       cast(sum(cast(floor(l_extendedprice * (1 - l_discount)) as bigint)) as bigint)
-          |         AS revenue
-          |FROM lineitem
-          |JOIN orders ON l_orderkey = o_orderkey
-          |JOIN customer ON o_custkey = c_custkey
-          |JOIN nation ON c_nationkey = n_nationkey
-          |WHERE l_returnflag = 'R'
-          |  AND o_orderdate >= TIMESTAMP '1996-10-01'
-          |  AND o_orderdate < TIMESTAMP '1997-01-01'
-          |GROUP BY 1, 2, 3
-          |ORDER BY revenue DESC, c_custkey ASC
-          |LIMIT 20""".stripMargin,
-      "tpch_q14" ->
-        """SELECT cast(sum(CASE WHEN p_type = 'PROMO'
-          |                     THEN cast(floor(l_extendedprice * (1 - l_discount)) as bigint)
-          |                     ELSE 0 END) as bigint) AS promo_rev,
-          |       cast(sum(cast(floor(l_extendedprice * (1 - l_discount)) as bigint)) as bigint)
-          |         AS total_rev
-          |FROM lineitem JOIN part ON l_partkey = p_partkey
-          |WHERE l_shipdate >= TIMESTAMP '1997-03-01'
-          |  AND l_shipdate < TIMESTAMP '1997-04-01'""".stripMargin,
-      "tpch_q19" ->
-        """SELECT cast(sum(cast(floor(l_extendedprice * (1 - l_discount)) as bigint)) as bigint)
-          |         AS revenue,
-          |       count(*) AS n_lines
-          |FROM lineitem JOIN part ON l_partkey = p_partkey
-          |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 11)
-          |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)
-          |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-      "tpch_q18" ->
-        """SELECT c_name, c_custkey, o_orderkey,
-          |       epoch_ms(o_orderdate) AS o_orderdate_ms,
-          |       cast(floor(o_totalprice) as bigint) AS o_totalprice_fl,
-          |       cast(sum(cast(floor(l_quantity) as bigint)) as bigint) AS sum_qty
-          |FROM lineitem
-          |JOIN orders ON o_orderkey = l_orderkey
-          |JOIN customer ON c_custkey = o_custkey
-          |WHERE o_orderkey IN (
-          |  SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
-          |  HAVING sum(cast(floor(l_quantity) as bigint)) > 250)
-          |GROUP BY 1, 2, 3, 4, 5""".stripMargin,
-      "tpch_q6" ->
-        """SELECT cast(sum(cast(floor(l_extendedprice * l_discount) as bigint)) as bigint)
-          |         AS revenue
-          |FROM lineitem
-          |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-          |  AND l_shipdate < TIMESTAMP '1998-01-01'
-          |  AND l_discount BETWEEN 0.05 AND 0.07
-          |  AND l_quantity < 24""".stripMargin,
-      "tpch_q5" ->
-        """SELECT n_name,
-          |       cast(sum(cast(floor(l_extendedprice * (1 - l_discount)) as bigint)) as bigint)
-          |         AS revenue
-          |FROM lineitem
-          |JOIN orders ON l_orderkey = o_orderkey
-          |JOIN supplier ON l_suppkey = s_suppkey
-          |JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
-          |JOIN nation ON s_nationkey = n_nationkey
-          |JOIN region ON n_regionkey = r_regionkey
-          |WHERE r_name = 'ASIA'
-          |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-          |  AND o_orderdate < TIMESTAMP '1998-01-01'
-          |GROUP BY n_name""".stripMargin,
-      "tpch_q4" ->
-        """SELECT o_orderpriority, count(*) AS order_count
-          |FROM orders
-          |WHERE o_orderdate >= TIMESTAMP '1996-07-01'
-          |  AND o_orderdate < TIMESTAMP '1996-10-01'
-          |  AND EXISTS (SELECT 1 FROM lineitem
-          |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-          |GROUP BY 1""".stripMargin,
-      "tpch_q7" ->
-        """SELECT supp_nation, cust_nation, l_year,
-          |       cast(sum(volume) as bigint) AS revenue FROM (
-          |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-          |         cast(year(l_shipdate) as bigint) AS l_year,
-          |         cast(floor(l_extendedprice * (1 - l_discount)) as bigint) AS volume
-          |  FROM lineitem
-          |  JOIN supplier ON l_suppkey = s_suppkey
-          |  JOIN orders ON l_orderkey = o_orderkey
-          |  JOIN customer ON o_custkey = c_custkey
-          |  JOIN nation n1 ON s_nationkey = n1.n_nationkey
-          |  JOIN nation n2 ON c_nationkey = n2.n_nationkey
-          |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-          |    AND l_shipdate < TIMESTAMP '1998-01-01'
-          |    AND n1.n_name IN ('NATION_1','NATION_2','NATION_3')
-          |    AND n2.n_name IN ('NATION_1','NATION_2','NATION_3')
-          |    AND n1.n_name <> n2.n_name
-          |) GROUP BY 1, 2, 3""".stripMargin,
-      "tpch_q12" ->
-        """SELECT l_linestatus,
-          |  cast(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-          |                THEN 1 ELSE 0 END) as bigint) AS high_line_count,
-          |  cast(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-          |                THEN 0 ELSE 1 END) as bigint) AS low_line_count
-          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-          |  AND l_shipdate < TIMESTAMP '1998-01-01'
-          |GROUP BY 1""".stripMargin,
-      "tpch_q13" ->
-        """SELECT c_count, count(*) AS custdist FROM (
-          |  SELECT c_custkey, count(o_custkey) AS c_count
-          |  FROM customer LEFT JOIN
-          |    (SELECT o_custkey FROM orders WHERE o_orderpriority <> '5-LOW') o
-          |    ON c_custkey = o.o_custkey
-          |  GROUP BY c_custkey
-          |) GROUP BY c_count""".stripMargin,
-      "tpch_q17" ->
-        """SELECT cast(sum(price_fl) as bigint) AS total_price_fl,
-          |       count(*) AS n_small FROM (
-          |  SELECT cast(floor(l_extendedprice) as bigint) AS price_fl,
-          |         cast(floor(l_quantity) as bigint) AS qty, l_partkey
-          |  FROM lineitem JOIN part ON l_partkey = p_partkey
-          |  WHERE p_brand = 'Brand#23'
-          |) l JOIN (
-          |  SELECT l_partkey AS pk,
-          |         cast(sum(cast(floor(l_quantity) as bigint)) as bigint) AS sum_qty,
-          |         count(*) AS n_li
-          |  FROM lineitem GROUP BY 1
-          |) st ON l.l_partkey = st.pk
-          |WHERE qty * 5 * n_li < sum_qty""".stripMargin,
-      "tpch_q21" ->
-        """SELECT s_name, count(*) AS numwait
-          |FROM lineitem l1 JOIN supplier ON l1.l_suppkey = s_suppkey
-          |WHERE l1.l_returnflag = 'R'
-          |  AND EXISTS (SELECT 1 FROM lineitem l2
-          |              WHERE l2.l_orderkey = l1.l_orderkey
-          |                AND l2.l_suppkey <> l1.l_suppkey)
-          |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-          |                  WHERE l3.l_orderkey = l1.l_orderkey
-          |                    AND l3.l_suppkey <> l1.l_suppkey
-          |                    AND l3.l_returnflag = 'R')
-          |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin,
-      "tpch_q22" ->
-        """WITH cust AS (
-          |  SELECT c_custkey, cast(c_nationkey % 10 as int) AS cntrycode,
-          |         cast(floor(c_acctbal * 100) as bigint) AS bal_cents
-          |  FROM customer WHERE c_nationkey % 10 IN (1,3,5,7,9)
-          |), thr AS (
-          |  SELECT cast(sum(bal_cents) // count(*) as bigint) AS t
-          |  FROM cust WHERE bal_cents > 0
-          |)
-          |SELECT cntrycode, count(*) AS numcust,
-          |       cast(sum(bal_cents) as bigint) AS totacctbal_cents
-          |FROM cust, thr
-          |WHERE bal_cents > t
-          |  AND NOT EXISTS (SELECT 1 FROM orders
-          |                  WHERE o_custkey = c_custkey
-          |                    AND o_orderpriority = '1-URGENT')
-          |GROUP BY cntrycode""".stripMargin,
-      "tpch_q2" ->
-        """WITH supplies AS (
-          |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-          |         cast(min(cast(floor(l_extendedprice) as bigint)) as bigint) AS ps_cost
-          |  FROM lineitem GROUP BY 1, 2),
-          |eu AS (
-          |  SELECT s_suppkey, s_name, n_name
-          |  FROM supplier JOIN nation ON s_nationkey = n_nationkey
-          |                JOIN region ON n_regionkey = r_regionkey
-          |  WHERE r_name = 'EUROPE'),
-          |cand AS (
-          |  SELECT p_partkey, s_name, n_name, ps_cost,
-          |         min(ps_cost) OVER (PARTITION BY p_partkey) AS min_cost
-          |  FROM part JOIN supplies ON p_partkey = ps_partkey
-          |            JOIN eu ON ps_suppkey = s_suppkey
-          |  WHERE p_size <= 25 AND p_type = 'LARGE')
-          |SELECT p_partkey, s_name, n_name, ps_cost AS cost
-          |FROM cand WHERE ps_cost = min_cost""".stripMargin,
-      "tpch_q9" ->
-        """SELECT n_name, cast(year(o_orderdate) as bigint) AS o_year,
-          |       cast(sum(cast(floor(l_extendedprice * (1 - l_discount)) as bigint)
-          |              - cast(floor(p_retailprice) as bigint)
-          |                * cast(floor(l_quantity) as bigint)) as bigint) AS profit
-          |FROM lineitem JOIN part ON l_partkey = p_partkey
-          |     JOIN supplier ON l_suppkey = s_suppkey
-          |     JOIN nation ON s_nationkey = n_nationkey
-          |     JOIN orders ON l_orderkey = o_orderkey
-          |WHERE p_name LIKE '%widget%'
-          |GROUP BY 1, 2""".stripMargin,
-      "tpch_q11" ->
-        """WITH supplies AS (
-          |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-          |         cast(sum(cast(floor(l_extendedprice) as bigint)) as bigint) AS val
-          |  FROM lineitem GROUP BY 1, 2),
-          |asia AS (SELECT s_suppkey FROM supplier
-          |         JOIN nation ON s_nationkey = n_nationkey
-          |         JOIN region ON n_regionkey = r_regionkey
-          |         WHERE r_name = 'ASIA'),
-          |pv AS (SELECT ps_partkey, cast(sum(val) as bigint) AS value
-          |       FROM supplies JOIN asia ON ps_suppkey = s_suppkey GROUP BY 1)
-          |SELECT ps_partkey, value FROM pv
-          |WHERE value > (SELECT cast(2 * sum(value) // count(*) as bigint) FROM pv)""".stripMargin,
-      "tpch_q16" ->
-        """WITH supplies AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
-          |SELECT p_brand, p_type, p_size,
-          |       count(DISTINCT l_suppkey) AS supplier_cnt
-          |FROM part JOIN supplies ON p_partkey = l_partkey
-          |WHERE p_brand <> 'Brand#3' AND p_type <> 'PROMO'
-          |  AND p_size IN (1, 4, 9, 16, 25, 36, 49)
-          |  AND l_suppkey IN (SELECT s_suppkey FROM supplier
-          |                    WHERE s_name NOT LIKE '%7')
-          |GROUP BY 1, 2, 3""".stripMargin,
-      "tpch_q20" ->
-        """WITH qty AS (
-          |  SELECT l_partkey, l_suppkey,
-          |         cast(sum(cast(floor(l_quantity) as bigint)) as bigint) AS total_qty,
-          |         cast(sum(CASE WHEN year(l_shipdate) = 1997
-          |                       THEN cast(floor(l_quantity) as bigint)
-          |                       ELSE 0 END) as bigint) AS qty97
-          |  FROM lineitem GROUP BY 1, 2),
-          |excess AS (
-          |  SELECT l_suppkey FROM qty JOIN part ON l_partkey = p_partkey
-          |  WHERE p_name LIKE 'small%' AND total_qty > 2 * qty97
-          |  GROUP BY 1)
-          |SELECT s_name, n_name
-          |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-          |WHERE s_suppkey IN (SELECT l_suppkey FROM excess)""".stripMargin,
-      "tpch_q15" ->
-        """WITH rev AS (
-          |  SELECT l_suppkey,
-          |         cast(sum(cast(floor(l_extendedprice * (1 - l_discount)) as bigint)) as bigint)
-          |           AS total_revenue
-          |  FROM lineitem
-          |  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-          |    AND l_shipdate < TIMESTAMP '1997-04-01'
-          |  GROUP BY l_suppkey)
-          |SELECT s_suppkey, s_name, total_revenue
-          |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-          |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)""".stripMargin,
-      "tpch_q8" ->
-        """SELECT o_year,
-          |  cast(sum(CASE WHEN supp_nation = 'NATION_3' THEN volume
-          |                ELSE 0 END) as bigint) AS nation_rev,
-          |  cast(sum(volume) as bigint) AS total_rev FROM (
-          |  SELECT cast(year(o_orderdate) as bigint) AS o_year,
-          |         n2.n_name AS supp_nation,
-          |         cast(floor(l_extendedprice * (1 - l_discount)) as bigint) AS volume
-          |  FROM lineitem
-          |  JOIN part ON l_partkey = p_partkey
-          |  JOIN orders ON l_orderkey = o_orderkey
-          |  JOIN customer ON o_custkey = c_custkey
-          |  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-          |  JOIN region ON n1.n_regionkey = r_regionkey
-          |  JOIN supplier ON l_suppkey = s_suppkey
-          |  JOIN nation n2 ON s_nationkey = n2.n_nationkey
-          |  WHERE p_type = 'STANDARD' AND r_name = 'ASIA'
-          |    AND o_orderdate >= TIMESTAMP '1996-01-01'
-          |    AND o_orderdate < TIMESTAMP '1998-01-01'
-          |) GROUP BY o_year""".stripMargin,
-      // exact by construction: the CMS prune only removes keys below
-      // threshold (over-count-only sketch), so plain GROUP BY/HAVING is
-      // the full semantics
-      "hh_cms_exact" ->
-        """SELECT l_partkey, count(*) AS n_rows
-          |FROM lineitem
-          |GROUP BY l_partkey
-          |HAVING count(*) >= 45""".stripMargin,
-      "fuzzy_join_lev" ->
-        """SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
-          |       cast(levenshtein(a.p_name, b.p_name) as bigint) AS lev_dist
-          |FROM part a
-          |JOIN part b ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
-          |WHERE abs(length(a.p_name) - length(b.p_name)) <= 3
-          |  AND levenshtein(a.p_name, b.p_name) <= 3""".stripMargin,
-      "ts_gapfill" ->
-        """WITH d AS (
-          |  SELECT user_id, date_trunc('day', ts) AS day, count(*) AS n_events
-          |  FROM events GROUP BY 1, 2),
-          |s AS (
-          |  SELECT user_id,
-          |         unnest(generate_series(min(day), max(day), INTERVAL 1 DAY)) AS day
-          |  FROM d GROUP BY user_id)
-          |SELECT s.user_id, epoch_ms(s.day) AS day_ms,
-          |       cast(coalesce(d.n_events, 0) as bigint) AS n_events
-          |FROM s LEFT JOIN d ON s.user_id = d.user_id AND s.day = d.day""".stripMargin,
-      "merge_cdc" ->
-        """WITH base AS (SELECT c_custkey,
-          |         cast(floor(c_acctbal) as bigint) AS balance FROM customer),
-          |log AS (SELECT o_custkey AS c_custkey,
-          |          o_orderdate AS ts, o_orderkey,
-          |          CASE WHEN o_orderkey % 7 = 0 THEN 'D' ELSE 'U' END AS op,
-          |          cast(floor(o_totalprice) as bigint) AS new_balance
-          |        FROM orders),
-          |last_op AS (
-          |  SELECT c_custkey, op, new_balance FROM (
-          |    SELECT *, row_number() OVER (PARTITION BY c_custkey
-          |      ORDER BY ts DESC, o_orderkey DESC) AS rn FROM log)
-          |  WHERE rn = 1)
-          |SELECT coalesce(b.c_custkey, l.c_custkey) AS c_custkey,
-          |       coalesce(l.new_balance, b.balance) AS balance,
-          |       coalesce(l.op, 'K') AS last_op
-          |FROM base b FULL OUTER JOIN last_op l ON b.c_custkey = l.c_custkey
-          |WHERE coalesce(l.op, 'K') <> 'D'""".stripMargin,
-      "merge_upsert" ->
-        """WITH base AS (SELECT c_custkey, c_nationkey::BIGINT AS nation,
-          |         cast(floor(c_acctbal) as bigint) AS balance
-          |       FROM customer),
-          |upd AS (SELECT CASE WHEN o_custkey % 10 = 0 THEN o_custkey + 1000000
-          |               ELSE o_custkey END AS c_custkey,
-          |          cast(sum(cast(floor(o_totalprice) as bigint)) as bigint) AS upd_balance
-          |        FROM orders GROUP BY o_custkey)
-          |SELECT coalesce(base.c_custkey, upd.c_custkey) AS c_custkey,
-          |       coalesce(nation, -1) AS nation,
-          |       coalesce(upd_balance, balance) AS balance,
-          |       CASE WHEN upd_balance IS NOT NULL AND nation IS NOT NULL THEN 'update'
-          |            WHEN upd_balance IS NOT NULL THEN 'insert'
-          |            ELSE 'keep' END AS action
-          |FROM base FULL OUTER JOIN upd ON base.c_custkey = upd.c_custkey""".stripMargin,
-      "scd2_history" ->
-        """SELECT user_id, event_type,
-          |       cast(floor(value) as bigint) AS value_fl,
-          |       epoch_ms(ts) AS valid_from_ms,
-          |       coalesce(lead(epoch_ms(ts), 1) OVER
-          |         (PARTITION BY user_id, event_type ORDER BY ts, event_id),
-          |         -1) AS valid_to_ms
-          |FROM events""".stripMargin,
-      // open/close replayed via ORDER BY inside array_agg — the sorted
-      // form of the Spark side's min/max-over-struct selection; both
-      // pick values (never accumulate doubles), so hash-exact
-      "ts_resample" ->
-        """SELECT user_id, epoch_ms(date_trunc('hour', ts)) AS hour_ms,
-          |       (array_agg(value ORDER BY ts, event_id))[1] AS open_value,
-          |       (array_agg(value ORDER BY ts DESC, event_id DESC))[1] AS close_value,
-          |       min(value) AS lo_value, max(value) AS hi_value,
-          |       count(*) AS n_events
-          |FROM events GROUP BY 1, 2""".stripMargin,
-      "events_stream_dedup" ->
-        """WITH k AS (SELECT event_type,
-          |    row_number() OVER (PARTITION BY user_id, event_type, props
-          |                       ORDER BY ts, event_id) AS rn
-          |  FROM events)
-          |SELECT event_type, count(*) AS n_rows,
-          |       cast(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) as bigint) AS n_kept
-          |FROM k GROUP BY event_type""".stripMargin,
-      "window_rank_stats" ->
-        """SELECT s_suppkey, s_nationkey,
-          |       percent_rank() OVER w AS pct_rank,
-          |       cume_dist() OVER w AS cume,
-          |       cast(dense_rank() OVER w as bigint) AS drank
-          |FROM (SELECT s_suppkey, s_nationkey,
-          |             cast(floor(s_acctbal * 100) as bigint) AS bal_cents
-          |      FROM supplier)
-          |WINDOW w AS (PARTITION BY s_nationkey ORDER BY bal_cents, s_suppkey)""".stripMargin,
-
-      "events_enrich_static" ->
-        """WITH e AS (SELECT *,
-          |    CASE event_type WHEN 'click' THEN 'engagement'
-          |                    WHEN 'view' THEN 'engagement'
-          |                    WHEN 'purchase' THEN 'revenue'
-          |                    WHEN 'signup' THEN 'growth'
-          |                    WHEN 'error' THEN 'ops'
-          |                    ELSE 'unknown' END AS category,
-          |    CASE event_type WHEN 'click' THEN 1 WHEN 'purchase' THEN 10
-          |                    WHEN 'signup' THEN 5 ELSE 0 END AS weight
-          |  FROM events)
-          |SELECT category, count(*) AS n_events,
-          |       cast(sum(weight) as bigint) AS sum_weight,
-          |       cast(sum(cast(floor(value * 1000) as bigint)) as bigint) AS sum_value_milli
-          |FROM e GROUP BY category""".stripMargin,
-
-      // ids only, like dedup_embedding_exact: min |cos − 0.2| ≈ 2.5e-4
-      // at sf0.01 — far above cross-engine float accumulation noise
-      "sim_range_search" ->
-        """SELECT p.vec_id AS probe_id, c.vec_id AS corpus_id
-          |FROM embeddings c
-          |JOIN (SELECT * FROM embeddings WHERE vec_id <= 5) p
-          |  ON c.vec_id <> p.vec_id
-          |WHERE list_cosine_similarity(c.embedding::DOUBLE[],
-          |                             p.embedding::DOUBLE[]) >= 0.2""".stripMargin,
-
-      // rank-only output: double-precision cosine ordering agrees across
-      // engines unless two cosines differ by < 1e-15 (distinct random
-      // vectors never do)
-      "sim_topk_brute" ->
-        """SELECT probe_id, corpus_id, "rank" FROM (
-          |  SELECT p.vec_id AS probe_id, c.vec_id AS corpus_id,
-          |         row_number() OVER (PARTITION BY p.vec_id
-          |           ORDER BY list_cosine_similarity(c.embedding::DOUBLE[],
-          |                                           p.embedding::DOUBLE[]) DESC,
-          |                    c.vec_id ASC) AS "rank"
-          |  FROM embeddings c
-          |  JOIN (SELECT * FROM embeddings WHERE vec_id <= 5) p
-          |    ON c.vec_id <> p.vec_id)
-          |WHERE "rank" <= 5""".stripMargin,
-
-      // full end-to-end replay: cosine (double), exact 5-NN ranking,
-      // per-probe label vote, (count DESC, label ASC) argmax, accuracy
-      "sim_knn_classify" ->
-        """WITH knn AS (
-          |  SELECT probe_id, corpus_id FROM (
-          |    SELECT p.vec_id AS probe_id, c.vec_id AS corpus_id,
-          |           row_number() OVER (PARTITION BY p.vec_id
-          |             ORDER BY list_cosine_similarity(c.embedding::DOUBLE[],
-          |                                             p.embedding::DOUBLE[]) DESC,
-          |                      c.vec_id ASC) AS rk
-          |    FROM embeddings c JOIN embeddings p ON c.vec_id <> p.vec_id)
-          |  WHERE rk <= 5),
-          |votes AS (
-          |  SELECT k.probe_id, e.label AS nbr_label, count(*) AS v
-          |  FROM knn k JOIN embeddings e ON e.vec_id = k.corpus_id
-          |  GROUP BY 1, 2),
-          |pred AS (
-          |  SELECT probe_id AS vec_id, cast(nbr_label as bigint) AS pred FROM (
-          |    SELECT probe_id, nbr_label,
-          |           row_number() OVER (PARTITION BY probe_id
-          |             ORDER BY v DESC, nbr_label ASC) AS rk
-          |    FROM votes) WHERE rk = 1)
-          |SELECT cast(e.label as bigint) AS label, count(*) AS n_vecs,
-          |       cast(sum(CASE WHEN p.pred = e.label THEN 1 ELSE 0 END) as bigint)
-          |         AS n_correct
-          |FROM pred p JOIN embeddings e USING (vec_id)
-          |GROUP BY 1""".stripMargin,
-
-      // multimodal metadata stand-ins are LCG arithmetic on the id and
-      // md5 content hashes — fully reproducible in SQL
-      "multimodal_features" ->
-        """SELECT doc_id AS media_id, 'image' AS modality,
-          |       strlen(text)::BIGINT AS n_bytes,
-          |       md5(text) AS payload_hash
-          |FROM documents""".stripMargin,
-      "multimodal_resize" ->
-        """WITH m AS (SELECT doc_id AS media_id,
-          |    ((doc_id * 48271 + 11) % 1920 + 1)::INT AS width,
-          |    ((doc_id * 69621 + 7) % 1080 + 1)::INT AS height
-          |  FROM documents)
-          |SELECT media_id, width, height,
-          |       ceil(width * least(256.0 / width, 256.0 / height, 1.0))::INT AS target_width,
-          |       ceil(height * least(256.0 / width, 256.0 / height, 1.0))::INT AS target_height
-          |FROM m""".stripMargin,
-      "multimodal_frames" ->
-        """WITH m AS (SELECT doc_id AS media_id,
-          |    (doc_id * 16807 + 3) % 600000 AS duration_ms
-          |  FROM documents)
-          |SELECT media_id, ts AS frame_ts_ms,
-          |       md5(media_id || ':' || ts) AS frame_ref
-          |FROM m, unnest(range(0, greatest(duration_ms - 1, 0) + 1, 60000)) AS u(ts)""".stripMargin,
-      // full replay of the byte-block near-dup pipeline: the corpus is
-      // pure ASCII (len == octet_length for every doc, both sf tiers),
-      // so DuckDB's char-indexed substr(text, i*32+1, 32) slices the
-      // same 32 bytes Spark's binary substring does; md5-vs-xxhash64
-      // block keys are interchangeable equality proxies, and the
-      // Jaccard is the same correctly-rounded division of exact ints
-      "dedup_multimodal" ->
-        """WITH d AS (SELECT doc_id, text FROM documents WHERE len(text) > 0),
-          |b AS (SELECT doc_id,
-          |        unnest([md5(substr(text, i*32 + 1, 32))
-          |                for i in range(0, 1 + (len(text) - 1) // 32)]) AS bh
-          |      FROM d),
-          |bd AS (SELECT DISTINCT doc_id, bh FROM b),
-          |cand AS (SELECT a.doc_id AS ia, x.doc_id AS ib, count(*)::BIGINT AS inter
-          |         FROM bd a JOIN bd x USING (bh)
-          |         WHERE a.doc_id < x.doc_id GROUP BY 1, 2),
-          |sz AS (SELECT doc_id, count(*)::BIGINT AS n FROM bd GROUP BY 1)
-          |SELECT ia AS id_a, ib AS id_b,
-          |       inter * 1.0 / (sa.n + sb.n - inter) AS jaccard
-          |FROM cand JOIN sz sa ON sa.doc_id = cand.ia
-          |          JOIN sz sb ON sb.doc_id = cand.ib
-          |WHERE inter * 1.0 / (sa.n + sb.n - inter) >= 0.5""".stripMargin,
-      // content-shifted multimodal gate: stub-codec features are not
-      // SQL-expressible; subset/recall proofs are Spark-side anti-joins
-      // against the exact all-pairs comparator over the SAME features
-      "dedup_multimodal_semantic" ->
-        """SELECT cast(count(*) as bigint) AS n_media,
-          |       true AS subset_ok, true AS recall_ok
-          |FROM documents""".stripMargin,
-
-      // explicit [\t\n\x0B\f\r ] whitespace class and \p{N} digit class:
-      // identical semantics in RE2 and in the one-pass TextStats kernel
-      // (Java \s / Character.isWhitespace and RE2 \s disagree on Unicode)
-      // per-doc kernel replays (tokens, langid-en, seg boilerplate flag)
-      // aggregated per source; the langid branch mirrors text_langid's
-      // strict en >= others order
-      "report_sources" ->
-        """WITH w AS (SELECT doc_id, source, text, length(text) AS nc,
-          |    len(regexp_extract_all(text, '[^\t\n\x0b\f\r ]+'))::BIGINT AS nt,
-          |    str_split(regexp_replace(lower(text), '[\t\n\x0b\f\r ]+', ' ', 'g'), ' ') AS tl
-          |  FROM documents),
-          |c AS (SELECT doc_id, source, nc, nt,
-          |    len(list_filter(tl, x -> x IN ('the','and','of','to','is','in','that','it'))) AS en,
-          |    len(list_filter(tl, x -> x IN ('der','die','das','und','ist','nicht','ein','zu'))) AS de,
-          |    len(list_filter(tl, x -> x IN ('le','la','les','et','est','une','que','pas'))) AS fr,
-          |    len(list_filter(tl, x -> x IN ('el','la','los','y','es','una','que','no'))) AS es,
-          |    len(list_filter(tl, x -> x IN ('il','la','che','e','di','un','per','non'))) AS it
-          |  FROM w),
-          |l AS (SELECT doc_id, source, nc, nt,
-          |    (greatest(en, de, fr, es, it) > 0 AND en >= de AND en >= fr
-          |     AND en >= es AND en >= it) AS is_en
-          |  FROM c),
-          |words AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-          |segs AS (SELECT doc_id, array_to_string(ws[(g*5+1):((g+1)*5)], ' ') AS seg
-          |         FROM words, unnest(range(0, (len(ws)+4)//5)) AS t(g)),
-          |freq AS (SELECT seg, count(DISTINCT doc_id) AS nd FROM segs GROUP BY seg),
-          |b AS (SELECT s.doc_id, max(CASE WHEN f.nd >= 3 THEN 1 ELSE 0 END) AS hb
-          |      FROM segs s JOIN freq f USING (seg) GROUP BY s.doc_id)
-          |SELECT l.source, count(*) AS n_docs,
-          |       cast(sum(l.nc) as bigint) AS sum_chars,
-          |       cast(sum(l.nt) as bigint) AS sum_tokens,
-          |       cast(sum(CASE WHEN l.is_en THEN 1 ELSE 0 END) as bigint) AS n_en,
-          |       cast(sum(b.hb) as bigint) AS n_boiler_docs
-          |FROM l JOIN b USING (doc_id)
-          |GROUP BY l.source""".stripMargin,
-
-      "text_stats" ->
-        """SELECT doc_id,
-          |       length(text) AS n_chars_text,
-          |       len(regexp_extract_all(text, '[^\t\n\x0b\f\r ]+'))::BIGINT AS n_tokens,
-          |       len(regexp_extract_all(text, '\p{N}'))::BIGINT AS n_digits,
-          |       md5(lower(regexp_replace(text, '[\t\n\x0b\f\r ]+', ' ', 'g'))) AS fingerprint
-          |FROM documents""".stripMargin,
-
-      // identical RE2-safe patterns both sides; 'g' flag = Spark's
-      // replace-all default; scrubbed_hash proves replacement parity
-      "text_pii_scrub" ->
-        """SELECT doc_id,
-          |  len(regexp_extract_all(text,
-          |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))::BIGINT AS n_emails,
-          |  len(regexp_extract_all(text,
-          |    '\+?[0-9][0-9()\- ]{6,}[0-9]'))::BIGINT AS n_phones,
-          |  md5(regexp_replace(regexp_replace(text,
-          |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-          |    '\+?[0-9][0-9()\- ]{6,}[0-9]', '<PHONE>', 'g')) AS scrubbed_hash
-          |FROM documents""".stripMargin,
-
-      // word 8-grams over the same portable ws split; w[i:i+7] is the
-      // 8-element inclusive slice, range is stop-exclusive
-      "text_boilerplate" ->
-        """WITH t AS (SELECT doc_id,
-          |    list_filter(string_split_regex(lower(text), '[\t\n\x0b\f\r ]+'),
-          |                x -> x <> '') AS w
-          |  FROM documents),
-          |g AS (SELECT doc_id,
-          |        unnest([array_to_string(w[i:i+7], ' ') for i in range(1, len(w) - 6)]) AS gram
-          |      FROM t WHERE len(w) >= 8),
-          |f AS (SELECT gram, doc_id, count(*) AS n_in_doc FROM g GROUP BY 1, 2),
-          |a AS (SELECT gram, count(*) AS n_docs,
-          |             cast(sum(n_in_doc) as bigint) AS n_total
-          |      FROM f GROUP BY 1)
-          |SELECT gram, n_docs, n_total FROM a WHERE n_docs >= 2
-          |ORDER BY n_docs DESC, n_total DESC, gram ASC LIMIT 20""".stripMargin,
-
-      // the composed pipeline, replayed stage by stage in SQL: langid +
-      // quality CTEs (same formulas as text_langid/text_quality), exact
-      // dedup keep-first via row_number over the content hash, 8-gram
-      // decontamination vs the doc_id % 10 = 0 slice, chunk count
-      "pipeline_prepare" ->
-        """WITH w AS (SELECT doc_id,
-          |    str_split(regexp_replace(lower(text), '[\t\n\x0b\f\r ]+', ' ', 'g'), ' ') AS t
-          |  FROM documents),
-          |c AS (SELECT doc_id,
-          |    len(list_filter(t, x -> x IN ('the','and','of','to','is','in','that','it'))) AS en,
-          |    len(list_filter(t, x -> x IN ('der','die','das','und','ist','nicht','ein','zu'))) AS de,
-          |    len(list_filter(t, x -> x IN ('le','la','les','et','est','une','que','pas'))) AS fr,
-          |    len(list_filter(t, x -> x IN ('el','la','los','y','es','una','que','no'))) AS es,
-          |    len(list_filter(t, x -> x IN ('il','la','che','e','di','un','per','non'))) AS it
-          |  FROM w),
-          |lang AS (SELECT doc_id,
-          |  CASE WHEN greatest(en, de, fr, es, it) = 0 THEN 'und'
-          |       WHEN en >= de AND en >= fr AND en >= es AND en >= it THEN 'en'
-          |       WHEN de >= fr AND de >= es AND de >= it THEN 'de'
-          |       WHEN fr >= es AND fr >= it THEN 'fr'
-          |       WHEN es >= it THEN 'es'
-          |       ELSE 'it' END AS lang_pred
-          |  FROM c),
-          |s AS (SELECT doc_id,
-          |    length(text)::DOUBLE AS len,
-          |    len(regexp_extract_all(text, '\p{L}'))::DOUBLE AS n_alpha,
-          |    len(regexp_extract_all(text, '[!-/:-@\[-`{-~]'))::DOUBLE AS n_punct,
-          |    len(regexp_extract_all(text, '[^\t\n\x0b\f\r ]+'))::DOUBLE AS n_tokens
-          |  FROM documents),
-          |qual AS (SELECT doc_id,
-          |  greatest(0.0, least(1.0,
-          |    (CASE WHEN len = 0 THEN 0.0 ELSE n_alpha / len END) * 0.4
-          |    + least(len / 200.0, 1.0) * 0.2
-          |    + least(n_tokens / 30.0, 1.0) * 0.2
-          |    + greatest(0.0, 1.0 - (CASE WHEN len = 0 THEN 0.0 ELSE n_punct / len END) * 4.0) * 0.2
-          |  )) AS quality
-          |  FROM s),
-          |surv AS (SELECT d.doc_id, d.text, qual.quality
-          |  FROM documents d
-          |  JOIN lang ON d.doc_id = lang.doc_id
-          |  JOIN qual ON d.doc_id = qual.doc_id
-          |  WHERE d.doc_id % 10 <> 0 AND lang.lang_pred = 'en' AND qual.quality >= 0.5),
-          |kept AS (SELECT doc_id, text, quality FROM (
-          |    SELECT *, row_number() OVER (
-          |      PARTITION BY md5(lower(regexp_replace(text, '[\t\n\x0b\f\r ]+', ' ', 'g')))
-          |      ORDER BY doc_id) AS rn
-          |    FROM surv) WHERE rn = 1),
-          |kw AS (SELECT doc_id,
-          |    list_filter(string_split_regex(lower(text), '[\t\n\x0b\f\r ]+'),
-          |                x -> x <> '') AS w
-          |  FROM kept),
-          |kg AS (SELECT doc_id,
-          |        unnest([array_to_string(w[i:i+7], ' ') for i in range(1, len(w) - 6)]) AS gram
-          |      FROM kw WHERE len(w) >= 8),
-          |bw AS (SELECT doc_id,
-          |    list_filter(string_split_regex(lower(text), '[\t\n\x0b\f\r ]+'),
-          |                x -> x <> '') AS w
-          |  FROM documents WHERE doc_id % 10 = 0),
-          |bg AS (SELECT DISTINCT
-          |        unnest([array_to_string(w[i:i+7], ' ') for i in range(1, len(w) - 6)]) AS gram
-          |      FROM bw WHERE len(w) >= 8),
-          |cont AS (SELECT DISTINCT kg.doc_id FROM kg JOIN bg USING (gram))
-          |SELECT k.doc_id, k.quality,
-          |       ((length(k.text) - 1) // 300 + 1)::BIGINT AS n_chunks
-          |FROM kept k WHERE k.doc_id NOT IN (SELECT doc_id FROM cont)""".stripMargin,
-
-      // same tokenization as text_boilerplate; benchmark slice is
-      // doc_id % 10 = 0, n_contaminated = distinct overlapping 8-grams
-      "text_decontaminate" ->
-        """WITH t AS (SELECT doc_id,
-          |    list_filter(string_split_regex(lower(text), '[\t\n\x0b\f\r ]+'),
-          |                x -> x <> '') AS w
-          |  FROM documents),
-          |g AS (SELECT doc_id,
-          |        unnest([array_to_string(w[i:i+7], ' ') for i in range(1, len(w) - 6)]) AS gram
-          |      FROM t WHERE len(w) >= 8),
-          |b AS (SELECT DISTINCT gram FROM g WHERE doc_id % 10 = 0),
-          |tr AS (SELECT DISTINCT doc_id, gram FROM g WHERE doc_id % 10 <> 0)
-          |SELECT tr.doc_id, count(*)::BIGINT AS n_contaminated
-          |FROM tr JOIN b USING (gram) GROUP BY 1""".stripMargin,
-      // the oracle replays BOTH the exact Jaccard and the full KMV
-      // estimator (bottom-1024 md5 priorities per split, union bottom-k,
-      // both-membership fraction) — the estimate is deterministic, so it
-      // hash-checks, and err_ok re-derives on the oracle side too
-      "set_overlap_kmv" ->
-        """WITH t AS (SELECT
-          |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS b,
-          |    list_filter(string_split_regex(lower(text), '[\t\n\x0b\f\r ]+'),
-          |                x -> x <> '') AS w
-          |  FROM documents),
-          |g AS (SELECT b,
-          |        unnest([array_to_string(w[i:i+4], ' ') for i in range(1, len(w) - 3)]) AS gram
-          |      FROM t WHERE len(w) >= 5),
-          |pa AS (SELECT DISTINCT
-          |    CAST(('0x' || substr(md5(gram), 1, 15)) AS BIGINT) AS pri FROM g WHERE b < 80),
-          |pb AS (SELECT DISTINCT
-          |    CAST(('0x' || substr(md5(gram), 1, 15)) AS BIGINT) AS pri FROM g WHERE b >= 80),
-          |ska AS (SELECT pri FROM pa ORDER BY pri LIMIT 1024),
-          |skb AS (SELECT pri FROM pb ORDER BY pri LIMIT 1024),
-          |u AS (SELECT pri, max(in_a) AS in_a, max(in_b) AS in_b FROM (
-          |        SELECT pri, 1 AS in_a, 0 AS in_b FROM ska
-          |        UNION ALL SELECT pri, 0, 1 FROM skb) x
-          |      GROUP BY pri ORDER BY pri LIMIT 1024),
-          |est AS (SELECT count(*)::BIGINT AS n_union_sk,
-          |        coalesce(sum(CASE WHEN in_a = 1 AND in_b = 1 THEN 1 ELSE 0 END), 0)::BIGINT AS n_both
-          |      FROM u),
-          |ex AS (SELECT
-          |    (SELECT count(DISTINCT gram) FROM g WHERE b < 80) AS na,
-          |    (SELECT count(DISTINCT gram) FROM g WHERE b >= 80) AS nb,
-          |    (SELECT count(*) FROM (SELECT DISTINCT gram FROM g WHERE b < 80) a
-          |       JOIN (SELECT DISTINCT gram FROM g WHERE b >= 80) e2 USING (gram)) AS ni)
-          |SELECT n_union_sk, n_both,
-          |       CAST(10000 * n_both // greatest(n_union_sk, 1) AS BIGINT) AS jaccard_bp_est,
-          |       CAST(10000 * ni // greatest(na + nb - ni, 1) AS BIGINT) AS jaccard_bp_exact,
-          |       abs(10000 * n_both // greatest(n_union_sk, 1)
-          |           - 10000 * ni // greatest(na + nb - ni, 1)) <= 300 AS err_ok
-          |FROM est, ex""".stripMargin,
-
-      // the oracle replays the repetition signals as the naive
-      // unnest + groupBy plan the Spark side deliberately avoids
-      // (in-row array_distinct / sorted-run fold — see
-      // TextAnalysis.repetitionSignals); 3-gram = w[i:i+2], i ≤ len-2
-      "text_repetition" ->
-        """WITH t AS (SELECT doc_id,
-          |    list_filter(string_split_regex(lower(text), '[\t\n\x0b\f\r ]+'),
-          |                x -> x <> '') AS w
-          |  FROM documents),
-          |g AS (SELECT doc_id, w,
-          |        CASE WHEN len(w) >= 3
-          |          THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]
-          |          ELSE [] END AS gr
-          |      FROM t),
-          |top AS (SELECT doc_id, max(cnt) AS top_cnt FROM (
-          |          SELECT doc_id, x, count(*) AS cnt
-          |          FROM (SELECT doc_id, unnest(gr) AS x FROM g)
-          |          GROUP BY doc_id, x)
-          |        GROUP BY doc_id)
-          |SELECT g.doc_id,
-          |       len(w)::BIGINT AS n_words,
-          |       len(list_distinct(w))::BIGINT AS n_distinct_words,
-          |       len(gr)::BIGINT AS n_grams,
-          |       len(list_distinct(gr))::BIGINT AS n_distinct_grams,
-          |       coalesce(top.top_cnt, 0)::BIGINT AS top_gram_count
-          |FROM g LEFT JOIN top ON g.doc_id = top.doc_id""".stripMargin,
-      "sample_token_budget" ->
-        """WITH d AS (
-          |  SELECT doc_id, cast(doc_id % 4 as int) AS source,
-          |         len(regexp_extract_all(text, '[^\t\n\x0b\f\r ]+'))::BIGINT AS n_tok,
-          |         CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS prio
-          |  FROM documents),
-          |tot AS (SELECT cast(sum(n_tok) as bigint) AS total_tok FROM d),
-          |b AS (SELECT d.*, total_tok,
-          |        CASE source WHEN 0 THEN 1200 WHEN 1 THEN 900
-          |                    WHEN 2 THEN 600 ELSE 300 END AS bp,
-          |        cast((total_tok * CASE source WHEN 0 THEN 1200 WHEN 1 THEN 900
-          |                          WHEN 2 THEN 600 ELSE 300 END) // 10000 as bigint)
-          |          AS budget_tok,
-          |        cast(sum(n_tok) OVER (PARTITION BY source
-          |          ORDER BY prio, doc_id) as bigint) AS cum
-          |      FROM d, tot)
-          |SELECT source, count(*) AS n_docs_kept,
-          |       cast(sum(n_tok) as bigint) AS n_tokens_kept,
-          |       cast(max(budget_tok) as bigint) AS budget_tok
-          |FROM b WHERE cum <= budget_tok GROUP BY source""".stripMargin,
-      "text_dup_substrings" ->
-        """WITH grams AS (
-          |  SELECT DISTINCT doc_id, g FROM (
-          |    SELECT doc_id,
-          |           unnest(list_transform(generate_series(1, greatest(len(text) - 19, 0)),
-          |                                 i -> substr(text, i, 20))) AS g
-          |    FROM documents)),
-          |dfg AS (SELECT g, count(DISTINCT doc_id) AS docs FROM grams GROUP BY 1)
-          |SELECT doc_id, count(*) AS n_grams,
-          |       cast(sum(CASE WHEN docs >= 2 THEN 1 ELSE 0 END) as bigint) AS n_shared_grams
-          |FROM grams JOIN dfg USING (g) GROUP BY 1""".stripMargin,
-      "ts_ewma" ->
-        """WITH ev AS (
-          |  SELECT user_id, epoch_ns(ts) // 1000000 AS t, event_id,
-          |         cast(floor(value * 1000) as bigint) AS v
-          |  FROM events),
-          |agg AS (
-          |  SELECT user_id, list(v ORDER BY t, event_id) AS l
-          |  FROM ev GROUP BY 1)
-          |SELECT user_id, cast(len(l) as bigint) AS n_events,
-          |       cast(list_reduce(l, (acc, x) -> (acc + x) // 2) as bigint) AS ewma_milli,
-          |       true AS nonneg_ok
-          |FROM agg""".stripMargin,
-      // sketch gate (same recipe as distinct_fm): the oracle recomputes
-      // the exact top-5 mass and expects the sketch's to equal it
-      "agg_approx_topk" ->
-        """SELECT cast(5 as bigint) AS k,
-          |       (SELECT cast(sum(cnt) as bigint) FROM (
-          |          SELECT count(*) AS cnt
-          |          FROM lineitem GROUP BY cast(floor(l_quantity) as bigint)
-          |          ORDER BY cnt DESC LIMIT 5)) AS exact_top5_mass,
-          |       true AS topk_ok""".stripMargin,
-
-      // string-for-string replay of the exact segment-dedup form:
-      // same 5-word split (both engines split on literal space), same
-      // doc-frequency threshold, same ordered reassembly. count(*)
-      // FILTER is BIGINT like Spark's sum(when); string_agg over zero
-      // kept rows is NULL, coalesced to '' to match concat_ws
-      "text_seg_dedup" ->
-        """WITH words AS (
-          |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-          |segs AS (
-          |  SELECT doc_id, g AS seg_no,
-          |         array_to_string(ws[(g*5+1):((g+1)*5)], ' ') AS seg
-          |  FROM words, unnest(range(0, (len(ws)+4)//5)) AS t(g)),
-          |freq AS (
-          |  SELECT seg, count(DISTINCT doc_id) AS nd FROM segs GROUP BY seg)
-          |SELECT s.doc_id,
-          |       count(*) AS n_segs,
-          |       count(*) FILTER (WHERE f.nd < 3) AS n_kept,
-          |       coalesce(string_agg(s.seg, ' ' ORDER BY s.seg_no)
-          |                  FILTER (WHERE f.nd < 3), '') AS clean
-          |FROM segs s JOIN freq f USING (seg)
-          |GROUP BY s.doc_id""".stripMargin,
-
-      // starts 1, 1+stride, … ≤ length on both sides (Spark sequence is
-      // stop-inclusive; DuckDB range is stop-exclusive, hence length+1)
-      "text_chunks" ->
-        """SELECT doc_id, start,
-          |       length(substr(text, start::INT, 400))::BIGINT AS chunk_len,
-          |       md5(substr(text, start::INT, 400)) AS chunk_hash
-          |FROM (SELECT doc_id, text,
-          |        unnest(range(1, length(text) + 1, 300)) AS start
-          |      FROM documents)""".stripMargin,
-
-      "events_dq" ->
-        """SELECT event_type, count(*) AS n_rows,
-          |       cast(sum(CASE WHEN props IS NULL THEN 1 ELSE 0 END) as bigint) AS n_null_props,
-          |       cast(sum(CASE WHEN value < 0 THEN 1 ELSE 0 END) as bigint) AS n_neg_value,
-          |       count(*) - count(DISTINCT event_id) AS n_dup_ids,
-          |       min(value) AS min_value, max(value) AS max_value
-          |FROM events GROUP BY event_type""".stripMargin,
-
-      // same explicit whitespace class as the Spark split; ASCII
-      // lowercasing agrees between engines (and the corpus is ASCII)
-      "text_topterms" ->
-        """SELECT term, count(*) AS n_occurrences,
-          |       count(DISTINCT doc_id) AS doc_freq
-          |FROM (SELECT doc_id,
-          |        unnest(string_split_regex(lower(text), '[\t\n\x0b\f\r ]+')) AS term
-          |      FROM documents)
-          |WHERE term <> ''
-          |GROUP BY term
-          |ORDER BY doc_freq DESC, n_occurrences DESC, term ASC
-          |LIMIT 30""".stripMargin,
-      "text_pack" ->
-        """WITH d AS (SELECT doc_id, cast(doc_id % 32 as int) AS shard,
-          |    len(regexp_extract_all(text, '[^\t\n\x0b\f\r ]+'))::BIGINT AS n_tok
-          |  FROM documents),
-          |c AS (SELECT shard, doc_id, n_tok,
-          |    sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id) AS cum FROM d)
-          |SELECT shard, cast((cum - n_tok) // 512 AS BIGINT) AS bin,
-          |       count(*) AS n_docs, cast(sum(n_tok) as bigint) AS n_tokens
-          |FROM c GROUP BY 1, 2""".stripMargin,
-      // tf*n_docs/df is a correctly-rounded IEEE division of exact
-      // integers on both engines, so the per-doc ordering is identical;
-      // the double itself never appears in the output
-      "text_tfidf" ->
-        """WITH terms AS (
-          |  SELECT doc_id,
-          |         unnest(string_split_regex(lower(text), '[\t\n\x0b\f\r ]+')) AS term
-          |  FROM documents),
-          |tfx AS (SELECT doc_id, term, count(*) AS tf
-          |        FROM terms WHERE term <> '' GROUP BY 1, 2),
-          |dfx AS (SELECT term, count(*) AS df FROM tfx GROUP BY 1),
-          |n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents)
-          |SELECT doc_id, term, tf, df, rank FROM (
-          |  SELECT tfx.doc_id, tfx.term, tf, df,
-          |         row_number() OVER (PARTITION BY tfx.doc_id
-          |           ORDER BY tf * n_docs / df DESC, tfx.term ASC) AS rank
-          |  FROM tfx JOIN dfx USING (term), n)
-          |WHERE rank <= 3""".stripMargin,
-
-      "drift_l1" ->
-        """WITH d AS (
-          |  SELECT least(9, len(regexp_extract_all(text, '[^\t\n\x0b\f\r ]+'))::BIGINT // 10) AS bucket,
-          |         CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS b
-          |  FROM documents),
-          |c AS (
-          |  SELECT bucket,
-          |         cast(sum(CASE WHEN b < 80 THEN 1 ELSE 0 END) as bigint) AS c_train,
-          |         cast(sum(CASE WHEN b >= 90 THEN 1 ELSE 0 END) as bigint) AS c_test
-          |  FROM d GROUP BY bucket),
-          |t AS (SELECT cast(sum(c_train) as bigint) AS n_train,
-          |             cast(sum(c_test) as bigint) AS n_test FROM c)
-          |SELECT cast(sum(abs(c_train * n_test - c_test * n_train)) as bigint) AS l1_cross,
-          |       max(n_train) AS n_train, max(n_test) AS n_test
-          |FROM c, t""".stripMargin,
-      // PSI over the same bins, identical Laplace smoothing; ln over
-      // identical rationals in both engines, floor'd to micro-units
-      "drift_psi" ->
-        """WITH d AS (
-          |  SELECT least(9, len(regexp_extract_all(text, '[^\t\n\x0b\f\r ]+'))::BIGINT // 10) AS bucket,
-          |         CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS b
-          |  FROM documents),
-          |c AS (
-          |  SELECT bucket,
-          |         cast(sum(CASE WHEN b < 80 THEN 1 ELSE 0 END) as bigint) AS c_train,
-          |         cast(sum(CASE WHEN b >= 90 THEN 1 ELSE 0 END) as bigint) AS c_test
-          |  FROM d GROUP BY bucket),
-          |t AS (SELECT cast(sum(c_train) as bigint) AS n_train,
-          |             cast(sum(c_test) as bigint) AS n_test,
-          |             cast(count(*) as bigint) AS n_buckets FROM c),
-          |pq AS (SELECT (c_train + 1)::DOUBLE / (n_train + n_buckets) AS p,
-          |              (c_test + 1)::DOUBLE / (n_test + n_buckets) AS q,
-          |              n_train, n_test
-          |       FROM c, t),
-          |tm AS (SELECT cast(floor((p - q) * ln(p / q) * 1e6) as bigint) AS term_micro,
-          |              n_train, n_test
-          |       FROM pq)
-          |SELECT cast(sum(term_micro) as bigint) AS psi_micro,
-          |       max(n_train) AS n_train, max(n_test) AS n_test
-          |FROM tm""".stripMargin,
-      "dq_orphans" ->
-        """SELECT
-          |  (SELECT count(*) FROM lineitem WHERE l_partkey NOT IN
-          |     (SELECT p_partkey FROM part)) AS n_orphan_part,
-          |  (SELECT count(*) FROM lineitem WHERE l_suppkey NOT IN
-          |     (SELECT s_suppkey FROM supplier)) AS n_orphan_supp,
-          |  (SELECT count(*) FROM lineitem WHERE l_partkey NOT IN
-          |     (SELECT p_partkey FROM part WHERE p_partkey % 2 = 0)) AS n_orphan_halfdim""".stripMargin,
-      // identical md5-derived bucket on both sides: first 8 hex chars of
-      // md5(doc_id) as an unsigned int, mod 100
-      "sample_split" ->
-        """WITH d AS (SELECT text,
-          |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS b
-          |  FROM documents)
-          |SELECT CASE WHEN b < 80 THEN 'train'
-          |            WHEN b < 90 THEN 'valid'
-          |            ELSE 'test' END AS split,
-          |       count(*) AS n_docs,
-          |       cast(sum(length(text)) as bigint) AS n_chars
-          |FROM d GROUP BY 1""".stripMargin,
-      // dedup_cluster's exact pair + transitive-closure replay, then
-      // the sample_split md5 bucketing applied to the CLUSTER label
-      "sample_split_safe" ->
-        """WITH RECURSIVE
-          |dd AS (SELECT doc_id, text,
-          |         lower(regexp_replace(text, '[\t\n\x0b\f\r ]+', ' ', 'g')) AS t
-          |       FROM documents WHERE doc_id < 500),
-          |g AS (SELECT doc_id,
-          |        CASE WHEN length(t) < 5 THEN [t]
-          |             ELSE list_distinct([substr(t, i, 5) for i in range(1, length(t) - 3)]) END AS sh
-          |      FROM dd),
-          |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          |      FROM g a JOIN g b ON a.doc_id < b.doc_id
-          |      WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
-          |            (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5),
-          |e AS (SELECT id_a AS s, id_b AS d FROM p UNION SELECT id_b, id_a FROM p),
-          |reach(s, d) AS (SELECT s, d FROM e
-          |                UNION
-          |                SELECT r.s, e.d FROM reach r JOIN e ON r.d = e.s),
-          |labels AS (SELECT s AS node, least(s, min(d)) AS cluster_id
-          |           FROM reach GROUP BY s),
-          |lab AS (SELECT dd.doc_id, dd.text,
-          |          coalesce(l.cluster_id, dd.doc_id) AS label
-          |        FROM dd LEFT JOIN labels l ON l.node = dd.doc_id),
-          |sp AS (SELECT text, label,
-          |         CAST(('0x' || substr(md5(CAST(label AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS b
-          |       FROM lab)
-          |SELECT CASE WHEN b < 80 THEN 'train'
-          |            WHEN b < 90 THEN 'valid'
-          |            ELSE 'test' END AS split,
-          |       count(*) AS n_docs,
-          |       count(DISTINCT label) AS n_groups,
-          |       cast(sum(length(text)) as bigint) AS n_chars
-          |FROM sp GROUP BY 1""".stripMargin,
-      "sample_bottomk" ->
-        """SELECT source, doc_id, CAST(rk AS BIGINT) AS rk FROM (
-          |  SELECT source, doc_id,
-          |    row_number() OVER (PARTITION BY source
-          |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-          |  FROM documents)
-          |WHERE rk <= 10""".stripMargin,
-
-      "events_window_agg" ->
-        """SELECT cast(floor(epoch(ts) / 300) * 300 as bigint) AS window_start_s,
-          |       event_type, count(*) AS n_events,
-          |       cast(sum(cast(floor(value * 1000) as bigint)) as bigint) AS sum_value_milli
-          |FROM events GROUP BY 1, 2""".stripMargin,
-      "events_hop_window" ->
-        """SELECT ws AS window_start_s, event_type, count(*) AS n_events
-          |FROM events,
-          |     unnest([cast(floor(epoch(ts) / 300) * 300 as bigint),
-          |             cast(floor(epoch(ts) / 300) * 300 - 300 as bigint)]) AS t(ws)
-          |GROUP BY 1, 2""".stripMargin,
-      // Spark compares at µs resolution (ns parquet timestamps are
-      // floored to µs on ingest), so the oracle floors epoch_ns the
-      // same way before comparing
-      "events_stream_join" ->
-        """SELECT c.event_id AS click_id, c.user_id AS user_id,
-          |       epoch_ns(c.ts) // 1000000 AS click_ms,
-          |       p.event_id AS purchase_id,
-          |       epoch_ns(p.ts) // 1000000 AS purchase_ms
-          |FROM events c JOIN events p
-          |  ON p.user_id = c.user_id
-          | AND c.event_type = 'click' AND p.event_type = 'purchase'
-          | AND epoch_ns(p.ts) // 1000 >= epoch_ns(c.ts) // 1000
-          | AND epoch_ns(p.ts) // 1000 <= epoch_ns(c.ts) // 1000 + 600000000""".stripMargin,
-      // LEFT OUTER form: event_type filters move into subqueries (an
-      // ON-clause predicate cannot drop left rows), sentinels match the
-      // Spark side's -1 coalesce
-      "events_stream_join_outer" ->
-        """SELECT c.event_id AS click_id, c.user_id AS user_id,
-          |       epoch_ns(c.ts) // 1000000 AS click_ms,
-          |       coalesce(p.event_id, -1) AS purchase_id,
-          |       coalesce(epoch_ns(p.ts) // 1000000, -1) AS purchase_ms
-          |FROM (SELECT * FROM events WHERE event_type = 'click') c
-          |LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-          |  ON p.user_id = c.user_id
-          | AND epoch_ns(p.ts) // 1000 >= epoch_ns(c.ts) // 1000
-          | AND epoch_ns(p.ts) // 1000 <= epoch_ns(c.ts) // 1000 + 600000000""".stripMargin,
-      // session_window boundary: an event exactly gap after the previous
-      // MERGES into the session (inclusive overlap; pinned by a spec) —
-      // same > split as events_sessionize, end = last event + gap
-      "events_session_window" ->
-        """WITH e AS (
-          |  SELECT user_id, cast(epoch_ms(ts) as bigint) AS ts_ms,
-          |         lag(cast(epoch_ms(ts) as bigint)) OVER (
-          |           PARTITION BY user_id ORDER BY ts) AS prev_ms
-          |  FROM events),
-          |s AS (
-          |  SELECT user_id, ts_ms,
-          |         sum(CASE WHEN prev_ms IS NULL OR ts_ms - prev_ms > 1800000
-          |                  THEN 1 ELSE 0 END) OVER (
-          |           PARTITION BY user_id ORDER BY ts_ms
-          |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-          |  FROM e)
-          |SELECT user_id, min(ts_ms) AS session_start_ms,
-          |       max(ts_ms) + 1800000 AS session_end_ms,
-          |       count(*) AS n_events
-          |FROM s GROUP BY user_id, session_seq""".stripMargin,
-
-      "events_sessionize" ->
-        """WITH e AS (
-          |  SELECT user_id, cast(epoch_ms(ts) as bigint) AS ts_ms,
-          |         lag(cast(epoch_ms(ts) as bigint)) OVER (
-          |           PARTITION BY user_id ORDER BY ts) AS prev_ms
-          |  FROM events),
-          |s AS (
-          |  SELECT user_id, ts_ms,
-          |         sum(CASE WHEN prev_ms IS NULL OR ts_ms - prev_ms > 1800000
-          |                  THEN 1 ELSE 0 END) OVER (
-          |           PARTITION BY user_id ORDER BY ts_ms
-          |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-          |  FROM e)
-          |SELECT user_id, min(ts_ms) AS session_start, max(ts_ms) AS session_end,
-          |       count(*) AS n_events
-          |FROM s GROUP BY user_id, session_seq""".stripMargin,
-
-      "ts_interpolate" ->
-        """WITH daily AS (
-          |  SELECT user_id, date_trunc('day', ts) AS day,
-          |         cast(sum(cast(floor(value * 1000) as bigint)) as bigint) AS v
-          |  FROM events GROUP BY 1, 2),
-          |spine AS (
-          |  SELECT user_id,
-          |         unnest(generate_series(min(day), max(day), INTERVAL 1 DAY)) AS day
-          |  FROM daily GROUP BY user_id),
-          |j AS (
-          |  SELECT s.user_id, s.day,
-          |         date_diff('day', DATE '1970-01-01', s.day::date) AS d, daily.v
-          |  FROM spine s LEFT JOIN daily
-          |    ON s.user_id = daily.user_id AND s.day = daily.day),
-          |n AS (
-          |  SELECT user_id, day, d, v,
-          |    last_value(v IGNORE NULLS) OVER wp AS pv,
-          |    last_value(CASE WHEN v IS NOT NULL THEN d END IGNORE NULLS)
-          |      OVER wp AS pd,
-          |    first_value(v IGNORE NULLS) OVER wn AS nv,
-          |    first_value(CASE WHEN v IS NOT NULL THEN d END IGNORE NULLS)
-          |      OVER wn AS nd
-          |  FROM j
-          |  WINDOW wp AS (PARTITION BY user_id ORDER BY d
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-          |  wn AS (PARTITION BY user_id ORDER BY d
-          |    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-          |SELECT user_id, epoch_ms(day) AS day_ms,
-          |       CASE WHEN v IS NOT NULL THEN v
-          |            ELSE (pv * (nd - d) + nv * (d - pd)) // (nd - pd)
-          |       END AS v_milli,
-          |       (v IS NULL) AS is_interp,
-          |       (coalesce(pv, v) >= 0 AND coalesce(nv, v) >= 0) AS nonneg_ok
-          |FROM n""".stripMargin,
-
-      "ts_anomaly" ->
-        """WITH e AS (
-          |  SELECT user_id, cast(epoch_ms(ts) as bigint) AS ts_ms, event_id,
-          |         cast(floor(value * 1000) as bigint) AS v
-          |  FROM events),
-          |w AS (
-          |  SELECT user_id, v,
-          |         count(v) OVER win AS n,
-          |         cast(sum(v) OVER win as bigint) AS sm,
-          |         cast(sum(v * v) OVER win as bigint) AS ss,
-          |         cast(max(abs(v)) OVER (PARTITION BY user_id) as bigint)
-          |           AS mxa
-          |  FROM e
-          |  WINDOW win AS (PARTITION BY user_id ORDER BY ts_ms, event_id
-          |    ROWS BETWEEN 8 PRECEDING AND 1 PRECEDING))
-          |SELECT user_id, count(*) AS n_scored,
-          |       cast(sum(CASE WHEN (n * v - sm) * (n * v - sm) >
-          |                          4 * (n * ss - sm * sm)
-          |                     THEN 1 ELSE 0 END) as bigint) AS n_anomalies,
-          |       (max(mxa) < 100000000) AS bounds_ok
-          |FROM w WHERE n >= 4 GROUP BY user_id""".stripMargin,
-
-      "text_clean_segments" ->
-        """WITH w AS (
-          |  SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-          |s AS (
-          |  SELECT doc_id, i AS pos,
-          |         array_to_string(words[(i*10+1):(i*10+10)], ' ') AS seg
-          |  FROM w, unnest(range(cast(ceil(len(words) / 10.0) as bigint))) AS t(i)),
-          |d AS (SELECT seg, count(DISTINCT doc_id) AS df FROM s GROUP BY seg),
-          |k AS (SELECT s.*, (d.df < 2) AS kept FROM s JOIN d USING (seg))
-          |SELECT doc_id, count(*) AS n_segs,
-          |       cast(sum(CASE WHEN kept THEN 1 ELSE 0 END) as bigint) AS n_kept,
-          |       md5(coalesce(
-          |         string_agg(seg, ' ' ORDER BY pos) FILTER (WHERE kept),
-          |         '')) AS clean_md5,
-          |       cast(length(coalesce(
-          |         string_agg(seg, ' ' ORDER BY pos) FILTER (WHERE kept),
-          |         '')) as bigint) AS clean_len
-          |FROM k GROUP BY doc_id""".stripMargin,
-
-      // the oracle rebuilds the SAME ±1 matrix from md5("i|j") and
-      // replays the integer projection exactly (no rank-only weakening)
-      "embed_rp" ->
-        """WITH m AS (
-          |  SELECT vec_id, list_transform(embedding,
-          |           v -> cast(floor(cast(v as double) * 1000) as bigint)) AS m
-          |  FROM embeddings),
-          |c AS (
-          |  SELECT vec_id, generate_subscripts(m, 1) - 1 AS i, unnest(m) AS mi
-          |  FROM m),
-          |s AS (
-          |  SELECT i.i, j.j,
-          |         CASE WHEN md5(i.i || '|' || j.j)[1] BETWEEN '0' AND '7'
-          |              THEN 1 ELSE -1 END AS sgn
-          |  FROM (SELECT unnest(range(64)) AS i) i,
-          |       (SELECT unnest(range(16)) AS j) j)
-          |SELECT vec_id, j, cast(sum(mi * sgn) as bigint) AS y
-          |FROM c JOIN s ON c.i = s.i
-          |GROUP BY vec_id, j""".stripMargin,
-
-      "sample_hardneg" ->
-        """SELECT probe_id, corpus_id, "rank" FROM (
-          |  SELECT p.vec_id AS probe_id, c.vec_id AS corpus_id,
-          |         row_number() OVER (PARTITION BY p.vec_id
-          |           ORDER BY list_cosine_similarity(c.embedding::DOUBLE[],
-          |                                           p.embedding::DOUBLE[]) DESC,
-          |                    c.vec_id ASC) AS "rank"
-          |  FROM embeddings c
-          |  JOIN (SELECT * FROM embeddings WHERE vec_id <= 20) p
-          |    ON c.vec_id <> p.vec_id AND c.label <> p.label)
-          |WHERE "rank" <= 5""".stripMargin,
-
-      "dedup_containment" ->
-        """WITH d AS (
-          |  SELECT doc_id, lower(regexp_replace(text, '[\t\n\x0b\f\r ]+', ' ', 'g')) AS t
-          |  FROM documents WHERE doc_id < 200),
-          |g AS (
-          |  SELECT doc_id,
-          |         CASE WHEN length(t) < 5 THEN [t]
-          |              ELSE list_distinct([substr(t, i, 5) for i in range(1, length(t) - 3)]) END AS sh
-          |  FROM d)
-          |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-          |       cast(len(list_intersect(a.sh, b.sh)) as bigint) AS n_common,
-          |       cast(len(a.sh) as bigint) AS n_a
-          |FROM g a JOIN g b ON a.doc_id <> b.doc_id
-          |WHERE len(list_intersect(a.sh, b.sh)) * 10 >= len(a.sh) * 7""".stripMargin,
-
-      "graph_jaccard_neighbors" ->
-        """WITH knn AS MATERIALIZED (
-          |  SELECT probe_id, corpus_id FROM (
-          |    SELECT p.vec_id AS probe_id, c.vec_id AS corpus_id,
-          |           row_number() OVER (PARTITION BY p.vec_id
-          |             ORDER BY list_cosine_similarity(c.embedding::DOUBLE[],
-          |                                             p.embedding::DOUBLE[]) DESC,
-          |                      c.vec_id ASC) AS rk
-          |    FROM embeddings c JOIN embeddings p ON c.vec_id <> p.vec_id)
-          |  WHERE rk <= 3),
-          |m AS MATERIALIZED (SELECT a.probe_id AS src, a.corpus_id AS dst
-          |  FROM knn a JOIN knn b ON a.probe_id = b.corpus_id
-          |                       AND a.corpus_id = b.probe_id
-          |  WHERE a.probe_id < a.corpus_id),
-          |e0 AS MATERIALIZED (
-          |  SELECT src AS u, dst AS v FROM m UNION ALL SELECT dst, src FROM m),
-          |deg AS (SELECT u, count(*) AS deg FROM e0 GROUP BY u),
-          |cn AS (SELECT x.u AS src, y.u AS dst, count(*) AS c
-          |       FROM e0 x JOIN e0 y ON x.v = y.v AND x.u < y.u
-          |       GROUP BY x.u, y.u)
-          |SELECT m.src, m.dst,
-          |       cast(coalesce(cn.c, 0) as bigint) AS n_common,
-          |       cast(da.deg + db.deg - 2 - coalesce(cn.c, 0) as bigint) AS n_union
-          |FROM m
-          |LEFT JOIN cn ON cn.src = m.src AND cn.dst = m.dst
-          |JOIN deg da ON da.u = m.src
-          |JOIN deg db ON db.u = m.dst""".stripMargin,
-
-      "join_asof_nearest" ->
-        """WITH e AS (
-          |  SELECT user_id, cast(epoch_ms(ts) as bigint) AS ts_ms,
-          |         event_id, event_type
-          |  FROM events WHERE event_type IN ('click', 'purchase')),
-          |w AS (
-          |  SELECT *,
-          |    last_value(CASE WHEN event_type = 'click' THEN event_id END
-          |               IGNORE NULLS) OVER wp AS pid,
-          |    last_value(CASE WHEN event_type = 'click' THEN ts_ms END
-          |               IGNORE NULLS) OVER wp AS pts,
-          |    first_value(CASE WHEN event_type = 'click' THEN event_id END
-          |                IGNORE NULLS) OVER wn AS nid,
-          |    first_value(CASE WHEN event_type = 'click' THEN ts_ms END
-          |                IGNORE NULLS) OVER wn AS nts
-          |  FROM e
-          |  WINDOW wp AS (PARTITION BY user_id ORDER BY ts_ms, event_id
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-          |  wn AS (PARTITION BY user_id ORDER BY ts_ms, event_id
-          |    ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING))
-          |SELECT user_id, event_id AS purchase_id,
-          |  CASE WHEN pid IS NOT NULL AND
-          |            (nid IS NULL OR ts_ms - pts <= nts - ts_ms)
-          |       THEN pid ELSE nid END AS click_id,
-          |  CASE WHEN pid IS NOT NULL AND
-          |            (nid IS NULL OR ts_ms - pts <= nts - ts_ms)
-          |       THEN ts_ms - pts ELSE nts - ts_ms END AS abs_lag_ms
-          |FROM w WHERE event_type = 'purchase'""".stripMargin,
-
-      "agg_log_histogram" ->
-        """WITH e AS (
-          |  SELECT event_type, cast(floor(value * 1000) as bigint) AS v
-          |  FROM events)
-          |SELECT event_type,
-          |       CASE WHEN v <= 0 THEN 0
-          |            ELSE cast(length(bin(v)) as bigint) END AS bucket,
-          |       count(*) AS n,
-          |       cast(min(v) as bigint) AS v_min,
-          |       cast(max(v) as bigint) AS v_max
-          |FROM e GROUP BY 1, 2""".stripMargin,
-
-      "sql_lateral" ->
-        """SELECT n.n_name, t.c_custkey, t.bal_cents
-          |FROM nation n
-          |JOIN LATERAL (
-          |  SELECT c_custkey,
-          |         cast(floor(c_acctbal * 100) as bigint) AS bal_cents
-          |  FROM customer
-          |  WHERE c_nationkey = n.n_nationkey
-          |  ORDER BY bal_cents DESC, c_custkey ASC
-          |  LIMIT 2) t ON true""".stripMargin,
-
-      "text_bm25" ->
-        """WITH toks AS (
-          |  SELECT doc_id,
-          |         [x FOR x IN string_split_regex(lower(text), '[\t\n\x0b\f\r ]+')
-          |          IF x <> ''] AS all_toks
-          |  FROM documents),
-          |d AS (
-          |  SELECT doc_id, cast(len(all_toks) as bigint) AS len,
-          |         [x FOR x IN all_toks
-          |          IF x IN ('table', 'query', 'vector')] AS hits
-          |  FROM toks),
-          |corpus AS (
-          |  SELECT count(*) AS n_docs, cast(sum(len) as bigint) AS tot_tok
-          |  FROM d),
-          |tf AS (
-          |  SELECT doc_id, len, term, count(*) AS tf
-          |  FROM (SELECT doc_id, len, unnest(hits) AS term FROM d)
-          |  GROUP BY doc_id, len, term),
-          |df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-          |s AS (
-          |  SELECT doc_id,
-          |    cast(sum(
-          |      (((n_docs - df.df) * 1000) // df.df) * tf.tf * 2200 //
-          |      (tf.tf * 1000 + 300 +
-          |       (900 * ((len * 1000) // (tot_tok // n_docs))) // 1000)
-          |    ) as bigint) AS score_milli
-          |  FROM tf JOIN df USING (term), corpus
-          |  GROUP BY doc_id)
-          |SELECT doc_id, score_milli, "rank" FROM (
-          |  SELECT *, cast(row_number() OVER
-          |    (ORDER BY score_milli DESC, doc_id ASC) as bigint) AS "rank"
-          |  FROM s)
-          |WHERE "rank" <= 50""".stripMargin,
-
-      "agg_decay_sum" ->
-        """WITH e AS (
-          |  SELECT user_id,
-          |         date_diff('day', DATE '1970-01-01',
-          |                   date_trunc('day', ts)::date) AS d,
-          |         cast(floor(value * 1000) as bigint) AS v
-          |  FROM events),
-          |mx AS (SELECT max(d) AS mx FROM e),
-          |k AS (
-          |  SELECT user_id, v,
-          |         cast(least((mx - d) // 7, 62) as bigint) AS k
-          |  FROM e, mx)
-          |SELECT user_id, count(*) AS n_events,
-          |       cast(sum(v // (1::BIGINT << k)) as bigint) AS decayed_sum,
-          |       (min(v) >= 0) AS nonneg_ok
-          |FROM k GROUP BY user_id""".stripMargin,
-
-      "window_gaps_islands" ->
-        """WITH p AS (
-          |  SELECT DISTINCT user_id,
-          |         date_diff('day', DATE '1970-01-01',
-          |                   date_trunc('day', ts)::date) AS d
-          |  FROM events),
-          |i AS (
-          |  SELECT user_id, d,
-          |         d - row_number() OVER (PARTITION BY user_id ORDER BY d)
-          |           AS island
-          |  FROM p),
-          |s AS (
-          |  SELECT user_id, island, count(*) AS len
-          |  FROM i GROUP BY user_id, island)
-          |SELECT user_id, count(*) AS n_streaks,
-          |       cast(max(len) as bigint) AS longest_streak,
-          |       cast(sum(len) as bigint) AS n_active_days
-          |FROM s GROUP BY user_id""".stripMargin,
-
-      "events_markov" ->
-        """WITH e AS (
-          |  SELECT user_id, cast(epoch_ms(ts) as bigint) AS ts_ms,
-          |         event_id, event_type,
-          |         lag(event_type) OVER (PARTITION BY user_id
-          |           ORDER BY epoch_ms(ts), event_id) AS prev_type
-          |  FROM events),
-          |t AS (
-          |  SELECT prev_type, event_type AS next_type, count(*) AS n
-          |  FROM e WHERE prev_type IS NOT NULL
-          |  GROUP BY prev_type, event_type)
-          |SELECT prev_type, next_type, n,
-          |       cast((n * 10000) // sum(n) OVER (PARTITION BY prev_type)
-          |            as bigint) AS p_bp
-          |FROM t""".stripMargin,
-
-      "sample_temperature" ->
-        """WITH src AS (
-          |  SELECT source, count(*) AS n_docs,
-          |         cast(sum(len(regexp_extract_all(text, '[^\t\n\x0b\f\r ]+'))::BIGINT)
-          |              as bigint) AS n_tok
-          |  FROM documents GROUP BY source),
-          |w AS (SELECT *, cast(floor(sqrt(n_tok::DOUBLE) * 1000) as bigint) AS w
-          |      FROM src),
-          |tot AS (SELECT cast(sum(w) as bigint) AS w_sum,
-          |               cast(sum(n_tok) as bigint) AS tok_sum FROM w),
-          |b AS (SELECT *, cast((w * 10000) // w_sum as bigint) AS weight_bp
-          |      FROM w, tot)
-          |SELECT source, n_docs, n_tok, weight_bp,
-          |       cast((weight_bp * (tok_sum // 10)) // 10000 as bigint)
-          |         AS alloc_tok
-          |FROM b""".stripMargin,
-
-      "agg_rolling_distinct" ->
-        """WITH p AS (
-          |  SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events),
-          |mx AS (SELECT max(day) AS mx FROM p),
-          |x AS (
-          |  SELECT user_id,
-          |         unnest(generate_series(day,
-          |           least(mx, day + INTERVAL 6 DAY), INTERVAL 1 DAY)) AS wend
-          |  FROM p, mx)
-          |SELECT epoch_ms(wend) AS window_end_ms,
-          |       count(DISTINCT user_id) AS n_active_7d
-          |FROM x GROUP BY wend""".stripMargin,
-
-      "events_attribution" ->
-        """WITH e AS (
-          |  SELECT user_id, cast(epoch_ms(ts) as bigint) AS ts_ms,
-          |         event_id, event_type
-          |  FROM events WHERE event_type IN ('click', 'purchase')),
-          |w AS (
-          |  SELECT *,
-          |    last_value(CASE WHEN event_type = 'click' THEN event_id END
-          |               IGNORE NULLS) OVER win AS click_id,
-          |    last_value(CASE WHEN event_type = 'click' THEN ts_ms END
-          |               IGNORE NULLS) OVER win AS click_ts
-          |  FROM e
-          |  WINDOW win AS (PARTITION BY user_id ORDER BY ts_ms, event_id
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
-          |SELECT user_id, event_id AS purchase_id, click_id,
-          |       ts_ms - click_ts AS lag_ms
-          |FROM w WHERE event_type = 'purchase'""".stripMargin,
-    )
-  }
+  def oracleSql: Map[String, String] = registry.map { case (n, r) => n -> r.oracle }
 }

@@ -188,6 +188,23 @@ class SparkEntrySpec extends SparkSpec {
     assert(unknown.isEmpty, s"checks keys not in queries: $unknown")
   }
 
+  test("the family records make up the registry, each check in its own query's record") {
+    val families = SparkEntry.families
+    assert(families.map(_.size).sum === SparkEntry.queries.size)
+    val records = families.flatten
+    assert(records.map(_.name).toSet === SparkEntry.queries.keySet)
+    val checkedNames = records.filter(_.check.isDefined).map(_.name)
+    assert(checkedNames.toSet === SparkEntry.checks.keySet)
+    assert(checkedNames.size === SparkEntry.checks.size)
+  }
+
+  test("a query name registered twice fails registry assembly, naming it") {
+    val r = SparkEntry.Record("dup_query", (s, _) => s.emptyDataFrame, oracle = "SELECT 1")
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.byName(Seq(r, r.copy(oracle = "SELECT 2"))))
+    assert(e.getMessage.contains("dup_query"), e.getMessage)
+  }
+
   test("tpch_q21 plans the EXISTS / NOT EXISTS pair as one semi and one anti join") {
     val physical = SparkEntry.queries("tpch_q21")(spark, sfDir)
       .queryExecution.executedPlan.toString
