@@ -29,12 +29,12 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * reproduces inner-join drop semantics exactly.
   *
   * Used by the plans that still need (group, v) rows after the probe:
-  * `Q4112.part2Dense` (the forced dense form, and the planner's
-  * `partial` and bucketed-layout plans over a dense build side), and
+  * `Q4112.part2DenseLookup` (the planner's `partial` and bucketed-layout
+  * plans over a dense build side, whose aggregate hashes), and
   * `Q4112.groupedValues` when its build side is dense (the Matrix
-  * harness's joined-bucketed layout write). Part 1 and both dense
-  * partial aggregates (`partial_dense`, `range_dense`) probe the same
-  * array with the columnar kernels `Q4112.probeAccumulate` and
+  * harness's joined-bucketed layout write). Part 1 and the dense part-2
+  * aggregate `Q4112.part2Dense` (`partial_dense`, `range_dense`) probe
+  * the same array with the columnar kernels `Q4112.probeAccumulate` and
   * `Q4112.probeCombine` instead, with no row pipeline.
   */
 case class DenseArrayLookup(

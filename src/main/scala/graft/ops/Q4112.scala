@@ -29,7 +29,7 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
   * Physical mapping (scale rationale):
   *  - The build side is broadcast when small (the reference hard-codes
   *    items as build side — q4112.h:45-50); callers pick the strategy via
-  *    [[JoinStrategy]], which maps 1:1 onto the reference's four engines.
+  *    [[JoinStrategy]], which maps onto the reference's join engines.
   *  - A build side whose keys fill a contiguous domain exactly once is
   *    broadcast as a plain value array instead ([[denseValuesArray]]).
   *    Part 1 and the dense partial aggregate then probe it with one
@@ -38,16 +38,17 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
   *    with no Catalyst row pipeline, and each task hands back only its
   *    accumulators. The kernel is stateless on retry, and `explain()`
   *    shows its per-task output as `Scan ExistingRDD`.
-  *  - The grouped aggregate is dense whenever the group column's cached
-  *    min/max bound its domain ([[part2DenseAgg]]): up to 2^22 slots each
-  *    task accumulates into plain arrays, and up to 2^27 slots (with a
-  *    dense build side) each row folds into the reference's 2^13
-  *    direct-mapped combine cache (q4112.c:225-297), whose evictions ship
-  *    to the reducer that owns their slot range. Either way the reducers
-  *    add by slot, with no hash map on either side of the shuffle
-  *    ([[mergeDenseChunks]]). A wider or unbounded domain takes Spark's
-  *    hash partial aggregation, whose map-side combine plays the same
-  *    role as the cache: hot groups collapse before the shuffle.
+  *  - Over a dense build side the grouped aggregate is dense whenever
+  *    the group column's cached min/max bound its domain ([[part2Dense]]):
+  *    up to 2^22 slots each task accumulates into plain arrays, and up to
+  *    2^27 slots each row folds into the reference's 2^13 direct-mapped
+  *    combine cache (q4112.c:225-297), whose evictions ship to the
+  *    reducer that owns their slot range. Either way the reducers add by
+  *    slot, with no hash map on either side of the shuffle
+  *    ([[mergeDenseChunks]]). Any other build side, and a wider or
+  *    unbounded domain, takes Spark's hash partial aggregation, whose
+  *    map-side combine plays the same role as the cache: hot groups
+  *    collapse before the shuffle.
   *  - The final avg-of-avgs is a single ungrouped aggregate over one row
   *    per group or reducer — negligible at any scale.
   *  - Every form works out its physical facts from the `items`/`orders`
@@ -59,17 +60,16 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
   */
 object Q4112 {
 
-  /** The reference's four interchangeable physical engines (Makefile:7)
-    * surfaced as join strategy hints. Catalyst + AQE pick the best
-    * strategy on `Auto`; the explicit variants exist for parity and
-    * benchmarking, exactly like the reference's one-binary-per-algorithm
-    * layout.
+  /** The reference's interchangeable physical join engines (Makefile:7)
+    * surfaced as join strategy hints, for parity and benchmarking,
+    * exactly like the reference's one-binary-per-algorithm layout. The
+    * adaptive planners choose among them (and the dense probe) from the
+    * layout and the statistics.
     */
-  sealed trait JoinStrategy { def hint: Option[String] }
-  case object Auto extends JoinStrategy { val hint = None }
-  case object BroadcastHash extends JoinStrategy { val hint = Some("broadcast") }
-  case object ShuffledHash extends JoinStrategy { val hint = Some("shuffle_hash") }
-  case object SortMerge extends JoinStrategy { val hint = Some("merge") }
+  sealed abstract class JoinStrategy(val hint: String)
+  case object BroadcastHash extends JoinStrategy("broadcast")
+  case object ShuffledHash extends JoinStrategy("shuffle_hash")
+  case object SortMerge extends JoinStrategy("merge")
 
   // ------------------------------------------------------------------
   // Relation-keyed caches — build-once semantics for per-relation work.
@@ -349,12 +349,6 @@ object Q4112 {
     }
   }
 
-  /** Integer division `sumCol div cntCol` (both Long; non-negative in all
-    * reference configs, so truncating and floor division coincide).
-    */
-  def intDiv(sumCol: Column, cntCol: Column): Column =
-    call_function("div", sumCol, cntCol)
-
   /** items ⋈ orders with the chosen physical strategy.
     * @param items  (key, price)  — build side
     * @param orders (fkey, group, quantity) — probe side
@@ -365,7 +359,7 @@ object Q4112 {
       itemKey: String,
       orderKey: String,
       strategy: JoinStrategy = BroadcastHash): DataFrame = {
-    val hinted = strategy.hint.fold(items)(h => items.hint(h))
+    val hinted = items.hint(strategy.hint)
     orders.join(hinted, orders(orderKey) === hinted(itemKey), "inner")
   }
 
@@ -777,12 +771,15 @@ object Q4112 {
       .select(expr("s div c").as("avg_value"))
   }
 
-  /** Part 2 via the dense-key array probe: lookup + filter + two-level
-    * integer aggregation, no join operator in the plan at all. The
-    * forced dense form: it fails its stated `require` on a build side
-    * that is not dense.
+  /** Part 2 over a dense build side with Catalyst's hash aggregate: the
+    * array lookup ([[graft.functions.DenseArrayLookup]]) + filter, then
+    * the two-level integer aggregation, no join operator in the plan at
+    * all. [[part2Adaptive]]'s plan where the aggregate must hash: a
+    * probe relation stored clustered on the group key (the aggregate
+    * then needs no exchange), or a group domain the dense kernel of
+    * [[part2Dense]] cannot index.
     */
-  def part2Dense(
+  private def part2DenseLookup(
       items: DataFrame,
       orders: DataFrame,
       itemKey: String,
@@ -822,8 +819,8 @@ object Q4112 {
 
   /** The joined (group, v = price*quantity) projection, via the dense
     * array probe when the build side is a contiguous-key dimension
-    * ([[denseEligible]]), else a broadcast hash join — the front half of
-    * [[denseGroupedAvg]] and of the joined-bucketed layout.
+    * ([[denseEligible]]), else a broadcast hash join — the rows the
+    * joined-bucketed layout stores.
     */
   private[graft] def groupedValues(
       items: DataFrame,
@@ -841,19 +838,18 @@ object Q4112 {
     }
 
   /** Per-task array cap of the dense aggregate: no task of
-    * [[part2DenseAgg]] or [[denseGroupedAvg]] holds accumulator arrays
-    * of more than 2^22 slots (64 MB, two long arrays), on either side of
-    * the shuffle. A domain up to this cap is accumulated per task in
-    * arrays; a wider one (with a dense build side) goes through the
-    * combine cache, and its merge splits into more reducer ranges
-    * instead of growing any one task's arrays.
+    * [[part2Dense]] holds accumulator arrays of more than 2^22 slots
+    * (64 MB, two long arrays), on either side of the shuffle. A domain
+    * up to this cap is accumulated per task in arrays; a wider one goes
+    * through the combine cache, and its merge splits into more reducer
+    * ranges instead of growing any one task's arrays.
     */
   val DenseAggMaxDomain: Long = 1L << 22
 
-  /** Group-domain ceiling of [[part2DenseAgg]] with a dense build side:
-    * 2^27 slots, which covers the reference's 1e8-group configs
-    * (q4112.csv cfg4/11/18) in at most 32 reducer ranges of
-    * [[DenseAggMaxDomain]] slots. A wider domain takes the hash plan.
+  /** Group-domain ceiling of [[part2Dense]]: 2^27 slots, which covers
+    * the reference's 1e8-group configs (q4112.csv cfg4/11/18) in at most
+    * 32 reducer ranges of [[DenseAggMaxDomain]] slots. A wider domain
+    * takes the hash plan.
     */
   val RangeDenseMaxDomain: Long = 1L << 27
 
@@ -868,22 +864,22 @@ object Q4112 {
     * cfg10/17 gap, ~430 ns/row, zero spill). The per-slot sums are then
     * merged by slot range, not by hashing: see [[mergeDenseChunks]].
     *
-    * With a dense build side ([[denseEligible]]) the probe kernel reads
-    * the scan's columnar batches of (orderKey, quantity, group): probe,
-    * multiply and add in one loop, with no join operator and no row
-    * pipeline. A domain of up to [[DenseAggMaxDomain]] slots adds into
-    * per-task arrays ([[probeAccumulate]]); one of up to
-    * [[RangeDenseMaxDomain]] slots folds each row into the reference's
-    * combine cache ([[probeCombine]]), whose evictions ship to the
-    * reducer that owns their slot, so a task's memory is bounded by a
-    * constant, not by the domain or the row count. Otherwise a broadcast
-    * hash join feeds (group, v) rows to [[denseGroupedAvg]], within
-    * [[DenseAggMaxDomain]].
+    * The build side must be dense: its value array comes from
+    * [[denseValuesArray]], as in [[part1Dense]], so any other build side
+    * fails that stated `require`. The probe kernel reads the scan's
+    * columnar batches of (orderKey, quantity, group): probe, multiply
+    * and add in one loop, with no join operator and no row pipeline. A
+    * domain of up to [[DenseAggMaxDomain]] slots adds into per-task
+    * arrays ([[probeAccumulate]]); one of up to [[RangeDenseMaxDomain]]
+    * slots folds each row into the reference's combine cache
+    * ([[probeCombine]]), whose evictions ship to the reducer that owns
+    * their slot, so a task's memory is bounded by a constant, not by the
+    * domain or the row count.
     *
     * The domain comes from the group column's cached min/max
     * ([[groupDomain]], the statistics [[part2Adaptive]] routes on); a
     * group column that is not byte, short, int or long, or a domain past
-    * the cap, fails a stated `require`.
+    * [[RangeDenseMaxDomain]], fails a stated `require`.
     *
     * Exactness: identical arithmetic to [[part2]] — products and sums
     * inside a task and across tasks raise on overflow when the session
@@ -893,7 +889,7 @@ object Q4112 {
     * unchanged plan) fails loudly. Every form is an ordinary stateless
     * shuffle, so a retried task cannot double count.
     */
-  def part2DenseAgg(
+  def part2Dense(
       items: DataFrame,
       orders: DataFrame,
       itemKey: String,
@@ -901,39 +897,30 @@ object Q4112 {
       priceCol: String,
       quantityCol: String,
       groupCol: String): DataFrame = {
-    val build = eligibleDenseBuild(items, itemKey, priceCol)
-    val (mg, dom) = groupDomain(orders, groupCol,
-      if (build.isDefined) RangeDenseMaxDomain else DenseAggMaxDomain)
+    val (bc, mn) = denseValuesArray(items, itemKey, priceCol)
+    val (mg, dom) = groupDomain(orders, groupCol)
     val spark = orders.sparkSession
     val exact = spark.sessionState.conf.ansiEnabled
     val ranges = slotRanges(spark, dom)
-    build match {
-      case Some((bc, mn)) =>
-        val src = batchSource(orders, Seq(orderKey, quantityCol, groupCol))
-        val isInt = src.isInt
-        val trackV = src.nullable(1)
-        // slot `dom` past the domain holds the NULL group
-        val chunks =
-          if (dom <= DenseAggMaxDomain) src.batches.mapPartitions { bs =>
-            val acc = new DenseAcc(dom + 1, trackV)
-            val arr = bc.value
-            bs.foreach(b => probeAccumulate(b, isInt, arr, mn, mg, dom, exact, acc))
-            accChunks(acc, ranges)
-          } else src.batches.mapPartitions { bs =>
-            val cache = new CombineCache(ranges, trackV, exact)
-            val arr = bc.value
-            bs.flatMap { b =>
-              probeCombine(b, isInt, arr, mn, mg, dom, exact, cache)
-              cache.shipped()
-            } ++ cache.flush()
-          }
-        mergeDenseChunks(spark, chunks.setName(s"dense probe over ${src.kind}"), ranges, exact)
-      case None =>
-        denseGroupedAvg(
-          groupedValues(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
-            .select(col(groupCol).cast("long"), col("v").cast("long")),
-          mg, dom)
-    }
+    val src = batchSource(orders, Seq(orderKey, quantityCol, groupCol))
+    val isInt = src.isInt
+    val trackV = src.nullable(1)
+    // slot `dom` past the domain holds the NULL group
+    val chunks =
+      if (dom <= DenseAggMaxDomain) src.batches.mapPartitions { bs =>
+        val acc = new DenseAcc(dom + 1, trackV)
+        val arr = bc.value
+        bs.foreach(b => probeAccumulate(b, isInt, arr, mn, mg, dom, exact, acc))
+        accChunks(acc, ranges)
+      } else src.batches.mapPartitions { bs =>
+        val cache = new CombineCache(ranges, trackV, exact)
+        val arr = bc.value
+        bs.flatMap { b =>
+          probeCombine(b, isInt, arr, mn, mg, dom, exact, cache)
+          cache.shipped()
+        } ++ cache.flush()
+      }
+    mergeDenseChunks(spark, chunks.setName(s"dense probe over ${src.kind}"), ranges, exact)
   }
 
   /** Can the dense forms index by `c`? Only byte, short, int and long
@@ -952,16 +939,16 @@ object Q4112 {
     * the same cache entry). An empty or all-NULL group column has no
     * min/max and takes one slot, which no row uses: the answer is still
     * the hash plan's. A group column that is not integral, a domain of
-    * more than `cap` slots, or one wider than 2^63 (the width
-    * subtraction wraps negative) fails a stated `require`.
+    * [[RangeDenseMaxDomain]] slots or more, or one wider than 2^63 (the
+    * width subtraction wraps negative) fails a stated `require`.
     */
-  private def groupDomain(orders: DataFrame, groupCol: String, cap: Long): (Long, Int) = {
+  private def groupDomain(orders: DataFrame, groupCol: String): (Long, Int) = {
     require(integralColumn(orders, groupCol), s"dense aggregate needs a byte, short, int " +
       s"or long group column: '$groupCol' is ${orders.schema(groupCol).dataType.simpleString}")
     minMaxLongsOpt(orders, Seq(groupCol)) match {
       case Some(Seq((mn, mx))) =>
-        require(mx - mn >= 0L && mx - mn < cap,
-          s"group domain [$mn, $mx] of '$groupCol' exceeds $cap slots")
+        require(mx - mn >= 0L && mx - mn < RangeDenseMaxDomain,
+          s"group domain [$mn, $mx] of '$groupCol' exceeds $RangeDenseMaxDomain slots")
         (mn, (mx - mn + 1L).toInt)
       case _ => (0L, 1)
     }
@@ -997,73 +984,6 @@ object Q4112 {
     */
   private final case class DenseChunk(
       slots: Array[Int], sums: Array[Long], cnts: Array[Long], hasV: Array[Boolean])
-
-  /** The dense partial aggregate of [[part2DenseAgg]] over a prepared
-    * (group, v) projection, both long — the form for a build side that
-    * is joined by hash; exposed separately so the accumulation can be
-    * measured and tested without the join front half. Each task adds
-    * its rows into a [[DenseAcc]] with slot `domain` for the NULL group;
-    * the arrays are merged as described at [[mergeDenseChunks]], which
-    * the kernel forms of [[part2DenseAgg]] share.
-    *
-    * NULLs: nullability is decided from gv's SCHEMA, once, at plan time:
-    * the unguarded loop reads primitives directly and would misread a
-    * NULL group as 0 (silent cross-group merge when minGroup == 0,
-    * executor crash otherwise — round-9 advice item 2). A nullable input
-    * takes a guarded loop that reproduces the hash plan's semantics
-    * exactly: NULL group is its own group; `count(lit(1))` counts every
-    * row; `sum(v)` skips NULL v and is itself NULL when a group saw no
-    * non-NULL v (tracked per slot in `hasV`). Column min/max stats
-    * ignore NULLs, so non-NULL groups remain provably in-domain.
-    *
-    * Overflow: a task adds with `Math.addExact` when the session runs
-    * ANSI, so two rows of v = 2^62 in one task raise like the hash plan's
-    * `sum(v)`, and wraps when it does not.
-    *
-    * A group outside [minGroup, minGroup + domain) means the domain's
-    * statistics were stale, and fails loudly like the kernel's, instead
-    * of adding into the NULL slot or a wrapped live slot.
-    */
-  private[graft] def denseGroupedAvg(gv: DataFrame, minGroup: Long, domain: Int): DataFrame = {
-    require(domain > 0 && domain <= DenseAggMaxDomain,
-      s"dense aggregate domain out of range: $domain")
-    val mg = minGroup
-    val dom = domain
-    val exact = gv.sparkSession.sessionState.conf.ansiEnabled
-    val nullable = gv.schema.fields.exists(_.nullable)
-    val ranges = slotRanges(gv.sparkSession, dom)
-    // qualified: an unqualified call would make this local def, and the
-    // task closure that calls it, capture the (unserializable) object
-    def slot(g: Long): Int = {
-      val gi = g - mg
-      if (gi < 0L || gi >= dom) throw Q4112.outOfDomain(g, mg, dom)
-      gi.toInt
-    }
-    val chunks = gv.queryExecution.toRdd.mapPartitions { it =>
-      val acc = new DenseAcc(dom + 1, nullable)
-      val sums = acc.sums
-      val cnts = acc.cnts
-      val hasV = acc.hasV
-      if (!nullable) while (it.hasNext) {
-        val r = it.next() // primitives read immediately; row reuse is fine
-        val g = slot(r.getLong(0))
-        val v = r.getLong(1)
-        sums(g) = if (exact) Math.addExact(sums(g), v) else sums(g) + v
-        cnts(g) += 1L
-      } else while (it.hasNext) {
-        val r = it.next()
-        val g = if (r.isNullAt(0)) dom else slot(r.getLong(0))
-        cnts(g) += 1L
-        if (!r.isNullAt(1)) {
-          val v = r.getLong(1)
-          sums(g) = if (exact) Math.addExact(sums(g), v) else sums(g) + v
-          hasV(g) = true
-        }
-      }
-      accChunks(acc, ranges)
-    }
-    mergeDenseChunks(gv.sparkSession, chunks, ranges, exact)
-  }
 
   /** One task's [[DenseAcc]] as [[DenseChunk]]s keyed by reducer, one per
     * non-empty range. A chunk is a dense slice only when at least half
@@ -1286,12 +1206,13 @@ object Q4112 {
     * order (`lastChosenPlan` names the outcome):
     *  - `joined_bucketed`, `bucketed`/`bucketed_routed`: an exchange-free
     *    stored layout;
-    *  - `partial_dense`: a group domain under 2^22 slots
-    *    ([[DenseAggMaxDomain]]), per-task arrays in [[part2DenseAgg]];
-    *  - `range_dense`: a domain under 2^27 slots ([[RangeDenseMaxDomain]])
-    *    with a dense build side, the combine cache in [[part2DenseAgg]];
-    *  - `partial`: anything else (a wider or unbounded domain, a gappy
-    *    build side past 2^22 slots, a group column that is not byte,
+    *  - `partial_dense`: a dense build side ([[denseEligible]]) and a
+    *    group domain under 2^22 slots ([[DenseAggMaxDomain]]), per-task
+    *    arrays in [[part2Dense]];
+    *  - `range_dense`: a dense build side and a domain under 2^27 slots
+    *    ([[RangeDenseMaxDomain]]), the combine cache in [[part2Dense]];
+    *  - `partial`: anything else (a build side that is not dense, a
+    *    wider or unbounded domain, a group column that is not byte,
     *    short, int or long), Catalyst's hash partial/final aggregate.
     */
   def part2Adaptive(
@@ -1346,27 +1267,28 @@ object Q4112 {
         f"${if (routedOrders.isDefined) " (routed via registry)" else ""} " +
         f"-> exchange-free partial/final, est=${(System.nanoTime() - t0) / 1e9}%.3f s")
       return if (useDense)
-        part2Dense(items, probeOrders, itemKey, orderKey, priceCol, quantityCol, groupCol)
+        part2DenseLookup(items, probeOrders, itemKey, orderKey, priceCol, quantityCol, groupCol)
       else
         part2(items, probeOrders, itemKey, orderKey, priceCol, quantityCol, groupCol,
           BroadcastHash)
     }
     // the group domain's width max − min, from the cached min/max the
-    // dense form reads again (same columns, so no job). None for a group
-    // column the dense forms cannot index by (asked before the
-    // statistics, which only integral columns have as longs), for an
-    // empty or all-NULL column (no stats: fall back, don't NPE — advice
-    // r9 item 3) and for a domain wider than 2^63, whose width
-    // subtraction wraps negative and would otherwise pass every cap
-    // (advice r9 item 1)
+    // dense form reads again (same columns, so no job). None for a build
+    // side that is not dense (no dense plan can use it, so no statistics
+    // job is paid for it), for a group column the dense form cannot
+    // index by (asked before the statistics, which only integral columns
+    // have as longs), for an empty or all-NULL column (no stats: fall
+    // back, don't NPE — advice r9 item 3) and for a domain wider than
+    // 2^63, whose width subtraction wraps negative and would otherwise
+    // pass every cap (advice r9 item 1)
     val width =
-      if (!integralColumn(orders, groupCol)) None
+      if (!useDense || !integralColumn(orders, groupCol)) None
       else minMaxLongsOpt(orders, Seq(groupCol)).collect {
         case Seq((mn, mx)) if mx - mn >= 0L => mx - mn
       }
     lastChosenPlan =
       if (width.exists(_ < DenseAggMaxDomain)) "partial_dense"
-      else if (useDense && width.exists(_ < RangeDenseMaxDomain)) "range_dense"
+      else if (width.exists(_ < RangeDenseMaxDomain)) "range_dense"
       else "partial"
     System.err.println(f"[part2-adaptive] groupDomain=${width.fold("none")(w => s"${w + 1}")} " +
       f"denseBuild=$useDense -> $lastChosenPlan est=${(System.nanoTime() - t0) / 1e9}%.3f s")
@@ -1376,8 +1298,9 @@ object Q4112 {
     advise(f"this aggregate takes an exchange on '$groupCol'; storing the probe table " +
       f"bucketed on '$groupCol' (Tables.writeBucketed) would make it exchange-free")
     if (lastChosenPlan != "partial")
-      part2DenseAgg(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
-    else if (useDense) part2Dense(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
+      part2Dense(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
+    else if (useDense)
+      part2DenseLookup(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol)
     else part2(items, orders, itemKey, orderKey, priceCol, quantityCol, groupCol, BroadcastHash)
   }
 

@@ -221,7 +221,7 @@ private[graft] object Q4112Queries {
     // oracle's groups and answer and widens the domain past 2^22. The
     // name predates this form; the oracle records key on it.
     Record("q4112_part2_packed", (s, dir) =>
-      Q4112.part2DenseAgg(partItems(s, dir), wideSuppkey(liOrders(s, dir)),
+      Q4112.part2Dense(partItems(s, dir), wideSuppkey(liOrders(s, dir)),
         "p_partkey", "l_partkey", "price", "quantity", "l_suppkey"),
       oracle =
         s"""WITH g AS ($groupedCte)
@@ -231,7 +231,7 @@ private[graft] object Q4112Queries {
     // could change); the form takes its group domain from the same
     // cached statistics the chooser routes on
     Record("q4112_part2_dense_agg", (s, dir) =>
-      Q4112.part2DenseAgg(partItems(s, dir), liOrders(s, dir),
+      Q4112.part2Dense(partItems(s, dir), liOrders(s, dir),
         "p_partkey", "l_partkey", "price", "quantity", "l_suppkey"),
       oracle =
         s"""WITH g AS ($groupedCte)

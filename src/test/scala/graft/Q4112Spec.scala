@@ -16,6 +16,11 @@ class Q4112Spec extends SparkSpec {
   private def itemsDf(cfg: GenConfig) = Q4112Gen.items(spark, cfg).toDF()
   private def ordersDf(cfg: GenConfig) = Q4112Gen.orders(spark, cfg).toDF()
 
+  /** True when building `df` fails the dense build's stated `require`. */
+  private def notDense(df: => org.apache.spark.sql.DataFrame): Boolean =
+    intercept[IllegalArgumentException](df).getMessage
+      .startsWith("requirement failed: dense-key path requires")
+
   /** Scaled-down reference matrix: outer shrunk 1e9 → 5e3, inner
     * proportionally; selectivities / groups / hh shape preserved.
     */
@@ -105,8 +110,8 @@ class Q4112Spec extends SparkSpec {
     def probeSources(df: DataFrame): Seq[String] =
       df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.toDebugString }
         .flatMap(s => "dense probe over (\\w+)".r.findAllMatchIn(s).map(_.group(1)))
-    // a non-contiguous key domain: every form that works out its front
-    // half from the relation takes the hash join instead of the probe
+    // a non-contiguous key domain: the dense form fails its stated
+    // require, and the planner takes the hash plan
     val gappy = items.where(col("id") % 7 =!= 0)
     // every part-2 form against the broadcast-hash plan, over the dense
     // and the gappy build side
@@ -118,11 +123,12 @@ class Q4112Spec extends SparkSpec {
         if (it eq items)
           assert(result(part2Dense(it, orders, "id", "itemId", "price", "quantity",
             "storeId")) === hash2, on)
-        val p2 = part2DenseAgg(it, orders, "id", "itemId", "price", "quantity", "storeId")
-        assert(result(p2) === hash2, on)
-        if (!(it eq items)) assert(probeSources(p2).isEmpty, on)
+        else
+          assert(notDense(part2Dense(it, orders, "id", "itemId", "price", "quantity",
+            "storeId")), on)
         assert(result(part2Adaptive(it, orders, "id", "itemId", "price", "quantity",
           "storeId")) === hash2, on)
+        if (!(it eq items)) assert(lastChosenPlan === "partial", on)
       }
     // every form against the hash plans; returns the kernel's batch source
     def check(what: String, orders: DataFrame): String = {
@@ -130,7 +136,7 @@ class Q4112Spec extends SparkSpec {
       assert(result(p1) === result(part1(items, orders, "id", "itemId", "price", "quantity",
         BroadcastHash)), what)
       checkPart2(what, orders)
-      val p2 = part2DenseAgg(items, orders, "id", "itemId", "price", "quantity", "storeId")
+      val p2 = part2Dense(items, orders, "id", "itemId", "price", "quantity", "storeId")
       val sources = (probeSources(p1) ++ probeSources(p2)).distinct
       assert(sources.size === 1, s"$what: $sources")
       sources.head
@@ -170,6 +176,12 @@ class Q4112Spec extends SparkSpec {
     val none = Seq.empty[(Long, Long, Long)].toDF("itemId", "storeId", "quantity").where(lit(false))
     assert(none.queryExecution.toRdd.getNumPartitions === 0)
     check("zero partitions", none)
+    // one orders row
+    check("one row", Seq((3L, 5L, 2L)).toDF("itemId", "quantity", "storeId"))
+    // every group NULL: one NULL group, and no min/max for the domain
+    check("all-NULL group", gen.withColumn("storeId", lit(null).cast("long")))
+    // one hot item in one hot group
+    check("one hot key and group", gen.withColumn("itemId", lit(7L)).withColumn("storeId", lit(3L)))
   }
 
   for ((cfg, i) <- part2Configs.zipWithIndex) {
@@ -199,7 +211,7 @@ class Q4112Spec extends SparkSpec {
     def check(orders: DataFrame): Option[Long] = {
       val viaHash = result(Q4112.part2(items, orders, "id", "itemId", "price",
         "quantity", "storeId", Q4112.BroadcastHash))
-      val viaDense = result(Q4112.part2DenseAgg(items, orders, "id", "itemId", "price",
+      val viaDense = result(Q4112.part2Dense(items, orders, "id", "itemId", "price",
         "quantity", "storeId"))
       assert(viaDense === viaHash, Q4112.minMaxLongsOpt(orders, Seq("storeId")))
       viaHash
@@ -262,7 +274,8 @@ class Q4112Spec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     val items = Seq((1L, 1L)).toDF("id", "price")
-    // a gap in the keys: the forms take the hash join front half
+    // a gap in the keys: the dense form refuses it, and the planner
+    // takes the hash plan
     val gappy = Seq((1L, 1L), (3L, 1L)).toDF("id", "price")
     // one row per task with v = 2^62: each task's sum fits a long, the
     // merged sum 2^63 does not
@@ -280,13 +293,17 @@ class Q4112Spec extends SparkSpec {
       Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(t => String.valueOf(t.getMessage).toLowerCase.contains("overflow"))
     }
+    assert(notDense(Q4112.part2Dense(gappy, orders, "id", "itemId", "price", "quantity",
+      "storeId")))
     for (o <- Seq(orders, oneTask)) {
       assert(overflows(Q4112.part2(items, o, "id", "itemId", "price", "quantity",
         "storeId", Q4112.BroadcastHash)))
-      for (it <- Seq(items, gappy))
-        assert(overflows(Q4112.part2DenseAgg(it, o, "id", "itemId", "price", "quantity",
-          "storeId")))
-      assert(overflows(Q4112.part2DenseAgg(items, wide(o), "id", "itemId", "price", "quantity",
+      assert(overflows(Q4112.part2Dense(items, o, "id", "itemId", "price", "quantity",
+        "storeId")))
+      assert(overflows(Q4112.part2Adaptive(gappy, o, "id", "itemId", "price", "quantity",
+        "storeId")))
+      assert(Q4112.lastChosenPlan === "partial", Q4112.lastChosenPlan)
+      assert(overflows(Q4112.part2Dense(items, wide(o), "id", "itemId", "price", "quantity",
         "storeId")))
     }
     assert(overflows(Q4112.part1Dense(items, oneTask, "id", "itemId", "price", "quantity")))
@@ -297,10 +314,13 @@ class Q4112Spec extends SparkSpec {
       for (o <- Seq(orders, oneTask)) {
         val hash2 = one(Q4112.part2(items, o, "id", "itemId", "price", "quantity", "storeId",
           Q4112.BroadcastHash))
-        for (it <- Seq(items, gappy))
-          assert(one(Q4112.part2DenseAgg(it, o, "id", "itemId", "price", "quantity",
-            "storeId")) === hash2)
-        assert(one(Q4112.part2DenseAgg(items, wide(o), "id", "itemId", "price", "quantity",
+        assert(one(Q4112.part2Dense(items, o, "id", "itemId", "price", "quantity",
+          "storeId")) === hash2)
+        assert(one(Q4112.part2Adaptive(gappy, o, "id", "itemId", "price", "quantity",
+          "storeId")) === one(Q4112.part2(gappy, o, "id", "itemId", "price", "quantity",
+          "storeId", Q4112.BroadcastHash)))
+        assert(Q4112.lastChosenPlan === "partial", Q4112.lastChosenPlan)
+        assert(one(Q4112.part2Dense(items, wide(o), "id", "itemId", "price", "quantity",
           "storeId")) === one(Q4112.part2(items, wide(o), "id", "itemId", "price", "quantity",
           "storeId", Q4112.BroadcastHash)))
         assert(one(Q4112.part1Dense(items, o, "id", "itemId", "price", "quantity")) ===
@@ -325,18 +345,22 @@ class Q4112Spec extends SparkSpec {
     ).toDF("itemId", "quantity", "storeId")
     assert(orders.schema.forall(_.nullable), "test requires nullable inputs")
     val items = Seq((1L, 10L), (2L, 20L)).toDF("id", "price")
-    // an unused key past a gap: the same join, through the hash front half
+    // an unused key past a gap: the same join, which the dense form
+    // refuses and the planner answers with the hash plan
     val gappy = Seq((1L, 10L), (2L, 20L), (4L, 40L)).toDF("id", "price")
     val viaHash = Q4112.part2(items, orders, "id", "itemId", "price",
       "quantity", "storeId", Q4112.BroadcastHash).collect()(0)
     // expected by hand: avgs {100->10, 101->60, 102->NULL, NULL->20};
     // sum(10,60,20)=90 over count 4 -> 90 div 4 = 22
     assert(viaHash.getLong(0) === 22L)
-    for (it <- Seq(items, gappy)) {
-      val viaDense = Q4112.part2DenseAgg(it, orders, "id", "itemId", "price",
-        "quantity", "storeId").collect()(0)
-      assert(viaDense.getLong(0) === viaHash.getLong(0))
-    }
+    val viaDense = Q4112.part2Dense(items, orders, "id", "itemId", "price",
+      "quantity", "storeId").collect()(0)
+    assert(viaDense.getLong(0) === 22L)
+    assert(notDense(Q4112.part2Dense(gappy, orders, "id", "itemId", "price", "quantity",
+      "storeId")))
+    assert(Q4112.part2Adaptive(gappy, orders, "id", "itemId", "price", "quantity", "storeId")
+      .collect()(0).getLong(0) === 22L)
+    assert(Q4112.lastChosenPlan === "partial", Q4112.lastChosenPlan)
   }
 
   test("shared-CAS-table aggregate equals the hash plan; the router picks it on singleton groups; re-execution is fresh") {
@@ -352,7 +376,7 @@ class Q4112Spec extends SparkSpec {
         (col("id") * 64L).as("storeId")) // every group a singleton, ~1.3e7 slots
     val viaHash = Q4112.part2(items, orders, "id", "itemId", "price",
       "quantity", "storeId", Q4112.BroadcastHash).collect()(0).getLong(0)
-    val direct = Q4112.part2DenseAgg(items, orders, "id", "itemId", "price",
+    val direct = Q4112.part2Dense(items, orders, "id", "itemId", "price",
       "quantity", "storeId")
     assert(direct.collect()(0).getLong(0) === viaHash)
     assert(direct.collect()(0).getLong(0) === viaHash)
@@ -434,21 +458,39 @@ class Q4112Spec extends SparkSpec {
   }
 
   test("dense-array partial aggregate rejects a group outside its stated domain") {
-    // the stage over [5, 15): group 15 would add into the NULL slot, and
-    // group 5 + 2^32 would wrap `toInt` into live slot 0
-    val spark2 = spark
-    import spark2.implicits._
-    for (bad <- Seq(15L, 5L + (1L << 32)); nullable <- Seq(false, true)) {
-      val rows = Seq((5L, 7L), (bad, 11L))
-      val gv =
-        if (nullable) rows.map { case (g, v) => (Long.box(g), Long.box(v)) }.toDF("g", "v")
-        else rows.toDF("g", "v")
-      assert(gv.schema.forall(_.nullable) === nullable)
-      val e = intercept[Exception](Q4112.denseGroupedAvg(gv, minGroup = 5L, domain = 10).collect())
-      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .exists(t => String.valueOf(t.getMessage).contains(s"group $bad outside the stats-proven")),
-        s"group $bad, nullable $nullable: $e")
-    }
+    // the per-task array kernel on a partial_dense domain [5, 54] whose
+    // data is overwritten in place without clearRelationCaches: group 55
+    // would add into the NULL slot, and group 5 + 2^32 would wrap `toInt`
+    // into live slot 0
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val items = spark.range(1L, 11L)
+      .select(col("id"), (col("id") * 3L).as("price"))
+    val dir = java.nio.file.Files.createTempDirectory("partial_dense_stale").toString
+    def write(top: Long): Unit = spark.range(0L, 1000L, 1L, 4)
+      .select((col("id") % 10L + 1L).as("itemId"), (col("id") % 5L).as("quantity"),
+        when(col("id") === 999L, lit(top)).otherwise(col("id") % 50L + 5L).as("storeId"))
+      .write.mode("overwrite").parquet(dir)
+    def orders = spark.read.parquet(dir)
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    try {
+      write(54L)
+      assert(Q4112.part2Adaptive(items, orders, "id", "itemId", "price", "quantity", "storeId")
+        .collect()(0).getLong(0) === Q4112.part2(items, orders, "id", "itemId", "price",
+        "quantity", "storeId").collect()(0).getLong(0))
+      assert(Q4112.lastChosenPlan === "partial_dense", Q4112.lastChosenPlan)
+      for (bad <- Seq(55L, 5L + (1L << 32))) {
+        write(bad)
+        val viaPlanner = intercept[Exception](Q4112.part2Adaptive(items, orders, "id", "itemId",
+          "price", "quantity", "storeId").collect())
+        assert(Q4112.lastChosenPlan === "partial_dense", Q4112.lastChosenPlan)
+        val viaForm = intercept[Exception](Q4112.part2Dense(items, orders, "id", "itemId",
+          "price", "quantity", "storeId").collect())
+        for (e <- Seq(viaPlanner, viaForm))
+          assert(messages(e).exists(_.contains(s"group $bad outside the stats-proven domain")),
+            messages(e).mkString(" | "))
+      }
+    } finally Q4112.clearRelationCaches()
   }
 
   test("router proves null-freedom of the VALUE inputs, not just the group (ADVICE r10 #2)") {
@@ -472,16 +514,19 @@ class Q4112Spec extends SparkSpec {
       "quantity", "storeId").collect()(0).getLong(0)
     assert(Q4112.lastChosenPlan === "partial_dense", Q4112.lastChosenPlan)
     assert(adaptive === viaHash)
-    // same for a NULL price on the build side, which the dense build
-    // refuses: the hash join feeds the dense aggregate
+    // a NULL price on the build side, which the dense build refuses:
+    // the dense form fails its stated require, and the planner takes
+    // the hash plan
     val itemsN = items.unionByName(Seq[(java.lang.Long, java.lang.Long)](
       (100L, null)).toDF("id", "price"))
     val ordersClean = base
     val viaHash2 = Q4112.part2(itemsN, ordersClean, "id", "itemId", "price",
       "quantity", "storeId", Q4112.BroadcastHash).collect()(0).getLong(0)
+    assert(notDense(Q4112.part2Dense(itemsN, ordersClean, "id", "itemId", "price", "quantity",
+      "storeId")))
     val adaptive2 = Q4112.part2Adaptive(itemsN, ordersClean, "id", "itemId",
       "price", "quantity", "storeId").collect()(0).getLong(0)
-    assert(Q4112.lastChosenPlan === "partial_dense", Q4112.lastChosenPlan)
+    assert(Q4112.lastChosenPlan === "partial", Q4112.lastChosenPlan)
     assert(adaptive2 === viaHash2)
     // ten singleton groups of v = 1000, plus a NULL-quantity row in
     // group 0: the NULL v must stay in its group (909 if it moved, not 950)
@@ -545,7 +590,7 @@ class Q4112Spec extends SparkSpec {
     assert(Q4112.part2Adaptive(items, halves, "id", "itemId", "price", "quantity", "storeId")
       .collect()(0).getLong(0) === hashHalves)
     assert(Q4112.lastChosenPlan === "partial", Q4112.lastChosenPlan)
-    val e = intercept[IllegalArgumentException](Q4112.part2DenseAgg(items, halves, "id",
+    val e = intercept[IllegalArgumentException](Q4112.part2Dense(items, halves, "id",
       "itemId", "price", "quantity", "storeId"))
     assert(e.getMessage.contains("'storeId' is double"), e.getMessage)
   }

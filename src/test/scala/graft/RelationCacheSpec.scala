@@ -239,7 +239,7 @@ class RelationCacheSpec extends SparkSpec {
         (n, df.head().getLong(0))
       }
       try {
-        assert(jobs(Q4112.part2DenseAgg(items, orders, "id", "itemId", "price", "quantity",
+        assert(jobs(Q4112.part2Dense(items, orders, "id", "itemId", "price", "quantity",
           "storeId")) === ((0, adaptive)))
       } finally sc.removeSparkListener(metrics)
     } finally {
