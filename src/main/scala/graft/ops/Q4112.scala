@@ -779,7 +779,7 @@ object Q4112 {
     * then needs no exchange), or a group domain the dense kernel of
     * [[part2Dense]] cannot index.
     */
-  private def part2DenseLookup(
+  private[graft] def part2DenseLookup(
       items: DataFrame,
       orders: DataFrame,
       itemKey: String,

@@ -120,10 +120,13 @@ class Q4112Spec extends SparkSpec {
         val hash2 = result(part2(it, orders, "id", "itemId", "price", "quantity", "storeId",
           BroadcastHash))
         val on = s"$what, ${if (it eq items) "dense" else "gappy"} items"
-        if (it eq items)
+        if (it eq items) {
           assert(result(part2Dense(it, orders, "id", "itemId", "price", "quantity",
             "storeId")) === hash2, on)
-        else
+          // the planner's hash-aggregate form over a dense build side
+          assert(result(part2DenseLookup(it, orders, "id", "itemId", "price", "quantity",
+            "storeId")) === hash2, on)
+        } else
           assert(notDense(part2Dense(it, orders, "id", "itemId", "price", "quantity",
             "storeId")), on)
         assert(result(part2Adaptive(it, orders, "id", "itemId", "price", "quantity",
