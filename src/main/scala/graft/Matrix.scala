@@ -129,15 +129,15 @@ object Matrix {
       // more than the whole query at 1e9 rows — store raw columnar
       "spark.sql.inMemoryColumnarStorage.compressed" -> "false",
       // the dense-key array build collects value-only chunks for
-      // contiguous-run partitions (~8 B/key + serialization overhead —
-      // 800 MB at inner=1e8); the cap must also fit the NON-contiguous
-      // fallback (~16 B/key + overhead ≈ 1.6+ GB at 1e8), which a
-      // shuffled dimension would hit — 2g sat right at that edge, 4g
-      // covers both paths with margin. Same driver data path as Spark's
-      // own BroadcastExchangeExec.
+      // contiguous-run partitions (4 B/key + serialization overhead —
+      // 400 MB at inner=1e8); the cap must also fit the NON-contiguous
+      // fallback (8 B/key + overhead ≈ 800 MB at 1e8), which a
+      // shuffled dimension would hit; 4g covers both paths with margin.
+      // Same driver data path as Spark's own BroadcastExchangeExec.
       "spark.driver.maxResultSize" -> "4g",
-      // broadcast payloads here are near-random long[]: lz4 shrinks them
-      // barely but costs a full compress+decompress pass per executor
+      // lz4 barely shrank the near-random dense value arrays (measured
+      // when they were long[]) but costs a full compress+decompress pass
+      // per executor
       "spark.broadcast.compress" -> "false",
       // always honor a bucketed layout: the auto rule may plan a bare
       // scan (e.g. the cache-materialization pass) as non-bucketed,
@@ -381,7 +381,7 @@ object Matrix {
           }
         // joined_bucketed reps read ONLY the materialized joined_bkt
         // table — the two generator caches (~26 GB at 1e9) and the dense
-        // broadcast built for the write (~800 MB at inner=1e8) are dead
+        // broadcast built for the write (~400 MB at inner=1e8) are dead
         // weight from here on, and at 1e9 they were enough to push rep 3
         // into GC collapse (27.8 → 178 s, SCALING.md round-7). Release
         // them the moment the oracle (which needs the orders cache) is

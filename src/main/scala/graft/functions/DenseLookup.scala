@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.ops.Q4112.DenseBuild
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -21,9 +22,11 @@ import org.apache.spark.sql.types.{DataType, LongType}
   *
   * Scale shape: identical to a broadcast hash join — the array ships
   * once per executor (the `Broadcast` handle serializes, the payload
-  * travels via torrent); the probe side never moves. A 1e8-key dim is
-  * an 800 MB long[] — the same order as the equivalent
-  * `LongHashedRelation`, minus bucket overhead.
+  * travels via torrent); the probe side never moves. The array holds
+  * unsigned 32-bit offsets from the build's `base` ([[DenseBuild]]), so
+  * a 1e8-key dim is a 400 MB int[] — less than the equivalent
+  * `LongHashedRelation`, which stores every key and row beside its
+  * buckets.
   *
   * Returns NULL for keys outside the domain → `.where(isNotNull)`
   * reproduces inner-join drop semantics exactly.
@@ -37,11 +40,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * the same array with the columnar kernels `Q4112.probeAccumulate` and
   * `Q4112.probeCombine` instead, with no row pipeline.
   */
-case class DenseArrayLookup(
-    child: Expression,
-    values: Broadcast[Array[Long]],
-    minKey: Long)
-  extends UnaryExpression {
+case class DenseArrayLookup(child: Expression, build: DenseBuild) extends UnaryExpression {
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
@@ -55,28 +54,28 @@ case class DenseArrayLookup(
     }
 
   override def nullSafeEval(key: Any): Any = {
-    val idx = key.asInstanceOf[Long] - minKey
-    val arr = values.value
-    if (idx < 0 || idx >= arr.length) null else arr(idx.toInt)
+    val idx = key.asInstanceOf[Long] - build.minKey
+    val arr = build.values.value
+    if (idx < 0 || idx >= arr.length) null else build.base + (arr(idx.toInt) & 0xFFFFFFFFL)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     // reference the small Broadcast handle, not the array: generated
     // code fetches the executor-local value once per task
-    val bcRef = ctx.addReferenceObj("denseValues", values,
-      classOf[Broadcast[Array[Long]]].getName)
-    val arr = ctx.addMutableState("long[]", "denseArr",
-      v => s"$v = (long[]) $bcRef.value();")
+    val bcRef = ctx.addReferenceObj("denseValues", build.values,
+      classOf[Broadcast[Array[Int]]].getName)
+    val arr = ctx.addMutableState("int[]", "denseArr",
+      v => s"$v = (int[]) $bcRef.value();")
     // freshName, not a fixed local: with a non-nullable key nullSafeExec
     // inlines this block WITHOUT braces, so two lookups in one projection
     // would redeclare the variable and fail Janino compilation
     val idx = ctx.freshName("denseIdx")
     nullSafeCodeGen(ctx, ev, c => s"""
-      long $idx = $c - ${minKey}L;
+      long $idx = $c - ${build.minKey}L;
       if ($idx < 0 || $idx >= $arr.length) {
         ${ev.isNull} = true;
       } else {
-        ${ev.value} = $arr[(int) $idx];
+        ${ev.value} = ${build.base}L + ($arr[(int) $idx] & 0xFFFFFFFFL);
       }
     """)
   }
@@ -87,7 +86,7 @@ case class DenseArrayLookup(
 }
 
 object DenseLookup {
-  /** Column wrapper: `denseLookup(bc, min)(keyCol)`. */
-  def apply(values: Broadcast[Array[Long]], minKey: Long)(key: Column): Column =
-    bridge.toColumn(DenseArrayLookup(bridge.toExpression(key), values, minKey))
+  /** Column wrapper: `DenseLookup(build)(keyCol)`. */
+  def apply(build: DenseBuild)(key: Column): Column =
+    bridge.toColumn(DenseArrayLookup(bridge.toExpression(key), build))
 }

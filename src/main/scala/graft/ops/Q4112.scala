@@ -31,7 +31,8 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
   *    items as build side — q4112.h:45-50); callers pick the strategy via
   *    [[JoinStrategy]], which maps onto the reference's join engines.
   *  - A build side whose keys fill a contiguous domain exactly once is
-  *    broadcast as a plain value array instead ([[denseValuesArray]]).
+  *    broadcast as a plain array of 32-bit value offsets instead
+  *    ([[denseValuesArray]]).
   *    Part 1 and the dense partial aggregate then probe it with one
   *    kernel over the scan's columnar batches ([[probeAccumulate]]): the
   *    probe, the multiply and the accumulate run in one loop per batch,
@@ -93,7 +94,7 @@ object Q4112 {
   // (Left), so the adaptive planners pay the failed build once
   private val denseCache =
     new java.util.concurrent.ConcurrentHashMap[
-      (LogicalPlan, String, String), Either[String, (Broadcast[Array[Long]], Long)]]
+      (LogicalPlan, String, String), Either[String, DenseBuild]]
   private val minMaxCache =
     new java.util.concurrent.ConcurrentHashMap[
       (LogicalPlan, Seq[String]), Option[Seq[(Long, Long)]]]
@@ -105,7 +106,7 @@ object Q4112 {
     * table overwrite, new generator config behind the same view name.
     */
   def clearRelationCaches(): Unit = {
-    denseCache.values.forEach(_.foreach(_._1.destroy()))
+    denseCache.values.forEach(_.foreach(_.values.destroy()))
     denseCache.clear()
     minMaxCache.clear()
     rowCountCache.clear()
@@ -254,12 +255,13 @@ object Q4112 {
     * perfect-hash probe ([[part1Dense]]/[[part2Dense]]). The cheap test
     * comes first, from CACHED statistics (catalog column stats, a
     * columnar cache's batch statistics or the once-per-relation min/max
-    * scan, plus the relation row count):
+    * scan of key and value, plus the relation row count):
     * max − min + 1 == rows. That test alone passes duplicate-plus-gap
     * keys ((1, 1, 3) has min 1, max 3 and 3 rows), so an eligible
     * relation then takes the build itself, which verifies that every
-    * slot is written exactly once; the build (or its failure) is cached
-    * per relation and reused by the dense plan, so this adds no job.
+    * slot is written exactly once and that the values span less than
+    * 2^32; the build (or its failure) is cached per relation and reused
+    * by the dense plan, so this adds no job.
     * The adaptive planners prefer the dense probe whenever it is legal —
     * a bounds-check + array index per probe row beats a hash-map lookup
     * at every build size (the reference exploits the same layout fact:
@@ -273,14 +275,9 @@ object Q4112 {
   private def eligibleDenseBuild(
       items: DataFrame,
       itemKey: String,
-      valueCol: String): Option[(Broadcast[Array[Long]], Long)] =
-    try {
-      val Seq((mn, mx)) = minMaxLongs(items, Seq(itemKey))
-      val rows = relationRows(items)
-      if (rows > 0L && mx - mn + 1L == rows && rows <= Int.MaxValue.toLong)
-        denseBuild(items, itemKey, valueCol).toOption
-      else None
-    } catch { case scala.util.control.NonFatal(_) => None }
+      valueCol: String): Option[DenseBuild] =
+    try denseBuild(items, itemKey, valueCol).toOption.filter(_ => relationRows(items) > 0L)
+    catch { case scala.util.control.NonFatal(_) => None }
 
   /** The physical aggregation plan [[part2Adaptive]] last chose, for the
     * harness's CSV plan column (benchmark rows must name the plan that
@@ -363,17 +360,26 @@ object Q4112 {
     orders.join(hinted, orders(orderKey) === hinted(itemKey), "inner")
   }
 
+  /** A dense build side, broadcast: the value of key `minKey + k` is
+    * `base + (values(k) & 0xFFFFFFFFL)`, an unsigned 32-bit offset from
+    * the value column's minimum `base`. The reference stores the same
+    * column as `uint32_t* inner_vals` (q4112.h:16-17); half the bytes of
+    * a long array, so half the broadcast.
+    */
+  final case class DenseBuild(values: Broadcast[Array[Int]], minKey: Long, base: Long)
+
   /** Build the broadcast value array for the dense-key probe path.
     * Requires the build side's non-NULL keys to fill a contiguous integer
-    * domain exactly once, with non-NULL values (verified; a stated
-    * `require` fails otherwise) — the shape of every dimension table
-    * with a surrogate key, and of the reference's items.id (q4112.h:14).
-    * An empty build side gives an empty array, which every probe misses.
+    * domain exactly once, with non-NULL values that span less than 2^32
+    * (verified; a stated `require` fails otherwise) — the shape of every
+    * dimension table with a surrogate key, and of the reference's
+    * items.id and uint32 items.price (q4112.h:14-17). An empty build
+    * side gives an empty array, which every probe misses.
     */
   def denseValuesArray(
       items: DataFrame,
       itemKey: String,
-      valueCol: String): (Broadcast[Array[Long]], Long) =
+      valueCol: String): DenseBuild =
     denseBuild(items, itemKey, valueCol) match {
       case Right(built) => built
       case Left(why) => throw new IllegalArgumentException(s"requirement failed: $why")
@@ -387,152 +393,146 @@ object Q4112 {
       (items.queryExecution.optimizedPlan.canonicalized, itemKey, valueCol),
       _ => buildDenseValuesArray(items, itemKey, valueCol))
 
-  /** One partition's share of the dense build: its values, and either
-    * the first key of an ascending contiguous run (`keys == null`) or
-    * every key; `nulls` rows carried a NULL key or value and were not
-    * shipped. The values ship as 32-bit offsets from `base`
-    * (`values == null`) when the partition's values span less than 2^32
-    * — every uint32 column of the reference, and half the task-result
-    * bytes of longs — else as longs (`offsets == null`).
+  /** One partition's share of the dense build: the slot (key − min key)
+    * of its first row and, unless its keys are one ascending run from
+    * there (`slots == null`), every row's slot; every row's value as an
+    * unsigned 32-bit offset from the build's base; the rows that carried
+    * a NULL key or value and were not shipped; and, when a key or value
+    * lay outside the statistics' bounds, the stated reason (`fault`,
+    * else null), with no rows.
     */
   private[graft] final case class DenseBuildChunk(
-      first: Long, keys: Array[Long], base: Long, offsets: Array[Int], values: Array[Long],
-      nulls: Long) {
-    def length: Int = if (offsets != null) offsets.length else values.length
-
-    /** Value `i`, widened back from its offset. */
-    def value(i: Int): Long = if (offsets != null) base + (offsets(i) & 0xFFFFFFFFL) else values(i)
-
-    /** Write every value into `arr` from `at` on. */
-    def copyInto(arr: Array[Long], at: Int): Unit =
-      if (offsets == null) System.arraycopy(values, 0, arr, at, values.length)
-      else {
-        var i = 0
-        while (i < offsets.length) { arr(at + i) = value(i); i += 1 }
-      }
-  }
+      start: Int, slots: Array[Int], offsets: Array[Int], nulls: Long, fault: String)
 
   private[graft] object DenseBuildChunk {
 
-    /** The chunk of `values`, narrowed to 32-bit offsets from their
-      * minimum when their range max − min is at most 2^32 − 1.
+    /** Encodes one partition's rows, as they are read, for keys in
+      * [mn, mx] and values in [vmin, vmax]: the build's statistics, with
+      * mx − mn < 2^31. The offsets are exact when vmax − vmin < 2^32.
       */
-    def encode(first: Long, keys: Array[Long], values: Array[Long], nulls: Long): DenseBuildChunk = {
-      var lo = Long.MaxValue
-      var hi = Long.MinValue
-      var i = 0
-      while (i < values.length) {
-        lo = math.min(lo, values(i)); hi = math.max(hi, values(i)); i += 1
-      }
-      // hi − lo wraps past Long.MaxValue, but read unsigned it is the
-      // exact range
-      if (values.isEmpty || java.lang.Long.compareUnsigned(hi - lo, 0xFFFFFFFFL) > 0)
-        DenseBuildChunk(first, keys, 0L, null, values, nulls)
-      else {
-        val offsets = new Array[Int](values.length)
-        i = 0
-        while (i < values.length) { offsets(i) = (values(i) - lo).toInt; i += 1 }
-        DenseBuildChunk(first, keys, lo, offsets, null, nulls)
-      }
+    final class Encoder(mn: Long, mx: Long, vmin: Long, vmax: Long) {
+      private val slots = new scala.collection.mutable.ArrayBuilder.ofInt
+      private val offsets = new scala.collection.mutable.ArrayBuilder.ofInt
+      private var start = 0
+      private var prev = 0
+      private var contiguous = true
+      private var nulls = 0L
+      private var fault: String = null
+
+      def addNull(): Unit = nulls += 1L
+
+      def add(k: Long, v: Long): Unit =
+        if (fault == null) {
+          // x lies in [lo, hi] exactly when x − lo ≤ hi − lo, both read
+          // unsigned (both wrap mod 2^64)
+          if (java.lang.Long.compareUnsigned(k - mn, mx - mn) > 0)
+            fault = s"dense-key path requires each key in [$mn,$mx] exactly once: key $k " +
+              s"outside [$mn,$mx]"
+          else if (java.lang.Long.compareUnsigned(v - vmin, vmax - vmin) > 0)
+            fault = s"dense-key path requires values inside the stats-proven range " +
+              s"[$vmin,$vmax]: saw $v — stale statistics?"
+          else {
+            val s = (k - mn).toInt
+            val rows = offsets.length
+            if (rows == 0) start = s
+            else if (contiguous && s != prev + 1) {
+              // the run breaks: from here on every row ships its slot
+              contiguous = false
+              var i = 0
+              while (i < rows) { slots += start + i; i += 1 }
+            }
+            if (!contiguous) slots += s
+            prev = s
+            offsets += (v - vmin).toInt
+          }
+        }
+
+      def result(): DenseBuildChunk =
+        if (fault != null) DenseBuildChunk(0, null, Array.emptyIntArray, nulls, fault)
+        else DenseBuildChunk(start, if (contiguous) null else slots.result(), offsets.result(),
+          nulls, null)
     }
   }
 
-  /** The dense build behind [[denseValuesArray]]: one job whose tasks
+  /** The dense build behind [[denseValuesArray]]: one statistics call
+    * for the key's and the value's min/max, then one job whose tasks
     * read their partition's (key, value) batches and ship one
-    * [[DenseBuildChunk]] each, values as 32-bit offsets where the
-    * partition's range allows; the driver widens each chunk into the
-    * value array as it arrives and broadcasts that `Array[Long]`. Left
-    * with the reason when the keys or values break the dense contract:
-    * a NULL, a key outside [min, max], or a key twice or never.
+    * [[DenseBuildChunk]] each, values as 32-bit offsets from the value
+    * column's minimum; the driver copies each chunk into one `Array[Int]`
+    * as it arrives and broadcasts it. Left with the reason when the
+    * columns break the dense contract: a key or value column that is not
+    * byte, short, int or long, a NULL, a key outside [min, max] or a key
+    * twice or never, a value range of 2^32 or more, or a value outside
+    * the statistics' range (stale statistics).
     */
   private def buildDenseValuesArray(
       items: DataFrame,
       itemKey: String,
-      valueCol: String): Either[String, (Broadcast[Array[Long]], Long)] = {
+      valueCol: String): Either[String, DenseBuild] = {
     val t0 = System.nanoTime()
     val sc = items.sparkSession.sparkContext
-    // min, max and rows from the relation caches that denseEligible has
-    // already filled, not a stats job of the build's own
+    val notIntegral = Seq(itemKey, valueCol).filterNot(integralColumn(items, _))
+    if (notIntegral.nonEmpty)
+      return Left(s"dense-key path requires byte, short, int or long keys and values: " +
+        s"'${notIntegral.head}' is ${items.schema(notIntegral.head).dataType.simpleString}")
+    // rows and the min/max of key and value from the relation caches:
+    // one statistics call (one cache entry, at most one job) for both
     val n = relationRows(items)
-    if (n == 0L) return Right((sc.broadcast(new Array[Long](0)), 0L))
-    val (mn, mx) = minMaxLongsOpt(items, Seq(itemKey)) match {
-      case Some(Seq(m)) => m
-      case _ => return Left(s"dense-key path requires non-NULL keys: '$itemKey' is all NULL")
+    if (n == 0L) return Right(DenseBuild(sc.broadcast(Array.emptyIntArray), 0L, 0L))
+    val Seq((mn, mx), (vmin, vmax)) = minMaxLongsOpt(items, Seq(itemKey, valueCol)) match {
+      case Some(s) => s
+      case _ =>
+        // which column is all NULL: a failure path, so its own query
+        val allNull = if (minMaxLongsOpt(items, Seq(itemKey)).isEmpty) itemKey else valueCol
+        return Left(s"dense-key path requires non-NULL keys and values: '$allNull' is all NULL")
     }
     if (mx - mn + 1L != n)
       return Left(s"dense-key path requires a contiguous domain: [$mn,$mx] holds $n keys")
     if (n > Int.MaxValue) return Left(s"domain too large for one array: $n")
-    // pack each partition into primitive arrays, reading its (key, value)
-    // batches natively; when the partition's keys are already an
+    // each task encodes its partition into primitive arrays, reading its
+    // (key, value) batches natively; when the partition's keys are an
     // ascending contiguous run — true for every range-partitioned
     // surrogate-key dim, e.g. spark.range output or a key-sorted parquet
-    // file — ship ONLY the values (keys reconstructed from the run
-    // start) and fill with one pass. Non-contiguous partitions fall back
-    // to (keys, values) pairs. The values ship as 4 B offsets where the
-    // partition's values span less than 2^32, else as 8 B longs
-    // ([[DenseBuildChunk]]): moving 8 B task results to the driver was
-    // most of the build's job (1e7 keys on 4 cores: 80 MB in a 0.48-0.60 s
-    // job; 40 MB at 4 B, 0.32-0.42 s). Either way the driver-side
-    // assembly is the same data path Spark's own BroadcastExchangeExec
-    // uses (task results → build relation).
+    // file — it ships ONLY the values (keys reconstructed from the run
+    // start), else (slot, value) pairs, all 4 B each. Moving 8 B task
+    // results to the driver was most of the build's job (1e7 keys on 4
+    // cores: 80 MB in a 0.48-0.60 s job; 40 MB at 4 B, 0.32-0.42 s). The
+    // driver-side assembly is the same data path Spark's own
+    // BroadcastExchangeExec uses (task results → build relation).
     val src = batchSource(items, Seq(itemKey, valueCol))
     val (kInt, vInt) = (src.isInt(0), src.isInt(1))
     val chunkOf = (bs: Iterator[ColumnarBatch]) => {
-      val ks = new scala.collection.mutable.ArrayBuilder.ofLong
-      val vs = new scala.collection.mutable.ArrayBuilder.ofLong
-      var first = 0L
-      var prev = 0L
-      var any = false
-      var contiguous = true
-      var nulls = 0L
+      val enc = new DenseBuildChunk.Encoder(mn, mx, vmin, vmax)
       bs.foreach { b =>
-        val kc = b.column(0)
-        val vc = b.column(1)
+        val (kc, vc) = (b.column(0), b.column(1))
         var i = 0
         while (i < b.numRows) {
-          if (kc.isNullAt(i) || vc.isNullAt(i)) nulls += 1L
-          else {
-            val k = readLong(kc, kInt, i)
-            if (!any) { first = k; any = true }
-            else if (contiguous && k != prev + 1L) contiguous = false
-            prev = k
-            if (!contiguous) ks += k
-            vs += readLong(vc, vInt, i)
-          }
+          if (kc.isNullAt(i) || vc.isNullAt(i)) enc.addNull()
+          else enc.add(readLong(kc, kInt, i), readLong(vc, vInt, i))
           i += 1
         }
       }
-      val varr = vs.result()
-      if (contiguous) DenseBuildChunk.encode(first, null, varr, nulls)
-      else {
-        // keys recorded only after the break — rebuild the full key array
-        val tail = ks.result()
-        val all = new Array[Long](varr.length)
-        val nContig = varr.length - tail.length
-        var i = 0
-        while (i < nContig) { all(i) = first + i; i += 1 }
-        System.arraycopy(tail, 0, all, nContig, tail.length)
-        DenseBuildChunk.encode(first, all, varr, nulls)
-      }
+      enc.result()
     }
-    val arr = new Array[Long](n.toInt)
+    val arr = new Array[Int](n.toInt)
     // min, max and rows alone pass duplicate-plus-gap keys ((1, 1, 3)
     // has min 1, max 3 and 3 rows), which would leave the gap's slot 0:
     // every slot must be written exactly once
     val written = new java.util.BitSet(n.toInt)
     var nulls = 0L
     var fault: String = null
-    def place(lo: Long, len: Int): Boolean =
-      if (lo < 0L || lo + len > n) { fault = s"key ${lo + mn} outside [$mn,$mx]"; false }
-      else {
-        val dup = written.nextSetBit(lo.toInt)
-        if (dup >= 0 && dup < lo + len) { fault = s"key ${dup + mn} occurs twice"; false }
-        else { written.set(lo.toInt, (lo + len).toInt); true }
-      }
+    def place(lo: Int, len: Int): Boolean = {
+      val dup = written.nextSetBit(lo)
+      if (dup >= 0 && dup < lo + len) {
+        fault = s"dense-key path requires each key in [$mn,$mx] exactly once: key ${dup + mn} " +
+          "occurs twice"
+        false
+      } else { written.set(lo, lo + len); true }
+    }
     // stream each partition's chunk into the target array AS IT ARRIVES
     // (runJob resultHandler — serialized calls, happens-before on
     // return) instead of collect()-ing all chunks first: the driver
-    // never holds the full 4-16 B/key chunk set NEXT TO `arr`, and each
+    // never holds the full 4-8 B/key chunk set NEXT TO `arr`, and each
     // chunk is unreachable the moment it is copied in. Halves
     // peak driver allocation at inner=1e8 — the allocation spike that
     // made build times swing 3-58 s under a loaded heap (SCALING.md
@@ -540,28 +540,40 @@ object Q4112 {
     // in the handler would surface as a wrapped job failure.
     sc.runJob(src.batches, chunkOf, (_: Int, c: DenseBuildChunk) => {
       nulls += c.nulls
+      if (fault == null) fault = c.fault
       if (fault == null) {
-        if (c.keys == null) {
-          if (c.length > 0 && place(c.first - mn, c.length)) c.copyInto(arr, (c.first - mn).toInt)
+        val len = c.offsets.length
+        if (c.slots == null) {
+          if (len > 0 && place(c.start, len)) System.arraycopy(c.offsets, 0, arr, c.start, len)
         } else {
           var i = 0
-          while (fault == null && i < c.keys.length) {
-            if (place(c.keys(i) - mn, 1)) arr((c.keys(i) - mn).toInt) = c.value(i)
+          while (fault == null && i < len) {
+            if (place(c.slots(i), 1)) arr(c.slots(i)) = c.offsets(i)
             i += 1
           }
         }
       }
     })
+    val t1 = System.nanoTime()
     if (nulls > 0L)
       return Left(s"dense-key path requires non-NULL keys and values: $nulls rows carry a NULL")
-    if (fault != null)
-      return Left(s"dense-key path requires each key in [$mn,$mx] exactly once: $fault")
+    if (fault != null) return Left(fault)
     if (written.cardinality() != n)
       return Left(s"dense-key path requires each key in [$mn,$mx] exactly once: " +
         s"${written.cardinality()} of $n written")
+    // a value range of 2^32 or more has no 32-bit offsets (the job's
+    // offsets are truncated), but is refused only here, so that a NULL or
+    // a key twice or never gives its own reason first. vmax − vmin wraps past
+    // Long.MaxValue, but read unsigned it is the exact range
+    if (java.lang.Long.compareUnsigned(vmax - vmin, 0xFFFFFFFFL) > 0)
+      return Left(s"dense-key path requires values spanning less than 2^32: '$valueCol' spans " +
+        s"[$vmin,$vmax]")
     val bc = sc.broadcast(arr)
-    System.err.println(f"[dense-build] n=$n build=${(System.nanoTime() - t0) / 1e9}%.3f s")
-    Right((bc, mn))
+    // where a cold build's time goes: the statistics and the build job,
+    // then the broadcast of the 4 B/key array
+    System.err.println(f"[dense-build] n=$n job=${(t1 - t0) / 1e9}%.3f s " +
+      f"broadcast=${(System.nanoTime() - t1) / 1e9}%.3f s bytes=${4L * n}")
+    Right(DenseBuild(bc, mn, vmin))
   }
 
   /** Per-task columnar input of the dense probe kernel: batches holding
@@ -664,7 +676,8 @@ object Q4112 {
 
   /** The dense probe-and-aggregate kernel: one batch of (key, quantity
     * [, group]) columns from [[batchSource]], probed into the dense value
-    * array and accumulated into `acc` — the reference's probe loop over
+    * array (price = `base` + the unsigned offset at slot key − `mn`) and
+    * accumulated into `acc` — the reference's probe loop over
     * column arrays (q4112_hj_1.c:49-77), with no row ever materialized.
     * Per row, one loop does the bounds-checked array index, the multiply
     * and the accumulate. Without a group column every row goes to slot
@@ -682,18 +695,24 @@ object Q4112 {
     * The kernel keeps no state outside `acc`, which its task allocates,
     * so a retried task recomputes its own result and cannot double count.
     *
-    * Measured and not shipped, in a single-file Java loop on a 4-core
-    * host (2 threads × 5e6 probes into a 1e7-entry array):
-    *  - a radix-partitioned probe (partition the keys into cache-sized
-    *    ranges, then probe range by range) ran at 25-49 ns/row against
-    *    30-39 ns/row for this direct probe;
-    *  - an `int[]` value array (half the bytes) ran at 25-30 ns/row
-    *    against 30-39 for `long[]`.
-    * The tight loop is not memory-bound, so neither pays for its extra
-    * pass or its narrower value domain.
+    * The value array is an `int[]` of offsets ([[DenseBuild]]), measured
+    * in single-file Java loops on a 4-core host (1e7 values in the
+    * 1..99999 price domain, `local[2]`, 3 GB heap, default serializer):
+    *  - `sc.broadcast` of the `int[]` took 0.15-0.21 s, fill included,
+    *    against 0.41-0.54 s for the same values as a `long[]`: about
+    *    0.25-0.3 s off every cold build;
+    *  - probing it (2 threads × 5e6 probes into 1e7 entries) with
+    *    `base + (off & 0xFFFFFFFFL)` ran at 31.5-38 ns/row against 37-41
+    *    for the `long[]` (an earlier loop: 25-30 against 30-39), so the
+    *    warm probe does not pay for the narrower array.
+    * Measured and not shipped, in the same setting: a radix-partitioned
+    * probe (partition the keys into cache-sized ranges, then probe range
+    * by range) ran at 25-49 ns/row against 30-39 ns/row for this direct
+    * probe. The tight loop is not memory-bound, so it does not pay for
+    * its extra pass.
     */
   private def probeAccumulate(
-      b: ColumnarBatch, isInt: Array[Boolean], arr: Array[Long], mn: Long,
+      b: ColumnarBatch, isInt: Array[Boolean], arr: Array[Int], mn: Long, base: Long,
       mg: Long, nullSlot: Int, exact: Boolean, acc: DenseAcc): Unit = {
     val n = b.numRows
     val kc = b.column(0)
@@ -723,7 +742,7 @@ object Q4112 {
             }
           cnts(g) += 1L
           if (!(qNulls && qc.isNullAt(i))) {
-            val p = arr(k.toInt)
+            val p = base + (arr(k.toInt) & 0xFFFFFFFFL)
             val q = readLong(qc, qInt, i)
             sums(g) = if (exact) Math.addExact(sums(g), Math.multiplyExact(p, q)) else sums(g) + p * q
             if (hasV != null) hasV(g) = true
@@ -753,14 +772,14 @@ object Q4112 {
       orderKey: String,
       priceCol: String,
       quantityCol: String): DataFrame = {
-    val (bc, mn) = denseValuesArray(items, itemKey, priceCol)
+    val DenseBuild(bc, mn, base) = denseValuesArray(items, itemKey, priceCol)
     val src = batchSource(orders, Seq(orderKey, quantityCol))
     val isInt = src.isInt
     val exact = orders.sparkSession.sessionState.conf.ansiEnabled
     val perTask = src.batches.mapPartitions { bs =>
       val acc = new DenseAcc(1, trackV = true)
       val arr = bc.value
-      bs.foreach(b => probeAccumulate(b, isInt, arr, mn, 0L, 0, exact, acc))
+      bs.foreach(b => probeAccumulate(b, isInt, arr, mn, base, 0L, 0, exact, acc))
       Iterator.single[InternalRow](new GenericInternalRow(Array[Any](
         if (acc.hasV(0)) acc.sums(0) else null, acc.cnts(0))))
     }.setName(s"dense probe over ${src.kind}")
@@ -804,18 +823,16 @@ object Q4112 {
       .select(expr("ss div cc").as("avg_avg_value"))
 
   private def denseGroupedValues(
-      build: (Broadcast[Array[Long]], Long),
+      build: DenseBuild,
       orders: DataFrame,
       orderKey: String,
       quantityCol: String,
-      groupCol: String): DataFrame = {
-    val (bc, mn) = build
+      groupCol: String): DataFrame =
     orders
-      .select(graft.functions.DenseLookup(bc, mn)(col(orderKey).cast("long")).as("price"),
+      .select(graft.functions.DenseLookup(build)(col(orderKey).cast("long")).as("price"),
         col(quantityCol).as("q"), col(groupCol))
       .where(col("price").isNotNull)
       .select(col(groupCol), (col("price") * col("q")).as("v"))
-  }
 
   /** The joined (group, v = price*quantity) projection, via the dense
     * array probe when the build side is a contiguous-key dimension
@@ -897,7 +914,7 @@ object Q4112 {
       priceCol: String,
       quantityCol: String,
       groupCol: String): DataFrame = {
-    val (bc, mn) = denseValuesArray(items, itemKey, priceCol)
+    val DenseBuild(bc, mn, base) = denseValuesArray(items, itemKey, priceCol)
     val (mg, dom) = groupDomain(orders, groupCol)
     val spark = orders.sparkSession
     val exact = spark.sessionState.conf.ansiEnabled
@@ -910,13 +927,13 @@ object Q4112 {
       if (dom <= DenseAggMaxDomain) src.batches.mapPartitions { bs =>
         val acc = new DenseAcc(dom + 1, trackV)
         val arr = bc.value
-        bs.foreach(b => probeAccumulate(b, isInt, arr, mn, mg, dom, exact, acc))
+        bs.foreach(b => probeAccumulate(b, isInt, arr, mn, base, mg, dom, exact, acc))
         accChunks(acc, ranges)
       } else src.batches.mapPartitions { bs =>
         val cache = new CombineCache(ranges, trackV, exact)
         val arr = bc.value
         bs.flatMap { b =>
-          probeCombine(b, isInt, arr, mn, mg, dom, exact, cache)
+          probeCombine(b, isInt, arr, mn, base, mg, dom, exact, cache)
           cache.shipped()
         } ++ cache.flush()
       }
@@ -1106,7 +1123,7 @@ object Q4112 {
     * loop gains no work.
     */
   private def probeCombine(
-      b: ColumnarBatch, isInt: Array[Boolean], arr: Array[Long], mn: Long,
+      b: ColumnarBatch, isInt: Array[Boolean], arr: Array[Int], mn: Long, base: Long,
       mg: Long, nullSlot: Int, exact: Boolean, cache: CombineCache): Unit = {
     val n = b.numRows
     val (kc, qc, gc) = (b.column(0), b.column(1), b.column(2))
@@ -1127,7 +1144,7 @@ object Q4112 {
             }
           if (qNulls && qc.isNullAt(i)) cache.add(g, 0L, withV = false)
           else {
-            val p = arr(k.toInt)
+            val p = base + (arr(k.toInt) & 0xFFFFFFFFL)
             val q = readLong(qc, qInt, i)
             cache.add(g, if (exact) Math.multiplyExact(p, q) else p * q, withV = true)
           }

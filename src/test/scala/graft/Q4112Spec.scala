@@ -725,32 +725,48 @@ class Q4112Spec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     val span = 0xFFFFFFFFL // 2^32 - 1
-    // the narrow encoding exactly up to a range of 2^32 - 1
-    assert(DenseBuildChunk.encode(1L, null, Array(-7L, -7L + span, 5L), 0L).offsets != null)
-    assert(DenseBuildChunk.encode(1L, null, Array(-7L, -7L + span + 1L), 0L).offsets == null)
-    assert(DenseBuildChunk.encode(1L, null, Array(Long.MinValue, Long.MaxValue), 0L).offsets == null)
-    val narrow = DenseBuildChunk.encode(1L, null, Array(Long.MaxValue, Long.MaxValue - span), 0L)
-    assert(narrow.offsets != null)
-    assert(Seq(narrow.value(0), narrow.value(1)) === Seq(Long.MaxValue, Long.MaxValue - span))
-    // the broadcast array over keys 1..n, one partition per price list
-    def built(partitions: Seq[Long]*): Seq[Long] = {
+    // the encoder: one ascending run of keys ships only its start slot;
+    // any other order ships every row's slot, as an Int
+    def encoded(rows: (Long, Long)*): DenseBuildChunk = {
+      val enc = new DenseBuildChunk.Encoder(1L, 4L, -7L, -7L + span)
+      rows.foreach { case (k, v) => enc.add(k, v) }
+      enc.result()
+    }
+    val run = encoded((2L, -7L), (3L, -7L + span), (4L, 0L))
+    assert(run.fault === null && run.start === 1 && run.slots === null)
+    assert(run.offsets.toSeq === Seq(0, span.toInt, 7))
+    val broken = encoded((3L, 5L), (4L, -7L + (1L << 31)), (1L, -7L), (2L, 1L))
+    assert(broken.fault === null && broken.slots.toSeq === Seq(2, 3, 0, 1))
+    // offsets at or above 2^31 are negative as Int and read back unsigned
+    assert(broken.offsets.toSeq.map(o => -7L + (o & 0xFFFFFFFFL)) ===
+      Seq(5L, -7L + (1L << 31), -7L, 1L))
+    assert(broken.offsets(1) < 0)
+    // the broadcast array over keys 1..n, one partition per price list,
+    // read back as base + unsigned offset; `rotated` emits each
+    // partition's rows from its second key on, so its keys are not one
+    // ascending run
+    def built(rotated: Boolean)(partitions: Seq[Long]*): Seq[Long] = {
       Q4112.clearRelationCaches()
       val starts = partitions.scanLeft(1L)(_ + _.length)
       val items = spark.sparkContext
         .parallelize(partitions.indices.map(p => (starts(p), partitions(p))), partitions.length)
-        .flatMap { case (first, ps) => ps.indices.map(i => (first + i, ps(i))) }
+        .flatMap { case (first, ps) =>
+          val at = if (rotated) ps.indices.drop(1) ++ ps.indices.take(1) else ps.indices
+          at.map(i => (first + i, ps(i)))
+        }
         .toDF("id", "price")
       assert(items.rdd.glom().collect().map(_.length).toSeq === partitions.map(_.length))
-      val (bc, mn) = Q4112.denseValuesArray(items, "id", "price")
-      assert(mn === 1L)
-      bc.value.toSeq
+      val b = Q4112.denseValuesArray(items, "id", "price")
+      assert(b.minKey === 1L)
+      b.values.value.toSeq.map(o => b.base + (o & 0xFFFFFFFFL))
     }
     for (parts <- Seq(
-        Seq(Seq(-5L, 3L, -1000000000000L), Seq(7L, -1L)),        // negative prices
-        Seq(Seq(-3L, -3L + span, 0L), Seq(1L << 40, (1L << 40) - span)), // range 2^32 - 1
-        Seq(Seq(-3L, -3L + span + 1L), Seq(0L, span + 1L)),      // range 2^32
-        Seq(Seq(Long.MinValue, Long.MaxValue, 0L), Seq(Long.MaxValue), Seq(Long.MinValue))))
-      try assert(built(parts: _*) === parts.flatten, parts)
+        Seq(Seq(-5L, 3L, -1000000000L), Seq(7L, -1L)),                 // negative prices
+        Seq(Seq(-3L, -3L + span, 0L), Seq(-3L + (1L << 31), -2L)),      // range 2^32 - 1
+        Seq(Seq(Long.MaxValue, Long.MaxValue - span),
+          Seq(Long.MaxValue - (1L << 31), Long.MaxValue - 1L)));         // near Long.MaxValue
+        rotated <- Seq(false, true))
+      try assert(built(rotated)(parts: _*) === parts.flatten, (parts, rotated))
       finally Q4112.clearRelationCaches()
     // the dense contract's stated reasons, with narrow and wide values
     def reason(rows: (java.lang.Long, java.lang.Long)*): String = {
@@ -758,6 +774,13 @@ class Q4112Spec extends SparkSpec {
       try intercept[IllegalArgumentException](
         Q4112.denseValuesArray(rows.toDF("id", "price"), "id", "price")).getMessage
       finally Q4112.clearRelationCaches()
+    }
+    // a value range of 2^32 or more has no 32-bit offsets
+    for (wide <- Seq(Seq(-3L, -3L + span + 1L, 0L), Seq(Long.MinValue, Long.MaxValue, 0L))) {
+      val why = reason(wide.zipWithIndex.map { case (v, i) =>
+        (java.lang.Long.valueOf(i + 1L), java.lang.Long.valueOf(v)) }: _*)
+      assert(why.contains(s"requires values spanning less than 2^32: 'price' spans " +
+        s"[${wide.min},${wide.max}]"), why)
     }
     for (big <- Seq(30L, 1L << 40)) {
       // a duplicate plus a gap passes min, max and rows
@@ -771,6 +794,133 @@ class Q4112Spec extends SparkSpec {
       val allNull = reason((null, 10L), (null, big))
       assert(allNull.contains("'id' is all NULL"), allNull)
     }
+    val allNullValue = reason((1L, null), (2L, null))
+    assert(allNullValue.contains("'price' is all NULL"), allNullValue)
+  }
+
+  test("a value outside the statistics' range fails the dense build with the value and the range") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    // the encoder, with bounds narrower than the data: keys [1, 3],
+    // values [10, 20]
+    def fault(rows: (Long, Long)*): DenseBuildChunk = {
+      val enc = new DenseBuildChunk.Encoder(1L, 3L, 10L, 20L)
+      rows.foreach { case (k, v) => enc.add(k, v) }
+      enc.result()
+    }
+    assert(fault((1L, 10L), (2L, 20L), (3L, 15L)).fault === null)
+    // below, above, and 2^32 above the minimum, which would wrap into
+    // offset 0
+    for (v <- Seq(9L, 21L, 10L + (1L << 32), Long.MinValue, Long.MaxValue)) {
+      val c = fault((1L, 10L), (2L, v), (3L, 15L))
+      assert(c.fault.contains(s"saw $v") && c.fault.contains("[10,20]"), c.fault)
+      assert(c.offsets.isEmpty, "a chunk with a fault ships no rows")
+    }
+    val key = fault((1L, 10L), (4L, 10L)).fault
+    assert(key.contains("key 4 outside [1,3]"), key)
+    // end to end: the statistics are cached, then the data is
+    // overwritten under an unchanged plan without clearRelationCaches
+    val dir = java.nio.file.Files.createTempDirectory("dense_build_stale").toString
+    def write(top: Long): Unit = spark.range(1L, 101L, 1L, 2)
+      .select(col("id"), when(col("id") === 77L, lit(top)).otherwise(col("id") % 50L).as("price"))
+      .write.mode("overwrite").parquet(dir)
+    def items = spark.read.parquet(dir)
+    val orders = spark.range(0L, 1000L, 1L, 2)
+      .select((col("id") % 100L + 1L).as("itemId"), (col("id") % 7L).as("quantity"))
+    try {
+      Q4112.clearRelationCaches()
+      write(3L)
+      assert(Q4112.minMaxLongs(items, Seq("id", "price")) === Seq((1L, 100L), (0L, 49L)))
+      write(1000L)
+      val why = intercept[IllegalArgumentException](Q4112.denseValuesArray(items, "id", "price"))
+        .getMessage
+      assert(why.contains("saw 1000") && why.contains("[0,49]") && why.contains("stale"), why)
+      // the planner takes the hash plan over the new data
+      assert(Q4112.part1Adaptive(items, orders, "id", "itemId", "price", "quantity").head() ===
+        Q4112.part1(items, orders, "id", "itemId", "price", "quantity").head())
+      assert(Q4112.lastChosenPlan === "broadcast", Q4112.lastChosenPlan)
+    } finally Q4112.clearRelationCaches()
+  }
+
+  test("every dense reader reads offsets of 2^31 and more unsigned; wider values take the hash plan") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    val spark2 = spark
+    import spark2.implicits._
+    val span = 0xFFFFFFFFL // 2^32 - 1
+    def items(values: Seq[Long]): DataFrame =
+      values.zipWithIndex.map { case (v, i) => (i + 1L, v) }.toDF("id", "price")
+    // every value span exactly 2^32 - 1, so offsets 2^31 and up read
+    // negative as Int: negative values, and values near Long.MaxValue
+    val low = -(1L << 31) - 5L
+    val negative = items(Seq(low, low + span, -1L, 0L, 1L, low + (1L << 31),
+      low + (1L << 31) + 12345L, 7L, low + span - 1L))
+    val high = items(Seq(Long.MaxValue, Long.MaxValue - span, Long.MaxValue - 1L,
+      Long.MaxValue - span + (1L << 31), Long.MaxValue - span + 1L, Long.MaxValue - 99999L))
+    // keys 0..10 (0 and 10 miss every build), groups over a domain of
+    // 37 slots (per-task arrays) or ~7.2e6 slots (the combine cache);
+    // `hot` multiplies one row's price by 1 and every other by 0, so the
+    // high values sum without overflow under ANSI
+    def orders(slots: Long, hot: Boolean): DataFrame = spark.range(0L, 2000L, 1L, 4).select(
+      (col("id") % 11L).as("itemId"),
+      (if (hot) (col("id") === 5L).cast("long") else col("id") % 3L).as("quantity"),
+      (col("id") % 37L * slots).as("storeId"))
+    def outcome(df: => DataFrame): Either[String, Option[Long]] =
+      try Right(df.collect().toSeq match {
+        case Seq(r) => if (r.isNullAt(0)) None else Some(r.getLong(0))
+        case rows => fail(s"expected one row, got ${rows.size}")
+      }) catch {
+        case e: Exception if Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .exists(t => String.valueOf(t.getMessage).toLowerCase.contains("overflow")) =>
+          Left("overflow")
+      }
+    val noCodegen = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    def withConf[T](kvs: Seq[(String, String)])(body: => T): T = {
+      val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body
+      finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    try for (ansi <- Seq("true", "false")) withConf(Seq("spark.sql.ansi.enabled" -> ansi)) {
+      for ((it, what) <- Seq(negative -> "negative", high -> "high"); hot <- Seq(false, true);
+          slots <- Seq(1L, 200000L)) {
+        val o = orders(slots, hot)
+        val on = s"$what values, hot=$hot, slots=$slots, ansi=$ansi"
+        val hash1 = outcome(part1(it, o, "id", "itemId", "price", "quantity", BroadcastHash))
+        assert(outcome(part1Dense(it, o, "id", "itemId", "price", "quantity")) === hash1, on)
+        assert(outcome(part1Adaptive(it, o, "id", "itemId", "price", "quantity")) === hash1, on)
+        assert(lastChosenPlan === "dense", on)
+        val hash2 = outcome(part2(it, o, "id", "itemId", "price", "quantity", "storeId",
+          BroadcastHash))
+        // the array path, or the combine cache past 2^22 slots
+        assert(outcome(part2Dense(it, o, "id", "itemId", "price", "quantity", "storeId")) ===
+          hash2, on)
+        assert(outcome(part2Adaptive(it, o, "id", "itemId", "price", "quantity", "storeId")) ===
+          hash2, on)
+        assert(lastChosenPlan === (if (slots == 1L) "partial_dense" else "range_dense"), on)
+        // DenseArrayLookup, generated and interpreted (nullSafeEval)
+        assert(outcome(part2DenseLookup(it, o, "id", "itemId", "price", "quantity",
+          "storeId")) === hash2, on)
+        withConf(noCodegen) {
+          assert(outcome(part2DenseLookup(it, o, "id", "itemId", "price", "quantity",
+            "storeId")) === hash2, s"$on, no codegen")
+        }
+      }
+      // a span of 2^32, and all of [Long.MinValue, Long.MaxValue]: the
+      // dense build refuses them, and the planners take the hash plans
+      for (wide <- Seq(items(Seq(-3L, -3L + span + 1L, 0L, 5L)),
+          items(Seq(Long.MinValue, Long.MaxValue, 0L, 5L)))) {
+        val o = orders(1L, hot = false)
+        assert(notDense(part1Dense(wide, o, "id", "itemId", "price", "quantity")))
+        assert(!denseEligible(wide, "id", "price"))
+        assert(outcome(part1Adaptive(wide, o, "id", "itemId", "price", "quantity")) ===
+          outcome(part1(wide, o, "id", "itemId", "price", "quantity", BroadcastHash)))
+        assert(lastChosenPlan === "broadcast", lastChosenPlan)
+        assert(outcome(part2Adaptive(wide, o, "id", "itemId", "price", "quantity", "storeId")) ===
+          outcome(part2(wide, o, "id", "itemId", "price", "quantity", "storeId", BroadcastHash)))
+        assert(lastChosenPlan === "partial", lastChosenPlan)
+      }
+    } finally clearRelationCaches()
   }
 
   test("priceOf closed form equals the generator's column expression") {

@@ -37,18 +37,18 @@ class RelationCacheSpec extends SparkSpec {
   test("denseValuesArray builds once per relation and rebuilds after clear") {
     Q4112.clearRelationCaches()
     val items = freshItems()
-    val (bc1, mn1) = Q4112.denseValuesArray(items, "id", "price")
+    val Q4112.DenseBuild(bc1, mn1, _) = Q4112.denseValuesArray(items, "id", "price")
     // a SEPARATE DataFrame over the same relation (same canonical plan)
-    val (bc2, mn2) = Q4112.denseValuesArray(freshItems(), "id", "price")
+    val Q4112.DenseBuild(bc2, mn2, _) = Q4112.denseValuesArray(freshItems(), "id", "price")
     assert(bc1 eq bc2, "second call must return the cached broadcast")
     assert(mn1 === mn2)
     // but a different value column is a different index
     val items3 = spark.range(0, 1000)
       .select(col("id"), (col("id") % 97).as("price"), (col("id") % 7).as("weight"))
-    val (bc3, _) = Q4112.denseValuesArray(items3, "id", "weight")
+    val Q4112.DenseBuild(bc3, _, _) = Q4112.denseValuesArray(items3, "id", "weight")
     assert(!(bc3 eq bc1))
     Q4112.clearRelationCaches()
-    val (bc4, _) = Q4112.denseValuesArray(freshItems(), "id", "price")
+    val Q4112.DenseBuild(bc4, _, _) = Q4112.denseValuesArray(freshItems(), "id", "price")
     assert(!(bc4 eq bc1), "clear must drop the cached broadcast")
     Q4112.clearRelationCaches()
   }
@@ -118,8 +118,9 @@ class RelationCacheSpec extends SparkSpec {
       assert(countJobs { got = Q4112.minMaxLongs(reordered, Seq("l", "i")) } === 1)
       assert(got === expected.reverse)
       // and its row count is the cache's: a dense test that finds the
-      // keys gappy runs the key's stats job and no count
-      assert(countJobs { assert(!Q4112.denseEligible(reordered, "l", "i")) } === 1)
+      // keys gappy asks the same statistics of key and value, and runs
+      // no job at all
+      assert(countJobs { assert(!Q4112.denseEligible(reordered, "l", "i")) } === 0)
       // the answer is cached per relation: asking again runs no job
       assert(countJobs { got = Q4112.minMaxLongs(cached, Seq("i", "l")) } === 0)
       assert(got === expected)
@@ -173,7 +174,8 @@ class RelationCacheSpec extends SparkSpec {
     try {
       items.count(); orders.count()
       var df: org.apache.spark.sql.DataFrame = null
-      // part 1: the key's batch statistics and the dense build
+      // part 1: the batch statistics of key and value (one job) and the
+      // dense build
       assert(countJobs {
         df = Q4112.part1Adaptive(items, orders, "id", "itemId", "price", "quantity")
       } === 2)

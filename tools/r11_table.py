@@ -57,7 +57,7 @@ def main():
     print("\n## part-1 floor decomposition (best clean rep, s)")
     floor = best("matrix_results_1e0_p1_r11floor.csv", 1)
     auto = best("matrix_results_1e0_p1_r11auto.csv", 1)
-    builds = re.findall(r"\[dense-build\] n=\d+ build=([0-9.]+) s",
+    builds = re.findall(r"\[dense-build\] n=\d+ (?:build|job)=([0-9.]+) s",
                         open("/tmp/r11_campaign.log").read()) \
         if os.path.exists("/tmp/r11_campaign.log") else []
     print("| cfg | C t16 | scan floor | auto (full) | full-floor |")
