@@ -1,12 +1,27 @@
 package graft.functions
 
-import graft.ops.Q4112.DenseBuild
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{DataType, LongType}
+
+/** A dense build side, broadcast: the value of key `minKey + k` is
+  * `base + (values(k) & 0xFFFFFFFFL)`, an unsigned 32-bit offset from
+  * the value column's minimum `base`. The reference stores the same
+  * column as `uint32_t* inner_vals` (q4112.h:16-17); half the bytes of
+  * a long array, so half the broadcast. Built by
+  * `graft.ops.Q4112.denseValuesArray`.
+  */
+final case class DenseBuild(values: Broadcast[Array[Int]], minKey: Long, base: Long)
+
+object DenseBuild {
+  /** The value an offset of a build with this `base` stands for: every
+    * reader but the generated code of [[DenseArrayLookup]] decodes here.
+    */
+  @inline def value(base: Long, off: Int): Long = base + (off & 0xFFFFFFFFL)
+}
 
 /** O(1) array probe into a broadcast dense-key dimension — the
   * "perfect hash join" special case real engines apply when a build
@@ -56,7 +71,7 @@ case class DenseArrayLookup(child: Expression, build: DenseBuild) extends UnaryE
   override def nullSafeEval(key: Any): Any = {
     val idx = key.asInstanceOf[Long] - build.minKey
     val arr = build.values.value
-    if (idx < 0 || idx >= arr.length) null else build.base + (arr(idx.toInt) & 0xFFFFFFFFL)
+    if (idx < 0 || idx >= arr.length) null else DenseBuild.value(build.base, arr(idx.toInt))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -75,6 +90,7 @@ case class DenseArrayLookup(child: Expression, build: DenseBuild) extends UnaryE
       if ($idx < 0 || $idx >= $arr.length) {
         ${ev.isNull} = true;
       } else {
+        // DenseBuild.value, inlined
         ${ev.value} = ${build.base}L + ($arr[(int) $idx] & 0xFFFFFFFFL);
       }
     """)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.broadcast.Broadcast
+import graft.functions.DenseBuild
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -360,14 +360,6 @@ object Q4112 {
     orders.join(hinted, orders(orderKey) === hinted(itemKey), "inner")
   }
 
-  /** A dense build side, broadcast: the value of key `minKey + k` is
-    * `base + (values(k) & 0xFFFFFFFFL)`, an unsigned 32-bit offset from
-    * the value column's minimum `base`. The reference stores the same
-    * column as `uint32_t* inner_vals` (q4112.h:16-17); half the bytes of
-    * a long array, so half the broadcast.
-    */
-  final case class DenseBuild(values: Broadcast[Array[Int]], minKey: Long, base: Long)
-
   /** Build the broadcast value array for the dense-key probe path.
     * Requires the build side's non-NULL keys to fill a contiguous integer
     * domain exactly once, with non-NULL values that span less than 2^32
@@ -563,8 +555,12 @@ object Q4112 {
         s"${written.cardinality()} of $n written")
     // a value range of 2^32 or more has no 32-bit offsets (the job's
     // offsets are truncated), but is refused only here, so that a NULL or
-    // a key twice or never gives its own reason first. vmax − vmin wraps past
-    // Long.MaxValue, but read unsigned it is the exact range
+    // a key twice or never gives its own reason first. The statistics
+    // proved the range before the job, so such a relation pays one wasted
+    // job (4 B/key shipped) and the n-slot array and BitSet: an accepted
+    // cost, once per relation since the Left is cached, and no measured
+    // input has such values. vmax − vmin wraps past Long.MaxValue, but
+    // read unsigned it is the exact range
     if (java.lang.Long.compareUnsigned(vmax - vmin, 0xFFFFFFFFL) > 0)
       return Left(s"dense-key path requires values spanning less than 2^32: '$valueCol' spans " +
         s"[$vmin,$vmax]")
@@ -696,16 +692,24 @@ object Q4112 {
     * so a retried task recomputes its own result and cannot double count.
     *
     * The value array is an `int[]` of offsets ([[DenseBuild]]), measured
-    * in single-file Java loops on a 4-core host (1e7 values in the
-    * 1..99999 price domain, `local[2]`, 3 GB heap, default serializer):
+    * on a 4-core host:
     *  - `sc.broadcast` of the `int[]` took 0.15-0.21 s, fill included,
-    *    against 0.41-0.54 s for the same values as a `long[]`: about
-    *    0.25-0.3 s off every cold build;
-    *  - probing it (2 threads × 5e6 probes into 1e7 entries) with
+    *    against 0.41-0.54 s for the same values as a `long[]` (a
+    *    single-file Java loop: 1e7 values in the 1..99999 price domain,
+    *    `local[2]`, 3 GB heap, default serializer): about 0.25-0.3 s off
+    *    every cold build;
+    *  - a memory-bound probe does not pay for it: in the same loop, 2
+    *    threads × 5e6 probes into 1e7 entries decoding
     *    `base + (off & 0xFFFFFFFFL)` ran at 31.5-38 ns/row against 37-41
-    *    for the `long[]` (an earlier loop: 25-30 against 30-39), so the
-    *    warm probe does not pay for the narrower array.
-    * Measured and not shipped, in the same setting: a radix-partitioned
+    *    for the `long[]`, and perfbench's `q4112_probe` (a 40 MB build)
+    *    read `warm_s` 0.323 → 0.313 s over 10 paired runs;
+    *  - an L1-resident build reads about 5-10% slower: perfbench's
+    *    `q4112_groups` (500 entries, this kernel with a group column)
+    *    read `warm_s` 0.318 → 0.345 s, worse in 9 of 10 paired runs, and
+    *    an in-JVM loop over 5e6 cached orders rows read `part1Dense`
+    *    0.158-0.167 → 0.173-0.192 s. The bytecode differs only by the
+    *    decode's `i2l`, `land`, `ladd`; the cause is not isolated.
+    * Measured and not shipped, in a single-file Java loop: a radix-partitioned
     * probe (partition the keys into cache-sized ranges, then probe range
     * by range) ran at 25-49 ns/row against 30-39 ns/row for this direct
     * probe. The tight loop is not memory-bound, so it does not pay for
@@ -742,7 +746,7 @@ object Q4112 {
             }
           cnts(g) += 1L
           if (!(qNulls && qc.isNullAt(i))) {
-            val p = base + (arr(k.toInt) & 0xFFFFFFFFL)
+            val p = DenseBuild.value(base, arr(k.toInt))
             val q = readLong(qc, qInt, i)
             sums(g) = if (exact) Math.addExact(sums(g), Math.multiplyExact(p, q)) else sums(g) + p * q
             if (hasV != null) hasV(g) = true
@@ -1144,7 +1148,7 @@ object Q4112 {
             }
           if (qNulls && qc.isNullAt(i)) cache.add(g, 0L, withV = false)
           else {
-            val p = base + (arr(k.toInt) & 0xFFFFFFFFL)
+            val p = DenseBuild.value(base, arr(k.toInt))
             val q = readLong(qc, qInt, i)
             cache.add(g, if (exact) Math.multiplyExact(p, q) else p * q, withV = true)
           }

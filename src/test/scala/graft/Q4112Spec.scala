@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.DenseBuild
 import graft.gen.Q4112Gen
 import graft.model.GenConfig
 import graft.ops.Q4112
@@ -738,7 +739,7 @@ class Q4112Spec extends SparkSpec {
     val broken = encoded((3L, 5L), (4L, -7L + (1L << 31)), (1L, -7L), (2L, 1L))
     assert(broken.fault === null && broken.slots.toSeq === Seq(2, 3, 0, 1))
     // offsets at or above 2^31 are negative as Int and read back unsigned
-    assert(broken.offsets.toSeq.map(o => -7L + (o & 0xFFFFFFFFL)) ===
+    assert(broken.offsets.toSeq.map(DenseBuild.value(-7L, _)) ===
       Seq(5L, -7L + (1L << 31), -7L, 1L))
     assert(broken.offsets(1) < 0)
     // the broadcast array over keys 1..n, one partition per price list,
@@ -758,7 +759,7 @@ class Q4112Spec extends SparkSpec {
       assert(items.rdd.glom().collect().map(_.length).toSeq === partitions.map(_.length))
       val b = Q4112.denseValuesArray(items, "id", "price")
       assert(b.minKey === 1L)
-      b.values.value.toSeq.map(o => b.base + (o & 0xFFFFFFFFL))
+      b.values.value.toSeq.map(DenseBuild.value(b.base, _))
     }
     for (parts <- Seq(
         Seq(Seq(-5L, 3L, -1000000000L), Seq(7L, -1L)),                 // negative prices

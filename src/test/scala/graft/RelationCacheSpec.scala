@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.DenseBuild
 import graft.ops.Q4112
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
@@ -37,18 +38,18 @@ class RelationCacheSpec extends SparkSpec {
   test("denseValuesArray builds once per relation and rebuilds after clear") {
     Q4112.clearRelationCaches()
     val items = freshItems()
-    val Q4112.DenseBuild(bc1, mn1, _) = Q4112.denseValuesArray(items, "id", "price")
+    val DenseBuild(bc1, mn1, _) = Q4112.denseValuesArray(items, "id", "price")
     // a SEPARATE DataFrame over the same relation (same canonical plan)
-    val Q4112.DenseBuild(bc2, mn2, _) = Q4112.denseValuesArray(freshItems(), "id", "price")
+    val DenseBuild(bc2, mn2, _) = Q4112.denseValuesArray(freshItems(), "id", "price")
     assert(bc1 eq bc2, "second call must return the cached broadcast")
     assert(mn1 === mn2)
     // but a different value column is a different index
     val items3 = spark.range(0, 1000)
       .select(col("id"), (col("id") % 97).as("price"), (col("id") % 7).as("weight"))
-    val Q4112.DenseBuild(bc3, _, _) = Q4112.denseValuesArray(items3, "id", "weight")
+    val DenseBuild(bc3, _, _) = Q4112.denseValuesArray(items3, "id", "weight")
     assert(!(bc3 eq bc1))
     Q4112.clearRelationCaches()
-    val Q4112.DenseBuild(bc4, _, _) = Q4112.denseValuesArray(freshItems(), "id", "price")
+    val DenseBuild(bc4, _, _) = Q4112.denseValuesArray(freshItems(), "id", "price")
     assert(!(bc4 eq bc1), "clear must drop the cached broadcast")
     Q4112.clearRelationCaches()
   }

@@ -6,17 +6,18 @@
 Runs `python3 perfbench/run.py --workload W --seed S --seconds T --trace R`
 in each checkout, one run at a time, alternating which side goes first
 (pair 1 runs BASE first, pair 2 CHANGE first, ...). Each checkout builds
-its own engine on its first run. Prints, for every metric of the runs'
-JSON line (the end-to-end ones with --trace 0, the per-layer ones with
---trace 1): the median [Q1, Q3] of each side, the per-pair ratios
-CHANGE / BASE, the pairs CHANGE wins, and a two-sided sign-test p-value.
-A metric's direction (lower or higher is better) comes from BENCHMARK.json
-in BASE_DIR; lower when it is not listed.
+its own engine on its first run. The run length T is BENCHMARK.json's
+`run_seconds`, and each metric's direction (lower or higher is better)
+its `better` (lower when a metric is not listed), both read from
+BASE_DIR; the two checkouts' run lengths must agree. Prints, for every
+metric of the runs' JSON line (the end-to-end ones with --trace 0, the
+per-layer ones with --trace 1): the median [Q1, Q3] of each side, the
+per-pair ratios CHANGE / BASE, the pairs CHANGE wins, and a two-sided
+sign-test p-value.
 
 Exits 1 when any run fails or when the two sides disagree on the run
 record's `chosen_plan` or `fail_ratio` (the planner's decision and the
-share of passes that missed the oracle), 0 otherwise. --out writes every
-run's metrics and record fields as JSON.
+share of passes that missed the oracle), 0 otherwise.
 """
 import argparse
 import glob
@@ -32,10 +33,10 @@ def log(msg):
     print(f"[ab] {msg}", file=sys.stderr, flush=True)
 
 
-def run_once(tree, a):
+def run_once(tree, a, seconds):
     """One perfbench run in `tree`: (metrics, record), or None on failure."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", a.workload, "--seed", str(a.seed),
-           "--seconds", str(a.seconds), "--trace", str(a.trace)]
+           "--seconds", str(seconds), "--trace", str(a.trace)]
     p = subprocess.Popen(cmd, cwd=tree, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     out, err = p.communicate()
     lines = out.strip().splitlines()
@@ -77,14 +78,9 @@ def fmt(x, digits):
     return "n/a" if x is None else f"{x:.{digits}f}"
 
 
-def directions(tree):
-    try:
-        with open(os.path.join(tree, "BENCHMARK.json")) as f:
-            bench = json.load(f)
-    except (OSError, ValueError):
-        return {}
-    return {m["name"]: m.get("better", "lower")
-            for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
+def benchmark(tree):
+    with open(os.path.join(tree, "BENCHMARK.json")) as f:
+        return json.load(f)
 
 
 def main():
@@ -94,26 +90,29 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=int, default=12)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--out", help="write every run's metrics and record fields here (JSON)")
     a = ap.parse_args()
     trees = {"base": os.path.abspath(a.base), "change": os.path.abspath(a.change)}
+    bench = benchmark(trees["base"])
+    seconds = bench["run_seconds"]
+    if benchmark(trees["change"]).get("run_seconds") != seconds:
+        sys.exit("[ab] the two checkouts' BENCHMARK.json disagree on run_seconds")
+    better = {m["name"]: m.get("better", "lower")
+              for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
 
     runs = {"base": [], "change": []}
     for i in range(a.pairs):
         order = ("base", "change") if i % 2 == 0 else ("change", "base")
         for side in order:
             log(f"pair {i + 1}/{a.pairs}: {side}")
-            r = run_once(trees[side], a)
+            r = run_once(trees[side], a, seconds)
             if r is None:
                 sys.exit(1)
             runs[side].append(r)
             log(f"  {side}: {json.dumps(r[0])} {json.dumps(r[1])}")
 
-    better = directions(trees["base"])
     names = [m for m in runs["base"][0][0] if all(m in r[0] for s in runs for r in runs[s])]
-    print(f"workload {a.workload}, {a.pairs} pairs, seed {a.seed}, --seconds {a.seconds}, "
+    print(f"workload {a.workload}, {a.pairs} pairs, seed {a.seed}, --seconds {seconds}, "
           f"--trace {a.trace}; ratio = change / base")
     print("| metric | base median [Q1, Q3] | change median [Q1, Q3] | median ratio "
           "| change wins | sign p | per-pair ratios |")
@@ -138,9 +137,6 @@ def main():
         seen = {s: sorted({json.dumps(r[1][field]) for r in runs[s]}) for s in runs}
         print(f"{field}: base {', '.join(seen['base'])}; change {', '.join(seen['change'])}")
         ok &= seen["base"] == seen["change"]
-    if a.out:
-        with open(a.out, "w") as f:
-            json.dump({"args": vars(a), "runs": runs}, f, indent=1)
     if not ok:
         log("the two sides disagree on chosen_plan or fail_ratio")
     sys.exit(0 if ok else 1)
