@@ -7,10 +7,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Mirrors the reference's execution setup (q4112_main.c:40-132): a fixed
   * thread count and fully in-memory columnar tables. On Spark, threads map
   * to local[N] executor slots and the columnar store is parquet + Tungsten
-  * batches. `shuffle.partitions` is pinned to the core count (not 200) so
-  * local runs don't drown in tiny tasks; AQE coalesces further at runtime
-  * and re-plans skewed joins — at cluster scale the same config scales by
-  * raising cores/partitions, no code change.
+  * batches; the in-memory cache keeps an all-integral relation, per batch
+  * of `spark.sql.inMemoryColumnarStorage.batchSize` rows, as one base plus
+  * 0/1/2/4/8-byte offsets per column and a NULL mask, with Spark's own
+  * per-batch statistics row (`sources.NarrowCacheSerializer`); any other
+  * relation keeps Spark's default cache format. `shuffle.partitions` is
+  * pinned to the core count (not 200) so local runs don't drown in tiny
+  * tasks; AQE coalesces further at runtime and re-plans skewed joins — at
+  * cluster scale the same config scales by raising cores/partitions, no
+  * code change.
   */
 object Engine {
 
@@ -44,6 +49,9 @@ object Engine {
       // read min/max there with ZERO jobs; without them a materialized
       // cache's per-batch bounds cost one job, anything else one scan
       .config("spark.sql.cbo.planStats.enabled", "true")
+      // the cache layout above; a static conf, so it holds for every
+      // session of the JVM
+      .config("spark.sql.cache.serializer", classOf[sources.NarrowCacheSerializer].getName)
       // events.parquet carries TIMESTAMP(NANOS); Spark has no nanos type,
       // so read them as Long and convert explicitly (see nanosToTimestamp)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

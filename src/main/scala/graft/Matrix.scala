@@ -124,10 +124,6 @@ object Matrix {
     val buckets = 256
     val spark = Engine.session(cpus, Map(
       "spark.sql.shuffle.partitions" -> shufflePartitions,
-      // the generated columns are near-unique longs: the cache's
-      // DictionaryEncoding stats pass (boxed HashMap.put per value) costs
-      // more than the whole query at 1e9 rows — store raw columnar
-      "spark.sql.inMemoryColumnarStorage.compressed" -> "false",
       // the dense-key array build collects value-only chunks for
       // contiguous-run partitions (4 B/key + serialization overhead —
       // 400 MB at inner=1e8); the cap must also fit the NON-contiguous
@@ -298,6 +294,9 @@ object Matrix {
         // the (group, v) hot path costs more than the bytes it saves
         // (median 1.15×→1.28×, SCALING §6 has both tables). So part 1
         // stores narrow (except on its bucketed layout) and part 2 wide.
+        // The session's cache (sources.NarrowCacheSerializer) now
+        // narrows every all-integral relation per batch on its own; why
+        // this cast stays, and what retiring it needs: Tables.narrowStored.
         val narrow = part == 1 && !p1Bucketed
         val orders =
           if (p1Bucketed) {

@@ -65,6 +65,12 @@ object Tables {
     * type. The caller must have PROVEN the values fit (generator
     * contracts or column min/max stats) — the cast here would wrap
     * silently, so a stats check belongs at every call site.
+    *
+    * The session's cache ([[NarrowCacheSerializer]]) already stores
+    * every all-integral relation as narrow per-batch offsets, so this
+    * cast no longer saves cache bytes there; it stays because part 1's
+    * probe reads the narrowed columns as int vectors (SCALING §6).
+    * Retiring it needs its own Matrix A/B at 1e-1.
     */
   def narrowStored(df: DataFrame, cols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.col

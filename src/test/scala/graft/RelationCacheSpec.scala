@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.DenseBuild
 import graft.ops.Q4112
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 
@@ -18,19 +17,6 @@ import org.apache.spark.sql.graft.bridge
   */
 class RelationCacheSpec extends SparkSpec {
   import spark.implicits._
-
-  private def countJobs(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    // listener events post asynchronously; drain the bus so a late
-    // job-start can't escape a job-count assertion
-    try { body; bridge.drainListenerBus(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
 
   private def freshItems() = spark.range(0, 1000)
     .select(col("id"), (col("id") % 97).as("price"))
