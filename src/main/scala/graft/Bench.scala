@@ -39,6 +39,11 @@ object Bench {
     def calibrate(): Double = Calibration.cpu(spark)
     def calibrateShuffle(): Double = Calibration.shuffle(spark)
     calibrate(); calibrateShuffle() // warm both probes' codegen paths
+    // this session's settled probes, taken before the priors are read:
+    // the idle shuffle band (best of three) and the CPU probe a payload's
+    // calib_pre is checked against (best of two)
+    val sessionIdleShuffle = Seq.fill(3)(calibrateShuffle()).min
+    val sessionCpu = Seq.fill(2)(calibrate()).min
 
     // previous committed payload (read BEFORE this run overwrites it):
     // prior per-query times feed the end-of-run outlier re-time pass,
@@ -48,9 +53,9 @@ object Bench {
     // parse would silently disable the outlier pass on any payload
     // shape change, exactly the failure class it was added to catch
     // (ADVICE r10 item 4); zero-parsed now warns loudly instead. Priors
-    // only hold for the same core count: a payload from another host
-    // width (or one that predates the `cpus` field) would make every
-    // settle wait its full bound and flag rows against foreign times.
+    // only hold for a host like this one (see [[foreignPayload]]): a
+    // payload from another would make every settle wait its full bound
+    // and flag rows against foreign times.
     val (priorTimes, priorIdleShuffle): (Map[String, Double], Option[Double]) = {
       val f = new java.io.File("BENCH_full_latest.json")
       if (!f.isFile) (Map.empty, None)
@@ -65,9 +70,10 @@ object Bench {
           case JLong(l) => Some(l.toDouble)
           case _ => None
         }
-        if (!num(j \ "cpus").contains(cpus.toDouble)) {
-          System.err.println("[bench] BENCH_full_latest.json was not measured " +
-            s"on $cpus cpus; running without priors")
+        val foreign = foreignPayload(num(j \ "cpus"), num(j \ "calib_pre"), cpus, sessionCpu)
+        if (foreign.isDefined) {
+          System.err.println(s"[bench] BENCH_full_latest.json ${foreign.get}; " +
+            "running without priors")
           (Map.empty[String, Double], None)
         } else {
           val times = j \ "queries" match {
@@ -97,7 +103,6 @@ object Bench {
     // are both defined relative to it (Matrix.scala:254 established
     // the pattern; Bench lacked it and round 9 committed a payload
     // with a 10.4× session-weather row that nothing caught)
-    val sessionIdleShuffle = Seq.fill(3)(calibrateShuffle()).min
     val idleShuffle = priorIdleShuffle match {
       case Some(p) if p > 0 => math.min(sessionIdleShuffle, p)
       case _ => sessionIdleShuffle
@@ -224,4 +229,21 @@ object Bench {
     println(line)
     spark.stop()
   }
+
+  /** Why a committed payload's priors do not fit this session, or None
+    * when they do: the payload must name this run's core count, and
+    * its `calib_pre` CPU probe must lie within 1.5× either way of this
+    * session's settled probe `sessionCpu` — two hosts of one width but
+    * different speed do not share priors. A payload missing either
+    * field is foreign.
+    */
+  private[graft] def foreignPayload(payloadCpus: Option[Double], payloadCalibPre: Option[Double],
+      cpus: Int, sessionCpu: Double): Option[String] =
+    if (!payloadCpus.contains(cpus.toDouble)) Some(s"was not measured on $cpus cpus")
+    else payloadCalibPre match {
+      case Some(p) if p > 0 && sessionCpu <= 1.5 * p && p <= 1.5 * sessionCpu => None
+      case Some(p) => Some(f"has calib_pre $p%.3f s, more than 1.5x from this " +
+        f"session's CPU probe $sessionCpu%.3f s")
+      case None => Some("has no calib_pre")
+    }
 }

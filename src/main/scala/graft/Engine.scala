@@ -30,11 +30,15 @@ object Engine {
     */
   def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-  /** The one session configuration. `extra` is applied after the
-    * defaults, so a caller that measures under different SparkContext
-    * settings (Matrix) overrides them without a builder of its own.
+  /** The one session configuration, shared by the mains, the tests
+    * and perfbench; `cores` is its only parameter. The driver's result
+    * cap is 4g, not Spark's 1g, for the dense build's task results at
+    * 1e8 keys. Bucketed layouts need no setting of their own: Spark's
+    * `CacheManager` plans a cached relation with the auto bucketed-scan
+    * rule off, and a bare scan's physical plan keeps its
+    * HashPartitioning under the default.
     */
-  def session(cores: Int = cpus, extra: Map[String, String] = Map.empty): SparkSession = {
+  def session(cores: Int = cpus): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")
@@ -58,7 +62,11 @@ object Engine {
       // managed tables (bucketed co-located joins) live outside the repo
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.ui.enabled", "false")
-      .config(extra)
+      // the dense build's task results reach the driver as one job's
+      // results: 4 B/key, 8 B/key where a partition's keys are not one
+      // ascending run, so 400-800 MB at 1e8 keys against the default
+      // 1g cap
+      .config("spark.driver.maxResultSize", "4g")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // native kernels as SQL functions + the Jaccard length-filter rule;

@@ -31,10 +31,9 @@ import org.apache.spark.sql.graft.bridge
   *
   * Every cell runs the adaptive planners, which work out the physical
   * plan from the relations. The environment picks only the stored
-  * layout and the session's shuffle width:
+  * layout:
   *  - `SPARK_GRAFT_P1_PLAN` = auto | bucketed | scan_floor;
-  *  - `SPARK_GRAFT_P2_PLAN` = auto | bucketed | joined_bucketed;
-  *  - `SPARK_GRAFT_SHUFFLE` = shuffle partitions (default: the cores).
+  *  - `SPARK_GRAFT_P2_PLAN` = auto | bucketed | joined_bucketed.
   */
 object Matrix {
 
@@ -89,11 +88,6 @@ object Matrix {
       if (args.length > 5 && args(5).nonEmpty) Some(args(5).split(",").map(_.toInt).toSet)
       else None
     val cpus = Engine.cpus
-    // giant-group-count configs (part-2 cfg4/18: 1e8 singleton groups)
-    // need more, smaller reduce tasks than cores: each reducer's
-    // aggregation map holds groups/partitions entries NEXT TO the 24 GB
-    // input cache, and 32 concurrent ~3M-entry maps OOM a 100 GB heap
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
     // part-2 stored layout: auto (none; the stats-adaptive planner picks
     // the plan, default) | bucketed (probe table stored clustered on the
     // group key) | joined_bucketed (the joined (group, v) projection
@@ -122,25 +116,7 @@ object Matrix {
       s"SPARK_GRAFT_P1_PLAN must be auto|bucketed|scan_floor, got '$p1Plan'")
     // buckets per layout table: 256 one-file buckets
     val buckets = 256
-    val spark = Engine.session(cpus, Map(
-      "spark.sql.shuffle.partitions" -> shufflePartitions,
-      // the dense-key array build collects value-only chunks for
-      // contiguous-run partitions (4 B/key + serialization overhead —
-      // 400 MB at inner=1e8); the cap must also fit the NON-contiguous
-      // fallback (8 B/key + overhead ≈ 800 MB at 1e8), which a
-      // shuffled dimension would hit; 4g covers both paths with margin.
-      // Same driver data path as Spark's own BroadcastExchangeExec.
-      "spark.driver.maxResultSize" -> "4g",
-      // lz4 barely shrank the near-random dense value arrays (measured
-      // when they were long[]) but costs a full compress+decompress pass
-      // per executor
-      "spark.broadcast.compress" -> "false",
-      // always honor a bucketed layout: the auto rule may plan a bare
-      // scan (e.g. the cache-materialization pass) as non-bucketed,
-      // which would strip the HashPartitioning/ordering the cached plan
-      // hands to every later query — the layout-detection path
-      // (Q4112.clusteredOn) and the sort-free bucketed SMJ depend on it
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false"))
+    val spark = Engine.session(cpus)
     // always-on per-rep IO attribution: exact shuffle/spill bytes per
     // timed rep land in the CSV next to the wall-clock probes, and the
     // rep's stages of 2 s or more of task time go to stderr (max vs sum
@@ -234,26 +210,13 @@ object Matrix {
         val p2Bucketed = part == 2 && p2Plan == "bucketed"
         import org.apache.spark.sql.functions.col
         import spark.implicits._
-        // one file per bucket (repartition on the bucket key with the
-        // same hash the bucketizer uses), so the scan reports both the
-        // HashPartitioning AND the per-bucket sort order; write cost is
-        // logged — it is the one-time ingest price the layout amortizes
-        // over every downstream grouped/joined query (SCALING.md table)
+        // the write is the one-time ingest price the layout amortizes
+        // over every downstream grouped/joined query (SCALING.md table),
+        // so its cost is logged
         def writeBucketedTable(df: org.apache.spark.sql.DataFrame,
             table: String, key: String): Unit = {
           val t0 = System.nanoTime()
-          // a killed prior session leaves the warehouse dir without its
-          // (in-memory derby) metastore entry; Overwrite can't reclaim a
-          // location the catalog doesn't know about — clear both
-          spark.sql(s"DROP TABLE IF EXISTS $table")
-          val loc = new org.apache.hadoop.fs.Path(
-            spark.sessionState.catalog.defaultTablePath(
-              org.apache.spark.sql.catalyst.TableIdentifier(table)))
-          loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
-          df.repartition(buckets, col(key))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .bucketBy(buckets, key).sortBy(key).format("parquet")
-            .saveAsTable(table)
+          graft.sources.Tables.writeBucketed(df, table, buckets, key)
           System.err.println(f"[bucketed-write] $table key=$key " +
             f"write=${(System.nanoTime() - t0) / 1e9}%.3f s")
         }

@@ -110,6 +110,4 @@ case class DotProduct(left: Expression, right: Expression)
 object VectorFunctions {
   def cosineSimilarity(a: Column, b: Column): Column =
     bridge.toColumn(CosineSimilarity(bridge.toExpression(a), bridge.toExpression(b)))
-  def dotProduct(a: Column, b: Column): Column =
-    bridge.toColumn(DotProduct(bridge.toExpression(a), bridge.toExpression(b)))
 }

@@ -50,12 +50,18 @@ object LayoutRegistry {
     df.queryExecution.optimizedPlan.canonicalized
 
   /** Register `layout` as the bucketed form of `source` on `key`.
-    * `layout` must hold the SAME rows/schema as `source` and its scan
-    * must report hash clustering on `key` (checked).
+    * `layout` must hold the SAME rows/schema as `source`: its column
+    * names (case-insensitive) and types must equal `source`'s, in order,
+    * and its scan must report hash clustering on `key` (both checked;
+    * the rows are the caller's contract).
     */
   def registerBucketed(source: DataFrame, key: String, layout: DataFrame): Unit = {
     require(Q4112.clusteredOn(layout, key),
       s"layout scan is not hash-clustered on '$key' — nothing to route to")
+    def columns(df: DataFrame) = df.schema.fields.toSeq.map(f => (f.name.toLowerCase, f.dataType))
+    require(columns(layout) == columns(source),
+      s"bucketed layout must have the source's columns " +
+        s"${source.schema.simpleString}; has ${layout.schema.simpleString}")
     bucketed.put(BucketedKey(canon(source), key.toLowerCase), layout)
   }
 

@@ -311,13 +311,19 @@ object Q4112 {
     * (q4112_hj_1.c:38-43, README-2.txt:32-43).
     */
   def clusteredOn(df: DataFrame, keyCol: String): Boolean =
+    hashPartitions(df, keyCol).isDefined
+
+  /** The partition count of `df`'s scan when its output is a
+    * single-column HashPartitioning on `keyCol`, else None.
+    */
+  private def hashPartitions(df: DataFrame, keyCol: String): Option[Int] =
     df.queryExecution.sparkPlan.outputPartitioning match {
-      case h: HashPartitioning =>
-        h.expressions.length == 1 && (h.expressions.head match {
-          case a: Attribute => a.name.equalsIgnoreCase(keyCol)
-          case _ => false
-        })
-      case _ => false
+      case h: HashPartitioning if h.expressions.length == 1 =>
+        h.expressions.head match {
+          case a: Attribute if a.name.equalsIgnoreCase(keyCol) => Some(h.numPartitions)
+          case _ => None
+        }
+      case _ => None
     }
 
   /** True when `a` and `b` are co-partitioned for an equi-join on
@@ -331,19 +337,8 @@ object Q4112 {
     * exchange-free plan.
     */
   def coPartitioned(a: DataFrame, aKey: String, b: DataFrame, bKey: String): Boolean = {
-    def parts(df: DataFrame, key: String): Option[Int] =
-      df.queryExecution.sparkPlan.outputPartitioning match {
-        case h: HashPartitioning if h.expressions.length == 1 =>
-          h.expressions.head match {
-            case attr: Attribute if attr.name.equalsIgnoreCase(key) => Some(h.numPartitions)
-            case _ => None
-          }
-        case _ => None
-      }
-    (parts(a, aKey), parts(b, bKey)) match {
-      case (Some(x), Some(y)) => x == y
-      case _ => false
-    }
+    val n = hashPartitions(a, aKey)
+    n.isDefined && n == hashPartitions(b, bKey)
   }
 
   /** items ⋈ orders with the chosen physical strategy.

@@ -4,6 +4,7 @@ package queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.sources.Tables
 import graft.SparkEntry._
 
 /** The q4112 reference query in its physical forms (§2.2-2.4):
@@ -32,40 +33,22 @@ private[graft] object Q4112Queries {
     orders.withColumn("l_suppkey",
       col("l_suppkey") * 65537L + col("l_suppkey") % 2L * (1L << 22))
 
-  /** Runs `body` with autoBucketedScan off, restoring the session's
-    * value after.
-    */
-  private def withoutAutoBucketedScan[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val old = s.conf.get(key)
-    s.conf.set(key, "false")
-    try body finally s.conf.set(key, old)
-  }
-
-  /** Writes `df`, bucketed and sorted on `key` into 8 buckets of one file
-    * each, as the table `<tag>_<sessionKey>` once per session and
-    * directory, and returns the table's name. The write is ingest cost:
-    * the first rep pays it and best-of-N drops it.
+  /** Writes `df` as the managed table `<tag>_<sessionKey>`, bucketed
+    * and sorted on `key` into 8 buckets, once per session and directory,
+    * and returns the table's name. The write is ingest cost: the first
+    * rep pays it and best-of-N drops it.
     */
   private def bucketedOnce(s: SparkSession, dir: String, tag: String, key: String)(
       df: => DataFrame): String = {
     val tbl = s"${tag}_${sessionKey(s, dir)}"
-    if (!s.catalog.tableExists(tbl))
-      df.repartition(8, col(key))
-        .write.mode("overwrite").option("path", tmpPath(s"graft-$tbl"))
-        .bucketBy(8, key).sortBy(key)
-        .format("parquet").saveAsTable(tbl)
+    if (!s.catalog.tableExists(tbl)) Tables.writeBucketed(df, tbl, 8, key)
     tbl
   }
 
   /** The layout gates' row over a grouped run body that reads the
     * bucketed table `tag`: the group count, the sum of `v`, and whether
     * the run's plan is exchange-free over a scan clustered on the group
-    * key. The timed noop write plans its own QueryExecution after the
-    * conf restore, where (auto = default true)
-    * DisableUnnecessaryBucketedScan still KEEPS the bucketed scan — it
-    * only drops one no operator benefits from, and the groupBy on the
-    * bucket column benefits; the plan read here is planned the same way.
+    * key.
     */
   private def layoutRow(s: SparkSession, dir: String, run: DataFrame, tag: String,
       v: String, total: String): DataFrame = {
@@ -97,29 +80,19 @@ private[graft] object Q4112Queries {
     val tblJ = s"layout_routed_jb_$sid"
     def dropAll(): Unit = Seq(tblB, tblJ).foreach { tb =>
       try s.sql(s"DROP TABLE IF EXISTS $tb") catch { case _: Throwable => () }
-      deletePath(s, tmpPath(s"graft-$tb"))
     }
-    try withoutAutoBucketedScan(s) {
-      dropAll()
+    try {
       def run(): Long = Q4112.part2Adaptive(partItems(s, dir), liOrders(s, dir),
         "p_partkey", "l_partkey", "price", "quantity", "l_suppkey")
         .collect()(0).getLong(0)
       // stage 1: bucketed copy of the probe relation, same schema
-      liOrders(s, dir)
-        .repartition(8, col("l_suppkey"))
-        .write.mode("overwrite").option("path", tmpPath(s"graft-$tblB"))
-        .bucketBy(8, "l_suppkey").sortBy("l_suppkey")
-        .format("parquet").saveAsTable(tblB)
+      Tables.writeBucketed(liOrders(s, dir), tblB, 8, "l_suppkey")
       LayoutRegistry.registerBucketed(liOrders(s, dir), "l_suppkey", s.table(tblB))
       val a = run()
       val okB = Q4112.lastChosenPlan == "bucketed_routed"
       // stage 2: query-specific joined materialization, clustered on
       // the group key — must outrank the bucketed copy
-      joinedSuppValues(s, dir)
-        .repartition(8, col("l_suppkey"))
-        .write.mode("overwrite").option("path", tmpPath(s"graft-$tblJ"))
-        .bucketBy(8, "l_suppkey").sortBy("l_suppkey")
-        .format("parquet").saveAsTable(tblJ)
+      Tables.writeBucketed(joinedSuppValues(s, dir), tblJ, 8, "l_suppkey")
       LayoutRegistry.registerJoined(partItems(s, dir), liOrders(s, dir),
         "p_partkey", "l_partkey", "price", "quantity", "l_suppkey", s.table(tblJ))
       val b = run()
@@ -296,7 +269,7 @@ private[graft] object Q4112Queries {
     // wins). Both routed answers must agree, and the value itself is
     // oracle-recomputed from the RAW tables in DuckDB — a lossy layout
     // write or a broken routed read breaks the hash, not just a flag.
-    Record("q4112_layout_routed", (s, dir) => withoutAutoBucketedScan(s) {
+    Record("q4112_layout_routed", (s, dir) => {
       val tbl = bucketedOnce(s, dir, "layout_jb", "l_suppkey")(joinedSuppValues(s, dir))
       try {
         LayoutRegistry.registerJoined(partItems(s, dir), liOrders(s, dir),
@@ -358,7 +331,7 @@ private[graft] object Q4112Queries {
     // n_groups/total_qty from the RAW table) and (b) the grouped
     // aggregate over the bucketed scan plans with ZERO Exchange nodes —
     // the exchange-free plan part2Adaptive auto-detects via clusteredOn
-    Record("layout_bucketed", (s, dir) => withoutAutoBucketedScan(s) {
+    Record("layout_bucketed", (s, dir) => {
       val tbl = bucketedOnce(s, dir, "layout_bkt", "l_suppkey")(
         t(s, dir, "lineitem").select(col("l_suppkey"), floor(col("l_quantity")).as("qty")))
       s.table(tbl).groupBy(col("l_suppkey")).agg(sum(col("qty")).as("sum_qty"))
@@ -390,7 +363,7 @@ private[graft] object Q4112Queries {
     // raw tables (the oracle recomputes n_groups/sum_avg from
     // lineitem⋈part in DuckDB — a lossy materialization or a broken
     // bucketed read breaks the hash)
-    Record("layout_joined_bucketed", (s, dir) => withoutAutoBucketedScan(s) {
+    Record("layout_joined_bucketed", (s, dir) => {
       val tbl = bucketedOnce(s, dir, "layout_jb", "l_suppkey")(joinedSuppValues(s, dir))
       s.table(tbl).groupBy(col("l_suppkey"))
         .agg(expr("sum(v) div count(*)").as("avg_value"))

@@ -13,38 +13,26 @@ import org.apache.spark.sql.types.StructType
   */
 object Tables {
 
-  /** Write `df` as a bucketed, sorted managed table: `buckets` files per
-    * partition keyed by `keys`, each bucket sorted — a sort-merge join
-    * between two tables bucketed the same way needs neither exchange nor
-    * sort.
-    *
-    * `narrowCols` applies the measured width rule ([[narrowStored]]) at
-    * write time, so the bucketed layout records its storage width in the
-    * table schema the same way it records its bucketing in the catalog.
-    * Bucket keys are excluded by contract: Spark's bucket hash is
-    * type-sensitive (Murmur3 over 4 bytes for int32, 8 for int64), so a
-    * key narrowed on one side and wide on the other would co-locate
-    * against the WRONG buckets — a silent wrong-partitioning hazard, not
-    * a perf choice — and a key widened at read time loses its bucketed
-    * partitioning to the cast anyway.
+  /** Write `df` as the managed parquet table `table`, bucketed and
+    * sorted on `key` into `buckets` buckets of one file each, so the
+    * scan reports both the single-column HashPartitioning and the
+    * per-bucket sort order: a grouped aggregate on `key` needs no
+    * exchange, and a sort-merge join with a table bucketed the same way
+    * needs neither exchange nor sort. Any table of that name is dropped
+    * first, together with its warehouse location: a JVM that died
+    * mid-run leaves the directory behind without its (in-memory)
+    * catalog entry, and an Overwrite cannot reclaim a location the
+    * catalog does not know.
     */
-  def writeBucketed(
-      df: DataFrame,
-      table: String,
-      buckets: Int,
-      keys: Seq[String],
-      mode: SaveMode = SaveMode.Overwrite,
-      narrowCols: Seq[String] = Nil): Unit = {
-    val narrowedKeys = narrowCols.toSet.intersect(keys.toSet)
-    require(narrowedKeys.isEmpty,
-      s"bucket keys ${narrowedKeys.mkString(", ")} must keep their logical width: " +
-        "int32 and int64 bucket-hash differently, so a narrowed key co-locates " +
-        "against the wrong buckets; narrow value columns only")
-    val stored = if (narrowCols.isEmpty) df else narrowStored(df, narrowCols)
-    stored.write
-      .mode(mode)
-      .bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
+  def writeBucketed(df: DataFrame, table: String, buckets: Int, key: String): Unit = {
+    val spark = df.sparkSession
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog.defaultTablePath(
+      org.apache.spark.sql.catalyst.TableIdentifier(table)))
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+    df.repartition(buckets, org.apache.spark.sql.functions.col(key))
+      .write.mode(SaveMode.Overwrite)
+      .bucketBy(buckets, key).sortBy(key)
       .format("parquet")
       .saveAsTable(table)
   }
@@ -68,9 +56,15 @@ object Tables {
     *
     * The session's cache ([[NarrowCacheSerializer]]) already stores
     * every all-integral relation as narrow per-batch offsets, so this
-    * cast no longer saves cache bytes there; it stays because part 1's
-    * probe reads the narrowed columns as int vectors (SCALING §6).
-    * Retiring it needs its own Matrix A/B at 1e-1.
+    * cast saves no cache bytes there (804.8 MB with it, 804.5 MB
+    * without, for 1e8 generated orders). It stays because part 1's
+    * probe decodes the narrowed columns into int vectors, which is
+    * measurably faster: in-JVM A/Bs of `part1Adaptive` (`dense`) over
+    * 1e7 items on a 4-core host, the same orders cached with and
+    * without the cast, alternating reps, read 0.668 against 0.742 s
+    * (faster in 14 of 20 reps) and 0.706 against 0.862 s (17 of 20) at
+    * 1e8 orders, and 0.429 against 0.493 s (15 of 20) and 0.496
+    * against 0.504 s (6 of 12) at 5e7.
     */
   def narrowStored(df: DataFrame, cols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
@@ -105,24 +99,8 @@ object Tables {
     }: _*)
   }
 
-  /** Append one CSV line per row — the reference's benchmark sink
-    * (q4112_main.c:111-132 semantics).
-    */
-  def appendCsv(df: DataFrame, dir: String): Unit =
-    df.write.mode(SaveMode.Append).option("header", "false").csv(dir)
-
   def readTable(spark: SparkSession, table: String): DataFrame =
     spark.table(table)
-
-  /** Read a table with every metadata-marked narrow column restored to
-    * its logical width — the reader-side entry point for layouts written
-    * with `writeBucketed(..., narrowCols)`. NOTE: widening is a cast
-    * projection, so it discards the scan's bucketed output partitioning;
-    * join on the (never-narrowed) bucket keys via [[readTable]] first and
-    * widen AFTER the join when the exchange-free property matters.
-    */
-  def readTableWidened(spark: SparkSession, table: String): DataFrame =
-    widened(spark.table(table))
 
   /** CSV source with an EXPLICIT schema — at corpus scale schema
     * inference is a full extra pass over the data, so it is opt-in only

@@ -44,4 +44,14 @@ class BenchScopeSpec extends SparkSpec {
     assert(!counted.contains("fm_count_distinct"),
       "under count(), the FM buffer work is pruned away")
   }
+
+  test("Bench priors are foreign on another core count or a CPU probe 1.5x off") {
+    assert(Bench.foreignPayload(Some(4.0), Some(1.87), 4, 1.90).isEmpty)
+    assert(Bench.foreignPayload(Some(4.0), Some(1.87), 4, 1.87 * 1.5).isEmpty)
+    assert(Bench.foreignPayload(Some(8.0), Some(1.87), 4, 1.87).get.contains("4 cpus"))
+    assert(Bench.foreignPayload(None, Some(1.87), 4, 1.87).isDefined)
+    assert(Bench.foreignPayload(Some(4.0), Some(1.87), 4, 2.9).get.contains("calib_pre"))
+    assert(Bench.foreignPayload(Some(4.0), Some(1.87), 4, 1.2).isDefined)
+    assert(Bench.foreignPayload(Some(4.0), None, 4, 1.87).isDefined)
+  }
 }

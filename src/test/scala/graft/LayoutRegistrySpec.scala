@@ -3,6 +3,7 @@ package graft
 import graft.gen.Q4112Gen
 import graft.model.GenConfig
 import graft.ops.{LayoutRegistry, Q4112}
+import graft.sources.Tables
 
 import org.apache.spark.sql.functions.{broadcast, col}
 
@@ -12,8 +13,10 @@ import org.apache.spark.sql.functions.{broadcast, col}
   * fires across SEPARATE DataFrame instances of the same plan, (b) the
   * routed answers are bit-identical to the unrouted ones, (c) the
   * joined-bucketed layout outranks the bucketed copy, (d) registration
-  * validates the layout actually clusters, and (e) the registry dies
-  * with `clearRelationCaches` (the table-version boundary).
+  * validates the layout actually clusters and has the source's columns,
+  * (e) the registry dies with `clearRelationCaches` (the table-version
+  * boundary), and (f) a cached, materialized layout routes as the bare
+  * table does.
   */
 class LayoutRegistrySpec extends SparkSpec {
 
@@ -21,21 +24,13 @@ class LayoutRegistrySpec extends SparkSpec {
   private def itemsDf = Q4112Gen.items(spark, cfg).toDF()
   private def ordersDf = Q4112Gen.orders(spark, cfg).toDF()
 
-  private def writeBkt(df: org.apache.spark.sql.DataFrame, table: String, key: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    df.write.mode("overwrite").bucketBy(8, key).sortBy(key).format("parquet").saveAsTable(table)
-  }
-
   test("part2Adaptive routes raw relations to registered layouts; joined outranks bucketed") {
-    val absKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val oldAbs = spark.conf.get(absKey)
-    spark.conf.set(absKey, "false")
     Q4112.clearRelationCaches()
     try {
       val expected = Q4112.part2(itemsDf, ordersDf,
         "id", "itemId", "price", "quantity", "storeId").collect().head.getLong(0)
 
-      writeBkt(ordersDf, "lrspec_orders_bkt", "storeId")
+      Tables.writeBucketed(ordersDf, "lrspec_orders_bkt", 8, "storeId")
       // registered with ONE DataFrame instance, routed from ANOTHER —
       // plan-identity (canonicalized) equality is what routing keys on
       LayoutRegistry.registerBucketed(ordersDf, "storeId", spark.table("lrspec_orders_bkt"))
@@ -46,10 +41,24 @@ class LayoutRegistrySpec extends SparkSpec {
       assert(!r1.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning"),
         "routed bucketed plan must not re-shuffle on the group key")
 
+      // the layout as Matrix registers it: cached and materialized
+      // first; the cached plan keeps the scan's bucketing
+      val cached = spark.table("lrspec_orders_bkt").cache()
+      cached.count()
+      LayoutRegistry.registerBucketed(ordersDf, "storeId", cached)
+      val r1c = Q4112.part2Adaptive(itemsDf, ordersDf,
+        "id", "itemId", "price", "quantity", "storeId")
+      assert(r1c.collect().head.getLong(0) === expected)
+      assert(Q4112.lastChosenPlan === "bucketed_routed")
+      val plan1c = r1c.queryExecution.executedPlan.toString
+      assert(!plan1c.contains("Exchange hashpartitioning"),
+        s"routed cached bucketed plan must not re-shuffle on the group key:\n$plan1c")
+      cached.unpersist(blocking = true)
+
       // the joined (group, v) materialization wins over the bucketed copy
-      writeBkt(ordersDf.join(broadcast(itemsDf), col("itemId") === col("id"))
+      Tables.writeBucketed(ordersDf.join(broadcast(itemsDf), col("itemId") === col("id"))
           .select(col("storeId"), (col("price") * col("quantity")).as("v")),
-        "lrspec_joined_bkt", "storeId")
+        "lrspec_joined_bkt", 8, "storeId")
       LayoutRegistry.registerJoined(itemsDf, ordersDf,
         "id", "itemId", "price", "quantity", "storeId", spark.table("lrspec_joined_bkt"))
       val r2 = Q4112.part2Adaptive(itemsDf, ordersDf,
@@ -70,7 +79,6 @@ class LayoutRegistrySpec extends SparkSpec {
       assert(Q4112.lastChosenPlan !== "joined_bucketed")
       assert(Q4112.lastChosenPlan !== "bucketed_routed")
     } finally {
-      spark.conf.set(absKey, oldAbs)
       LayoutRegistry.clear()
       for (t <- Seq("lrspec_orders_bkt", "lrspec_joined_bkt"))
         spark.sql(s"DROP TABLE IF EXISTS $t")
@@ -87,20 +95,29 @@ class LayoutRegistrySpec extends SparkSpec {
       LayoutRegistry.registerJoined(itemsDf, ordersDf,
         "id", "itemId", "price", "quantity", "storeId", ordersDf)
     }
-    val absKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val oldAbs = spark.conf.get(absKey)
-    spark.conf.set(absKey, "false")
+    val bad = Seq("lrspec_bad_jb", "lrspec_bad_cols", "lrspec_bad_types")
     try {
       // clustered on the right key but missing the 'v' column
-      writeBkt(ordersDf.select(col("storeId"), col("quantity").as("not_v")),
-        "lrspec_bad_jb", "storeId")
+      Tables.writeBucketed(ordersDf.select(col("storeId"), col("quantity").as("not_v")),
+        "lrspec_bad_jb", 8, "storeId")
       intercept[IllegalArgumentException] {
         LayoutRegistry.registerJoined(itemsDf, ordersDf,
           "id", "itemId", "price", "quantity", "storeId", spark.table("lrspec_bad_jb"))
       }
+      // a bucketed copy clustered on the right key but missing
+      // 'quantity', or holding it at another type, is not the source
+      Tables.writeBucketed(ordersDf.drop("quantity"), "lrspec_bad_cols", 8, "storeId")
+      val e = intercept[IllegalArgumentException] {
+        LayoutRegistry.registerBucketed(ordersDf, "storeId", spark.table("lrspec_bad_cols"))
+      }
+      assert(e.getMessage.contains("source's columns"), e.getMessage)
+      Tables.writeBucketed(ordersDf.withColumn("quantity", col("quantity").cast("int")),
+        "lrspec_bad_types", 8, "storeId")
+      intercept[IllegalArgumentException] {
+        LayoutRegistry.registerBucketed(ordersDf, "storeId", spark.table("lrspec_bad_types"))
+      }
     } finally {
-      spark.conf.set(absKey, oldAbs)
-      spark.sql("DROP TABLE IF EXISTS lrspec_bad_jb")
+      bad.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       LayoutRegistry.clear()
     }
   }

@@ -4,6 +4,7 @@ import graft.functions.DenseBuild
 import graft.gen.Q4112Gen
 import graft.model.GenConfig
 import graft.ops.Q4112
+import graft.sources.Tables
 
 /** Differential tests of the q4112 query vs the collections oracle —
   * the Spark port of the reference's `assert(gen_res == run_res)`
@@ -622,23 +623,13 @@ class Q4112Spec extends SparkSpec {
 
   test("adaptive planners detect a bucketed layout: part1 elides the join exchanges, part2 the group-by exchange") {
     val cfg = GenConfig(1000, 1.0, 999, 20000, 1.0, 999, 50, 0, 0.0, seed = 41)
-    def writeBkt(df: org.apache.spark.sql.DataFrame, table: String, key: String): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      df.write.mode("overwrite").bucketBy(8, key).sortBy(key).format("parquet").saveAsTable(table)
-    }
-    writeBkt(itemsDf(cfg), "p1spec_items", "id")
-    writeBkt(ordersDf(cfg), "p1spec_orders_ik", "itemId")
-    writeBkt(ordersDf(cfg), "p1spec_orders_g", "storeId")
+    Tables.writeBucketed(itemsDf(cfg), "p1spec_items", 8, "id")
+    Tables.writeBucketed(ordersDf(cfg), "p1spec_orders_ik", 8, "itemId")
+    Tables.writeBucketed(ordersDf(cfg), "p1spec_orders_g", 8, "storeId")
     val items = Q4112Gen.items(spark, cfg).collect().toSeq
     val orders = Q4112Gen.orders(spark, cfg).collect().toSeq
     val oracle1 = Q4112Gen.oraclePart1(items, orders)
     val oracle2 = Q4112Gen.oracleFull(items, orders)
-    // layout detection inspects the scan's outputPartitioning; with
-    // autoBucketedScan enabled Spark plans a BARE scan as non-bucketed
-    // (the same reason Matrix pins the conf false)
-    val absKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val oldAbs = spark.conf.get(absKey)
-    spark.conf.set(absKey, "false")
     try {
       val p1 = Q4112.part1Adaptive(spark.table("p1spec_items"), spark.table("p1spec_orders_ik"),
         "id", "itemId", "price", "quantity")
@@ -675,7 +666,6 @@ class Q4112Spec extends SparkSpec {
         .collect()
       assert(Q4112.lastChosenPlan === "broadcast")
     } finally {
-      spark.conf.set(absKey, oldAbs)
       for (t <- Seq("p1spec_items", "p1spec_orders_ik", "p1spec_orders_g"))
         spark.sql(s"DROP TABLE IF EXISTS $t")
     }

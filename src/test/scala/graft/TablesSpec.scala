@@ -7,25 +7,12 @@ import org.apache.spark.sql.functions._
 class TablesSpec extends SparkSpec {
 
   test("same-bucketing sort-merge join runs with no Exchange on either side") {
-    // the warehouse dir outlives the in-memory catalog across JVM runs;
-    // clear leftover locations so saveAsTable can recreate them
-    for (t <- Seq("li_bucketed", "part_bucketed")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val dir = new java.io.File(s"/tmp/graft-warehouse/$t")
-      if (dir.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(dir)
-      }
-    }
     val li = Engine.table(spark, sfDir, "lineitem")
       .select(col("l_partkey"), floor(col("l_quantity")).as("qty"))
     val pt = Engine.table(spark, sfDir, "part")
       .select(col("p_partkey"), floor(col("p_retailprice")).as("price"))
-    Tables.writeBucketed(li, "li_bucketed", buckets = 8, keys = Seq("l_partkey"))
-    Tables.writeBucketed(pt, "part_bucketed", buckets = 8, keys = Seq("p_partkey"))
+    Tables.writeBucketed(li, "li_bucketed", 8, "l_partkey")
+    Tables.writeBucketed(pt, "part_bucketed", 8, "p_partkey")
 
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
@@ -122,60 +109,5 @@ class TablesSpec extends SparkSpec {
     assert(wideBack.schema("quantity").dataType === LongType)
     assert(wideBack.select("itemId", "storeId", "quantity").as[(Long, Long, Long)]
       .collect().toSet === Set((1L, 10L, 99999L), (2L, 20L, 5L)))
-  }
-
-  test("bucketed layouts record the width rule; keys may not be narrowed") {
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    import spark.implicits._
-    for (t <- Seq("wbkt_orders", "wbkt_items")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val dir = new java.io.File(s"/tmp/graft-warehouse/$t")
-      if (dir.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(dir)
-      }
-    }
-    val orders = Seq((1L, 7L, 10L), (2L, 8L, 20L), (1L, 9L, 30L))
-      .toDF("itemId", "orderId", "quantity")
-    val items = Seq((1L, 100L), (2L, 200L)).toDF("id", "price")
-
-    // a narrowed bucket KEY is refused loudly (wrong-bucket hazard)
-    val e = intercept[IllegalArgumentException] {
-      Tables.writeBucketed(orders, "wbkt_orders", 4, Seq("itemId"),
-        narrowCols = Seq("itemId", "quantity"))
-    }
-    assert(e.getMessage.contains("logical width"))
-
-    // value columns narrow; the rule survives the managed-table round-trip
-    Tables.writeBucketed(orders, "wbkt_orders", 4, Seq("itemId"),
-      narrowCols = Seq("quantity"))
-    Tables.writeBucketed(items, "wbkt_items", 4, Seq("id"),
-      narrowCols = Seq("price"))
-    val oBack = Tables.readTable(spark, "wbkt_orders")
-    assert(oBack.schema("quantity").dataType === IntegerType)
-    assert(oBack.schema("quantity").metadata.getString(Tables.StoredWidthKey) === "int32")
-    assert(oBack.schema("itemId").dataType === LongType)
-
-    // the co-located join is still exchange-free with narrow values
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = oBack.join(Tables.readTable(spark, "wbkt_items"),
-        col("itemId") === col("id"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"bucketed join must not shuffle:\n$plan")
-      // widening AFTER the join restores 64-bit arithmetic losslessly
-      val wide = Tables.widened(joined)
-      assert(wide.schema("quantity").dataType === LongType)
-      assert(wide.select(sum(col("price") * col("quantity"))).as[Long].head === 8000L)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-
-    // the reader-side entry point widens without caller knowledge
-    val widenedRead = Tables.readTableWidened(spark, "wbkt_orders")
-    assert(widenedRead.schema("quantity").dataType === LongType)
-    assert(widenedRead.select(sum("quantity")).as[Long].head === 60L)
   }
 }
