@@ -119,6 +119,36 @@ object SparkEntry {
     s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") + "_" +
       Integer.toHexString(dir.hashCode)
 
+  // the session-keyed outputs this JVM wrote, deleted when it exits
+  private val exitPaths = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private lazy val exitHook: Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteExitPaths()))
+
+  /** Registers `path`, a local directory named with [[sessionKey]], for
+    * deletion when the JVM exits, and returns it. No other JVM reads it
+    * (its application id differs), so without this every JVM that runs
+    * such a body leaves its output in the temp directory or the
+    * warehouse.
+    */
+  private[graft] def deleteAtExit(path: String): String = {
+    exitHook
+    exitPaths.add(path)
+    path
+  }
+
+  /** Deletes every path [[deleteAtExit]] registered: the exit hook's work. */
+  private[graft] def deleteExitPaths(): Unit =
+    exitPaths.toArray(Array.empty[String]).foreach { p =>
+      val root = java.nio.file.Paths.get(p)
+      if (java.nio.file.Files.exists(root)) {
+        val walk = java.nio.file.Files.walk(root)
+        try walk.sorted(java.util.Comparator.reverseOrder()).forEach(f => java.nio.file.Files.delete(f))
+        catch { case _: java.io.IOException => () }
+        finally walk.close()
+      }
+      exitPaths.remove(p)
+    }
+
   private[graft] def tmpPath(name: String): String =
     new java.io.File(System.getProperty("java.io.tmpdir"), name).getAbsolutePath
 

@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.functions.DenseBuild
+import graft.sources.{NarrowCacheSerializer, NarrowCachedBatch}
+import graft.sources.NarrowCacheSerializer.isNull
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -10,12 +12,11 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.columnar.{SimpleMetricsCachedBatch, SimpleMetricsCachedBatchSerializer}
 import org.apache.spark.sql.execution.{ColumnarToRowExec, ProjectExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
-import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField,
   StructType}
-import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+import org.apache.spark.sql.vectorized.ColumnVector
 
 /** The reference's one query, generalized: inner equi-join (FK→PK) then
   * integer-average aggregation, ungrouped (part 1 — q4112_hj_1.c:10-77)
@@ -34,11 +35,20 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
   *    broadcast as a plain array of 32-bit value offsets instead
   *    ([[denseValuesArray]]).
   *    Part 1 and the dense partial aggregate then probe it with one
-  *    kernel over the scan's columnar batches ([[probeAccumulate]]): the
-  *    probe, the multiply and the accumulate run in one loop per batch,
-  *    with no Catalyst row pipeline, and each task hands back only its
-  *    accumulators. The kernel is stateless on retry, and `explain()`
-  *    shows its per-task output as `Scan ExistingRDD`.
+  *    kernel ([[probeAccumulate]]): the probe, the multiply and the
+  *    accumulate run in one loop per batch, with no Catalyst row
+  *    pipeline, and each task hands back only its accumulators. The
+  *    kernel is stateless on retry, and `explain()` shows its per-task
+  *    output as `Scan ExistingRDD`.
+  *  - Every dense kernel (the build's chunks, [[probeAccumulate]],
+  *    [[probeCombine]]) reads one input form, a [[LongBatch]]: per
+  *    requested column a task-reused `long[]` and a NULL bit mask. Its
+  *    sources ([[batchSource]], named in the kernel's RDD): `cache`, a
+  *    materialized cache stored by [[graft.sources.NarrowCacheSerializer]],
+  *    whose frame-of-reference offsets are widened straight into the
+  *    arrays, as the reference's loop reads its narrow column arrays
+  *    (q4112_hj_1.c:49-77 over q4112.h:13-31); `columnar`, any other
+  *    columnar scan, each vector copied once; `rows`, anything else.
   *  - Over a dense build side the grouped aggregate is dense whenever
   *    the group column's cached min/max bound its domain ([[part2Dense]]):
   *    up to 2^22 slots each task accumulates into plain arrays, and up to
@@ -487,15 +497,14 @@ object Q4112 {
     // driver-side assembly is the same data path Spark's own
     // BroadcastExchangeExec uses (task results → build relation).
     val src = batchSource(items, Seq(itemKey, valueCol))
-    val (kInt, vInt) = (src.isInt(0), src.isInt(1))
-    val chunkOf = (bs: Iterator[ColumnarBatch]) => {
+    val chunkOf = (bs: Iterator[LongBatch]) => {
       val enc = new DenseBuildChunk.Encoder(mn, mx, vmin, vmax)
       bs.foreach { b =>
-        val (kc, vc) = (b.column(0), b.column(1))
+        val (ks, vs, kNulls, vNulls) = (b.vals(0), b.vals(1), b.nulls(0), b.nulls(1))
         var i = 0
-        while (i < b.numRows) {
-          if (kc.isNullAt(i) || vc.isNullAt(i)) enc.addNull()
-          else enc.add(readLong(kc, kInt, i), readLong(vc, vInt, i))
+        while (i < b.n) {
+          if (isNull(kNulls, i) || isNull(vNulls, i)) enc.addNull()
+          else enc.add(ks(i), vs(i))
           i += 1
         }
       }
@@ -525,7 +534,8 @@ object Q4112 {
     // made build times swing 3-58 s under a loaded heap (SCALING.md
     // round-4 footnote). A fault is recorded, not thrown: an exception
     // in the handler would surface as a wrapped job failure.
-    sc.runJob(src.batches, chunkOf, (_: Int, c: DenseBuildChunk) => {
+    sc.runJob(src.batches.setName(s"dense build over ${src.kind}"), chunkOf,
+        (_: Int, c: DenseBuildChunk) => {
       nulls += c.nulls
       if (fault == null) fault = c.fault
       if (fault == null) {
@@ -567,26 +577,78 @@ object Q4112 {
     Right(DenseBuild(bc, mn, vmin))
   }
 
-  /** Per-task columnar input of the dense probe kernel: batches holding
-    * the requested columns in order, which of them are int-stored, which
-    * are nullable, and where the batches come from (`kind`, which names
-    * the kernel's RDD: "columnar" is the scan's own output, "rows" the
-    * row-to-batch fallback).
+  /** One batch of the dense kernels' input: `n` rows; column j's values
+    * widened to long in `vals(j)` and its NULL rows in `nulls(j)`, a bit
+    * mask in [[graft.sources.NarrowColumn]]'s format, null when the column
+    * has no NULL in the batch (a NULL row's value is unspecified). One
+    * task reuses the arrays from batch to batch, so a kernel reads each
+    * batch before it asks for the next.
+    */
+  private final class LongBatch(width: Int) {
+    var n = 0
+    val vals: Array[Array[Long]] = Array.fill(width)(Array.emptyLongArray)
+    val nulls = new Array[Array[Long]](width)
+    private val masks = Array.fill(width)(Array.emptyLongArray)
+
+    /** Starts a batch of up to `rows` rows with no NULL. */
+    def reset(rows: Int): Unit = {
+      n = rows
+      var j = 0
+      while (j < width) {
+        if (vals(j).length < rows) vals(j) = new Array[Long](rows)
+        nulls(j) = null
+        j += 1
+      }
+    }
+
+    /** Marks row `i` of column `j` NULL. */
+    def setNull(j: Int, i: Int): Unit = {
+      if (nulls(j) == null) {
+        val words = (n + 63) >>> 6
+        if (masks(j).length < words) masks(j) = new Array[Long](words)
+        else java.util.Arrays.fill(masks(j), 0, words, 0L)
+        nulls(j) = masks(j)
+      }
+      nulls(j)(i >>> 6) |= 1L << i
+    }
+
+    /** Copies an int or long vector of `n` rows into column `j`. */
+    def copy(j: Int, v: ColumnVector): Unit = {
+      val out = vals(j)
+      var i = 0
+      if (v.dataType == IntegerType) while (i < n) { out(i) = v.getInt(i); i += 1 }
+      else while (i < n) { out(i) = v.getLong(i); i += 1 }
+      if (v.hasNull) {
+        i = 0
+        while (i < n) { if (v.isNullAt(i)) setNull(j, i); i += 1 }
+      }
+    }
+  }
+
+  /** Per-task input of the dense kernels: [[LongBatch]]es of the
+    * requested columns in order, which columns are nullable, and where
+    * the batches come from (`kind`, which names the kernel's RDD).
     */
   private final case class BatchSource(
-      batches: RDD[ColumnarBatch], isInt: Array[Boolean], nullable: Array[Boolean], kind: String)
+      batches: RDD[LongBatch], nullable: Array[Boolean], kind: String)
 
-  // rows per batch in the row-to-batch fallback (the vectorized parquet
-  // reader's default batch size)
+  // rows per batch read from rows (the vectorized parquet reader's
+  // default batch size)
   private val FallbackBatchRows = 4096
 
-  /** The batches of `cols` of `df`. Int and long columns are read as
-    * stored (the Matrix narrow layout keeps 32-bit columns); any other
-    * type is cast to long in the projection. When the executed
-    * projection is a columnar scan — a cached `InMemoryTableScan`, or a
-    * vectorized parquet scan under its `ColumnarToRow` and at most a
-    * column-reordering `Project` — the kernel reads that scan's batches
-    * directly; anything else is executed as rows and copied into batches.
+  /** The [[LongBatch]]es of `cols` of `df`, from one of three sources:
+    *  - `cache`: a materialized cache that [[NarrowCacheSerializer]]
+    *    stores ([[materializedCache]]: the relation, or an attribute-only
+    *    projection of it); each stored batch's requested columns are
+    *    widened straight from their offsets, with no column vector;
+    *  - `columnar`: any other columnar scan (a vectorized parquet scan, a
+    *    cache not materialized yet, whose buffers only the cache manager
+    *    builds, or one in Spark's default format) under its
+    *    `ColumnarToRow` and at most a column-reordering `Project`; each
+    *    vector is copied once;
+    *  - `rows`: anything else, executed as rows cast to long.
+    * Int and long columns reach a columnar scan as stored; any other type
+    * is cast to long in the projection.
     */
   private def batchSource(df: DataFrame, cols: Seq[String]): BatchSource = {
     val raw = df.select(cols.map(col): _*)
@@ -596,9 +658,33 @@ object Q4112 {
         case _ => col(f.name).cast(LongType).as(f.name)
       }
     }: _*)
-    val fields = proj.schema.fields
-    val isInt = fields.map(_.dataType == IntegerType)
-    val nullable = fields.map(_.nullable)
+    val nullable = proj.schema.fields.map(_.nullable)
+    val width = cols.length
+    val rawPlan = raw.queryExecution.optimizedPlan
+    materializedCache(rawPlan).filter { r =>
+      r.cacheBuilder.serializer.isInstanceOf[NarrowCacheSerializer] &&
+        NarrowCacheSerializer.narrow(r.output.map(_.dataType))
+    } match {
+      case Some(r) =>
+        val ordinals = rawPlan.output.map(a => r.output.indexWhere(_.exprId == a.exprId)).toArray
+        val batches = r.cacheBuilder.cachedColumnBuffers.mapPartitions { cached =>
+          val b = new LongBatch(width)
+          cached.map { cb =>
+            val nb = cb.asInstanceOf[NarrowCachedBatch]
+            b.reset(nb.numRows)
+            var j = 0
+            while (j < width) {
+              val c = nb.columns(ordinals(j))
+              NarrowCacheSerializer.widen(c, nb.numRows, b.vals(j))
+              b.nulls(j) = c.nulls
+              j += 1
+            }
+            b
+          }
+        }
+        return BatchSource(batches, nullable, "cache")
+      case None =>
+    }
     // a scan that also emits rows (the cached scan) is the plan's root,
     // with no transition above it; a file scan whose column order is
     // not the requested one sits under a reordering Project
@@ -612,49 +698,44 @@ object Q4112 {
     }
     val at = plan.output.map(a => scan.output.indexWhere(_.exprId == a.exprId)).toArray
     if (scan.supportsColumnar && !at.contains(-1)) {
-      val batches = scan.executeColumnar()
-      BatchSource(
-        if (at.toSeq == at.indices) batches
-        else batches.mapPartitions(_.map { b =>
-          val p = new ColumnarBatch(at.map(b.column))
-          p.setNumRows(b.numRows)
-          p
-        }),
-        isInt, nullable, "columnar")
+      val batches = scan.executeColumnar().mapPartitions { vectors =>
+        val b = new LongBatch(width)
+        vectors.map { cb =>
+          b.reset(cb.numRows)
+          var j = 0
+          while (j < width) { b.copy(j, cb.column(at(j))); j += 1 }
+          b
+        }
+      }
+      BatchSource(batches, nullable, "columnar")
     } else {
-      val types = fields.map(_.dataType)
-      BatchSource(proj.queryExecution.toRdd.mapPartitions(rowsToBatches(_, types)),
-        isInt, nullable, "rows")
+      val longs = raw.select(cols.map(c => col(c).cast(LongType)): _*)
+      BatchSource(longs.queryExecution.toRdd.mapPartitions(rowsToBatches(_, width)),
+        nullable, "rows")
     }
   }
 
-  private def rowsToBatches(rows: Iterator[InternalRow], types: Array[DataType]): Iterator[ColumnarBatch] = {
-    val vecs = types.map(t => new OnHeapColumnVector(FallbackBatchRows, t))
-    val batch = new ColumnarBatch(vecs.map(v => v: ColumnVector))
-    new Iterator[ColumnarBatch] {
+  private def rowsToBatches(rows: Iterator[InternalRow], width: Int): Iterator[LongBatch] = {
+    val b = new LongBatch(width)
+    new Iterator[LongBatch] {
       def hasNext: Boolean = rows.hasNext
-      def next(): ColumnarBatch = {
-        vecs.foreach(_.reset())
+      def next(): LongBatch = {
+        b.reset(FallbackBatchRows)
         var n = 0
         while (n < FallbackBatchRows && rows.hasNext) {
           val r = rows.next()
           var j = 0
-          while (j < vecs.length) {
-            if (r.isNullAt(j)) vecs(j).putNull(n)
-            else if (types(j) == IntegerType) vecs(j).putInt(n, r.getInt(j))
-            else vecs(j).putLong(n, r.getLong(j))
+          while (j < width) {
+            if (r.isNullAt(j)) b.setNull(j, n) else b.vals(j)(n) = r.getLong(j)
             j += 1
           }
           n += 1
         }
-        batch.setNumRows(n)
-        batch
+        b.n = n
+        b
       }
     }
   }
-
-  private def readLong(v: ColumnVector, isInt: Boolean, i: Int): Long =
-    if (isInt) v.getInt(i).toLong else v.getLong(i)
 
   /** One task's dense accumulators: per slot Σ v, row count, and (when
     * v can be NULL) whether any v was non-NULL.
@@ -665,11 +746,16 @@ object Q4112 {
     val hasV: Array[Boolean] = if (trackV) new Array[Boolean](slots) else null
   }
 
-  /** The dense probe-and-aggregate kernel: one batch of (key, quantity
-    * [, group]) columns from [[batchSource]], probed into the dense value
-    * array (price = `base` + the unsigned offset at slot key − `mn`) and
-    * accumulated into `acc` — the reference's probe loop over
-    * column arrays (q4112_hj_1.c:49-77), with no row ever materialized.
+  /** The dense probe-and-aggregate kernel: one [[LongBatch]] of (key,
+    * quantity [, group]) columns from [[batchSource]], probed into the
+    * dense value array (price = `base` + the unsigned offset at slot
+    * key − `mn`) and accumulated into `acc` — the reference's probe loop
+    * over column arrays (q4112_hj_1.c:49-77), with no row ever
+    * materialized. Every column arrives as a `long[]` plus a NULL mask,
+    * whatever its source: widened from a narrow cache's stored offsets
+    * (`cache`), copied once from another columnar scan's vectors
+    * (`columnar`), or filled from rows (`rows`). So the loop has no
+    * per-value type branch and no column-vector call.
     * Per row, one loop does the bounds-checked array index, the multiply
     * and the accumulate. Without a group column every row goes to slot
     * 0 (part 1); with one, to slot group − `mg`, and a NULL group to
@@ -703,7 +789,11 @@ object Q4112 {
     *    read `warm_s` 0.318 → 0.345 s, worse in 9 of 10 paired runs, and
     *    an in-JVM loop over 5e6 cached orders rows read `part1Dense`
     *    0.158-0.167 → 0.173-0.192 s. The bytecode differs only by the
-    *    decode's `i2l`, `land`, `ladd`; the cause is not isolated.
+    *    decode's `i2l`, `land`, `ladd`; the cause is not isolated. Since
+    *    this kernel reads `long[]`s in place of column vectors, the same
+    *    workload reads `warm_s` 0.206 [0.196, 0.217] → 0.198 [0.181,
+    *    0.204] s against the vector-reading kernel (8 of 10 paired runs
+    *    faster), and `cold_s` 0.341 → 0.317 s (8 of 10).
     * Measured and not shipped, in a single-file Java loop: a radix-partitioned
     * probe (partition the keys into cache-sized ranges, then probe range
     * by range) ran at 25-49 ns/row against 30-39 ns/row for this direct
@@ -711,38 +801,34 @@ object Q4112 {
     * its extra pass.
     */
   private def probeAccumulate(
-      b: ColumnarBatch, isInt: Array[Boolean], arr: Array[Int], mn: Long, base: Long,
+      b: LongBatch, arr: Array[Int], mn: Long, base: Long,
       mg: Long, nullSlot: Int, exact: Boolean, acc: DenseAcc): Unit = {
-    val n = b.numRows
-    val kc = b.column(0)
-    val qc = b.column(1)
-    val gc = if (b.numCols > 2) b.column(2) else null
-    val (kInt, qInt) = (isInt(0), isInt(1))
-    val gInt = gc != null && isInt(2)
-    val kNulls = kc.hasNull
-    val qNulls = qc.hasNull
-    val gNulls = gc != null && gc.hasNull
+    val n = b.n
+    val (ks, qs) = (b.vals(0), b.vals(1))
+    val (kNulls, qNulls) = (b.nulls(0), b.nulls(1))
+    val gs = if (b.vals.length > 2) b.vals(2) else null
+    val gNulls = if (gs == null) null else b.nulls(2)
     val sums = acc.sums
     val cnts = acc.cnts
     val hasV = acc.hasV
     val len = arr.length
     var i = 0
     while (i < n) {
-      if (!(kNulls && kc.isNullAt(i))) {
-        val k = readLong(kc, kInt, i) - mn
+      if (!isNull(kNulls, i)) {
+        val k = ks(i) - mn
         if (k >= 0L && k < len) {
           val g =
-            if (gc == null) 0
-            else if (gNulls && gc.isNullAt(i)) nullSlot
+            if (gs == null) 0
+            else if (isNull(gNulls, i)) nullSlot
             else {
-              val gi = readLong(gc, gInt, i) - mg
+              val gi = gs(i) - mg
               if (gi < 0L || gi >= nullSlot) throw outOfDomain(gi + mg, mg, nullSlot)
               gi.toInt
             }
           cnts(g) += 1L
-          if (!(qNulls && qc.isNullAt(i))) {
+          if (!isNull(qNulls, i)) {
             val p = DenseBuild.value(base, arr(k.toInt))
-            val q = readLong(qc, qInt, i)
+            val q = qs(i)
             sums(g) = if (exact) Math.addExact(sums(g), Math.multiplyExact(p, q)) else sums(g) + p * q
             if (hasV != null) hasV(g) = true
           }
@@ -773,12 +859,11 @@ object Q4112 {
       quantityCol: String): DataFrame = {
     val DenseBuild(bc, mn, base) = denseValuesArray(items, itemKey, priceCol)
     val src = batchSource(orders, Seq(orderKey, quantityCol))
-    val isInt = src.isInt
     val exact = orders.sparkSession.sessionState.conf.ansiEnabled
     val perTask = src.batches.mapPartitions { bs =>
       val acc = new DenseAcc(1, trackV = true)
       val arr = bc.value
-      bs.foreach(b => probeAccumulate(b, isInt, arr, mn, base, 0L, 0, exact, acc))
+      bs.foreach(b => probeAccumulate(b, arr, mn, base, 0L, 0, exact, acc))
       Iterator.single[InternalRow](new GenericInternalRow(Array[Any](
         if (acc.hasV(0)) acc.sums(0) else null, acc.cnts(0))))
     }.setName(s"dense probe over ${src.kind}")
@@ -919,20 +1004,19 @@ object Q4112 {
     val exact = spark.sessionState.conf.ansiEnabled
     val ranges = slotRanges(spark, dom)
     val src = batchSource(orders, Seq(orderKey, quantityCol, groupCol))
-    val isInt = src.isInt
     val trackV = src.nullable(1)
     // slot `dom` past the domain holds the NULL group
     val chunks =
       if (dom <= DenseAggMaxDomain) src.batches.mapPartitions { bs =>
         val acc = new DenseAcc(dom + 1, trackV)
         val arr = bc.value
-        bs.foreach(b => probeAccumulate(b, isInt, arr, mn, base, mg, dom, exact, acc))
+        bs.foreach(b => probeAccumulate(b, arr, mn, base, mg, dom, exact, acc))
         accChunks(acc, ranges)
       } else src.batches.mapPartitions { bs =>
         val cache = new CombineCache(ranges, trackV, exact)
         val arr = bc.value
         bs.flatMap { b =>
-          probeCombine(b, isInt, arr, mn, base, mg, dom, exact, cache)
+          probeCombine(b, arr, mn, base, mg, dom, exact, cache)
           cache.shipped()
         } ++ cache.flush()
       }
@@ -1122,30 +1206,28 @@ object Q4112 {
     * loop gains no work.
     */
   private def probeCombine(
-      b: ColumnarBatch, isInt: Array[Boolean], arr: Array[Int], mn: Long, base: Long,
+      b: LongBatch, arr: Array[Int], mn: Long, base: Long,
       mg: Long, nullSlot: Int, exact: Boolean, cache: CombineCache): Unit = {
-    val n = b.numRows
-    val (kc, qc, gc) = (b.column(0), b.column(1), b.column(2))
-    val (kInt, qInt, gInt) = (isInt(0), isInt(1), isInt(2))
-    val (kNulls, qNulls, gNulls) = (kc.hasNull, qc.hasNull, gc.hasNull)
+    val n = b.n
+    val (ks, qs, gs) = (b.vals(0), b.vals(1), b.vals(2))
+    val (kNulls, qNulls, gNulls) = (b.nulls(0), b.nulls(1), b.nulls(2))
     val len = arr.length
     var i = 0
     while (i < n) {
-      if (!(kNulls && kc.isNullAt(i))) {
-        val k = readLong(kc, kInt, i) - mn
+      if (!isNull(kNulls, i)) {
+        val k = ks(i) - mn
         if (k >= 0L && k < len) {
           val g =
-            if (gNulls && gc.isNullAt(i)) nullSlot
+            if (isNull(gNulls, i)) nullSlot
             else {
-              val gi = readLong(gc, gInt, i) - mg
+              val gi = gs(i) - mg
               if (gi < 0L || gi >= nullSlot) throw outOfDomain(gi + mg, mg, nullSlot)
               gi.toInt
             }
-          if (qNulls && qc.isNullAt(i)) cache.add(g, 0L, withV = false)
+          if (isNull(qNulls, i)) cache.add(g, 0L, withV = false)
           else {
             val p = DenseBuild.value(base, arr(k.toInt))
-            val q = readLong(qc, qInt, i)
-            cache.add(g, if (exact) Math.multiplyExact(p, q) else p * q, withV = true)
+            cache.add(g, if (exact) Math.multiplyExact(p, qs(i)) else p * qs(i), withV = true)
           }
         }
       }

@@ -65,7 +65,7 @@ private[graft] object CurationQueries {
     // write is ingest cost, paid once per session.
     Record("layout_partitioned_dpp", (s, dir) => {
       val o = t(s, dir, "orders")
-      val path = tmpPath(s"graft-dpp-${sessionKey(s, dir)}")
+      val path = deleteAtExit(tmpPath(s"graft-dpp-${sessionKey(s, dir)}"))
       if (!pathExists(s, path))
         o.withColumn("om", month(col("o_orderdate")))
           .write.mode("overwrite").partitionBy("om").parquet(path)

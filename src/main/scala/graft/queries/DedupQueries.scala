@@ -24,7 +24,7 @@ private[graft] object DedupQueries {
   private def standingSketchTable(s: SparkSession, dir: String): DataFrame = {
     val tbl = s"dedup_inc_sketches_${sessionKey(s, dir)}"
     if (!s.catalog.tableExists(tbl)) {
-      val path = tmpPath(s"graft-$tbl")
+      val path = deleteAtExit(tmpPath(s"graft-$tbl"))
       Dedup.winnowSketches(
           t(s, dir, "documents").filter(!(col("doc_id") % 10 === 0)),
           "doc_id", "text", k = 5, w = 4)
@@ -42,7 +42,7 @@ private[graft] object DedupQueries {
   private def standingDfTable(s: SparkSession, dir: String): DataFrame = {
     val tbl = s"dedup_inc_df_${sessionKey(s, dir)}"
     if (!s.catalog.tableExists(tbl)) {
-      val path = tmpPath(s"graft-$tbl")
+      val path = deleteAtExit(tmpPath(s"graft-$tbl"))
       ModelStore.winnowDfCounts(standingSketchTable(s, dir))
         .write.mode("overwrite").option("path", path)
         .format("parquet").saveAsTable(tbl)
@@ -673,7 +673,7 @@ private[graft] object DedupQueries {
     // to the in-memory index — the cross-session serving contract.
     Record("index_persist_winnow", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val path = tmpPath(s"graft-winnow-store-${sessionKey(s, dir)}")
+      val path = deleteAtExit(tmpPath(s"graft-winnow-store-${sessionKey(s, dir)}"))
       if (!pathExists(s, path))
         ModelStore.saveWinnowIndex(standingSketchTable(s, dir), path)
       Dedup.incrementalWinnowPairs(ModelStore.loadWinnowSketches(s, path),

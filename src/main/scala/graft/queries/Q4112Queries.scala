@@ -41,7 +41,11 @@ private[graft] object Q4112Queries {
   private def bucketedOnce(s: SparkSession, dir: String, tag: String, key: String)(
       df: => DataFrame): String = {
     val tbl = s"${tag}_${sessionKey(s, dir)}"
-    if (!s.catalog.tableExists(tbl)) Tables.writeBucketed(df, tbl, 8, key)
+    if (!s.catalog.tableExists(tbl)) {
+      Tables.writeBucketed(df, tbl, 8, key)
+      deleteAtExit(new java.io.File(s.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(tbl)).location).getPath)
+    }
     tbl
   }
 

@@ -55,13 +55,16 @@ final case class NarrowCachedBatch(numRows: Int, columns: Array[NarrowColumn], s
   * in place of 316 MB.
   *
   * Reading widens each selected column of a batch in one loop per offset
-  * width: into a column vector of its declared type for the columnar
-  * path (`Q4112`'s kernels), and into long buffers that fill one
-  * `UnsafeRow` per row for the row path, which is what a collect or a
-  * filter over a cached relation reads on Spark 4.1. Reading one and
+  * width ([[NarrowCacheSerializer.widen]]): into a column vector of its
+  * declared type for the columnar path, and into long buffers that fill
+  * one `UnsafeRow` per row for the row path, which is what a collect or
+  * a filter over a cached relation reads on Spark 4.1. Reading one and
   * three long columns of 1e7 cached rows on 4 cores took 94-147 ms on
   * the row path (the default serializer's generated accessor 108-147)
-  * and 41-69 ms on the columnar path (default 49-65).
+  * and 41-69 ms on the columnar path (default 49-65). `Q4112`'s dense
+  * kernels read neither path once the cache is materialized: they take
+  * the stored batches and widen the columns they need through the same
+  * `widen` into their own reused `long[]`s.
   *
   * The statistics' byte count is the decoded size Spark's own column
   * statistics report (the type's size per value, 4 per NULL), not the
@@ -268,9 +271,10 @@ object NarrowCacheSerializer {
   }
 
   /** Writes column `c`'s `n` values, as longs, into `out`: one widening
-    * loop per offset width. A NULL row reads the batch minimum.
+    * loop per offset width. A NULL row reads the batch minimum. The
+    * serializer's readers and `Q4112`'s dense kernels share it.
     */
-  private def widen(c: NarrowColumn, n: Int, out: Array[Long]): Unit = {
+  private[graft] def widen(c: NarrowColumn, n: Int, out: Array[Long]): Unit = {
     val base = c.base
     var i = 0
     c.offsets match {
@@ -282,7 +286,8 @@ object NarrowCacheSerializer {
     }
   }
 
-  private def isNull(nulls: Array[Long], i: Int): Boolean =
+  /** Is row `i` NULL in a [[NarrowColumn]]-format mask (null: none is)? */
+  private[graft] def isNull(nulls: Array[Long], i: Int): Boolean =
     nulls != null && (nulls(i >>> 6) & (1L << i)) != 0L
 
   /** Decodes the `ordinals` columns of `b` into vectors of `schema`'s

@@ -135,33 +135,58 @@ class Q4112Spec extends SparkSpec {
           "storeId")) === hash2, on)
         if (!(it eq items)) assert(lastChosenPlan === "partial", on)
       }
-    // every form against the hash plans; returns the kernel's batch source
-    def check(what: String, orders: DataFrame): String = {
+    // every form against the hash plans; returns the kernels' batch
+    // sources, part 1's first (both frames are built before either runs)
+    def check(what: String, orders: DataFrame): Seq[String] = {
       val p1 = part1Dense(items, orders, "id", "itemId", "price", "quantity")
+      val p2 = part2Dense(items, orders, "id", "itemId", "price", "quantity", "storeId")
       assert(result(p1) === result(part1(items, orders, "id", "itemId", "price", "quantity",
         BroadcastHash)), what)
       checkPart2(what, orders)
-      val p2 = part2Dense(items, orders, "id", "itemId", "price", "quantity", "storeId")
-      val sources = (probeSources(p1) ++ probeSources(p2)).distinct
-      assert(sources.size === 1, s"$what: $sources")
-      sources.head
+      (probeSources(p1) ++ probeSources(p2)).distinct
     }
-    // an uncached generator plan is executed as rows and copied into batches
-    assert(check("generator", gen) === "rows")
-    // a cached relation hands the kernel the scan's own batches
-    val cached = gen.cache()
-    try assert(check("cached", cached) === "columnar")
-    finally cached.unpersist(blocking = true)
-    // a vectorized parquet scan does too
+    // a cache materialized before the kernels plan
+    def cachedNow(df: DataFrame): DataFrame = { val c = df.cache(); c.count(); c }
+    def withCached(df: DataFrame)(body: DataFrame => Unit): Unit = {
+      val c = cachedNow(df)
+      try body(c) finally c.unpersist(blocking = true)
+    }
+    // an uncached generator plan is executed as rows
+    assert(check("generator", gen) === Seq("rows"))
+    // a materialized cache hands the kernels its stored batches
+    withCached(gen) { cached =>
+      assert(check("cached", cached) === Seq("cache"))
+      // and so does a reordered subset of its columns
+      assert(check("cached subset", cached.select("quantity", "storeId", "itemId")) ===
+        Seq("cache"))
+      // a filter's rows are not the cache's: executed as rows
+      assert(check("cached filter", cached.where(col("quantity") > 2)) === Seq("rows"))
+    }
+    // a cache not materialized yet is read through its scan, which
+    // builds the buffers (part 2's domain statistics come from the
+    // relation caches' entry for the earlier cache of this plan, so no
+    // job materializes it before both kernels pick their source)
+    val lazyCache = gen.cache()
+    try assert(check("unmaterialized cache", lazyCache) === Seq("columnar"))
+    finally lazyCache.unpersist(blocking = true)
+    // a relation with a double or a string column is cached in Spark's
+    // default format, whose scan emits vectors only when every column of
+    // the relation is a primitive
+    withCached(gen.withColumn("w", lit(1.5))) { weighted =>
+      assert(check("default-format cache", weighted) === Seq("columnar"))
+    }
+    withCached(gen.withColumn("tag", lit("t"))) { tagged =>
+      assert(check("default-format cache with a string", tagged) === Seq("rows"))
+    }
+    // a vectorized parquet scan hands over its vectors
     val dir = java.nio.file.Files.createTempDirectory("dense_probe_pq").toString
     gen.write.mode("overwrite").parquet(dir)
-    assert(check("parquet", spark.read.parquet(dir)) === "columnar")
-    // int-stored keys, quantities and groups are read as ints
-    val narrow = gen.select((col("itemId") % 100000).cast("int").as("itemId"),
-      col("quantity").cast("int").as("quantity"), col("storeId").cast("int").as("storeId"))
-      .cache()
-    try assert(check("int-stored", narrow) === "columnar")
-    finally narrow.unpersist(blocking = true)
+    assert(check("parquet", spark.read.parquet(dir)) === Seq("columnar"))
+    // int-stored keys, quantities and groups
+    withCached(gen.select((col("itemId") % 100000).cast("int").as("itemId"),
+      col("quantity").cast("int").as("quantity"), col("storeId").cast("int").as("storeId"))) {
+      narrow => assert(check("int-stored", narrow) === Seq("cache"))
+    }
     // keys below and above the domain, NULL keys, quantities and groups
     val holes = gen.select(
       when(col("quantity") % 5 === 0, lit(null)).when(col("quantity") % 5 === 1, -col("itemId"))
@@ -169,9 +194,7 @@ class Q4112Spec extends SparkSpec {
       when(col("quantity") % 7 === 0, lit(null)).otherwise(col("quantity")).as("quantity"),
       when(col("quantity") % 11 === 0, lit(null)).otherwise(col("storeId")).as("storeId"))
     check("nullable", holes)
-    val holesCached = holes.cache()
-    try assert(check("nullable cached", holesCached) === "columnar")
-    finally holesCached.unpersist(blocking = true)
+    withCached(holes)(c => assert(check("nullable cached", c) === Seq("cache")))
     // every quantity NULL: no product, so every form answers NULL
     val noQty = gen.withColumn("quantity", lit(null).cast("long"))
     check("all-NULL quantity", noQty)
@@ -183,10 +206,32 @@ class Q4112Spec extends SparkSpec {
     check("zero partitions", none)
     // one orders row
     check("one row", Seq((3L, 5L, 2L)).toDF("itemId", "quantity", "storeId"))
-    // every group NULL: one NULL group, and no min/max for the domain
-    check("all-NULL group", gen.withColumn("storeId", lit(null).cast("long")))
-    // one hot item in one hot group
-    check("one hot key and group", gen.withColumn("itemId", lit(7L)).withColumn("storeId", lit(3L)))
+    // every group NULL: one NULL group, and no min/max for the domain;
+    // cached, an all-NULL column in every batch
+    val nullGroup = gen.withColumn("storeId", lit(null).cast("long"))
+    check("all-NULL group", nullGroup)
+    withCached(nullGroup)(c => assert(check("all-NULL group cached", c) === Seq("cache")))
+    // one hot item in one hot group; cached, constant columns
+    val hot = gen.withColumn("itemId", lit(7L)).withColumn("storeId", lit(3L))
+    check("one hot key and group", hot)
+    withCached(hot)(c => assert(check("one hot key and group cached", c) === Seq("cache")))
+    // the dense build reads a cached items relation's stored batches
+    withCached(items.select(col("price"), col("id"))) { cachedItems =>
+      val built = scala.collection.mutable.ArrayBuffer[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onStageSubmitted(
+            e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = built.synchronized {
+          built ++= e.stageInfo.rddInfos.map(_.name).filter(_.startsWith("dense build over"))
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        assert(result(part1Dense(cachedItems, gen, "id", "itemId", "price", "quantity")) ===
+          result(part1(items, gen, "id", "itemId", "price", "quantity", BroadcastHash)))
+        org.apache.spark.sql.graft.bridge.drainListenerBus(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(built.synchronized(built.toSeq) === Seq("dense build over cache"))
+    }
   }
 
   for ((cfg, i) <- part2Configs.zipWithIndex) {

@@ -9,6 +9,17 @@ class SparkEntrySpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("deleteAtExit's cleanup deletes each registered directory") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-exit")
+    java.nio.file.Files.createDirectories(dir.resolve("a/b"))
+    java.nio.file.Files.write(dir.resolve("a/b/part-0"), Array[Byte](1, 2))
+    val gone = dir.resolve("never-written").toString
+    assert(SparkEntry.deleteAtExit(dir.toString) === dir.toString)
+    SparkEntry.deleteAtExit(gone)
+    SparkEntry.deleteExitPaths()
+    assert(!java.nio.file.Files.exists(dir))
+  }
+
   test("every oracleSql key has a matching queries entry") {
     val missing = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
     assert(missing.isEmpty, s"oracle entries without a query: $missing")

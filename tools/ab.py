@@ -12,8 +12,9 @@ its `better` (lower when a metric is not listed), both read from
 BASE_DIR; the two checkouts' run lengths must agree. Prints, for every
 metric of the runs' JSON line (the end-to-end ones with --trace 0, the
 per-layer ones with --trace 1): the median [Q1, Q3] of each side, the
-per-pair ratios CHANGE / BASE, the pairs CHANGE wins, and a two-sided
-sign-test p-value.
+per-pair ratios CHANGE / BASE, the pairs CHANGE wins, a two-sided
+sign-test p-value and a verdict (see `verdict`) read against the
+metric's BENCHMARK.json `bound`.
 
 Exits 1 when any run fails or when the two sides disagree on the run
 record's `chosen_plan` or `fail_ratio` (the planner's decision and the
@@ -74,6 +75,33 @@ def sign_test(wins, losses):
     return min(1.0, 2 * tail)
 
 
+def verdict(base, change, lower, bound):
+    """One metric's reading over paired runs `base` and `change`:
+    `gain` when the change wins at least 9/10 of the pairs and its median
+    is better than the base's by more than the base's IQR; else, for a
+    metric with a `bound` (a fraction of the base median), `worse` when
+    the change's median is worse by more than the bound, `unresolved`
+    when the base's IQR / median exceeds the bound, `within bound`
+    otherwise; a metric without a bound reads `no bound`."""
+    wins = sum(1 for x, y in zip(base, change) if (y < x if lower else y > x))
+    mb, mc = statistics.median(base), statistics.median(change)
+    _, q1, q3 = quartiles(base)
+    better_by = mb - mc if lower else mc - mb
+    if wins >= 0.9 * len(base) and better_by > q3 - q1:
+        return "gain"
+    if bound is None:
+        return "no bound"
+
+    def share(x):
+        return x / abs(mb) if mb else (math.inf if x > 0 else 0.0)
+
+    if share(-better_by) > bound:
+        return "worse"
+    if share(q3 - q1) > bound:
+        return "unresolved"
+    return "within bound"
+
+
 def fmt(x, digits):
     return "n/a" if x is None else f"{x:.{digits}f}"
 
@@ -97,8 +125,9 @@ def main():
     seconds = bench["run_seconds"]
     if benchmark(trees["change"]).get("run_seconds") != seconds:
         sys.exit("[ab] the two checkouts' BENCHMARK.json disagree on run_seconds")
-    better = {m["name"]: m.get("better", "lower")
-              for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
+    metrics = bench.get("end_to_end", []) + bench.get("per_layer", [])
+    better = {m["name"]: m.get("better", "lower") for m in metrics}
+    bound = {m["name"]: m.get("bound") for m in metrics}
 
     runs = {"base": [], "change": []}
     for i in range(a.pairs):
@@ -115,8 +144,8 @@ def main():
     print(f"workload {a.workload}, {a.pairs} pairs, seed {a.seed}, --seconds {seconds}, "
           f"--trace {a.trace}; ratio = change / base")
     print("| metric | base median [Q1, Q3] | change median [Q1, Q3] | median ratio "
-          "| change wins | sign p | per-pair ratios |")
-    print("|---|---|---|---|---|---|---|")
+          "| change wins | sign p | per-pair ratios | verdict |")
+    print("|---|---|---|---|---|---|---|---|")
     for m in names:
         b = [r[0][m] for r in runs["base"]]
         c = [r[0][m] for r in runs["change"]]
@@ -130,7 +159,8 @@ def main():
         print(f"| {m} | {bq[0]:.3f} [{bq[1]:.3f}, {bq[2]:.3f}] | {cq[0]:.3f} [{cq[1]:.3f}, "
               f"{cq[2]:.3f}] | {fmt(statistics.median(known) if known else None, 3)} "
               f"| {wins}/{a.pairs} | {sign_test(wins, losses):.3g} "
-              f"| {' '.join(fmt(r, 2) for r in ratios)} |")
+              f"| {' '.join(fmt(r, 2) for r in ratios)} "
+              f"| {verdict(b, c, lower, bound.get(m))} |")
 
     ok = True
     for field in ("chosen_plan", "fail_ratio"):
