@@ -257,11 +257,8 @@ object Matrix {
         // the (group, v) hot path costs more than the bytes it saves
         // (median 1.15×→1.28×, SCALING §6 has both tables). So part 1
         // stores narrow (except on its bucketed layout) and part 2 wide.
-        // The session's cache (sources.NarrowCacheSerializer) now
-        // narrows every all-integral relation per batch on its own, and
-        // the dense kernels read its stored offsets as longs whatever
-        // the declared type, so the cast no longer measures faster
-        // (Tables.narrowStored has the A/Bs; ROADMAP lists retiring it).
+        // Under the session's narrow cache the cast no longer measures
+        // faster; ROADMAP lists retiring it.
         val narrow = part == 1 && !p1Bucketed
         val orders =
           if (p1Bucketed) {

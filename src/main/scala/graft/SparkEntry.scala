@@ -121,8 +121,8 @@ object SparkEntry {
 
   // the session-keyed outputs this JVM wrote, deleted when it exits
   private val exitPaths = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val exitHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteExitPaths()))
+  private lazy val exitHook: Unit = Runtime.getRuntime.addShutdownHook(
+    new Thread(() => deletePaths(exitPaths.toArray(Array.empty[String]).toSeq)))
 
   /** Registers `path`, a local directory named with [[sessionKey]], for
     * deletion when the JVM exits, and returns it. No other JVM reads it
@@ -136,18 +136,20 @@ object SparkEntry {
     path
   }
 
-  /** Deletes every path [[deleteAtExit]] registered: the exit hook's work. */
-  private[graft] def deleteExitPaths(): Unit =
-    exitPaths.toArray(Array.empty[String]).foreach { p =>
+  /** Deletes each of `paths` with everything under it: the exit hook's
+    * work. A path that is missing or cannot be deleted is skipped, and
+    * the rest are still deleted.
+    */
+  private[graft] def deletePaths(paths: Seq[String]): Unit = paths.foreach { p =>
+    try {
       val root = java.nio.file.Paths.get(p)
       if (java.nio.file.Files.exists(root)) {
         val walk = java.nio.file.Files.walk(root)
         try walk.sorted(java.util.Comparator.reverseOrder()).forEach(f => java.nio.file.Files.delete(f))
-        catch { case _: java.io.IOException => () }
         finally walk.close()
       }
-      exitPaths.remove(p)
-    }
+    } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
+  }
 
   private[graft] def tmpPath(name: String): String =
     new java.io.File(System.getProperty("java.io.tmpdir"), name).getAbsolutePath

@@ -1,8 +1,8 @@
 package graft.ops
 
 import graft.functions.DenseBuild
-import graft.sources.{NarrowCacheSerializer, NarrowCachedBatch}
-import graft.sources.NarrowCacheSerializer.isNull
+import graft.sources.{LongBatch, NarrowCacheSerializer}
+import graft.sources.LongBatch.isNull
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -16,7 +16,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField,
   StructType}
-import org.apache.spark.sql.vectorized.ColumnVector
 
 /** The reference's one query, generalized: inner equi-join (FK→PK) then
   * integer-average aggregation, ungrouped (part 1 — q4112_hj_1.c:10-77)
@@ -577,54 +576,6 @@ object Q4112 {
     Right(DenseBuild(bc, mn, vmin))
   }
 
-  /** One batch of the dense kernels' input: `n` rows; column j's values
-    * widened to long in `vals(j)` and its NULL rows in `nulls(j)`, a bit
-    * mask in [[graft.sources.NarrowColumn]]'s format, null when the column
-    * has no NULL in the batch (a NULL row's value is unspecified). One
-    * task reuses the arrays from batch to batch, so a kernel reads each
-    * batch before it asks for the next.
-    */
-  private final class LongBatch(width: Int) {
-    var n = 0
-    val vals: Array[Array[Long]] = Array.fill(width)(Array.emptyLongArray)
-    val nulls = new Array[Array[Long]](width)
-    private val masks = Array.fill(width)(Array.emptyLongArray)
-
-    /** Starts a batch of up to `rows` rows with no NULL. */
-    def reset(rows: Int): Unit = {
-      n = rows
-      var j = 0
-      while (j < width) {
-        if (vals(j).length < rows) vals(j) = new Array[Long](rows)
-        nulls(j) = null
-        j += 1
-      }
-    }
-
-    /** Marks row `i` of column `j` NULL. */
-    def setNull(j: Int, i: Int): Unit = {
-      if (nulls(j) == null) {
-        val words = (n + 63) >>> 6
-        if (masks(j).length < words) masks(j) = new Array[Long](words)
-        else java.util.Arrays.fill(masks(j), 0, words, 0L)
-        nulls(j) = masks(j)
-      }
-      nulls(j)(i >>> 6) |= 1L << i
-    }
-
-    /** Copies an int or long vector of `n` rows into column `j`. */
-    def copy(j: Int, v: ColumnVector): Unit = {
-      val out = vals(j)
-      var i = 0
-      if (v.dataType == IntegerType) while (i < n) { out(i) = v.getInt(i); i += 1 }
-      else while (i < n) { out(i) = v.getLong(i); i += 1 }
-      if (v.hasNull) {
-        i = 0
-        while (i < n) { if (v.isNullAt(i)) setNull(j, i); i += 1 }
-      }
-    }
-  }
-
   /** Per-task input of the dense kernels: [[LongBatch]]es of the
     * requested columns in order, which columns are nullable, and where
     * the batches come from (`kind`, which names the kernel's RDD).
@@ -640,7 +591,8 @@ object Q4112 {
     *  - `cache`: a materialized cache that [[NarrowCacheSerializer]]
     *    stores ([[materializedCache]]: the relation, or an attribute-only
     *    projection of it); each stored batch's requested columns are
-    *    widened straight from their offsets, with no column vector;
+    *    widened straight from their offsets, with no column vector
+    *    ([[NarrowCacheSerializer.longBatches]]);
     *  - `columnar`: any other columnar scan (a vectorized parquet scan, a
     *    cache not materialized yet, whose buffers only the cache manager
     *    builds, or one in Spark's default format) under its
@@ -661,28 +613,8 @@ object Q4112 {
     val nullable = proj.schema.fields.map(_.nullable)
     val width = cols.length
     val rawPlan = raw.queryExecution.optimizedPlan
-    materializedCache(rawPlan).filter { r =>
-      r.cacheBuilder.serializer.isInstanceOf[NarrowCacheSerializer] &&
-        NarrowCacheSerializer.narrow(r.output.map(_.dataType))
-    } match {
-      case Some(r) =>
-        val ordinals = rawPlan.output.map(a => r.output.indexWhere(_.exprId == a.exprId)).toArray
-        val batches = r.cacheBuilder.cachedColumnBuffers.mapPartitions { cached =>
-          val b = new LongBatch(width)
-          cached.map { cb =>
-            val nb = cb.asInstanceOf[NarrowCachedBatch]
-            b.reset(nb.numRows)
-            var j = 0
-            while (j < width) {
-              val c = nb.columns(ordinals(j))
-              NarrowCacheSerializer.widen(c, nb.numRows, b.vals(j))
-              b.nulls(j) = c.nulls
-              j += 1
-            }
-            b
-          }
-        }
-        return BatchSource(batches, nullable, "cache")
+    materializedCache(rawPlan).flatMap(NarrowCacheSerializer.longBatches(_, rawPlan.output)) match {
+      case Some(batches) => return BatchSource(batches, nullable, "cache")
       case None =>
     }
     // a scan that also emits rows (the cached scan) is the plan's root,

@@ -7,22 +7,24 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.columnar.{CachedBatch, SimpleMetricsCachedBatch, SimpleMetricsCachedBatchSerializer}
-import org.apache.spark.sql.execution.columnar.DefaultCachedBatchSerializer
+import org.apache.spark.sql.execution.columnar.{DefaultCachedBatchSerializer, InMemoryRelation}
 import org.apache.spark.sql.execution.vectorized.{OffHeapColumnVector, OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.storage.StorageLevel
 
+import LongBatch.isNull
+
 /** One column of a [[NarrowCachedBatch]]: each non-NULL value is
   * `base + offset`, the offset read unsigned from `offsets`, an array of
   * the fewest bytes that hold the batch's max − min: `null` for a
   * constant (or all-NULL) column, else `Array[Byte]`, `Array[Short]` or
   * `Array[Int]`; a span of 2^32 or more keeps the raw values as
-  * `Array[Long]` with base 0. `nulls` is a bit mask of the NULL rows
-  * (`null` when the batch has none); a NULL row's offset is 0, so a
-  * reader that looks at a NULL row's value still sees one inside the
-  * batch's bounds.
+  * `Array[Long]` with base 0. `nulls` is a bit mask of the NULL rows in
+  * [[LongBatch]]'s format (`null` when the batch has none); a NULL
+  * row's offset is 0, so a reader that looks at a NULL row's value
+  * still sees one inside the batch's bounds.
   */
 final case class NarrowColumn(base: Long, offsets: AnyRef, nulls: Array[Long])
 
@@ -62,9 +64,10 @@ final case class NarrowCachedBatch(numRows: Int, columns: Array[NarrowColumn], s
   * three long columns of 1e7 cached rows on 4 cores took 94-147 ms on
   * the row path (the default serializer's generated accessor 108-147)
   * and 41-69 ms on the columnar path (default 49-65). `Q4112`'s dense
-  * kernels read neither path once the cache is materialized: they take
-  * the stored batches and widen the columns they need through the same
-  * `widen` into their own reused `long[]`s.
+  * kernels read neither path once the cache is materialized: they read
+  * [[NarrowCacheSerializer.longBatches]], the stored batches' columns
+  * widened through the same `widen` into reused `long[]`s, as the row
+  * path widens them before it writes its rows.
   *
   * The statistics' byte count is the decoded size Spark's own column
   * statistics report (the type's size per value, 4 per NULL), not the
@@ -138,7 +141,7 @@ class NarrowCacheSerializer extends SimpleMetricsCachedBatchSerializer {
     else {
       val ordinals = ordinalsOf(cacheAttributes, selectedAttributes)
       val types = selectedAttributes.map(_.dataType).toArray
-      input.mapPartitions(batches => new RowReader(batches, ordinals, types))
+      input.mapPartitions(batches => new RowReader(widened(batches, ordinals), types))
     }
 }
 
@@ -154,6 +157,38 @@ object NarrowCacheSerializer {
 
   private def ordinalsOf(cache: Seq[Attribute], selected: Seq[Attribute]): Array[Int] =
     selected.map(a => cache.indexWhere(_.exprId == a.exprId)).toArray
+
+  /** The `selected` columns of each batch of `r`'s buffers, widened to
+    * long with their stored NULL masks, in one task-reused [[LongBatch]]
+    * per partition. None unless this serializer stores `r` itself and
+    * every selected attribute is one of `r`'s. Reading the buffers
+    * builds them when they are not, so the caller decides whether `r` is
+    * materialized.
+    */
+  private[graft] def longBatches(
+      r: InMemoryRelation, selected: Seq[Attribute]): Option[RDD[LongBatch]] = {
+    val ordinals = ordinalsOf(r.output, selected)
+    if (!r.cacheBuilder.serializer.isInstanceOf[NarrowCacheSerializer] ||
+        !narrow(r.output.map(_.dataType)) || ordinals.contains(-1)) None
+    else Some(r.cacheBuilder.cachedColumnBuffers.mapPartitions(widened(_, ordinals)))
+  }
+
+  /** Each batch's `ordinals` columns widened into one reused [[LongBatch]]. */
+  private def widened(batches: Iterator[CachedBatch], ordinals: Array[Int]): Iterator[LongBatch] = {
+    val b = new LongBatch(ordinals.length)
+    batches.map { cb =>
+      val nb = cb.asInstanceOf[NarrowCachedBatch]
+      b.reset(nb.numRows)
+      var j = 0
+      while (j < ordinals.length) {
+        val c = nb.columns(ordinals(j))
+        widen(c, nb.numRows, b.vals(j))
+        b.nulls(j) = c.nulls
+        j += 1
+      }
+      b
+    }
+  }
 
   /** 0 long, 1 int, 2 short, 3 byte: the row loops' switch. */
   private def kind(t: DataType): Int = t match {
@@ -271,10 +306,9 @@ object NarrowCacheSerializer {
   }
 
   /** Writes column `c`'s `n` values, as longs, into `out`: one widening
-    * loop per offset width. A NULL row reads the batch minimum. The
-    * serializer's readers and `Q4112`'s dense kernels share it.
+    * loop per offset width. A NULL row reads the batch minimum.
     */
-  private[graft] def widen(c: NarrowColumn, n: Int, out: Array[Long]): Unit = {
+  private def widen(c: NarrowColumn, n: Int, out: Array[Long]): Unit = {
     val base = c.base
     var i = 0
     c.offsets match {
@@ -285,10 +319,6 @@ object NarrowCacheSerializer {
       case a: Array[Long] => System.arraycopy(a, 0, out, 0, n)
     }
   }
-
-  /** Is row `i` NULL in a [[NarrowColumn]]-format mask (null: none is)? */
-  private[graft] def isNull(nulls: Array[Long], i: Int): Boolean =
-    nulls != null && (nulls(i >>> 6) & (1L << i)) != 0L
 
   /** Decodes the `ordinals` columns of `b` into vectors of `schema`'s
     * types, through `scratch` (at least `b.numRows` long).
@@ -324,31 +354,23 @@ object NarrowCacheSerializer {
     batch
   }
 
-  /** The row path: each batch's selected columns widened once into long
-    * buffers, then one `UnsafeRow` written per row, as the default
+  /** The row path: each batch's selected columns widened once into a
+    * [[LongBatch]], then one `UnsafeRow` written per row, as the default
     * serializer's generated accessor does.
     */
-  private final class RowReader(batches: Iterator[CachedBatch], ordinals: Array[Int],
-      types: Array[DataType]) extends Iterator[InternalRow] {
+  private final class RowReader(batches: Iterator[LongBatch], types: Array[DataType])
+      extends Iterator[InternalRow] {
     private val kinds = types.map(kind)
     private val writer = new UnsafeRowWriter(types.length)
-    private var vals = Array.fill(types.length)(new Array[Long](0))
-    private val nulls = new Array[Array[Long]](types.length)
-    private var n = 0
+    private var b: LongBatch = null
     private var i = 0
 
     override def hasNext: Boolean = {
-      while (i == n && batches.hasNext) {
-        val b = batches.next().asInstanceOf[NarrowCachedBatch]
-        n = b.numRows
+      while ((b == null || i == b.n) && batches.hasNext) {
+        b = batches.next()
         i = 0
-        if (vals.length > 0 && vals(0).length < n) vals = Array.fill(types.length)(new Array[Long](n))
-        for (j <- ordinals.indices) {
-          widen(b.columns(ordinals(j)), n, vals(j))
-          nulls(j) = b.columns(ordinals(j)).nulls
-        }
       }
-      i < n
+      b != null && i < b.n
     }
 
     override def next(): InternalRow = {
@@ -357,12 +379,12 @@ object NarrowCacheSerializer {
       writer.zeroOutNullBytes()
       var j = 0
       while (j < kinds.length) {
-        if (isNull(nulls(j), i)) writer.setNullAt(j)
+        if (isNull(b.nulls(j), i)) writer.setNullAt(j)
         else (kinds(j): @scala.annotation.switch) match {
-          case 0 => writer.write(j, vals(j)(i))
-          case 1 => writer.write(j, vals(j)(i).toInt)
-          case 2 => writer.write(j, vals(j)(i).toShort)
-          case _ => writer.write(j, vals(j)(i).toByte)
+          case 0 => writer.write(j, b.vals(j)(i))
+          case 1 => writer.write(j, b.vals(j)(i).toInt)
+          case 2 => writer.write(j, b.vals(j)(i).toShort)
+          case _ => writer.write(j, b.vals(j)(i).toByte)
         }
         j += 1
       }

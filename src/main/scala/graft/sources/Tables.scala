@@ -54,21 +54,8 @@ object Tables {
     * contracts or column min/max stats) — the cast here would wrap
     * silently, so a stats check belongs at every call site.
     *
-    * The session's cache ([[NarrowCacheSerializer]]) already stores
-    * every all-integral relation as narrow per-batch offsets, so this
-    * cast saves no cache bytes there (804.8 MB with it, 804.5 MB
-    * without, for 1e8 generated orders). It was kept while part 1's
-    * probe decoded the cached columns into int vectors, which measured
-    * faster: in-JVM A/Bs of `part1Adaptive` (`dense`) over 1e7 items on
-    * a 4-core host, the same orders cached with and without the cast,
-    * alternating reps, read 0.668 against 0.742 s (faster in 14 of 20
-    * reps) and 0.706 against 0.862 s (17 of 20) at 1e8 orders, and
-    * 0.429 against 0.493 s (15 of 20) and 0.496 against 0.504 s (6 of
-    * 12) at 5e7. The dense kernels now widen the cache's stored offsets
-    * into `long[]`s whatever the declared type, and the same A/B at 5e7
-    * orders no longer shows a win: 0.345 [0.336, 0.361] against 0.372
-    * [0.350, 0.413] s (cast faster in 7 of 14 reps) and 0.410 [0.384,
-    * 0.427] against 0.364 [0.340, 0.398] s (5 of 14).
+    * The cast saves no cache bytes under [[NarrowCacheSerializer]] and
+    * no longer measures faster; ROADMAP lists retiring it, with the A/Bs.
     */
   def narrowStored(df: DataFrame, cols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.col

@@ -135,15 +135,17 @@ class Q4112Spec extends SparkSpec {
           "storeId")) === hash2, on)
         if (!(it eq items)) assert(lastChosenPlan === "partial", on)
       }
-    // every form against the hash plans; returns the kernels' batch
-    // sources, part 1's first (both frames are built before either runs)
-    def check(what: String, orders: DataFrame): Seq[String] = {
+    // every form against the hash plans; returns the kernels' one batch
+    // source (both frames are built before either runs)
+    def check(what: String, orders: DataFrame): String = {
       val p1 = part1Dense(items, orders, "id", "itemId", "price", "quantity")
       val p2 = part2Dense(items, orders, "id", "itemId", "price", "quantity", "storeId")
       assert(result(p1) === result(part1(items, orders, "id", "itemId", "price", "quantity",
         BroadcastHash)), what)
       checkPart2(what, orders)
-      (probeSources(p1) ++ probeSources(p2)).distinct
+      val sources = (probeSources(p1) ++ probeSources(p2)).distinct
+      assert(sources.size === 1, s"$what: $sources")
+      sources.head
     }
     // a cache materialized before the kernels plan
     def cachedNow(df: DataFrame): DataFrame = { val c = df.cache(); c.count(); c }
@@ -152,40 +154,39 @@ class Q4112Spec extends SparkSpec {
       try body(c) finally c.unpersist(blocking = true)
     }
     // an uncached generator plan is executed as rows
-    assert(check("generator", gen) === Seq("rows"))
+    assert(check("generator", gen) === "rows")
     // a materialized cache hands the kernels its stored batches
     withCached(gen) { cached =>
-      assert(check("cached", cached) === Seq("cache"))
+      assert(check("cached", cached) === "cache")
       // and so does a reordered subset of its columns
-      assert(check("cached subset", cached.select("quantity", "storeId", "itemId")) ===
-        Seq("cache"))
+      assert(check("cached subset", cached.select("quantity", "storeId", "itemId")) === "cache")
       // a filter's rows are not the cache's: executed as rows
-      assert(check("cached filter", cached.where(col("quantity") > 2)) === Seq("rows"))
+      assert(check("cached filter", cached.where(col("quantity") > 2)) === "rows")
     }
     // a cache not materialized yet is read through its scan, which
     // builds the buffers (part 2's domain statistics come from the
     // relation caches' entry for the earlier cache of this plan, so no
     // job materializes it before both kernels pick their source)
     val lazyCache = gen.cache()
-    try assert(check("unmaterialized cache", lazyCache) === Seq("columnar"))
+    try assert(check("unmaterialized cache", lazyCache) === "columnar")
     finally lazyCache.unpersist(blocking = true)
     // a relation with a double or a string column is cached in Spark's
     // default format, whose scan emits vectors only when every column of
     // the relation is a primitive
     withCached(gen.withColumn("w", lit(1.5))) { weighted =>
-      assert(check("default-format cache", weighted) === Seq("columnar"))
+      assert(check("default-format cache", weighted) === "columnar")
     }
     withCached(gen.withColumn("tag", lit("t"))) { tagged =>
-      assert(check("default-format cache with a string", tagged) === Seq("rows"))
+      assert(check("default-format cache with a string", tagged) === "rows")
     }
     // a vectorized parquet scan hands over its vectors
     val dir = java.nio.file.Files.createTempDirectory("dense_probe_pq").toString
     gen.write.mode("overwrite").parquet(dir)
-    assert(check("parquet", spark.read.parquet(dir)) === Seq("columnar"))
+    assert(check("parquet", spark.read.parquet(dir)) === "columnar")
     // int-stored keys, quantities and groups
     withCached(gen.select((col("itemId") % 100000).cast("int").as("itemId"),
       col("quantity").cast("int").as("quantity"), col("storeId").cast("int").as("storeId"))) {
-      narrow => assert(check("int-stored", narrow) === Seq("cache"))
+      narrow => assert(check("int-stored", narrow) === "cache")
     }
     // keys below and above the domain, NULL keys, quantities and groups
     val holes = gen.select(
@@ -194,7 +195,7 @@ class Q4112Spec extends SparkSpec {
       when(col("quantity") % 7 === 0, lit(null)).otherwise(col("quantity")).as("quantity"),
       when(col("quantity") % 11 === 0, lit(null)).otherwise(col("storeId")).as("storeId"))
     check("nullable", holes)
-    withCached(holes)(c => assert(check("nullable cached", c) === Seq("cache")))
+    withCached(holes)(c => assert(check("nullable cached", c) === "cache"))
     // every quantity NULL: no product, so every form answers NULL
     val noQty = gen.withColumn("quantity", lit(null).cast("long"))
     check("all-NULL quantity", noQty)
@@ -210,11 +211,11 @@ class Q4112Spec extends SparkSpec {
     // cached, an all-NULL column in every batch
     val nullGroup = gen.withColumn("storeId", lit(null).cast("long"))
     check("all-NULL group", nullGroup)
-    withCached(nullGroup)(c => assert(check("all-NULL group cached", c) === Seq("cache")))
+    withCached(nullGroup)(c => assert(check("all-NULL group cached", c) === "cache"))
     // one hot item in one hot group; cached, constant columns
     val hot = gen.withColumn("itemId", lit(7L)).withColumn("storeId", lit(3L))
     check("one hot key and group", hot)
-    withCached(hot)(c => assert(check("one hot key and group cached", c) === Seq("cache")))
+    withCached(hot)(c => assert(check("one hot key and group cached", c) === "cache"))
     // the dense build reads a cached items relation's stored batches
     withCached(items.select(col("price"), col("id"))) { cachedItems =>
       val built = scala.collection.mutable.ArrayBuffer[String]()

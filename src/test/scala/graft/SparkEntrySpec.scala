@@ -9,14 +9,12 @@ class SparkEntrySpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("deleteAtExit's cleanup deletes each registered directory") {
+  test("deletePaths deletes each directory and skips a missing one") {
     val dir = java.nio.file.Files.createTempDirectory("graft-exit")
     java.nio.file.Files.createDirectories(dir.resolve("a/b"))
     java.nio.file.Files.write(dir.resolve("a/b/part-0"), Array[Byte](1, 2))
-    val gone = dir.resolve("never-written").toString
-    assert(SparkEntry.deleteAtExit(dir.toString) === dir.toString)
-    SparkEntry.deleteAtExit(gone)
-    SparkEntry.deleteExitPaths()
+    val gone = dir.resolveSibling(dir.getFileName.toString + "-never-written").toString
+    SparkEntry.deletePaths(Seq(gone, dir.toString))
     assert(!java.nio.file.Files.exists(dir))
   }
 
